@@ -2,9 +2,12 @@
 
 Mirrors the reference's connector metadata model (SURVEY.md §1.1:
 ``ConnectorTableHandle``/``ConnectorTableMetadata``) in the only way Spark
-needs: explicit schemas, parquet scans with pushdown, temp views for SQL.
-Schema is fixed and explicit per table — no inference (the reference
-statically types every query; ``StatementAnalyzer.java:277``).
+needs: parquet scans with pushdown and temp views for SQL. Each table's
+schema is inferred from its file once per file version (absolute path,
+mtime, size) and passed explicitly to every later read: repeat reads start
+no inference job, and a rewritten file is inferred again rather than read
+with a stale schema. The reference statically types every query
+(``StatementAnalyzer.java:277``).
 """
 
 from __future__ import annotations
@@ -14,7 +17,7 @@ import weakref
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import LongType, TimestampNTZType, TimestampType
+from pyspark.sql.types import LongType, StructType, TimestampNTZType, TimestampType
 
 TABLES: tuple[str, ...] = (
     "region",
@@ -44,41 +47,69 @@ def _ensure_session_conf(spark: SparkSession) -> None:
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
 
 
-def normalize_events_ts(df: DataFrame) -> DataFrame:
+def normalize_events_ts(df: DataFrame, schema: StructType | None = None) -> DataFrame:
     """Coerce events.ts to TIMESTAMP regardless of testdata vintage.
 
     Older driver testdata stored ts as TIMESTAMP(NANOS), surfaced as raw
     long nanos under ``nanosAsLong``; newer testdata stores timestamp[us]
     directly. Integer division for the nanos path: nanos-since-epoch
     (~1.7e18) exceeds double's 2^53 exact range, so a float divide would
-    corrupt the microsecond digit.
+    corrupt the microsecond digit. ``schema`` is the schema ``df`` was read
+    with, when the caller has it, which saves asking Spark for ``df.schema``.
     """
-    if isinstance(df.schema["ts"].dataType, LongType):
+    ts_type = (schema or df.schema)["ts"].dataType
+    if isinstance(ts_type, LongType):
         df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    elif isinstance(df.schema["ts"].dataType, TimestampNTZType):
+    elif isinstance(ts_type, TimestampNTZType):
         # Session TZ is pinned to UTC (session.py), so this cast is an
         # identity on the instant and keeps unix_micros()/window() usable.
         df = df.withColumn("ts", F.col("ts").cast(TimestampType()))
     return df
 
 
+# absolute path -> (st_mtime_ns, st_size, schema inferred from that version).
+# Process-wide, so forked sessions and every engine build share it. One
+# entry per path: a rewritten file replaces its entry. No lock: an entry is
+# written whole after its stat, so a racing miss only infers twice.
+# Inference reads a footer in a one-task Spark job, which on small queries
+# cost more than the scan itself.
+_schemas: dict[str, tuple[int, int, StructType]] = {}
+
+
+def schema(spark: SparkSession, sf_dir: str, name: str) -> StructType:
+    """The parquet file schema of one table, as Spark reads it.
+
+    Inferred on the first call per file version; later calls start no
+    Spark job. Inference runs after ``_ensure_session_conf``, so
+    ``nanosAsLong`` decides how events.ts comes back.
+    """
+    _ensure_session_conf(spark)
+    path = f"{sf_dir}/{name}.parquet"
+    try:
+        st = os.stat(path)
+    except OSError:
+        # Not a local file (a URI, or missing): Spark resolves and reports it.
+        return spark.read.parquet(path).schema
+    key = os.path.abspath(path)
+    hit = _schemas.get(key)
+    if hit is None or hit[:2] != (st.st_mtime_ns, st.st_size):
+        hit = _schemas[key] = (st.st_mtime_ns, st.st_size, spark.read.parquet(path).schema)
+    return hit[2]
+
+
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """One parquet-backed table. Columnar scan; Catalyst pushes filters."""
-    _ensure_session_conf(spark)
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    file_schema = schema(spark, sf_dir, name)
+    df = spark.read.schema(file_schema).parquet(f"{sf_dir}/{name}.parquet")
     if name == "events":
-        df = normalize_events_ts(df)
+        df = normalize_events_ts(df, file_schema)
     return df
 
 
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: table(spark, sf_dir, name) for name in TABLES}
-
-
-# session -> sf_dir whose views are already registered. Re-running
-# register_views per query re-read every parquet footer AND invalidated any
-# cached plan that referenced a replaced view — measurable per-query
-# overhead once bench timed builds (round-1 verdict "what's wrong" #6).
+# session -> sf_dir whose views are already registered. Re-registering per
+# query replaced every view and so invalidated any cached plan that
+# referenced one — measurable per-query overhead once bench timed builds
+# (round-1 verdict "what's wrong" #6).
 # Keyed on the SparkSession OBJECT (weakly), not the SparkContext: temp
 # views are per-session state, and forked sessions (spark.newSession(),
 # the HTTP server's per-client isolation) share one context but need their
@@ -87,33 +118,34 @@ def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
 _registered: "weakref.WeakKeyDictionary[SparkSession, str]" = weakref.WeakKeyDictionary()
 
 
-def register_views(spark: SparkSession, sf_dir: str, force: bool = False) -> None:
+def register_views(spark: SparkSession, sf_dir: str) -> None:
     """Register every testdata table as a temp view, once per (session, dir)."""
-    if not force and _registered.get(spark) == sf_dir:
+    if _registered.get(spark) == sf_dir:
         return
-    tables = load_tables(spark, sf_dir)
-    for name, df in tables.items():
-        df.createOrReplaceTempView(name)
-    _register_information_schema(spark, tables)
+    for name in TABLES:
+        table(spark, sf_dir, name).createOrReplaceTempView(name)
+    _register_information_schema(spark, sf_dir)
     # Only one sf_dir's views can be current in a session at a time.
     _registered[spark] = sf_dir
 
 
-def _register_information_schema(spark: SparkSession, tables: dict[str, DataFrame]) -> None:
+def _register_information_schema(spark: SparkSession, sf_dir: str) -> None:
     """Emulate Presto's information_schema connector over the catalog.
 
     The reference serves ``information_schema.tables/columns`` from table
     metadata (presto-main/.../connector/informationSchema/
     InformationSchemaMetadata.java, TABLE_TABLES/TABLE_COLUMNS); Spark has
     no built-in information_schema, so expose the same two relations as
-    temp views derived from the registered DataFrames' schemas. Metadata
-    only — no data scan, no driver materialization of table contents.
+    temp views derived from the cached table schemas. Metadata only — no
+    data scan, no driver materialization of table contents.
     """
     col_rows = []
     tab_rows = []
-    for name in sorted(tables):
+    for name in sorted(TABLES):
         tab_rows.append(("spark", "default", name, "BASE TABLE"))
-        for pos, f in enumerate(tables[name].schema.fields, start=1):
+        for pos, f in enumerate(schema(spark, sf_dir, name).fields, start=1):
+            # table() serves events.ts as TIMESTAMP whatever the file stores
+            dtype = TimestampType() if (name, f.name) == ("events", "ts") else f.dataType
             col_rows.append(
                 (
                     "spark",
@@ -121,7 +153,7 @@ def _register_information_schema(spark: SparkSession, tables: dict[str, DataFram
                     name,
                     f.name,
                     pos,
-                    f.dataType.simpleString(),
+                    dtype.simpleString(),
                     "YES" if f.nullable else "NO",
                 )
             )

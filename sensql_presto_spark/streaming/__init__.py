@@ -40,12 +40,9 @@ def tumbling_window_counts(
     so the result equals the batch ``date_trunc('hour', ts)`` aggregation —
     which is exactly what the DuckDB oracle checks.
     """
-    catalog._ensure_session_conf(spark)
-    path = f"{sf_dir}/events.parquet"
-    # File streams need an explicit schema; take it from the batch reader's
-    # footer-only metadata pass (ts arrives as raw nanos under
-    # nanosAsLong, same as the batch path).
-    schema = spark.read.parquet(path).schema
+    # File streams need an explicit schema; take the catalog's file schema
+    # (ts arrives as raw nanos under nanosAsLong, same as the batch path).
+    schema = catalog.schema(spark, sf_dir, "events")
 
     # The file source wants a directory; glob-filter to the events table.
     raw = (
@@ -53,7 +50,7 @@ def tumbling_window_counts(
         .option("pathGlobFilter", "events.parquet")
         .parquet(sf_dir)
     )
-    events = catalog.normalize_events_ts(raw)
+    events = catalog.normalize_events_ts(raw, schema)
     agg = (
         events.withWatermark("ts", watermark)
         .groupBy(F.window("ts", window).alias("w"), "event_type")
@@ -102,15 +99,13 @@ def session_window_stats(
     A single availableNow pass closes everything, so the result equals the
     batch lag/cumsum sessionization — the oracle the registry entry checks.
     """
-    catalog._ensure_session_conf(spark)
-    path = f"{sf_dir}/events.parquet"
-    schema = spark.read.parquet(path).schema
+    schema = catalog.schema(spark, sf_dir, "events")
     raw = (
         spark.readStream.schema(schema)
         .option("pathGlobFilter", "events.parquet")
         .parquet(sf_dir)
     )
-    events = catalog.normalize_events_ts(raw)
+    events = catalog.normalize_events_ts(raw, schema)
     agg = (
         events.withWatermark("ts", "2 hours")
         .groupBy(F.session_window("ts", gap).alias("w"), "user_id")
@@ -160,15 +155,13 @@ def stateful_running_extrema(
     import pandas as pd
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    catalog._ensure_session_conf(spark)
-    path = f"{sf_dir}/events.parquet"
-    schema = spark.read.parquet(path).schema
+    schema = catalog.schema(spark, sf_dir, "events")
     raw = (
         spark.readStream.schema(schema)
         .option("pathGlobFilter", "events.parquet")
         .parquet(sf_dir)
     )
-    events = catalog.normalize_events_ts(raw)
+    events = catalog.normalize_events_ts(raw, schema)
 
     out_schema = "user_id bigint, n bigint, max_val double, sum_val_e4 bigint"
     state_schema = "n bigint, max_val double, sum_val_e4 bigint"
@@ -236,8 +229,7 @@ def streaming_dedup_exact(
     watermark horizon, so memory is bounded by arrival skew, not stream
     length.
     """
-    catalog._ensure_session_conf(spark)
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    schema = catalog.schema(spark, sf_dir, "events")
 
     def _stream() -> DataFrame:
         return (
@@ -247,7 +239,7 @@ def streaming_dedup_exact(
         )
 
     doubled = _stream().unionByName(_stream())
-    events = catalog.normalize_events_ts(doubled)
+    events = catalog.normalize_events_ts(doubled, schema)
     dedup = events.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(["event_id"])
     agg = dedup.groupBy("event_type").agg(
         F.count("*").alias("n"),
@@ -286,8 +278,7 @@ def streaming_interval_join(
     range join the DuckDB oracle runs. Output is aggregated per user so
     the checked relation is small and deterministic.
     """
-    catalog._ensure_session_conf(spark)
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    schema = catalog.schema(spark, sf_dir, "events")
 
     def _stream() -> DataFrame:
         raw = (
@@ -295,7 +286,7 @@ def streaming_interval_join(
             .option("pathGlobFilter", "events.parquet")
             .parquet(sf_dir)
         )
-        return catalog.normalize_events_ts(raw)
+        return catalog.normalize_events_ts(raw, schema)
 
     clicks = (
         _stream()
@@ -376,8 +367,7 @@ def streaming_upsert_sink(
     import shutil
     import tempfile
 
-    catalog._ensure_session_conf(spark)
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    schema = catalog.schema(spark, sf_dir, "events")
 
     cols = ("event_id", "event_type", "user_id", "value")
     # WritableTable.create replaces the path itself — no pre-rmtree needed
@@ -387,11 +377,7 @@ def streaming_upsert_sink(
     table_dir = tempfile.mkdtemp(prefix="sensql_stream_upsert_")
     from sensql_presto_spark.mutation import WritableTable
 
-    seed = (
-        catalog.normalize_events_ts(spark.read.parquet(f"{sf_dir}/events.parquet"))
-        .select(*cols)
-        .limit(0)
-    )
+    seed = catalog.table(spark, sf_dir, "events").select(*cols).limit(0)
     table = WritableTable.create(spark, table_dir, seed)
 
     def _upsert(batch_df: DataFrame, batch_id: int) -> None:
@@ -417,7 +403,7 @@ def streaming_upsert_sink(
                 .parquet(sf_dir)
             )
             doubled = raw.unionByName(raw)
-            events = catalog.normalize_events_ts(doubled).select(*cols)
+            events = catalog.normalize_events_ts(doubled, schema).select(*cols)
             for q in spark.streams.active:
                 if q.name == name:
                     q.stop()
