@@ -1,28 +1,28 @@
-"""Benchmark harness — headline queries at $SPARK_GRAFT_SF_DIR.
+"""Benchmark harness — the registry's ``bench=True`` queries at $SPARK_GRAFT_SF_DIR.
 
-Mirrors the reference's benchto protocol (BASELINE.md: runs=6, prewarm=2,
-CBO/AQE on) scaled down: per query, `prewarm` untimed runs then `runs` timed
-runs; the reported figure is the median. Prints ONE JSON line.
+Protocol: the reference's benchto protocol (BASELINE.md: prewarm=2, runs=6,
+CBO/AQE on), scaled down. Per query, ``BENCH_PREWARM`` untimed runs, then
+``BENCH_RUNS`` timed runs, each of which builds the DataFrame inside the
+timed region and executes it into the ``noop`` sink; the reported figure is
+the median of the timed runs.
 
-Output contract (r9, after the r8 incident): the driver records only the
-LAST 2000 characters of stdout and parses the final JSON line out of that
-tail.  Round 8's expanded line (calibration samples + 50 paired ratios +
-54 query timings) overflowed it, so BENCH_r08.json committed `parsed: null`.
-The stdout line is therefore kept COMPACT (totals, calibration median,
-per-query medians at 3dp, shared-ratio scalars) with a hard ≤1900-char
-guarantee enforced by progressive trimming, and the full detail
-(calibration samples, per-query calibration, paired ratios) goes to a
-sidecar JSON file ($BENCH_DETAIL_PATH, default
-BENCH_DETAIL_latest_sf{sf}_c{cpus}.json so multi-invocation rounds keep
-every run's data) that the round commits as BENCH_DETAIL_r{N}.json.
+Outputs:
 
-Reading the cores-scaling block (r13 VERDICT, what's-wrong #4): at sf0.1
-per-stage fixed costs and 32-way scheduling overhead dominate most
-entries, so an 8-vs-32-core ratio ≈ 1 (or below) means "fixed-cost bound
-at this SF", NOT "serial operator" — the r13 8-core run beat the 32-core
-run on 45 of 57 queries with identical plans. Only entries whose per-task
-compute dwarfs the constant costs (sim_range_search, dedup_bloom_prefilter
-at sf0.1) can show real parallel speedup at this scale.
+- stdout: ONE JSON line with ``metric``, ``value`` (sum of the per-query
+  medians, seconds), ``unit``, ``queries`` (per-query medians, 3 dp) and
+  ``sf``. Whoever runs the bench may keep only the last 2000 characters of
+  stdout, so the line is held to ``STDOUT_BUDGET`` characters by trimming
+  ``queries`` to 2 dp and, failing that, replacing it with
+  ``"queries_in_detail_only": true``. Timing logs go to stderr.
+- sidecar JSON at $BENCH_DETAIL_PATH (default
+  ``BENCH_DETAIL_latest_sf{sf}_c{cpus}.json`` next to this file): the stdout
+  fields, ``queries_4dp``, ``plan_fingerprints`` (an expression-id-stripped
+  hash of each query's physical plan) and
+  ``plan_fingerprints_post_checkpoint_only`` (queries whose plan starts at a
+  checkpoint, so their hash covers only the final stage). Spark cuts long
+  scan filter lists before the ids are stripped, and the cut point moves
+  with the ids' digit counts, so hashes compare only between sessions that
+  ran the same work before each query.
 """
 
 from __future__ import annotations
@@ -33,6 +33,9 @@ import statistics
 import sys
 import time
 
+# callers may keep only the last 2000 stdout chars and parse the final
+# JSON line out of them, so the line must fit there whole
+STDOUT_BUDGET = 1900
 
 # name -> {"fp": hash, "post_checkpoint_only": bool}; filled during prewarm
 _PLAN_FPS: dict = {}
@@ -40,7 +43,7 @@ _PLAN_FPS: dict = {}
 
 def _capture_fingerprint(spark, name: str, df) -> None:
     """Expression-id-stripped plan hash, captured from the prewarm build
-    so no extra builder run is needed (r13 ADVICE, bench.py:136)."""
+    so no extra builder run is needed."""
     import hashlib
     import re as _re
 
@@ -58,16 +61,25 @@ def _capture_fingerprint(spark, name: str, df) -> None:
         _PLAN_FPS[name] = {"fp": "error", "post_checkpoint_only": False}
 
 
+def _stdout_line(out: dict, timings: dict) -> str:
+    """``out`` as one compact JSON line of at most STDOUT_BUDGET chars:
+    per-query medians at 3 dp, else 2 dp, else only in the sidecar."""
+    for ndigits in (3, 2):
+        queries = {q: round(t, ndigits) for q, t in timings.items()}
+        line = json.dumps({**out, "queries": queries}, separators=(",", ":"))
+        if len(line) <= STDOUT_BUDGET:
+            return line
+    totals = {k: v for k, v in out.items() if k != "queries"}
+    return json.dumps({**totals, "queries_in_detail_only": True}, separators=(",", ":"))
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    # runs=6: matches the benchto protocol (tpch.yaml runs=6); round-2
-    # showed sub-second queries moving ~2x between rounds on n<=3 samples —
-    # medians over 6 pin per-query deltas to real plan changes, not timer
-    # noise.
+    # runs=6 as in the benchto protocol: sub-second queries move ~2x
+    # between invocations, and medians over n<=3 samples followed that noise.
     runs = int(os.environ.get("BENCH_RUNS", "6"))
-    # 2 untimed runs (the benchto protocol's prewarm): the first execution
-    # of a query pays JIT + whole-stage-codegen compilation, which belongs
-    # to neither engine's steady-state throughput.
+    # the first execution of a query pays JIT and whole-stage-codegen
+    # compilation, which is not steady-state throughput
     prewarm = int(os.environ.get("BENCH_PREWARM", "2"))
 
     from sensql_presto_spark.queries import all_specs
@@ -75,60 +87,10 @@ def main() -> None:
 
     spark = get_spark(app_name="sensql_bench")
 
-    # Host-speed calibration: a fixed, data-independent Spark job. The
-    # host's effective speed shifts between runs (measured 2.6x within an
-    # hour on 2026-08-14 with identical plans — co-tenant contention), so
-    # absolute seconds are only comparable after dividing by this number.
-    # A SINGLE probe per invocation proved too weak to normalize a regime
-    # that shifts mid-run (r7: calibration moved 1.11x while the workload
-    # moved 1.34x), so the probe is INTERLEAVED between query segments —
-    # one sample before each quarter of the set plus one at the end — and
-    # each query is normalized by the mean of its bracketing samples.
-    def calibrate() -> float:
-        spark.range(50_000_000).selectExpr("sum(id * 3 + 1)").collect()  # warm
-        t0 = time.perf_counter()
-        spark.range(50_000_000).selectExpr("sum(id * 3 + 1)").collect()
-        return round(time.perf_counter() - t0, 4)
-
-    # Workload-shaped calibration probe (r12 VERDICT next-round #2a): the
-    # CPU-bound range-sum probe above decouples from the mixed
-    # scan/shuffle regime the queries actually see (r12: the probe moved
-    # 2.7x within one invocation while query plans were unchanged).  This
-    # second probe is a small parquet scan + hash exchange + aggregate —
-    # the modal query shape — sampled at the same cadence and recorded in
-    # the detail sidecar alongside the legacy probe.  The legacy probe
-    # stays the NORMALIZER for cross-round ratios so prior rounds remain
-    # comparable; the workload probe is evidence for adjudicating them.
-    def calibrate_workload() -> float:
-        probe = (
-            spark.read.parquet(os.path.join(sf_dir, "lineitem.parquet"))
-            .selectExpr("l_suppkey % 997 AS k", "l_quantity")
-            .groupBy("k")
-            .agg({"l_quantity": "sum"})
-        )
-        t0 = time.perf_counter()
-        probe.write.format("noop").mode("overwrite").save()
-        return round(time.perf_counter() - t0, 4)
-
     specs = {n: s for n, s in all_specs().items() if s.bench}
     names = sorted(specs)
-    seg_len = max(1, -(-len(names) // 4))  # 4 segments -> 5 samples
-    calib_samples: list[float] = []
-    calib2_samples: list[float] = []
-    query_seg: dict[str, int] = {}
-
-    calibrate_workload()  # warm (parquet footer cache + codegen)
     timings: dict[str, float] = {}
-    for idx, name in enumerate(names):
-        if idx % seg_len == 0:
-            calib_samples.append(calibrate())
-            calib2_samples.append(calibrate_workload())
-            print(
-                f"  [calibration #{len(calib_samples)}: {calib_samples[-1]:.3f}s"
-                f" workload {calib2_samples[-1]:.3f}s]",
-                file=sys.stderr,
-            )
-        query_seg[name] = idx // seg_len
+    for name in names:
         spec = specs[name]
         for i in range(prewarm):
             df = spec.build(spark, sf_dir)
@@ -146,40 +108,14 @@ def main() -> None:
             samples.append(time.perf_counter() - t0)
         timings[name] = round(statistics.median(samples), 4)
         print(f"  {name}: {timings[name]:.3f}s", file=sys.stderr)
-    calib_samples.append(calibrate())
-    calib2_samples.append(calibrate_workload())
-    print(
-        f"  [calibration #{len(calib_samples)}: {calib_samples[-1]:.3f}s"
-        f" workload {calib2_samples[-1]:.3f}s]",
-        file=sys.stderr,
-    )
 
-    calib = round(statistics.median(calib_samples), 4)
-    # per-query calibration: mean of the two probes bracketing its segment
-    calib_by_query = {
-        q: round((calib_samples[s] + calib_samples[min(s + 1, len(calib_samples) - 1)]) / 2, 4)
-        for q, s in query_seg.items()
-    }
-
-    # Plan fingerprints (r12 VERDICT next-round #2b) are captured during
-    # the first PREWARM build (r13 ADVICE: the old post-run capture loop
-    # re-ran every builder — eager localCheckpoints and convergence
-    # probes execute real jobs — and doubled the builder cost for no
-    # extra evidence).  Fallback build only for queries the prewarm loop
-    # never fingerprinted (prewarm=0 smoke runs).
+    # with prewarm=0 no build was fingerprinted yet
     for name in names:
         if name not in _PLAN_FPS:
             try:
                 _capture_fingerprint(spark, name, specs[name].build(spark, sf_dir))
             except Exception:  # fingerprint is best-effort evidence
                 _PLAN_FPS[name] = {"fp": "error", "post_checkpoint_only": False}
-    plan_fps = {n: _PLAN_FPS[n]["fp"] for n in names if n in _PLAN_FPS}
-    # checkpoint-staged queries hash only the final-stage plan (upstream
-    # work hides behind Scan ExistingRDD) — recorded so readers weigh the
-    # "plan unchanged" signal accordingly (r13 ADVICE).
-    fps_partial = sorted(
-        n for n in names if _PLAN_FPS.get(n, {}).get("post_checkpoint_only")
-    )
 
     total = round(sum(timings.values()), 4)
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
@@ -187,112 +123,24 @@ def main() -> None:
         "metric": "tpch_like_median_total",
         "value": total,
         "unit": "sec",
-        "calibration_sec": calib,
         "queries": {q: round(t, 3) for q, t in timings.items()},
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
     }
-    # full-fidelity detail lives in the sidecar, never on stdout
     detail = {
-        "calibration_samples": calib_samples,
-        "calibration_workload_samples": calib2_samples,
-        "calibration_by_query": calib_by_query,
+        **out,
         "queries_4dp": timings,
-        "plan_fingerprints": plan_fps,
-        "plan_fingerprints_post_checkpoint_only": fps_partial,
+        "plan_fingerprints": {n: _PLAN_FPS[n]["fp"] for n in names},
+        "plan_fingerprints_post_checkpoint_only": sorted(
+            n for n in names if _PLAN_FPS[n]["post_checkpoint_only"]
+        ),
     }
-    # Round-over-round adjudication, mechanical: against the most recent
-    # BENCH_r*.json, compare only the SHARED query set and divide each
-    # side by its own calibration -- host-speed swings (2.6x observed with
-    # identical plans) cancel, so shared_ratio_normalized ~ 1.0 means "no
-    # real regression" regardless of co-tenant load.  > ~1.3 sustained
-    # across rounds is a real plan/code slowdown worth a plan diff.
-    prev = _latest_prior_bench()
-    if prev is not None:
-        fname, pdata = prev
-        shared = sorted(set(timings) & set(pdata.get("queries", {})))
-        prev_calib = pdata.get("calibration_sec")
-        # only comparable at the same scale factor (the driver always
-        # runs sf0.1; ad-hoc smoke runs at other SFs skip the ratio)
-        if shared and prev_calib and pdata.get("sf") == out["sf"]:
-            now_s = sum(timings[q] for q in shared)
-            prev_s = sum(pdata["queries"][q] for q in shared)
-            out["shared_vs"] = fname
-            out["shared_query_count"] = len(shared)
-            out["shared_ratio_raw"] = round(now_s / prev_s, 4)
-            out["shared_ratio_normalized"] = round(
-                (now_s / calib) / (prev_s / prev_calib), 4
-            )
-            # per-query PAIRED ratios, each side divided by the
-            # calibration probe nearest that query's run (prior rounds
-            # without per-query samples fall back to their scalar) —
-            # this is what distinguishes "host slowed mid-run" (paired
-            # ratios cluster near 1.0) from "one query regressed" (a
-            # localized outlier).
-            prev_cbq = pdata.get("calibration_by_query", {})
-            paired = {
-                q: round(
-                    (timings[q] / calib_by_query[q])
-                    / (pdata["queries"][q] / prev_cbq.get(q, prev_calib)),
-                    4,
-                )
-                for q in shared
-            }
-            detail["shared_paired_ratios"] = paired
-            out["shared_paired_median"] = round(
-                statistics.median(paired.values()), 4
-            )
-            # Self-adjudicating outliers (r12 VERDICT next-round #2b):
-            # any query whose paired ratio exceeds the repo's 1.3 line is
-            # RE-MEASURED in isolation at the end of the run, bracketed
-            # by fresh probes of both calibration flavors, so "host noise
-            # vs real regression" is decided inside the artifact instead
-            # of by a builder counter-run next round.
-            outliers = sorted(q for q, r in paired.items() if r > 1.3)
-            if outliers:
-                remeasures: dict[str, dict] = {}
-                for q in outliers:
-                    # mirror the main loop's prewarm before sampling
-                    # (r13 ADVICE: a first-sample codegen/cache artifact
-                    # would otherwise skew the adjudicating median)
-                    for _ in range(prewarm):
-                        specs[q].build(spark, sf_dir).write.format("noop").mode(
-                            "overwrite"
-                        ).save()
-                    c_cpu, c_wl = calibrate(), calibrate_workload()
-                    samples = []
-                    for _ in range(runs):
-                        t0 = time.perf_counter()
-                        specs[q].build(spark, sf_dir).write.format("noop").mode(
-                            "overwrite"
-                        ).save()
-                        samples.append(time.perf_counter() - t0)
-                    re_med = round(statistics.median(samples), 4)
-                    prev_c = prev_cbq.get(q, prev_calib)
-                    remeasures[q] = {
-                        "median": re_med,
-                        "calibration_sec": c_cpu,
-                        "calibration_workload_sec": c_wl,
-                        "paired_ratio_remeasured": round(
-                            (re_med / c_cpu) / (pdata["queries"][q] / prev_c), 4
-                        ),
-                    }
-                    print(
-                        f"  [outlier re-measure {q}: {re_med:.3f}s"
-                        f" @calib {c_cpu:.3f}/{c_wl:.3f}]",
-                        file=sys.stderr,
-                    )
-                detail["outlier_remeasures"] = remeasures
-
-    # default sidecar name carries (sf, cpus) so a round's multiple driver
-    # invocations (32-core then 8-core) no longer clobber each other's
-    # adjudication data (r13 VERDICT next-round #3); BENCH_DETAIL_PATH
-    # still overrides.
+    # the default name carries (sf, cpus) so runs at different scales or
+    # core counts keep separate sidecars
     n_cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(os.cpu_count() or 0)
     detail_path = os.environ.get("BENCH_DETAIL_PATH") or os.path.join(
         os.path.dirname(os.path.abspath(__file__)),
         f"BENCH_DETAIL_latest_sf{sf}_c{n_cpus}.json",
     )
-    detail.update(out)
     try:
         with open(detail_path, "w") as f:
             json.dump(detail, f, indent=1, sort_keys=True)
@@ -300,112 +148,8 @@ def main() -> None:
     except OSError as exc:  # sidecar is best-effort; stdout line still lands
         print(f"  [detail write failed: {exc}]", file=sys.stderr)
 
-    # Hard stdout budget: the driver tails 2000 chars. Trim progressively —
-    # 3dp -> 2dp -> drop per-query map (keeping totals) — so the final line
-    # ALWAYS parses. The sidecar always carries the full map regardless.
-    line = json.dumps(out, separators=(",", ":"))
-    if len(line) > 1900:
-        out["queries"] = {q: round(t, 2) for q, t in timings.items()}
-        line = json.dumps(out, separators=(",", ":"))
-    if len(line) > 1900:
-        out.pop("queries", None)
-        out["queries_in_detail_only"] = True
-        line = json.dumps(out, separators=(",", ":"))
-    print(line)
+    print(_stdout_line(out, timings))
     spark.stop()
-
-
-def _current_round(here: str) -> "int | None":
-    """The round number in flight = max COMMITTED correctness round + 1.
-
-    Derivation order (r10 VERDICT next-round #2 — the r9 directory-glob
-    inference was defeated twice by driver write-order, because the
-    driver writes CORRECTNESS_r{N}.json to the working tree BEFORE
-    running bench, which shifted a glob-inferred "current round" to N+1
-    and let same-round artifacts through the prior-round filter):
-
-    1. ``$BENCH_CURRENT_ROUND`` — explicit override for harnesses that
-       know their round outright.
-    2. ``git ls-files 'CORRECTNESS_r*.json'`` — committed rounds only;
-       the driver's in-flight file is untracked at bench time, so the
-       inference is immune to its write order.
-    3. Directory glob — fallback when git is unavailable (keeps the r9
-       behavior rather than disabling the filter entirely).
-    """
-    import glob
-    import re
-    import subprocess
-
-    env = os.environ.get("BENCH_CURRENT_ROUND", "")
-    if env.strip().isdigit():
-        return int(env)
-    rounds: list[int] = []
-    try:
-        proc = subprocess.run(
-            ["git", "-C", here, "ls-files", "CORRECTNESS_r*.json"],
-            capture_output=True,
-            text=True,
-            timeout=10,
-        )
-        if proc.returncode == 0:
-            rounds = [
-                int(m.group(1))
-                for line in proc.stdout.splitlines()
-                if (m := re.search(r"_r(\d+)\.json$", line.strip()))
-            ]
-    except (OSError, subprocess.SubprocessError):
-        pass
-    if not rounds:
-        rounds = [
-            int(m.group(1))
-            for p in glob.glob(os.path.join(here, "CORRECTNESS_r*.json"))
-            if (m := re.search(r"_r(\d+)\.json$", p))
-        ]
-    return max(rounds) + 1 if rounds else None
-
-
-def _latest_prior_bench(here: "str | None" = None) -> "tuple[str, dict] | None":
-    """The newest prior artifact that actually carries a per-query map.
-
-    Considers both driver artifacts (BENCH_r{N}.json) and this script's
-    committed sidecars (BENCH_DETAIL_r{N}.json), newest round first, and
-    SKIPS any whose parsed payload has no usable "queries" map — e.g.
-    BENCH_r08.json, whose stdout overflow left `parsed: null` — falling
-    back to the next older round so cross-round comparison degrades to
-    "vs r7" instead of silently disappearing.
-
-    Artifacts of the CURRENT round (see _current_round) are excluded
-    (r9 VERDICT What's-wrong #1): committing this script's sidecar
-    before the driver runs made the driver's `shared_vs` a same-round
-    driver-vs-isolated comparison instead of the cross-round signal the
-    field is meant to carry.
-    """
-    import glob
-    import re
-
-    if here is None:
-        here = os.path.dirname(os.path.abspath(__file__))
-    current_round = _current_round(here)
-    candidates: list[tuple[int, int, str]] = []  # (round, detail_pref, path)
-    for pat, pref in (("BENCH_DETAIL_r*.json", 1), ("BENCH_r*.json", 0)):
-        for p in glob.glob(os.path.join(here, pat)):
-            m = re.search(r"_r(\d+)\.json$", p)
-            if m:
-                candidates.append((int(m.group(1)), pref, p))
-    for _rnd, _pref, path in sorted(candidates, reverse=True):
-        if current_round is not None and _rnd >= current_round:
-            continue
-        try:
-            with open(path) as f:
-                data = json.load(f)
-        except (OSError, json.JSONDecodeError):
-            continue
-        # the round driver wraps this script's JSON line under "parsed"
-        if "queries" not in data and isinstance(data.get("parsed"), dict):
-            data = data["parsed"]
-        if isinstance(data, dict) and isinstance(data.get("queries"), dict) and data["queries"]:
-            return os.path.basename(path), data
-    return None
 
 
 if __name__ == "__main__":

@@ -836,14 +836,12 @@ def geo_agg_hulls(spark: SparkSession, sf_dir: str) -> DataFrame:
     "distributed UNION ALL fan-out over the resolved catalogs.",
 )
 def sensql_knn_federated(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from functools import reduce
-
     eng = build_engine(spark, sf_dir)
     node_ids = eng.metadata.resolve_knn("POINT (12 5)", 2)
     assert node_ids == ["node_a", "node_b"]  # fixture geometry, by construction
-    fanout = reduce(DataFrame.unionAll, [eng.node_catalogs[n]() for n in node_ids])
     return (
-        fanout.groupBy("sensor")
+        eng.fanout(node_ids)
+        .groupBy("sensor")
         .agg(
             F.count("*").alias("n"),
             F.sum(F.floor(F.col("value") * 10000 + F.lit(0.5)).cast("long"))

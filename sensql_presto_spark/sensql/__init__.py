@@ -93,6 +93,11 @@ class FederatedEngine:
         self.metadata = metadata
         self.node_catalogs = dict(node_catalogs)
 
+    def fanout(self, node_ids: Iterable[str]) -> DataFrame:
+        """UNION ALL of the given nodes' catalogs, in the given order
+        (``SenSQLModule.java:159-183``; ``Union(…, Optional.of(false))``)."""
+        return reduce(DataFrame.unionAll, [self.node_catalogs[n]() for n in node_ids])
+
     def sql(self, text: str) -> DataFrame:
         parts = rewrite.split_query(text)
         measurement_table = rewrite.process_from(parts.from_text)
@@ -105,10 +110,7 @@ class FederatedEngine:
             raise ValueError(f"no nodes match metadata predicates; forward query: {forward}")
 
         # 2. UNION ALL fan-out over per-node catalogs
-        #    (SenSQLModule.java:159-183; Union(…, Optional.of(false)))
-        branches = [self.node_catalogs[n]() for n in node_ids]
-        fanout = reduce(DataFrame.unionAll, branches)
-        fanout.createOrReplaceTempView(measurement_table)
+        self.fanout(node_ids).createOrReplaceTempView(measurement_table)
 
         # 3. residual query (metadata predicates consumed)
         residual_where = rewrite.build_residual_where(parts.where_text)

@@ -1,57 +1,44 @@
-"""Same-session interleaved A/B harness for round-14 optimization work.
+"""Same-session alternating A/B timing of DataFrame builders.
 
-Usage: python tools/ab_harness.py <experiment> [sf_dir]
+Usage, from the repo root::
 
-Each experiment registers an 'old' and 'new' DataFrame builder; the harness
-first verifies both produce IDENTICAL results (sorted collect), then times
-them alternately (noop sink, median over N runs, two passes) in one
-SparkSession so host-speed drift cancels.
+    from tools.ab_harness import run_ab
+
+    run_ab(spark, {
+        "old": lambda: catalog.sql(spark, sf_dir, OLD_SQL),
+        "new": lambda: catalog.sql(spark, sf_dir, NEW_SQL),
+    }, runs=10)
+
+``run_ab`` first checks that every builder yields the same rows as the
+first one (sorted collect) and raises on a mismatch, then times the
+builders strictly alternately in one SparkSession (noop sink) so host-speed
+drift cancels, and prints per-builder medians and paired ratios.
 """
 
 from __future__ import annotations
 
-import os
 import statistics
-import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from sensql_presto_spark import catalog
-from sensql_presto_spark.session import get_spark
-
-
-def timeit(df_builder, spark, runs=5):
-    samples = []
-    for _ in range(runs):
-        t0 = time.perf_counter()
-        df_builder().write.format("noop").mode("overwrite").save()
-        samples.append(time.perf_counter() - t0)
-    return statistics.median(samples)
-
-
-def run_ab(spark, sf_dir, builders, runs=5, passes=2, skip_verify=False):
+def run_ab(spark, builders, runs=10):
     """builders: dict name -> zero-arg callable returning a DataFrame.
 
     Strictly ALTERNATES shapes run-by-run (A,B,..,A,B,..) so a host-speed
     swing hits adjacent samples of every shape equally, and reports the
-    median of per-iteration paired ratios (robust to swings the
-    pass-sequential form was not)."""
+    median of per-iteration paired ratios against the first builder."""
     names = list(builders)
-    if not skip_verify:
-        rows = {}
-        for n in names:
-            df = builders[n]()
-            rows[n] = sorted(map(tuple, df.collect()))
-        base = rows[names[0]]
-        for n in names[1:]:
-            assert rows[n] == base, f"RESULT MISMATCH between {names[0]} and {n}"
-        print(f"  results identical across {names} ({len(base)} rows)")
+    rows = {n: sorted(map(tuple, builders[n]().collect())) for n in names}
+    base = rows[names[0]]
+    for n in names[1:]:
+        if rows[n] != base:
+            raise AssertionError(f"RESULT MISMATCH between {names[0]} and {n}")
+    print(f"  results identical across {names} ({len(base)} rows)")
     # prewarm each
     for n in names:
         builders[n]().write.format("noop").mode("overwrite").save()
     samples: dict[str, list[float]] = {n: [] for n in names}
-    for _ in range(runs * passes):
+    for _ in range(runs):
         for n in names:
             t0 = time.perf_counter()
             builders[n]().write.format("noop").mode("overwrite").save()
@@ -67,555 +54,3 @@ def run_ab(spark, sf_dir, builders, runs=5, passes=2, skip_verify=False):
             f"median paired ratio {statistics.median(pairs):.2f}x "
             f"(>1 means {n} faster; n={len(pairs)})"
         )
-
-
-# ---------------------------------------------------------------------------
-# experiment: agg_exact_quantiles — window-n consolidation (VERDICT r13 #2)
-# ---------------------------------------------------------------------------
-
-QUANT_OLD = """
-    WITH m1h AS (SELECT CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT) AS val,
-                        count(*) AS cnt
-                 FROM orders GROUP BY 1),
-    m2h AS (SELECT CAST(l_quantity AS BIGINT) AS val, count(*) AS cnt
-            FROM lineitem GROUP BY 1),
-    hist AS (SELECT 'orders.o_totalprice_cents' AS measure, val, cnt FROM m1h
-             UNION ALL
-             SELECT 'lineitem.l_quantity' AS measure, val, cnt FROM m2h),
-    cum AS (
-        SELECT measure, val, cnt,
-               sum(cnt) OVER (PARTITION BY measure ORDER BY val) AS cum_cnt
-        FROM hist
-    ),
-    tot AS (SELECT measure, sum(cnt) AS n FROM hist GROUP BY measure),
-    qs AS (SELECT explode(array(500, 900, 990)) AS q_milli),
-    pick AS (
-        SELECT c.measure, q.q_milli, t.n,
-               min(c.val) AS quantile_value
-        FROM cum c JOIN tot t ON t.measure = c.measure
-        JOIN qs q
-          ON c.cum_cnt * 1000 >= q.q_milli * t.n
-        GROUP BY c.measure, q.q_milli, t.n
-    )
-    SELECT measure, CAST(q_milli AS BIGINT) AS q_milli, CAST(n AS BIGINT) AS n,
-           CAST(quantile_value AS BIGINT) AS quantile_value
-    FROM pick ORDER BY measure, q_milli
-    """
-
-QUANT_NEW = """
-    WITH m1h AS (SELECT CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT) AS val,
-                        count(*) AS cnt
-                 FROM orders GROUP BY 1),
-    m2h AS (SELECT CAST(l_quantity AS BIGINT) AS val, count(*) AS cnt
-            FROM lineitem GROUP BY 1),
-    hist AS (SELECT 'orders.o_totalprice_cents' AS measure, val, cnt FROM m1h
-             UNION ALL
-             SELECT 'lineitem.l_quantity' AS measure, val, cnt FROM m2h),
-    cum AS (
-        SELECT measure, val, cnt,
-               sum(cnt) OVER (PARTITION BY measure ORDER BY val) AS cum_cnt,
-               sum(cnt) OVER (PARTITION BY measure) AS n
-        FROM hist
-    ),
-    qs AS (SELECT explode(array(500, 900, 990)) AS q_milli),
-    pick AS (
-        SELECT c.measure, q.q_milli, c.n,
-               min(c.val) AS quantile_value
-        FROM cum c JOIN qs q
-          ON c.cum_cnt * 1000 >= q.q_milli * c.n
-        GROUP BY c.measure, q.q_milli, c.n
-    )
-    SELECT measure, CAST(q_milli AS BIGINT) AS q_milli, CAST(n AS BIGINT) AS n,
-           CAST(quantile_value AS BIGINT) AS quantile_value
-    FROM pick ORDER BY measure, q_milli
-    """
-
-
-def exp_quantiles(spark, sf_dir):
-    run_ab(
-        spark,
-        sf_dir,
-        {
-            "old": lambda: catalog.sql(spark, sf_dir, QUANT_OLD),
-            "new": lambda: catalog.sql(spark, sf_dir, QUANT_NEW),
-        },
-    )
-
-
-# ---------------------------------------------------------------------------
-# experiment: dedup_semantic phase profile (guide §1 — measure first)
-# ---------------------------------------------------------------------------
-
-
-def exp_semprof(spark, sf_dir):
-    from sensql_presto_spark.queries import pipeline as P
-
-    for _ in range(3):  # repeat to see steady state
-        t0 = time.perf_counter()
-        q = catalog.sql(spark, sf_dir, P._SEM_Q_SQL).localCheckpoint(eager=True)
-        t1 = time.perf_counter()
-        n = P._sql_with_views(spark, P._SEM_ASSIGN_SQL, __sem_q=q).localCheckpoint(
-            eager=True
-        )
-        t2 = time.perf_counter()
-        n.createOrReplaceTempView("__sem_n")
-        spark.sql(P._SEM_PAIRS_SQL).write.format("noop").mode("overwrite").save()
-        t3 = time.perf_counter()
-        print(
-            f"  q_ckpt={t1 - t0:.3f}s assign_ckpt={t2 - t1:.3f}s"
-            f" pairs={t3 - t2:.3f}s total={t3 - t0:.3f}s"
-        )
-
-
-# ---------------------------------------------------------------------------
-# experiment: dedup_semantic assign restructure — argmin over collected
-# centroid arrays (map-only) instead of cross-join + groupBy min_by
-# ---------------------------------------------------------------------------
-
-SEM_ASSIGN_NEW = """
-    WITH q AS (SELECT vec_id, v FROM __sem_q),
-    params AS (
-        SELECT k, greatest(cast(4 AS bigint),
-                           least(cast(4096 AS bigint),
-                                 cast(floor(sqrt(cast(k AS double))) AS bigint))) AS m
-        FROM (SELECT greatest(cast(8 AS bigint), count(1) DIV 64) AS k FROM q)
-    ),
-    c0 AS (SELECT vec_id AS cid, v AS cv FROM q
-           WHERE vec_id < (SELECT k FROM params)),
-    c1 AS (SELECT vec_id AS cell, v AS cellv FROM q
-           WHERE vec_id < (SELECT m FROM params)),
-    cells AS (SELECT collect_list(named_struct('cell', cell, 'cellv', cellv)) AS cs
-              FROM c1),
-    cmap AS (
-        SELECT cid, cv,
-               aggregate(cs,
-                   named_struct('d', cast(9223372036854775807 AS bigint),
-                                'c', cast(9223372036854775807 AS bigint)),
-                   (acc, e) -> least(acc, named_struct(
-                       'd', aggregate(zip_with(cv, e.cellv, (x, y) -> (x - y) * (x - y)),
-                                      cast(0 AS bigint), (a2, y) -> a2 + y),
-                       'c', e.cell))).c AS cell
-        FROM c0 CROSS JOIN cells
-    ),
-    cmap_cells AS (
-        SELECT cell, collect_list(named_struct('cid', cid, 'cv', cv)) AS cands
-        FROM cmap GROUP BY cell
-    ),
-    vcell AS (
-        SELECT vec_id, v,
-               aggregate(cs,
-                   named_struct('d', cast(9223372036854775807 AS bigint),
-                                'c', cast(9223372036854775807 AS bigint)),
-                   (acc, e) -> least(acc, named_struct(
-                       'd', aggregate(zip_with(v, e.cellv, (x, y) -> (x - y) * (x - y)),
-                                      cast(0 AS bigint), (a2, y) -> a2 + y),
-                       'c', e.cell))).c AS cell
-        FROM q CROSS JOIN cells
-    ),
-    assign AS (
-        SELECT vec_id, v,
-               aggregate(cands,
-                   named_struct('d', cast(9223372036854775807 AS bigint),
-                                'c', cast(9223372036854775807 AS bigint)),
-                   (acc, e) -> least(acc, named_struct(
-                       'd', aggregate(zip_with(v, e.cv, (x, y) -> (x - y) * (x - y)),
-                                      cast(0 AS bigint), (a2, y) -> a2 + y),
-                       'c', e.cid))).c AS cid
-        FROM vcell JOIN cmap_cells ON vcell.cell = cmap_cells.cell
-    ),
-    n AS (
-        SELECT vec_id, v, cid,
-               aggregate(v, cast(0 AS bigint), (acc, x) -> acc + x * x) AS nrm2
-        FROM assign
-    )
-    SELECT vec_id, v, cid, nrm2 FROM n
-    """
-
-SEM_PAIRS_NEW = """
-    WITH members AS (
-        SELECT cid, collect_list(named_struct('vec_id', vec_id, 'v', v,
-                                              'nrm2', nrm2)) AS ms
-        FROM __sem_n GROUP BY cid
-    ),
-    hits AS (
-        SELECT a.cid, a.vec_id AS kept_id, h.id AS dropped_id
-        FROM (SELECT /*+ REPARTITION(32) */ * FROM __sem_n) a
-        JOIN members m ON a.cid = m.cid
-        LATERAL VIEW explode(
-            filter(transform(filter(m.ms, b -> b.vec_id > a.vec_id),
-                             b -> named_struct('id', b.vec_id,
-                                 'dot', aggregate(zip_with(a.v, b.v, (x, y) -> x * y),
-                                                  cast(0 AS bigint), (acc, x) -> acc + x),
-                                 'nb2', b.nrm2)),
-                   s -> s.dot > 0 AND 25 * s.dot * s.dot > 4 * a.nrm2 * s.nb2)) t AS h
-    )
-    SELECT cid AS cluster_id, kept_id, dropped_id
-    FROM hits
-    ORDER BY cid, kept_id, dropped_id
-    """
-
-
-def exp_semnew(spark, sf_dir):
-    from sensql_presto_spark.queries import pipeline as P
-
-    def build(assign_sql, pairs_sql):
-        q = catalog.sql(spark, sf_dir, P._SEM_Q_SQL).localCheckpoint(eager=True)
-        n = P._sql_with_views(spark, assign_sql, __sem_q=q).localCheckpoint(eager=True)
-        n.createOrReplaceTempView("__sem_n")
-        return spark.sql(pairs_sql)
-
-    run_ab(
-        spark,
-        sf_dir,
-        {
-            "old": lambda: build(P._SEM_ASSIGN_SQL, P._SEM_PAIRS_SQL),
-            "new_assign": lambda: build(SEM_ASSIGN_NEW, P._SEM_PAIRS_SQL),
-            "new_both": lambda: build(SEM_ASSIGN_NEW, SEM_PAIRS_NEW2),
-            "new_pairs": lambda: build(P._SEM_ASSIGN_SQL, SEM_PAIRS_NEW2),
-        },
-        runs=5,
-        passes=2,
-    )
-
-
-def exp_semstage(spark, sf_dir):
-    """Isolated per-stage A/B: fixed staged inputs, alternate shapes."""
-    from sensql_presto_spark.queries import pipeline as P
-
-    q = catalog.sql(spark, sf_dir, P._SEM_Q_SQL).localCheckpoint(eager=True)
-    print("-- assign stage (over fixed q) --")
-    run_ab(
-        spark,
-        sf_dir,
-        {
-            "old": lambda: P._sql_with_views(spark, P._SEM_ASSIGN_SQL, __sem_q=q),
-            "new": lambda: P._sql_with_views(spark, SEM_ASSIGN_NEW, __sem_q=q),
-        },
-        runs=7,
-        passes=3,
-    )
-    n = P._sql_with_views(spark, P._SEM_ASSIGN_SQL, __sem_q=q).localCheckpoint(
-        eager=True
-    )
-    n.createOrReplaceTempView("__sem_n")
-    print("-- pairs stage (over fixed __sem_n) --")
-    run_ab(
-        spark,
-        sf_dir,
-        {
-            "old": lambda: spark.sql(P._SEM_PAIRS_SQL),
-            "new": lambda: spark.sql(SEM_PAIRS_NEW),
-        },
-        runs=7,
-        passes=3,
-    )
-
-
-SEM_PAIRS_NEW2 = """
-    WITH members AS (
-        SELECT cid, collect_list(named_struct('vec_id', vec_id, 'v', v,
-                                              'nrm2', nrm2)) AS ms
-        FROM __sem_n GROUP BY cid
-    ),
-    cand AS (
-        SELECT a.cid, a.vec_id AS kept_id, b.vec_id AS dropped_id,
-               aggregate(zip_with(a.v, b.v, (x, y) -> x * y),
-                         cast(0 AS bigint), (acc, x) -> acc + x) AS dot,
-               a.nrm2 AS na2, b.nrm2 AS nb2
-        FROM (SELECT /*+ REPARTITION(32) */ * FROM __sem_n) a
-        JOIN members m ON a.cid = m.cid
-        LATERAL VIEW explode(filter(m.ms, b -> b.vec_id > a.vec_id)) t AS b
-    )
-    SELECT cid AS cluster_id, kept_id, dropped_id
-    FROM cand
-    WHERE dot > 0 AND 25 * dot * dot > 4 * na2 * nb2
-    ORDER BY cid, kept_id, dropped_id
-    """
-
-
-def exp_sempairs10(spark, sf_dir):
-    from sensql_presto_spark.queries import pipeline as P
-
-    q = catalog.sql(spark, sf_dir, P._SEM_Q_SQL).localCheckpoint(eager=True)
-    n = P._sql_with_views(spark, P._SEM_ASSIGN_SQL, __sem_q=q).localCheckpoint(
-        eager=True
-    )
-    n.createOrReplaceTempView("__sem_n")
-    print(f"  __sem_n partitions: {n.rdd.getNumPartitions()}")
-    for label, sql_text in (
-        ("old", P._SEM_PAIRS_SQL),
-        ("new", SEM_PAIRS_NEW),
-        ("new2", SEM_PAIRS_NEW2),
-    ):
-        ts = []
-        for _ in range(10):
-            t0 = time.perf_counter()
-            spark.sql(sql_text).write.format("noop").mode("overwrite").save()
-            ts.append(round(time.perf_counter() - t0, 3))
-        print(f"  {label}: {ts}")
-
-
-def exp_sempar(spark, sf_dir):
-    """q checkpointed 32-way + map-only assign => parallel HOF, then
-    compare full pipelines old vs new-parallel."""
-    from sensql_presto_spark.queries import pipeline as P
-
-    par = spark.sparkContext.defaultParallelism
-
-    def build_old():
-        q = catalog.sql(spark, sf_dir, P._SEM_Q_SQL).localCheckpoint(eager=True)
-        n = P._sql_with_views(spark, P._SEM_ASSIGN_SQL, __sem_q=q).localCheckpoint(
-            eager=True
-        )
-        n.createOrReplaceTempView("__sem_n")
-        return spark.sql(P._SEM_PAIRS_SQL)
-
-    def build_new():
-        q = (
-            catalog.sql(spark, sf_dir, P._SEM_Q_SQL)
-            .repartition(par)
-            .localCheckpoint(eager=True)
-        )
-        n = P._sql_with_views(spark, SEM_ASSIGN_NEW, __sem_q=q).localCheckpoint(
-            eager=True
-        )
-        n.createOrReplaceTempView("__sem_n")
-        return spark.sql(P._SEM_PAIRS_SQL)
-
-    def build_new_p2():
-        q = (
-            catalog.sql(spark, sf_dir, P._SEM_Q_SQL)
-            .repartition(par)
-            .localCheckpoint(eager=True)
-        )
-        n = P._sql_with_views(spark, SEM_ASSIGN_NEW, __sem_q=q).localCheckpoint(
-            eager=True
-        )
-        n.createOrReplaceTempView("__sem_n")
-        return spark.sql(SEM_PAIRS_NEW2)
-
-    run_ab(
-        spark,
-        sf_dir,
-        {"old": build_old, "new": build_new, "new_p2": build_new_p2},
-        runs=6,
-        passes=3,
-    )
-
-
-# ---------------------------------------------------------------------------
-# experiment: text_dsir_weights — one hrows pass (unigram + bigram features
-# from the same lead() window) instead of two union branches over hrows
-# ---------------------------------------------------------------------------
-
-DSIR_POSTING_NEW = """
-    WITH tok AS (SELECT doc_id, split(text, ' ') AS t FROM documents),
-    trows AS (SELECT doc_id, posexplode(t) AS (pos, tk) FROM tok),
-    vocab AS (SELECT DISTINCT tk FROM trows),
-    vhash AS (
-        SELECT tk, aggregate(split(tk, ''), 131L,
-                             (acc, c) -> (acc * 31 + ascii(c)) % 1000000007) AS h
-        FROM vocab
-    ),
-    hrows AS (SELECT r.doc_id, r.pos, v.h FROM trows r JOIN vhash v ON r.tk = v.tk),
-    led AS (SELECT doc_id, h, lead(h, 1) OVER (PARTITION BY doc_id ORDER BY pos) AS h2
-            FROM hrows),
-    feats AS (
-        SELECT doc_id,
-               explode(CASE WHEN h2 IS NULL THEN array(h % 256)
-                            ELSE array(h % 256,
-                                       ((h * 131 + h2) % 1000000007) % 256 + 256)
-                       END) AS f
-        FROM led
-    )
-    SELECT doc_id, f, count(*) AS c FROM feats GROUP BY doc_id, f
-    """
-
-
-def exp_dsir(spark, sf_dir):
-    from sensql_presto_spark.queries import pipeline as P
-
-    def build(posting_sql):
-        posting = catalog.sql(spark, sf_dir, posting_sql).localCheckpoint(eager=True)
-        posting.createOrReplaceTempView("__dsir_posting")
-        return catalog.sql(spark, sf_dir, P._DSIR_MAIN_SQL.format(P="__dsir_posting"))
-
-    run_ab(
-        spark,
-        sf_dir,
-        {
-            "old": lambda: build(P._DSIR_POSTING_SQL),
-            "new": lambda: build(DSIR_POSTING_NEW),
-        },
-        runs=6,
-        passes=3,
-    )
-
-
-# ---------------------------------------------------------------------------
-# experiment: text_trigram_logprob — stage the per-doc gram counts once
-# (one corpus explode instead of two; model + scoring read the staged rel)
-# ---------------------------------------------------------------------------
-
-TRI_GRAMS_SQL = """
-    WITH docs AS (
-        SELECT /*+ REPARTITION(64) */ doc_id, text FROM documents
-    ),
-    tri AS (
-        SELECT doc_id, explode(transform(sequence(1, length(text) - 2),
-                                         i -> substring(text, i, 3))) AS tg
-        FROM docs
-    )
-    SELECT doc_id, tg, count(*) AS c FROM tri GROUP BY doc_id, tg
-    """
-
-TRI_MAIN_NEW = """
-    WITH model AS (
-        SELECT tg, c, sum(c) OVER () AS t
-        FROM (SELECT tg, sum(c) AS c FROM __tri_grams GROUP BY tg)
-    ),
-    scored AS (
-        SELECT g.doc_id, g.c AS cnt,
-               cast(floor(log2(CAST(m.c AS DOUBLE) / m.t) * 1000000 + 0.5) AS BIGINT)
-                   AS lp_micro
-        FROM __tri_grams g JOIN model m ON g.tg = m.tg
-        WHERE g.doc_id < 300
-    )
-    SELECT doc_id, sum(cnt) AS n_trigrams,
-           CAST(CAST(floor(sum(lp_micro * cnt) * 1.0 / sum(cnt) / 100.0 + 0.5) AS BIGINT) AS DOUBLE) / 10000.0 AS avg_log2p
-    FROM scored
-    GROUP BY doc_id
-    ORDER BY doc_id
-    """
-
-
-def exp_trigram(spark, sf_dir):
-    from sensql_presto_spark.queries import pipeline as P
-
-    def build_old():
-        return catalog.sql(spark, sf_dir, P._TRIGRAM_SPARK)
-
-    def build_new():
-        grams = catalog.sql(spark, sf_dir, TRI_GRAMS_SQL).localCheckpoint(eager=True)
-        grams.createOrReplaceTempView("__tri_grams")
-        return spark.sql(TRI_MAIN_NEW)
-
-    def build_raw():
-        tri = catalog.sql(
-            spark,
-            sf_dir,
-            """
-            WITH docs AS (SELECT /*+ REPARTITION(64) */ doc_id, text FROM documents)
-            SELECT doc_id, explode(transform(sequence(1, length(text) - 2),
-                                             i -> substring(text, i, 3))) AS tg
-            FROM docs
-            """,
-        ).localCheckpoint(eager=True)
-        tri.createOrReplaceTempView("__tri_raw")
-        return spark.sql(
-            """
-            WITH model AS (
-                SELECT tg, c, sum(c) OVER () AS t
-                FROM (SELECT tg, count(*) AS c FROM __tri_raw GROUP BY tg)
-            ),
-            scored AS (
-                SELECT tri.doc_id,
-                       cast(floor(log2(CAST(m.c AS DOUBLE) / m.t) * 1000000 + 0.5) AS BIGINT)
-                           AS lp_micro
-                FROM __tri_raw tri JOIN model m ON tri.tg = m.tg
-                WHERE tri.doc_id < 300
-            )
-            SELECT doc_id, count(*) AS n_trigrams,
-                   CAST(CAST(floor(sum(lp_micro) * 1.0 / count(*) / 100.0 + 0.5) AS BIGINT) AS DOUBLE) / 10000.0 AS avg_log2p
-            FROM scored
-            GROUP BY doc_id
-            ORDER BY doc_id
-            """
-        )
-
-    run_ab(
-        spark,
-        sf_dir,
-        {"old": build_old, "new": build_new, "raw": build_raw},
-        runs=6,
-        passes=3,
-    )
-
-
-# ---------------------------------------------------------------------------
-# experiment: sim_knn_join — int-typed corpus vectors (4x narrower), and a
-# repartitioned corpus checkpoint so the pair dots parallelize
-# ---------------------------------------------------------------------------
-
-
-def exp_knn(spark, sf_dir):
-    from sensql_presto_spark.queries import pipeline as P
-
-    int_corpus_sql = P._KNN_CORPUS_SQL.replace(
-        "cast(round(cast(x AS double) * 1000) AS bigint)",
-        "cast(round(cast(x AS double) * 1000) AS int)",
-    )
-    assert int_corpus_sql != P._KNN_CORPUS_SQL
-    par = spark.sparkContext.defaultParallelism
-
-    def build(corpus_sql, repart):
-        c = catalog.sql(spark, sf_dir, corpus_sql)
-        if repart:
-            c = c.repartition(par)
-        c = c.localCheckpoint(eager=True)
-        c.createOrReplaceTempView("__knn_corpus_ab")
-        return spark.sql(P._KNN_JOIN_SQL.format(E="__knn_corpus_ab"))
-
-    print("-- full pipeline (corpus build + join) --")
-    run_ab(
-        spark,
-        sf_dir,
-        {
-            "old": lambda: build(P._KNN_CORPUS_SQL, False),
-            "int": lambda: build(int_corpus_sql, False),
-            "int_rep": lambda: build(int_corpus_sql, True),
-            "rep": lambda: build(P._KNN_CORPUS_SQL, True),
-        },
-        runs=6,
-        passes=3,
-    )
-    print("-- join stage only (fixed corpora) --")
-    fixed = {}
-    for label, (sql_text, repart) in {
-        "old": (P._KNN_CORPUS_SQL, False),
-        "int_rep": (int_corpus_sql, True),
-    }.items():
-        c = catalog.sql(spark, sf_dir, sql_text)
-        if repart:
-            c = c.repartition(par)
-        c = c.localCheckpoint(eager=True)
-        view = f"__knn_c_{label}"
-        c.createOrReplaceTempView(view)
-        fixed[label] = lambda v=view: spark.sql(P._KNN_JOIN_SQL.format(E=v))
-    run_ab(spark, sf_dir, fixed, runs=6, passes=3)
-
-
-EXPERIMENTS = {
-    "knn": exp_knn,
-    "quantiles": exp_quantiles,
-    "semprof": exp_semprof,
-    "semnew": exp_semnew,
-    "semstage": exp_semstage,
-    "sempairs10": exp_sempairs10,
-    "sempar": exp_sempar,
-    "dsir": exp_dsir,
-    "trigram": exp_trigram,
-}
-
-
-def main():
-    name = sys.argv[1]
-    sf_dir = sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.1"
-    spark = get_spark(app_name=f"ab_{name}")
-    print(f"experiment {name} @ {sf_dir}")
-    EXPERIMENTS[name](spark, sf_dir)
-    spark.stop()
-
-
-if __name__ == "__main__":
-    main()

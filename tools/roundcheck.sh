@@ -1,6 +1,5 @@
 #!/usr/bin/env bash
-# One-command end-of-round validation — the protocol every round runs
-# before the driver grades it (kept in sync with .claude/skills/verify):
+# One-command validation of a change before it is committed:
 #
 #   1. full pytest suite
 #   2. full-registry driver_sim sweep (exact-hash, sf0.01 — the gate's own
@@ -27,13 +26,7 @@ echo "== vanilla priority window (driver simulation) =="
 python tools/driver_sim.py --vanilla
 
 echo "== bench smoke =="
-# r11 VERDICT next-round #2: pass the in-flight round to bench explicitly
-# so a CORRECTNESS_r{N}.json committed mid-round cannot shift the
-# prior-round filter to N+1 (tools/bench_round.sh derives it from the
-# sweep artifact this chain is stamping; empty -> bench's git derivation).
-BENCH_CURRENT_ROUND="$(bash tools/bench_round.sh)"
 SPARK_GRAFT_SF_DIR=/root/testdata/sf0.01 BENCH_RUNS=1 BENCH_PREWARM=0 \
-    BENCH_CURRENT_ROUND="$BENCH_CURRENT_ROUND" \
     python bench.py | python -c "import json,sys; d=json.loads(sys.stdin.read()); \
 print('bench OK:', d['metric'], d['value'], 'sec,', len(d['queries']), 'queries')"
 
