@@ -19,10 +19,7 @@ Outputs:
   fields, ``queries_4dp``, ``plan_fingerprints`` (an expression-id-stripped
   hash of each query's physical plan) and
   ``plan_fingerprints_post_checkpoint_only`` (queries whose plan starts at a
-  checkpoint, so their hash covers only the final stage). Spark cuts long
-  scan filter lists before the ids are stripped, and the cut point moves
-  with the ids' digit counts, so hashes compare only between sessions that
-  ran the same work before each query.
+  checkpoint, so their hash covers only the final stage).
 """
 
 from __future__ import annotations
@@ -43,11 +40,20 @@ _PLAN_FPS: dict = {}
 
 def _capture_fingerprint(spark, name: str, df) -> None:
     """Expression-id-stripped plan hash, captured from the prewarm build
-    so no extra builder run is needed."""
+    so no extra builder run is needed.
+
+    Spark cuts long metadata strings (a scan's filter lists) at
+    ``spark.sql.maxMetadataStringLength`` before the ids are stripped; under
+    the default limit the cut point, and with it the hash, would move with
+    the ids' digit counts, i.e. with the session's history. So the plan is
+    explained uncut."""
     import hashlib
     import re as _re
 
+    key = "spark.sql.maxMetadataStringLength"
+    prev = spark.conf.get(key)
     try:
+        spark.conf.set(key, str(2**31 - 1))
         p = df._jdf.queryExecution().explainString(
             spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("simple")
         )
@@ -59,6 +65,8 @@ def _capture_fingerprint(spark, name: str, df) -> None:
         }
     except Exception:  # fingerprint is best-effort evidence
         _PLAN_FPS[name] = {"fp": "error", "post_checkpoint_only": False}
+    finally:
+        spark.conf.set(key, prev)
 
 
 def _stdout_line(out: dict, timings: dict) -> str:

@@ -46,20 +46,15 @@ def _emit(df, fmt: str, limit: int) -> None:
 
 
 def prepare_session(spark, sf_dir: str) -> None:
-    """Install the full engine surface on a session: catalog views plus the
-    Presto-name compat, geospatial, and sketch function families — what the
-    reference coordinator exposes with every plugin loaded."""
+    """Install the full engine surface on a session: the catalog views plus
+    every function family in ``functions.register_all`` (Presto-name compat,
+    Python UDFs, color, IP, sketches, geospatial), each name registered once
+    — what the reference coordinator exposes with every plugin loaded."""
     from sensql_presto_spark import catalog
     from sensql_presto_spark.functions import register_all
-    from sensql_presto_spark.functions.geospatial import register_geospatial
-    from sensql_presto_spark.functions.ip import register_ip_functions
-    from sensql_presto_spark.functions.sketches import register_sketch_functions
 
     catalog.register_views(spark, sf_dir)
     register_all(spark)
-    register_geospatial(spark)
-    register_sketch_functions(spark)
-    register_ip_functions(spark)
 
 
 def run_statement(

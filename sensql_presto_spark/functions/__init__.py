@@ -8,6 +8,7 @@
   (``udfs``: word_stem, normal_cdf, inverse_normal_cdf, unicode normalize),
 - the color-function family (``color``: ColorFunctions.java parity — SQL
   temp fns for color/rgb/render, float32-HSB gradient UDFs for bar),
+- the ``ip``, ``sketches`` (qdigest/tdigest) and ``geospatial`` families,
 - nothing for Presto names Spark already covers under a different name —
   those are documented in ``PRESTO_EQUIVALENTS`` for query authors.
 """
@@ -43,19 +44,19 @@ __all__ = [
 
 
 def register_all(spark: SparkSession) -> None:
-    """Install the full compat surface on a session (idempotent)."""
+    """Install the full compat surface on a session (idempotent), each
+    family once, so each function name is registered once."""
     from sensql_presto_spark.functions.color import register_color_functions
+    from sensql_presto_spark.functions.geospatial import register_geospatial
     from sensql_presto_spark.functions.ip import register_ip_functions
     from sensql_presto_spark.functions.sketches import register_sketch_functions
 
     register_sql_functions(spark)
     register_python_udfs(spark)
     register_color_functions(spark)
-    # IpPrefixFunctions.java + qdigest/tdigest scalar surface used to be
-    # registered only by the suites that exercised them; a user calling
-    # register_all() expects the whole reference name surface.
     register_ip_functions(spark)
     register_sketch_functions(spark)
+    register_geospatial(spark)
     _register_builtin_aliases(spark)
 
 

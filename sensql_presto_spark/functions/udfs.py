@@ -119,7 +119,6 @@ def unicode_normalize(s: pd.Series, form: pd.Series) -> pd.Series:
 
 def register_python_udfs(spark: SparkSession) -> None:
     spark.udf.register("word_stem", word_stem)
-    register_geo_udfs(spark)
     register_hmac_udfs(spark)
     register_hash_codec_udfs(spark)
     spark.udf.register("normal_cdf", normal_cdf)
@@ -130,19 +129,6 @@ def register_python_udfs(spark: SparkSession) -> None:
     # (StringFunctions.java normalize); the 1-arg NFC default lives at
     # normalize_nfc since Spark UDF names can't overload by arity
     spark.udf.register("normalize", unicode_normalize)
-
-
-# --- geospatial surface (reference: presto-geospatial/GeoFunctions.java):
-#     lives in functions/geospatial.py — codegen'd SQL temp functions for
-#     point/tile math, Arrow-vectorized pandas UDFs for WKT geometry.
-#     (Round 1 registered row-at-a-time Python lambdas here; the advisor
-#     flagged that as the classic fact-table scale-killer.)
-
-
-def register_geo_udfs(spark: SparkSession) -> None:
-    from sensql_presto_spark.functions.geospatial import register_geospatial
-
-    register_geospatial(spark)
 
 
 # --- HMAC family (HmacFunctions.java: hmac_md5/sha1/sha256/sha512) — no

@@ -17,15 +17,16 @@ Implements the Presto client REST protocol shape over the Spark engine:
 State machine per query: QUEUED → RUNNING → FINISHED | FAILED | CANCELED —
 the same client-visible states the reference's ``QueryState`` exposes.
 
-Execution is Spark-native: statements run through the same
-``cli.prepare_session`` surface (catalog views + Presto-name compat
-functions + geospatial + SenSQL federation availability), on a worker
-thread per query so the HTTP loop never blocks on a Spark job.  Result
-paging slices the *collected* driver-side rows — the reference's protocol
-also pages from coordinator memory after the root fragment drains
-(``TaskOutputOperator`` → coordinator buffer), so this matches the
-protocol's memory model; queries whose full result would not fit a driver
-belong behind INSERT/CTAS, exactly as in the reference.
+Execution is Spark-native, on a worker thread per query so the HTTP loop
+never blocks on a Spark job.  ``cli.prepare_session`` installs the engine
+surface once, on a private template session, and each client's session is
+a clone of it — the reference's one function manager per coordinator with
+a lightweight ``Session`` per client.  Result paging slices the *collected*
+driver-side rows — the reference's protocol also pages from coordinator
+memory after the root fragment drains (``TaskOutputOperator`` →
+coordinator buffer), so this matches the protocol's memory model; queries
+whose full result would not fit a driver belong behind INSERT/CTAS,
+exactly as in the reference.
 """
 
 from __future__ import annotations
@@ -36,7 +37,10 @@ import uuid
 from dataclasses import dataclass, field
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
+from pyspark.sql import SparkSession
 from pyspark.sql import types as T
+
+from sensql_presto_spark.statements import StatementSession
 
 PAGE_ROWS = 1000
 
@@ -115,8 +119,9 @@ class QueryExecution:
     columns: list | None = None
     rows: list | None = None
     error: dict | None = None
+    page_start: int = 0  # the last served page is rows[page_start:cursor]
     cursor: int = 0
-    token: int = 0
+    token: int = 0  # the next page's token
     lock: threading.Lock = field(default_factory=threading.Lock)
 
     def snapshot_stats(self) -> dict:
@@ -152,22 +157,18 @@ class SqlServer:
         from sensql_presto_spark.access import AccessControl
         from sensql_presto_spark.cli import prepare_session
 
-        from sensql_presto_spark.statements import StatementSession
-
         self.spark = spark
         self.sf_dir = sf_dir
-        prepare_session(spark, sf_dir)
         # Statement state (PREPARE names, SET SESSION properties, temp
         # objects) is keyed per client identity (X-Presto-User /
         # X-Presto-Session header), matching the reference's per-Session
-        # scoping in QueryPreparer / SystemSessionProperties.  Each client
-        # gets a FORKED SparkSession (``spark.newSession()``): same
-        # SparkContext/executors, but its own SQLConf and temp-view
-        # catalog — so one client's SET SESSION (a SQLConf write) and
-        # CREATE TEMP objects are invisible to every other client, exactly
-        # the coordinator's Session isolation model.
-        self._stmts_cls = StatementSession
-        self._prepare = prepare_session
+        # scoping in QueryPreparer / SystemSessionProperties.  The surface
+        # is installed once, on this private template that runs no
+        # statement; each client gets a JVM clone with its own SQLConf,
+        # temp views and functions, so one client's SET SESSION and CREATE
+        # TEMP objects are invisible to every other client.
+        self._template = spark.newSession()
+        prepare_session(self._template, sf_dir)
         # one AccessControl store for the whole server (coordinator scope):
         # an admin client's GRANT is visible to the granted user's next
         # query; enforcement mirrors the reference's configured-system-
@@ -198,7 +199,7 @@ class SqlServer:
     # Sessions beyond this count evict least-recently-used — the
     # reference's idle-session expiry (Session timeout in QueryManager
     # config) bounded by count instead of wall-clock, so a long-lived
-    # server with many one-shot clients cannot accumulate forked
+    # server with many one-shot clients cannot accumulate cloned
     # SparkSessions without bound. Durable state (grants, warehouse
     # tables) lives outside the session and survives eviction; only
     # session-scoped state (PREPARE names, SET SESSION, temp views) drops,
@@ -235,22 +236,24 @@ class SqlServer:
                 "existing transaction before opening new client sessions"
             )
 
-    def _session_for(self, client: str) -> "object":
+    def _session_for(self, client: str) -> StatementSession:
         with self._sessions_lock:
             sess = self._sessions.get(client)
             if sess is None:
-                # reject BEFORE the (expensive) fork+prepare below
+                # reject BEFORE building a session below
                 self._reject_if_txn_saturated(client)
         if sess is None:
-            # Build + prepare the forked session OUTSIDE the lock: parquet
-            # footer reads and function registration take hundreds of ms and
-            # must not stall every concurrent query on another client's
-            # first request.  Double-checked insert below resolves races
-            # (the first insert wins; a losing fork is just garbage).
-            forked = self.spark.newSession()
-            self._prepare(forked, self.sf_dir)
-            sess = self._stmts_cls(
-                forked,
+            # Build OUTSIDE the lock: StatementSession re-attaches persisted
+            # materialized views, which must not stall every concurrent
+            # query.  Double-checked insert below resolves races (the first
+            # insert wins; a losing clone is just garbage).  The clone's
+            # first statement registers its own catalog views, so its scans
+            # read with its own SQLConf, not the template's.
+            clone = SparkSession(
+                self.spark.sparkContext, self._template._jsparkSession.cloneSession()
+            )
+            sess = StatementSession(
+                clone,
                 self.sf_dir,
                 user=client,
                 access=self._access,
@@ -261,7 +264,7 @@ class SqlServer:
         with self._sessions_lock:
             if client not in self._sessions:
                 # re-check admission: other clients may have opened
-                # transactions while the fork+prepare ran unlocked
+                # transactions while the session was built unlocked
                 self._reject_if_txn_saturated(client)
                 # re-insert: either the fresh session built above, or a
                 # previously-fetched one that a concurrent request evicted
@@ -362,8 +365,14 @@ class SqlServer:
                 q.state = "FAILED"
 
     # -- protocol documents ------------------------------------------------
-    def _document(self, q: QueryExecution, base: str) -> dict:
+    def _document(self, q: QueryExecution, base: str, token: int) -> dict | None:
+        """The document for a request carrying ``token``: the last served
+        token gets the same page again (a retry loses no rows), any token but
+        that and the next one gets None, i.e. 410 Gone, as in
+        ExecutingStatementResource."""
         with q.lock:
+            if token not in (q.token, q.token - 1):
+                return None
             doc: dict = {
                 "id": q.query_id,
                 "infoUri": f"{base}/v1/query/{q.query_id}",
@@ -377,11 +386,13 @@ class SqlServer:
                 doc["error"] = {"message": "Query was canceled", "errorName": "USER_CANCELED"}
             elif q.state == "FINISHED":
                 doc["columns"] = q.columns
-                page = q.rows[q.cursor : q.cursor + PAGE_ROWS]
+                if token == q.token:
+                    q.page_start = q.cursor
+                    q.cursor = min(q.cursor + PAGE_ROWS, len(q.rows))
+                    q.token += 1
+                page = q.rows[q.page_start : q.cursor]
                 if page:
                     doc["data"] = page
-                q.cursor += len(page)
-                q.token += 1
                 if q.cursor < len(q.rows):
                     doc["nextUri"] = f"{base}/v1/statement/executing/{q.query_id}/{q.token}"
         return doc
@@ -418,7 +429,8 @@ class SqlServer:
                     "X-Presto-User", "anonymous"
                 )
                 q = server.submit(sql, client=client)
-                self._send(200, server._document(q, self._base()))
+                # the submit response is the query's first document: token 0
+                self._send(200, server._document(q, self._base(), 0))
 
             def do_GET(self):
                 parts = self.path.strip("/").split("/")
@@ -437,7 +449,11 @@ class SqlServer:
                     if q is None:
                         self._send(404, {"error": {"message": "unknown query"}})
                         return
-                    self._send(200, server._document(q, self._base()))
+                    doc = parts[4].isdigit() and server._document(q, self._base(), int(parts[4]))
+                    if not doc:
+                        self._send(410, {"error": {"message": f"invalid token: {parts[4]}"}})
+                        return
+                    self._send(200, doc)
                     return
                 if len(parts) == 3 and parts[:2] == ["v1", "query"]:
                     # QueryResource.getQueryInfo — the infoUri target

@@ -234,6 +234,23 @@ def test_temp_views_scoped_per_client(sql_server):
     assert err is not None
 
 
+def test_client_conf_governs_catalog_view_scans(sql_server):
+    """A client's own SQLConf governs scans of the catalog views: a cloned
+    session reads through views registered in itself, not through the
+    template's, whose file scans would keep the template's conf."""
+    err, _ = _run_query_as(sql_server, "SELECT count(*) FROM lineitem", "conf_c")
+    assert err is None
+    client = sql_server._sessions["conf_c"].spark
+    splits_before = client.table("lineitem").rdd.getNumPartitions()
+    for stmt in (
+        "SET spark.sql.files.maxPartitionBytes=65536",
+        "SET spark.sql.files.openCostInBytes=0",
+    ):
+        err, _ = _run_query_as(sql_server, stmt, "conf_c")
+        assert err is None, err
+    assert client.table("lineitem").rdd.getNumPartitions() > splits_before
+
+
 def test_query_info_endpoint(sql_server):
     """GET /v1/query/{id} — the infoUri target (QueryResource.getQueryInfo)."""
     base = f"http://127.0.0.1:{sql_server.port}"
@@ -512,4 +529,93 @@ def test_write_write_conflict_over_http(spark, oracle_dir):
             assert err is None and rows == [[20]], who
     finally:
         spark.sql("DROP TABLE IF EXISTS t_http_ww")
+        s.stop()
+
+
+def test_retried_page_fetch_repeats_the_page(sql_server):
+    """Tokens as in ExecutingStatementResource: re-sending the last served
+    token returns the same page again (a client retrying a lost response
+    loses no rows), and any other stale or made-up token is 410 Gone."""
+    base = f"http://127.0.0.1:{sql_server.port}"
+    status, doc = _http(
+        "POST",
+        f"{base}/v1/statement",
+        b"SELECT id FROM range(2500) ORDER BY id",
+    )
+    assert status == 200
+    qid = doc["id"]
+    uri = f"{base}/v1/statement/executing/{qid}/0"  # the submit response is token 0
+    t0 = time.time()
+    while "data" not in doc:
+        assert "error" not in doc and doc.get("nextUri"), doc
+        assert time.time() - t0 < 120, "query did not finish in time"
+        time.sleep(0.05)
+        uri = doc["nextUri"]
+        status, doc = _http("GET", uri)
+        assert status == 200
+    first = doc
+
+    status, again = _http("GET", uri)  # retry the fetch that served page one
+    assert status == 200
+    assert again["data"] == first["data"] and again["nextUri"] == first["nextUri"]
+
+    rows = list(first["data"])
+    served = [uri]
+    doc = first
+    while doc.get("nextUri"):
+        served.append(doc["nextUri"])
+        status, doc = _http("GET", doc["nextUri"])
+        assert status == 200
+        rows.extend(doc.get("data", []))
+    assert rows == [[i] for i in range(2500)]  # every row exactly once, in order
+
+    assert _http("GET", served[0])[0] == 410  # a stale token
+    assert _http("GET", f"{base}/v1/statement/executing/{qid}/99")[0] == 410
+    assert _http("GET", f"{base}/v1/statement/executing/{qid}/x")[0] == 410
+
+
+def test_server_prepares_the_surface_once(spark, oracle_dir, monkeypatch):
+    """The engine surface is installed once, at server start; each new
+    client's session is cloned from it and sees every function family, and
+    a client first seen after another client's COMMIT reads the committed
+    rows (the clone carries no stale relation cache)."""
+    from sensql_presto_spark import cli
+
+    calls = []
+    prepare = cli.prepare_session
+
+    def counting_prepare(session, sf_dir):
+        calls.append(sf_dir)
+        prepare(session, sf_dir)
+
+    monkeypatch.setattr(cli, "prepare_session", counting_prepare)
+    s = srv.SqlServer(spark, oracle_dir).start()
+    calls.clear()
+    surface = (
+        "SELECT st_area('POLYGON ((0 0, 0 2, 2 2, 2 0, 0 0))') AS a,"
+        " ip_subnet_min('192.168.7.0/24') AS ip,"
+        " value_at_quantile(array(0D, 10D, 20D), 0.5) AS q,"
+        " any_match(array(1, 2, 3), x -> x > 2) AS m"
+    )
+    try:
+        err, rows = _run_query_as(s, surface, "once_w")
+        assert err is None and rows == [[4.0, "192.168.7.0", 10.0, True]], err
+        for stmt in (
+            "CREATE TABLE t_http_once AS SELECT n_nationkey FROM nation",
+            "SELECT count(*) FROM t_http_once",
+            "START TRANSACTION",
+            "INSERT INTO t_http_once VALUES (100), (101)",
+            "COMMIT",
+        ):
+            err, _ = _run_query_as(s, stmt, "once_w")
+            assert err is None, (stmt, err)
+        # two clients first seen after the COMMIT
+        for client in ("once_r", "once_late"):
+            err, rows = _run_query_as(s, surface, client)
+            assert err is None and rows == [[4.0, "192.168.7.0", 10.0, True]], (client, err)
+            err, rows = _run_query_as(s, "SELECT count(*) AS n FROM t_http_once", client)
+            assert err is None and rows == [[27]], (client, err)
+        assert calls == []
+    finally:
+        spark.sql("DROP TABLE IF EXISTS t_http_once")
         s.stop()
