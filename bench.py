@@ -38,16 +38,14 @@ STDOUT_BUDGET = 1900
 _PLAN_FPS: dict = {}
 
 
-def _capture_fingerprint(spark, name: str, df) -> None:
-    """Expression-id-stripped plan hash, captured from the prewarm build
-    so no extra builder run is needed.
+def canonical_plan(spark, df) -> str:
+    """``df``'s physical plan as text that depends on the plan only:
+    expression ids and ``plan_id``s are stripped.
 
     Spark cuts long metadata strings (a scan's filter lists) at
     ``spark.sql.maxMetadataStringLength`` before the ids are stripped; under
-    the default limit the cut point, and with it the hash, would move with
-    the ids' digit counts, i.e. with the session's history. So the plan is
-    explained uncut."""
-    import hashlib
+    the default limit the cut point would move with the ids' digit counts,
+    i.e. with the session's history. So the plan is explained uncut."""
     import re as _re
 
     key = "spark.sql.maxMetadataStringLength"
@@ -57,16 +55,25 @@ def _capture_fingerprint(spark, name: str, df) -> None:
         p = df._jdf.queryExecution().explainString(
             spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("simple")
         )
-        stripped = _re.sub(r"#\d+L?", "#", p)
-        stripped = _re.sub(r"plan_id=\d+", "plan_id=", stripped)
+    finally:
+        spark.conf.set(key, prev)
+    stripped = _re.sub(r"#\d+L?", "#", p)
+    return _re.sub(r"plan_id=\d+", "plan_id=", stripped)
+
+
+def _capture_fingerprint(spark, name: str, df) -> None:
+    """Hash of ``canonical_plan``, captured from the prewarm build so no
+    extra builder run is needed."""
+    import hashlib
+
+    try:
+        plan = canonical_plan(spark, df)
         _PLAN_FPS[name] = {
-            "fp": hashlib.sha256(stripped.encode()).hexdigest()[:16],
-            "post_checkpoint_only": "Scan ExistingRDD" in p,
+            "fp": hashlib.sha256(plan.encode()).hexdigest()[:16],
+            "post_checkpoint_only": "Scan ExistingRDD" in plan,
         }
     except Exception:  # fingerprint is best-effort evidence
         _PLAN_FPS[name] = {"fp": "error", "post_checkpoint_only": False}
-    finally:
-        spark.conf.set(key, prev)
 
 
 def _stdout_line(out: dict, timings: dict) -> str:

@@ -60,17 +60,10 @@ def prepare_session(spark, sf_dir: str) -> None:
 def run_statement(
     spark, sf_dir: str, text: str, fmt: str = "aligned", limit: int = 1000, state=None
 ) -> None:
-    from sensql_presto_spark import catalog
     from sensql_presto_spark.statements import StatementSession
 
     text = text.strip().rstrip(";")
     if not text:
-        return
-    if text.upper().startswith("EXPLAIN ANALYZE "):
-        from sensql_presto_spark.explain import explain_analyze
-
-        inner = catalog.sql(spark, sf_dir, text[len("EXPLAIN ANALYZE ") :])
-        _emit(explain_analyze(spark, inner), fmt, limit)
         return
     if state is None:
         state = StatementSession(spark, sf_dir)

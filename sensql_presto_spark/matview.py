@@ -28,6 +28,7 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 
 from sensql_presto_spark import catalog
+from sensql_presto_spark.mutation import committed_versions, next_version
 
 _DEF_FILE = "definition.json"
 
@@ -46,24 +47,7 @@ class MaterializedViewStore:
         return os.path.join(self.root, name)
 
     def _versions(self, name: str) -> list[int]:
-        d = self._dir(name)
-        if not os.path.isdir(d):
-            return []
-        return sorted(
-            int(e[2:])
-            for e in os.listdir(d)
-            if e.startswith("v=") and os.path.exists(os.path.join(d, e, "_SUCCESS"))
-        )
-
-    def _next_version(self, name: str) -> int:
-        """Next snapshot number, counting UNCOMMITTED (_SUCCESS-less) debris
-        from a killed write too — reusing a partial version's number would
-        make the committed write collide with its leftover directory."""
-        d = self._dir(name)
-        if not os.path.isdir(d):
-            return 0
-        all_vs = [int(e[2:]) for e in os.listdir(d) if e.startswith("v=")]
-        return max(all_vs) + 1 if all_vs else 0
+        return committed_versions(self._dir(name))
 
     def _write_definition(self, name: str, sql: str) -> None:
         """Atomic definition swap (tmp + rename): a crash mid-write must
@@ -106,7 +90,7 @@ class MaterializedViewStore:
         # new definition) before retiring old versions, so a failing
         # defining query or a crash mid-write leaves the prior MV intact —
         # same discipline as mutation.WritableTable.
-        v = self._next_version(name)
+        v = next_version(self._dir(name))
         df = catalog.sql(self.spark, self.sf_dir, sql)
         df.write.parquet(os.path.join(d, f"v={v}"))
         self._write_definition(name, sql)
@@ -133,7 +117,7 @@ class MaterializedViewStore:
         """
         if not self.exists(name):
             raise ValueError(f"Materialized view not found: {name}")
-        v = self._next_version(name)
+        v = next_version(self._dir(name))
         if where is None:
             df = catalog.sql(self.spark, self.sf_dir, self.definition(name))
         else:

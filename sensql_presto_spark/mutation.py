@@ -44,6 +44,27 @@ except Exception:  # pragma: no cover
     _HAVE_DELTA = False
 
 
+def committed_versions(path: str) -> list[int]:
+    """Numbers of the committed (``_SUCCESS``-gated) snapshots under
+    ``path``, ascending."""
+    if not os.path.isdir(path):
+        return []
+    return sorted(
+        int(e[2:])
+        for e in os.listdir(path)
+        if e.startswith("v=") and os.path.exists(os.path.join(path, e, "_SUCCESS"))
+    )
+
+
+def next_version(path: str) -> int:
+    """Number for the next snapshot under ``path``. It also counts the
+    uncommitted directories a failed or killed write leaves behind: reusing
+    one of their numbers would make the write collide with the leftover."""
+    if not os.path.isdir(path):
+        return 0
+    return max((int(e[2:]) for e in os.listdir(path) if e.startswith("v=")), default=-1) + 1
+
+
 class WritableTable:
     """A versioned, copy-on-write parquet table supporting row mutations."""
 
@@ -55,20 +76,9 @@ class WritableTable:
 
     # -- snapshot bookkeeping ------------------------------------------------
 
-    def _versions(self) -> list[int]:
-        if not os.path.isdir(self.path):
-            return []
-        out = []
-        for d in os.listdir(self.path):
-            if d.startswith("v="):
-                full = os.path.join(self.path, d)
-                if os.path.exists(os.path.join(full, "_SUCCESS")):
-                    out.append(int(d[2:]))
-        return sorted(out)
-
     @property
     def version(self) -> int:
-        vs = self._versions()
+        vs = committed_versions(self.path)
         if not vs:
             raise FileNotFoundError(f"no committed snapshot under {self.path}")
         return vs[-1]
@@ -94,12 +104,12 @@ class WritableTable:
         """Time travel: read snapshot ``v`` (``VERSION AS OF`` in Delta/
         Iceberg terms). Every committed version is an immutable directory,
         so historical reads are plain parquet scans — no log replay."""
-        if v not in self._versions():
+        if v not in committed_versions(self.path):
             raise ValueError(f"no committed version {v} under {self.path}")
         return self.spark.read.parquet(self._vdir(v))
 
     def _commit(self, df: DataFrame) -> None:
-        df.write.parquet(self._vdir(self.version + 1))
+        df.write.parquet(self._vdir(next_version(self.path)))
 
     # -- mutations (all declarative; Catalyst plans every one) ---------------
 

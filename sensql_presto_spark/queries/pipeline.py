@@ -27,6 +27,8 @@ All hash functions that feed an oracle comparison use an explicit
 polynomial hash (acc*31 + byte mod 1e9+7) written identically in Spark SQL
 and DuckDB SQL, so results match bit-for-bit; xxhash64 (JVM-side, faster)
 is used only where the oracle re-verifies through exact Jaccard.
+
+Vector kernels (dot, squared distance and norm) come from ``queries/vec.py``.
 """
 
 from __future__ import annotations
@@ -35,6 +37,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from sensql_presto_spark import catalog
+from sensql_presto_spark.queries import vec
 from sensql_presto_spark.queries.registry import register
 from sensql_presto_spark.queries.relational import _sql_query
 
@@ -589,13 +592,12 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 # engines accumulate in float64.
 _sql_query(
     "dedup_embedding_cosine",
-    """
+    f"""
     WITH e AS (SELECT vec_id, transform(embedding, x -> cast(x AS double)) AS v FROM embeddings),
-    n AS (SELECT vec_id, v, sqrt(aggregate(v, cast(0 AS double), (a, x) -> a + x * x)) AS nrm FROM e),
+    n AS (SELECT vec_id, v, sqrt({vec.norm2('v', 'double')}) AS nrm FROM e),
     p AS (
         SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-               aggregate(zip_with(a.v, b.v, (x, y) -> x * y), cast(0 AS double),
-                         (acc, x) -> acc + x) / (a.nrm * b.nrm) AS cos
+               {vec.dot('a.v', 'b.v', 'double')} / (a.nrm * b.nrm) AS cos
         FROM n a JOIN n b ON a.vec_id < b.vec_id
     )
     SELECT id_a, id_b, round(cos, 4) AS cos_sim
@@ -640,7 +642,7 @@ _sql_query(
 # break on cluster id.
 _sql_query(
     "cluster_kmeans",
-    """
+    f"""
     WITH q AS (
         SELECT vec_id,
                transform(embedding, x -> cast(round(cast(x AS double) * 1000) AS bigint)) AS v
@@ -649,8 +651,7 @@ _sql_query(
     c0 AS (SELECT vec_id AS cid, v AS cv FROM q WHERE vec_id < 8),
     d1 AS (
         SELECT q.vec_id, q.v, c0.cid,
-               aggregate(zip_with(q.v, c0.cv, (x, y) -> (x - y) * (x - y)),
-                         cast(0 AS bigint), (acc, x) -> acc + x) AS dist
+               {vec.sq_dist('q.v', 'c0.cv', 'bigint')} AS dist
         FROM q CROSS JOIN c0
     ),
     -- argmin as min_by (ties: dist then cid), NOT a row_number window:
@@ -678,8 +679,7 @@ _sql_query(
     ),
     d2 AS (
         SELECT q.vec_id, c1.cid,
-               aggregate(zip_with(q.v, c1.cv, (x, y) -> (x - y) * (x - y)),
-                         cast(0 AS bigint), (acc, x) -> acc + x) AS dist
+               {vec.sq_dist('q.v', 'c1.cv', 'bigint')} AS dist
         FROM q CROSS JOIN c1
     ),
     m2 AS (
@@ -788,7 +788,7 @@ _SEM_Q_SQL = """
     FROM embeddings
     """
 
-_SEM_ASSIGN_SQL = """
+_SEM_ASSIGN_SQL = f"""
     WITH q AS (SELECT vec_id, v FROM __sem_q),
     params AS (
         SELECT k, greatest(cast(4 AS bigint),
@@ -809,8 +809,7 @@ _SEM_ASSIGN_SQL = """
                       named_struct('d', dist, 'c', cell)).cv AS cv
         FROM (
             SELECT c0.cid, c0.cv, c1.cell,
-                   aggregate(zip_with(c0.cv, c1.cellv, (x, y) -> (x - y) * (x - y)),
-                             cast(0 AS bigint), (acc, x) -> acc + x) AS dist
+                   {vec.sq_dist('c0.cv', 'c1.cellv', 'bigint')} AS dist
             FROM c0 CROSS JOIN c1
         )
         GROUP BY cid
@@ -824,8 +823,7 @@ _SEM_ASSIGN_SQL = """
                       named_struct('d', dist, 'c', cell)).v AS v
         FROM (
             SELECT q.vec_id, q.v, c1.cell,
-                   aggregate(zip_with(q.v, c1.cellv, (x, y) -> (x - y) * (x - y)),
-                             cast(0 AS bigint), (acc, x) -> acc + x) AS dist
+                   {vec.sq_dist('q.v', 'c1.cellv', 'bigint')} AS dist
             FROM q CROSS JOIN c1
         )
         GROUP BY vec_id
@@ -839,25 +837,23 @@ _SEM_ASSIGN_SQL = """
                       named_struct('d', dist, 'c', cid)).v AS v
         FROM (
             SELECT vcell.vec_id, vcell.v, cmap.cid,
-                   aggregate(zip_with(vcell.v, cmap.cv, (x, y) -> (x - y) * (x - y)),
-                             cast(0 AS bigint), (acc, x) -> acc + x) AS dist
+                   {vec.sq_dist('vcell.v', 'cmap.cv', 'bigint')} AS dist
             FROM vcell JOIN cmap ON vcell.cell = cmap.cell
         )
         GROUP BY vec_id
     ),
     n AS (
         SELECT vec_id, v, cid,
-               aggregate(v, cast(0 AS bigint), (acc, x) -> acc + x * x) AS nrm2
+               {vec.norm2('v', 'bigint')} AS nrm2
         FROM assign
     )
     SELECT vec_id, v, cid, nrm2 FROM n
     """
 
-_SEM_PAIRS_SQL = """
+_SEM_PAIRS_SQL = f"""
     WITH pairs AS (
         SELECT a.cid, a.vec_id AS kept_id, b.vec_id AS dropped_id,
-               aggregate(zip_with(a.v, b.v, (x, y) -> x * y),
-                         cast(0 AS bigint), (acc, x) -> acc + x) AS dot,
+               {vec.dot('a.v', 'b.v', 'bigint')} AS dot,
                a.nrm2 AS na2, b.nrm2 AS nb2
         -- REPARTITION keeps the interpreted-HOF dot products 32-way
         -- parallel (AQE would coalesce the checkpoint-fed join to one
@@ -966,7 +962,7 @@ def _sem_assign_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
 # hash ranking avoids any global sort.
 _sql_query(
     "cluster_balanced_sample",
-    """
+    f"""
     WITH q AS (
         SELECT vec_id,
                transform(embedding, x -> cast(round(cast(x AS double) * 1000) AS bigint)) AS v
@@ -978,8 +974,7 @@ _sql_query(
                min_by(cid, named_struct('d', dist, 'c', cid)) AS cid
         FROM (
             SELECT q.vec_id, c0.cid,
-                   aggregate(zip_with(q.v, c0.cv, (x, y) -> (x - y) * (x - y)),
-                             cast(0 AS bigint), (acc, x) -> acc + x) AS dist
+                   {vec.sq_dist('q.v', 'c0.cv', 'bigint')} AS dist
             FROM q CROSS JOIN c0
         )
         GROUP BY vec_id
@@ -1042,14 +1037,13 @@ _sql_query(
 # right distributed shape: no shuffle of the corpus at all.
 _sql_query(
     "sim_topk_bruteforce",
-    """
+    f"""
     WITH e AS (SELECT vec_id, transform(embedding, x -> cast(x AS double)) AS v FROM embeddings),
-    n AS (SELECT vec_id, v, sqrt(aggregate(v, cast(0 AS double), (a, x) -> a + x * x)) AS nrm FROM e),
+    n AS (SELECT vec_id, v, sqrt({vec.norm2('v', 'double')}) AS nrm FROM e),
     q AS (SELECT * FROM n WHERE vec_id < 5),
     scored AS (
         SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-               aggregate(zip_with(q.v, c.v, (x, y) -> x * y), cast(0 AS double),
-                         (acc, x) -> acc + x) / (q.nrm * c.nrm) AS cos
+               {vec.dot('q.v', 'c.v', 'double')} / (q.nrm * c.nrm) AS cos
         FROM q JOIN n c ON q.vec_id <> c.vec_id
     ),
     ranked AS (
@@ -1090,7 +1084,7 @@ _sql_query(
 # tests/test_pipeline.py).
 _sql_query(
     "sim_ivf_topk",
-    """
+    f"""
     WITH e AS (SELECT vec_id, label, transform(embedding, x -> cast(x AS double)) AS v FROM embeddings),
     cpos AS (
         SELECT label, pos, avg(val) AS m
@@ -1102,14 +1096,13 @@ _sql_query(
                transform(array_sort(collect_list(struct(pos, m))), s -> s.m) AS cv
         FROM cpos GROUP BY label
     ),
-    cnorm AS (SELECT c_id, cv, sqrt(aggregate(cv, cast(0 AS double), (a, x) -> a + x * x)) AS cnrm FROM cent),
-    n AS (SELECT vec_id, v, sqrt(aggregate(v, cast(0 AS double), (a, x) -> a + x * x)) AS nrm FROM e),
+    cnorm AS (SELECT c_id, cv, sqrt({vec.norm2('cv', 'double')}) AS cnrm FROM cent),
+    n AS (SELECT vec_id, v, sqrt({vec.norm2('v', 'double')}) AS nrm FROM e),
     assign AS (
         SELECT vec_id, max_by(c_id, cos) AS bucket
         FROM (
             SELECT n.vec_id, c.c_id,
-                   aggregate(zip_with(n.v, c.cv, (x, y) -> x * y), cast(0 AS double),
-                             (acc, x) -> acc + x) / (n.nrm * c.cnrm) AS cos
+                   {vec.dot('n.v', 'c.cv', 'double')} / (n.nrm * c.cnrm) AS cos
             FROM n CROSS JOIN cnorm c
         )
         GROUP BY vec_id
@@ -1118,8 +1111,7 @@ _sql_query(
     q AS (SELECT * FROM corpus WHERE vec_id < 5),
     scored AS (
         SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-               aggregate(zip_with(q.v, c.v, (x, y) -> x * y), cast(0 AS double),
-                         (acc, x) -> acc + x) / (q.nrm * c.nrm) AS cos
+               {vec.dot('q.v', 'c.v', 'double')} / (q.nrm * c.nrm) AS cos
         FROM q JOIN corpus c ON q.bucket = c.bucket AND q.vec_id <> c.vec_id
     ),
     ranked AS (
@@ -1181,7 +1173,7 @@ _sql_query(
 # per-vector hot path; only candidate verification uses zip_with.
 _sql_query(
     "sim_lsh_hyperplane",
-    """
+    f"""
     WITH e AS (SELECT vec_id, transform(embedding, v -> cast(v AS double)) AS v FROM embeddings),
     rows_ AS (SELECT vec_id, posexplode(v) AS (d, x) FROM e),
     proj AS (
@@ -1218,11 +1210,10 @@ _sql_query(
         SELECT DISTINCT a.vec_id AS id_a, b.vec_id AS id_b
         FROM bands a JOIN bands b ON a.b = b.b AND a.bv = b.bv AND a.vec_id < b.vec_id
     ),
-    n AS (SELECT vec_id, v, sqrt(aggregate(v, cast(0 AS double), (a, x) -> a + x * x)) AS nrm FROM e),
+    n AS (SELECT vec_id, v, sqrt({vec.norm2('v', 'double')}) AS nrm FROM e),
     ver AS (
         SELECT c.id_a, c.id_b,
-               aggregate(zip_with(na.v, nb.v, (x, y) -> x * y), cast(0 AS double),
-                         (acc, x) -> acc + x) / (na.nrm * nb.nrm) AS cos
+               {vec.dot('na.v', 'nb.v', 'double')} / (na.nrm * nb.nrm) AS cos
         FROM cand c JOIN n na ON c.id_a = na.vec_id JOIN n nb ON c.id_b = nb.vec_id
     )
     SELECT id_a, id_b, round(cos, 4) AS cos_sim
@@ -1644,7 +1635,7 @@ def text_substring_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
 def sim_int8_quantized(spark: SparkSession, sf_dir: str) -> DataFrame:
     catalog.register_views(spark, sf_dir)
     return spark.sql(
-        """
+        f"""
         WITH e AS (
             SELECT vec_id, transform(embedding, x -> cast(x AS double)) AS v
             FROM embeddings
@@ -1662,15 +1653,14 @@ def sim_int8_quantized(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         nq AS (
             SELECT vec_id, v, qv, s,
-                   sqrt(aggregate(v, cast(0 AS double), (a, x) -> a + x * x)) AS nrm,
+                   sqrt({vec.norm2('v', 'double')}) AS nrm,
                    sqrt(aggregate(qv, cast(0 AS double), (a, x) -> a + cast(x AS double) * x)) AS qnrm
             FROM quant
         ),
         q AS (SELECT * FROM nq WHERE vec_id < 5),
         scored AS (
             SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-                   aggregate(zip_with(q.v, c.v, (x, y) -> x * y), cast(0 AS double),
-                             (acc, x) -> acc + x) / (q.nrm * c.nrm) AS cos_f,
+                   {vec.dot('q.v', 'c.v', 'double')} / (q.nrm * c.nrm) AS cos_f,
                    aggregate(zip_with(q.qv, c.qv, (x, y) -> cast(x AS double) * y),
                              cast(0 AS double), (acc, x) -> acc + x)
                        / (q.qnrm * c.qnrm) AS cos_q,
@@ -2149,7 +2139,7 @@ def mm_image_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
 def sim_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     catalog.register_views(spark, sf_dir)
     return spark.sql(
-        """
+        f"""
         WITH e AS (
             SELECT vec_id, transform(embedding, x -> cast(x AS double)) AS v
             FROM embeddings
@@ -2166,8 +2156,7 @@ def sim_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
                    row_number() OVER (PARTITION BY vec_id, s ORDER BY d2, cid) AS rk
             FROM (
                 SELECT sub.vec_id, sub.s, cent.cid,
-                       aggregate(zip_with(sub.u, cent.cu, (a, b) -> (a - b) * (a - b)),
-                                 cast(0 AS double), (acc, x) -> acc + x) AS d2
+                       {vec.sq_dist('sub.u', 'cent.cu', 'double')} AS d2
                 FROM sub JOIN cent ON sub.s = cent.s
             )
         ),
@@ -2175,8 +2164,7 @@ def sim_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         qsub AS (SELECT vec_id, s, u FROM sub WHERE vec_id < 5),
         adc AS (
             SELECT q.vec_id AS query_id, codes.vec_id AS cand,
-                   sum(aggregate(zip_with(q.u, cent.cu, (a, b) -> (a - b) * (a - b)),
-                                 cast(0 AS double), (acc, x) -> acc + x)) AS adc_d2
+                   sum({vec.sq_dist('q.u', 'cent.cu', 'double')}) AS adc_d2
             FROM qsub q
             JOIN codes ON q.s = codes.s AND codes.vec_id <> q.vec_id
             JOIN cent ON cent.s = codes.s AND cent.cid = codes.cid
@@ -2184,8 +2172,7 @@ def sim_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         exact AS (
             SELECT q.vec_id AS query_id, c.vec_id AS cand,
-                   aggregate(zip_with(q.v, c.v, (a, b) -> (a - b) * (a - b)),
-                             cast(0 AS double), (acc, x) -> acc + x) AS d2
+                   {vec.sq_dist('q.v', 'c.v', 'double')} AS d2
             FROM (SELECT * FROM e WHERE vec_id < 5) q
             JOIN e c ON c.vec_id <> q.vec_id
         ),
@@ -2454,7 +2441,7 @@ _sql_query(
 #     milliunit-quantized vectors), so the oracle matches bit-for-bit.
 _sql_query(
     "sim_decontaminate",
-    """
+    f"""
     WITH q AS (
         SELECT vec_id,
                transform(embedding, x -> cast(round(cast(x AS double) * 1000) AS bigint)) AS v
@@ -2462,15 +2449,14 @@ _sql_query(
     ),
     n AS (
         SELECT vec_id, v,
-               aggregate(v, cast(0 AS bigint), (acc, x) -> acc + x * x) AS nrm2
+               {vec.norm2('v', 'bigint')} AS nrm2
         FROM q
     ),
     ev AS (SELECT * FROM n WHERE vec_id < 20),
     corpus AS (SELECT * FROM n WHERE vec_id >= 100),
     hits AS (
         SELECT c.vec_id, ev.vec_id AS eval_id,
-               aggregate(zip_with(c.v, ev.v, (x, y) -> x * y),
-                         cast(0 AS bigint), (acc, x) -> acc + x) AS dot,
+               {vec.dot('c.v', 'ev.v', 'bigint')} AS dot,
                c.nrm2 AS nc2, ev.nrm2 AS ne2
         FROM corpus c CROSS JOIN ev
     )
@@ -3009,16 +2995,12 @@ def mm_video_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
 #     vectors (dot-MMR: score = 2*rel - max sim-to-selected), so both
 #     engines agree bit-for-bit — no float tie can flip a pick.
 
-_MMR_SPARK_DOT = """aggregate(zip_with({a}, {b}, (x, y) -> x * y),
-                             cast(0 AS bigint), (acc, x) -> acc + x)"""
-
-
 def _mmr_cand_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Un-checkpointed candidate stage (per-probe top-8 over the corpus
     with the probe set broadcast) — kept as a separate builder so
     tests/test_plans.py can still pin the generation plan's broadcast
     shape after the r12 staging rework."""
-    dot_pc = _MMR_SPARK_DOT.format(a="p.v", b="c.v")
+    dot_pc = vec.dot("p.v", "c.v", "bigint")
     return catalog.sql(
         spark,
         sf_dir,
@@ -3122,12 +3104,11 @@ def sim_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # both; the corpus is scanned exactly twice (probe side + candidate
     # side of the top-8 join) and the greedy rounds join only the tiny
     # staged views.  Arithmetic unchanged; oracle keeps the all-SQL text.
-    dot_ab = _MMR_SPARK_DOT.format(a="a.cv", b="b.cv")
     cand = _mmr_cand_plan(spark, sf_dir).localCheckpoint(eager=True)
     pair = _sql_with_views(
         spark,
         f"""
-        SELECT a.pid, a.cid AS ca, b.cid AS cb, {dot_ab} AS sim
+        SELECT a.pid, a.cid AS ca, b.cid AS cb, {vec.dot('a.cv', 'b.cv', 'bigint')} AS sim
         FROM __cand a JOIN __cand b ON a.pid = b.pid AND a.cid <> b.cid
         """,
         __cand=cand,
@@ -3693,7 +3674,7 @@ _sql_query(
 # exact-verify stage of any ANN bucket scheme.
 _sql_query(
     "sim_range_search",
-    """
+    f"""
     WITH q AS (
         SELECT vec_id,
                transform(embedding, x -> cast(round(cast(x AS double) * 1000) AS bigint)) AS v
@@ -3701,14 +3682,13 @@ _sql_query(
     ),
     n AS (
         SELECT vec_id, v,
-               aggregate(v, cast(0 AS bigint), (acc, x) -> acc + x * x) AS nrm2
+               {vec.norm2('v', 'bigint')} AS nrm2
         FROM q
     ),
     probes AS (SELECT vec_id AS probe_id, v AS pv, nrm2 AS pn2 FROM n WHERE vec_id < 8),
     matches AS (
         SELECT /*+ BROADCAST(p) */ p.probe_id, c.vec_id AS match_id,
-               aggregate(zip_with(p.pv, c.v, (x, y) -> x * y),
-                         cast(0 AS bigint), (acc, x) -> acc + x) AS dot,
+               {vec.dot('p.pv', 'c.v', 'bigint')} AS dot,
                p.pn2, c.nrm2
         FROM n c CROSS JOIN probes p
         WHERE p.probe_id <> c.vec_id
@@ -4775,7 +4755,7 @@ def text_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # scored corpus); the fusion join then touches <= 40 rows per query.
 
 
-_RRF_MAIN_SQL = """
+_RRF_MAIN_SQL = f"""
     WITH tot AS (SELECT count(*) AS n, sum(dl) AS s FROM __rrf_doclen),
     df AS (SELECT term, count(*) AS df FROM __rrf_posting GROUP BY term),
     qterms AS (
@@ -4805,7 +4785,7 @@ _RRF_MAIN_SQL = """
     ),
     en AS (
         SELECT CAST(vec_id AS BIGINT) AS vec_id, v,
-               greatest(aggregate(v, 0L, (a, x) -> a + x * x), 1L) AS nrm2
+               greatest({vec.norm2('v', 'bigint')}, 1L) AS nrm2
         FROM (SELECT vec_id,
                      transform(embedding,
                                x -> CAST(round(CAST(x AS DOUBLE) * 1000) AS BIGINT)) AS v
@@ -4814,7 +4794,7 @@ _RRF_MAIN_SQL = """
     probes AS (SELECT vec_id AS query_id, v AS qv FROM en WHERE vec_id BETWEEN 1 AND 3),
     dots AS (
         SELECT p.query_id, c.vec_id AS doc_id,
-               aggregate(zip_with(p.qv, c.v, (x, y) -> x * y), 0L, (a, x) -> a + x) AS dot,
+               {vec.dot('p.qv', 'c.v', 'bigint')} AS dot,
                c.nrm2
         FROM probes p JOIN en c ON c.vec_id <> p.query_id
     ),
@@ -5587,7 +5567,7 @@ def mm_video_scene_cut(spark: SparkSession, sf_dir: str) -> DataFrame:
 # is a property of the LSH family; the ORACLE checks the mechanism
 # bit-for-bit.
 
-_KNN_CORPUS_SQL = """
+_KNN_CORPUS_SQL = f"""
     WITH e AS (
         SELECT vec_id,
                transform(embedding, x -> cast(round(cast(x AS double) * 1000) AS bigint)) AS v
@@ -5607,11 +5587,9 @@ _KNN_CORPUS_SQL = """
     ),
     c AS (
         SELECT vec_id, v,
-               aggregate(v, cast(0 AS bigint), (acc, x) -> acc + x * x) AS nrm2,
+               {vec.norm2('v', 'bigint')} AS nrm2,
                aggregate(sequence(0, b - 1), cast(0 AS bigint), (acc, j) ->
-                   acc + IF(aggregate(zip_with(v, element_at(w, cast(j AS int) + 1),
-                                (x, wt) -> x * wt),
-                            cast(0 AS bigint), (a2, y) -> a2 + y) >= 0,
+                   acc + IF({vec.dot('v', 'element_at(w, cast(j AS int) + 1)', 'bigint')} >= 0,
                         shiftleft(cast(1 AS bigint), j), cast(0 AS bigint))) AS bucket
         FROM e CROSS JOIN params
     )
@@ -5642,13 +5620,12 @@ _KNN_CORPUS_ORACLE = """
     )
     """
 
-_KNN_JOIN_SQL = """
+_KNN_JOIN_SQL = f"""
     WITH pairs AS (
         SELECT a.vec_id AS src, b.vec_id AS nbr,
-               aggregate(zip_with(a.v, b.v, (x, y) -> x * y),
-                         cast(0 AS bigint), (acc, x) -> acc + x) AS dot,
+               {vec.dot('a.v', 'b.v', 'bigint')} AS dot,
                b.nrm2
-        FROM {E} a JOIN {E} b
+        FROM {{E}} a JOIN {{E}} b
           ON a.bucket = b.bucket AND a.vec_id <> b.vec_id
     ),
     keyed AS (
@@ -5909,7 +5886,7 @@ def graph_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
 # table and a WindowGroupLimit top-3.  No all-pairs anywhere; every
 # join is an equi-join on vector ids or bucket keys.
 
-_NND_CORPUS_SQL = """
+_NND_CORPUS_SQL = f"""
     WITH e AS (
         SELECT vec_id,
                transform(embedding, x -> cast(round(cast(x AS double) * 1000) AS bigint)) AS v
@@ -5920,7 +5897,7 @@ _NND_CORPUS_SQL = """
     ),
     c AS (
         SELECT vec_id, v,
-               aggregate(v, cast(0 AS bigint), (acc, x) -> acc + x * x) AS nrm2,
+               {vec.norm2('v', 'bigint')} AS nrm2,
                aggregate(sequence(0, b - 1), cast(0 AS bigint), (acc, j) ->
                    acc + IF(aggregate(zip_with(v, sequence(cast(0 AS bigint), cast(63 AS bigint)),
                                 (x, d) -> x * (((cast(j AS bigint) * 2654435761 + d * 40503 + 12345) % 1009) * 2 - 1009)),
@@ -5936,10 +5913,10 @@ _NND_CORPUS_SQL = """
     SELECT vec_id, v, nrm2, bucket_a, bucket_b FROM c WHERE nrm2 > 0
     """
 
-_NND_EDGES_SQL = """
+_NND_EDGES_SQL = f"""
     WITH bands AS (
         SELECT vec_id, b, if(b = 0, bucket_a, bucket_b) AS bv
-        FROM {E} LATERAL VIEW explode(sequence(0, 1)) t AS b
+        FROM {{E}} LATERAL VIEW explode(sequence(0, 1)) t AS b
     ),
     cpairs AS (
         SELECT DISTINCT a.vec_id AS src, b.vec_id AS nbr
@@ -5948,12 +5925,11 @@ _NND_EDGES_SQL = """
     ),
     scored AS (
         SELECT c.src, c.nbr,
-               aggregate(zip_with(va.v, vb.v, (x, y) -> x * y),
-                         cast(0 AS bigint), (acc, x) -> acc + x) AS dot,
+               {vec.dot('va.v', 'vb.v', 'bigint')} AS dot,
                vb.nrm2
         FROM cpairs c
-        JOIN {E} va ON c.src = va.vec_id
-        JOIN {E} vb ON c.nbr = vb.vec_id
+        JOIN {{E}} va ON c.src = va.vec_id
+        JOIN {{E}} vb ON c.nbr = vb.vec_id
     ),
     ranked AS (
         SELECT src, nbr,
@@ -5981,15 +5957,14 @@ _NND_CAND_SQL = """
     )
     """
 
-_NND_ROUND_SQL = """
+_NND_ROUND_SQL = f"""
     WITH rescored AS (
         SELECT c.src, c.nbr,
-               aggregate(zip_with(va.v, vb.v, (x, y) -> x * y),
-                         cast(0 AS bigint), (acc, x) -> acc + x) AS dot,
+               {vec.dot('va.v', 'vb.v', 'bigint')} AS dot,
                vb.nrm2
-        FROM {C} c
-        JOIN {E} va ON c.src = va.vec_id
-        JOIN {E} vb ON c.nbr = vb.vec_id
+        FROM {{C}} c
+        JOIN {{E}} va ON c.src = va.vec_id
+        JOIN {{E}} vb ON c.nbr = vb.vec_id
     ),
     keyed AS (
         SELECT src, nbr,
@@ -6130,13 +6105,12 @@ def sim_nn_descent_round(spark: SparkSession, sf_dir: str) -> DataFrame:
 # self-loops so the min-label walk is reflexive).  Every stage is
 # materialized once; every join is an equi-join.
 
-_SNN_EDGES_SQL = """
+_SNN_EDGES_SQL = f"""
     WITH pairs AS (
         SELECT a.vec_id AS src, b.vec_id AS nbr,
-               aggregate(zip_with(a.v, b.v, (x, y) -> x * y),
-                         cast(0 AS bigint), (acc, x) -> acc + x) AS dot,
+               {vec.dot('a.v', 'b.v', 'bigint')} AS dot,
                b.nrm2
-        FROM {E} a JOIN {E} b
+        FROM {{E}} a JOIN {{E}} b
           ON a.bucket = b.bucket AND a.vec_id <> b.vec_id
     ),
     ranked AS (
@@ -6740,22 +6714,21 @@ def sim_pca_project(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Reranking a 20-row shortlist is driver-trivial yet stays distributed.
 # The oracle replicates both stages exactly; tests additionally assert
 # the funnel's recall against single-stage full-dim brute force.
-_TWOSTAGE_CORPUS_SQL = """
+_TWOSTAGE_CORPUS_SQL = f"""
     WITH e AS (SELECT vec_id, transform(embedding, x -> cast(x AS double)) AS v FROM embeddings)
     SELECT vec_id, v,
            slice(v, 1, 16) AS pv,
-           sqrt(aggregate(v, cast(0 AS double), (a, x) -> a + x * x)) AS nrm,
-           sqrt(aggregate(slice(v, 1, 16), cast(0 AS double), (a, x) -> a + x * x)) AS pnrm
+           sqrt({vec.norm2('v', 'double')}) AS nrm,
+           sqrt({vec.norm2('slice(v, 1, 16)', 'double')}) AS pnrm
     FROM e
 """
 
-_TWOSTAGE_MAIN_SQL = """
-    WITH q AS (SELECT * FROM {N} WHERE vec_id < 8),
+_TWOSTAGE_MAIN_SQL = f"""
+    WITH q AS (SELECT * FROM {{N}} WHERE vec_id < 8),
     coarse AS (
         SELECT q.vec_id AS query_id, c.vec_id AS cand_id,
-               aggregate(zip_with(q.pv, c.pv, (x, y) -> x * y), cast(0 AS double),
-                         (acc, x) -> acc + x) / (q.pnrm * c.pnrm) AS pcos
-        FROM q JOIN {N} c ON q.vec_id <> c.vec_id
+               {vec.dot('q.pv', 'c.pv', 'double')} / (q.pnrm * c.pnrm) AS pcos
+        FROM q JOIN {{N}} c ON q.vec_id <> c.vec_id
     ),
     short AS (
         SELECT query_id, cand_id, crk FROM (
@@ -6766,11 +6739,10 @@ _TWOSTAGE_MAIN_SQL = """
     ),
     rerank AS (
         SELECT s.query_id, s.cand_id, s.crk,
-               aggregate(zip_with(qv.v, cv.v, (x, y) -> x * y), cast(0 AS double),
-                         (acc, x) -> acc + x) / (qv.nrm * cv.nrm) AS cos
+               {vec.dot('qv.v', 'cv.v', 'double')} / (qv.nrm * cv.nrm) AS cos
         FROM short s
-        JOIN {N} qv ON qv.vec_id = s.query_id
-        JOIN {N} cv ON cv.vec_id = s.cand_id
+        JOIN {{N}} qv ON qv.vec_id = s.query_id
+        JOIN {{N}} cv ON cv.vec_id = s.cand_id
     )
     SELECT query_id, neighbor_id, rk, coarse_rank, cos_sim FROM (
         SELECT query_id, cand_id AS neighbor_id,
@@ -8406,7 +8378,7 @@ def dedup_cluster_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
 # against sim_topk_bruteforce ground truth.
 _sql_query(
     "sim_ivf_multiprobe",
-    """
+    f"""
     WITH e AS (SELECT vec_id, label, transform(embedding, x -> cast(x AS double)) AS v FROM embeddings),
     cpos AS (
         SELECT label, pos, avg(val) AS m
@@ -8418,12 +8390,11 @@ _sql_query(
                transform(array_sort(collect_list(struct(pos, m))), s -> s.m) AS cv
         FROM cpos GROUP BY label
     ),
-    cnorm AS (SELECT c_id, cv, sqrt(aggregate(cv, cast(0 AS double), (a, x) -> a + x * x)) AS cnrm FROM cent),
-    n AS (SELECT vec_id, v, sqrt(aggregate(v, cast(0 AS double), (a, x) -> a + x * x)) AS nrm FROM e),
+    cnorm AS (SELECT c_id, cv, sqrt({vec.norm2('cv', 'double')}) AS cnrm FROM cent),
+    n AS (SELECT vec_id, v, sqrt({vec.norm2('v', 'double')}) AS nrm FROM e),
     centdist AS (
         SELECT n.vec_id, c.c_id,
-               aggregate(zip_with(n.v, c.cv, (x, y) -> x * y), cast(0 AS double),
-                         (acc, x) -> acc + x) / (n.nrm * c.cnrm) AS cos
+               {vec.dot('n.v', 'c.cv', 'double')} / (n.nrm * c.cnrm) AS cos
         FROM n CROSS JOIN cnorm c
     ),
     assign AS (
@@ -8441,8 +8412,7 @@ _sql_query(
           FROM probe_cells p JOIN n ON n.vec_id = p.vec_id),
     scored AS (
         SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-               aggregate(zip_with(q.v, c.v, (x, y) -> x * y), cast(0 AS double),
-                         (acc, x) -> acc + x) / (q.nrm * c.nrm) AS cos
+               {vec.dot('q.v', 'c.v', 'double')} / (q.nrm * c.nrm) AS cos
         FROM q JOIN corpus c ON q.bucket = c.bucket AND q.vec_id <> c.vec_id
     ),
     ranked AS (
@@ -8712,7 +8682,7 @@ _sql_query(
 # agreement rollup touches O(probes x k) rows.
 _sql_query(
     "sim_matryoshka_eval",
-    """
+    f"""
     WITH e AS (
         SELECT vec_id,
                transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * 1000 + 0.5) AS BIGINT)) AS v
@@ -8721,9 +8691,8 @@ _sql_query(
     q AS (SELECT vec_id AS qid, v AS qv FROM e WHERE vec_id < 8),
     scored AS (
         SELECT q.qid, e.vec_id AS nid,
-               aggregate(zip_with(q.qv, e.v, (x, y) -> x * y), 0L, (a, x) -> a + x) AS dot_full,
-               aggregate(zip_with(slice(q.qv, 1, 16), slice(e.v, 1, 16), (x, y) -> x * y),
-                         0L, (a, x) -> a + x) AS dot_head
+               {vec.dot('q.qv', 'e.v', 'bigint')} AS dot_full,
+               {vec.dot('slice(q.qv, 1, 16)', 'slice(e.v, 1, 16)', 'bigint')} AS dot_head
         FROM e CROSS JOIN q
         WHERE q.qid <> e.vec_id
     ),
@@ -9602,7 +9571,7 @@ _sql_query(
 # accuracy rollups touch O(probes x k) rows.
 _sql_query(
     "sim_knn_classify",
-    """
+    f"""
     WITH e AS (
         SELECT vec_id, label,
                transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * 1000 + 0.5) AS BIGINT)) AS v
@@ -9615,8 +9584,8 @@ _sql_query(
                     ELSE -((dot * dot * 1000) DIV nrm2) END AS sim_key
         FROM (
             SELECT q.qid, q.qlab, e.label AS nlab, e.vec_id AS nid,
-                   aggregate(zip_with(q.qv, e.v, (x, y) -> x * y), 0L, (a, x) -> a + x) AS dot,
-                   aggregate(e.v, 0L, (a, x) -> a + x * x) AS nrm2
+                   {vec.dot('q.qv', 'e.v', 'bigint')} AS dot,
+                   {vec.norm2('e.v', 'bigint')} AS nrm2
             FROM e CROSS JOIN q
             WHERE q.qid <> e.vec_id
         )
@@ -10206,13 +10175,12 @@ _sql_query(
 # rollup — no joins at all.
 _sql_query(
     "sim_embedding_norm_audit",
-    """
+    f"""
     WITH e AS (SELECT label, transform(embedding, x -> cast(x AS DOUBLE)) AS v
                FROM embeddings),
     m AS (
         SELECT label, size(v) AS dims,
-               sqrt(aggregate(transform(v, x -> x * x), cast(0 AS DOUBLE),
-                              (a, b) -> a + b)) AS nrm,
+               sqrt({vec.norm2('v', 'double')}) AS nrm,
                CASE WHEN exists(v, x -> isnan(x) OR abs(x) = cast('Infinity' AS DOUBLE))
                     THEN 1 ELSE 0 END AS bad
         FROM e

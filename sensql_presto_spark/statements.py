@@ -55,6 +55,7 @@ _EXPLAIN_DISTRIBUTED_RE = re.compile(
 _EXPLAIN_LOGICAL_RE = re.compile(
     r"^\s*EXPLAIN\s*\(\s*TYPE\s+LOGICAL\s*\)\s+(.+)$", re.IGNORECASE | re.DOTALL
 )
+_EXPLAIN_ANALYZE_RE = re.compile(r"^\s*EXPLAIN\s+ANALYZE\s+(.+)$", re.IGNORECASE | re.DOTALL)
 _DESCRIBE_INPUT_RE = re.compile(r"^\s*DESCRIBE\s+INPUT\s+(\w+)\s*$", re.IGNORECASE)
 _DESCRIBE_OUTPUT_RE = re.compile(r"^\s*DESCRIBE\s+OUTPUT\s+(\w+)\s*$", re.IGNORECASE)
 _SET_SESSION_RE = re.compile(r"^\s*SET\s+SESSION\s+(\w+)\s*=\s*(.+)$", re.IGNORECASE | re.DOTALL)
@@ -730,6 +731,12 @@ class StatementSession:
             # not leak through an EXPLAIN side channel
             self._check_table_access(m.group(1))
             return explain_io(self.spark, catalog.sql(self.spark, self.sf_dir, m.group(1)))
+        m = _EXPLAIN_ANALYZE_RE.match(text)
+        if m:
+            from sensql_presto_spark.explain import explain_analyze
+
+            self._check_table_access(m.group(1))
+            return explain_analyze(self.spark, catalog.sql(self.spark, self.sf_dir, m.group(1)))
         m = _EXPLAIN_DISTRIBUTED_RE.match(text)
         if m:
             from sensql_presto_spark.explain import explain_distributed

@@ -68,6 +68,18 @@ def test_versions_accumulate_and_latest_wins(spark):
     assert sorted(r.k for r in t.read().collect()) == [3, 4]
 
 
+def test_failed_mutation_leaves_the_table_writable(spark, tmp_path):
+    """A mutation whose write fails at runtime leaves an uncommitted
+    snapshot directory; the next commit must number past it."""
+    df = spark.createDataFrame([(1, "a"), (2, "b")], ["k", "s"])
+    t = WritableTable.create(spark, str(tmp_path / "failed_t"), df)
+    with pytest.raises(Exception, match="boom"):
+        t.update({"s": F.raise_error(F.lit("boom"))}, F.col("k") == 1)
+    assert t.version == 0
+    t.insert_into(spark.createDataFrame([(3, "c")], ["k", "s"]))
+    assert sorted((r.k, r.s) for r in t.read().collect()) == [(1, "a"), (2, "b"), (3, "c")]
+
+
 def test_alter_table_schema_evolution_and_time_travel(spark, tmp_path):
     """ADD/RENAME/DROP COLUMN each commit a snapshot; earlier versions
     keep their pre-evolution schema; error contracts on bad columns."""

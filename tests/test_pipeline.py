@@ -57,6 +57,55 @@ def test_ivf_is_bounded_by_bruteforce(spark):
         last[r.query_id] = r.cos_sim
 
 
+def test_vec_kernels_on_literal_arrays(spark):
+    """queries/vec.py's fragments equal hand-computed values; the bigint
+    sums stay exact past 2**53, where a double sum would round."""
+    from sensql_presto_spark.queries import vec
+
+    a, b = "array(3L, -4L, 5L)", "array(-2L, 7L, 1L)"
+    fa, fb = "array(0.5D, -1.25D, 2.0D)", "array(-3.0D, 0.5D, 4.0D)"
+    big = "array(100000000L, -1L)"
+    row = spark.sql(
+        f"""SELECT {vec.dot(a, b, 'bigint')} AS dot, {vec.sq_dist(a, b, 'bigint')} AS sqd,
+                   {vec.norm2(a, 'bigint')} AS nrm2, {vec.norm2(big, 'bigint')} AS big,
+                   {vec.dot(fa, fb, 'double')} AS fdot, {vec.sq_dist(fa, fb, 'double')} AS fsqd,
+                   {vec.norm2(fa, 'double')} AS fnrm2"""
+    ).first()
+    assert (row.dot, row.sqd, row.nrm2, row.big) == (-29, 162, 50, 10**16 + 1)
+    assert (row.fdot, row.fsqd, row.fnrm2) == (5.875, 19.3125, 5.8125)
+    assert all(isinstance(v, int) for v in (row.dot, row.sqd, row.nrm2, row.big))
+
+
+def test_no_inline_vector_kernels_outside_vec():
+    """Every plain dot / squared-distance / squared-norm spelling in the
+    query modules is vec.py's; the four sites vec.py names keep theirs
+    because their element body is not a plain product or difference."""
+    import pathlib
+    import re
+
+    from sensql_presto_spark.queries import vec
+
+    plain = re.compile(
+        r"\((\w+), (\w+)\)\s*->\s*(?:\1 \* \2|\(\1 - \2\) \* \(\1 - \2\)|\1 \+ \2 \* \2)\)"
+        r"|\btransform\([^()]*, (\w+) -> \3 \* \3\)"
+    )
+    named_exceptions = re.compile(
+        r"-> cast\(x AS double\) \* y\)|-> a \+ cast\(x AS double\) \* x\)|\(x, d\) -> x \* \("
+    )
+    # the pattern recognizes each kernel as vec.py spells it
+    for fragment in (vec.dot("a", "b", "bigint"), vec.sq_dist("a", "b", "double"),
+                     vec.norm2("v", "bigint")):
+        assert len(plain.findall(fragment)) == 1, fragment
+    root = pathlib.Path(registry.__file__).parent
+    found = {}
+    for path in sorted(root.glob("*.py")):
+        text = path.read_text()
+        found[path.name] = (len(plain.findall(text)), len(named_exceptions.findall(text)))
+    del found["vec.py"]
+    assert found.pop("pipeline.py") == (0, 4)
+    assert {name: n for name, n in found.items() if n != (0, 0)} == {}
+
+
 # -- WAV/PCM codec (multimodal.py, real decoder since round 3) ---------------
 
 

@@ -251,6 +251,16 @@ def test_client_conf_governs_catalog_view_scans(sql_server):
     assert client.table("lineitem").rdd.getNumPartitions() > splits_before
 
 
+def test_explain_analyze_over_http(sql_server):
+    """EXPLAIN ANALYZE goes through the statement dispatcher like every other
+    EXPLAIN type: it runs the query and returns per-operator metrics."""
+    err, cols, rows = run_query(sql_server, "EXPLAIN ANALYZE SELECT count(*) FROM nation")
+    assert err is None
+    assert [c["name"] for c in cols] == ["operator_id", "operator", "metric", "value"]
+    assert any("Scan" in r[1] for r in rows)
+    assert any(r[2] == "number of output rows" and r[3] == 25 for r in rows)
+
+
 def test_query_info_endpoint(sql_server):
     """GET /v1/query/{id} — the infoUri target (QueryResource.getQueryInfo)."""
     base = f"http://127.0.0.1:{sql_server.port}"
@@ -311,6 +321,8 @@ def test_enforced_access_control_over_http(spark, oracle_dir):
     s = srv.SqlServer(spark, oracle_dir, enforce_access=True).start()
     try:
         err, _ = _run_query_as(s, "SELECT count(*) FROM nation", "eve")
+        assert err is not None and "Access Denied" in err["message"]
+        err, _ = _run_query_as(s, "EXPLAIN ANALYZE SELECT count(*) FROM nation", "eve")
         assert err is not None and "Access Denied" in err["message"]
         err, _ = _run_query_as(s, "GRANT SELECT ON nation TO USER eve", "admin")
         assert err is None

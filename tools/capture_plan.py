@@ -1,4 +1,8 @@
-"""Capture .explain("formatted") for registry entries into plans/<dir>/.
+"""Write registry entries' canonical physical plans into plans/<dir>/.
+
+Plans go through ``bench.canonical_plan`` (the text the bench fingerprints
+hash), so two captures of the same plan are byte-identical and a
+before/after diff shows exactly the plan change.
 
 Usage: python tools/capture_plan.py <outdir> <suffix> <query> [<query> ...]
 e.g.   python tools/capture_plan.py plans/r14 before agg_exact_quantiles
@@ -6,13 +10,12 @@ e.g.   python tools/capture_plan.py plans/r14 before agg_exact_quantiles
 
 from __future__ import annotations
 
-import io
 import os
 import sys
-from contextlib import redirect_stdout
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from bench import canonical_plan
 from sensql_presto_spark.queries import all_specs
 from sensql_presto_spark.session import get_spark
 
@@ -24,14 +27,11 @@ def main():
     spark = get_spark(app_name="capture_plan")
     specs = all_specs()
     for name in names:
-        df = specs[name].build(spark, sf_dir)
-        buf = io.StringIO()
-        with redirect_stdout(buf):
-            df.explain("formatted")
+        plan = canonical_plan(spark, specs[name].build(spark, sf_dir))
         path = os.path.join(outdir, f"{name}_{suffix}.txt")
         with open(path, "w") as f:
-            f.write(buf.getvalue())
-        print(f"{path}: {len(buf.getvalue())} bytes", file=sys.stderr)
+            f.write(plan)
+        print(f"{path}: {len(plan)} bytes", file=sys.stderr)
     spark.stop()
 
 
