@@ -67,13 +67,27 @@ def normalize_events_ts(df: DataFrame, schema: StructType | None = None) -> Data
     return df
 
 
-# absolute path -> (st_mtime_ns, st_size, schema inferred from that version).
+def file_version(path: str) -> tuple[str, int, int] | None:
+    """A local file's version: (absolute path, ``st_mtime_ns``, ``st_size``).
+
+    The one data-version rule of the engine: the schema cache here and the
+    server's result cache both treat a file as unchanged exactly while this
+    tuple is. None when ``path`` is not a local file (a URI, or missing).
+    """
+    try:
+        st = os.stat(path)
+    except OSError:
+        return None
+    return os.path.abspath(path), st.st_mtime_ns, st.st_size
+
+
+# absolute path -> (file_version, schema inferred from that version).
 # Process-wide, so forked sessions and every engine build share it. One
 # entry per path: a rewritten file replaces its entry. No lock: an entry is
 # written whole after its stat, so a racing miss only infers twice.
 # Inference reads a footer in a one-task Spark job, which on small queries
 # cost more than the scan itself.
-_schemas: dict[str, tuple[int, int, StructType]] = {}
+_schemas: dict[str, tuple[tuple[str, int, int], StructType]] = {}
 
 
 def schema(spark: SparkSession, sf_dir: str, name: str) -> StructType:
@@ -85,16 +99,14 @@ def schema(spark: SparkSession, sf_dir: str, name: str) -> StructType:
     """
     _ensure_session_conf(spark)
     path = f"{sf_dir}/{name}.parquet"
-    try:
-        st = os.stat(path)
-    except OSError:
+    version = file_version(path)
+    if version is None:
         # Not a local file (a URI, or missing): Spark resolves and reports it.
         return spark.read.parquet(path).schema
-    key = os.path.abspath(path)
-    hit = _schemas.get(key)
-    if hit is None or hit[:2] != (st.st_mtime_ns, st.st_size):
-        hit = _schemas[key] = (st.st_mtime_ns, st.st_size, spark.read.parquet(path).schema)
-    return hit[2]
+    hit = _schemas.get(version[0])
+    if hit is None or hit[0] != version:
+        hit = _schemas[version[0]] = (version, spark.read.parquet(path).schema)
+    return hit[1]
 
 
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

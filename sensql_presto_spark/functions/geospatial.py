@@ -30,6 +30,7 @@ from __future__ import annotations
 
 import math
 import re
+import weakref
 
 import pandas as pd
 from pyspark.sql import SparkSession
@@ -1278,8 +1279,15 @@ def flatten_geometry_collections(wkt: pd.Series) -> pd.Series:
     return _series(_flatten_collections, wkt)
 
 
+# Sessions the surface is installed on. Weakly keyed on the session object,
+# like catalog._registered: a collected session can never alias a later one.
+_registered: "weakref.WeakSet[SparkSession]" = weakref.WeakSet()
+
+
 def register_geospatial(spark: SparkSession) -> None:
-    """Install the full ST_*/bing surface (idempotent)."""
+    """Install the full ST_*/bing surface, once per session."""
+    if spark in _registered:
+        return
     for ddl in _GEO_SQL_FUNCTIONS:
         spark.sql(ddl)
     spark.udf.register("st_area", st_area)
@@ -1320,3 +1328,4 @@ def register_geospatial(spark: SparkSession) -> None:
         """CREATE OR REPLACE TEMPORARY FUNCTION st_disjoint(a STRING, b STRING)
            RETURNS BOOLEAN RETURN NOT st_intersects(a, b)"""
     )
+    _registered.add(spark)

@@ -27,22 +27,62 @@ memory after the root fragment drains (``TaskOutputOperator`` →
 coordinator buffer), so this matches the protocol's memory model; queries
 whose full result would not fit a driver belong behind INSERT/CTAS,
 exactly as in the reference.
+
+Repeated reads are served from a result cache: a statement that Spark
+would answer with the same rows again gets the stored columns and JSON
+rows of an earlier run instead of a second Spark job (the reference's
+``FileFragmentResultCacheManager``, at statement grain). A lookup happens
+after ``StatementSession.execute`` has parsed, access-checked and analyzed
+the statement, so an ungranted user is denied before any cached row is
+seen. A hit needs all three parts of the key to match:
+
+- the optimized logical plan, matched as Spark's CacheManager matches
+  plans: bucketed by ``semanticHash()``, confirmed by ``sameResult()``;
+- the session's explicitly set SQL conf, since some settings change what
+  an unchanged plan returns;
+- the version of every input file, ``catalog.file_version`` (path,
+  ``st_mtime_ns``, ``st_size``), stat'ed before execution; a miss stores
+  its result only if the stat after execution matches.
+
+Only deterministic, non-streaming statements whose every plan node,
+subqueries included, is no command, with at least one file-source leaf and
+every leaf a ``HadoopFsRelation`` over local files, a ``LocalRelation`` or
+a ``OneRowRelation``, are cached. Everything else runs as usual: DDL, DML,
+SHOW, EXPLAIN, CALL, checkpointed (``LogicalRDD``) or cached
+(``InMemoryRelation``) inputs, V2 sources and non-local files. ``now()``
+and ``current_*`` fold into the plan as literals, so they never match.
+Cancelled and failed statements store nothing. The cache holds at most
+``RESULT_CACHE_ENTRIES`` results (least recently used first out) of at
+most ``RESULT_CACHE_ROWS`` rows each. ``queryStats.resultCacheHit`` says
+whether a statement was served from it.
+
+The server remembers at most ``MAX_QUERY_HISTORY`` finished queries
+(Presto's ``query.max-history``), forgetting the oldest finished first; a
+forgotten query id answers like an unknown one.
 """
 
 from __future__ import annotations
 
 import json
 import threading
+import time
 import uuid
+from collections import OrderedDict, deque
 from dataclasses import dataclass, field
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
+from urllib.parse import urlsplit
+from urllib.request import url2pathname
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from sensql_presto_spark import catalog
 from sensql_presto_spark.statements import StatementSession
 
 PAGE_ROWS = 1000
+MAX_QUERY_HISTORY = 100
+RESULT_CACHE_ENTRIES = 256
+RESULT_CACHE_ROWS = 10 * PAGE_ROWS
 
 
 def _presto_type(dt: T.DataType) -> str:
@@ -122,16 +162,127 @@ class QueryExecution:
     page_start: int = 0  # the last served page is rows[page_start:cursor]
     cursor: int = 0
     token: int = 0  # the next page's token
+    cached: bool = False  # rows came from the server's result cache
+    created: float = field(default_factory=time.monotonic)
+    started: float | None = None
+    ended: float | None = None
     lock: threading.Lock = field(default_factory=threading.Lock)
 
     def snapshot_stats(self) -> dict:
+        end = time.monotonic() if self.ended is None else self.ended
+        start = end if self.started is None else self.started
         return {
             "state": self.state,
             "queued": self.state == "QUEUED",
             "scheduled": self.state in ("RUNNING", "FINISHED"),
             "completedSplits": self.cursor,
             "totalSplits": len(self.rows) if self.rows is not None else 0,
+            "queuedTimeMillis": round((start - self.created) * 1000),
+            "elapsedTimeMillis": round((end - self.created) * 1000),
+            "resultCacheHit": self.cached,
         }
+
+
+def _local_file_version(uri: str) -> tuple[str, int, int] | None:
+    parts = urlsplit(uri)
+    if parts.scheme != "file" or parts.netloc:
+        return None
+    return catalog.file_version(url2pathname(parts.path))
+
+
+class ResultCache:
+    """Finished results of read statements, keyed by optimized plan, session
+    conf and input file versions (see the module docstring). One lock
+    guards the map; no Spark work runs while it is held."""
+
+    def __init__(self, jvm) -> None:
+        def cls(name: str):
+            return jvm.java.lang.Class.forName("org.apache.spark.sql." + name)
+
+        self._command = cls("catalyst.plans.logical.Command")
+        self._value_leaves = (
+            cls("catalyst.plans.logical.LocalRelation"),
+            cls("catalyst.plans.logical.OneRowRelation"),
+        )
+        self._file_leaf = cls("execution.datasources.LogicalRelation")
+        self._fs_relation = cls("execution.datasources.HadoopFsRelation")
+        self._as_java = jvm.scala.jdk.javaapi.CollectionConverters.asJava
+        self._tree_map = jvm.java.util.TreeMap
+        self._json = jvm.com.fasterxml.jackson.databind.ObjectMapper()
+        self._lock = threading.Lock()
+        # (semanticHash, conf, versions) -> (plan, columns, rows), oldest first
+        self._entries: OrderedDict[tuple, tuple] = OrderedDict()
+
+    def __len__(self) -> int:
+        return len(self._entries)
+
+    def _input_files(self, plan) -> list[str] | None:
+        """URIs of the files ``plan`` reads, its subqueries' included; None
+        when a node is a command or a leaf of any other kind than a file
+        source, LocalRelation or OneRowRelation."""
+        files, todo = [], [plan]
+        while todo:
+            node = todo.pop()
+            if self._command.isInstance(node):
+                return None
+            children = node.children()
+            n_children = children.size()
+            if n_children:
+                subqueries = node.subqueries()
+                todo += [children.apply(i) for i in range(n_children)]
+                todo += [subqueries.apply(i) for i in range(subqueries.size())]
+            elif self._file_leaf.isInstance(node):
+                relation = node.relation()
+                if not self._fs_relation.isInstance(relation):
+                    return None
+                files += relation.location().inputFiles()
+            elif not any(c.isInstance(node) for c in self._value_leaves):
+                return None
+        return files
+
+    def key(self, spark: SparkSession, df: DataFrame) -> tuple | None:
+        """(plan, bucket) of a cacheable statement, else None. It reads the
+        QueryExecution that ``df.collect()`` then runs, so a miss pays no
+        second analysis or optimization."""
+        plan = df._jdf.queryExecution().optimizedPlan()
+        if plan.isStreaming() or not plan.deterministic():
+            return None
+        files = self._input_files(plan)
+        if not files:
+            return None
+        versions = {_local_file_version(f) for f in files}
+        if None in versions:
+            return None
+        confs = spark.conf._jconf.getAll()  # the explicitly set ones
+        conf = self._json.writeValueAsString(self._tree_map(self._as_java(confs)))
+        return plan, (plan.semanticHash(), conf, tuple(sorted(versions)))
+
+    def get(self, key: tuple) -> tuple[list, list] | None:
+        """The stored (columns, rows) for ``key``; the rows are shared, not copied."""
+        plan, bucket = key
+        with self._lock:
+            entry = self._entries.get(bucket)
+        if entry is None or not plan.sameResult(entry[0]):
+            return None
+        with self._lock:
+            if bucket in self._entries:
+                self._entries.move_to_end(bucket)
+        return entry[1], entry[2]
+
+    def put(self, key: tuple, columns: list, rows: list) -> None:
+        """Store a miss's result, unless it is too long or an input file
+        changed since ``key`` stat'ed it."""
+        plan, bucket = key
+        versions = bucket[2]
+        if len(rows) > RESULT_CACHE_ROWS:
+            return
+        if tuple(catalog.file_version(v[0]) for v in versions) != versions:
+            return
+        with self._lock:
+            self._entries[bucket] = (plan, columns, rows)
+            self._entries.move_to_end(bucket)
+            while len(self._entries) > RESULT_CACHE_ENTRIES:
+                self._entries.popitem(last=False)
 
 
 class SqlServer:
@@ -182,6 +333,9 @@ class SqlServer:
         self._sessions_lock = threading.Lock()
         self._slots = threading.Semaphore(max_concurrent) if max_concurrent > 0 else None
         self.queries: dict[str, QueryExecution] = {}
+        self._finished: deque[str] = deque()  # ids in the order they ended
+        self._history_lock = threading.Lock()
+        self._results = ResultCache(spark._jvm)
         self._httpd = ThreadingHTTPServer((host, port), self._handler_class())
         self.port = self._httpd.server_address[1]
         self._thread = threading.Thread(target=self._httpd.serve_forever, daemon=True)
@@ -298,7 +452,7 @@ class SqlServer:
             raise ValueError(f"Query not found: {query_id}")
         with q.lock:
             if q.state in ("QUEUED", "RUNNING"):
-                q.state = "CANCELED"
+                self._end(q, "CANCELED")
         # actually cancel the Spark jobs driving the query (KillQueryProcedure
         # cancels execution, not just protocol state): _run_admitted tags its
         # thread's jobs with the query_id job group on the shared SparkContext.
@@ -312,6 +466,15 @@ class SqlServer:
         self.queries[q.query_id] = q
         threading.Thread(target=self._run, args=(q,), daemon=True).start()
         return q
+
+    def _end(self, q: QueryExecution, state: str) -> None:
+        """Move ``q`` to a final state (the caller holds ``q.lock``) and
+        forget the oldest finished queries beyond MAX_QUERY_HISTORY."""
+        q.state, q.ended = state, time.monotonic()
+        with self._history_lock:
+            self._finished.append(q.query_id)
+            while len(self._finished) > MAX_QUERY_HISTORY:
+                self.queries.pop(self._finished.popleft(), None)
 
     def _run(self, q: QueryExecution) -> None:
         if self._slots is not None:
@@ -331,7 +494,7 @@ class SqlServer:
         with q.lock:
             if q.state == "CANCELED":
                 return
-            q.state = "RUNNING"
+            q.state, q.started = "RUNNING", time.monotonic()
         try:
             sess = self._session_for(q.client)
             # tag this thread's Spark jobs with the query id so KILL / the
@@ -341,15 +504,26 @@ class SqlServer:
             sess.spark.sparkContext.setJobGroup(q.query_id, q.sql[:100], interruptOnCancel=True)
             try:
                 df = sess.execute(q.sql)
-                rows = [[_json_cell(v) for v in row] for row in df.collect()]
+                key = self._results.key(sess.spark, df)
+                hit = self._results.get(key) if key else None
+                if hit is None:
+                    rows = [[_json_cell(v) for v in row] for row in df.collect()]
+                    cols = [
+                        {"name": f.name, "type": _presto_type(f.dataType)}
+                        for f in df.schema.fields
+                    ]
+                else:
+                    cols, rows = hit
             finally:
                 sess.spark.sparkContext.setJobGroup("", "")
-            cols = [
-                {"name": f.name, "type": _presto_type(f.dataType)} for f in df.schema.fields
-            ]
             with q.lock:
-                if q.state != "CANCELED":
-                    q.columns, q.rows, q.state = cols, rows, "FINISHED"
+                if q.state == "CANCELED":
+                    return
+                # stored before the client can see FINISHED, so its repeat hits
+                if key and hit is None:
+                    self._results.put(key, cols, rows)
+                q.columns, q.rows, q.cached = cols, rows, hit is not None
+                self._end(q, "FINISHED")
         except Exception as exc:  # noqa: BLE001 — surfaced to the client as QueryError
             with q.lock:
                 if q.state == "CANCELED":
@@ -362,7 +536,7 @@ class SqlServer:
                     "errorName": type(exc).__name__,
                     "failureInfo": {"type": type(exc).__name__},
                 }
-                q.state = "FAILED"
+                self._end(q, "FAILED")
 
     # -- protocol documents ------------------------------------------------
     def _document(self, q: QueryExecution, base: str, token: int) -> dict | None:
@@ -420,7 +594,13 @@ class SqlServer:
                 if self.path != "/v1/statement":
                     self._send(404, {"error": {"message": "not found"}})
                     return
-                length = int(self.headers.get("Content-Length", 0))
+                try:
+                    length = int(self.headers.get("Content-Length", 0))
+                except ValueError:
+                    length = -1
+                if length < 0:
+                    self._send(400, {"error": {"message": "invalid Content-Length"}})
+                    return
                 sql = self.rfile.read(length).decode()
                 if not sql.strip():
                     self._send(400, {"error": {"message": "SQL statement is empty"}})

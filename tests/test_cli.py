@@ -111,13 +111,11 @@ SURFACE = set(
 _TEMP_FUNCTION = re.compile(r"TEMPORARY\s+FUNCTION\s+(?:IF\s+NOT\s+EXISTS\s+)?([\w.]+)", re.I)
 
 
-def test_prepare_session_registers_each_function_once(spark, oracle_dir, monkeypatch):
-    """One registration per name: the surface is installed by one list of
-    families, so no family's names are registered a second time."""
+def _record_registrations(monkeypatch) -> list[str]:
+    """The names registered from now on, as SQL temp-function DDL or a
+    Python UDF registration, in order."""
     from pyspark.sql import SparkSession
     from pyspark.sql.udf import UDFRegistration
-
-    from sensql_presto_spark.cli import prepare_session
 
     names: list[str] = []
     real_sql, real_register = SparkSession.sql, UDFRegistration.register
@@ -134,8 +132,34 @@ def test_prepare_session_registers_each_function_once(spark, oracle_dir, monkeyp
 
     monkeypatch.setattr(SparkSession, "sql", sql)
     monkeypatch.setattr(UDFRegistration, "register", register)
+    return names
+
+
+def test_prepare_session_registers_each_function_once(spark, oracle_dir, monkeypatch):
+    """One registration per name: the surface is installed by one list of
+    families, so no family's names are registered a second time."""
+    from sensql_presto_spark.cli import prepare_session
+
+    names = _record_registrations(monkeypatch)
     prepare_session(spark.newSession(), oracle_dir)
 
     twice = sorted({n for n in names if names.count(n) > 1})
     assert twice == [], f"{len(twice)} names registered more than once: {twice[:10]}"
     assert set(names) == SURFACE
+
+
+def test_geo_builders_register_the_surface_once_per_session(spark, oracle_dir, monkeypatch):
+    """The geospatial registry builders install the ST_* surface on a
+    session's first build only: later builds, of the same entry or another
+    one, register nothing."""
+    from sensql_presto_spark.queries import get
+
+    session = spark.newSession()
+    names = _record_registrations(monkeypatch)
+    get("sensql_spatial_filter").build(session, oracle_dir)
+    assert "st_contains" in names
+    names.clear()
+    get("sensql_spatial_filter").build(session, oracle_dir)
+    get("geo_st_surface2").build(session, oracle_dir)
+    assert names == []
+    assert get("geo_st_surface2").build(session, oracle_dir).count() > 0

@@ -9,6 +9,9 @@ presto-client's StatementClient does.
 from __future__ import annotations
 
 import json
+import os
+import shutil
+import socket
 import time
 import urllib.request
 
@@ -149,6 +152,11 @@ def test_presto_compat_functions_available(sql_server):
 
 def _run_query_as(s: srv.SqlServer, sql: str, user: str):
     """Like run_query but with an X-Presto-User identity header."""
+    return _run_with_stats(s, sql, user)[:2]
+
+
+def _run_with_stats(s: srv.SqlServer, sql: str, user: str):
+    """_run_query_as plus the stats of the query's last document."""
     base = f"http://127.0.0.1:{s.port}"
     req = urllib.request.Request(
         f"{base}/v1/statement",
@@ -163,10 +171,10 @@ def _run_query_as(s: srv.SqlServer, sql: str, user: str):
     while True:
         rows.extend(doc.get("data", []))
         if "error" in doc:
-            return doc["error"], rows
+            return doc["error"], rows, doc["stats"]
         nxt = doc.get("nextUri")
         if nxt is None:
-            return None, rows
+            return None, rows, doc["stats"]
         assert time.time() - t0 < 120
         if doc["stats"]["state"] in ("QUEUED", "RUNNING"):
             time.sleep(0.05)
@@ -631,3 +639,237 @@ def test_server_prepares_the_surface_once(spark, oracle_dir, monkeypatch):
     finally:
         spark.sql("DROP TABLE IF EXISTS t_http_once")
         s.stop()
+
+
+@pytest.mark.parametrize("length", ["abc", "-1"])
+def test_malformed_content_length_is_rejected(sql_server, length):
+    """A Content-Length that is not a non-negative integer gets HTTP 400,
+    neither a dropped connection nor a read that waits for the client to
+    hang up."""
+    with socket.create_connection(("127.0.0.1", sql_server.port), timeout=10) as sock:
+        sock.sendall(
+            f"POST /v1/statement HTTP/1.1\r\nHost: x\r\nContent-Length: {length}\r\n\r\n"
+            "SELECT 1".encode()
+        )
+        reply = sock.recv(65536)
+    assert reply.split(b" ", 2)[1] == b"400", reply
+
+
+def test_query_history_keeps_the_newest_finished_queries(sql_server):
+    """At most 100 finished queries (Presto's query.max-history default)
+    stay in the map, oldest finished out first; a forgotten id answers
+    exactly like an unknown one."""
+    base = f"http://127.0.0.1:{sql_server.port}"
+    first = run_query(sql_server, "SELECT 'first' AS q")
+    assert first[0] is None
+    oldest = next(q for q in sql_server.queries.values() if q.sql == "SELECT 'first' AS q")
+    for i in range(105):
+        assert run_query(sql_server, f"SELECT {i} AS i")[0] is None
+    finished = [q for q in sql_server.queries.values() if q.state in ("FINISHED", "FAILED", "CANCELED")]
+    assert len(finished) <= 100
+    assert oldest.query_id not in sql_server.queries
+    for path in (f"statement/executing/{oldest.query_id}/1", f"query/{oldest.query_id}"):
+        gone = _http("GET", f"{base}/v1/{path}")
+        unknown = _http("GET", f"{base}/v1/{path.replace(oldest.query_id, 'q_000000000000')}")
+        assert gone == unknown == (404, {"error": {"message": "unknown query"}})
+    assert _http("DELETE", f"{base}/v1/statement/executing/{oldest.query_id}/1")[0] == 404
+
+
+def _find_query(s: srv.SqlServer, sql: str) -> srv.QueryExecution:
+    return [q for q in s.queries.values() if q.sql == sql][-1]
+
+
+def test_query_stats_report_times_and_cache_hits(sql_server):
+    """queryStats carries Presto's elapsedTimeMillis and queuedTimeMillis and
+    says whether the rows came from the result cache: a repeated SELECT is a
+    hit sharing the stored rows, a read after an INSERT into its table is a
+    miss, for the writer and for another client."""
+    read = "SELECT count(*) AS n FROM t_http_cache"
+    try:
+        err, _ = _run_query_as(
+            sql_server, "CREATE TABLE t_http_cache AS SELECT n_nationkey FROM nation", "cw"
+        )
+        assert err is None
+        err, rows, stats = _run_with_stats(sql_server, read, "cw")
+        assert err is None and rows == [[25]] and stats["resultCacheHit"] is False
+        assert 0 <= stats["queuedTimeMillis"] <= stats["elapsedTimeMillis"]
+        err, rows, stats = _run_with_stats(sql_server, read, "cw")
+        assert err is None and rows == [[25]] and stats["resultCacheHit"] is True
+        assert 0 <= stats["queuedTimeMillis"] <= stats["elapsedTimeMillis"]
+        hit = _find_query(sql_server, read)
+        err, rows, stats = _run_with_stats(sql_server, read, "cr")  # another client
+        assert err is None and rows == [[25]] and stats["resultCacheHit"] is True
+        assert _find_query(sql_server, read).rows is hit.rows  # shared, not copied
+
+        err, _ = _run_query_as(sql_server, "INSERT INTO t_http_cache VALUES (100), (101)", "cw")
+        assert err is None
+        err, rows, stats = _run_with_stats(sql_server, read, "cw")
+        assert err is None and rows == [[27]] and stats["resultCacheHit"] is False
+        err, rows, stats = _run_with_stats(sql_server, read, "cr")
+        assert err is None and rows == [[27]]
+    finally:
+        sql_server.spark.sql("DROP TABLE IF EXISTS t_http_cache")
+
+
+@pytest.mark.parametrize("fn", ["rand()", "uuid()", "nd_token()"])
+def test_nondeterministic_statements_are_never_cached(sql_server, fn):
+    """rand() and uuid() get a fresh seed per analysis, so their plans never
+    match; nd_token, a Python UDF marked nondeterministic, keeps one plan,
+    so only the determinism check keeps it from being served twice."""
+    from pyspark.sql import functions as F
+
+    sql_server._session_for("nd").spark.udf.register(
+        "nd_token", F.udf(lambda: os.urandom(8).hex()).asNondeterministic()
+    )
+    sql = f"SELECT n_nationkey, {fn} AS r FROM nation ORDER BY n_nationkey"
+    err, first, stats = _run_with_stats(sql_server, sql, "nd")
+    assert err is None and stats["resultCacheHit"] is False
+    err, second, stats = _run_with_stats(sql_server, sql, "nd")
+    assert err is None and stats["resultCacheHit"] is False
+    assert [r[1] for r in first] != [r[1] for r in second]
+
+
+def test_set_that_changes_the_result_reads_fresh_rows(sql_server):
+    """The session conf is part of the key: a SET whose effect is not in the
+    plan (to_json's null fields) and one that is (the session time zone
+    under a timestamp-to-string cast) both return fresh rows."""
+    to_json = (
+        "SELECT to_json(named_struct('a', CASE WHEN n_nationkey < 0 THEN 1 END, "
+        "'k', n_nationkey)) AS j FROM nation WHERE n_nationkey = 0"
+    )
+    as_string = "SELECT CAST(ts AS STRING) AS s FROM events ORDER BY event_id LIMIT 1"
+    assert _run_with_stats(sql_server, to_json, "conf_k")[1] == [['{"k":0}']]
+    assert _run_with_stats(sql_server, to_json, "conf_k")[2]["resultCacheHit"] is True
+    stmt = "SET spark.sql.jsonGenerator.ignoreNullFields=false"
+    assert _run_query_as(sql_server, stmt, "conf_k")[0] is None
+    err, rows, stats = _run_with_stats(sql_server, to_json, "conf_k")
+    assert rows == [['{"a":null,"k":0}']] and stats["resultCacheHit"] is False
+
+    utc = _run_with_stats(sql_server, as_string, "conf_k")[1]
+    stmt = "SET spark.sql.session.timeZone=America/New_York"
+    assert _run_query_as(sql_server, stmt, "conf_k")[0] is None
+    err, rows, stats = _run_with_stats(sql_server, as_string, "conf_k")
+    assert err is None and rows != utc and stats["resultCacheHit"] is False
+
+
+def test_redefined_temp_view_reads_fresh_rows(sql_server):
+    read = "SELECT n_name FROM cache_v ORDER BY n_name"
+    names = {}
+    for region in (1, 2):
+        err, _ = _run_query_as(
+            sql_server,
+            f"CREATE OR REPLACE TEMPORARY VIEW cache_v AS "
+            f"SELECT n_name FROM nation WHERE n_regionkey = {region}",
+            "view_c",
+        )
+        assert err is None
+        err, names[region], stats = _run_with_stats(sql_server, read, "view_c")
+        assert err is None and stats["resultCacheHit"] is False
+    assert names[1] and names[2] and not set(map(tuple, names[1])) & set(map(tuple, names[2]))
+
+
+def test_ungranted_user_is_denied_a_cached_statement(spark, oracle_dir):
+    s = srv.SqlServer(spark, oracle_dir, enforce_access=True).start()
+    try:
+        sql = "SELECT count(*) AS n FROM nation"
+        assert _run_with_stats(s, sql, "admin")[1] == [[25]]
+        assert _run_with_stats(s, sql, "admin")[2]["resultCacheHit"] is True
+        err, rows = _run_query_as(s, sql, "eve")
+        assert err is not None and "Access Denied" in err["message"] and rows == []
+    finally:
+        s.stop()
+
+
+def test_result_cache_bounds(sql_server, monkeypatch):
+    """At most RESULT_CACHE_ENTRIES results, least recently used out first;
+    a result longer than RESULT_CACHE_ROWS is not stored."""
+    monkeypatch.setattr(srv, "RESULT_CACHE_ENTRIES", 3)
+    lookups = [f"SELECT n_name FROM nation WHERE n_nationkey = {k}" for k in range(5)]
+    for sql in lookups:
+        assert _run_with_stats(sql_server, sql, "bounds")[0] is None
+    assert len(sql_server._results) <= 3
+    assert _run_with_stats(sql_server, lookups[-1], "bounds")[2]["resultCacheHit"] is True
+    assert _run_with_stats(sql_server, lookups[0], "bounds")[2]["resultCacheHit"] is False
+
+    monkeypatch.setattr(srv, "RESULT_CACHE_ROWS", 10)
+    long_read = "SELECT n_name FROM nation ORDER BY n_name"
+    for _ in range(2):
+        err, rows, stats = _run_with_stats(sql_server, long_read, "bounds")
+        assert err is None and len(rows) == 25 and stats["resultCacheHit"] is False
+
+
+@pytest.fixture(scope="module")
+def copy_server(spark, oracle_dir, tmp_path_factory):
+    """A server over a private copy of the tables, which tests rewrite."""
+    sf_dir = tmp_path_factory.mktemp("sf")
+    for name in os.listdir(oracle_dir):
+        shutil.copy(os.path.join(oracle_dir, name), sf_dir / name)
+    s = srv.SqlServer(spark, str(sf_dir)).start()
+    yield s, sf_dir
+    s.stop()
+
+
+def test_rewritten_table_file_reads_fresh_rows(copy_server):
+    import pyarrow.parquet as pq
+
+    s, sf_dir = copy_server
+    sql = "SELECT r_name FROM region ORDER BY r_regionkey"
+    err, rows, _ = _run_with_stats(s, sql, "rw")
+    assert err is None and len(rows) == 5
+    assert _run_with_stats(s, sql, "rw")[2]["resultCacheHit"] is True
+    path = str(sf_dir / "region.parquet")
+    pq.write_table(pq.read_table(path).slice(0, 3), path)
+    err, fresh, stats = _run_with_stats(s, sql, "rw")
+    assert err is None and fresh == rows[:3] and stats["resultCacheHit"] is False
+
+
+def _run_direct(s: srv.SqlServer, sql: str, client: str) -> srv.QueryExecution:
+    """Run one statement on the calling thread, as a submitted one runs."""
+    q = srv.QueryExecution(query_id=f"q_direct_{time.monotonic_ns()}", sql=sql, client=client)
+    s.queries[q.query_id] = q
+    s._run_admitted(q)
+    return q
+
+
+def _after_collect(monkeypatch, action) -> None:
+    """Run ``action`` once, after Spark has returned a statement's rows and
+    before the server stores them: a fault in that window."""
+    real = srv._json_cell
+    done = []
+
+    def hook(v):
+        if not done:
+            done.append(True)
+            action()
+        return real(v)
+
+    monkeypatch.setattr(srv, "_json_cell", hook)
+
+
+def test_file_changed_during_execution_is_not_stored(copy_server, monkeypatch):
+    s, sf_dir = copy_server
+    sql = "SELECT n_name FROM nation WHERE n_regionkey = 3 ORDER BY n_name"
+    path = str(sf_dir / "nation.parquet")
+    st = os.stat(path)
+    _after_collect(monkeypatch, lambda: os.utime(path, ns=(st.st_atime_ns, st.st_mtime_ns + 10**9)))
+    before = len(s._results)
+    q = _run_direct(s, sql, "touch")
+    assert q.state == "FINISHED" and len(q.rows) == 5
+    assert len(s._results) == before
+    monkeypatch.undo()
+    assert _run_with_stats(s, sql, "touch")[2]["resultCacheHit"] is False
+    assert _run_with_stats(s, sql, "touch")[2]["resultCacheHit"] is True
+
+
+def test_cancelled_or_failed_statement_stores_nothing(copy_server, monkeypatch):
+    s, _ = copy_server
+    sql = "SELECT n_name FROM nation WHERE n_regionkey = 4 ORDER BY n_name"
+    before = len(s._results)
+    _after_collect(monkeypatch, lambda: s._kill_query(_find_query(s, sql).query_id))
+    q = _run_direct(s, sql, "cancel")
+    assert q.state == "CANCELED" and q.rows is None
+    monkeypatch.undo()
+    failed = _run_direct(s, "SELECT 1 / (n_nationkey - n_nationkey) FROM nation", "cancel")
+    assert failed.state == "FAILED"
+    assert len(s._results) == before
+    assert _run_with_stats(s, sql, "cancel")[2]["resultCacheHit"] is False
