@@ -29,9 +29,12 @@ whose full result would not fit a driver belong behind INSERT/CTAS,
 exactly as in the reference.
 
 Repeated reads are served from a result cache: a statement that Spark
-would answer with the same rows again gets the stored columns and JSON
-rows of an earlier run instead of a second Spark job (the reference's
-``FileFragmentResultCacheManager``, at statement grain). A lookup happens
+would answer with the same rows again gets the stored JSON rows of an
+earlier run instead of a second Spark job (the reference's
+``FileFragmentResultCacheManager``, at statement grain). Only rows are
+stored: the column names and types always come from the current
+statement's analyzed schema, because plan matching ignores aliases
+(``count(*) AS a`` and ``count(*) AS b`` are one entry). A lookup happens
 after ``StatementSession.execute`` has parsed, access-checked and analyzed
 the statement, so an ungranted user is denied before any cached row is
 seen. A hit needs all three parts of the key to match:
@@ -52,13 +55,18 @@ SHOW, EXPLAIN, CALL, checkpointed (``LogicalRDD``) or cached
 (``InMemoryRelation``) inputs, V2 sources and non-local files. ``now()``
 and ``current_*`` fold into the plan as literals, so they never match.
 Cancelled and failed statements store nothing. The cache holds at most
-``RESULT_CACHE_ENTRIES`` results (least recently used first out) of at
-most ``RESULT_CACHE_ROWS`` rows each. ``queryStats.resultCacheHit`` says
+``RESULT_CACHE_ENTRIES`` results and ``RESULT_CACHE_BYTES`` of their rows'
+JSON text in all, least recently used out first; a result larger than
+the whole byte budget is not stored. ``queryStats.resultCacheHit`` says
 whether a statement was served from it.
 
-The server remembers at most ``MAX_QUERY_HISTORY`` finished queries
-(Presto's ``query.max-history``), forgetting the oldest finished first; a
-forgotten query id answers like an unknown one.
+The server remembers at most ``MAX_QUERY_HISTORY`` done queries (Presto's
+``query.max-history``), forgetting the oldest first; a forgotten query id
+answers like an unknown one. A query is done once it has ended and its
+client has been served the last document (or cancelled it with DELETE),
+or has not polled for ``CLIENT_TIMEOUT_S`` (Presto's
+``query.client.timeout``, after which the reference abandons a query).
+Until then its rows stay, however many other queries end meanwhile.
 """
 
 from __future__ import annotations
@@ -67,7 +75,7 @@ import json
 import threading
 import time
 import uuid
-from collections import OrderedDict, deque
+from collections import OrderedDict
 from dataclasses import dataclass, field
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from urllib.parse import urlsplit
@@ -81,8 +89,10 @@ from sensql_presto_spark.statements import StatementSession
 
 PAGE_ROWS = 1000
 MAX_QUERY_HISTORY = 100
+CLIENT_TIMEOUT_S = 300.0
 RESULT_CACHE_ENTRIES = 256
-RESULT_CACHE_ROWS = 10 * PAGE_ROWS
+RESULT_CACHE_BYTES = 16 << 20
+FILE_SLICE = 32  # input file URIs per py4j reply, well under its 8 KB buffer
 
 
 def _presto_type(dt: T.DataType) -> str:
@@ -163,10 +173,17 @@ class QueryExecution:
     cursor: int = 0
     token: int = 0  # the next page's token
     cached: bool = False  # rows came from the server's result cache
+    delivered: bool = False  # the client got the last document or cancelled
     created: float = field(default_factory=time.monotonic)
     started: float | None = None
     ended: float | None = None
+    polled: float = field(default_factory=time.monotonic)  # the client's last request
     lock: threading.Lock = field(default_factory=threading.Lock)
+
+    def done(self, now: float) -> bool:
+        """Whether an ended query may be forgotten: its client has what it
+        needs, or stopped asking CLIENT_TIMEOUT_S ago."""
+        return self.delivered or now - self.polled > CLIENT_TIMEOUT_S
 
     def snapshot_stats(self) -> dict:
         end = time.monotonic() if self.ended is None else self.ended
@@ -199,7 +216,7 @@ class ResultCache:
         def cls(name: str):
             return jvm.java.lang.Class.forName("org.apache.spark.sql." + name)
 
-        self._command = cls("catalyst.plans.logical.Command")
+        self._command = jvm.org.apache.spark.sql.catalyst.trees.TreePattern.COMMAND()
         self._value_leaves = (
             cls("catalyst.plans.logical.LocalRelation"),
             cls("catalyst.plans.logical.OneRowRelation"),
@@ -208,36 +225,42 @@ class ResultCache:
         self._fs_relation = cls("execution.datasources.HadoopFsRelation")
         self._as_java = jvm.scala.jdk.javaapi.CollectionConverters.asJava
         self._tree_map = jvm.java.util.TreeMap
+        self._wrap_array = jvm.scala.collection.immutable.ArraySeq.unsafeWrapArray
         self._json = jvm.com.fasterxml.jackson.databind.ObjectMapper()
         self._lock = threading.Lock()
-        # (semanticHash, conf, versions) -> (plan, columns, rows), oldest first
+        # (semanticHash, conf, versions) -> (plan, rows, JSON size), oldest first
         self._entries: OrderedDict[tuple, tuple] = OrderedDict()
+        self._bytes = 0  # JSON size of every stored result
 
     def __len__(self) -> int:
         return len(self._entries)
 
     def _input_files(self, plan) -> list[str] | None:
         """URIs of the files ``plan`` reads, its subqueries' included; None
-        when a node is a command or a leaf of any other kind than a file
-        source, LocalRelation or OneRowRelation."""
-        files, todo = [], [plan]
-        while todo:
-            node = todo.pop()
-            if self._command.isInstance(node):
+        when it holds a command or a leaf of any other kind than a file
+        source, LocalRelation or OneRowRelation. Every py4j call here is
+        paid by every statement, so the walk asks the JVM for whole lists
+        (subqueries, leaves, joined URIs) rather than node by node."""
+        files = []
+        subqueries = plan.subqueriesAll()
+        for p in [plan] + [subqueries.apply(i) for i in range(subqueries.size())]:
+            if p.containsPattern(self._command):
                 return None
-            children = node.children()
-            n_children = children.size()
-            if n_children:
-                subqueries = node.subqueries()
-                todo += [children.apply(i) for i in range(n_children)]
-                todo += [subqueries.apply(i) for i in range(subqueries.size())]
-            elif self._file_leaf.isInstance(node):
-                relation = node.relation()
-                if not self._fs_relation.isInstance(relation):
+            leaves = p.collectLeaves()
+            for leaf in (leaves.apply(i) for i in range(leaves.size())):
+                if self._file_leaf.isInstance(leaf):
+                    relation = leaf.relation()
+                    if not self._fs_relation.isInstance(relation):
+                        return None
+                    # a reply over py4j's 8 KB buffer waits out a 40 ms
+                    # delayed ACK, so the URIs come joined, FILE_SLICE at a
+                    # time. URIs quote control characters: a newline only
+                    # separates them.
+                    uris = self._wrap_array(relation.inputFiles())
+                    for i in range(0, uris.length(), FILE_SLICE):
+                        files += uris.slice(i, i + FILE_SLICE).mkString("\n").split("\n")
+                elif not any(c.isInstance(leaf) for c in self._value_leaves):
                     return None
-                files += relation.location().inputFiles()
-            elif not any(c.isInstance(node) for c in self._value_leaves):
-                return None
         return files
 
     def key(self, spark: SparkSession, df: DataFrame) -> tuple | None:
@@ -257,8 +280,8 @@ class ResultCache:
         conf = self._json.writeValueAsString(self._tree_map(self._as_java(confs)))
         return plan, (plan.semanticHash(), conf, tuple(sorted(versions)))
 
-    def get(self, key: tuple) -> tuple[list, list] | None:
-        """The stored (columns, rows) for ``key``; the rows are shared, not copied."""
+    def get(self, key: tuple) -> list | None:
+        """The stored rows for ``key``, shared, not copied."""
         plan, bucket = key
         with self._lock:
             entry = self._entries.get(bucket)
@@ -267,22 +290,27 @@ class ResultCache:
         with self._lock:
             if bucket in self._entries:
                 self._entries.move_to_end(bucket)
-        return entry[1], entry[2]
+        return entry[1]
 
-    def put(self, key: tuple, columns: list, rows: list) -> None:
-        """Store a miss's result, unless it is too long or an input file
-        changed since ``key`` stat'ed it."""
+    def put(self, key: tuple, rows: list) -> None:
+        """Store a miss's rows, unless they are larger than the byte budget
+        or an input file changed since ``key`` stat'ed it."""
         plan, bucket = key
         versions = bucket[2]
-        if len(rows) > RESULT_CACHE_ROWS:
+        # every row is at least "[]," in JSON
+        if 3 * len(rows) > RESULT_CACHE_BYTES:
+            return
+        size = len(json.dumps(rows))
+        if size > RESULT_CACHE_BYTES:
             return
         if tuple(catalog.file_version(v[0]) for v in versions) != versions:
             return
         with self._lock:
-            self._entries[bucket] = (plan, columns, rows)
-            self._entries.move_to_end(bucket)
-            while len(self._entries) > RESULT_CACHE_ENTRIES:
-                self._entries.popitem(last=False)
+            old = self._entries.pop(bucket, None)
+            self._bytes += size - (old[2] if old else 0)
+            self._entries[bucket] = (plan, rows, size)
+            while len(self._entries) > RESULT_CACHE_ENTRIES or self._bytes > RESULT_CACHE_BYTES:
+                self._bytes -= self._entries.popitem(last=False)[1][2]
 
 
 class SqlServer:
@@ -333,7 +361,7 @@ class SqlServer:
         self._sessions_lock = threading.Lock()
         self._slots = threading.Semaphore(max_concurrent) if max_concurrent > 0 else None
         self.queries: dict[str, QueryExecution] = {}
-        self._finished: deque[str] = deque()  # ids in the order they ended
+        self._ended: list[str] = []  # ids in the order they ended
         self._history_lock = threading.Lock()
         self._results = ResultCache(spark._jvm)
         self._httpd = ThreadingHTTPServer((host, port), self._handler_class())
@@ -468,13 +496,24 @@ class SqlServer:
         return q
 
     def _end(self, q: QueryExecution, state: str) -> None:
-        """Move ``q`` to a final state (the caller holds ``q.lock``) and
-        forget the oldest finished queries beyond MAX_QUERY_HISTORY."""
+        """Move ``q`` to a final state (the caller holds ``q.lock``)."""
         q.state, q.ended = state, time.monotonic()
         with self._history_lock:
-            self._finished.append(q.query_id)
-            while len(self._finished) > MAX_QUERY_HISTORY:
-                self.queries.pop(self._finished.popleft(), None)
+            self._ended.append(q.query_id)
+        self._forget_old()
+
+    def _forget_old(self) -> None:
+        """Forget the oldest done queries beyond MAX_QUERY_HISTORY. Other
+        queries' fields are read without their locks, so no lock order
+        between queries arises; a value read is at most a moment old."""
+        now = time.monotonic()
+        with self._history_lock:
+            done = [i for i in self._ended if self.queries[i].done(now)]
+            if len(done) > MAX_QUERY_HISTORY:
+                forget = set(done[: len(done) - MAX_QUERY_HISTORY])
+                self._ended = [i for i in self._ended if i not in forget]
+                for i in forget:
+                    del self.queries[i]
 
     def _run(self, q: QueryExecution) -> None:
         if self._slots is not None:
@@ -505,24 +544,21 @@ class SqlServer:
             try:
                 df = sess.execute(q.sql)
                 key = self._results.key(sess.spark, df)
-                hit = self._results.get(key) if key else None
-                if hit is None:
+                rows = self._results.get(key) if key else None
+                cached = rows is not None
+                if not cached:
                     rows = [[_json_cell(v) for v in row] for row in df.collect()]
-                    cols = [
-                        {"name": f.name, "type": _presto_type(f.dataType)}
-                        for f in df.schema.fields
-                    ]
-                else:
-                    cols, rows = hit
+                # this statement's names: a hit may have been stored under others
+                cols = [{"name": f.name, "type": _presto_type(f.dataType)} for f in df.schema.fields]
             finally:
                 sess.spark.sparkContext.setJobGroup("", "")
             with q.lock:
                 if q.state == "CANCELED":
                     return
                 # stored before the client can see FINISHED, so its repeat hits
-                if key and hit is None:
-                    self._results.put(key, cols, rows)
-                q.columns, q.rows, q.cached = cols, rows, hit is not None
+                if key and not cached:
+                    self._results.put(key, rows)
+                q.columns, q.rows, q.cached = cols, rows, cached
                 self._end(q, "FINISHED")
         except Exception as exc:  # noqa: BLE001 — surfaced to the client as QueryError
             with q.lock:
@@ -545,6 +581,7 @@ class SqlServer:
         that and the next one gets None, i.e. 410 Gone, as in
         ExecutingStatementResource."""
         with q.lock:
+            q.polled = time.monotonic()
             if token not in (q.token, q.token - 1):
                 return None
             doc: dict = {
@@ -569,6 +606,9 @@ class SqlServer:
                     doc["data"] = page
                 if q.cursor < len(q.rows):
                     doc["nextUri"] = f"{base}/v1/statement/executing/{q.query_id}/{q.token}"
+            if "nextUri" not in doc and not q.delivered:
+                q.delivered = True
+                self._forget_old()
         return doc
 
     # -- http plumbing -----------------------------------------------------
@@ -665,6 +705,9 @@ class SqlServer:
                             server._kill_query(q.query_id)
                         except ValueError:
                             pass
+                        # the client has abandoned the query: nothing to keep
+                        q.delivered = True
+                        server._forget_old()
                         self.send_response(204)
                         self.end_headers()
                         return

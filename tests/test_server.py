@@ -656,17 +656,19 @@ def test_malformed_content_length_is_rejected(sql_server, length):
 
 
 def test_query_history_keeps_the_newest_finished_queries(sql_server):
-    """At most 100 finished queries (Presto's query.max-history default)
-    stay in the map, oldest finished out first; a forgotten id answers
-    exactly like an unknown one."""
+    """At most 100 done queries (Presto's query.max-history default) stay
+    in the map, oldest out first; a forgotten id answers exactly like an
+    unknown one. Queries whose clients are still reading are not done and
+    do not count (test_history_keeps_a_query_its_client_is_still_reading)."""
     base = f"http://127.0.0.1:{sql_server.port}"
     first = run_query(sql_server, "SELECT 'first' AS q")
     assert first[0] is None
     oldest = next(q for q in sql_server.queries.values() if q.sql == "SELECT 'first' AS q")
     for i in range(105):
         assert run_query(sql_server, f"SELECT {i} AS i")[0] is None
-    finished = [q for q in sql_server.queries.values() if q.state in ("FINISHED", "FAILED", "CANCELED")]
-    assert len(finished) <= 100
+    now = time.monotonic()
+    done = [q for q in sql_server.queries.values() if q.ended is not None and q.done(now)]
+    assert len(done) <= 100
     assert oldest.query_id not in sql_server.queries
     for path in (f"statement/executing/{oldest.query_id}/1", f"query/{oldest.query_id}"):
         gone = _http("GET", f"{base}/v1/{path}")
@@ -729,6 +731,21 @@ def test_nondeterministic_statements_are_never_cached(sql_server, fn):
     assert [r[1] for r in first] != [r[1] for r in second]
 
 
+@pytest.mark.parametrize(
+    "sql",
+    [
+        "SELECT count(*) AS n FROM range(7)",
+        "SELECT n_name FROM nation WHERE n_nationkey < (SELECT max(id) FROM range(3)) ORDER BY 1",
+    ],
+)
+def test_statements_over_other_leaves_are_never_cached(sql_server, sql):
+    """A leaf that is neither a file source nor literal rows, in the main
+    plan or only in a subquery, keeps the statement out of the cache."""
+    for _ in range(2):
+        err, rows, stats = _run_with_stats(sql_server, sql, "leaves")
+        assert err is None and rows and stats["resultCacheHit"] is False
+
+
 def test_set_that_changes_the_result_reads_fresh_rows(sql_server):
     """The session conf is part of the key: a SET whose effect is not in the
     plan (to_json's null fields) and one that is (the session time zone
@@ -781,8 +798,9 @@ def test_ungranted_user_is_denied_a_cached_statement(spark, oracle_dir):
 
 
 def test_result_cache_bounds(sql_server, monkeypatch):
-    """At most RESULT_CACHE_ENTRIES results, least recently used out first;
-    a result longer than RESULT_CACHE_ROWS is not stored."""
+    """At most RESULT_CACHE_ENTRIES results and RESULT_CACHE_BYTES of JSON
+    rows in all, least recently used out first; a result larger than the
+    whole byte budget is not stored, however few its rows."""
     monkeypatch.setattr(srv, "RESULT_CACHE_ENTRIES", 3)
     lookups = [f"SELECT n_name FROM nation WHERE n_nationkey = {k}" for k in range(5)]
     for sql in lookups:
@@ -791,11 +809,81 @@ def test_result_cache_bounds(sql_server, monkeypatch):
     assert _run_with_stats(sql_server, lookups[-1], "bounds")[2]["resultCacheHit"] is True
     assert _run_with_stats(sql_server, lookups[0], "bounds")[2]["resultCacheHit"] is False
 
-    monkeypatch.setattr(srv, "RESULT_CACHE_ROWS", 10)
+    # a one-name lookup is 10-20 bytes of JSON, all 25 names 300-odd
+    monkeypatch.setattr(srv, "RESULT_CACHE_ENTRIES", 256)
+    monkeypatch.setattr(srv, "RESULT_CACHE_BYTES", 200)
+    lookups = [f"SELECT n_name FROM nation WHERE n_nationkey = {k}" for k in range(25)]
+    for sql in lookups:
+        assert _run_with_stats(sql_server, sql, "bounds")[0] is None
+    results = sql_server._results
+    assert results._bytes == sum(e[2] for e in results._entries.values())
+    assert 0 < results._bytes <= 200 and len(results) < 25
+    assert _run_with_stats(sql_server, lookups[-1], "bounds")[2]["resultCacheHit"] is True
+    assert _run_with_stats(sql_server, lookups[0], "bounds")[2]["resultCacheHit"] is False
     long_read = "SELECT n_name FROM nation ORDER BY n_name"
-    for _ in range(2):
-        err, rows, stats = _run_with_stats(sql_server, long_read, "bounds")
-        assert err is None and len(rows) == 25 and stats["resultCacheHit"] is False
+    wide_read = "SELECT repeat(n_name, 40) AS w FROM nation WHERE n_nationkey = 1"
+    for sql, n in ((long_read, 25), (wide_read, 1), (long_read, 25), (wide_read, 1)):
+        err, rows, stats = _run_with_stats(sql_server, sql, "bounds")
+        assert err is None and len(rows) == n and stats["resultCacheHit"] is False
+    # a result over the budget displaced nothing
+    assert _run_with_stats(sql_server, lookups[-1], "bounds")[2]["resultCacheHit"] is True
+
+
+def test_hit_reports_the_current_statement_column_names(sql_server):
+    """Plan matching ignores aliases, so a hit may come from a statement
+    that named its columns differently; the client must get its own names."""
+    first = "SELECT count(*) AS a FROM nation"
+    second = "SELECT count(*) AS b FROM nation"
+    err, cols, rows = run_query(sql_server, first)
+    assert err is None and [c["name"] for c in cols] == ["a"] and rows == [[25]]
+    err, cols, rows = run_query(sql_server, second)
+    assert err is None and rows == [[25]]
+    assert _find_query(sql_server, second).cached is True
+    assert cols == [{"name": "b", "type": "bigint"}]
+    view = "CREATE OR REPLACE TEMPORARY VIEW alias_v (c) AS SELECT count(*) FROM nation"
+    assert run_query(sql_server, view)[0] is None
+    err, cols, rows = run_query(sql_server, "SELECT * FROM alias_v")
+    assert err is None and rows == [[25]] and [c["name"] for c in cols] == ["c"]
+    assert _find_query(sql_server, "SELECT * FROM alias_v").cached is True
+
+
+def test_history_keeps_a_query_its_client_is_still_reading(sql_server):
+    """A finished query whose client has not read every page, or has not
+    yet seen its final state, outlives 100+ other queries; once its client
+    stops polling for CLIENT_TIMEOUT_S it is forgotten like a done one."""
+    base = f"http://127.0.0.1:{sql_server.port}"
+    status, doc = _http("POST", f"{base}/v1/statement", b"SELECT id FROM range(2500)")
+    assert status == 200
+    rows = []
+    while "data" not in doc:
+        time.sleep(0.05)
+        status, doc = _http("GET", doc["nextUri"])
+        assert status == 200
+    rows += doc["data"]
+    paged = doc["nextUri"]
+    unread = sql_server.submit("SELECT 'unread' AS u")  # never polled
+    silent = sql_server.submit("SELECT 'silent' AS u")
+    for q in (unread, silent):
+        while q.state != "FINISHED":
+            time.sleep(0.05)
+    for i in range(105):
+        assert run_query(sql_server, f"SELECT {i} AS i")[0] is None
+    assert unread.query_id in sql_server.queries and silent.query_id in sql_server.queries
+
+    while paged:
+        status, doc = _http("GET", paged)
+        assert status == 200, doc
+        rows += doc.get("data", [])
+        paged = doc.get("nextUri")
+    assert rows == [[i] for i in range(2500)]
+    status, doc = _http("GET", f"{base}/v1/statement/executing/{unread.query_id}/0")
+    assert status == 200 and doc["data"] == [["unread"]]
+
+    silent.polled -= srv.CLIENT_TIMEOUT_S + 1
+    assert run_query(sql_server, "SELECT 'one more' AS i")[0] is None
+    assert silent.query_id not in sql_server.queries
+    now = time.monotonic()
+    assert sum(q.ended is not None and q.done(now) for q in sql_server.queries.values()) <= 100
 
 
 @pytest.fixture(scope="module")
