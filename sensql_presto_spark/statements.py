@@ -21,6 +21,7 @@ from __future__ import annotations
 import itertools
 import re
 import threading
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -507,6 +508,14 @@ _PUBLISH_LOCK = threading.Lock()
 _STAGE_COUNTER = itertools.count()
 
 
+class _TxnStage(NamedTuple):
+    """One table's staging copy inside an open transaction."""
+
+    stage: str  # the private staging table
+    name: str  # the first spelling the transaction used for the table
+    gen: int  # the table's _TABLE_GENERATIONS value when the copy was cut
+
+
 def _bump_table_generation(table: str) -> None:
     key = table.split(".")[-1].lower()
     _TABLE_GENERATIONS[key] = _TABLE_GENERATIONS.get(key, 0) + 1
@@ -541,14 +550,10 @@ class StatementSession:
         # FROM T' and 'INSERT INTO default.t' touch one physical table
         # and must share one staging copy (two verbatim-keyed stages
         # would each cut from the base pre-image and the later publish
-        # would silently discard the earlier statement's changes).
-        self._txn_stages: dict[str, str] = {}  # normkey -> staging copy
-        self._txn_stage_names: dict[str, str] = {}  # normkey -> first spelling
-        self._txn_stage_rev: dict[str, str] = {}  # staging copy -> normkey
-        # normkey -> _TABLE_GENERATIONS value when its staging copy was
-        # cut; COMMIT compares against the current value for write-write
-        # conflict detection (first committer wins)
-        self._txn_stage_gens: dict[str, int] = {}
+        # would silently discard the earlier statement's changes).  COMMIT
+        # compares each stage's cut generation against the current one for
+        # write-write conflict detection (first committer wins).
+        self._txn_stages: dict[str, _TxnStage] = {}
         self._exec_depth = 0  # EXECUTE re-dispatch recursion guard
         # last _TABLE_GENERATIONS values this session has refreshed up to
         self._seen_generations: dict[str, int] = dict(_TABLE_GENERATIONS)
@@ -1307,7 +1312,7 @@ class StatementSession:
             # staging copy: enforce the privilege against the LOGICAL
             # table it stages, not the private stage name
             if self.enforce_access:
-                logical = self._txn_stage_rev.get(name, name)
+                logical = self._txn_logical(name)
                 self.access.check(self.user, self._active_roles(), priv, logical)
             return name
         bare = name.split(".")[-1].lower()
@@ -1397,7 +1402,7 @@ class StatementSession:
             # the extra INSERT check must name the LOGICAL table even when
             # the in-txn qualified rewrite already turned the target into
             # its staging copy (grants never exist on stage names)
-            logical = self._txn_stage_rev.get(t, t)
+            logical = self._txn_logical(t)
             self.access.check(
                 self.user, self._active_roles(), "INSERT", logical.split(".")[-1].lower()
             )
@@ -1529,7 +1534,7 @@ class StatementSession:
             return table  # already a staging target (rewritten reference)
         key = table.split(".")[-1].lower()
         if key in self._txn_stages:
-            return self._txn_stages[key]
+            return self._txn_stages[key].stage
         # the stage name must be unique across ALL live sessions: forked
         # client sessions share one metastore, so a name derived only
         # from the table would let a second session's staging CREATE
@@ -1537,17 +1542,23 @@ class StatementSession:
         # test_write_write_conflict_first_committer_wins); the global
         # counter is collision-proof
         stage = f"__txn_stage_{next(_STAGE_COUNTER)}_{abs(hash(key)) % 10**6}"
-        self._txn_stage_gens[key] = _TABLE_GENERATIONS.get(key, 0)
+        gen = _TABLE_GENERATIONS.get(key, 0)
         self.spark.sql(f"DROP TABLE IF EXISTS {stage}")
         df = self.spark.table(table).localCheckpoint(eager=True)
         df.write.saveAsTable(stage)
         self.spark.sql(
             f"CREATE OR REPLACE TEMPORARY VIEW {key} AS SELECT * FROM {stage}"
         )
-        self._txn_stages[key] = stage
-        self._txn_stage_names[key] = table
-        self._txn_stage_rev[stage] = key
+        self._txn_stages[key] = _TxnStage(stage, table, gen)
         return stage
+
+    def _txn_logical(self, name: str) -> str:
+        """The normalized table a staging copy stands for (``name`` itself
+        when it is not one of this transaction's stages)."""
+        for key, st in self._txn_stages.items():
+            if st.stage == name:
+                return key
+        return name
 
     def _txn_rewrite_qualified(self, text: str) -> str:
         """Rewrite qualified spellings of staged tables (``default.t``,
@@ -1562,10 +1573,10 @@ class StatementSession:
         # split keeps the quoted segments at odd indexes ('' = escaped quote)
         parts = re.split(r"('(?:''|[^'])*'|\"[^\"]*\")", text)
         for i in range(0, len(parts), 2):  # even indexes sit outside literals
-            for key, stage in self._txn_stages.items():
+            for key, st in self._txn_stages.items():
                 parts[i] = re.sub(
                     rf"(?<![\w.`])(?:`?spark_catalog`?\s*\.\s*)?`?default`?\s*\.\s*`?{re.escape(key)}`?(?!\w)",
-                    stage,
+                    st.stage,
                     parts[i],
                     flags=re.IGNORECASE,
                 )
@@ -1575,16 +1586,20 @@ class StatementSession:
         for key in self._txn_stages:
             self.spark.catalog.dropTempView(key)
 
+    def _txn_reset(self) -> None:
+        """Forget this transaction's state and drop its staging tables.
+        COMMIT and ROLLBACK both end here, so the state is empty whenever
+        no transaction is open, even when a DROP fails."""
+        stages, self._txn_stages = self._txn_stages, {}
+        self._txn_unrollbackable = None
+        for st in stages.values():
+            self.spark.sql(f"DROP TABLE IF EXISTS {st.stage}")
+
     def _start_transaction(self) -> DataFrame:
         if self._in_txn:
             # NestedTransactionsNotSupportedException in the reference
             raise ValueError("Nested transactions not supported")
         self._in_txn = True
-        self._txn_stages = {}
-        self._txn_stage_names = {}
-        self._txn_stage_rev = {}
-        self._txn_stage_gens = {}
-        self._txn_unrollbackable = None
         return self.spark.createDataFrame([("START TRANSACTION",)], "result string")
 
     def _commit(self) -> DataFrame:
@@ -1601,9 +1616,9 @@ class StatementSession:
                 # instead, snapshot-isolation style.  Checked under the
                 # publish lock, BEFORE any table publishes (all-or-nothing).
                 conflicts = sorted(
-                    self._txn_stage_names.get(key, key)
-                    for key, g0 in self._txn_stage_gens.items()
-                    if _TABLE_GENERATIONS.get(key, 0) > g0
+                    st.name
+                    for key, st in self._txn_stages.items()
+                    if _TABLE_GENERATIONS.get(key, 0) > st.gen
                 )
                 if conflicts:
                     self._txn_unshadow()
@@ -1630,8 +1645,7 @@ class StatementSession:
                 # from this engine's perspective (snapshot overwrite); only
                 # now do other sessions see the transaction's writes
                 published: list[str] = []
-                for key, stage in self._txn_stages.items():
-                    table = self._txn_stage_names.get(key, key)
+                for key, (stage, table, _) in self._txn_stages.items():
                     try:
                         out = self.spark.table(stage).localCheckpoint(eager=True)
                         self.spark.catalog.dropTempView(key)
@@ -1657,9 +1671,9 @@ class StatementSession:
                         # discarded instead of returning a silent partial
                         # COMMIT (the _txn_unrollbackable loud contract)
                         discarded = sorted(
-                            self._txn_stage_names.get(k, k)
-                            for k in self._txn_stages
-                            if self._txn_stage_names.get(k, k) not in published
+                            st.name
+                            for st in self._txn_stages.values()
+                            if st.name not in published
                         )
                         self._txn_unshadow()  # published views already
                         # dropped; this clears the dangling shadows of the
@@ -1675,12 +1689,7 @@ class StatementSession:
                             "current state"
                         ) from exc
         finally:
-            for stage in self._txn_stages.values():
-                self.spark.sql(f"DROP TABLE IF EXISTS {stage}")
-            self._txn_stages = {}
-            self._txn_stage_names = {}
-            self._txn_stage_rev = {}
-            self._txn_stage_gens = {}
+            self._txn_reset()
         return self.spark.createDataFrame([("COMMIT",)], "result string")
 
     def _rollback(self) -> DataFrame:
@@ -1705,13 +1714,7 @@ class StatementSession:
                     "back; other writes autocommit)"
                 )
         finally:
-            for stage in self._txn_stages.values():
-                self.spark.sql(f"DROP TABLE IF EXISTS {stage}")
-            self._txn_stages = {}
-            self._txn_stage_names = {}
-            self._txn_stage_rev = {}
-            self._txn_stage_gens = {}
-            self._txn_unrollbackable = None
+            self._txn_reset()
         return self.spark.createDataFrame([("ROLLBACK",)], "result string")
 
     # -- session properties (SET/RESET/SHOW SESSION, SURVEY §3.4;

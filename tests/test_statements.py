@@ -1265,6 +1265,42 @@ def test_txn_two_spellings_share_one_staging_copy(spark):
     spark.sql("DROP TABLE t_txn_spell")
 
 
+def test_txn_state_is_empty_after_a_failed_staging_drop(spark, monkeypatch):
+    """ROLLBACK forgets the transaction's stages even when dropping a
+    staging table fails, so the next transaction starts from empty state
+    and cuts a fresh copy of the current table."""
+    sess = _sess(spark)
+    _fresh_managed(spark, sess, "t_txn_dropfail")
+    sess.execute("START TRANSACTION")
+    sess.execute("DELETE FROM t_txn_dropfail WHERE n_nationkey = 0")
+    sql = sess.spark.sql
+    failed = []
+
+    def failing_drop(text, *args, **kwargs):
+        if text.startswith("DROP TABLE IF EXISTS __txn_stage_"):
+            failed.append(text.split()[-1])
+            raise RuntimeError("injected staging drop failure")
+        return sql(text, *args, **kwargs)
+
+    monkeypatch.setattr(sess.spark, "sql", failing_drop)
+    with pytest.raises(Exception, match="injected staging drop failure"):
+        sess.execute("ROLLBACK")
+    monkeypatch.undo()
+    assert failed and not sess._txn_stages, "a failed ROLLBACK kept its stages"
+    for stage in failed:
+        spark.sql(f"DROP TABLE IF EXISTS {stage}")
+
+    sess.execute("START TRANSACTION")
+    sess.execute("DELETE FROM t_txn_dropfail WHERE n_nationkey = 1")
+    sess.execute("COMMIT")
+    keys = sorted(
+        r.n_nationkey
+        for r in sess.execute("SELECT n_nationkey FROM t_txn_dropfail").collect()
+    )
+    assert keys == [0, 2, 3, 4, 5], "the rolled-back DELETE leaked"
+    spark.sql("DROP TABLE t_txn_dropfail")
+
+
 def test_execute_prepared_insert_respects_transaction(spark):
     """EXECUTE routes the bound statement through the full dispatcher: a
     prepared INSERT inside a transaction stages (ROLLBACK undoes it)

@@ -1,11 +1,11 @@
-"""Write registry entries' canonical physical plans into plans/<dir>/.
+"""Write registry entries' canonical physical plans into <outdir>/.
 
 Plans go through ``bench.canonical_plan`` (the text the bench fingerprints
 hash), so two captures of the same plan are byte-identical and a
 before/after diff shows exactly the plan change.
 
 Usage: python tools/capture_plan.py <outdir> <suffix> <query> [<query> ...]
-e.g.   python tools/capture_plan.py plans/r14 before agg_exact_quantiles
+e.g.   python tools/capture_plan.py /tmp/plans before agg_exact_quantiles
 """
 
 from __future__ import annotations

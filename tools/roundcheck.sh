@@ -4,7 +4,7 @@
 #   1. full pytest suite
 #   2. full-registry driver_sim sweep (exact-hash, sf0.01 — the gate's own
 #      canonicalization)
-#   3. vanilla-session priority window (the CORRECTNESS_r{N} simulation)
+#   3. the driver's priority window in a vanilla session
 #   4. bench smoke (JSON contract)
 #
 # Usage: tools/roundcheck.sh [--fast]   (--fast skips pytest)
@@ -18,11 +18,10 @@ fi
 
 echo "== full-registry sweep (sf0.01 exact-hash) =="
 # --all enumerates the registry inside driver_sim (fails loudly on an
-# import error); set ROUNDCHECK_SWEEP_JSON to also emit the
-# machine-checkable SWEEP artifact (commit hash + per-entry verdicts)
-python tools/driver_sim.py --all ${ROUNDCHECK_SWEEP_JSON:+--json "$ROUNDCHECK_SWEEP_JSON"}
+# import error)
+python tools/driver_sim.py --all
 
-echo "== vanilla priority window (driver simulation) =="
+echo "== driver priority window (vanilla session) =="
 python tools/driver_sim.py --vanilla
 
 echo "== bench smoke =="
