@@ -32,9 +32,6 @@ TABLES: tuple[str, ...] = (
     "embeddings",
 )
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
-
 def _ensure_session_conf(spark: SparkSession) -> None:
     """Runtime-settable confs the oracle comparison depends on.
 
@@ -179,7 +176,21 @@ def _register_information_schema(spark: SparkSession, sf_dir: str) -> None:
     ).createOrReplaceTempView("information_schema_columns")
 
 
-def sql(spark: SparkSession, sf_dir: str, text: str) -> DataFrame:
-    """Run SQL against the testdata views — the engine's `spark.sql` path."""
+def sql(
+    spark: SparkSession, sf_dir: str, text: str, **dataframes: DataFrame
+) -> DataFrame:
+    """Run SQL against the testdata views — the engine's `spark.sql` path.
+
+    Keyword DataFrames fill ``{name}`` slots in ``text`` for this statement
+    only (PySpark's ``spark.sql`` formatter); then every other brace in
+    ``text`` must be doubled (``escape_braces``).
+    """
     register_views(spark, sf_dir)
-    return spark.sql(text)
+    return spark.sql(text, **dataframes)
+
+
+def escape_braces(text: str) -> str:
+    """``text`` with its braces doubled, so that SQL a user wrote keeps a
+    literal such as ``'{x}'`` when it goes into a statement with ``{name}``
+    DataFrame slots."""
+    return text.replace("{", "{{").replace("}", "}}")

@@ -121,14 +121,16 @@ class MaterializedViewStore:
         if where is None:
             df = catalog.sql(self.spark, self.sf_dir, self.definition(name))
         else:
-            self.read(name).createOrReplaceTempView("__mv_refresh_cur")
             fresh = catalog.sql(
                 self.spark,
                 self.sf_dir,
                 f"SELECT * FROM ({self.definition(name)}) WHERE {where}",
             )
             keep = self.spark.sql(
-                f"SELECT * FROM __mv_refresh_cur WHERE NOT coalesce(({where}), false)"
+                "SELECT * FROM {cur} WHERE NOT coalesce(("
+                + catalog.escape_braces(where)
+                + "), false)",
+                cur=self.read(name),
             )
             df = keep.unionByName(fresh)
         df.write.parquet(os.path.join(self._dir(name), f"v={v}"))

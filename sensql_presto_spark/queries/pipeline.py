@@ -167,8 +167,8 @@ _DUCK_JACCARD_PAIRS = f"""
 # generation + the verify joins themselves, not recomputation; results
 # re-verified EXACT at both scales).
 _NGRAM_JACCARD_SQL = f"""
-    WITH sizes AS (SELECT doc_id, size(shingles) AS n FROM __nj_sh),
-    inv AS (SELECT doc_id, explode(shingles) AS s FROM __nj_sh),
+    WITH sizes AS (SELECT doc_id, size(shingles) AS n FROM {{nj_sh}}),
+    inv AS (SELECT doc_id, explode(shingles) AS s FROM {{nj_sh}}),
     df AS (SELECT s, count(*) AS df FROM inv GROUP BY s),
     ranked AS (
         SELECT i.doc_id, i.s, z.n, d.df,
@@ -186,34 +186,21 @@ _NGRAM_JACCARD_SQL = f"""
            round(size(array_intersect(sa.shingles, sb.shingles))
                  / (sa.n2 + sb.n2 - size(array_intersect(sa.shingles, sb.shingles))), 6) AS jaccard
     FROM cand c
-    JOIN (SELECT doc_id, shingles, size(shingles) AS n2 FROM __nj_sh) sa ON c.id_a = sa.doc_id
-    JOIN (SELECT doc_id, shingles, size(shingles) AS n2 FROM __nj_sh) sb ON c.id_b = sb.doc_id
+    JOIN (SELECT doc_id, shingles, size(shingles) AS n2 FROM {{nj_sh}}) sa ON c.id_a = sa.doc_id
+    JOIN (SELECT doc_id, shingles, size(shingles) AS n2 FROM {{nj_sh}}) sb ON c.id_b = sb.doc_id
     WHERE size(array_intersect(sa.shingles, sb.shingles))
           / (sa.n2 + sb.n2 - size(array_intersect(sa.shingles, sb.shingles))) >= 0.9
     """
 
 
-# --- session-scoped staging memo + unique-view SQL helper ------------------
-# r9 VERDICT next-round #3 + r9 ADVICE (low): (a) the verified near-dup
-# machinery (shingle sets, prefix-filter Jaccard pairs) is consumed by
-# THREE bench entries (dedup_ngram_jaccard itself, dedup_eval_pr,
-# dedup_cluster_assignment) yet was rebuilt inside each — a production
-# pipeline lands the verified pairs in a staging table once and fans out;
-# the memo is that staging table, keyed on the SparkSession OBJECT
-# (WeakKeyDictionary, the same hazard-handling as catalog.register_views)
-# plus (tag, sf_dir): forked sessions (spark.newSession(), one per
-# server.py client) share an applicationId but have PER-SESSION temp-view
-# catalogs, so an applicationId key would hand session B a DataFrame
-# whose views resolve only in session A (r10 ADVICE, medium).  Keying on
-# the session object also gives eviction — when a session is collected,
-# its entry goes with it instead of pinning localCheckpoint RDDs forever.
-# A restarted session or a different corpus never sees a stale entry,
-# and the memo SHRINKS checkpoint accumulation (one pair RDD instead of
-# three).
-# (b) fixed session-global temp-view names made re-entrant builds clobber
-# each other; _sql_with_views registers each relation under a fresh
-# uuid-suffixed name, analyzes the SQL (spark.sql resolves eagerly), then
-# drops the views — the returned DataFrame keeps the resolved plan.
+# --- session-scoped staging memo -----------------------------------------
+# A relation several entries read (shingle sets, verified near-dup pairs)
+# is staged once per (session, tag, sf_dir) and reused. The key is the
+# SparkSession object, held weakly: a DataFrame belongs to the session
+# that built it (forked server sessions have their own temp-view
+# catalogs), and an entry goes with its session instead of pinning its
+# checkpoint RDDs. A staged DataFrame reaches SQL through spark.sql's
+# ``{name}`` slots, which name it for that one statement only.
 import weakref as _weakref
 
 _STAGE_MEMO: "_weakref.WeakKeyDictionary[SparkSession, dict]" = (
@@ -233,35 +220,6 @@ def _session_memo(spark: SparkSession, tag: str, sf_dir: str, build):
     return df
 
 
-def _sql_with_views(
-    spark: SparkSession, sql: str, sf_dir: "str | None" = None, **views
-) -> DataFrame:
-    import re as _re
-    import uuid
-
-    names = {}
-    for placeholder, df in views.items():
-        name = f"{placeholder}_{uuid.uuid4().hex}"
-        df.createOrReplaceTempView(name)
-        names[placeholder] = name
-        # whole-token substitution only (r10 ADVICE, low): a plain
-        # str.replace would silently corrupt any identifier that merely
-        # CONTAINS the placeholder (e.g. __po inside __postings)
-        sql, n_subs = _re.subn(rf"\b{_re.escape(placeholder)}\b", name, sql)
-        if n_subs == 0:
-            raise ValueError(
-                f"placeholder '{placeholder}' does not occur as a whole "
-                "token in the SQL"
-            )
-    try:
-        if sf_dir is not None:  # the query also reads catalog tables
-            return catalog.sql(spark, sf_dir, sql)
-        return spark.sql(sql)
-    finally:
-        for name in names.values():
-            spark.catalog.dropTempView(name)
-
-
 def _shingle_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Checkpointed distinct-3-gram shingle sets, built once per
     (session, sf_dir) and shared by the ngram/minhash family."""
@@ -279,9 +237,7 @@ def _ngram_jaccard_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The un-materialized pair-generation plan (prefix-filter candidates
     + exact Jaccard >= 0.9) — split out so tests/test_plans.py can pin
     the candidate join's shape, which the checkpointed memo would hide."""
-    return _sql_with_views(
-        spark, _NGRAM_JACCARD_SQL, __nj_sh=_shingle_sets(spark, sf_dir)
-    )
+    return spark.sql(_NGRAM_JACCARD_SQL, nj_sh=_shingle_sets(spark, sf_dir))
 
 
 def _ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -343,7 +299,7 @@ _MINHASH_SIG_SQL = (
     + ",\n".join(f"       min(xxhash64(h, {i})) AS m{i}" for i in range(64))
     + """
     FROM (SELECT doc_id, xxhash64(s) AS h
-          FROM (SELECT doc_id, explode(shingles) AS s FROM __mh_sh))
+          FROM (SELECT doc_id, explode(shingles) AS s FROM {mh_sh}))
     GROUP BY doc_id
     """
 )
@@ -359,13 +315,13 @@ _MINHASH_BANDS_SQL = (
 
 _MINHASH_VERIFY_SQL = f"""
     WITH ok_buckets AS (
-        SELECT b, bh FROM __mh_bands
+        SELECT b, bh FROM {{mh_bands}}
         GROUP BY b, bh
         HAVING count(*) >= 2 AND count(*) <= {_MINHASH_BAND_CAP}
     ),
     bands_ok AS (
         SELECT t.doc_id, t.b, t.bh
-        FROM __mh_bands t JOIN ok_buckets k ON t.b = k.b AND t.bh = k.bh
+        FROM {{mh_bands}} t JOIN ok_buckets k ON t.b = k.b AND t.bh = k.bh
     ),
     cand AS (
         SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
@@ -377,8 +333,8 @@ _MINHASH_VERIFY_SQL = f"""
                  / (size(sa.shingles) + size(sb.shingles)
                     - size(array_intersect(sa.shingles, sb.shingles))), 6) AS jaccard
     FROM cand c
-    JOIN __mh_sh sa ON c.id_a = sa.doc_id
-    JOIN __mh_sh sb ON c.id_b = sb.doc_id
+    JOIN {{mh_sh}} sa ON c.id_a = sa.doc_id
+    JOIN {{mh_sh}} sb ON c.id_b = sb.doc_id
     WHERE size(array_intersect(sa.shingles, sb.shingles))
           / (size(sa.shingles) + size(sb.shingles)
              - size(array_intersect(sa.shingles, sb.shingles))) >= 0.9
@@ -393,8 +349,8 @@ def _minhash_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark,
         "minhash_bands",
         sf_dir,
-        lambda: _sql_with_views(
-            spark, _MINHASH_BANDS_SQL, __mh_sh=_shingle_sets(spark, sf_dir)
+        lambda: spark.sql(
+            _MINHASH_BANDS_SQL, mh_sh=_shingle_sets(spark, sf_dir)
         ).localCheckpoint(eager=True),
     )
 
@@ -408,9 +364,7 @@ def _minhash_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
 def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     sh = _shingle_sets(spark, sf_dir)
     bands = _minhash_bands(spark, sf_dir)
-    return _sql_with_views(
-        spark, _MINHASH_VERIFY_SQL, __mh_sh=sh, __mh_bands=bands
-    )
+    return spark.sql(_MINHASH_VERIFY_SQL, mh_sh=sh, mh_bands=bands)
 
 # SimHash over 3-gram shingle sets: 32-bit signature, 4-byte banding. A
 # pair at hamming ≤ 3 must agree on ≥ 1 band (pigeonhole: 3 differing bits
@@ -529,7 +483,7 @@ _SIMHASH_SIG_SQL = """
 _SIMHASH_PAIRS_SQL = """
     WITH bands AS (
         SELECT doc_id, simhash, b, shiftright(simhash, b * 8) & 255 AS bv
-        FROM __sh_sim LATERAL VIEW explode(sequence(0, 3)) t AS b
+        FROM {sh_sim} LATERAL VIEW explode(sequence(0, 3)) t AS b
     ),
     cand AS (
         SELECT DISTINCT a.doc_id AS id_a, a.simhash AS sh_a,
@@ -583,7 +537,7 @@ _SIMHASH_ORACLE = """
 )
 def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     sim = catalog.sql(spark, sf_dir, _SIMHASH_SIG_SQL).localCheckpoint(eager=True)
-    return _sql_with_views(spark, _SIMHASH_PAIRS_SQL, __sh_sim=sim)
+    return spark.sql(_SIMHASH_PAIRS_SQL, sh_sim=sim)
 
 # Embedding near-dup: brute-force cosine over all pairs — the correctness
 # baseline (top-10 most-similar pairs). The a.vec_id < b.vec_id join is the
@@ -789,7 +743,7 @@ _SEM_Q_SQL = """
     """
 
 _SEM_ASSIGN_SQL = f"""
-    WITH q AS (SELECT vec_id, v FROM __sem_q),
+    WITH q AS (SELECT vec_id, v FROM {{sem_q}}),
     params AS (
         SELECT k, greatest(cast(4 AS bigint),
                            least(cast(4096 AS bigint),
@@ -858,8 +812,8 @@ _SEM_PAIRS_SQL = f"""
         -- REPARTITION keeps the interpreted-HOF dot products 32-way
         -- parallel (AQE would coalesce the checkpoint-fed join to one
         -- task); measured 2x on the pair stage at sf0.1
-        FROM (SELECT /*+ REPARTITION(32, cid) */ * FROM __sem_n) a
-        JOIN __sem_n b ON a.cid = b.cid AND a.vec_id < b.vec_id
+        FROM (SELECT /*+ REPARTITION(32, cid) */ * FROM {{n}}) a
+        JOIN {{n}} b ON a.cid = b.cid AND a.vec_id < b.vec_id
     )
     SELECT cid AS cluster_id, kept_id, dropped_id
     FROM pairs
@@ -942,15 +896,14 @@ _SEM_PAIRS_SQL = f"""
 )
 def dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = _sem_assign_plan(spark, sf_dir).localCheckpoint(eager=True)
-    n.createOrReplaceTempView("__sem_n")
-    return spark.sql(_SEM_PAIRS_SQL)
+    return spark.sql(_SEM_PAIRS_SQL, n=n)
 
 
 def _sem_assign_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The two-level IVF assignment plan over the staged quantized
     corpus (split out so tests/test_plans.py can pin its join shapes)."""
     q = catalog.sql(spark, sf_dir, _SEM_Q_SQL).localCheckpoint(eager=True)
-    return _sql_with_views(spark, _SEM_ASSIGN_SQL, __sem_q=q)
+    return spark.sql(_SEM_ASSIGN_SQL, sem_q=q)
 
 # Cluster-balanced sampling: take the SAME number of items from every
 # semantic cluster (topic balancing for pretraining mixes — the cluster
@@ -1586,8 +1539,9 @@ def mm_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     "aggregation, join back — never O(n^2) pairs.",
 )
 def text_substring_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    catalog.register_views(spark, sf_dir)
-    return spark.sql(
+    return catalog.sql(
+        spark,
+        sf_dir,
         """
         WITH toks AS (
             SELECT doc_id,
@@ -1633,8 +1587,9 @@ def text_substring_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     "is a scalar subquery (one tiny broadcast), never a driver collect.",
 )
 def sim_int8_quantized(spark: SparkSession, sf_dir: str) -> DataFrame:
-    catalog.register_views(spark, sf_dir)
-    return spark.sql(
+    return catalog.sql(
+        spark,
+        sf_dir,
         f"""
         WITH e AS (
             SELECT vec_id, transform(embedding, x -> cast(x AS double)) AS v
@@ -2137,8 +2092,9 @@ def mm_image_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="Product-quantization ANN with ADC ranking and recall gate.",
 )
 def sim_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    catalog.register_views(spark, sf_dir)
-    return spark.sql(
+    return catalog.sql(
+        spark,
+        sf_dir,
         f"""
         WITH e AS (
             SELECT vec_id, transform(embedding, x -> cast(x AS double)) AS v
@@ -2742,24 +2698,25 @@ _sql_query(
 def dedup_bloom_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
     K, M = 5, 1 << 20  # 5 probes into 2^20 bits = 16,384 bitmap words
     docs = catalog.table(spark, sf_dir, "documents")
-    docs.where(F.col("doc_id") % 5 < 2).select(
-        F.md5("text").alias("h")
-    ).distinct().createOrReplaceTempView("__bloom_snapshot")
-    docs.where(F.col("doc_id") % 10 < 3).select(
+    snapshot = (
+        docs.where(F.col("doc_id") % 5 < 2).select(F.md5("text").alias("h")).distinct()
+    )
+    incoming = docs.where(F.col("doc_id") % 10 < 3).select(
         "doc_id", "source", F.md5("text").alias("h"), "n_chars"
-    ).createOrReplaceTempView("__bloom_incoming")
+    )
     # (1) one aggregation pass folds the snapshot into the bitmap relation
-    spark.sql(
+    bitmap = spark.sql(
         f"""
         SELECT pos DIV 64 AS word,
                bit_or(shiftleft(1L, cast(pos % 64 AS INT))) AS mask
         FROM (
             SELECT pmod(xxhash64(h, k.i), {M}) AS pos
-            FROM __bloom_snapshot LATERAL VIEW explode(sequence(1, {K})) k AS i
+            FROM {{snapshot}} LATERAL VIEW explode(sequence(1, {K})) k AS i
         )
         GROUP BY pos DIV 64
-        """
-    ).createOrReplaceTempView("__bloom_bitmap")
+        """,
+        snapshot=snapshot,
+    )
     # (2) broadcast prefilter: a doc whose K probed bits are not all set is
     #     DEFINITELY new (no false negatives) and never reaches the join
     # (3) exact anti-join of just the candidate slice kills false positives
@@ -2768,14 +2725,14 @@ def dedup_bloom_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
         WITH probes AS (
             SELECT i.doc_id, i.source, i.h, i.n_chars,
                    pmod(xxhash64(i.h, k.i), {M}) AS pos
-            FROM __bloom_incoming i LATERAL VIEW explode(sequence(1, {K})) k AS i
+            FROM {{incoming}} i LATERAL VIEW explode(sequence(1, {K})) k AS i
         ),
         flagged AS (
             SELECT /*+ BROADCAST(b) */ doc_id, source, h, n_chars,
                    min(CASE WHEN b.word IS NOT NULL
                             AND (shiftright(b.mask, cast(pos % 64 AS INT)) & 1) = 1
                             THEN 1 ELSE 0 END) AS all_bits_set
-            FROM probes p LEFT JOIN __bloom_bitmap b ON p.pos DIV 64 = b.word
+            FROM probes p LEFT JOIN {{bitmap}} b ON p.pos DIV 64 = b.word
             GROUP BY doc_id, source, h, n_chars
         ),
         definitely_new AS (
@@ -2785,7 +2742,7 @@ def dedup_bloom_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
             SELECT f.doc_id, f.source, f.h, f.n_chars
             FROM flagged f
             WHERE f.all_bits_set = 1
-              AND NOT EXISTS (SELECT 1 FROM __bloom_snapshot s WHERE s.h = f.h)
+              AND NOT EXISTS (SELECT 1 FROM {{snapshot}} s WHERE s.h = f.h)
         ),
         new_docs AS (
             SELECT * FROM definitely_new UNION ALL SELECT * FROM verified_new
@@ -2797,7 +2754,10 @@ def dedup_bloom_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM new_docs
         GROUP BY source
         ORDER BY source
-        """
+        """,
+        incoming=incoming,
+        bitmap=bitmap,
+        snapshot=snapshot,
     )
 
 
@@ -3105,19 +3065,17 @@ def sim_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # side of the top-8 join) and the greedy rounds join only the tiny
     # staged views.  Arithmetic unchanged; oracle keeps the all-SQL text.
     cand = _mmr_cand_plan(spark, sf_dir).localCheckpoint(eager=True)
-    pair = _sql_with_views(
-        spark,
+    pair = spark.sql(
         f"""
         SELECT a.pid, a.cid AS ca, b.cid AS cb, {vec.dot('a.cv', 'b.cv', 'bigint')} AS sim
-        FROM __cand a JOIN __cand b ON a.pid = b.pid AND a.cid <> b.cid
+        FROM {{cand}} a JOIN {{cand}} b ON a.pid = b.pid AND a.cid <> b.cid
         """,
-        __cand=cand,
+        cand=cand,
     ).localCheckpoint(eager=True)
-    return _sql_with_views(
-        spark,
+    return spark.sql(
         """
-        WITH cand AS (SELECT * FROM __cand),
-        pair AS (SELECT * FROM __pair),
+        WITH cand AS (SELECT * FROM {cand}),
+        pair AS (SELECT * FROM {pair}),
         s1 AS (
             SELECT pid, cid AS sel, rel FROM (
                 SELECT pid, cid, rel,
@@ -3160,8 +3118,8 @@ def sim_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         SELECT pid, cast(3 AS BIGINT), sel, cast(rel AS BIGINT) FROM s3
         ORDER BY query_id, pick
         """,
-        __cand=cand,
-        __pair=pair,
+        cand=cand,
+        pair=pair,
     )
 
 
@@ -3384,10 +3342,9 @@ def _skewed_web_nodes(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark,
         "skewed_web_nodes",
         sf_dir,
-        lambda: _sql_with_views(
-            spark,
-            "SELECT src AS id FROM __swe UNION SELECT dst FROM __swe",
-            __swe=_skewed_web_edges(spark, sf_dir),
+        lambda: spark.sql(
+            "SELECT src AS id FROM {swe} UNION SELECT dst FROM {swe}",
+            swe=_skewed_web_edges(spark, sf_dir),
         ).localCheckpoint(eager=True),
     )
 
@@ -3397,29 +3354,28 @@ def _skewed_web_outdeg(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark,
         "skewed_web_outdeg",
         sf_dir,
-        lambda: _sql_with_views(
-            spark,
-            "SELECT src, count(*) AS d FROM __swe GROUP BY src",
-            __swe=_skewed_web_edges(spark, sf_dir),
+        lambda: spark.sql(
+            "SELECT src, count(*) AS d FROM {swe} GROUP BY src",
+            swe=_skewed_web_edges(spark, sf_dir),
         ).localCheckpoint(eager=True),
     )
 
 
 _PAGERANK_R0_SQL = """
-    SELECT id, CAST(floor(1000000.0 / (SELECT count(*) FROM __nodes)) AS BIGINT) AS r
-    FROM __nodes
+    SELECT id, CAST(floor(1000000.0 / (SELECT count(*) FROM {nodes})) AS BIGINT) AS r
+    FROM {nodes}
 """
 
 _PAGERANK_ROUND_SQL = """
     SELECT n.id,
-           CAST(round(150000.0 / (SELECT count(*) FROM __nodes)) AS BIGINT)
+           CAST(round(150000.0 / (SELECT count(*) FROM {nodes})) AS BIGINT)
            + CAST(floor(coalesce(sum(
                  CAST(floor(p.r * 1000.0 / od.d) AS BIGINT)), 0)
                  * 85 / 100000.0) AS BIGINT) AS r
-    FROM __nodes n
-    LEFT JOIN __edges e ON e.dst = n.id
-    LEFT JOIN __prev p ON p.id = e.src
-    LEFT JOIN __outdeg od ON od.src = e.src
+    FROM {nodes} n
+    LEFT JOIN {edges} e ON e.dst = n.id
+    LEFT JOIN {prev} p ON p.id = e.src
+    LEFT JOIN {outdeg} od ON od.src = e.src
     GROUP BY n.id
 """
 
@@ -3440,18 +3396,15 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     E = _skewed_web_edges(spark, sf_dir)
     N = _skewed_web_nodes(spark, sf_dir)
     D = _skewed_web_outdeg(spark, sf_dir)
-    r = _sql_with_views(spark, _PAGERANK_R0_SQL, __nodes=N)
+    r = spark.sql(_PAGERANK_R0_SQL, nodes=N)
     for k in range(3):
-        r = _sql_with_views(
-            spark, _PAGERANK_ROUND_SQL, __nodes=N, __edges=E, __outdeg=D, __prev=r
-        )
+        r = spark.sql(_PAGERANK_ROUND_SQL, nodes=N, edges=E, outdeg=D, prev=r)
         if k < 2:  # the last round stays a plan (its groupBy is the output)
             r = r.localCheckpoint(eager=True)
-    return _sql_with_views(
-        spark,
-        "SELECT id AS node_id, r AS rank_micro FROM __r "
+    return spark.sql(
+        "SELECT id AS node_id, r AS rank_micro FROM {r} "
         "ORDER BY rank_micro DESC, node_id",
-        __r=r,
+        r=r,
     )
 
 
@@ -3746,8 +3699,8 @@ _sql_query(
 # the one the bench records.
 
 _CONTAIN_VERIFY_SQL = """
-    WITH sizes AS (SELECT doc_id, size(shingles) AS n FROM __ctn_sh),
-    inv AS (SELECT doc_id, explode(shingles) AS s FROM __ctn_sh),
+    WITH sizes AS (SELECT doc_id, size(shingles) AS n FROM {ctn_sh}),
+    inv AS (SELECT doc_id, explode(shingles) AS s FROM {ctn_sh}),
     df AS (SELECT s, count(*) AS df FROM inv GROUP BY s),
     ranked AS (
         SELECT i.doc_id, i.s, z.n,
@@ -3762,8 +3715,8 @@ _CONTAIN_VERIFY_SQL = """
     SELECT c.id_a AS contained_id, c.id_b AS container_id,
            round(size(array_intersect(sa.shingles, sb.shingles)) / cast(sa.n2 AS DOUBLE), 6) AS containment
     FROM cand c
-    JOIN (SELECT doc_id, shingles, size(shingles) AS n2 FROM __ctn_sh) sa ON c.id_a = sa.doc_id
-    JOIN (SELECT doc_id, shingles, size(shingles) AS n2 FROM __ctn_sh) sb ON c.id_b = sb.doc_id
+    JOIN (SELECT doc_id, shingles, size(shingles) AS n2 FROM {ctn_sh}) sa ON c.id_a = sa.doc_id
+    JOIN (SELECT doc_id, shingles, size(shingles) AS n2 FROM {ctn_sh}) sb ON c.id_b = sb.doc_id
     WHERE 9 * sa.n2 <= 10 * sb.n2
       AND 10 * size(array_intersect(sa.shingles, sb.shingles)) >= 9 * sa.n2
     ORDER BY contained_id, container_id
@@ -3805,11 +3758,9 @@ _CONTAIN_VERIFY_SQL = """
     "Jaccard misses.",
 )
 def text_containment_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # reads the session-memoized shingle staging relation (r10) and
-    # uuid-suffixed views (r9 ADVICE) like the jaccard/minhash family
-    return _sql_with_views(
-        spark, _CONTAIN_VERIFY_SQL, __ctn_sh=_shingle_sets(spark, sf_dir)
-    )
+    # reads the session-memoized shingle staging relation like the
+    # jaccard/minhash family
+    return spark.sql(_CONTAIN_VERIFY_SQL, ctn_sh=_shingle_sets(spark, sf_dir))
 
 
 # --- Perceptual-hash image dedup (aHash): the multimodal twin of
@@ -4055,30 +4006,29 @@ def _block_web_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     l3 = _labelprop_labels(spark, sf_dir)
-    return _sql_with_views(
-        spark,
+    return spark.sql(
         """
         SELECT CAST(l3.id AS BIGINT) AS node_id,
                CAST(l3.lbl AS BIGINT) AS community,
                CAST(count(*) OVER (PARTITION BY l3.lbl) AS BIGINT) AS community_size
-        FROM __lp_l3 l3
+        FROM {lp_l3} l3
         ORDER BY node_id
         """,
-        __lp_l3=l3,
+        lp_l3=l3,
     )
 
 
 _LP_ROUND_SQL = """
     WITH c AS (SELECT e.dst AS id, l.lbl, count(*) AS c
-               FROM __lp_sym e JOIN __lp_prev l ON l.id = e.src
+               FROM {lp_sym} e JOIN {lp_prev} l ON l.id = e.src
                GROUP BY e.dst, l.lbl),
     w AS (SELECT id, lbl FROM (
               SELECT id, lbl,
                      row_number() OVER (PARTITION BY id ORDER BY c DESC, lbl) AS rn
               FROM c) t WHERE rn = 1)
     SELECT n.id, coalesce(w.lbl, p.lbl) AS lbl
-    FROM __lp_nodes n LEFT JOIN w ON n.id = w.id
-    LEFT JOIN __lp_prev p ON p.id = n.id
+    FROM {lp_nodes} n LEFT JOIN w ON n.id = w.id
+    LEFT JOIN {lp_prev} p ON p.id = n.id
 """
 
 
@@ -4099,15 +4049,15 @@ def _labelprop_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _labelprop_labels_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     sym = _block_web_edges(spark, sf_dir)
-    nodes = _sql_with_views(
-        spark, "SELECT DISTINCT src AS id FROM __lp_sym", __lp_sym=sym
+    nodes = spark.sql(
+        "SELECT DISTINCT src AS id FROM {lp_sym}", lp_sym=sym
     ).localCheckpoint(eager=True)
-    l = _sql_with_views(
-        spark, "SELECT id, id AS lbl FROM __lp_nodes", __lp_nodes=nodes
+    l = spark.sql(
+        "SELECT id, id AS lbl FROM {lp_nodes}", lp_nodes=nodes
     ).localCheckpoint(eager=True)
     for _ in range(3):
-        l = _sql_with_views(
-            spark, _LP_ROUND_SQL, __lp_sym=sym, __lp_prev=l, __lp_nodes=nodes
+        l = spark.sql(
+            _LP_ROUND_SQL, lp_sym=sym, lp_prev=l, lp_nodes=nodes
         ).localCheckpoint(eager=True)
     return l
 
@@ -4229,9 +4179,7 @@ assert _DUCK_JACCARD_PAIRS_INCR != _DUCK_JACCARD_PAIRS
 def dedup_minhash_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     sh = _shingle_sets(spark, sf_dir)
     bands = _minhash_bands(spark, sf_dir)
-    return _sql_with_views(
-        spark, _MINHASH_VERIFY_INCR_SQL, __mh_sh=sh, __mh_bands=bands
-    )
+    return spark.sql(_MINHASH_VERIFY_INCR_SQL, mh_sh=sh, mh_bands=bands)
 
 
 # Triangle counting + local clustering coefficient (the third graph
@@ -4288,11 +4236,7 @@ assert _TRIANGLE_ORACLE.count("WITH ") == 1
     "micro-units; reads the once-checkpointed symmetrized edge relation.",
 )
 def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _sql_with_views(
-        spark,
-        _TRIANGLE_SQL.format(E="__tc_sym"),
-        __tc_sym=_block_web_edges(spark, sf_dir),
-    )
+    return spark.sql(_TRIANGLE_SQL, E=_block_web_edges(spark, sf_dir))
 
 
 # Model-based quality filtering (the fastText-classifier pipeline stage:
@@ -4500,56 +4444,53 @@ def cluster_dbscan_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, sf_dir, _DBSCAN_PAIRS_SQL.format(PTS=_DBSCAN_PTS_SPARK)
     ).localCheckpoint(eager=True)
     pts = catalog.sql(spark, sf_dir, _DBSCAN_PTS_SPARK).localCheckpoint(eager=True)
-    core = _sql_with_views(
-        spark,
+    core = spark.sql(
         """
-        SELECT id FROM (SELECT a AS id, count(*) AS n FROM __db_pairs GROUP BY a)
+        SELECT id FROM (SELECT a AS id, count(*) AS n FROM {db_pairs} GROUP BY a)
         WHERE n >= 6
         """,
-        __db_pairs=pairs,
+        db_pairs=pairs,
     ).localCheckpoint(eager=True)
-    cedges = _sql_with_views(
-        spark,
+    cedges = spark.sql(
         """
         SELECT p.a AS src, p.b AS dst
-        FROM __db_pairs p JOIN __db_core ca ON p.a = ca.id
-                          JOIN __db_core cb ON p.b = cb.id
+        FROM {db_pairs} p JOIN {db_core} ca ON p.a = ca.id
+                          JOIN {db_core} cb ON p.b = cb.id
         """,
-        __db_pairs=pairs,
-        __db_core=core,
+        db_pairs=pairs,
+        db_core=core,
     ).localCheckpoint(eager=True)
-    l0 = _sql_with_views(
-        spark, "SELECT id, id AS lbl FROM __db_core", __db_core=core
+    l0 = spark.sql(
+        "SELECT id, id AS lbl FROM {db_core}", db_core=core
     ).localCheckpoint(eager=True)
     l6 = _minlabel_jump_rounds(spark, cedges, "src", "dst", l0, rounds=6)
-    return _sql_with_views(
-        spark,
+    return spark.sql(
         """
         WITH bord AS (
             SELECT p.a AS id, min(l.lbl) AS lbl
-            FROM __db_pairs p JOIN __db_core cb ON p.b = cb.id
-                              JOIN __db_l6 l ON l.id = p.b
-            WHERE p.a NOT IN (SELECT id FROM __db_core)
+            FROM {db_pairs} p JOIN {db_core} cb ON p.b = cb.id
+                              JOIN {db_l6} l ON l.id = p.b
+            WHERE p.a NOT IN (SELECT id FROM {db_core})
             GROUP BY p.a
         )
         SELECT pts.vec_id,
                CAST(CASE WHEN lc.lbl IS NOT NULL THEN 1 ELSE 0 END AS BIGINT) AS is_core,
                CAST(coalesce(lc.lbl, bord.lbl, -1) AS BIGINT) AS cluster
-        FROM __db_pts pts
-        LEFT JOIN __db_l6 lc ON pts.vec_id = lc.id
+        FROM {db_pts} pts
+        LEFT JOIN {db_l6} lc ON pts.vec_id = lc.id
         LEFT JOIN bord ON pts.vec_id = bord.id
         ORDER BY vec_id
         """,
-        __db_pairs=pairs,
-        __db_core=core,
-        __db_pts=pts,
-        __db_l6=l6,
+        db_pairs=pairs,
+        db_core=core,
+        db_pts=pts,
+        db_l6=l6,
     )
 
 
 _MINLABEL_JUMP_ROUND_SQL = """
     WITH p AS (SELECT e.{A} AS id, min(l.lbl) AS lbl
-               FROM __mlj_edges e JOIN __mlj_prev l ON l.id = e.{B}
+               FROM {{edges}} e JOIN {{prev}} l ON l.id = e.{B}
                GROUP BY e.{A})
     SELECT p.id, l2.lbl FROM p p JOIN p l2 ON l2.id = p.lbl
 """
@@ -4566,11 +4507,8 @@ def _minlabel_jump_rounds(
     min neighbor label, then jump each label to ITS label."""
     l = l0
     for _ in range(rounds):
-        l = _sql_with_views(
-            spark,
-            _MINLABEL_JUMP_ROUND_SQL.format(A=a, B=b),
-            __mlj_edges=edges,
-            __mlj_prev=l,
+        l = spark.sql(
+            _MINLABEL_JUMP_ROUND_SQL.format(A=a, B=b), edges=edges, prev=l
         ).localCheckpoint(eager=True)
     return l
 
@@ -4611,8 +4549,8 @@ _BM25_POSTING_SQL = """
 """
 
 _BM25_MAIN_SQL = """
-    WITH tot AS (SELECT count(*) AS n, sum(dl) AS s FROM __bm25_doclen),
-    df AS (SELECT term, count(*) AS df FROM __bm25_posting GROUP BY term),
+    WITH tot AS (SELECT count(*) AS n, sum(dl) AS s FROM {bm25_doclen}),
+    df AS (SELECT term, count(*) AS df FROM {bm25_posting} GROUP BY term),
     qterms AS (
         SELECT cast(ceil(rk / 2.0) AS INT) AS query_id, term, df
         FROM (SELECT term, df, row_number() OVER (ORDER BY df DESC, term) AS rk FROM df)
@@ -4623,9 +4561,9 @@ _BM25_MAIN_SQL = """
                (cast(floor(ln((2 * t.n + 2) / (2.0 * q.df + 1)) * 1000000 + 0.5) AS BIGINT)
                  * (22 * p.tf * t.s))
                DIV (10 * t.s * p.tf + 3 * t.s + 9 * t.n * d.dl) AS c_micro
-        FROM __bm25_posting p
+        FROM {bm25_posting} p
         JOIN qterms q ON p.term = q.term
-        JOIN __bm25_doclen d ON p.doc_id = d.doc_id
+        JOIN {bm25_doclen} d ON p.doc_id = d.doc_id
         CROSS JOIN tot t
     ),
     scored AS (
@@ -4667,10 +4605,9 @@ def _doc_lengths(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark,
         "doc_lengths",
         sf_dir,
-        lambda: _sql_with_views(
-            spark,
-            "SELECT doc_id, sum(tf) AS dl FROM __po GROUP BY doc_id",
-            __po=_term_postings(spark, sf_dir),
+        lambda: spark.sql(
+            "SELECT doc_id, sum(tf) AS dl FROM {po} GROUP BY doc_id",
+            po=_term_postings(spark, sf_dir),
         ).localCheckpoint(eager=True),
     )
 
@@ -4721,11 +4658,10 @@ def _doc_lengths(spark: SparkSession, sf_dir: str) -> DataFrame:
     "exact-integer rational scoring, WindowGroupLimit top-k.",
 )
 def text_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _sql_with_views(
-        spark,
+    return spark.sql(
         _BM25_MAIN_SQL,
-        __bm25_posting=_term_postings(spark, sf_dir),
-        __bm25_doclen=_doc_lengths(spark, sf_dir),
+        bm25_posting=_term_postings(spark, sf_dir),
+        bm25_doclen=_doc_lengths(spark, sf_dir),
     )
 
 
@@ -4756,8 +4692,8 @@ def text_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _RRF_MAIN_SQL = f"""
-    WITH tot AS (SELECT count(*) AS n, sum(dl) AS s FROM __rrf_doclen),
-    df AS (SELECT term, count(*) AS df FROM __rrf_posting GROUP BY term),
+    WITH tot AS (SELECT count(*) AS n, sum(dl) AS s FROM {{rrf_doclen}}),
+    df AS (SELECT term, count(*) AS df FROM {{rrf_posting}} GROUP BY term),
     qterms AS (
         SELECT CAST(ceil(rk / 2.0) AS BIGINT) AS query_id, term, df
         FROM (SELECT term, df, row_number() OVER (ORDER BY df DESC, term) AS rk FROM df)
@@ -4768,9 +4704,9 @@ _RRF_MAIN_SQL = f"""
                (cast(floor(ln((2 * t.n + 2) / (2.0 * q.df + 1)) * 1000000 + 0.5) AS BIGINT)
                  * (22 * p.tf * t.s))
                DIV (10 * t.s * p.tf + 3 * t.s + 9 * t.n * d.dl) AS c_micro
-        FROM __rrf_posting p
+        FROM {{rrf_posting}} p
         JOIN qterms q ON p.term = q.term
-        JOIN __rrf_doclen d ON p.doc_id = d.doc_id
+        JOIN {{rrf_doclen}} d ON p.doc_id = d.doc_id
         CROSS JOIN tot t
     ),
     lex_scored AS (
@@ -4919,12 +4855,12 @@ _RRF_MAIN_SQL = f"""
 def sim_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     # reads the shared posting staging table; the query also scans the
     # embeddings catalog table, hence sf_dir
-    return _sql_with_views(
+    return catalog.sql(
         spark,
+        sf_dir,
         _RRF_MAIN_SQL,
-        sf_dir=sf_dir,
-        __rrf_posting=_term_postings(spark, sf_dir),
-        __rrf_doclen=_doc_lengths(spark, sf_dir),
+        rrf_posting=_term_postings(spark, sf_dir),
+        rrf_doclen=_doc_lengths(spark, sf_dir),
     )
 
 
@@ -5026,34 +4962,34 @@ assert _KCORE_ORACLE.count("WITH ") == 1
 # per-round staging.  Measured at sf0.1 (same-session, two passes):
 # hybrid 1.87/1.34s vs unrolled 1.98/1.69s vs fully-staged 3.16/1.58s.
 _KCORE_A2_SQL = """
-    WITH a1 AS (SELECT src AS id, count(*) AS d FROM __kc_sym
+    WITH a1 AS (SELECT src AS id, count(*) AS d FROM {kc_sym}
                 GROUP BY src HAVING count(*) >= 6)
     SELECT e.src AS id, count(*) AS d
-    FROM __kc_sym e JOIN a1 x ON e.dst = x.id JOIN a1 y ON e.src = y.id
+    FROM {kc_sym} e JOIN a1 x ON e.dst = x.id JOIN a1 y ON e.src = y.id
     GROUP BY e.src HAVING count(*) >= 6
 """
 
 _KCORE_A4_SQL = """
     WITH a3 AS (SELECT e.src AS id, count(*) AS d
-                FROM __kc_sym e JOIN __kc_a2 x ON e.dst = x.id
-                                JOIN __kc_a2 y ON e.src = y.id
+                FROM {kc_sym} e JOIN {kc_a2} x ON e.dst = x.id
+                                JOIN {kc_a2} y ON e.src = y.id
                 GROUP BY e.src HAVING count(*) >= 6)
     SELECT e.src AS id, count(*) AS d
-    FROM __kc_sym e JOIN a3 x ON e.dst = x.id JOIN a3 y ON e.src = y.id
+    FROM {kc_sym} e JOIN a3 x ON e.dst = x.id JOIN a3 y ON e.src = y.id
     GROUP BY e.src HAVING count(*) >= 6
 """
 
 _KCORE_FINAL_SQL = """
-    WITH nodes AS (SELECT DISTINCT src AS id FROM __kc_sym),
-    a1 AS (SELECT src AS id, count(*) AS d FROM __kc_sym
+    WITH nodes AS (SELECT DISTINCT src AS id FROM {kc_sym}),
+    a1 AS (SELECT src AS id, count(*) AS d FROM {kc_sym}
            GROUP BY src HAVING count(*) >= 6),
     a3 AS (SELECT e.src AS id, count(*) AS d
-           FROM __kc_sym e JOIN __kc_a2 x ON e.dst = x.id
-                           JOIN __kc_a2 y ON e.src = y.id
+           FROM {kc_sym} e JOIN {kc_a2} x ON e.dst = x.id
+                           JOIN {kc_a2} y ON e.src = y.id
            GROUP BY e.src HAVING count(*) >= 6),
     a5 AS (SELECT e.src AS id, count(*) AS d
-           FROM __kc_sym e JOIN __kc_a4 x ON e.dst = x.id
-                           JOIN __kc_a4 y ON e.src = y.id
+           FROM {kc_sym} e JOIN {kc_a4} x ON e.dst = x.id
+                           JOIN {kc_a4} y ON e.src = y.id
            GROUP BY e.src HAVING count(*) >= 6)
     SELECT CAST(n.id AS BIGINT) AS node_id,
            CAST(CASE WHEN a5.id IS NOT NULL THEN 1 ELSE 0 END AS BIGINT) AS in_core,
@@ -5066,9 +5002,9 @@ _KCORE_FINAL_SQL = """
                      ELSE 0 END AS BIGINT) AS peeled_round
     FROM nodes n
     LEFT JOIN a1 ON n.id = a1.id
-    LEFT JOIN __kc_a2 a2 ON n.id = a2.id
+    LEFT JOIN {kc_a2} a2 ON n.id = a2.id
     LEFT JOIN a3 ON n.id = a3.id
-    LEFT JOIN __kc_a4 a4 ON n.id = a4.id
+    LEFT JOIN {kc_a4} a4 ON n.id = a4.id
     LEFT JOIN a5 ON n.id = a5.id
     ORDER BY node_id
 """
@@ -5090,15 +5026,11 @@ _KCORE_FINAL_SQL = """
 )
 def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     sym = catalog.sql(spark, sf_dir, _KCORE_GRAPH_SQL).localCheckpoint(eager=True)
-    a2 = _sql_with_views(spark, _KCORE_A2_SQL, __kc_sym=sym).localCheckpoint(
+    a2 = spark.sql(_KCORE_A2_SQL, kc_sym=sym).localCheckpoint(
         eager=True
     )
-    a4 = _sql_with_views(
-        spark, _KCORE_A4_SQL, __kc_sym=sym, __kc_a2=a2
-    ).localCheckpoint(eager=True)
-    return _sql_with_views(
-        spark, _KCORE_FINAL_SQL, __kc_sym=sym, __kc_a2=a2, __kc_a4=a4
-    )
+    a4 = spark.sql(_KCORE_A4_SQL, kc_sym=sym, kc_a2=a2).localCheckpoint(eager=True)
+    return spark.sql(_KCORE_FINAL_SQL, kc_sym=sym, kc_a2=a2, kc_a4=a4)
 
 
 # ---------------------------------------------------------------------------
@@ -5212,8 +5144,7 @@ _PHRASE_MAIN_SQL = """
 )
 def text_phrase_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     tri = catalog.sql(spark, sf_dir, _PHRASE_TRIGRAM_SQL).localCheckpoint(eager=True)
-    tri.createOrReplaceTempView("__ph_tri")
-    return spark.sql(_PHRASE_MAIN_SQL.format(TRI="__ph_tri"))
+    return spark.sql(_PHRASE_MAIN_SQL, TRI=tri)
 
 
 # ---------------------------------------------------------------------------
@@ -5393,36 +5324,34 @@ def graph_khop_distances(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the node-sized distance relation is now checkpointed per round.
     # Round math is verbatim _KHOP_ROUNDS_SQL (the oracle text above).
     sym = _block_web_edges(spark, sf_dir)
-    nodes = _sql_with_views(
-        spark, "SELECT DISTINCT src AS id FROM __kh_sym", __kh_sym=sym
+    nodes = spark.sql(
+        "SELECT DISTINCT src AS id FROM {kh_sym}", kh_sym=sym
     ).localCheckpoint(eager=True)
-    d = _sql_with_views(
-        spark, "SELECT id AS v, 0 AS d FROM __kh_nodes WHERE id % 15 = 0", __kh_nodes=nodes
+    d = spark.sql(
+        "SELECT id AS v, 0 AS d FROM {kh_nodes} WHERE id % 15 = 0", kh_nodes=nodes
     ).localCheckpoint(eager=True)
     for _ in range(4):
-        d = _sql_with_views(
-            spark,
+        d = spark.sql(
             """
             SELECT v, min(d) AS d FROM (
-                SELECT v, d FROM __kh_prev
+                SELECT v, d FROM {kh_prev}
                 UNION ALL
-                SELECT e.dst AS v, p.d + 1 AS d FROM __kh_sym e JOIN __kh_prev p ON e.src = p.v
+                SELECT e.dst AS v, p.d + 1 AS d FROM {kh_sym} e JOIN {kh_prev} p ON e.src = p.v
             ) u GROUP BY v
             """,
-            __kh_sym=sym,
-            __kh_prev=d,
+            kh_sym=sym,
+            kh_prev=d,
         ).localCheckpoint(eager=True)
-    return _sql_with_views(
-        spark,
+    return spark.sql(
         """
         SELECT CAST(n.id AS BIGINT) AS node_id,
                CAST(coalesce(d4.d, -1) AS BIGINT) AS dist,
                CAST(CASE WHEN d4.d IS NOT NULL THEN 1 ELSE 0 END AS BIGINT) AS reached
-        FROM __kh_nodes n LEFT JOIN __kh_d4 d4 ON n.id = d4.v
+        FROM {kh_nodes} n LEFT JOIN {kh_d4} d4 ON n.id = d4.v
         ORDER BY node_id
         """,
-        __kh_nodes=nodes,
-        __kh_d4=d,
+        kh_nodes=nodes,
+        kh_d4=d,
     )
 
 
@@ -5683,8 +5612,7 @@ _KNN_JOIN_SQL = f"""
 )
 def sim_knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus = catalog.sql(spark, sf_dir, _KNN_CORPUS_SQL).localCheckpoint(eager=True)
-    corpus.createOrReplaceTempView("__knn_corpus")
-    return spark.sql(_KNN_JOIN_SQL.format(E="__knn_corpus"))
+    return spark.sql(_KNN_JOIN_SQL, E=corpus)
 
 
 # ---------------------------------------------------------------------------
@@ -5772,14 +5700,11 @@ _PPL_ORACLE = """
 )
 def text_perplexity_bucket(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the same staged posting relation under this entry's (w, c) names
-    posting = _sql_with_views(
-        spark,
-        "SELECT doc_id, term AS w, tf AS c FROM __po",
-        __po=_term_postings(spark, sf_dir),
+    posting = spark.sql(
+        "SELECT doc_id, term AS w, tf AS c FROM {po}",
+        po=_term_postings(spark, sf_dir),
     )
-    return _sql_with_views(
-        spark, _PPL_BUCKET_SQL.format(P="__ppl_posting"), __ppl_posting=posting
-    )
+    return spark.sql(_PPL_BUCKET_SQL, P=posting)
 
 
 # ---------------------------------------------------------------------------
@@ -5851,11 +5776,7 @@ assert _LINKPRED_ORACLE.count("WITH ") == 1
     "checkpointed once.",
 )
 def graph_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _sql_with_views(
-        spark,
-        _LINKPRED_SQL.format(E="__lprd_sym"),
-        __lprd_sym=_block_web_edges(spark, sf_dir),
-    )
+    return spark.sql(_LINKPRED_SQL, E=_block_web_edges(spark, sf_dir))
 
 
 # ---------------------------------------------------------------------------
@@ -6077,12 +5998,9 @@ _NND_ORACLE = """
 )
 def sim_nn_descent_round(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus = catalog.sql(spark, sf_dir, _NND_CORPUS_SQL).localCheckpoint(eager=True)
-    corpus.createOrReplaceTempView("__nnd_corpus")
-    edges = spark.sql(_NND_EDGES_SQL.format(E="__nnd_corpus")).localCheckpoint(eager=True)
-    edges.createOrReplaceTempView("__nnd_edges")
-    cand = spark.sql(_NND_CAND_SQL.format(K="__nnd_edges")).localCheckpoint(eager=True)
-    cand.createOrReplaceTempView("__nnd_cand")
-    return spark.sql(_NND_ROUND_SQL.format(E="__nnd_corpus", C="__nnd_cand"))
+    edges = spark.sql(_NND_EDGES_SQL, E=corpus).localCheckpoint(eager=True)
+    cand = spark.sql(_NND_CAND_SQL, K=edges).localCheckpoint(eager=True)
+    return spark.sql(_NND_ROUND_SQL, E=corpus, C=cand)
 
 
 # ---------------------------------------------------------------------------
@@ -6242,28 +6160,25 @@ def cluster_snn_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     # scans of the checkpointed strong-edge relation); the rounds are now
     # staged per level via _minlabel_jump_rounds (identical math).
     corpus = catalog.sql(spark, sf_dir, _KNN_CORPUS_SQL).localCheckpoint(eager=True)
-    corpus.createOrReplaceTempView("__snn_corpus")
-    edges = spark.sql(_SNN_EDGES_SQL.format(E="__snn_corpus")).localCheckpoint(eager=True)
-    edges.createOrReplaceTempView("__snn_edges")
-    strong = spark.sql(_SNN_STRONG_SQL.format(K="__snn_edges")).localCheckpoint(eager=True)
-    l0 = _sql_with_views(
-        spark, "SELECT DISTINCT u AS id, u AS lbl FROM __snn_strong", __snn_strong=strong
+    edges = spark.sql(_SNN_EDGES_SQL, E=corpus).localCheckpoint(eager=True)
+    strong = spark.sql(_SNN_STRONG_SQL, K=edges).localCheckpoint(eager=True)
+    l0 = spark.sql(
+        "SELECT DISTINCT u AS id, u AS lbl FROM {snn_strong}", snn_strong=strong
     ).localCheckpoint(eager=True)
     l6 = _minlabel_jump_rounds(spark, strong, "u", "w", l0, rounds=6)
-    return _sql_with_views(
-        spark,
+    return spark.sql(
         """
-        WITH sized AS (SELECT lbl, count(*) AS sz FROM __snn_l6 GROUP BY lbl)
+        WITH sized AS (SELECT lbl, count(*) AS sz FROM {snn_l6} GROUP BY lbl)
         SELECT c.vec_id,
                CAST(coalesce(l.lbl, c.vec_id) AS BIGINT) AS cluster,
                CAST(coalesce(s.sz, 1) AS BIGINT) AS cluster_size
-        FROM __snn_c c
-        LEFT JOIN __snn_l6 l ON c.vec_id = l.id
+        FROM {snn_c} c
+        LEFT JOIN {snn_l6} l ON c.vec_id = l.id
         LEFT JOIN sized s ON l.lbl = s.lbl
         ORDER BY vec_id
         """,
-        __snn_c=corpus,
-        __snn_l6=l6,
+        snn_c=corpus,
+        snn_l6=l6,
     )
 
 
@@ -6411,8 +6326,7 @@ _DSIR_ORACLE = """
 )
 def text_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     posting = catalog.sql(spark, sf_dir, _DSIR_POSTING_SQL).localCheckpoint(eager=True)
-    posting.createOrReplaceTempView("__dsir_posting")
-    return catalog.sql(spark, sf_dir, _DSIR_MAIN_SQL.format(P="__dsir_posting"))
+    return catalog.sql(spark, sf_dir, _DSIR_MAIN_SQL, P=posting)
 
 
 # ---------------------------------------------------------------------------
@@ -6671,28 +6585,26 @@ def sim_pca_project(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).localCheckpoint(eager=True)
     v = spark.sql("SELECT explode(sequence(0, 63)) AS j, cast(1000 AS bigint) AS val")
     for _ in range(_PCA_ITER):
-        raw = _sql_with_views(
-            spark,
+        raw = spark.sql(
             "SELECT c.i AS j, sum(c.c * p.val) AS raw "
-            "FROM __cov c JOIN __prev p ON c.j = p.j GROUP BY c.i",
-            __cov=cov,
-            __prev=v,
+            "FROM {cov} c JOIN {prev} p ON c.j = p.j GROUP BY c.i",
+            cov=cov,
+            prev=v,
         ).localCheckpoint(eager=True)
-        v = _sql_with_views(
-            spark,
-            "SELECT j, (raw * 1000) DIV (SELECT max(abs(raw)) FROM __raw) AS val "
-            "FROM __raw",
-            __raw=raw,
+        v = spark.sql(
+            "SELECT j, (raw * 1000) DIV (SELECT max(abs(raw)) FROM {raw}) AS val "
+            "FROM {raw}",
+            raw=raw,
         ).localCheckpoint(eager=True)
-    return _sql_with_views(
+    return catalog.sql(
         spark,
+        sf_dir,
         f"""
         SELECT r.vec_id, cast(sum(r.x * vv.val) AS bigint) AS pc_milli
-        FROM ({rows_sql}) r JOIN __v vv ON r.d = vv.j
+        FROM ({rows_sql}) r JOIN {{v}} vv ON r.d = vv.j
         GROUP BY r.vec_id ORDER BY vec_id
         """,
-        sf_dir=sf_dir,
-        __v=v,
+        v=v,
     )
 
 
@@ -6801,8 +6713,7 @@ _TWOSTAGE_MAIN_SQL = f"""
 )
 def sim_two_stage_prefix_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = catalog.sql(spark, sf_dir, _TWOSTAGE_CORPUS_SQL).localCheckpoint(eager=True)
-    n.createOrReplaceTempView("__ts_n")
-    return spark.sql(_TWOSTAGE_MAIN_SQL.format(N="__ts_n"))
+    return spark.sql(_TWOSTAGE_MAIN_SQL, N=n)
 
 
 # ---------------------------------------------------------------------------
@@ -6915,8 +6826,7 @@ _WINNOW_PAIRS_SQL = """
 )
 def text_winnowing_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     fp = catalog.sql(spark, sf_dir, _WINNOW_FP_SQL).localCheckpoint(eager=True)
-    fp.createOrReplaceTempView("__wn_fp")
-    return spark.sql(_WINNOW_PAIRS_SQL.format(FP="__wn_fp"))
+    return spark.sql(_WINNOW_PAIRS_SQL, FP=fp)
 
 
 # ---------------------------------------------------------------------------
@@ -6995,11 +6905,10 @@ def text_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidates = (
         docs.select("text").mapInPandas(_mg_batch_candidates, "bigram string").distinct()
     )
-    docs.select("text").createOrReplaceTempView("__hh_docs")
-    candidates.createOrReplaceTempView("__hh_cands")
-    return spark.sql(f"""
+    return spark.sql(
+        f"""
         WITH t AS (
-            SELECT split(text, ' ') AS t FROM __hh_docs
+            SELECT split(text, ' ') AS t FROM {{docs}}
             WHERE size(split(text, ' ')) >= 2
         ),
         b AS (
@@ -7009,7 +6918,7 @@ def text_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         c AS (
             SELECT b.bigram, count(*) AS cnt
-            FROM b JOIN __hh_cands cd ON b.bigram = cd.bigram
+            FROM b JOIN {{cands}} cd ON b.bigram = cd.bigram
             GROUP BY b.bigram
         )
         SELECT CAST(row_number() OVER (ORDER BY cnt DESC, bigram) AS BIGINT) AS rank,
@@ -7017,7 +6926,10 @@ def text_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM c
         ORDER BY cnt DESC, bigram
         LIMIT {_HH_K}
-    """)
+        """,
+        docs=docs.select("text"),
+        cands=candidates,
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -7132,8 +7044,9 @@ def cluster_kmeans_parallel_init(spark: SparkSession, sf_dir: str) -> DataFrame:
     # plan with 146 scans of the checkpointed rows_ relation.  The
     # builder stages each round's cost / sel (vec- and candidate-sized)
     # as localCheckpoints; every expression is copied verbatim.
-    catalog.register_views(spark, sf_dir)
-    rows_ = spark.sql(
+    rows_ = catalog.sql(
+        spark,
+        sf_dir,
         """
         SELECT vec_id, d, x FROM (
             SELECT vec_id,
@@ -7143,55 +7056,51 @@ def cluster_kmeans_parallel_init(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         """
     ).localCheckpoint(eager=True)
-    cost = _sql_with_views(
-        spark,
+    cost = spark.sql(
         """
         WITH sel0 AS (SELECT CAST(0 AS BIGINT) AS c_id),
-        cand0 AS (SELECT s.c_id, r.d, r.x FROM sel0 s JOIN __km_rows r ON r.vec_id = s.c_id),
+        cand0 AS (SELECT s.c_id, r.d, r.x FROM sel0 s JOIN {km_rows} r ON r.vec_id = s.c_id),
         dist0 AS (SELECT rw.vec_id, c.c_id, sum((rw.x - c.x) * (rw.x - c.x)) AS d2
-                  FROM __km_rows rw JOIN cand0 c ON rw.d = c.d GROUP BY rw.vec_id, c.c_id)
+                  FROM {km_rows} rw JOIN cand0 c ON rw.d = c.d GROUP BY rw.vec_id, c.c_id)
         SELECT vec_id, min(d2) AS cost FROM dist0 GROUP BY vec_id
         """,
-        __km_rows=rows_,
+        km_rows=rows_,
     ).localCheckpoint(eager=True)
     sels = []
     for r in range(1, _KMPP_ROUNDS + 1):
-        sel = _sql_with_views(
-            spark,
+        sel = spark.sql(
             f"""
-            SELECT c.vec_id AS c_id FROM __km_cost c, (SELECT sum(cost) AS tot FROM __km_cost) t
+            SELECT c.vec_id AS c_id FROM {{km_cost}} c, (SELECT sum(cost) AS tot FROM {{km_cost}}) t
             WHERE ((c.vec_id * 2654435761 + {r} * 40503 + 12345) % 100000) * t.tot
                   < {_KMPP_L} * 100000 * c.cost
             """,
-            __km_cost=cost,
+            km_cost=cost,
         ).localCheckpoint(eager=True)
         sels.append(sel)
-        cost = _sql_with_views(
-            spark,
+        cost = spark.sql(
             """
             WITH cand AS (SELECT s.c_id, r.d, r.x
-                          FROM __km_sel s JOIN __km_rows r ON r.vec_id = s.c_id),
+                          FROM {km_sel} s JOIN {km_rows} r ON r.vec_id = s.c_id),
             dist AS (SELECT rw.vec_id, c.c_id, sum((rw.x - c.x) * (rw.x - c.x)) AS d2
-                     FROM __km_rows rw JOIN cand c ON rw.d = c.d GROUP BY rw.vec_id, c.c_id)
+                     FROM {km_rows} rw JOIN cand c ON rw.d = c.d GROUP BY rw.vec_id, c.c_id)
             SELECT p.vec_id, least(p.cost, coalesce(m.mn, p.cost)) AS cost
-            FROM __km_cost p LEFT JOIN (SELECT vec_id, min(d2) AS mn FROM dist GROUP BY vec_id) m
+            FROM {km_cost} p LEFT JOIN (SELECT vec_id, min(d2) AS mn FROM dist GROUP BY vec_id) m
               ON m.vec_id = p.vec_id
             """,
-            __km_rows=rows_,
-            __km_sel=sel,
-            __km_cost=cost,
+            km_rows=rows_,
+            km_sel=sel,
+            km_cost=cost,
         ).localCheckpoint(eager=True)
     cand_df = spark.sql("SELECT CAST(0 AS BIGINT) AS c_id, 0 AS sel_round")
     for i, sel in enumerate(sels, start=1):
         cand_df = cand_df.union(sel.select(F.col("c_id"), F.lit(i).alias("sel_round")))
     candidates = cand_df.localCheckpoint(eager=True)
-    return _sql_with_views(
-        spark,
+    return spark.sql(
         f"""
         WITH candrows AS (SELECT c.c_id, r.d, r.x
-                          FROM __km_cands c JOIN __km_rows r ON r.vec_id = c.c_id),
+                          FROM {{km_cands}} c JOIN {{km_rows}} r ON r.vec_id = c.c_id),
         alldist AS (SELECT rw.vec_id, c.c_id, sum((rw.x - c.x) * (rw.x - c.x)) AS d2
-                    FROM __km_rows rw JOIN candrows c ON rw.d = c.d GROUP BY rw.vec_id, c.c_id),
+                    FROM {{km_rows}} rw JOIN candrows c ON rw.d = c.d GROUP BY rw.vec_id, c.c_id),
         assign AS (SELECT vec_id, c_id FROM (
                        SELECT vec_id, c_id,
                               row_number() OVER (PARTITION BY vec_id ORDER BY d2, c_id) AS rn
@@ -7200,12 +7109,12 @@ def cluster_kmeans_parallel_init(spark: SparkSession, sf_dir: str) -> DataFrame:
         SELECT CAST(row_number() OVER (ORDER BY w.weight DESC, w.c_id) AS BIGINT) AS rank,
                w.c_id AS centroid_id, CAST(w.weight AS BIGINT) AS weight,
                CAST(c.sel_round AS BIGINT) AS sel_round
-        FROM weights w JOIN __km_cands c ON c.c_id = w.c_id
+        FROM weights w JOIN {{km_cands}} c ON c.c_id = w.c_id
         ORDER BY w.weight DESC, w.c_id
         LIMIT {_KMPP_K}
         """,
-        __km_rows=rows_,
-        __km_cands=candidates,
+        km_rows=rows_,
+        km_cands=candidates,
     )
 
 
@@ -7412,13 +7321,11 @@ def graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     # label-propagation cascade per reference gave a 139 KB plan with 69
     # edge-relation scans; it now reads the staged l3 labels.
     l3 = _labelprop_labels(spark, sf_dir)
-    sql = "WITH " + _MODQ_TAIL.format(E="__mq_sym").replace(
+    sql = "WITH " + _MODQ_TAIL.replace(
         "lbl AS (SELECT l3.id AS node_id, l3.lbl AS community FROM l3),",
-        "lbl AS (SELECT l3.id AS node_id, l3.lbl AS community FROM __mq_l3 l3),",
+        "lbl AS (SELECT l3.id AS node_id, l3.lbl AS community FROM {l3} l3),",
     )
-    return _sql_with_views(
-        spark, sql, __mq_sym=_block_web_edges(spark, sf_dir), __mq_l3=l3
-    )
+    return spark.sql(sql, E=_block_web_edges(spark, sf_dir), l3=l3)
 
 
 # ---------------------------------------------------------------------------
@@ -7559,16 +7466,12 @@ assert _BPE_ORACLE.count("WITH ") == 1
     "right merge order identically in both engines.",
 )
 def text_bpe_train_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
-    catalog.register_views(spark, sf_dir)
-    corp = spark.sql(_BPE_CORP0_SQL).localCheckpoint(eager=True)
-    corp.createOrReplaceTempView("__bpe_corp0")
+    corp = catalog.sql(spark, sf_dir, _BPE_CORP0_SQL).localCheckpoint(eager=True)
     summaries = []
     for r in range(1, _BPE_ROUNDS + 1):
-        nxt = spark.sql(_BPE_ROUND_SQL.format(P=f"__bpe_corp{r - 1}")).localCheckpoint(eager=True)
-        nxt.createOrReplaceTempView(f"__bpe_corp{r}")
-        summaries.append(
-            spark.sql(_BPE_SUMMARY_SQL.format(P=f"__bpe_corp{r - 1}", N=f"__bpe_corp{r}", R=r))
-        )
+        nxt = spark.sql(_BPE_ROUND_SQL, P=corp).localCheckpoint(eager=True)
+        summaries.append(spark.sql(_BPE_SUMMARY_SQL, P=corp, N=nxt, R=r))
+        corp = nxt
     out = summaries[0]
     for s in summaries[1:]:
         out = out.unionAll(s)
@@ -8541,15 +8444,11 @@ def _bpe_encode_oracle() -> str:
     "machinery as training), ONE doc-keyed rollup groupBy.",
 )
 def text_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    catalog.register_views(spark, sf_dir)
-    corp = spark.sql(_BPE_CORP0_SQL).localCheckpoint(eager=True)
-    corp.createOrReplaceTempView("__bpee_corp0")
-    for r in range(1, _BPE_ROUNDS + 1):
-        nxt = spark.sql(_BPE_ROUND_SQL.format(P=f"__bpee_corp{r - 1}")).localCheckpoint(eager=True)
-        nxt.createOrReplaceTempView(f"__bpee_corp{r}")
-    rolled = spark.sql(
-        _BPE_ENCODE_ROLLUP_SQL.format(B="__bpee_corp0", A=f"__bpee_corp{_BPE_ROUNDS}")
-    )
+    corp0 = catalog.sql(spark, sf_dir, _BPE_CORP0_SQL).localCheckpoint(eager=True)
+    corp = corp0
+    for _ in range(_BPE_ROUNDS):
+        corp = spark.sql(_BPE_ROUND_SQL, P=corp).localCheckpoint(eager=True)
+    rolled = spark.sql(_BPE_ENCODE_ROLLUP_SQL, B=corp0, A=corp)
     return rolled.selectExpr(
         "doc_id",
         "n_words",
@@ -8937,24 +8836,24 @@ def _ppr_sql(div: str) -> str:
 _PPR_R0_SQL = """
     SELECT n.id,
            CASE WHEN s.id IS NOT NULL
-                THEN CAST(floor(1000000.0 / (SELECT count(*) FROM __seeds)) AS BIGINT)
+                THEN CAST(floor(1000000.0 / (SELECT count(*) FROM {seeds})) AS BIGINT)
                 ELSE 0L END AS r
-    FROM __nodes n LEFT JOIN __seeds s ON s.id = n.id
+    FROM {nodes} n LEFT JOIN {seeds} s ON s.id = n.id
 """
 
 _PPR_ROUND_SQL = """
     SELECT n.id,
            CASE WHEN s.id IS NOT NULL
-                THEN CAST(round(150000.0 / (SELECT count(*) FROM __seeds)) AS BIGINT)
+                THEN CAST(round(150000.0 / (SELECT count(*) FROM {seeds})) AS BIGINT)
                 ELSE 0L END
            + CAST(floor(coalesce(sum(
                  CAST(floor(p.r * 1000.0 / od.d) AS BIGINT)), 0)
                  * 85 / 100000.0) AS BIGINT) AS r
-    FROM __nodes n
-    LEFT JOIN __seeds s ON s.id = n.id
-    LEFT JOIN __edges e ON e.dst = n.id
-    LEFT JOIN __prev p ON p.id = e.src
-    LEFT JOIN __outdeg od ON od.src = e.src
+    FROM {nodes} n
+    LEFT JOIN {seeds} s ON s.id = n.id
+    LEFT JOIN {edges} e ON e.dst = n.id
+    LEFT JOIN {prev} p ON p.id = e.src
+    LEFT JOIN {outdeg} od ON od.src = e.src
     GROUP BY n.id, s.id
 """
 
@@ -8979,36 +8878,33 @@ def graph_personalized_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark,
         "skewed_web_seeds",
         sf_dir,
-        lambda: _sql_with_views(
-            spark,
-            "SELECT id FROM __nodes WHERE id % 150 = 0",
-            __nodes=N,
+        lambda: spark.sql(
+            "SELECT id FROM {nodes} WHERE id % 150 = 0",
+            nodes=N,
         ).localCheckpoint(eager=True),
     )
-    r = _sql_with_views(spark, _PPR_R0_SQL, __nodes=N, __seeds=S)
+    r = spark.sql(_PPR_R0_SQL, nodes=N, seeds=S)
     for k in range(3):
-        r = _sql_with_views(
-            spark,
+        r = spark.sql(
             _PPR_ROUND_SQL,
-            __nodes=N,
-            __seeds=S,
-            __edges=E,
-            __outdeg=D,
-            __prev=r,
+            nodes=N,
+            seeds=S,
+            edges=E,
+            outdeg=D,
+            prev=r,
         )
         if k < 2:
             r = r.localCheckpoint(eager=True)
-    return _sql_with_views(
-        spark,
+    return spark.sql(
         """
         SELECT node_id, rank_micro, CAST(rk AS BIGINT) AS rk
         FROM (SELECT id AS node_id, r AS rank_micro,
                      row_number() OVER (ORDER BY r DESC, id) AS rk
-              FROM __r)
+              FROM {r})
         WHERE rk <= 100 OR node_id % 150 = 0
         ORDER BY rk
         """,
-        __r=r,
+        r=r,
     )
 
 
@@ -9138,7 +9034,7 @@ _PRF_DF_SQL = "SELECT term, count(*) AS df FROM {P} GROUP BY term"
 
 _PRF_QTERMS_SQL = """
     SELECT cast(ceil(rk / 2.0) AS INT) AS query_id, term, df
-    FROM (SELECT term, df, row_number() OVER (ORDER BY df DESC, term) AS rk FROM __prf_df)
+    FROM (SELECT term, df, row_number() OVER (ORDER BY df DESC, term) AS rk FROM {prf_df})
     WHERE rk <= 6
 """
 
@@ -9150,7 +9046,7 @@ _PRF_EXPN2_SQL = """
                  * (22 * p.tf * t.s))
                DIV (10 * t.s * p.tf + 3 * t.s + 9 * t.n * d.dl) AS c_micro
         FROM {P} p
-        JOIN __prf_qterms q ON p.term = q.term
+        JOIN {prf_qterms} q ON p.term = q.term
         JOIN {D} d ON p.doc_id = d.doc_id
         CROSS JOIN tot t
     ),
@@ -9166,14 +9062,14 @@ _PRF_EXPN2_SQL = """
         SELECT term, df,
                cast(floor(ln((2 * (SELECT n FROM tot) + 2) / (2.0 * df + 1))
                           * 1000000 + 0.5) AS BIGINT) AS idf_micro
-        FROM __prf_df
+        FROM {prf_df}
     ),
     expcand AS (
         SELECT r.query_id, p.term, sum(p.tf * i.idf_micro) AS escore
         FROM r1 r
         JOIN {P} p ON p.doc_id = r.doc_id
         JOIN idf i ON i.term = p.term
-        LEFT JOIN __prf_qterms q ON q.query_id = r.query_id AND q.term = p.term
+        LEFT JOIN {prf_qterms} q ON q.query_id = r.query_id AND q.term = p.term
         WHERE q.term IS NULL
         GROUP BY r.query_id, p.term
     )
@@ -9191,10 +9087,10 @@ _PRF_EXPN2_SQL = """
 # term#N" during lazyOptimizedPlan) — and the staging is what the plan
 # wants anyway (the union feeds a join build side).
 _PRF_QTERMS2_SQL = """
-    SELECT query_id, term, df FROM __prf_qterms
+    SELECT query_id, term, df FROM {prf_qterms}
     UNION ALL
     SELECT e.query_id, e.term, d.df
-    FROM __prf_expn2 e JOIN __prf_df d ON d.term = e.term
+    FROM {prf_expn2} e JOIN {prf_df} d ON d.term = e.term
 """
 
 _PRF_FINAL_SQL = """
@@ -9205,7 +9101,7 @@ _PRF_FINAL_SQL = """
                  * (22 * p.tf * t.s))
                DIV (10 * t.s * p.tf + 3 * t.s + 9 * t.n * d.dl) AS c_micro
         FROM {P} p
-        JOIN __prf_qterms2 q ON p.term = q.term
+        JOIN {prf_qterms2} q ON p.term = q.term
         JOIN {D} d ON p.doc_id = d.doc_id
         CROSS JOIN tot t
     ),
@@ -9220,8 +9116,8 @@ _PRF_FINAL_SQL = """
            r.bm25_micro AS bm25_prf_micro,
            e1.term AS exp_term1, e2.term AS exp_term2
     FROM ranked2 r
-    LEFT JOIN __prf_expn2 e1 ON e1.query_id = r.query_id AND e1.erk = 1
-    LEFT JOIN __prf_expn2 e2 ON e2.query_id = r.query_id AND e2.erk = 2
+    LEFT JOIN {prf_expn2} e1 ON e1.query_id = r.query_id AND e1.erk = 1
+    LEFT JOIN {prf_expn2} e2 ON e2.query_id = r.query_id AND e2.erk = 2
     WHERE r.rk <= 5
     ORDER BY r.query_id, r.rk
 """
@@ -9242,31 +9138,17 @@ _PRF_FINAL_SQL = """
 def sim_query_expansion_prf(spark: SparkSession, sf_dir: str) -> DataFrame:
     P = _term_postings(spark, sf_dir)
     D = _doc_lengths(spark, sf_dir)
-    df = _sql_with_views(
-        spark, _PRF_DF_SQL.format(P="__prf_posting"), __prf_posting=P
-    ).localCheckpoint(eager=True)
-    qterms = _sql_with_views(spark, _PRF_QTERMS_SQL, __prf_df=df).localCheckpoint(
+    df = spark.sql(_PRF_DF_SQL, P=P).localCheckpoint(eager=True)
+    qterms = spark.sql(_PRF_QTERMS_SQL, prf_df=df).localCheckpoint(
         eager=True
     )
-    expn2 = _sql_with_views(
-        spark,
-        _PRF_EXPN2_SQL.format(P="__prf_posting", D="__prf_doclen"),
-        __prf_posting=P,
-        __prf_doclen=D,
-        __prf_df=df,
-        __prf_qterms=qterms,
+    expn2 = spark.sql(
+        _PRF_EXPN2_SQL, P=P, D=D, prf_df=df, prf_qterms=qterms
     ).localCheckpoint(eager=True)
-    qterms2 = _sql_with_views(
-        spark, _PRF_QTERMS2_SQL, __prf_qterms=qterms, __prf_expn2=expn2, __prf_df=df
+    qterms2 = spark.sql(
+        _PRF_QTERMS2_SQL, prf_qterms=qterms, prf_expn2=expn2, prf_df=df
     ).localCheckpoint(eager=True)
-    return _sql_with_views(
-        spark,
-        _PRF_FINAL_SQL.format(P="__prf_posting", D="__prf_doclen"),
-        __prf_posting=P,
-        __prf_doclen=D,
-        __prf_qterms2=qterms2,
-        __prf_expn2=expn2,
-    )
+    return spark.sql(_PRF_FINAL_SQL, P=P, D=D, prf_qterms2=qterms2, prf_expn2=expn2)
 
 
 # ---------------------------------------------------------------------------
@@ -9742,13 +9624,13 @@ def _hits_sql(div: str) -> str:
 # oracle keeps the verbatim all-SQL text.
 _HITS_RAW_SQL = """
     SELECT e.{GROUP} AS id, sum(p.v) AS v
-    FROM __edges e JOIN __prev p ON p.id = e.{JOIN}
+    FROM {{edges}} e JOIN {{prev}} p ON p.id = e.{JOIN}
     GROUP BY e.{GROUP}
 """
 
 _HITS_SCALE_SQL = """
-    SELECT n.id, (coalesce(r.v, 0) * 1000000) DIV (SELECT max(v) FROM __raw) AS v
-    FROM __nodes n LEFT JOIN __raw r ON r.id = n.id
+    SELECT n.id, (coalesce(r.v, 0) * 1000000) DIV (SELECT max(v) FROM {raw}) AS v
+    FROM {nodes} n LEFT JOIN {raw} r ON r.id = n.id
 """
 
 
@@ -9769,26 +9651,20 @@ def graph_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     N = _skewed_web_nodes(spark, sf_dir)
 
     def step(prev: DataFrame, join_col: str, group_col: str, last: bool) -> DataFrame:
-        raw = _sql_with_views(
-            spark,
-            _HITS_RAW_SQL.format(JOIN=join_col, GROUP=group_col),
-            __edges=E,
-            __prev=prev,
+        raw = spark.sql(
+            _HITS_RAW_SQL.format(JOIN=join_col, GROUP=group_col), edges=E, prev=prev
         )
         if not last:
             raw = raw.localCheckpoint(eager=True)
-        scaled = _sql_with_views(spark, _HITS_SCALE_SQL, __nodes=N, __raw=raw)
+        scaled = spark.sql(_HITS_SCALE_SQL, nodes=N, raw=raw)
         return scaled if last else scaled.localCheckpoint(eager=True)
 
-    h0 = _sql_with_views(
-        spark, "SELECT id, CAST(1000000 AS BIGINT) AS v FROM __nodes", __nodes=N
-    )
+    h0 = spark.sql("SELECT id, CAST(1000000 AS BIGINT) AS v FROM {nodes}", nodes=N)
     a1 = step(h0, "src", "dst", last=False)   # authorities from hub scores
     h1 = step(a1, "dst", "src", last=False)   # hubs from authority scores
     a2 = step(h1, "src", "dst", last=False)
     h2 = step(a2, "dst", "src", last=True)    # stays a plan: Aggregate below the window
-    return _sql_with_views(
-        spark,
+    return spark.sql(
         """
         SELECT CAST(id AS BIGINT) AS node_id,
                CAST(authority_micro AS BIGINT) AS authority_micro,
@@ -9796,12 +9672,12 @@ def graph_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
                CAST(ark AS BIGINT) AS ark
         FROM (SELECT a.id, a.v AS authority_micro, h.v AS hub_micro,
                      row_number() OVER (ORDER BY a.v DESC, a.id) AS ark
-              FROM __a a JOIN __h h ON h.id = a.id)
+              FROM {a} a JOIN {h} h ON h.id = a.id)
         WHERE ark <= 100
         ORDER BY ark
         """,
-        __a=a2,
-        __h=h2,
+        a=a2,
+        h=h2,
     )
 
 
@@ -10021,7 +9897,7 @@ _NOVELTY_OCC_SQL = """
 
 _NOVELTY_MAIN_SQL = """
     WITH per_doc AS (
-        SELECT doc_id, count(*) AS n_grams FROM __nov_occ GROUP BY doc_id
+        SELECT doc_id, count(*) AS n_grams FROM {occ} GROUP BY doc_id
     ),
     -- r13: n_novel never needed the gram-keyed join-back of the WHOLE
     -- occurrence list (the oracle's formulation) — a gram g contributes
@@ -10030,12 +9906,12 @@ _NOVELTY_MAIN_SQL = """
     -- the occurrence list once (the min rollup) instead of twice.
     novel AS (
         SELECT first_doc AS doc_id, count(*) AS n_novel
-        FROM (SELECT gram, min(doc_id) AS first_doc FROM __nov_occ GROUP BY gram)
+        FROM (SELECT gram, min(doc_id) AS first_doc FROM {occ} GROUP BY gram)
         GROUP BY first_doc
     ),
     -- decile boundary over the GRAM-BEARING corpus (docs with >= 3
     -- tokens) in BOTH engines — self-consistent with the occurrence list
-    mx AS (SELECT max(doc_id) + 1 AS m FROM __nov_occ)
+    mx AS (SELECT max(doc_id) + 1 AS m FROM {occ})
     SELECT CAST(floor(d.doc_id * 10.0 / (SELECT m FROM mx)) AS BIGINT) AS ingest_decile,
            CAST(count(*) AS BIGINT) AS n_docs,
            CAST(sum(d.n_grams) AS BIGINT) AS n_grams,
@@ -10085,8 +9961,7 @@ _NOVELTY_ORACLE ="""
 )
 def text_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     occ = catalog.sql(spark, sf_dir, _NOVELTY_OCC_SQL).localCheckpoint(eager=True)
-    occ.createOrReplaceTempView("__nov_occ")
-    return spark.sql(_NOVELTY_MAIN_SQL)
+    return spark.sql(_NOVELTY_MAIN_SQL, occ=occ)
 
 
 # ---------------------------------------------------------------------------
@@ -10290,16 +10165,13 @@ def dedup_eval_pr(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # the jaccard truth reads the session-memoized pair staging table
     # (built at most once per sf_dir); simhash predictions stage through
-    # their own builder.  Views are uuid-suffixed and dropped after
-    # analysis (r9 ADVICE: fixed names clobbered re-entrant builds).
+    # their own builder.
     s = get("dedup_simhash").build(spark, sf_dir).select("id_a", "id_b")
     j = _ngram_jaccard_pairs(spark, sf_dir).select("id_a", "id_b")
-    return _sql_with_views(
-        spark,
-        "WITH s AS (SELECT * FROM __eval_pr_s), j AS (SELECT * FROM __eval_pr_j),"
-        + _EVAL_PR_SELECT,
-        __eval_pr_s=s,
-        __eval_pr_j=j,
+    return spark.sql(
+        "WITH s AS (SELECT * FROM {s}), j AS (SELECT * FROM {j})," + _EVAL_PR_SELECT,
+        s=s,
+        j=j,
     )
 
 
@@ -10349,13 +10221,11 @@ def text_lang_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     from sensql_presto_spark.queries.registry import get
 
     pred = get("text_lang_id").build(spark, sf_dir)
-    pred.createOrReplaceTempView("__langcm_pred")
     docs = catalog.table(spark, sf_dir, "documents")
-    docs.createOrReplaceTempView("__langcm_docs")
     return spark.sql(
         """
         WITH j AS (SELECT d.lang AS true_lang, p.predicted AS pred_lang
-                   FROM __langcm_docs d JOIN __langcm_pred p ON p.doc_id = d.doc_id),
+                   FROM {docs} d JOIN {pred} p ON p.doc_id = d.doc_id),
         cm AS (SELECT true_lang, pred_lang, count(*) AS n
                FROM j GROUP BY true_lang, pred_lang),
         acc AS (SELECT sum(CASE WHEN true_lang = pred_lang THEN n ELSE 0 END) AS hit,
@@ -10363,7 +10233,9 @@ def text_lang_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
         SELECT cm.true_lang, cm.pred_lang, CAST(cm.n AS BIGINT) AS n,
                CAST((SELECT floor(hit * 10000.0 / tot) FROM acc) AS BIGINT) AS overall_accuracy_bp
         FROM cm ORDER BY true_lang, pred_lang
-        """
+        """,
+        docs=docs,
+        pred=pred,
     )
 
 

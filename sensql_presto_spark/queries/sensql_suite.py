@@ -134,8 +134,9 @@ def sensql_spatial_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     from sensql_presto_spark.functions.geospatial import register_geospatial
 
     register_geospatial(spark)
-    catalog.register_views(spark, sf_dir)
-    return spark.sql(
+    return catalog.sql(
+        spark,
+        sf_dir,
         """
         SELECT c_mktsegment, count(*) AS n
         FROM customer
@@ -192,8 +193,9 @@ def geo_st_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
     from sensql_presto_spark.functions.geospatial import register_geospatial
 
     register_geospatial(spark)
-    catalog.register_views(spark, sf_dir)
-    return spark.sql(
+    return catalog.sql(
+        spark,
+        sf_dir,
         """
         WITH g AS (
             SELECT c_custkey,
@@ -269,8 +271,9 @@ def geo_st_surface2(spark: SparkSession, sf_dir: str) -> DataFrame:
     from sensql_presto_spark.functions.geospatial import register_geospatial
 
     register_geospatial(spark)
-    catalog.register_views(spark, sf_dir)
-    return spark.sql(
+    return catalog.sql(
+        spark,
+        sf_dir,
         """
         WITH g AS (
             SELECT c_custkey,
@@ -352,8 +355,9 @@ def geo_st_accessors(spark: SparkSession, sf_dir: str) -> DataFrame:
     from sensql_presto_spark.functions.geospatial import register_geospatial
 
     register_geospatial(spark)
-    catalog.register_views(spark, sf_dir)
-    return spark.sql(
+    return catalog.sql(
+        spark,
+        sf_dir,
         """
         WITH g AS (
             SELECT c_custkey,
@@ -436,8 +440,9 @@ def geo_st_setops(spark: SparkSession, sf_dir: str) -> DataFrame:
     from sensql_presto_spark.functions.geospatial import register_geospatial
 
     register_geospatial(spark)
-    catalog.register_views(spark, sf_dir)
-    return spark.sql(
+    return catalog.sql(
+        spark,
+        sf_dir,
         """
         WITH g AS (
             SELECT c_custkey,
@@ -517,8 +522,9 @@ def geo_wkb_geojson(spark: SparkSession, sf_dir: str) -> DataFrame:
     from sensql_presto_spark.functions.geospatial import register_geospatial
 
     register_geospatial(spark)
-    catalog.register_views(spark, sf_dir)
-    return spark.sql(
+    return catalog.sql(
+        spark,
+        sf_dir,
         """
         WITH g AS (
             SELECT c_custkey,
@@ -589,8 +595,9 @@ def geo_line_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     from sensql_presto_spark.functions.geospatial import register_geospatial
 
     register_geospatial(spark)
-    catalog.register_views(spark, sf_dir)
-    return spark.sql(
+    return catalog.sql(
+        spark,
+        sf_dir,
         """
         WITH g AS (
             SELECT c_custkey,
@@ -652,8 +659,9 @@ def geo_bing_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     from sensql_presto_spark.functions.geospatial import register_geospatial
 
     register_geospatial(spark)
-    catalog.register_views(spark, sf_dir)
-    return spark.sql(
+    return catalog.sql(
+        spark,
+        sf_dir,
         """
         WITH g AS (
             SELECT c_custkey,
@@ -734,8 +742,9 @@ def geo_spherical(spark: SparkSession, sf_dir: str) -> DataFrame:
     from sensql_presto_spark.functions.geospatial import register_geospatial
 
     register_geospatial(spark)
-    catalog.register_views(spark, sf_dir)
-    return spark.sql(
+    return catalog.sql(
+        spark,
+        sf_dir,
         """
         WITH g AS (
             SELECT c_custkey,
@@ -786,8 +795,9 @@ def geo_agg_hulls(spark: SparkSession, sf_dir: str) -> DataFrame:
     from sensql_presto_spark.functions.geospatial import register_geospatial
 
     register_geospatial(spark)
-    catalog.register_views(spark, sf_dir)
-    return spark.sql(
+    return catalog.sql(
+        spark,
+        sf_dir,
         """
         WITH g AS (
             SELECT c_custkey % 5 AS grp,
@@ -890,8 +900,9 @@ def geo_st_tail(spark: SparkSession, sf_dir: str) -> DataFrame:
     from sensql_presto_spark.functions.geospatial import register_geospatial
 
     register_geospatial(spark)
-    catalog.register_views(spark, sf_dir)
-    return spark.sql(
+    return catalog.sql(
+        spark,
+        sf_dir,
         """
         WITH g AS (
             SELECT c_custkey,

@@ -193,8 +193,7 @@ SELECT TRUE AS jaccard_ok, TRUE AS digest_bounded,
     "array value, mergeable with array_union + re-slice.",
 )
 def agg_setdigest_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    catalog.register_views(spark, sf_dir)
-    return spark.sql(_SETDIGEST_SQL)
+    return catalog.sql(spark, sf_dir, _SETDIGEST_SQL)
 
 
 # --- KHyperLogLog surface (type/khyperloglog/KHyperLogLog.java:307-327,
@@ -249,8 +248,7 @@ _KHLL_SQL = """
     "as the two-level aggregation the sketch approximates.",
 )
 def agg_khll_uniqueness(spark: SparkSession, sf_dir: str) -> DataFrame:
-    catalog.register_views(spark, sf_dir)
-    return spark.sql(_KHLL_SQL)
+    return catalog.sql(spark, sf_dir, _KHLL_SQL)
 
 
 # --- Count-min sketch (Cormode & Muthukrishnan 2005) ----------------------

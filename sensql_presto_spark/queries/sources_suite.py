@@ -198,7 +198,6 @@ def source_avro_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     "write time. The oracle recomputes from the unbucketed parquet.",
 )
 def scale_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    catalog.register_views(spark, sf_dir)
     spark.sql("CREATE DATABASE IF NOT EXISTS bktq")
     for tbl, key in (("orders", "o_orderkey"), ("lineitem", "l_orderkey")):
         # snapshot-overwrite the bucketed twin for this sf_dir; a fresh
@@ -210,7 +209,7 @@ def scale_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
         shutil.rmtree(os.path.join(_DIR, "bktq.db", f"{tbl}_b"), ignore_errors=True)
         (
-            spark.table(tbl)
+            catalog.table(spark, sf_dir, tbl)
             .write.format("parquet")
             .bucketBy(8, key)
             .sortBy(key)
@@ -368,21 +367,22 @@ def source_jdbc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     "the oracle recomputes from the unpartitioned parquet.",
 )
 def scale_dpp_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    catalog.register_views(spark, sf_dir)
     spark.sql("CREATE DATABASE IF NOT EXISTS dppq")
     spark.sql("DROP TABLE IF EXISTS dppq.lineitem_p")
     import shutil
 
     shutil.rmtree(os.path.join(_DIR, "dppq.db", "lineitem_p"), ignore_errors=True)
     (
-        spark.table("lineitem")
+        catalog.table(spark, sf_dir, "lineitem")
         .withColumn("ship_year", F.year("l_shipdate").cast("long"))
         .write.format("parquet")
         .partitionBy("ship_year")
         .mode("overwrite")
         .saveAsTable("dppq.lineitem_p")
     )
-    return spark.sql(
+    return catalog.sql(
+        spark,
+        sf_dir,
         """
         SELECT l.l_returnflag, count(*) AS n,
                CAST(sum(cast(floor(l.l_extendedprice * 100 + 0.5) AS BIGINT)) AS BIGINT) AS sum_price_c
@@ -531,8 +531,9 @@ def scale_distributed_sort(spark: SparkSession, sf_dir: str) -> DataFrame:
     parallel in-partition sorts; at 100 TB the same plan holds with more
     shards (and AQE splits skewed ones).
     """
-    catalog.register_views(spark, sf_dir)
-    return spark.sql(
+    return catalog.sql(
+        spark,
+        sf_dir,
         """
         WITH mx AS (SELECT max(l_orderkey) + 1 AS m FROM lineitem),
         sharded AS (

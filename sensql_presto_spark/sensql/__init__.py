@@ -14,12 +14,13 @@ the Spark-first equivalent (SURVEY.md §7.4):
 - rewrite          → ``rewrite.py``, a faithful mirror of
                      ``SenSQLModule.java`` processWhere/checkCond.
 - fan-out          → ``DataFrame.unionAll`` over per-node sources,
-                     registered as a temp view under the measurement
-                     table's name; the residual query runs via
-                     ``spark.sql`` and Catalyst pushes the residual
-                     predicates into every branch's scan.
+                     scoped to the one statement like the reference's
+                     ``WITH <table> AS (… UNION ALL …)``: the residual
+                     query reads it as ``{fanout} AS <table>`` through
+                     ``spark.sql``'s DataFrame slots, and Catalyst pushes
+                     the residual predicates into every branch's scan.
 
-At 100 TB the fan-out view is N parquet scans unioned — each branch keeps
+At 100 TB the fan-out is N parquet scans unioned — each branch keeps
 its own partitioning and pushdown; the metadata plane stays kilobytes.
 """
 
@@ -31,6 +32,7 @@ from functools import reduce
 import duckdb
 from pyspark.sql import DataFrame, SparkSession
 
+from sensql_presto_spark.catalog import escape_braces
 from sensql_presto_spark.sensql import geometry, rewrite
 
 
@@ -109,14 +111,14 @@ class FederatedEngine:
         if not node_ids:
             raise ValueError(f"no nodes match metadata predicates; forward query: {forward}")
 
-        # 2. UNION ALL fan-out over per-node catalogs
-        self.fanout(node_ids).createOrReplaceTempView(measurement_table)
-
-        # 3. residual query (metadata predicates consumed)
+        # 2. residual query (metadata predicates consumed) over the UNION
+        #    ALL fan-out, which only this statement sees under the
+        #    measurement table's name; the user's text keeps its braces
         residual_where = rewrite.build_residual_where(parts.where_text)
-        sql = f"{parts.head} FROM {measurement_table}"
+        q = escape_braces
+        sql = f"{q(parts.head)} FROM {{fanout}} AS {q(measurement_table)}"
         if residual_where:
-            sql += f" WHERE {residual_where}"
+            sql += f" WHERE {q(residual_where)}"
         if parts.tail:
-            sql += f" {parts.tail}"
-        return self.spark.sql(sql)
+            sql += f" {q(parts.tail)}"
+        return self.spark.sql(sql, fanout=self.fanout(node_ids))

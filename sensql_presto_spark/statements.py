@@ -1357,7 +1357,8 @@ class StatementSession:
         t = self._txn_stage(self._writable_table(table, "DELETE"))
         df = self.spark.table(t)
         total = df.count()
-        keep = df.filter(f"NOT ({cond})") if cond else df.limit(0)
+        # a row where the predicate is NULL is not deleted (WHERE semantics)
+        keep = df.filter(f"NOT coalesce(({cond}), false)") if cond else df.limit(0)
         keep = keep.localCheckpoint(eager=True)
         deleted = total - keep.count()
         self._replace_table(t, keep)
@@ -1411,17 +1412,20 @@ class StatementSession:
         sa = salias or "s"
         tdf = self.spark.table(t).withColumn("__tid", F.monotonically_increasing_id())
         tdf = tdf.localCheckpoint(eager=True)  # pin ids for the guard
-        tdf.createOrReplaceTempView("__merge_t")
         src_sql = source if source.strip().startswith("(") else f"(SELECT * FROM {source})"
-        self.spark.sql(
-            f"SELECT *, true AS __m FROM {src_sql} {sa}"
-        ).createOrReplaceTempView("__merge_s")
+        sdf = self.spark.sql(f"SELECT *, true AS __m FROM {src_sql} {sa}")
         fields = [f for f in self.spark.table(t).schema.fields]
+        # each statement below reads the target and source through {mt}
+        # and {ms} slots; the user's text goes in with its braces doubled
+        q = catalog.escape_braces
+        on = q(on)
         # reference contract: one target row must match at most one source row
         # (MergeOperator raises MULTIPLE_TARGET_MATCHES)
         multi = self.spark.sql(
-            f"SELECT {ta}.__tid FROM __merge_t {ta} JOIN __merge_s {sa} ON {on} "
-            f"GROUP BY {ta}.__tid HAVING count(*) > 1"
+            f"SELECT {ta}.__tid FROM {{mt}} {ta} JOIN {{ms}} {sa} ON {on} "
+            f"GROUP BY {ta}.__tid HAVING count(*) > 1",
+            mt=tdf,
+            ms=sdf,
         ).limit(1).collect()
         if multi:
             raise ValueError(
@@ -1441,14 +1445,18 @@ class StatementSession:
             else:
                 proj.append(f"{ta}.`{f.name}` AS `{f.name}`")
         merged = self.spark.sql(
-            f"SELECT {', '.join(proj)} FROM __merge_t {ta} "
-            f"LEFT JOIN __merge_s {sa} ON {on}"
+            f"SELECT {q(', '.join(proj))} FROM {{mt}} {ta} "
+            f"LEFT JOIN {{ms}} {sa} ON {on}",
+            mt=tdf,
+            ms=sdf,
         )
         # update count = matched (updated) + inserted rows, the reference's
         # MERGE update-count semantics
         n_touched = (
             self.spark.sql(
-                f"SELECT count(*) AS c FROM __merge_t {ta} JOIN __merge_s {sa} ON {on}"
+                f"SELECT count(*) AS c FROM {{mt}} {ta} JOIN {{ms}} {sa} ON {on}",
+                mt=tdf,
+                ms=sdf,
             )
             .collect()[0]
             .c
@@ -1471,8 +1479,10 @@ class StatementSession:
                         f"CAST(NULL AS {f.dataType.simpleString()}) AS `{f.name}`"
                     )
             inserts = self.spark.sql(
-                f"SELECT {', '.join(ins_proj)} FROM __merge_s {sa} WHERE NOT EXISTS "
-                f"(SELECT 1 FROM __merge_t {ta} WHERE {on})"
+                f"SELECT {q(', '.join(ins_proj))} FROM {{ms}} {sa} WHERE NOT EXISTS "
+                f"(SELECT 1 FROM {{mt}} {ta} WHERE {on})",
+                mt=tdf,
+                ms=sdf,
             )
             n_touched += inserts.count()
             merged = merged.unionByName(inserts)

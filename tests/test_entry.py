@@ -4,10 +4,14 @@ from __future__ import annotations
 
 import importlib.util
 import sys
+from pathlib import Path
+
+
+_ENTRY = Path(__file__).resolve().parents[1] / "__spark_entry__.py"
 
 
 def _load_entry():
-    spec = importlib.util.spec_from_file_location("__spark_entry__", "/root/repo/__spark_entry__.py")
+    spec = importlib.util.spec_from_file_location("__spark_entry__", _ENTRY)
     mod = importlib.util.module_from_spec(spec)
     sys.modules["__spark_entry__"] = mod
     spec.loader.exec_module(mod)

@@ -1992,12 +1992,11 @@ def test_spacesaving_cross_partition_merge_under_eviction():
 
 
 def test_stage_memo_is_keyed_per_session(spark):
-    """The staging memo must be keyed on the SparkSession OBJECT (r10
-    ADVICE, medium): forked sessions (spark.newSession(), one per
-    server.py client) share an applicationId but have per-session
-    temp-view catalogs, so handing session B a DataFrame memoized in
-    session A breaks _sql_with_views' view registration. Same session +
-    tag + sf_dir must hit the memo; a forked session must rebuild."""
+    """The staging memo is keyed on the SparkSession OBJECT: forked
+    sessions (spark.newSession(), one per server.py client) share an
+    applicationId but each has its own temp-view catalog, and a staged
+    DataFrame belongs to the session that built it. Same session + tag +
+    sf_dir must hit the memo; a forked session must rebuild."""
     from sensql_presto_spark.queries import pipeline as pl
 
     calls: list = []
@@ -2026,20 +2025,14 @@ def test_stage_memo_is_keyed_per_session(spark):
     pl._STAGE_MEMO.get(spark, {}).pop(("t_memo_pin", "sfX"), None)
 
 
-def test_sql_with_views_whole_token_substitution(spark):
-    """_sql_with_views substitutes placeholders as whole tokens only
-    (r10 ADVICE, low): an identifier that merely CONTAINS a placeholder
-    (__po inside __po_literal) must survive, and a placeholder that
-    never occurs as a token raises instead of silently no-opping."""
-    from sensql_presto_spark.queries import pipeline as pl
-
+def test_sql_slots_name_dataframes_for_one_statement(spark):
+    """Builders hand staged DataFrames to SQL through spark.sql's {name}
+    slots: an identifier or literal that merely contains the slot name is
+    left alone, and no temp view outlives the statement."""
     df = spark.range(3).toDF("x")
-    out = pl._sql_with_views(
-        spark,
-        "SELECT count(*) AS n, first('__po_literal') AS s FROM __po",
-        __po=df,
+    before = {t.name for t in spark.catalog.listTables() if t.isTemporary}
+    out = spark.sql(
+        "SELECT count(*) AS n, first('po_literal') AS s FROM {po} AS po_alias", po=df
     ).collect()[0]
-    assert out.n == 3 and out.s == "__po_literal"
-
-    with pytest.raises(ValueError, match="whole.*token|does not occur"):
-        pl._sql_with_views(spark, "SELECT 1 AS one", __po=df)
+    assert out.n == 3 and out.s == "po_literal"
+    assert {t.name for t in spark.catalog.listTables() if t.isTemporary} == before

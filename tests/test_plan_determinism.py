@@ -55,9 +55,9 @@ def _canon_plan(spark, name: str) -> str:
     text = re.sub(r"RDD \d+", "RDD N", text)
     text = re.sub(r"/tmp/\S+", "/tmp/T", text)
     text = re.sub(r"spark-warehouse/\S+", "WAREHOUSE", text)
-    # r10: staging views are uuid-suffixed per build (re-entrancy fix),
-    # another run-scoped identity to canonicalize
-    text = re.sub(r"__(\w+?)_[0-9a-f]{32}", r"__\1_UUID", text)
+    # spark.sql's {name} slots name each DataFrame _pyspark_<uuid> for
+    # one statement, another run-scoped identity to canonicalize
+    text = re.sub(r"_pyspark_[0-9a-f]{32}", "_pyspark_UUID", text)
     # Spark truncates long field lists at a fixed CHARACTER budget, so
     # the cut point shifts with expression-id digit counts (run-scoped);
     # the filter semantics are already covered by the un-truncated

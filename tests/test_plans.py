@@ -420,14 +420,10 @@ def test_label_propagation_rounds_never_rescan_source(spark):
     from sensql_presto_spark.queries import pipeline
 
     sym = pipeline._block_web_edges(spark, SF)
-    nodes = pipeline._sql_with_views(
-        spark, "SELECT DISTINCT src AS id FROM __lp_sym", __lp_sym=sym
-    )
-    l0 = pipeline._sql_with_views(
-        spark, "SELECT id, id AS lbl FROM __lp_nodes", __lp_nodes=nodes
-    )
-    round_df = pipeline._sql_with_views(
-        spark, pipeline._LP_ROUND_SQL, __lp_sym=sym, __lp_prev=l0, __lp_nodes=nodes
+    nodes = spark.sql("SELECT DISTINCT src AS id FROM {lp_sym}", lp_sym=sym)
+    l0 = spark.sql("SELECT id, id AS lbl FROM {lp_nodes}", lp_nodes=nodes)
+    round_df = spark.sql(
+        pipeline._LP_ROUND_SQL, lp_sym=sym, lp_prev=l0, lp_nodes=nodes
     )
     import io
     from contextlib import redirect_stdout

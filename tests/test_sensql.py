@@ -100,3 +100,21 @@ def test_unresolvable_metadata_raises(spark):
               AND shape.id = feature.shape AND feature.name = 'nowhere'
             """
         )
+
+
+def test_brace_literals_survive_the_statement_scoped_fanout(spark):
+    """The residual query names the fan-out through a {name} slot; brace
+    literals in the user's head, residual WHERE and tail stay literals,
+    '{fanout}' included."""
+    engine = build_engine(spark, "/root/testdata/sf0.001")
+    rows = engine.sql(
+        """
+        SELECT '{tag}' AS tag, count(*) AS n FROM measurements, feature, shape
+        WHERE st_intersects(shape.geometries, nodes.service_region)
+          AND shape.id = feature.shape AND feature.name = 'downtown'
+          AND concat('{', measurements.sensor, '}') <> '{fanout}'
+        GROUP BY 1 HAVING min('{}') = '{}'
+        """
+    ).collect()
+    expected = engine.fanout(["node_a", "node_b"]).where("sensor IS NOT NULL").count()
+    assert [(r.tag, r.n) for r in rows] == [("{tag}", expected)]

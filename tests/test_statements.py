@@ -851,6 +851,45 @@ def test_sql_merge_update_insert(spark):
     spark.sql(f"DROP TABLE {t}")
 
 
+def test_sql_delete_keeps_rows_where_the_predicate_is_null(spark):
+    """DELETE ... WHERE p deletes the rows where p is TRUE; a row where p
+    is NULL stays (WHERE semantics, as in WritableTable.delete)."""
+    sess = _sess(spark)
+    t = _fresh_dml_table(spark, sess, "t_dml_delete_null")
+    spark.sql(f"DROP TABLE {t}")
+    sess.execute(
+        f"CREATE TABLE {t} AS SELECT * FROM VALUES (1, 10), (2, NULL), (3, 1) AS v(id, x)"
+    )
+    assert sess.execute(f"DELETE FROM {t} WHERE x > 5").collect()[0].rows == 1
+    assert [r.id for r in sess.execute(f"SELECT id FROM {t} ORDER BY id").collect()] == [2, 3]
+    spark.sql(f"DROP TABLE {t}")
+
+
+def test_sql_merge_keeps_brace_literals(spark):
+    """MERGE's clauses reach SQL next to its {name} relation slots; a brace
+    literal in ON, SET or VALUES is still a literal."""
+    sess = _sess(spark)
+    t = _fresh_dml_table(spark, sess)
+    sess.execute(f"DELETE FROM {t} WHERE n_nationkey >= 24")
+    r = sess.execute(
+        f"MERGE INTO {t} t USING (SELECT n_nationkey, '{{s}}' AS tag FROM nation "
+        "WHERE n_nationkey >= 22) s "
+        "ON t.n_nationkey = s.n_nationkey AND s.tag <> '{mt}' "
+        "WHEN MATCHED THEN UPDATE SET n_name = concat('{', s.tag, '}') "
+        "WHEN NOT MATCHED THEN INSERT (n_nationkey, n_name) VALUES (s.n_nationkey, '{ms}')"
+    ).collect()
+    assert r[0].rows == 3  # 2 matched + 1 inserted
+    rows = sess.execute(
+        f"SELECT n_nationkey, n_name FROM {t} WHERE n_nationkey >= 22 ORDER BY 1"
+    ).collect()
+    assert [(x.n_nationkey, x.n_name) for x in rows] == [
+        (22, "{{s}}"),
+        (23, "{{s}}"),
+        (24, "{ms}"),
+    ]
+    spark.sql(f"DROP TABLE {t}")
+
+
 def test_sql_dml_rejects_immutable_base_tables(spark):
     sess = _sess(spark)
     for stmt in [
