@@ -12,11 +12,14 @@ with a stale schema. The reference statically types every query
 
 from __future__ import annotations
 
+import functools
 import os
 import weakref
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import LongType, StructType, TimestampNTZType, TimestampType
 
 TABLES: tuple[str, ...] = (
@@ -166,14 +169,41 @@ def _register_information_schema(spark: SparkSession, sf_dir: str) -> None:
                     "YES" if f.nullable else "NO",
                 )
             )
-    spark.createDataFrame(
-        tab_rows, "table_catalog string, table_schema string, table_name string, table_type string"
+    local_frame(
+        spark,
+        tab_rows,
+        "table_catalog string, table_schema string, table_name string, table_type string",
     ).createOrReplaceTempView("information_schema_tables")
-    spark.createDataFrame(
+    local_frame(
+        spark,
         col_rows,
         "table_catalog string, table_schema string, table_name string, column_name string, "
         "ordinal_position int, data_type string, is_nullable string",
     ).createOrReplaceTempView("information_schema_columns")
+
+
+@functools.lru_cache(maxsize=None)
+def _ddl_schema(ddl: str) -> StructType:
+    """``ddl`` parsed once per string: parsing is a JVM round trip of about
+    5 ms, and the engine's DDL strings are a fixed set of literals."""
+    return StructType.fromDDL(ddl)
+
+
+def local_frame(spark: SparkSession, rows: list[tuple], ddl: str) -> DataFrame:
+    """Rows the engine makes itself (statement acks, SHOW/DESCRIBE/EXPLAIN
+    output, information_schema) as a DataFrame of schema ``ddl``.
+
+    The rows go to the JVM as one Arrow table typed by ``ddl``, so the
+    result is a ``LocalRelation``: collecting it starts no Spark job and no
+    Python worker, whatever the session's Arrow conf. ``createDataFrame``
+    over a Python list would be an RDD that a Python worker unpickles.
+    """
+    # a copy: the DataFrame hands it out as df.schema
+    struct = StructType.fromJson(_ddl_schema(ddl).jsonValue())
+    arrow = to_arrow_schema(struct)
+    columns = list(zip(*rows)) or [()] * len(arrow)
+    table = pa.table([pa.array(c, type=f.type) for c, f in zip(columns, arrow)], schema=arrow)
+    return spark.createDataFrame(table, struct)
 
 
 def sql(

@@ -49,12 +49,24 @@ def prepare_session(spark, sf_dir: str) -> None:
     """Install the full engine surface on a session: the catalog views plus
     every function family in ``functions.register_all`` (Presto-name compat,
     Python UDFs, color, IP, sketches, geospatial), each name registered once
-    — what the reference coordinator exposes with every plugin loaded."""
+    — what the reference coordinator exposes with every plugin loaded.
+
+    The views register on a second thread while the function families
+    install (themselves side by side, see ``register_all``): neither reads
+    what the other writes. Leaving the pool waits for the views, so an
+    exception from either re-raises here once both have ended. The
+    ``information_schema`` relations are ``LocalRelation``s
+    (``catalog.local_frame``), like every row the statement layer makes
+    itself, so building them starts no Python worker."""
+    from concurrent.futures import ThreadPoolExecutor
+
     from sensql_presto_spark import catalog
     from sensql_presto_spark.functions import register_all
 
-    catalog.register_views(spark, sf_dir)
-    register_all(spark)
+    with ThreadPoolExecutor(max_workers=1) as pool:
+        views = pool.submit(catalog.register_views, spark, sf_dir)
+        register_all(spark)
+    views.result()
 
 
 def run_statement(

@@ -14,6 +14,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from sensql_presto_spark import catalog
+
 
 def explain_analyze(spark: SparkSession, df: DataFrame) -> DataFrame:
     """Execute `df` and return (operator_id, operator, metric, value) rows."""
@@ -48,8 +50,8 @@ def explain_analyze(spark: SparkSession, df: DataFrame) -> DataFrame:
         return max(idx, my_idx)
 
     walk(plan)
-    return spark.createDataFrame(
-        rows, "operator_id INT, operator STRING, metric STRING, value BIGINT"
+    return catalog.local_frame(
+        spark, rows, "operator_id INT, operator STRING, metric STRING, value BIGINT"
     )
 
 
@@ -85,8 +87,8 @@ def explain_io(spark: SparkSession, df: DataFrame) -> DataFrame:
             walk(it.next())
 
     walk(plan)
-    return spark.createDataFrame(
-        rows, "table STRING, read_schema STRING, pushed_filters STRING, location STRING"
+    return catalog.local_frame(
+        spark, rows, "table STRING, read_schema STRING, pushed_filters STRING, location STRING"
     )
 
 
@@ -136,7 +138,8 @@ def explain_distributed(spark: SparkSession, df: DataFrame) -> DataFrame:
         return seq
 
     walk(plan, 0, None, 0)
-    return spark.createDataFrame(
+    return catalog.local_frame(
+        spark,
         rows,
         "fragment INT, parent_fragment INT, op_seq INT, operator STRING, partitioning STRING",
     )

@@ -15,6 +15,8 @@
 
 from __future__ import annotations
 
+from concurrent.futures import ThreadPoolExecutor
+
 from pyspark.sql import SparkSession
 
 from sensql_presto_spark.functions.datetime_fmt import (
@@ -45,19 +47,39 @@ __all__ = [
 
 def register_all(spark: SparkSession) -> None:
     """Install the full compat surface on a session (idempotent), each
-    family once, so each function name is registered once."""
+    family once, so each function name is registered once.
+
+    The families share no registration, so they install side by side, one
+    thread per group below; a group keeps its own order (``st_disjoint``'s
+    body calls ``st_intersects``, so geospatial stays one sequence). Most
+    of a group's time is JVM work behind py4j calls, during which its
+    thread does not hold the GIL, so the groups overlap. A group's
+    exception re-raises here after every group has ended."""
     from sensql_presto_spark.functions.color import register_color_functions
     from sensql_presto_spark.functions.geospatial import register_geospatial
     from sensql_presto_spark.functions.ip import register_ip_functions
     from sensql_presto_spark.functions.sketches import register_sketch_functions
 
-    register_sql_functions(spark)
-    register_python_udfs(spark)
-    register_color_functions(spark)
-    register_ip_functions(spark)
-    register_sketch_functions(spark)
-    register_geospatial(spark)
-    _register_builtin_aliases(spark)
+    groups = (
+        (register_sql_functions,),
+        (register_geospatial,),
+        (
+            register_python_udfs,
+            register_color_functions,
+            register_ip_functions,
+            register_sketch_functions,
+            _register_builtin_aliases,
+        ),
+    )
+
+    def install(group) -> None:
+        for register in group:
+            register(spark)
+
+    with ThreadPoolExecutor(max_workers=len(groups)) as pool:
+        futures = [pool.submit(install, group) for group in groups]
+    for future in futures:
+        future.result()
 
 
 def _register_builtin_aliases(spark: SparkSession) -> None:

@@ -21,10 +21,18 @@ Execution is Spark-native, on a worker thread per query so the HTTP loop
 never blocks on a Spark job.  ``cli.prepare_session`` installs the engine
 surface once, on a private template session, and each client's session is
 a clone of it — the reference's one function manager per coordinator with
-a lightweight ``Session`` per client.  Result paging slices the *collected*
-driver-side rows — the reference's protocol also pages from coordinator
-memory after the root fragment drains (``TaskOutputOperator`` →
-coordinator buffer), so this matches the protocol's memory model; queries
+a lightweight ``Session`` per client.  The template is prepared
+concurrently: the catalog views register beside the function families,
+which install side by side themselves.  Rows the engine makes itself
+(statement acks such as PREPARE's, SHOW/DESCRIBE/EXPLAIN output,
+``information_schema``) are Arrow ``LocalRelation``s
+(``catalog.local_frame``), so answering them starts no Spark job and no
+Python worker; a client's first statement pays for neither.
+
+Result paging slices the *collected* driver-side rows — the reference's
+protocol also pages from coordinator memory after the root fragment
+drains (``TaskOutputOperator`` → coordinator buffer), so this matches the
+protocol's memory model; queries
 whose full result would not fit a driver belong behind INSERT/CTAS,
 exactly as in the reference.
 

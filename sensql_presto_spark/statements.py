@@ -396,7 +396,8 @@ def show_stats(spark: SparkSession, sf_dir: str, target: str) -> DataFrame:
             )
         )
     rows.append((None, None, None, None, float(rc), None, None))
-    return spark.createDataFrame(
+    return catalog.local_frame(
+        spark,
         rows,
         "column_name string, data_size double, distinct_values_count double, "
         "nulls_fraction double, row_count double, low_value string, high_value string",
@@ -611,6 +612,10 @@ class StatementSession:
                     seen.add(v)
                     frontier.append(self.views.get(v, ""))
 
+    def _ack(self, statement: str) -> DataFrame:
+        """The one-row ``result`` relation of a statement that returns no rows."""
+        return catalog.local_frame(self.spark, [(statement,)], "result string")
+
     def _missing_prepared(self, name: str) -> None:
         if self.session_expired:
             # protocol contract: the server expired (LRU-evicted) this
@@ -680,14 +685,14 @@ class StatementSession:
         m = _PREPARE_RE.match(text)
         if m:
             self.prepared[m.group(1).lower()] = m.group(2).strip()
-            return self.spark.createDataFrame([("PREPARE",)], "result string")
+            return self._ack("PREPARE")
         m = _DEALLOC_RE.match(text)
         if m:
             name = m.group(1).lower()
             if name not in self.prepared:
                 self._missing_prepared(name)
             del self.prepared[name]
-            return self.spark.createDataFrame([("DEALLOCATE",)], "result string")
+            return self._ack("DEALLOCATE")
         m = _EXECUTE_RE.match(text)
         if m:
             name = m.group(1).lower()
@@ -759,7 +764,7 @@ class StatementSession:
             # plan, one line per operator.
             qe = catalog.sql(self.spark, self.sf_dir, m.group(1))._jdf.queryExecution()
             lines = [(ln,) for ln in str(qe.optimizedPlan()).rstrip("\n").split("\n")]
-            return self.spark.createDataFrame(lines, "query_plan STRING")
+            return catalog.local_frame(self.spark, lines, "query_plan STRING")
         m = _EXPLAIN_VALIDATE_RE.match(text)
         if m:
             # Analyze without executing (the VALIDATE explain type): building
@@ -767,7 +772,7 @@ class StatementSession:
             # error surfaces here, and no job is submitted.
             self._check_table_access(m.group(1))
             catalog.sql(self.spark, self.sf_dir, m.group(1)).schema
-            return self.spark.createDataFrame([(True,)], "valid boolean")
+            return catalog.local_frame(self.spark, [(True,)], "valid boolean")
         m = _SET_SESSION_RE.match(text)
         if m:
             return self._set_session(m.group(1).lower(), _strip_quotes(m.group(2)))
@@ -785,17 +790,17 @@ class StatementSession:
             # may not use a matview to read tables they were never granted.
             self._check_table_access(m.group(3))
             self.matviews.create(m.group(2), m.group(3).strip(), replace=bool(m.group(1)))
-            return self.spark.createDataFrame([("CREATE MATERIALIZED VIEW",)], "result string")
+            return self._ack("CREATE MATERIALIZED VIEW")
         m = _REFRESH_MV_RE.match(text)
         if m:
             # optional WHERE = the reference's partition-scoped refresh
             # (SqlBase.g4 refreshMaterializedView production)
             self.matviews.refresh(m.group(1), m.group(2))
-            return self.spark.createDataFrame([("REFRESH MATERIALIZED VIEW",)], "result string")
+            return self._ack("REFRESH MATERIALIZED VIEW")
         m = _DROP_MV_RE.match(text)
         if m:
             self.matviews.drop(m.group(1))
-            return self.spark.createDataFrame([("DROP MATERIALIZED VIEW",)], "result string")
+            return self._ack("DROP MATERIALIZED VIEW")
         m = _CREATE_VIEW_RE.match(text)
         if m:
             name, body = m.group(2), m.group(4).strip()
@@ -815,24 +820,24 @@ class StatementSession:
             self.spark.sql(f"CREATE OR REPLACE TEMPORARY VIEW {name} AS {body}")
             self.views[name] = body
             self.view_security[name] = security
-            return self.spark.createDataFrame([("CREATE VIEW",)], "result string")
+            return self._ack("CREATE VIEW")
         m = _DROP_VIEW_RE.match(text)
         if m:
             name = m.group(2)
             if name not in self.views:
                 if m.group(1):
-                    return self.spark.createDataFrame([("DROP VIEW",)], "result string")
+                    return self._ack("DROP VIEW")
                 raise ValueError(f"View not found: {name}")
             del self.views[name]
             self.spark.catalog.dropTempView(name)
-            return self.spark.createDataFrame([("DROP VIEW",)], "result string")
+            return self._ack("DROP VIEW")
         m = _SHOW_CREATE_VIEW_RE.match(text)
         if m:
             name = m.group(1)
             if name not in self.views:
                 raise ValueError(f"View not found: {name}")
             ddl = f"CREATE VIEW {name} AS\n{self.views[name]}"
-            return self.spark.createDataFrame([(ddl,)], "`Create View` string")
+            return catalog.local_frame(self.spark, [(ddl,)], "`Create View` string")
         m = _CREATE_FN_RE.match(text)
         if m:
             return self._create_function(
@@ -848,13 +853,13 @@ class StatementSession:
             self.spark.sql(
                 f"DROP TEMPORARY FUNCTION {'IF EXISTS ' if m.group(1) else ''}{name}"
             )
-            return self.spark.createDataFrame([("DROP FUNCTION",)], "result string")
+            return self._ack("DROP FUNCTION")
         m = _SHOW_FNS_RE.match(text)
         if m:
             like = f" LIKE {m.group(1)}" if m.group(1) else ""
             return self.spark.sql(f"SHOW USER FUNCTIONS{like}")
         if _SHOW_CATALOGS_RE.match(text):
-            return self.spark.createDataFrame([("spark",)], "Catalog string")
+            return catalog.local_frame(self.spark, [("spark",)], "Catalog string")
         m = _ALTER_TABLE_RE.match(text)
         if m:
             target = m.group(1).lower()
@@ -876,16 +881,16 @@ class StatementSession:
             if schema not in ("default", "information_schema"):
                 raise ValueError(f"Schema does not exist: {schema}")
             self.schema = schema
-            return self.spark.createDataFrame([("USE",)], "result string")
+            return self._ack("USE")
         if _SHOW_SCHEMAS_RE.match(text):
             # default + information_schema plus any CREATE SCHEMA results
             # (CREATE/DROP SCHEMA pass through to Spark's catalog)
             names = {"default", "information_schema"} | {
                 db.name for db in self.spark.catalog.listDatabases()
             }
-            return self.spark.createDataFrame(
-                [(n,) for n in names], "Schema string"
-            ).orderBy("Schema")
+            return catalog.local_frame(
+                self.spark, [(n,) for n in sorted(names)], "Schema string"
+            )
         m = _SHOW_TABLES_RE.match(text)
         if m:
             # honor the USE target: information_schema lists its metadata
@@ -899,7 +904,7 @@ class StatementSession:
 
                 pat = m.group(1).replace("%", "*").replace("_", "?")
                 names = [n for n in names if fnmatch.fnmatch(n, pat)]
-            return self.spark.createDataFrame([(n,) for n in names], "Table string")
+            return catalog.local_frame(self.spark, [(n,) for n in names], "Table string")
         m = _SHOW_COLUMNS_RE.match(text)
         if m:
             return self._show_columns(m.group(1))
@@ -909,14 +914,16 @@ class StatementSession:
             if not self.matviews.exists(name):
                 raise ValueError(f"Materialized view not found: {name}")
             ddl = f"CREATE MATERIALIZED VIEW {name} AS\n{self.matviews.definition(name)}"
-            return self.spark.createDataFrame([(ddl,)], "`Create Materialized View` string")
+            return catalog.local_frame(
+                self.spark, [(ddl,)], "`Create Materialized View` string"
+            )
         m = _SHOW_CREATE_FN_RE.match(text)
         if m:
             name = m.group(1).split(".")[-1].lower()
             if name not in self.functions:
                 raise ValueError(f"Function not found: {name}")
-            return self.spark.createDataFrame(
-                [(self.functions[name],)], "`Create Function` string"
+            return catalog.local_frame(
+                self.spark, [(self.functions[name],)], "`Create Function` string"
             )
         m = _SHOW_CREATE_TABLE_RE.match(text)
         if m:
@@ -933,7 +940,7 @@ class StatementSession:
                 f"RETURNS {base} RETURN v"
             )
             self.types[bare] = [f"DISTINCT OF {m.group(2).strip()}"]
-            return self.spark.createDataFrame([("CREATE TYPE",)], "result string")
+            return self._ack("CREATE TYPE")
         m = _DROP_TYPE_RE.match(text)
         if m:
             name = m.group(1).split(".")[-1]
@@ -945,7 +952,7 @@ class StatementSession:
             # leaving it behind would serve the old type's keys after a
             # re-CREATE with different members
             self.spark.sql(f"DROP TEMPORARY FUNCTION IF EXISTS {name}_enum_key")
-            return self.spark.createDataFrame([("DROP TYPE",)], "result string")
+            return self._ack("DROP TYPE")
         m = _START_TXN_RE.match(text)
         if m:
             return self._start_transaction()
@@ -965,11 +972,11 @@ class StatementSession:
         m = _CREATE_ROLE_RE.match(text)
         if m:
             self.access.create_role(m.group(1), self.user, self.enforce_access)
-            return self.spark.createDataFrame([("CREATE ROLE",)], "result string")
+            return self._ack("CREATE ROLE")
         m = _DROP_ROLE_RE.match(text)
         if m:
             self.access.drop_role(m.group(1), self.user, self.enforce_access)
-            return self.spark.createDataFrame([("DROP ROLE",)], "result string")
+            return self._ack("DROP ROLE")
         m = _GRANT_RE.match(text)
         if m:
             privs = [p for p in m.group(1).split(",")]
@@ -977,7 +984,7 @@ class StatementSession:
                 privs, m.group(2), m.group(3) or "USER", m.group(4),
                 self.user, self.enforce_access, grant_option=bool(m.group(5)),
             )
-            return self.spark.createDataFrame([("GRANT",)], "result string")
+            return self._ack("GRANT")
         m = _REVOKE_RE.match(text)
         if m:
             privs = [p for p in m.group(2).split(",")]
@@ -985,19 +992,19 @@ class StatementSession:
                 privs, m.group(3), m.group(4) or "USER", m.group(5),
                 self.user, self.enforce_access, grant_option_for=bool(m.group(1)),
             )
-            return self.spark.createDataFrame([("REVOKE",)], "result string")
+            return self._ack("REVOKE")
         m = _GRANT_ROLE_RE.match(text)
         if m:
             self.access.grant_role(
                 m.group(1), m.group(2) or "USER", m.group(3), self.user, self.enforce_access
             )
-            return self.spark.createDataFrame([("GRANT ROLE",)], "result string")
+            return self._ack("GRANT ROLE")
         m = _REVOKE_ROLE_RE.match(text)
         if m:
             self.access.revoke_role(
                 m.group(1), m.group(2) or "USER", m.group(3), self.user, self.enforce_access
             )
-            return self.spark.createDataFrame([("REVOKE ROLE",)], "result string")
+            return self._ack("REVOKE ROLE")
         m = _SET_ROLE_RE.match(text)
         if m:
             role = m.group(1).lower()
@@ -1009,21 +1016,15 @@ class StatementSession:
                 if role not in self.access.roles_of(self.user):
                     raise ValueError(f"Role '{role}' has not been granted to {self.user}")
                 self._enabled_roles = {role}
-            return self.spark.createDataFrame([("SET ROLE",)], "result string")
+            return self._ack("SET ROLE")
         if _SHOW_ROLE_GRANTS_RE.match(text):
             # roles granted to the session user, including transitively via
             # role-to-role grants (reference showRoleGrants production)
             rows = [(r,) for r in sorted(self.access.roles_of(self.user)) if r != "public"]
-            return (
-                self.spark.createDataFrame(rows, "role string")
-                if rows
-                else self.spark.createDataFrame([], "role string")
-            )
+            return catalog.local_frame(self.spark, rows, "role string")
         if _SHOW_ROLES_RE.match(text):
-            rows = [(r,) for r in self.access.roles()] or []
-            return self.spark.createDataFrame(rows, "role string") if rows else (
-                self.spark.createDataFrame([], "role string")
-            )
+            rows = [(r,) for r in self.access.roles()]
+            return catalog.local_frame(self.spark, rows, "role string")
         if _ALTER_FN_RE.match(text):
             raise ValueError(
                 "ALTER FUNCTION is not supported: SQL functions in this engine "
@@ -1042,11 +1043,7 @@ class StatementSession:
                 "grantee string, grantee_type string, privilege_type string, "
                 "table_name string, is_grantable boolean"
             )
-            return (
-                self.spark.createDataFrame(rows, schema)
-                if rows
-                else self.spark.createDataFrame([], schema)
-            )
+            return catalog.local_frame(self.spark, rows, schema)
         m = _CALL_RE.match(text)
         if m:
             return self._call_procedure(m.group(1), m.group(2))
@@ -1109,7 +1106,7 @@ class StatementSession:
             else:
                 args.append(_proc_literal(part))
         self.procedures[key](*args, **kwargs)
-        return self.spark.createDataFrame([("CALL",)], "result string")
+        return self._ack("CALL")
 
     def _proc_kill_query_default(self, query_id: str) -> None:
         raise ValueError(
@@ -1150,7 +1147,7 @@ class StatementSession:
             f"CREATE FUNCTION {bare}({params.strip()}) RETURNS {rtype.strip()} "
             f"RETURN {body}"
         )
-        return self.spark.createDataFrame([("CREATE FUNCTION",)], "result string")
+        return self._ack("CREATE FUNCTION")
 
     # -- metadata listing (MetadataListing.java / ShowQueriesRewrite.java) --
 
@@ -1170,9 +1167,8 @@ class StatementSession:
         if name not in self.prepared:
             self._missing_prepared(name)
         n = count_parameters(self.prepared[name])
-        return self.spark.createDataFrame(
-            [(i, "unknown") for i in range(n)] or self.spark.sparkContext.emptyRDD(),
-            "Position int, Type string",
+        return catalog.local_frame(
+            self.spark, [(i, "unknown") for i in range(n)], "Position int, Type string"
         )
 
     def _describe_output(self, name: str) -> DataFrame:
@@ -1205,7 +1201,8 @@ class StatementSession:
             )
             for f in schema.fields
         ]
-        return self.spark.createDataFrame(
+        return catalog.local_frame(
+            self.spark,
             rows,
             '`Column Name` string, Catalog string, Schema string, `Table` string, '
             "Type string, `Type Size` int, Aliased boolean",
@@ -1219,8 +1216,8 @@ class StatementSession:
         rows = [
             (f.name, _presto_type(f.dataType), "", "") for f in self._relation(name).schema.fields
         ]
-        return self.spark.createDataFrame(
-            rows, "Column string, Type string, Extra string, Comment string"
+        return catalog.local_frame(
+            self.spark, rows, "Column string, Type string, Extra string, Comment string"
         )
 
     def _show_create_table(self, name: str) -> DataFrame:
@@ -1229,7 +1226,7 @@ class StatementSession:
         fields = self._relation(name).schema.fields
         cols = ",\n".join(f'   "{f.name}" {_presto_type(f.dataType)}' for f in fields)
         ddl = f'CREATE TABLE {name} (\n{cols}\n)\nWITH (\n   format = \'PARQUET\'\n)'
-        return self.spark.createDataFrame([(ddl,)], "`Create Table` string")
+        return catalog.local_frame(self.spark, [(ddl,)], "`Create Table` string")
 
     # -- CREATE TYPE … AS ENUM (BigintEnumType.java / VarcharEnumType.java) -
 
@@ -1295,7 +1292,7 @@ class StatementSession:
                           ' in enum type {bare}')) AS STRING) END"""
         )
         self.types[bare] = [key for key, _ in entries]
-        return self.spark.createDataFrame([("CREATE TYPE",)], "result string")
+        return self._ack("CREATE TYPE")
 
     # -- SQL DML on managed tables (SqlBase.g4 delete/update/merge;
     #    DeleteExecute / UpdateExecute / MergeOperator). Spark v1 parquet
@@ -1362,7 +1359,7 @@ class StatementSession:
         keep = keep.localCheckpoint(eager=True)
         deleted = total - keep.count()
         self._replace_table(t, keep)
-        return self.spark.createDataFrame([(deleted,)], "rows bigint")
+        return catalog.local_frame(self.spark, [(deleted,)], "rows bigint")
 
     def _sql_update(self, table: str, assignments: str, cond: str | None) -> DataFrame:
         t = self._txn_stage(self._writable_table(table, "UPDATE"))
@@ -1385,7 +1382,7 @@ class StatementSession:
                 cols.append(F.col(f.name))
         updated = df.filter(cond).count() if cond else df.count()
         self._replace_table(t, df.select(*cols))
-        return self.spark.createDataFrame([(updated,)], "rows bigint")
+        return catalog.local_frame(self.spark, [(updated,)], "rows bigint")
 
     def _sql_merge(
         self,
@@ -1487,7 +1484,7 @@ class StatementSession:
             n_touched += inserts.count()
             merged = merged.unionByName(inserts)
         self._replace_table(t, merged)
-        return self.spark.createDataFrame([(n_touched,)], "rows bigint")
+        return catalog.local_frame(self.spark, [(n_touched,)], "rows bigint")
 
     # -- transactions (TransactionManager.java). Statement-layer DML on
     #    managed tables is TRANSACTIONAL with staging-based isolation: the
@@ -1610,7 +1607,7 @@ class StatementSession:
             # NestedTransactionsNotSupportedException in the reference
             raise ValueError("Nested transactions not supported")
         self._in_txn = True
-        return self.spark.createDataFrame([("START TRANSACTION",)], "result string")
+        return self._ack("START TRANSACTION")
 
     def _commit(self) -> DataFrame:
         if not self._in_txn:
@@ -1700,7 +1697,7 @@ class StatementSession:
                         ) from exc
         finally:
             self._txn_reset()
-        return self.spark.createDataFrame([("COMMIT",)], "result string")
+        return self._ack("COMMIT")
 
     def _rollback(self) -> DataFrame:
         if not self._in_txn:
@@ -1725,7 +1722,7 @@ class StatementSession:
                 )
         finally:
             self._txn_reset()
-        return self.spark.createDataFrame([("ROLLBACK",)], "result string")
+        return self._ack("ROLLBACK")
 
     # -- session properties (SET/RESET/SHOW SESSION, SURVEY §3.4;
     #    SystemSessionProperties.java names -> Spark confs) -----------------
@@ -1740,7 +1737,7 @@ class StatementSession:
         if prop.conf not in self._conf_defaults:
             self._conf_defaults[prop.conf] = self.spark.conf.get(prop.conf, None)
         self.spark.conf.set(prop.conf, prop.to_spark(value))
-        return self.spark.createDataFrame([("SET SESSION",)], "result string")
+        return self._ack("SET SESSION")
 
     def _reset_session(self, name: str) -> DataFrame:
         prop = self._prop(name)
@@ -1749,7 +1746,7 @@ class StatementSession:
             self.spark.conf.set(prop.conf, default)
         else:
             self.spark.conf.unset(prop.conf)
-        return self.spark.createDataFrame([("RESET SESSION",)], "result string")
+        return self._ack("RESET SESSION")
 
     def _show_session(self) -> DataFrame:
         rows = []
@@ -1758,6 +1755,6 @@ class StatementSession:
             raw = self.spark.conf.get(prop.conf, None)
             value = prop.from_spark(raw) if raw is not None else None
             rows.append((name, value, prop.conf, prop.description))
-        return self.spark.createDataFrame(
-            rows, "name string, value string, spark_conf string, description string"
+        return catalog.local_frame(
+            self.spark, rows, "name string, value string, spark_conf string, description string"
         )

@@ -23,6 +23,17 @@ from pyspark.sql import functions as F
 from sensql_presto_spark import catalog
 
 
+def _sink_table(spark: SparkSession, name: str) -> DataFrame:
+    """The rows a finished memory-sink query left under ``name``, without
+    the session temp view that ``.queryName(name)`` registered for them.
+
+    The returned DataFrame is analyzed before the view is dropped, so its
+    plan holds the sink itself and still reads the rows."""
+    df = spark.table(name)
+    spark.catalog.dropTempView(name)
+    return df
+
+
 def tumbling_window_counts(
     spark: SparkSession,
     sf_dir: str,
@@ -73,7 +84,7 @@ def tumbling_window_counts(
     query.awaitTermination(timeout_s)
 
     return (
-        spark.table(name)
+        _sink_table(spark, name)
         .select(
             F.col("w.start").alias("win_start"),
             "event_type",
@@ -126,7 +137,7 @@ def session_window_stats(
     )
     query.awaitTermination(timeout_s)
     return (
-        spark.table(name)
+        _sink_table(spark, name)
         .where(F.col("user_id") < 30)
         .select(
             "user_id",
@@ -203,7 +214,7 @@ def stateful_running_extrema(
 
     w = Window.partitionBy("user_id").orderBy(F.desc("n"))
     return (
-        spark.table(name)
+        _sink_table(spark, name)
         .withColumn("rk", F.row_number().over(w))
         .where((F.col("rk") == 1) & (F.col("user_id") < 30))
         .select("user_id", "n", "max_val", "sum_val_e4")
@@ -257,7 +268,7 @@ def streaming_dedup_exact(
         .start()
     )
     query.awaitTermination(timeout_s)
-    return spark.table(name).orderBy("event_type")
+    return _sink_table(spark, name).orderBy("event_type")
 
 
 def streaming_interval_join(
@@ -328,7 +339,7 @@ def streaming_interval_join(
         .start()
     )
     query.awaitTermination(timeout_s)
-    pairs = spark.table(name)
+    pairs = _sink_table(spark, name)
     return (
         pairs.groupBy("p_user")
         .agg(

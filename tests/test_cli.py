@@ -7,6 +7,8 @@ import re
 import subprocess
 import sys
 
+import pytest
+
 CLI = [sys.executable, "-m", "sensql_presto_spark.cli", "--sf-dir", "/root/testdata/sf0.001"]
 
 
@@ -163,3 +165,112 @@ def test_geo_builders_register_the_surface_once_per_session(spark, oracle_dir, m
     get("geo_st_surface2").build(session, oracle_dir)
     assert names == []
     assert get("geo_st_surface2").build(session, oracle_dir).count() > 0
+
+
+# The registration functions register_all calls, as (module, function):
+# each must install on a bare session with no other family present.
+_FAMILIES = (
+    ("presto_compat", "register_sql_functions"),
+    ("geospatial", "register_geospatial"),
+    ("udfs", "register_python_udfs"),
+    ("color", "register_color_functions"),
+    ("ip", "register_ip_functions"),
+    ("sketches", "register_sketch_functions"),
+    ("", "_register_builtin_aliases"),
+)
+
+
+@pytest.mark.parametrize("module, fn", _FAMILIES, ids=[f for _, f in _FAMILIES])
+def test_each_function_family_installs_alone_on_a_bare_session(spark, module, fn, monkeypatch):
+    """register_all installs its families side by side, so none may depend
+    on another having registered first."""
+    import importlib
+
+    register = getattr(
+        importlib.import_module("sensql_presto_spark.functions" + (f".{module}" if module else "")),
+        fn,
+    )
+    session = spark.newSession()
+    names = _record_registrations(monkeypatch)
+    register(session)
+    if fn == "_register_builtin_aliases":
+        assert names == []
+        assert session.sql("SELECT any_match(array(1, 2), x -> x > 1) AS b").first().b
+    else:
+        assert names and set(names) <= SURFACE
+        listed = {r.function for r in session.sql("SHOW USER FUNCTIONS").collect()}
+        assert set(names) <= listed
+
+
+class _Injected(Exception):
+    pass
+
+
+@pytest.mark.parametrize(
+    "module, fn",
+    [
+        ("sensql_presto_spark.functions", "register_sql_functions"),
+        ("sensql_presto_spark.functions.color", "register_color_functions"),
+        ("sensql_presto_spark.catalog", "register_views"),
+    ],
+    ids=["sql_functions", "color", "views"],
+)
+def test_prepare_session_reraises_a_failing_part(spark, oracle_dir, module, fn, monkeypatch):
+    """A failure in any concurrently prepared part reaches the caller, and
+    prepare_session returns instead of waiting forever."""
+    import importlib
+    import threading
+
+    from sensql_presto_spark.cli import prepare_session
+
+    def fail(*args, **kwargs):
+        raise _Injected(fn)
+
+    monkeypatch.setattr(importlib.import_module(module), fn, fail)
+    raised: list[BaseException] = []
+
+    def run() -> None:
+        try:
+            prepare_session(spark.newSession(), oracle_dir)
+        except BaseException as exc:  # noqa: BLE001 — checked below
+            raised.append(exc)
+
+    t = threading.Thread(target=run, daemon=True)
+    t.start()
+    t.join(timeout=300)
+    assert not t.is_alive(), "prepare_session did not return"
+    assert len(raised) == 1 and isinstance(raised[0], _Injected), raised
+
+
+def test_sessions_prepared_at_once_each_list_the_surface(spark, oracle_dir):
+    """Sessions prepared on more threads than cores at once, with frequent
+    thread switches, each end with exactly the pinned surface (plus the two
+    builtin aliases that go straight into the registry) and the catalog."""
+    import threading
+
+    from sensql_presto_spark import catalog
+    from sensql_presto_spark.cli import prepare_session
+
+    sessions = [spark.newSession() for _ in range(6)]
+    threads = [
+        threading.Thread(target=prepare_session, args=(s, oracle_dir), daemon=True)
+        for s in sessions
+    ]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=300)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    for session in sessions:
+        listed = {r.function for r in session.sql("SHOW USER FUNCTIONS").collect()}
+        assert listed == SURFACE | {"any_match", "all_match"}
+        views = {t.name for t in session.catalog.listTables() if t.isTemporary}
+        assert views == set(catalog.TABLES) | {
+            "information_schema_tables",
+            "information_schema_columns",
+        }

@@ -119,3 +119,28 @@ def test_builders_merge_and_refresh_leave_the_temp_view_list_unchanged(spark):
     finally:
         sess.execute("DROP MATERIALIZED VIEW mv_scope")
         session.sql(f"DROP TABLE IF EXISTS {table}")
+
+
+_STREAMING = (
+    "events_streaming_tumbling",
+    "events_streaming_sessions",
+    "events_streaming_stateful",
+    "events_streaming_dedup",
+    "events_streaming_interval_join",
+)
+
+
+def test_streaming_memory_sinks_leave_the_temp_view_list_unchanged(spark):
+    """A memory sink registers its rows as a temp view under the query's
+    name; the builders read it and drop the view, and what they return
+    still reads the rows."""
+    from sensql_presto_spark import catalog
+    from sensql_presto_spark.queries import all_specs
+
+    session = spark.newSession()
+    catalog.register_views(session, SF)
+    before = _temp_views(session)
+    specs = all_specs()
+    built = [specs[name].build(session, SF) for name in _STREAMING]
+    assert _temp_views(session) == before
+    assert all(df.count() > 0 for df in built)
