@@ -15,8 +15,13 @@ from __future__ import annotations
 import functools
 import os
 import weakref
+from collections.abc import Iterable
+from types import SimpleNamespace
+from urllib.parse import urlsplit
+from urllib.request import url2pathname
 
 import pyarrow as pa
+from pyspark import SparkContext
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import to_arrow_schema
@@ -34,6 +39,8 @@ TABLES: tuple[str, ...] = (
     "documents",
     "embeddings",
 )
+FILE_SLICE = 32  # input file URIs per py4j reply, well under its 8 KB buffer
+
 
 def _ensure_session_conf(spark: SparkSession) -> None:
     """Runtime-settable confs the oracle comparison depends on.
@@ -70,15 +77,108 @@ def normalize_events_ts(df: DataFrame, schema: StructType | None = None) -> Data
 def file_version(path: str) -> tuple[str, int, int] | None:
     """A local file's version: (absolute path, ``st_mtime_ns``, ``st_size``).
 
-    The one data-version rule of the engine: the schema cache here and the
-    server's result cache both treat a file as unchanged exactly while this
-    tuple is. None when ``path`` is not a local file (a URI, or missing).
+    The one data-version rule of the engine: the schema cache here, the
+    server's result cache and the SenSQL engine's resolved nodes all treat
+    a file as unchanged exactly while this tuple is. A directory's version
+    changes when an entry is added to it or removed from it. None when
+    ``path`` is not a local file (a URI, or missing).
     """
     try:
         st = os.stat(path)
     except OSError:
         return None
     return os.path.abspath(path), st.st_mtime_ns, st.st_size
+
+
+def unchanged(versions: Iterable[tuple[str, int, int]]) -> bool:
+    """Whether every ``file_version`` in ``versions`` still holds."""
+    return all(file_version(v[0]) == v for v in versions)
+
+
+def _local_path(uri: str) -> str | None:
+    parts = urlsplit(uri)
+    if parts.scheme != "file" or parts.netloc:
+        return None
+    return url2pathname(parts.path)
+
+
+@functools.lru_cache(maxsize=1)
+def _plan_kinds(jvm) -> SimpleNamespace:
+    """The JVM classes ``input_versions`` tells plan nodes apart by."""
+
+    def cls(name: str):
+        return jvm.java.lang.Class.forName("org.apache.spark.sql." + name)
+
+    return SimpleNamespace(
+        command=jvm.org.apache.spark.sql.catalyst.trees.TreePattern.COMMAND(),
+        value_leaves=(
+            cls("catalyst.plans.logical.LocalRelation"),
+            cls("catalyst.plans.logical.OneRowRelation"),
+        ),
+        file_leaf=cls("execution.datasources.LogicalRelation"),
+        fs_relation=cls("execution.datasources.HadoopFsRelation"),
+        wrap_array=jvm.scala.collection.immutable.ArraySeq.unsafeWrapArray,
+    )
+
+
+def _input_uris(plan) -> tuple[list[str], list[str]] | None:
+    """(input file URIs, file index root URIs) of ``plan``, its subqueries'
+    included; None when it holds a command or a leaf of any other kind than
+    a file source, LocalRelation or OneRowRelation. Every py4j call here is
+    paid by every server statement, so the walk asks the JVM for whole lists
+    (subqueries, leaves, joined URIs) rather than node by node."""
+    kinds = _plan_kinds(SparkContext._jvm)
+    files, roots = [], []
+    subqueries = plan.subqueriesAll()
+    for p in [plan] + [subqueries.apply(i) for i in range(subqueries.size())]:
+        if p.containsPattern(kinds.command):
+            return None
+        leaves = p.collectLeaves()
+        for leaf in (leaves.apply(i) for i in range(leaves.size())):
+            if kinds.file_leaf.isInstance(leaf):
+                relation = leaf.relation()
+                if not kinds.fs_relation.isInstance(relation):
+                    return None
+                # a reply over py4j's 8 KB buffer waits out a 40 ms delayed
+                # ACK, so the URIs come joined, FILE_SLICE at a time. URIs
+                # quote control characters: a newline only separates them.
+                uris = kinds.wrap_array(relation.inputFiles())
+                for i in range(0, uris.length(), FILE_SLICE):
+                    files += uris.slice(i, i + FILE_SLICE).mkString("\n").split("\n")
+                paths = relation.location().rootPaths()
+                roots += [paths.apply(i).toUri().toString() for i in range(paths.size())]
+            elif not any(c.isInstance(leaf) for c in kinds.value_leaves):
+                return None
+    return files, roots
+
+
+def input_versions(plan) -> tuple[tuple[str, int, int], ...] | None:
+    """The sorted ``file_version``s of everything a logical plan reads: every
+    input file, and every directory its file index lists (a root path and
+    the directories between it and its files), so that a file added to a
+    directory-backed table changes them. None when the plan is streaming or
+    nondeterministic, or holds a command, a leaf other than a file source
+    over local files, a LocalRelation or a OneRowRelation, or a path that
+    no longer exists: its result may change while every file stays."""
+    if plan.isStreaming() or not plan.deterministic():
+        return None
+    uris = _input_uris(plan)
+    if uris is None:
+        return None
+    files, roots = ([_local_path(u) for u in us] for us in uris)
+    if None in files or None in roots:
+        return None
+    dirs = {r for r in roots if os.path.isdir(r)}
+    paths = set(files) | set(roots)
+    for f in files:
+        d = os.path.dirname(f)
+        while d not in paths and any(d.startswith(r + os.sep) for r in dirs):
+            paths.add(d)
+            d = os.path.dirname(d)
+    versions = {file_version(p) for p in paths}
+    if None in versions:
+        return None
+    return tuple(sorted(versions))
 
 
 # absolute path -> (file_version, schema inferred from that version).

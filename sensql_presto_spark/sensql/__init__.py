@@ -19,6 +19,12 @@ the Spark-first equivalent (SURVEY.md §7.4):
                      query reads it as ``{fanout} AS <table>`` through
                      ``spark.sql``'s DataFrame slots, and Catalyst pushes
                      the residual predicates into every branch's scan.
+                     A node's builder is a declaration: the engine keeps
+                     the relation it returned and calls it again only
+                     when the builder is replaced or a file or directory
+                     the relation reads changes (``catalog.input_versions``,
+                     the server's result-cache rule), so a fan-out reads
+                     like a temp view over the nodes' resolved plans.
 
 At 100 TB the fan-out is N parquet scans unioned — each branch keeps
 its own partitioning and pushdown; the metadata plane stays kilobytes.
@@ -32,7 +38,7 @@ from functools import reduce
 import duckdb
 from pyspark.sql import DataFrame, SparkSession
 
-from sensql_presto_spark.catalog import escape_braces
+from sensql_presto_spark import catalog
 from sensql_presto_spark.sensql import geometry, rewrite
 
 
@@ -41,7 +47,9 @@ class MetadataDB:
 
     Plays the role of the reference's PostGIS ``geonaming`` database
     (``SenSQLModule.java:66-79``), with the spatial functions the forward
-    query needs registered as Python UDFs.
+    query needs registered as Python UDFs. Each lookup runs on its own
+    cursor: one DuckDB connection used from several threads at once, with
+    Python UDFs in the query, hangs.
     """
 
     def __init__(
@@ -63,17 +71,19 @@ class MetadataDB:
 
     def resolve_nodes(self, forward_sql: str) -> list[str]:
         """Run the forward query; returns matching node ids (sorted)."""
-        return sorted(r[0] for r in self.con.execute(forward_sql).fetchall())
+        with self.con.cursor() as cur:
+            return sorted(r[0] for r in cur.execute(forward_sql).fetchall())
 
     def resolve_knn(self, point_wkt: str, k: int) -> list[str]:
         """The k nodes whose service regions are nearest to a probe point
         (distance 0 when the point lies inside a region). Metadata-plane
         KNN — node count is small, so ORDER BY + LIMIT on the catalog DB
         is the right plan; the measurement fan-out stays distributed."""
-        rows = self.con.execute(
-            "SELECT id FROM nodes ORDER BY st_distance(?, service_region), id LIMIT ?",
-            [point_wkt, k],
-        ).fetchall()
+        with self.con.cursor() as cur:
+            rows = cur.execute(
+                "SELECT id FROM nodes ORDER BY st_distance(?, service_region), id LIMIT ?",
+                [point_wkt, k],
+            ).fetchall()
         return sorted(r[0] for r in rows)
 
 
@@ -82,7 +92,16 @@ class FederatedEngine:
 
     ``node_catalogs`` maps node id → builder for that node's slice of the
     measurement table (the reference's one-catalog-per-sensor-node model,
-    SURVEY.md §1.3).
+    SURVEY.md §1.3). A builder is a declaration, not a per-query hook: the
+    engine keeps the DataFrame it returned, with that DataFrame's
+    ``catalog.input_versions``, and calls it again only when
+    ``node_catalogs[id]`` is replaced by another object or one of those
+    versions changes (a file rewritten, a file added to or removed from a
+    directory it reads). A relation with no versions (nondeterministic, or
+    over a leaf other than local files or literal rows) is built on every
+    fan-out. A fan-out thus reads like a temp view over the nodes'
+    resolved plans: Catalyst still analyzes, optimizes and plans each
+    statement, pushdown into every branch included.
     """
 
     def __init__(
@@ -94,11 +113,33 @@ class FederatedEngine:
         self.spark = spark
         self.metadata = metadata
         self.node_catalogs = dict(node_catalogs)
+        # node id -> (builder, the DataFrame it returned, its input versions).
+        # No lock: a racing miss builds twice and the last store wins.
+        self._resolved: dict[str, tuple] = {}
+
+    def _node(self, node_id: str) -> DataFrame:
+        """The node's stored relation while it is current, else a new build."""
+        builder = self.node_catalogs[node_id]
+        hit = self._resolved.get(node_id)
+        if hit is not None and hit[0] is builder and catalog.unchanged(hit[2]):
+            return hit[1]
+        df = builder()
+        versions = catalog.input_versions(df._jdf.queryExecution().analyzed())
+        if versions is not None:
+            self._resolved[node_id] = (builder, df, versions)
+        return df
 
     def fanout(self, node_ids: Iterable[str]) -> DataFrame:
         """UNION ALL of the given nodes' catalogs, in the given order
-        (``SenSQLModule.java:159-183``; ``Union(…, Optional.of(false))``)."""
-        return reduce(DataFrame.unionAll, [self.node_catalogs[n]() for n in node_ids])
+        (``SenSQLModule.java:159-183``; ``Union(…, Optional.of(false))``).
+        Raises ValueError naming every id without a catalog before any
+        node is built."""
+        node_ids = list(node_ids)
+        missing = sorted(set(node_ids) - self.node_catalogs.keys())
+        if missing:
+            raise ValueError(f"no node catalog for resolved node ids {missing}")
+        catalog._ensure_session_conf(self.spark)
+        return reduce(DataFrame.unionAll, [self._node(n) for n in node_ids])
 
     def sql(self, text: str) -> DataFrame:
         parts = rewrite.split_query(text)
@@ -115,7 +156,7 @@ class FederatedEngine:
         #    ALL fan-out, which only this statement sees under the
         #    measurement table's name; the user's text keeps its braces
         residual_where = rewrite.build_residual_where(parts.where_text)
-        q = escape_braces
+        q = catalog.escape_braces
         sql = f"{q(parts.head)} FROM {{fanout}} AS {q(measurement_table)}"
         if residual_where:
             sql += f" WHERE {q(residual_where)}"

@@ -51,9 +51,11 @@ seen. A hit needs all three parts of the key to match:
   plans: bucketed by ``semanticHash()``, confirmed by ``sameResult()``;
 - the session's explicitly set SQL conf, since some settings change what
   an unchanged plan returns;
-- the version of every input file, ``catalog.file_version`` (path,
-  ``st_mtime_ns``, ``st_size``), stat'ed before execution; a miss stores
-  its result only if the stat after execution matches.
+- the version of every input file and of every directory its file index
+  lists, ``catalog.input_versions`` (path, ``st_mtime_ns``, ``st_size``
+  each), stat'ed before execution; a miss stores its result only if the
+  stat after execution matches. The SenSQL engine reuses a resolved node
+  relation by the same rule.
 
 Only deterministic, non-streaming statements whose every plan node,
 subqueries included, is no command, with at least one file-source leaf and
@@ -86,8 +88,6 @@ import uuid
 from collections import OrderedDict
 from dataclasses import dataclass, field
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
-from urllib.parse import urlsplit
-from urllib.request import url2pathname
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
@@ -100,7 +100,6 @@ MAX_QUERY_HISTORY = 100
 CLIENT_TIMEOUT_S = 300.0
 RESULT_CACHE_ENTRIES = 256
 RESULT_CACHE_BYTES = 16 << 20
-FILE_SLICE = 32  # input file URIs per py4j reply, well under its 8 KB buffer
 
 
 def _presto_type(dt: T.DataType) -> str:
@@ -208,32 +207,14 @@ class QueryExecution:
         }
 
 
-def _local_file_version(uri: str) -> tuple[str, int, int] | None:
-    parts = urlsplit(uri)
-    if parts.scheme != "file" or parts.netloc:
-        return None
-    return catalog.file_version(url2pathname(parts.path))
-
-
 class ResultCache:
     """Finished results of read statements, keyed by optimized plan, session
     conf and input file versions (see the module docstring). One lock
     guards the map; no Spark work runs while it is held."""
 
     def __init__(self, jvm) -> None:
-        def cls(name: str):
-            return jvm.java.lang.Class.forName("org.apache.spark.sql." + name)
-
-        self._command = jvm.org.apache.spark.sql.catalyst.trees.TreePattern.COMMAND()
-        self._value_leaves = (
-            cls("catalyst.plans.logical.LocalRelation"),
-            cls("catalyst.plans.logical.OneRowRelation"),
-        )
-        self._file_leaf = cls("execution.datasources.LogicalRelation")
-        self._fs_relation = cls("execution.datasources.HadoopFsRelation")
         self._as_java = jvm.scala.jdk.javaapi.CollectionConverters.asJava
         self._tree_map = jvm.java.util.TreeMap
-        self._wrap_array = jvm.scala.collection.immutable.ArraySeq.unsafeWrapArray
         self._json = jvm.com.fasterxml.jackson.databind.ObjectMapper()
         self._lock = threading.Lock()
         # (semanticHash, conf, versions) -> (plan, rows, JSON size), oldest first
@@ -243,50 +224,17 @@ class ResultCache:
     def __len__(self) -> int:
         return len(self._entries)
 
-    def _input_files(self, plan) -> list[str] | None:
-        """URIs of the files ``plan`` reads, its subqueries' included; None
-        when it holds a command or a leaf of any other kind than a file
-        source, LocalRelation or OneRowRelation. Every py4j call here is
-        paid by every statement, so the walk asks the JVM for whole lists
-        (subqueries, leaves, joined URIs) rather than node by node."""
-        files = []
-        subqueries = plan.subqueriesAll()
-        for p in [plan] + [subqueries.apply(i) for i in range(subqueries.size())]:
-            if p.containsPattern(self._command):
-                return None
-            leaves = p.collectLeaves()
-            for leaf in (leaves.apply(i) for i in range(leaves.size())):
-                if self._file_leaf.isInstance(leaf):
-                    relation = leaf.relation()
-                    if not self._fs_relation.isInstance(relation):
-                        return None
-                    # a reply over py4j's 8 KB buffer waits out a 40 ms
-                    # delayed ACK, so the URIs come joined, FILE_SLICE at a
-                    # time. URIs quote control characters: a newline only
-                    # separates them.
-                    uris = self._wrap_array(relation.inputFiles())
-                    for i in range(0, uris.length(), FILE_SLICE):
-                        files += uris.slice(i, i + FILE_SLICE).mkString("\n").split("\n")
-                elif not any(c.isInstance(leaf) for c in self._value_leaves):
-                    return None
-        return files
-
     def key(self, spark: SparkSession, df: DataFrame) -> tuple | None:
         """(plan, bucket) of a cacheable statement, else None. It reads the
         QueryExecution that ``df.collect()`` then runs, so a miss pays no
         second analysis or optimization."""
         plan = df._jdf.queryExecution().optimizedPlan()
-        if plan.isStreaming() or not plan.deterministic():
-            return None
-        files = self._input_files(plan)
-        if not files:
-            return None
-        versions = {_local_file_version(f) for f in files}
-        if None in versions:
+        versions = catalog.input_versions(plan)
+        if not versions:
             return None
         confs = spark.conf._jconf.getAll()  # the explicitly set ones
         conf = self._json.writeValueAsString(self._tree_map(self._as_java(confs)))
-        return plan, (plan.semanticHash(), conf, tuple(sorted(versions)))
+        return plan, (plan.semanticHash(), conf, versions)
 
     def get(self, key: tuple) -> list | None:
         """The stored rows for ``key``, shared, not copied."""
@@ -311,7 +259,7 @@ class ResultCache:
         size = len(json.dumps(rows))
         if size > RESULT_CACHE_BYTES:
             return
-        if tuple(catalog.file_version(v[0]) for v in versions) != versions:
+        if not catalog.unchanged(versions):
             return
         with self._lock:
             old = self._entries.pop(bucket, None)

@@ -7,10 +7,20 @@ mechanics the reference implements in SenSQLModule.java.
 
 from __future__ import annotations
 
+import os
+import re
+import sys
+import threading
+import time
+from collections import Counter
+
 import pytest
 
-from sensql_presto_spark.queries.sensql_suite import build_engine
-from sensql_presto_spark.sensql import geometry, rewrite
+from sensql_presto_spark.queries.sensql_suite import FEATURES, NODES, SHAPES, build_engine
+from sensql_presto_spark.sensql import FederatedEngine, MetadataDB, geometry, rewrite
+from sensql_presto_spark.testing import duckdb_connection
+
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))  # bench.py
 
 WHERE = (
     "st_intersects(shape.geometries, nodes.service_region) "
@@ -74,9 +84,9 @@ def test_geometry_intersects():
     assert geometry.st_distance("POINT (0 0)", "POINT (3 4)") == 5.0
 
 
-def test_union_all_preserves_multiplicity(spark):
+def test_union_all_preserves_multiplicity(spark, smoke_dir):
     # Union(…, Optional.of(false)) = UNION ALL (SenSQLModule.java:170)
-    engine = build_engine(spark, "/root/testdata/sf0.001")
+    engine = build_engine(spark, smoke_dir)
     df = engine.sql(
         """
         SELECT count(*) AS n FROM measurements, feature, shape
@@ -90,8 +100,8 @@ def test_union_all_preserves_multiplicity(spark):
     assert total == a + b
 
 
-def test_unresolvable_metadata_raises(spark):
-    engine = build_engine(spark, "/root/testdata/sf0.001")
+def test_unresolvable_metadata_raises(spark, smoke_dir):
+    engine = build_engine(spark, smoke_dir)
     with pytest.raises(ValueError, match="no nodes match"):
         engine.sql(
             """
@@ -102,11 +112,11 @@ def test_unresolvable_metadata_raises(spark):
         )
 
 
-def test_brace_literals_survive_the_statement_scoped_fanout(spark):
+def test_brace_literals_survive_the_statement_scoped_fanout(spark, smoke_dir):
     """The residual query names the fan-out through a {name} slot; brace
     literals in the user's head, residual WHERE and tail stay literals,
     '{fanout}' included."""
-    engine = build_engine(spark, "/root/testdata/sf0.001")
+    engine = build_engine(spark, smoke_dir)
     rows = engine.sql(
         """
         SELECT '{tag}' AS tag, count(*) AS n FROM measurements, feature, shape
@@ -118,3 +128,227 @@ def test_brace_literals_survive_the_statement_scoped_fanout(spark):
     ).collect()
     expected = engine.fanout(["node_a", "node_b"]).where("sensor IS NOT NULL").count()
     assert [(r.tag, r.n) for r in rows] == [("{tag}", expected)]
+
+
+# --- Resolved node relations: a builder is called again only when it is
+#     replaced or the files its relation reads change. ---------------------
+
+DOWNTOWN = (
+    "SELECT count(*) AS n, round(sum(value), 4) AS s FROM measurements, feature, shape "
+    "WHERE st_intersects(shape.geometries, nodes.service_region) "
+    "AND shape.id = feature.shape AND feature.name = 'downtown'"
+)
+
+
+def _count_calls(engine: FederatedEngine) -> Counter:
+    """Wrap every node builder of ``engine`` to count its calls."""
+    calls = Counter()
+    lock = threading.Lock()
+
+    def counted(name, build):
+        def counting():
+            with lock:
+                calls[name] += 1
+            return build()
+
+        return counting
+
+    engine.node_catalogs = {n: counted(n, b) for n, b in engine.node_catalogs.items()}
+    return calls
+
+
+def _write(path, values: list[float]) -> None:
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    pq.write_table(pa.table({"sensor": ["s"] * len(values), "value": values}), path)
+
+
+def _file_engine(spark, paths: dict[str, str]) -> FederatedEngine:
+    """An engine over the fixture metadata whose node ``n`` reads ``paths[n]``
+    (a parquet file or a directory of them)."""
+    from pyspark.sql import functions as F
+
+    def node(name: str):
+        return lambda: spark.read.parquet(paths[name]).select(
+            F.lit(name).alias("node_id"), "sensor", "value"
+        )
+
+    return FederatedEngine(
+        spark, MetadataDB(NODES, SHAPES, FEATURES), {name: node(name) for name, _ in NODES}
+    )
+
+
+def _downtown(engine: FederatedEngine) -> tuple:
+    return tuple(engine.sql(DOWNTOWN).collect()[0])
+
+
+def test_repeated_queries_build_each_node_once(spark, smoke_dir):
+    engine = build_engine(spark, smoke_dir)
+    calls = _count_calls(engine)
+    con = duckdb_connection(smoke_dir)
+    try:
+        for thr in (0, 20, 40, 60, 80):
+            got = engine.sql(f"{DOWNTOWN} AND measurements.value > {thr}").collect()[0]
+            want = con.sql(
+                "SELECT count(*), round(sum(value), 4) FROM events "
+                f"WHERE user_id % 4 IN (0, 1) AND value > {thr}"
+            ).fetchone()
+            assert (got.n, got.s) == pytest.approx(want)
+    finally:
+        con.close()
+    assert calls == {"node_a": 1, "node_b": 1}
+
+
+def test_rewritten_node_file_returns_the_new_rows(spark, tmp_path):
+    paths = {name: str(tmp_path / f"{name}.parquet") for name, _ in NODES}
+    for path in paths.values():
+        _write(path, [1.0, 2.0])
+    engine = _file_engine(spark, paths)
+    calls = _count_calls(engine)
+    assert _downtown(engine) == (4, 6.0)
+    assert _downtown(engine) == (4, 6.0)
+    _write(paths["node_b"], [10.0, 20.0, 30.0])
+    assert _downtown(engine) == (5, 63.0)
+    assert calls == {"node_a": 1, "node_b": 2}
+
+
+def test_part_file_added_to_a_node_directory_is_seen(spark, tmp_path):
+    paths = {}
+    for name, _ in NODES:
+        os.mkdir(tmp_path / name)
+        _write(tmp_path / name / "part-0.parquet", [1.0])
+        paths[name] = str(tmp_path / name)
+    engine = _file_engine(spark, paths)
+    calls = _count_calls(engine)
+    assert _downtown(engine) == (2, 2.0)
+    _write(tmp_path / "node_a" / "part-1.parquet", [5.0, 7.0])
+    assert _downtown(engine) == (4, 14.0)
+    assert _downtown(engine) == (4, 14.0)
+    assert calls == {"node_a": 2, "node_b": 1}
+
+
+def test_nodes_without_input_versions_are_built_on_every_fanout(spark, tmp_path):
+    """A nondeterministic node and one over a non-file leaf (``range``) have
+    no input versions, so nothing is kept for them."""
+    path = str(tmp_path / "n.parquet")
+    _write(path, [1.0, 2.0, 3.0])
+    engine = FederatedEngine(
+        spark,
+        MetadataDB(NODES, SHAPES, FEATURES),
+        {
+            "node_a": lambda: spark.read.parquet(path).selectExpr(
+                "'node_a' AS node_id", "sensor", "value + rand() AS value"
+            ),
+            "node_b": lambda: spark.range(4).selectExpr(
+                "'node_b' AS node_id", "'s' AS sensor", "CAST(id AS DOUBLE) AS value"
+            ),
+        },
+    )
+    calls = _count_calls(engine)
+    for _ in range(3):
+        assert _downtown(engine)[0] == 7
+    assert calls == {"node_a": 3, "node_b": 3}
+
+
+def test_replaced_node_builder_takes_effect_on_the_next_query(spark, tmp_path):
+    paths = {name: str(tmp_path / f"{name}.parquet") for name, _ in NODES}
+    for path in paths.values():
+        _write(path, [1.0, 2.0])
+    engine = _file_engine(spark, paths)
+    assert _downtown(engine) == (4, 6.0)
+    other = str(tmp_path / "other.parquet")
+    _write(other, [100.0])
+    engine.node_catalogs["node_a"] = lambda: spark.read.parquet(other).selectExpr(
+        "'node_a' AS node_id", "sensor", "value"
+    )
+    assert _downtown(engine) == (3, 103.0)
+
+
+def test_self_join_of_two_fanouts_over_reused_nodes(spark, smoke_dir):
+    """Both sides carry the same resolved plans, expression ids included;
+    the analyzer tells them apart as it does for any SQL self-join."""
+    engine = build_engine(spark, smoke_dir)
+    ids = ["node_a", "node_b"]
+    engine.fanout(ids)
+    n = engine.spark.sql(
+        "SELECT count(*) AS n FROM {a} x JOIN {b} y "
+        "ON x.node_id = y.node_id AND x.sensor = y.sensor AND x.value = y.value",
+        a=engine.fanout(ids),
+        b=engine.fanout(ids),
+    ).collect()[0].n
+    con = duckdb_connection(smoke_dir)
+    try:
+        want = con.sql(
+            "WITH m AS (SELECT user_id % 4 AS node, event_type, value FROM events "
+            "WHERE user_id % 4 IN (0, 1)) "
+            "SELECT count(*) FROM m x JOIN m y "
+            "ON x.node = y.node AND x.event_type = y.event_type AND x.value = y.value"
+        ).fetchone()[0]
+    finally:
+        con.close()
+    assert n == want
+
+
+def test_concurrent_queries_share_one_engine(spark, smoke_dir):
+    """The node table has no lock: racing misses build twice, and every
+    query still reads the right rows from whichever build it got. The
+    metadata lookups run side by side too (one shared DuckDB connection
+    hung here)."""
+    engine = build_engine(spark, smoke_dir)
+    calls = _count_calls(engine)
+    con = duckdb_connection(smoke_dir)
+    try:
+        want = con.sql("SELECT count(*) FROM events WHERE user_id % 4 IN (0, 1)").fetchone()[0]
+    finally:
+        con.close()
+    counts, errors = [], []
+
+    def work():
+        try:
+            for _ in range(3):
+                counts.append(engine.sql(DOWNTOWN).collect()[0].n)
+        except Exception as exc:  # noqa: BLE001 — re-raised below
+            errors.append(exc)
+
+    threads = [threading.Thread(target=work, daemon=True) for _ in range(8)]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        for t in threads:
+            t.start()
+        deadline = time.monotonic() + 300
+        for t in threads:
+            t.join(timeout=max(0.0, deadline - time.monotonic()))
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    if errors:
+        raise errors[0]
+    assert counts == [want] * 24
+    assert set(calls) == {"node_a", "node_b"} and all(1 <= c <= 8 for c in calls.values())
+    before = dict(calls)
+    assert engine.sql(DOWNTOWN).collect()[0].n == want
+    assert calls == before
+
+
+def test_resolved_node_without_a_catalog_is_named_before_any_build(spark, smoke_dir):
+    engine = build_engine(spark, smoke_dir)
+    del engine.node_catalogs["node_b"]
+    calls = _count_calls(engine)
+    with pytest.raises(ValueError, match=r"no node catalog for resolved node ids \['node_b'\]"):
+        engine.sql(DOWNTOWN)
+    assert not calls
+
+
+def test_reused_nodes_keep_one_scan_with_pushdown_per_branch(spark, smoke_dir):
+    from bench import canonical_plan
+
+    engine = build_engine(spark, smoke_dir)
+    engine.sql(f"{DOWNTOWN} AND measurements.value > 10").collect()
+    df = engine.sql(f"{DOWNTOWN} AND measurements.value > 30")
+    scans = re.findall(r"FileScan parquet .*", canonical_plan(engine.spark, df))
+    assert len(scans) == 2
+    for scan in scans:
+        filters = re.search(r"DataFilters: \[([^\]]*)\]", scan).group(1)
+        assert "(value# > 30.0)" in filters, scan
