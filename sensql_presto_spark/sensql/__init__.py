@@ -13,25 +13,32 @@ the Spark-first equivalent (SURVEY.md §7.4):
                      is preserved, just not a network hop.
 - rewrite          → ``rewrite.py``, a faithful mirror of
                      ``SenSQLModule.java`` processWhere/checkCond.
-- fan-out          → ``DataFrame.unionAll`` over per-node sources,
-                     scoped to the one statement like the reference's
+- fan-out          → a UNION ALL over per-node sources, scoped to the
+                     one statement like the reference's
                      ``WITH <table> AS (… UNION ALL …)``: the residual
                      query reads it as ``{fanout} AS <table>`` through
                      ``spark.sql``'s DataFrame slots, and Catalyst pushes
-                     the residual predicates into every branch's scan.
+                     the residual predicates into every scan.
                      A node's builder is a declaration: the engine keeps
                      the relation it returned and calls it again only
                      when the builder is replaced or a file or directory
                      the relation reads changes (``catalog.input_versions``,
                      the server's result-cache rule), so a fan-out reads
                      like a temp view over the nodes' resolved plans.
+- slices           → ``slices.py``: kept nodes that slice one source by
+                     ``k = literal`` share one scan filtered by
+                     ``k IN (…)``, so the union has one branch per source
+                     rather than per node; the slices are disjoint, so the
+                     rows are the union's, in no defined order.
 
-At 100 TB the fan-out is N parquet scans unioned — each branch keeps
-its own partitioning and pushdown; the metadata plane stays kilobytes.
+At 100 TB the fan-out over slices of one source is one parquet scan with
+the key and the residual pushed into it; nodes with their own paths are
+still one scan each, unioned. The metadata plane stays kilobytes.
 """
 
 from __future__ import annotations
 
+import functools
 from collections.abc import Callable, Iterable, Mapping
 from functools import reduce
 
@@ -39,7 +46,7 @@ import duckdb
 from pyspark.sql import DataFrame, SparkSession
 
 from sensql_presto_spark import catalog
-from sensql_presto_spark.sensql import geometry, rewrite
+from sensql_presto_spark.sensql import geometry, rewrite, slices
 
 
 class MetadataDB:
@@ -87,6 +94,22 @@ class MetadataDB:
         return sorted(r[0] for r in rows)
 
 
+class _Node:
+    """A node's resolved relation: the builder that made it, the DataFrame
+    it returned, its analyzed plan and that plan's input versions (None:
+    not kept). Its slice is read on first use."""
+
+    def __init__(self, builder: Callable[[], DataFrame], df: DataFrame) -> None:
+        self.builder = builder
+        self.df = df
+        self.plan = df._jdf.queryExecution().analyzed()
+        self.versions = catalog.input_versions(self.plan)
+
+    @functools.cached_property
+    def slice(self) -> slices.Slice | None:
+        return slices.slice_of(self.plan) if self.versions is not None else None
+
+
 class FederatedEngine:
     """``sql(text) -> DataFrame`` with the SenSQL federation rewrite applied.
 
@@ -99,9 +122,13 @@ class FederatedEngine:
     versions changes (a file rewritten, a file added to or removed from a
     directory it reads). A relation with no versions (nondeterministic, or
     over a leaf other than local files or literal rows) is built on every
-    fan-out. A fan-out thus reads like a temp view over the nodes'
-    resolved plans: Catalyst still analyzes, optimizes and plans each
-    statement, pushdown into every branch included.
+    fan-out.
+
+    Kept nodes that slice one source by a key (``slices``) are read
+    by one shared scan, not one branch each, and a fan-out's relation is
+    kept with the node entries it was built from: it is built again only
+    when one of them is replaced. Catalyst still analyzes, optimizes and
+    plans each statement, pushdown into every scan included.
     """
 
     def __init__(
@@ -113,33 +140,45 @@ class FederatedEngine:
         self.spark = spark
         self.metadata = metadata
         self.node_catalogs = dict(node_catalogs)
-        # node id -> (builder, the DataFrame it returned, its input versions).
-        # No lock: a racing miss builds twice and the last store wins.
-        self._resolved: dict[str, tuple] = {}
+        # No lock on either table: a racing miss builds twice and the last
+        # store wins.
+        self._resolved: dict[str, _Node] = {}
+        # node ids -> (their _Node entries, the fan-out built from them); at
+        # most one fan-out per node id, emptied when full
+        self._fanouts: dict[tuple[str, ...], tuple[list[_Node], DataFrame]] = {}
 
-    def _node(self, node_id: str) -> DataFrame:
-        """The node's stored relation while it is current, else a new build."""
+    def _node(self, node_id: str) -> _Node:
+        """The node's kept entry while it is current, else a new build."""
         builder = self.node_catalogs[node_id]
         hit = self._resolved.get(node_id)
-        if hit is not None and hit[0] is builder and catalog.unchanged(hit[2]):
-            return hit[1]
-        df = builder()
-        versions = catalog.input_versions(df._jdf.queryExecution().analyzed())
-        if versions is not None:
-            self._resolved[node_id] = (builder, df, versions)
-        return df
+        if hit is not None and hit.builder is builder and catalog.unchanged(hit.versions):
+            return hit
+        node = _Node(builder, builder())
+        if node.versions is not None:
+            self._resolved[node_id] = node
+        return node
 
     def fanout(self, node_ids: Iterable[str]) -> DataFrame:
-        """UNION ALL of the given nodes' catalogs, in the given order
-        (``SenSQLModule.java:159-183``; ``Union(…, Optional.of(false))``).
-        Raises ValueError naming every id without a catalog before any
-        node is built."""
-        node_ids = list(node_ids)
+        """UNION ALL of the given nodes' catalogs (``SenSQLModule.java:159-183``;
+        ``Union(…, Optional.of(false))``): one branch per group of slices of
+        one source, and one per other node. Row order is not defined.
+        Raises ValueError naming every id without a catalog before any node
+        is built."""
+        node_ids = tuple(node_ids)
         missing = sorted(set(node_ids) - self.node_catalogs.keys())
         if missing:
             raise ValueError(f"no node catalog for resolved node ids {missing}")
         catalog._ensure_session_conf(self.spark)
-        return reduce(DataFrame.unionAll, [self._node(n) for n in node_ids])
+        nodes = [self._node(n) for n in node_ids]
+        kept = self._fanouts.get(node_ids)
+        if kept is not None and all(a is b for a, b in zip(kept[0], nodes)):
+            return kept[1]
+        df = reduce(DataFrame.unionAll, [g.relation() for g in slices.groups(nodes)])
+        if all(n.versions is not None for n in nodes):
+            if len(self._fanouts) >= len(self.node_catalogs):
+                self._fanouts.clear()
+            self._fanouts[node_ids] = (nodes, df)
+        return df
 
     def sql(self, text: str) -> DataFrame:
         parts = rewrite.split_query(text)

@@ -13,8 +13,10 @@ import sys
 import threading
 import time
 from collections import Counter
+from functools import reduce
 
 import pytest
+from pyspark.sql import DataFrame
 
 from sensql_presto_spark.queries.sensql_suite import FEATURES, NODES, SHAPES, build_engine
 from sensql_presto_spark.sensql import FederatedEngine, MetadataDB, geometry, rewrite
@@ -341,14 +343,215 @@ def test_resolved_node_without_a_catalog_is_named_before_any_build(spark, smoke_
     assert not calls
 
 
-def test_reused_nodes_keep_one_scan_with_pushdown_per_branch(spark, smoke_dir):
+# --- Slices of one source: one shared scan, the union's rows. --------------
+
+
+def _events_engine(spark, sf_dir: str, n: int) -> FederatedEngine:
+    """Nodes ``s00``..: node ``i`` is ``events`` with ``user_id % 32 = i``."""
+    from pyspark.sql import functions as F
+
+    from sensql_presto_spark import catalog
+
+    def node(i: int):
+        return lambda: catalog.table(spark, sf_dir, "events").where(
+            F.col("user_id") % 32 == i
+        ).select(F.lit(f"s{i:02d}").alias("node_id"), "ts", F.col("event_type").alias("sensor"), "value")
+
+    return FederatedEngine(
+        spark, MetadataDB(NODES, SHAPES, FEATURES), {f"s{i:02d}": node(i) for i in range(n)}
+    )
+
+
+def _where_engine(spark, path: str, nodes: dict) -> FederatedEngine:
+    """Node ``n`` reads the parquet file at ``path`` filtered by
+    ``nodes[n][0]``, a Column or SQL text, as ``node_id, id, value`` (or
+    the columns in ``nodes[n][1]``)."""
+
+    def node(name, where, columns=("id", "value")):
+        return lambda: spark.read.parquet(path).where(where).selectExpr(
+            f"'{name}' AS node_id", *columns
+        )
+
+    return FederatedEngine(
+        spark,
+        MetadataDB(NODES, SHAPES, FEATURES),
+        {name: node(name, *spec) for name, spec in nodes.items()},
+    )
+
+
+def _write_rows(path, ids: list[int], row_group_size: int = None) -> None:
+    """Rows ``id, value = id * 1.5, v, s``: ``v`` and ``s`` cycle through
+    0.0/"a", -0.0/"A" and 1.0/"b" with ``id``."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    keys = [(0.0, "a"), (-0.0, "A"), (1.0, "b")]
+    table = pa.table({
+        "id": ids,
+        "value": [i * 1.5 for i in ids],
+        "v": [keys[i % 3][0] for i in ids],
+        "s": [keys[i % 3][1] for i in ids],
+    })
+    pq.write_table(table, path, row_group_size=row_group_size)
+
+
+def _scans(engine: FederatedEngine, ids) -> int:
     from bench import canonical_plan
 
-    engine = build_engine(spark, smoke_dir)
-    engine.sql(f"{DOWNTOWN} AND measurements.value > 10").collect()
-    df = engine.sql(f"{DOWNTOWN} AND measurements.value > 30")
+    return len(re.findall(r"FileScan parquet ", canonical_plan(engine.spark, engine.fanout(ids))))
+
+
+def _union_rows(engine: FederatedEngine, ids) -> list:
+    """The explicit UNION ALL of fresh builds of the nodes ``ids``."""
+    return sorted(reduce(DataFrame.unionAll, [engine.node_catalogs[n]() for n in ids]).collect())
+
+
+@pytest.mark.parametrize("n", [2, 4, 32])
+def test_slices_of_one_file_share_one_scan_with_pushdown(spark, smoke_dir, n):
+    """``n`` slices of ``events`` are one scan carrying the residual and the
+    key IN/INSET, with the union's schema and rows; the second statement
+    reads the kept fan-out."""
+    from bench import canonical_plan
+
+    engine = _events_engine(spark, smoke_dir, n)
+    ids = sorted(engine.node_catalogs)
+    query = "SELECT * FROM {m} WHERE value > {thr}"
+    engine.spark.sql(query, m=engine.fanout(ids), thr=10).collect()
+    df = engine.spark.sql(query, m=engine.fanout(ids), thr=30)
     scans = re.findall(r"FileScan parquet .*", canonical_plan(engine.spark, df))
-    assert len(scans) == 2
-    for scan in scans:
-        filters = re.search(r"DataFilters: \[([^\]]*)\]", scan).group(1)
-        assert "(value# > 30.0)" in filters, scan
+    assert len(scans) == 1
+    filters = re.search(r"DataFilters: \[([^\]]*)\]", scans[0]).group(1)
+    assert "(value# > 30.0)" in filters, scans[0]
+    assert re.search(r"\(user_id# % 32\) (IN \(|INSET )", filters), scans[0]
+    union = reduce(DataFrame.unionAll, [engine.node_catalogs[i]() for i in ids])
+    assert engine.fanout(ids).schema == union.schema
+    assert sorted(df.collect()) == sorted(union.where("value > 30").collect())
+
+
+def test_slices_keep_the_union_rows_against_duckdb(spark, smoke_dir):
+    engine = _events_engine(spark, smoke_dir, 32)
+    ids = ["s03", "s07", "s08", "s21"]
+    got = engine.spark.sql(
+        "SELECT node_id, count(*) AS n, round(sum(value), 4) AS s FROM {m} GROUP BY node_id",
+        m=engine.fanout(ids),
+    ).collect()
+    con = duckdb_connection(smoke_dir)
+    try:
+        want = con.sql(
+            "SELECT 's' || lpad(CAST(user_id % 32 AS VARCHAR), 2, '0'), count(*), "
+            "round(sum(value), 4) FROM events WHERE user_id % 32 IN (3, 7, 8, 21) GROUP BY 1"
+        ).fetchall()
+    finally:
+        con.close()
+    assert sorted((r.node_id, r.n, r.s) for r in got) == pytest.approx(sorted(want))
+    assert _scans(engine, ids) == 1
+
+
+def test_nodes_with_one_key_value_return_each_row_once_per_node(spark, tmp_path):
+    path = str(tmp_path / "t.parquet")
+    _write_rows(path, list(range(12)))
+    engine = _where_engine(
+        spark,
+        path,
+        {"n0": ("id % 3 = 0",), "n1": ("id % 3 = 1",), "n2": ("id % 3 = 1",)},
+    )
+    for ids in (["n0", "n1", "n2"], ["n1", "n2"]):
+        got = sorted(engine.fanout(ids).collect())
+        assert got == _union_rows(engine, ids)
+        assert _scans(engine, ids) == 2
+    assert len(got) == 8
+
+
+def test_nodes_with_different_key_expressions_stay_separate(spark, tmp_path):
+    path = str(tmp_path / "t.parquet")
+    _write_rows(path, list(range(12)))
+    engine = _where_engine(spark, path, {"n0": ("id % 4 = 1",), "n1": ("id % 2 = 0",)})
+    ids = ["n0", "n1"]
+    assert sorted(engine.fanout(ids).collect()) == _union_rows(engine, ids)
+    assert _scans(engine, ids) == 2
+
+
+def test_keys_whose_distinct_literals_match_the_same_rows_stay_separate(spark, tmp_path):
+    """Double ``0.0`` and ``-0.0``, and UTF8_LCASE ``'a'`` and ``'A'``: each
+    node matches the other's rows too, so the union holds them twice."""
+    from pyspark.sql import functions as F
+
+    path = str(tmp_path / "t.parquet")
+    _write_rows(path, list(range(9)))
+    lcase = F.collate(F.col("s"), "UTF8_LCASE")
+    for nodes in (
+        {"n0": (F.col("v") == 0.0,), "n1": (F.col("v") == -0.0,)},
+        {"n0": (lcase == "a",), "n1": (lcase == "A",)},
+    ):
+        engine = _where_engine(spark, path, nodes)
+        got = sorted(engine.fanout(["n0", "n1"]).collect())
+        assert got == _union_rows(engine, ["n0", "n1"])
+        assert len(got) == 12
+        assert _scans(engine, ["n0", "n1"]) == 2
+
+
+def test_node_with_another_column_expression_stays_outside_the_group(spark, tmp_path):
+    path = str(tmp_path / "t.parquet")
+    _write_rows(path, list(range(12)))
+    engine = _where_engine(
+        spark,
+        path,
+        {
+            "n0": ("id % 3 = 0",),
+            "n1": ("id % 3 = 1", ("id", "value * 2 AS value")),
+            "n2": ("id % 3 = 2",),
+        },
+    )
+    ids = ["n0", "n1", "n2"]
+    got = sorted(engine.fanout(ids).collect())
+    assert got == _union_rows(engine, ids)
+    assert sum(r.value for r in got) == pytest.approx(1.5 * (sum(range(12)) + sum(range(1, 12, 3))))
+    assert _scans(engine, ids) == 2
+
+
+def test_rewritten_shared_file_returns_the_new_rows(spark, tmp_path):
+    """The new file is longer and has many row groups: a plan still holding
+    the old file listing splits it at the old length and misses rows."""
+    path = str(tmp_path / "t.parquet")
+    _write_rows(path, list(range(12)))
+    engine = _where_engine(spark, path, {f"n{i}": (f"id % 3 = {i}",) for i in range(3)})
+    ids = ["n0", "n1", "n2"]
+    assert len(engine.fanout(ids).collect()) == 12
+    _write_rows(path, list(range(100, 3100)), row_group_size=100)
+    got = sorted(engine.fanout(ids).collect())
+    assert got == _union_rows(engine, ids)
+    assert sorted(r.id for r in got) == list(range(100, 3100))
+    assert _scans(engine, ids) == 1
+
+
+def test_node_pointed_at_another_file_leaves_the_group(spark, tmp_path):
+    path, other = str(tmp_path / "t.parquet"), str(tmp_path / "o.parquet")
+    _write_rows(path, list(range(12)))
+    _write_rows(other, list(range(50, 62)))
+    engine = _where_engine(spark, path, {f"n{i}": (f"id % 3 = {i}",) for i in range(3)})
+    ids = ["n0", "n1", "n2"]
+    assert _scans(engine, ids) == 1
+    engine.node_catalogs["n1"] = lambda: spark.read.parquet(other).where("id % 3 = 1").selectExpr(
+        "'n1' AS node_id", "id", "value"
+    )
+    got = sorted(engine.fanout(ids).collect())
+    assert got == _union_rows(engine, ids)
+    assert sorted(r.id for r in got) == [i for i in range(12) if i % 3 != 1] + [
+        i for i in range(50, 62) if i % 3 == 1
+    ]
+    assert _scans(engine, ids) == 2
+
+
+def test_node_whose_constant_fails_raises_when_the_statement_runs(spark, tmp_path):
+    """Reading the slice folds constants; a node's ``1 / 0`` fails there,
+    and that node is left ungrouped so the error comes from the statement,
+    as it does for a union."""
+    from pyspark.errors import ArithmeticException
+    from pyspark.sql import functions as F
+
+    path = str(tmp_path / "t.parquet")
+    _write_rows(path, list(range(6)))
+    engine = _where_engine(spark, path, {"n0": ("id % 3 = 0",), "n1": (F.col("id") == F.lit(1) / 0,)})
+    df = engine.fanout(["n0", "n1"])
+    with pytest.raises(ArithmeticException, match="DIVIDE_BY_ZERO"):
+        df.collect()
