@@ -7,7 +7,9 @@ schema is inferred from its file once per file version (absolute path,
 mtime, size) and passed explicitly to every later read: repeat reads start
 no inference job, and a rewritten file is inferred again rather than read
 with a stale schema. The reference statically types every query
-(``StatementAnalyzer.java:277``).
+(``StatementAnalyzer.java:277``). The relation a read resolves is kept per
+session while none of its files changes, so a repeat ``table`` call lists
+no files and reads no schema.
 """
 
 from __future__ import annotations
@@ -77,11 +79,12 @@ def normalize_events_ts(df: DataFrame, schema: StructType | None = None) -> Data
 def file_version(path: str) -> tuple[str, int, int] | None:
     """A local file's version: (absolute path, ``st_mtime_ns``, ``st_size``).
 
-    The one data-version rule of the engine: the schema cache here, the
-    server's result cache and the SenSQL engine's resolved nodes all treat
-    a file as unchanged exactly while this tuple is. A directory's version
-    changes when an entry is added to it or removed from it. None when
-    ``path`` is not a local file (a URI, or missing).
+    The one data-version rule of the engine: the schema cache and the kept
+    table relations here, the server's result cache and the SenSQL engine's
+    resolved nodes all treat a file as unchanged exactly while this tuple
+    is. A directory's version changes when an entry is added to it or
+    removed from it. None when ``path`` is not a local file (a URI, or
+    missing).
     """
     try:
         st = os.stat(path)
@@ -104,7 +107,8 @@ def _local_path(uri: str) -> str | None:
 
 @functools.lru_cache(maxsize=1)
 def _plan_kinds(jvm) -> SimpleNamespace:
-    """The JVM classes ``input_versions`` tells plan nodes apart by."""
+    """The JVM classes ``input_versions`` tells plan nodes apart by, and the
+    constructor ``table`` makes a DataFrame of a kept relation with."""
 
     def cls(name: str):
         return jvm.java.lang.Class.forName("org.apache.spark.sql." + name)
@@ -118,6 +122,7 @@ def _plan_kinds(jvm) -> SimpleNamespace:
         file_leaf=cls("execution.datasources.LogicalRelation"),
         fs_relation=cls("execution.datasources.HadoopFsRelation"),
         wrap_array=jvm.scala.collection.immutable.ArraySeq.unsafeWrapArray,
+        of_rows=jvm.org.apache.spark.sql.classic.Dataset.ofRows,
     )
 
 
@@ -209,10 +214,38 @@ def schema(spark: SparkSession, sf_dir: str, name: str) -> StructType:
     return hit[1]
 
 
+# session -> {path: (the LogicalRelation a read resolved, its
+# input_versions, the schema it was read with)}. Per session, because a
+# relation holds the session it was resolved in; weakly, so a collected
+# session drops its relations. No lock: a racing miss reads twice and the
+# last store wins.
+_relations: "weakref.WeakKeyDictionary[SparkSession, dict]" = weakref.WeakKeyDictionary()
+
+
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """One parquet-backed table. Columnar scan; Catalyst pushes filters."""
-    file_schema = schema(spark, sf_dir, name)
-    df = spark.read.schema(file_schema).parquet(f"{sf_dir}/{name}.parquet")
+    """One parquet-backed table. Columnar scan; Catalyst pushes filters.
+
+    The relation a read resolves (file listing and schema) is kept per
+    session while its ``input_versions`` hold, the engine's one version
+    rule: a rewritten file, or a file added to or removed from a
+    directory-backed table, makes the next call read again. Each call
+    returns a new instance of the relation, with fresh expression ids, so
+    two calls can be joined through the DataFrame API."""
+    _ensure_session_conf(spark)
+    path = f"{sf_dir}/{name}.parquet"
+    kept = _relations.setdefault(spark, {})
+    hit = kept.get(path)
+    if hit is not None and unchanged(hit[1]):
+        relation, _, file_schema = hit
+        kinds = _plan_kinds(SparkContext._jvm)
+        df = DataFrame(kinds.of_rows(spark._jsparkSession, relation.newInstance()), spark)
+    else:
+        file_schema = schema(spark, sf_dir, name)
+        df = spark.read.schema(file_schema).parquet(path)
+        relation = df._jdf.queryExecution().analyzed()
+        versions = input_versions(relation)
+        if versions is not None:
+            kept[path] = (relation, versions, file_schema)
     if name == "events":
         df = normalize_events_ts(df, file_schema)
     return df

@@ -25,11 +25,16 @@ the Spark-first equivalent (SURVEY.md §7.4):
                      the relation reads changes (``catalog.input_versions``,
                      the server's result-cache rule), so a fan-out reads
                      like a temp view over the nodes' resolved plans.
+                     ``catalog.table`` keeps each table's relation per
+                     session under the same rule, so a node's first build
+                     lists no files an earlier build in the session listed.
 - slices           → ``slices.py``: kept nodes that slice one source by
                      ``k = literal`` share one scan filtered by
-                     ``k IN (…)``, so the union has one branch per source
-                     rather than per node; the slices are disjoint, so the
-                     rows are the union's, in no defined order.
+                     ``InSet(k, {…})``, so the union has one branch per
+                     source rather than per node; the slices are disjoint,
+                     so the rows are the union's, in no defined order. The
+                     set is held by reference in the generated code, so a
+                     new set of bigint keys compiles nothing.
 
 At 100 TB the fan-out over slices of one source is one parquet scan with
 the key and the residual pushed into it; nodes with their own paths are

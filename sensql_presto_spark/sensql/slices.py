@@ -14,10 +14,15 @@ constants turns the coerced ``cast(3 as bigint)`` of ``k = 3`` into a
 literal, and the optimizer still sees the whole statement.
 
 A group of two or more nodes reads its source once: the condition with
-``k IN (values)`` in place of the key conjunct, and each literal column as
-``CASE k WHEN v_1 THEN lit_1 … ELSE lit_n END`` (the ELSE keeps it
-non-nullable, as in the union). The slices are disjoint, so the one scan
-returns the union's bag of rows; their order is not defined.
+``InSet(k, {values})`` in place of the key conjunct, and each literal
+column as ``CASE k WHEN v_1 THEN lit_1 … ELSE lit_n END`` (the ELSE keeps
+it non-nullable, as in the union). The slices are disjoint, so the one
+scan returns the union's bag of rows; their order is not defined.
+``InSet`` rather than ``In`` because its generated code holds the value
+set by reference, so a group over another set of values of a bigint key
+reuses the code compiled for the last one. Int, short, byte and date keys
+still inline their values through Spark's switch codegen, so a new set of
+them compiles new code.
 """
 
 from __future__ import annotations
@@ -59,7 +64,8 @@ def _kinds(jvm) -> SimpleNamespace:
         attribute_seq=getattr(expressions, "package$AttributeSeq"),
         normalize=jvm.org.apache.spark.sql.catalyst.plans.QueryPlan.normalizeExpressions,
         seq=jvm.org.apache.spark.api.python.PythonUtils.toSeq,
-        In=expressions.In,
+        CreateArray=expressions.CreateArray,
+        InSet=expressions.InSet,
         And=expressions.And,
         case_key_when=expressions.CaseKeyWhen.apply,
         Filter=logical.Filter,
@@ -221,7 +227,7 @@ class Group:
         k = rep.conjuncts[j].key.k
         values = [s.conjuncts[j].key.literal for s in slices]
         conds = [c.raw for c in rep.conjuncts]
-        conds[j] = kinds.In(k, kinds.seq(values))
+        conds[j] = kinds.InSet(k, _value_set(kinds, values, k.dataType()))
         items = []
         for i, col in enumerate(rep.columns):
             if col.literal is None:
@@ -234,6 +240,14 @@ class Group:
         plan = kinds.Project(kinds.seq(items), kinds.Filter(reduce(kinds.And, conds), rep.source))
         session = first.sparkSession
         return DataFrame(kinds.of_rows(session._jsparkSession, plan), session)
+
+
+def _value_set(kinds, literals: list, data_type):
+    """The literals' values as the Scala set ``InSet`` holds, made on the
+    JVM: a Python int that crosses py4j comes back as an Integer, which
+    never equals a Long key value."""
+    values = kinds.CreateArray(kinds.seq(literals), False).eval(None)
+    return values.toSeq(data_type).toSet()
 
 
 def groups(nodes: list) -> list[Group]:

@@ -343,6 +343,73 @@ def test_resolved_node_without_a_catalog_is_named_before_any_build(spark, smoke_
     assert not calls
 
 
+# --- The registry entries' kept engine. ------------------------------------
+
+
+def _write_events(path, user_ids: list[int], values: list[float], row_group_size: int = None) -> None:
+    """An ``events`` file with the columns the SenSQL nodes read."""
+    import datetime
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    ts = datetime.datetime(2024, 1, 1)
+    pq.write_table(
+        pa.table({
+            "user_id": pa.array(user_ids, pa.int64()),
+            "ts": pa.array([ts] * len(user_ids), pa.timestamp("us")),
+            "event_type": ["e"] * len(user_ids),
+            "value": values,
+        }),
+        path,
+        row_group_size=row_group_size,
+    )
+
+
+def test_registry_builds_share_one_kept_engine(spark, smoke_dir):
+    import pandas as pd
+
+    from sensql_presto_spark.queries import get
+    from sensql_presto_spark.queries.sensql_suite import kept_engine
+    from sensql_presto_spark.testing import assert_frames_match
+
+    session = spark.newSession()
+    engine = kept_engine(session, smoke_dir)
+    assert kept_engine(session, smoke_dir) is engine
+    assert build_engine(session, smoke_dir) is not engine
+    assert kept_engine(spark, smoke_dir) is not engine
+    engine = kept_engine(session, smoke_dir)
+    calls = _count_calls(engine)
+    spec = get("sensql_federated_agg")
+    con = duckdb_connection(smoke_dir)
+    try:
+        want = con.sql(spec.oracle).df()
+    finally:
+        con.close()
+    for _ in range(2):
+        df = spec.build(session, smoke_dir)
+        assert_frames_match(pd.DataFrame([tuple(r) for r in df.collect()], columns=df.columns), want)
+    assert calls == {"node_a": 1, "node_b": 1}
+
+
+def test_events_rewritten_between_registry_builds_returns_the_new_rows(spark, tmp_path):
+    """Fault injection: the kept engine's node relations and the catalog's
+    kept ``events`` relation hold the old file listing, which splits the
+    longer new file at the old length and misses rows."""
+    from sensql_presto_spark.queries import get
+
+    path = str(tmp_path / "events.parquet")
+    spec = get("sensql_federated_single_node")
+    _write_events(path, [2, 3, 6], [1.0, 5.0, 3.0])
+    assert tuple(spec.build(spark, str(tmp_path)).collect()[0]) == (2, 2.0)
+    assert tuple(spec.build(spark, str(tmp_path)).collect()[0]) == (2, 2.0)
+    ids = list(range(3000))
+    _write_events(path, ids, [float(i) for i in ids], row_group_size=100)
+    node_c = [i for i in ids if i % 4 == 2]
+    want = (len(node_c), round(sum(node_c) / len(node_c), 4))
+    assert tuple(spec.build(spark, str(tmp_path)).collect()[0]) == want
+
+
 # --- Slices of one source: one shared scan, the union's rows. --------------
 
 
@@ -445,6 +512,29 @@ def test_slices_keep_the_union_rows_against_duckdb(spark, smoke_dir):
         con.close()
     assert sorted((r.node_id, r.n, r.s) for r in got) == pytest.approx(sorted(want))
     assert _scans(engine, ids) == 1
+
+
+def test_new_bigint_key_set_compiles_no_code(spark, smoke_dir):
+    """The group's key test holds its value set by reference, so a statement
+    over another 2-node set reuses the first statement's compiled code."""
+    engine = _events_engine(spark, smoke_dir, 32)
+    compiled = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    query = "SELECT sensor, count(*) AS n, round(sum(value), 4) AS s FROM {m} GROUP BY sensor"
+    con = duckdb_connection(smoke_dir)
+    try:
+        for keys, compiles in (((3, 7), None), ((12, 25), 0)):
+            before = compiled.getCount()
+            got = engine.spark.sql(query, m=engine.fanout([f"s{i:02d}" for i in keys])).collect()
+            if compiles is not None:
+                assert compiled.getCount() - before == compiles
+            want = con.sql(
+                "SELECT event_type, count(*), round(sum(value), 4) FROM events "
+                f"WHERE user_id % 32 IN {keys} GROUP BY 1"
+            ).fetchall()
+            assert sorted(map(tuple, got)) == pytest.approx(sorted(want))
+            assert _scans(engine, [f"s{i:02d}" for i in keys]) == 1
+    finally:
+        con.close()
 
 
 def test_nodes_with_one_key_value_return_each_row_once_per_node(spark, tmp_path):
