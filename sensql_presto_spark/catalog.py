@@ -79,12 +79,12 @@ def normalize_events_ts(df: DataFrame, schema: StructType | None = None) -> Data
 def file_version(path: str) -> tuple[str, int, int] | None:
     """A local file's version: (absolute path, ``st_mtime_ns``, ``st_size``).
 
-    The one data-version rule of the engine: the schema cache and the kept
-    table relations here, the server's result cache and the SenSQL engine's
-    resolved nodes all treat a file as unchanged exactly while this tuple
-    is. A directory's version changes when an entry is added to it or
-    removed from it. None when ``path`` is not a local file (a URI, or
-    missing).
+    The one data-version rule of the engine: the schema cache, the kept
+    table relations and the registered views here, the server's result
+    cache and the SenSQL engine's resolved nodes all treat a file as
+    unchanged exactly while this tuple is. A directory's version changes
+    when an entry is added to it or removed from it. None when ``path`` is
+    not a local file (a URI, or missing).
     """
     try:
         st = os.stat(path)
@@ -251,27 +251,41 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-# session -> sf_dir whose views are already registered. Re-registering per
-# query replaced every view and so invalidated any cached plan that
-# referenced one — measurable per-query overhead once bench timed builds
-# (round-1 verdict "what's wrong" #6).
+# session -> (sf_dir whose views are registered, the input_versions of
+# the relations they hold). Re-registering per query would replace every
+# view and so invalidate any cached plan that referenced one, a
+# measurable per-query overhead on timed builds.
 # Keyed on the SparkSession OBJECT (weakly), not the SparkContext: temp
 # views are per-session state, and forked sessions (spark.newSession(),
 # the HTTP server's per-client isolation) share one context but need their
 # own registration.  WeakKeyDictionary so a collected session can never
 # alias a later one's cache slot.
-_registered: "weakref.WeakKeyDictionary[SparkSession, str]" = weakref.WeakKeyDictionary()
+_registered: "weakref.WeakKeyDictionary[SparkSession, tuple]" = weakref.WeakKeyDictionary()
 
 
 def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every testdata table as a temp view, once per (session, dir)."""
-    if _registered.get(spark) == sf_dir:
+    """Register every testdata table as a temp view, and information_schema,
+    once per (session, dir) while the views' files are unchanged.
+
+    The views follow the engine's version rule (``file_version``): a view
+    holds the relation its table resolved, so when a file it reads is
+    rewritten, or a file is added to or removed from a directory-backed
+    table, the next call registers every view again. The check stats each
+    input file and table directory once per call. A table whose relation
+    has no versions (not a local file) is registered once."""
+    hit = _registered.get(spark)
+    if hit is not None and hit[0] == sf_dir and unchanged(hit[1]):
         return
+    kept = _relations.setdefault(spark, {})
+    versions = []
     for name in TABLES:
         table(spark, sf_dir, name).createOrReplaceTempView(name)
+        entry = kept.get(f"{sf_dir}/{name}.parquet")
+        if entry is not None:
+            versions += entry[1]
     _register_information_schema(spark, sf_dir)
     # Only one sf_dir's views can be current in a session at a time.
-    _registered[spark] = sf_dir
+    _registered[spark] = (sf_dir, tuple(versions))
 
 
 def _register_information_schema(spark: SparkSession, sf_dir: str) -> None:

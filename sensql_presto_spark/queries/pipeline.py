@@ -90,7 +90,7 @@ _DUCK_SHINGLES = """
     )
 """
 
-# Hot-key frequency caps (r8 VERDICT What's-wrong #3).  The prefix filter
+# Hot-key frequency caps.  The prefix filter
 # already routes each doc through its RAREST shingles, but on a
 # boilerplate-heavy corpus (many documents sharing their full text) even
 # the rarest shingle of a doc can carry document frequency ~n, fattening
@@ -119,9 +119,9 @@ _HOT_SHINGLE_CAP = 64
 # shingles, so the candidate set is provably COMPLETE) and the final
 # output is defined purely by the exact-Jaccard verification — the result
 # set is identical to the O(n²) all-pairs form, but the oracle runs in
-# O(candidate pairs).  The r3 full-registry sf0.1 sweep spent ~45 min in
-# the all-pairs DuckDB join (5k docs -> 12.5M list_intersect calls);
-# this form keeps routine sf0.1 sweeps cheap.
+# O(candidate pairs).  An all-pairs DuckDB join costs ~45 min of an sf0.1
+# registry sweep (5k docs -> 12.5M list_intersect calls); this form keeps
+# routine sf0.1 sweeps cheap.
 _DUCK_JACCARD_PAIRS = f"""
     WITH {_DUCK_SHINGLES},
     sizes AS (SELECT doc_id, len(shingles) AS n FROM sh),
@@ -159,13 +159,12 @@ _DUCK_JACCARD_PAIRS = f"""
 # naive full inverted index joins f^2 rows per shingle of doc-frequency f,
 # a measured 4x slowdown on this vocabulary-dense corpus). Candidates are
 # then verified with the exact Jaccard.
-# r9 perf: the all-SQL form recomputed the shingle CTE across its four
+# An all-SQL form recomputes the shingle CTE across its four
 # referencing branches (inv + the two verify joins) — measured 8.0s at
-# sf0.1.  The minhash r2 cure applies verbatim: MATERIALIZE the shingle
-# set once via localCheckpoint and let every branch read the in-memory
-# relation (same-session median 4.4s, 1.8x; the residual is candidate
-# generation + the verify joins themselves, not recomputation; results
-# re-verified EXACT at both scales).
+# sf0.1.  As in minhash, the shingle set is MATERIALIZED once via
+# localCheckpoint and every branch reads the in-memory relation
+# (same-session median 4.4s, 1.8x; the residual is candidate
+# generation + the verify joins themselves, not recomputation).
 _NGRAM_JACCARD_SQL = f"""
     WITH sizes AS (SELECT doc_id, size(shingles) AS n FROM {{nj_sh}}),
     inv AS (SELECT doc_id, explode(shingles) AS s FROM {{nj_sh}}),
@@ -379,13 +378,12 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (codegen), and the 32 bit-sums + signature assembly are plain codegen'd
 # aggregates. Both engines compute hash((h1*131+h2)*131+h3 mod p)
 # identically, so the oracle matches bit-for-bit.
-# r13 scan-audit fix: the band self-join (bands a JOIN bands b) used to
-# inline the ENTIRE signature pipeline (tokenize -> vocab hash -> shingle
-# window -> 32 bit-sums) once per side, and dedup_eval_pr inlined that
-# doubled subtree again — the signature table is therefore staged as a
-# localCheckpoint (doc-sized: one row per document) and the band join
-# reads it twice for free.  SQL below is the r12 text verbatim, split at
-# the sim boundary.
+# Inlined, the band self-join (bands a JOIN bands b) would run the
+# ENTIRE signature pipeline (tokenize -> vocab hash -> shingle window ->
+# 32 bit-sums) once per side, and dedup_eval_pr would inline that doubled
+# subtree again — so the signature table is staged as a localCheckpoint
+# (doc-sized: one row per document) and the band join reads it twice for
+# free.  The SQL is split at the sim boundary.
 _SIMHASH_SIG_SQL = """
     WITH tok AS (SELECT doc_id, split(text, ' ') AS t FROM documents),
     trows AS (SELECT doc_id, posexplode(t) AS (pos, tk) FROM tok WHERE size(t) >= 3),
@@ -532,7 +530,7 @@ _SIMHASH_ORACLE = """
     tags=("pipeline", "dedup"),
     doc="SimHash near-dup pairs (hamming <= 3) over 3-gram shingles: "
     "32-bit signature, 4-byte pigeonhole banding as a complete candidate "
-    "generator; the doc-sized signature table is checkpointed once (r13) "
+    "generator; the doc-sized signature table is checkpointed once "
     "so the band self-join never re-runs the signature pipeline.",
 )
 def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -574,6 +572,20 @@ _sql_query(
 # Clustering
 # ---------------------------------------------------------------------------
 
+# Every embedding with its elements quantized to integer milliunits, so
+# distances and dot products are exact BIGINT sums in both engines.
+_SPARK_QUANTIZED = """
+    SELECT vec_id,
+           transform(embedding, x -> cast(round(cast(x AS double) * 1000) AS bigint)) AS v
+    FROM embeddings
+    """
+
+_DUCK_QUANTIZED = """
+    SELECT vec_id,
+           [CAST(round(CAST(x AS DOUBLE) * 1000) AS BIGINT) FOR x IN embedding] AS v
+    FROM embeddings
+    """
+
 # Distributed k-means (Lloyd's algorithm, k=8, two fixed iterations) over
 # the embedding corpus — the document-clustering primitive of a training-
 # data pipeline (topic balancing, per-cluster sampling).  Scale shape per
@@ -597,11 +609,7 @@ _sql_query(
 _sql_query(
     "cluster_kmeans",
     f"""
-    WITH q AS (
-        SELECT vec_id,
-               transform(embedding, x -> cast(round(cast(x AS double) * 1000) AS bigint)) AS v
-        FROM embeddings
-    ),
+    WITH q AS ({_SPARK_QUANTIZED}),
     c0 AS (SELECT vec_id AS cid, v AS cv FROM q WHERE vec_id < 8),
     d1 AS (
         SELECT q.vec_id, q.v, c0.cid,
@@ -647,12 +655,8 @@ _sql_query(
            min(vec_id) AS first_member
     FROM m2 GROUP BY cid ORDER BY cid
     """,
-    oracle="""
-    WITH q AS (
-        SELECT vec_id,
-               [CAST(round(CAST(x AS DOUBLE) * 1000) AS BIGINT) FOR x IN embedding] AS v
-        FROM embeddings
-    ),
+    oracle=f"""
+    WITH q AS ({_DUCK_QUANTIZED}),
     c0 AS (SELECT vec_id AS cid, v AS cv FROM q WHERE vec_id < 8),
     d1 AS (
         SELECT q.vec_id, q.v, c0.cid,
@@ -732,16 +736,10 @@ _sql_query(
 # dedup_minhash_lsh, the builder MATERIALIZES the assigned+normed vectors
 # once via localCheckpoint (at cluster scale: a staging table) and the
 # self-join reads the materialized relation.
-# r13: the quantized corpus q is staged (localCheckpoint) before the
-# assign SQL — inlined, the q CTE re-ran the parquet scan + quantize
+# The quantized corpus q is staged (localCheckpoint) before the
+# assign SQL — inlined, the q CTE would re-run the parquet scan + quantize
 # transform once per reference (params / c0 / c1 / vcell = 4 corpus
 # scans per assign build).
-_SEM_Q_SQL = """
-    SELECT vec_id,
-           transform(embedding, x -> cast(round(cast(x AS double) * 1000) AS bigint)) AS v
-    FROM embeddings
-    """
-
 _SEM_ASSIGN_SQL = f"""
     WITH q AS (SELECT vec_id, v FROM {{sem_q}}),
     params AS (
@@ -824,12 +822,8 @@ _SEM_PAIRS_SQL = f"""
 
 @register(
     "dedup_semantic",
-    oracle="""
-    WITH q AS (
-        SELECT vec_id,
-               [CAST(round(CAST(x AS DOUBLE) * 1000) AS BIGINT) FOR x IN embedding] AS v
-        FROM embeddings
-    ),
+    oracle=f"""
+    WITH q AS ({_DUCK_QUANTIZED}),
     params AS (
         SELECT k, greatest(4, least(4096, CAST(floor(sqrt(CAST(k AS DOUBLE))) AS BIGINT))) AS m
         FROM (SELECT greatest(8, count(*) // 64) AS k FROM q)
@@ -902,8 +896,9 @@ def dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _sem_assign_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The two-level IVF assignment plan over the staged quantized
     corpus (split out so tests/test_plans.py can pin its join shapes)."""
-    q = catalog.sql(spark, sf_dir, _SEM_Q_SQL).localCheckpoint(eager=True)
+    q = catalog.sql(spark, sf_dir, _SPARK_QUANTIZED).localCheckpoint(eager=True)
     return spark.sql(_SEM_ASSIGN_SQL, sem_q=q)
+
 
 # Cluster-balanced sampling: take the SAME number of items from every
 # semantic cluster (topic balancing for pretraining mixes — the cluster
@@ -912,26 +907,9 @@ def _sem_assign_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
 # shuffle), then a deterministic Knuth-multiplicative hash ranks within
 # each cluster and the top-8 survive — reproducible across runs/engines,
 # no rand(). Scale: one exchange for the per-cluster rank window; the
-# hash ranking avoids any global sort.
-_sql_query(
-    "cluster_balanced_sample",
-    f"""
-    WITH q AS (
-        SELECT vec_id,
-               transform(embedding, x -> cast(round(cast(x AS double) * 1000) AS bigint)) AS v
-        FROM embeddings
-    ),
-    c0 AS (SELECT vec_id AS cid, v AS cv FROM q WHERE vec_id < 8),
-    assign AS (
-        SELECT vec_id,
-               min_by(cid, named_struct('d', dist, 'c', cid)) AS cid
-        FROM (
-            SELECT q.vec_id, c0.cid,
-                   {vec.sq_dist('q.v', 'c0.cv', 'bigint')} AS dist
-            FROM q CROSS JOIN c0
-        )
-        GROUP BY vec_id
-    ),
+# hash ranking avoids any global sort. The ranking is dialect-neutral:
+# the plan and its oracle share it.
+_BALANCED_SAMPLE_SQL = """
     ranked AS (
         SELECT vec_id, cid,
                row_number() OVER (
@@ -943,13 +921,26 @@ _sql_query(
     SELECT cid AS cluster_id, rk AS sample_rank, vec_id
     FROM ranked WHERE rk <= 8
     ORDER BY cid, rk
-    """,
-    oracle="""
-    WITH q AS (
+    """
+
+_sql_query(
+    "cluster_balanced_sample",
+    f"""
+    WITH q AS ({_SPARK_QUANTIZED}),
+    c0 AS (SELECT vec_id AS cid, v AS cv FROM q WHERE vec_id < 8),
+    assign AS (
         SELECT vec_id,
-               [CAST(round(CAST(x AS DOUBLE) * 1000) AS BIGINT) FOR x IN embedding] AS v
-        FROM embeddings
+               min_by(cid, named_struct('d', dist, 'c', cid)) AS cid
+        FROM (
+            SELECT q.vec_id, c0.cid,
+                   {vec.sq_dist('q.v', 'c0.cv', 'bigint')} AS dist
+            FROM q CROSS JOIN c0
+        )
+        GROUP BY vec_id
     ),
+    {_BALANCED_SAMPLE_SQL}""",
+    oracle=f"""
+    WITH q AS ({_DUCK_QUANTIZED}),
     c0 AS (SELECT vec_id AS cid, v AS cv FROM q WHERE vec_id < 8),
     assign AS (
         SELECT vec_id, cid FROM (
@@ -962,18 +953,7 @@ _sql_query(
             FROM q CROSS JOIN c0
         ) WHERE rk = 1
     ),
-    ranked AS (
-        SELECT vec_id, cid,
-               row_number() OVER (
-                   PARTITION BY cid
-                   ORDER BY (vec_id * 2654435761) % 4294967296, vec_id
-               ) AS rk
-        FROM assign
-    )
-    SELECT cid AS cluster_id, rk AS sample_rank, vec_id
-    FROM ranked WHERE rk <= 8
-    ORDER BY cid, rk
-    """,
+    {_BALANCED_SAMPLE_SQL}""",
     tags=("pipeline", "clustering", "sampling"),
     doc="Cluster-balanced sampling: k-means E-step assignment + "
     "deterministic Knuth-hash top-8 per cluster — topic-balanced "
@@ -983,6 +963,23 @@ _sql_query(
 # ---------------------------------------------------------------------------
 # Similarity search
 # ---------------------------------------------------------------------------
+
+
+def _topk_sql(k: int) -> str:
+    """Each query's ``k`` nearest neighbours by ``scored.cos``, with their
+    rank and rounded cosine: the dialect-neutral tail of the similarity
+    plans and their oracles."""
+    return f"""
+    ranked AS (
+        SELECT query_id, neighbor_id, cos,
+               row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rk
+        FROM scored
+    )
+    SELECT query_id, neighbor_id, rk, round(cos, 4) AS cos_sim
+    FROM ranked WHERE rk <= {k}
+    ORDER BY query_id, rk
+    """
+
 
 # Brute-force top-k: the query set (vec_id < 5) is tiny so Catalyst
 # broadcasts it — the plan is a single scan of the corpus against a
@@ -999,16 +996,8 @@ _sql_query(
                {vec.dot('q.v', 'c.v', 'double')} / (q.nrm * c.nrm) AS cos
         FROM q JOIN n c ON q.vec_id <> c.vec_id
     ),
-    ranked AS (
-        SELECT query_id, neighbor_id, cos,
-               row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rk
-        FROM scored
-    )
-    SELECT query_id, neighbor_id, rk, round(cos, 4) AS cos_sim
-    FROM ranked WHERE rk <= 5
-    ORDER BY query_id, rk
-    """,
-    oracle="""
+    {_topk_sql(5)}""",
+    oracle=f"""
     WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
     q AS (SELECT * FROM e WHERE vec_id < 5),
     scored AS (
@@ -1016,28 +1005,15 @@ _sql_query(
                list_cosine_similarity(q.v, c.v) AS cos
         FROM q JOIN e c ON q.vec_id <> c.vec_id
     ),
-    ranked AS (
-        SELECT query_id, neighbor_id, cos,
-               row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rk
-        FROM scored
-    )
-    SELECT query_id, neighbor_id, rk, round(cos, 4) AS cos_sim
-    FROM ranked WHERE rk <= 5
-    ORDER BY query_id, rk
-    """,
+    {_topk_sql(5)}""",
     tags=("pipeline", "similarity"),
     bench=True,
 )
 
-# IVF-style ANN: centroids = element-wise mean per label (deterministic
-# training), every vector assigned to its nearest centroid, queries probe
-# only their own bucket (nprobe=1). The scan is pruned to ~1/C of the
-# corpus per query — the scale path. Oracle replicates the same logic, so
-# this checks the *mechanism* exactly (recall vs brute force is asserted in
-# tests/test_pipeline.py).
-_sql_query(
-    "sim_ivf_topk",
-    f"""
+# The IVF index of sim_ivf_topk and sim_ivf_multiprobe: one centroid per
+# label, the element-wise mean of its vectors, with the norms the Spark
+# plan's cosine divides by.
+_SPARK_IVF_CENTROIDS = f"""
     WITH e AS (SELECT vec_id, label, transform(embedding, x -> cast(x AS double)) AS v FROM embeddings),
     cpos AS (
         SELECT label, pos, avg(val) AS m
@@ -1050,7 +1026,27 @@ _sql_query(
         FROM cpos GROUP BY label
     ),
     cnorm AS (SELECT c_id, cv, sqrt({vec.norm2('cv', 'double')}) AS cnrm FROM cent),
-    n AS (SELECT vec_id, v, sqrt({vec.norm2('v', 'double')}) AS nrm FROM e),
+    n AS (SELECT vec_id, v, sqrt({vec.norm2('v', 'double')}) AS nrm FROM e),"""
+
+_DUCK_IVF_CENTROIDS = """
+    WITH e AS (SELECT vec_id, label, embedding::DOUBLE[] AS v FROM embeddings),
+    cpos AS (
+        SELECT label, i AS pos, avg(v[i]) AS m
+        FROM e, range(1, 65) t(i)
+        GROUP BY label, i
+    ),
+    cent AS (SELECT label AS c_id, list(m ORDER BY pos) AS cv FROM cpos GROUP BY label),"""
+
+# IVF-style ANN: centroids = element-wise mean per label (deterministic
+# training), every vector assigned to its nearest centroid, queries probe
+# only their own bucket (nprobe=1). The scan is pruned to ~1/C of the
+# corpus per query — the scale path. Oracle replicates the same logic, so
+# this checks the *mechanism* exactly (recall vs brute force is asserted in
+# tests/test_pipeline.py).
+_sql_query(
+    "sim_ivf_topk",
+    f"""
+    {_SPARK_IVF_CENTROIDS}
     assign AS (
         SELECT vec_id, max_by(c_id, cos) AS bucket
         FROM (
@@ -1067,23 +1063,9 @@ _sql_query(
                {vec.dot('q.v', 'c.v', 'double')} / (q.nrm * c.nrm) AS cos
         FROM q JOIN corpus c ON q.bucket = c.bucket AND q.vec_id <> c.vec_id
     ),
-    ranked AS (
-        SELECT query_id, neighbor_id, cos,
-               row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rk
-        FROM scored
-    )
-    SELECT query_id, neighbor_id, rk, round(cos, 4) AS cos_sim
-    FROM ranked WHERE rk <= 3
-    ORDER BY query_id, rk
-    """,
-    oracle="""
-    WITH e AS (SELECT vec_id, label, embedding::DOUBLE[] AS v FROM embeddings),
-    cpos AS (
-        SELECT label, i AS pos, avg(v[i]) AS m
-        FROM e, range(1, 65) t(i)
-        GROUP BY label, i
-    ),
-    cent AS (SELECT label AS c_id, list(m ORDER BY pos) AS cv FROM cpos GROUP BY label),
+    {_topk_sql(3)}""",
+    oracle=f"""
+    {_DUCK_IVF_CENTROIDS}
     assign AS (
         SELECT vec_id, arg_max(c_id, cos) AS bucket
         FROM (
@@ -1099,15 +1081,7 @@ _sql_query(
                list_cosine_similarity(q.v, c.v) AS cos
         FROM q JOIN corpus c ON q.bucket = c.bucket AND q.vec_id <> c.vec_id
     ),
-    ranked AS (
-        SELECT query_id, neighbor_id, cos,
-               row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rk
-        FROM scored
-    )
-    SELECT query_id, neighbor_id, rk, round(cos, 4) AS cos_sim
-    FROM ranked WHERE rk <= 3
-    ORDER BY query_id, rk
-    """,
+    {_topk_sql(3)}""",
     tags=("pipeline", "similarity"),
 )
 
@@ -1872,9 +1846,32 @@ _sql_query(
 # the projections, the only shuffles are the dedup groupBy and the final
 # per-language aggregation — at 100 TB this runs as two exchanges, no
 # intermediate materialization, no driver round-trips between stages.
+# The plan and its oracle differ only in the quality and redaction
+# functions; the gate, the dedup and the card rollup are shared.
+_E2E_DEDUP_SQL = """
+    gated AS (
+        SELECT * FROM quality WHERE n_unique / cast(n_tokens AS double) > 0.3
+    ),
+    deduped AS (
+        SELECT min(doc_id) AS doc_id, min(lang) AS lang, min(n_tokens) AS n_tokens,
+               text
+        FROM gated
+        GROUP BY text
+    ),"""
+
+_E2E_CARD_SQL = """
+    SELECT lang,
+           count(*) AS n_docs,
+           CAST(sum(n_tokens) AS BIGINT) AS total_tokens,
+           CAST(sum(length(text)) AS BIGINT) AS total_chars
+    FROM redacted
+    GROUP BY lang
+    ORDER BY lang
+    """
+
 _sql_query(
     "pipeline_end_to_end",
-    """
+    f"""
     WITH quality AS (
         SELECT doc_id, lang, text, n_chars,
                size(split(text, ' ')) AS n_tokens,
@@ -1882,29 +1879,14 @@ _sql_query(
         FROM documents
         WHERE n_chars >= 150
     ),
-    gated AS (
-        SELECT * FROM quality WHERE n_unique / cast(n_tokens AS double) > 0.3
-    ),
-    deduped AS (
-        SELECT min(doc_id) AS doc_id, min(lang) AS lang, min(n_tokens) AS n_tokens,
-               text
-        FROM gated
-        GROUP BY text
-    ),
+    {_E2E_DEDUP_SQL}
     redacted AS (
         SELECT doc_id, lang, n_tokens,
                regexp_replace(text, '[a-z0-9._%+-]+@[a-z0-9.-]+[.][a-z]+', '<EMAIL>') AS text
         FROM deduped
     )
-    SELECT lang,
-           count(*) AS n_docs,
-           CAST(sum(n_tokens) AS BIGINT) AS total_tokens,
-           CAST(sum(length(text)) AS BIGINT) AS total_chars
-    FROM redacted
-    GROUP BY lang
-    ORDER BY lang
-    """,
-    oracle="""
+    {_E2E_CARD_SQL}""",
+    oracle=f"""
     WITH quality AS (
         SELECT doc_id, lang, text, n_chars,
                len(string_split(text, ' ')) AS n_tokens,
@@ -1912,44 +1894,29 @@ _sql_query(
         FROM documents
         WHERE n_chars >= 150
     ),
-    gated AS (
-        SELECT * FROM quality WHERE n_unique / cast(n_tokens AS double) > 0.3
-    ),
-    deduped AS (
-        SELECT min(doc_id) AS doc_id, min(lang) AS lang, min(n_tokens) AS n_tokens,
-               text
-        FROM gated
-        GROUP BY text
-    ),
+    {_E2E_DEDUP_SQL}
     redacted AS (
         SELECT doc_id, lang, n_tokens,
                regexp_replace(text, '[a-z0-9._%+-]+@[a-z0-9.-]+[.][a-z]+', '<EMAIL>', 'g') AS text
         FROM deduped
     )
-    SELECT lang,
-           count(*) AS n_docs,
-           CAST(sum(n_tokens) AS BIGINT) AS total_tokens,
-           CAST(sum(length(text)) AS BIGINT) AS total_chars
-    FROM redacted
-    GROUP BY lang
-    ORDER BY lang
-    """,
+    {_E2E_CARD_SQL}""",
     tags=("pipeline", "end-to-end"),
     bench=True,
 )
 
 
 # --- audio windowed energy over a binary modality column, with a REAL
-#     WAV/PCM codec (round 3; replaces the 8-bit fake): each text payload
-#     is serialized executor-side into a complete RIFF/WAVE file (16-bit
-#     mono PCM at 8 kHz, sample s = (byte-96)*256 — deterministic, since
-#     the container ships no audio corpus), then decoded back with the
-#     stdlib wave/struct parser in sensql_presto_spark.multimodal and
-#     windowed into 100-sample chunks with integer energy sum(s^2) — the
-#     RMS shape without float drift. The oracle predicts the decoded
-#     samples from the same byte arithmetic (energy scales by 256^2) and
-#     asserts the decoded sample rate. mapInPandas explodes blob rows into
-#     window rows executor-side; no shuffle, driver never sees payloads.
+#     WAV/PCM codec: each text payload is serialized executor-side into a
+#     complete RIFF/WAVE file (16-bit mono PCM at 8 kHz, sample s =
+#     (byte-96)*256 — deterministic, since the container ships no audio
+#     corpus), then decoded back with the stdlib wave/struct parser in
+#     sensql_presto_spark.multimodal and windowed into 100-sample chunks
+#     with integer energy sum(s^2) — the RMS shape without float drift. The
+#     oracle predicts the decoded samples from the same byte arithmetic
+#     (energy scales by 256^2) and asserts the decoded sample rate.
+#     mapInPandas explodes blob rows into window rows executor-side; no
+#     shuffle, driver never sees payloads.
 
 
 @register(
@@ -2009,16 +1976,15 @@ def mm_audio_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     return df.mapInPandas(windows, out_schema).orderBy("doc_id", "window_idx")
 
 
-# --- image decode over a binary modality column, with a REAL PNG codec
-#     (round 3; closes the last multimodal stub): each text payload is
-#     rendered executor-side as an 8-bit greyscale PNG (width 32, one
-#     pixel per byte, scanline filter type cycling y % 5 so the decoder's
-#     Sub/Up/Average/Paeth unfilter paths are all genuinely exercised),
-#     then decoded back with the stdlib zlib/struct parser in
-#     sensql_presto_spark.multimodal (chunk walk + CRC validation +
-#     inflate + unfilter). The oracle predicts dimensions and the pixel
-#     checksum from the same byte arithmetic. mapInPandas keeps payloads
-#     executor-side; no shuffle.
+# --- image decode over a binary modality column, with a REAL PNG codec:
+#     each text payload is rendered executor-side as an 8-bit greyscale PNG
+#     (width 32, one pixel per byte, scanline filter type cycling y % 5 so
+#     the decoder's Sub/Up/Average/Paeth unfilter paths are all genuinely
+#     exercised), then decoded back with the stdlib zlib/struct parser in
+#     sensql_presto_spark.multimodal (chunk walk + CRC validation + inflate
+#     + unfilter). The oracle predicts dimensions and the pixel checksum
+#     from the same byte arithmetic. mapInPandas keeps payloads executor-
+#     side; no shuffle.
 
 
 @register(
@@ -2179,21 +2145,6 @@ _sql_query(
     GROUP BY lang
     ORDER BY lang
     """,
-    oracle="""
-    WITH ranked AS (
-        SELECT doc_id, lang,
-               row_number() OVER (PARTITION BY lang
-                                  ORDER BY (doc_id * 2654435761) % 4294967296, doc_id) AS rk
-        FROM documents
-    )
-    SELECT lang,
-           count(*) AS n_sampled,
-           CAST(min(doc_id) AS BIGINT) AS first_doc,
-           CAST(sum(doc_id) AS BIGINT) AS doc_id_sum
-    FROM ranked WHERE rk <= 30
-    GROUP BY lang
-    ORDER BY lang
-    """,
     tags=("pipeline", "text", "sampling"),
 )
 
@@ -2201,49 +2152,38 @@ _sql_query(
 # document-frequency aggregation, and a windowed top-3 — the corpus
 # keyword-extraction shape (two shuffles: term stats, then per-lang rank).
 # Scores are quantized to integers before ranking so ties and hashes are
-# engine-stable.
+# engine-stable. Only the tokenization differs between the plan and its
+# oracle.
+_TFIDF_RANK_SQL = """
+    df AS (SELECT term, count(DISTINCT doc_id) AS df FROM posting GROUP BY term),
+    lang_tf AS (SELECT lang, term, count(*) AS tf FROM posting GROUP BY lang, term),
+    scored AS (
+        SELECT l.lang, l.term,
+               cast(floor(l.tf * ln(cast(n.n AS double) / d.df) * 10000 + 0.5) AS BIGINT) AS score_e4
+        FROM lang_tf l JOIN df d ON l.term = d.term CROSS JOIN n_docs n
+    ),
+    ranked AS (
+        SELECT lang, term, score_e4,
+               row_number() OVER (PARTITION BY lang ORDER BY score_e4 DESC, term) AS rk
+        FROM scored
+    )
+    SELECT lang, rk, term, score_e4
+    FROM ranked WHERE rk <= 3
+    ORDER BY lang, rk
+    """
+
 _sql_query(
     "text_tfidf_top_terms",
-    """
+    f"""
     WITH docs AS (SELECT doc_id, lang, array_distinct(split(text, ' ')) AS terms FROM documents),
     n_docs AS (SELECT count(*) AS n FROM docs),
     posting AS (SELECT doc_id, lang, explode(terms) AS term FROM docs),
-    df AS (SELECT term, count(DISTINCT doc_id) AS df FROM posting GROUP BY term),
-    lang_tf AS (SELECT lang, term, count(*) AS tf FROM posting GROUP BY lang, term),
-    scored AS (
-        SELECT l.lang, l.term,
-               cast(floor(l.tf * ln(cast(n.n AS double) / d.df) * 10000 + 0.5) AS BIGINT) AS score_e4
-        FROM lang_tf l JOIN df d ON l.term = d.term CROSS JOIN n_docs n
-    ),
-    ranked AS (
-        SELECT lang, term, score_e4,
-               row_number() OVER (PARTITION BY lang ORDER BY score_e4 DESC, term) AS rk
-        FROM scored
-    )
-    SELECT lang, rk, term, score_e4
-    FROM ranked WHERE rk <= 3
-    ORDER BY lang, rk
-    """,
-    oracle="""
+    {_TFIDF_RANK_SQL}""",
+    oracle=f"""
     WITH docs AS (SELECT doc_id, lang, list_distinct(string_split(text, ' ')) AS terms FROM documents),
     n_docs AS (SELECT count(*) AS n FROM docs),
     posting AS (SELECT doc_id, lang, unnest(terms) AS term FROM docs),
-    df AS (SELECT term, count(DISTINCT doc_id) AS df FROM posting GROUP BY term),
-    lang_tf AS (SELECT lang, term, count(*) AS tf FROM posting GROUP BY lang, term),
-    scored AS (
-        SELECT l.lang, l.term,
-               cast(floor(l.tf * ln(cast(n.n AS double) / d.df) * 10000 + 0.5) AS BIGINT) AS score_e4
-        FROM lang_tf l JOIN df d ON l.term = d.term CROSS JOIN n_docs n
-    ),
-    ranked AS (
-        SELECT lang, term, score_e4,
-               row_number() OVER (PARTITION BY lang ORDER BY score_e4 DESC, term) AS rk
-        FROM scored
-    )
-    SELECT lang, rk, term, score_e4
-    FROM ranked WHERE rk <= 3
-    ORDER BY lang, rk
-    """,
+    {_TFIDF_RANK_SQL}""",
     tags=("pipeline", "text", "tfidf"),
 )
 
@@ -2259,26 +2199,13 @@ _sql_query(
 #     to integer micro-units BEFORE summing (log2 is libm and could differ
 #     in the last ulp across engines; exact integer sums cannot).
 
-_TRIGRAM_SPARK = """
-    WITH docs AS (
-        -- compute-dense explode ahead: file-split sizing is a byte
-        -- heuristic and would scan this small zstd corpus in ~1 task, so
-        -- fan the rows out explicitly before generating ~20x their bytes
-        -- in trigrams (shuffling the raw docs costs ~nothing). At cluster
-        -- scale the same hint bounds per-task explode output.
-        SELECT /*+ REPARTITION(64) */ doc_id, text FROM documents
-    ),
-    tri AS (
-        SELECT doc_id, explode(transform(sequence(1, length(text) - 2),
-                                         i -> substring(text, i, 3))) AS tg
-        FROM docs
-    ),
+# The model and the scoring are dialect-neutral. The corpus total rides a
+# global window over the ~vocab-sized aggregate (one partition of ~10k
+# rows), so the full-corpus trigram explode runs ONCE — a separate
+# `SELECT count(*) FROM tri` total would re-explode the whole corpus
+# (Spark CTEs are not materialized).
+_TRIGRAM_SCORE_SQL = """
     model AS (
-        -- the corpus total rides a global window over the ~vocab-sized
-        -- aggregate (one partition of ~10k rows), so the full-corpus
-        -- trigram explode runs ONCE — a separate `SELECT count(*) FROM
-        -- tri` total would re-explode the whole corpus (Spark CTEs are
-        -- not materialized)
         SELECT tg, c, sum(c) OVER () AS t
         FROM (SELECT tg, count(*) AS c FROM tri GROUP BY tg)
     ),
@@ -2296,28 +2223,28 @@ _TRIGRAM_SPARK = """
     ORDER BY doc_id
     """
 
-_TRIGRAM_DUCK = """
+_TRIGRAM_SPARK = f"""
+    WITH docs AS (
+        -- compute-dense explode ahead: file-split sizing is a byte
+        -- heuristic and would scan this small zstd corpus in ~1 task, so
+        -- fan the rows out explicitly before generating ~20x their bytes
+        -- in trigrams (shuffling the raw docs costs ~nothing). At cluster
+        -- scale the same hint bounds per-task explode output.
+        SELECT /*+ REPARTITION(64) */ doc_id, text FROM documents
+    ),
+    tri AS (
+        SELECT doc_id, explode(transform(sequence(1, length(text) - 2),
+                                         i -> substring(text, i, 3))) AS tg
+        FROM docs
+    ),
+    {_TRIGRAM_SCORE_SQL}"""
+
+_TRIGRAM_DUCK = f"""
     WITH tri AS (
         SELECT doc_id, unnest([substring(text, i, 3) for i in range(1, length(text) - 1)]) AS tg
         FROM documents
     ),
-    model AS (
-        SELECT tg, c, sum(c) OVER () AS t
-        FROM (SELECT tg, count(*) AS c FROM tri GROUP BY tg)
-    ),
-    scored AS (
-        SELECT tri.doc_id,
-               cast(floor(log2(CAST(m.c AS DOUBLE) / m.t) * 1000000 + 0.5) AS BIGINT)
-                   AS lp_micro
-        FROM tri JOIN model m ON tri.tg = m.tg
-        WHERE tri.doc_id < 300
-    )
-    SELECT doc_id, count(*) AS n_trigrams,
-           CAST(CAST(floor(sum(lp_micro) * 1.0 / count(*) / 100.0 + 0.5) AS BIGINT) AS DOUBLE) / 10000.0 AS avg_log2p
-    FROM scored
-    GROUP BY doc_id
-    ORDER BY doc_id
-    """
+    {_TRIGRAM_SCORE_SQL}"""
 
 _sql_query(
     "text_trigram_logprob",
@@ -2398,11 +2325,7 @@ _sql_query(
 _sql_query(
     "sim_decontaminate",
     f"""
-    WITH q AS (
-        SELECT vec_id,
-               transform(embedding, x -> cast(round(cast(x AS double) * 1000) AS bigint)) AS v
-        FROM embeddings
-    ),
+    WITH q AS ({_SPARK_QUANTIZED}),
     n AS (
         SELECT vec_id, v,
                {vec.norm2('v', 'bigint')} AS nrm2
@@ -2424,12 +2347,8 @@ _sql_query(
     GROUP BY vec_id
     ORDER BY vec_id
     """,
-    oracle="""
-    WITH q AS (
-        SELECT vec_id,
-               [CAST(round(CAST(x AS DOUBLE) * 1000) AS BIGINT) FOR x IN embedding] AS v
-        FROM embeddings
-    ),
+    oracle=f"""
+    WITH q AS ({_DUCK_QUANTIZED}),
     n AS (
         SELECT vec_id, v, CAST(list_sum([x * x FOR x IN v]) AS BIGINT) AS nrm2
         FROM q
@@ -2466,11 +2385,8 @@ _sql_query(
 #     sequential). Output is per-pack occupancy so fill efficiency is
 #     auditable.
 
-_PACK_SPARK = """
-    WITH t AS (
-        SELECT doc_id, source, size(split(text, ' ')) AS n_tokens
-        FROM documents
-    ),
+# The packing itself is dialect-neutral; only the token count differs.
+_PACK_SQL = """
     ordered AS (
         SELECT doc_id, source, n_tokens,
                sum(n_tokens) OVER (
@@ -2488,27 +2404,19 @@ _PACK_SPARK = """
     ORDER BY source, pack_id
     """
 
-_PACK_DUCK = """
+_PACK_SPARK = f"""
+    WITH t AS (
+        SELECT doc_id, source, size(split(text, ' ')) AS n_tokens
+        FROM documents
+    ),
+    {_PACK_SQL}"""
+
+_PACK_DUCK = f"""
     WITH t AS (
         SELECT doc_id, source, len(string_split(text, ' ')) AS n_tokens
         FROM documents
     ),
-    ordered AS (
-        SELECT doc_id, source, n_tokens,
-               sum(n_tokens) OVER (
-                   PARTITION BY source
-                   ORDER BY n_tokens DESC, doc_id
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-        FROM t
-    )
-    SELECT source, cast(floor((cum - 1) / 2048) AS BIGINT) AS pack_id,
-           count(*) AS n_docs,
-           CAST(sum(n_tokens) AS BIGINT) AS total_tokens,
-           round(CAST(sum(n_tokens) AS DOUBLE) / 2048, 4) AS fill_ratio
-    FROM ordered
-    GROUP BY source, cast(floor((cum - 1) / 2048) AS BIGINT)
-    ORDER BY source, pack_id
-    """
+    {_PACK_SQL}"""
 
 _sql_query(
     "text_sequence_pack",
@@ -2628,9 +2536,7 @@ _sql_query(
 #     deterministic and non-empty at every SF: batch doc_id%10 IN (0,1,2),
 #     snapshot doc_id%5 IN (0,1) -> re-delivered rows are %10 IN (0,1).
 
-_sql_query(
-    "dedup_incremental",
-    """
+_INCREMENTAL_DEDUP_SQL = """
     WITH snapshot AS (
         SELECT DISTINCT md5(text) AS h FROM documents WHERE doc_id % 5 < 2
     ),
@@ -2646,7 +2552,11 @@ _sql_query(
     WHERE NOT EXISTS (SELECT 1 FROM snapshot s WHERE s.h = i.h)
     GROUP BY source
     ORDER BY source
-    """,
+    """
+
+_sql_query(
+    "dedup_incremental",
+    _INCREMENTAL_DEDUP_SQL,
     tags=("pipeline", "dedup", "incremental"),
     doc="Incremental-batch dedup: anti-join the incoming delivery against "
     "the ingested snapshot's content hashes; only genuinely-new documents "
@@ -2671,23 +2581,7 @@ _sql_query(
 # bit-identical output by the no-false-negative guarantee.
 @register(
     "dedup_bloom_prefilter",
-    oracle="""
-    WITH snapshot AS (
-        SELECT DISTINCT md5(text) AS h FROM documents WHERE doc_id % 5 < 2
-    ),
-    incoming AS (
-        SELECT doc_id, source, md5(text) AS h, n_chars
-        FROM documents WHERE doc_id % 10 < 3
-    )
-    SELECT source,
-           count(*) AS new_docs,
-           CAST(sum(n_chars) AS BIGINT) AS new_chars,
-           CAST(min(doc_id) AS BIGINT) AS first_new_doc
-    FROM incoming i
-    WHERE NOT EXISTS (SELECT 1 FROM snapshot s WHERE s.h = i.h)
-    GROUP BY source
-    ORDER BY source
-    """,
+    oracle=_INCREMENTAL_DEDUP_SQL,
     tags=("pipeline", "dedup", "incremental", "scale"),
     doc="Bloom-prefiltered incremental dedup: bloom_filter_agg over the "
     "seen snapshot, broadcast might_contain prefilter (no false "
@@ -2769,10 +2663,10 @@ def dedup_bloom_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
 #     fields with all four noise modes, and doc_id%1000 aliasing makes
 #     genuine variant groups at every SF.
 
-_sql_query(
-    "dedup_url",
-    """
-    WITH crawled AS (
+# The crawled URLs and the keep-one rollup are dialect-neutral; the plan
+# and its oracle differ only in the canonicalization.
+_CRAWLED_URLS_SQL = """
+    crawled AS (
         SELECT doc_id, source, n_chars,
                concat(
                    CASE WHEN doc_id % 2 = 0 THEN 'HTTPS://' ELSE 'https://' END,
@@ -2784,6 +2678,22 @@ _sql_query(
                         ELSE '?b=2&id=7' END) AS url
         FROM documents
     ),
+"""
+
+_URL_KEEP_SQL = """
+    SELECT canonical_url,
+           count(*) AS n_variants,
+           CAST(min(doc_id) AS BIGINT) AS kept_doc,
+           CAST(max(n_chars) AS BIGINT) AS max_chars
+    FROM canon
+    GROUP BY canonical_url
+    ORDER BY canonical_url
+    """
+
+_sql_query(
+    "dedup_url",
+    f"""
+    WITH {_CRAWLED_URLS_SQL}
     canon AS (
         SELECT doc_id, source, n_chars,
                concat(
@@ -2795,27 +2705,9 @@ _sql_query(
                        kv -> NOT startswith(kv, 'utm_'))), '&')) AS canonical_url
         FROM crawled
     )
-    SELECT canonical_url,
-           count(*) AS n_variants,
-           CAST(min(doc_id) AS BIGINT) AS kept_doc,
-           CAST(max(n_chars) AS BIGINT) AS max_chars
-    FROM canon
-    GROUP BY canonical_url
-    ORDER BY canonical_url
-    """,
-    oracle="""
-    WITH crawled AS (
-        SELECT doc_id, source, n_chars,
-               concat(
-                   CASE WHEN doc_id % 2 = 0 THEN 'HTTPS://' ELSE 'https://' END,
-                   CASE WHEN doc_id % 3 = 0 THEN 'WWW.' ELSE '' END,
-                   'Site-', source, '.Example.com/docs/', doc_id % 1000,
-                   CASE WHEN doc_id % 2 = 0 THEN '/' ELSE '' END,
-                   CASE WHEN doc_id % 5 = 0 THEN '?utm_source=feed&id=7&b=2'
-                        WHEN doc_id % 5 = 1 THEN '?id=7&b=2&utm_campaign=x'
-                        ELSE '?b=2&id=7' END) AS url
-        FROM documents
-    ),
+    {_URL_KEEP_SQL}""",
+    oracle=f"""
+    WITH {_CRAWLED_URLS_SQL}
     canon AS (
         SELECT doc_id, source, n_chars,
                concat(
@@ -2827,14 +2719,7 @@ _sql_query(
                        kv -> NOT starts_with(kv, 'utm_'))), '&')) AS canonical_url
         FROM crawled
     )
-    SELECT canonical_url,
-           count(*) AS n_variants,
-           CAST(min(doc_id) AS BIGINT) AS kept_doc,
-           CAST(max(n_chars) AS BIGINT) AS max_chars
-    FROM canon
-    GROUP BY canonical_url
-    ORDER BY canonical_url
-    """,
+    {_URL_KEEP_SQL}""",
     tags=("pipeline", "dedup", "url"),
     doc="URL canonicalization dedup: lowercase, strip scheme/www/trailing "
     "slash, drop utm_* params, sort the rest; group by canonical key and "
@@ -2959,17 +2844,13 @@ def _mmr_cand_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Un-checkpointed candidate stage (per-probe top-8 over the corpus
     with the probe set broadcast) — kept as a separate builder so
     tests/test_plans.py can still pin the generation plan's broadcast
-    shape after the r12 staging rework."""
+    shape now that the candidates are staged."""
     dot_pc = vec.dot("p.v", "c.v", "bigint")
     return catalog.sql(
         spark,
         sf_dir,
         f"""
-        WITH q AS (
-            SELECT vec_id,
-                   transform(embedding, x -> cast(round(cast(x AS double) * 1000) AS bigint)) AS v
-            FROM embeddings
-        ),
+        WITH q AS ({_SPARK_QUANTIZED}),
         probes AS (SELECT * FROM q WHERE vec_id < 4)
         SELECT * FROM (
             SELECT p.vec_id AS pid, c.vec_id AS cid, c.v AS cv,
@@ -2983,31 +2864,10 @@ def _mmr_cand_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "sim_mmr_rerank",
-    oracle="""
-    WITH q AS (
-        SELECT vec_id,
-               [CAST(round(CAST(x AS DOUBLE) * 1000) AS BIGINT) FOR x IN embedding] AS v
-        FROM embeddings
-    ),
-    probes AS (SELECT * FROM q WHERE vec_id < 4),
-    cand AS (
-        SELECT * FROM (
-            SELECT p.vec_id AS pid, c.vec_id AS cid, c.v AS cv,
-                   list_sum([p.v[i] * c.v[i] FOR i IN generate_series(1, 64)]) AS rel,
-                   row_number() OVER (
-                       PARTITION BY p.vec_id
-                       ORDER BY list_sum([p.v[i] * c.v[i] FOR i IN generate_series(1, 64)]) DESC,
-                                c.vec_id) AS rk
-            FROM probes p JOIN q c ON c.vec_id <> p.vec_id
-        ) WHERE rk <= 8
-    ),
-    pair AS (
-        SELECT a.pid, a.cid AS ca, b.cid AS cb,
-               list_sum([a.cv[i] * b.cv[i] FOR i IN generate_series(1, 64)]) AS sim
-        FROM cand a JOIN cand b ON a.pid = b.pid AND a.cid <> b.cid
-    ),
+# The greedy rounds over cand(pid, cid, rel) and pair(pid, ca, cb, sim),
+# shared by the staged plan and the all-SQL oracle: each round picks the
+# candidate with the best 2 * rel - (max sim to the picks so far).
+_MMR_ROUNDS_SQL = """
     s1 AS (
         SELECT pid, cid AS sel, rel FROM (
             SELECT pid, cid, rel,
@@ -3041,7 +2901,31 @@ def _mmr_cand_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
                    row_number() OVER (
                        PARTITION BY pid ORDER BY 2 * rel - pen DESC, cid) AS rk
             FROM r3) t WHERE rk = 1
-    )
+    )"""
+
+
+@register(
+    "sim_mmr_rerank",
+    oracle=f"""
+    WITH q AS ({_DUCK_QUANTIZED}),
+    probes AS (SELECT * FROM q WHERE vec_id < 4),
+    cand AS (
+        SELECT * FROM (
+            SELECT p.vec_id AS pid, c.vec_id AS cid, c.v AS cv,
+                   list_sum([p.v[i] * c.v[i] FOR i IN generate_series(1, 64)]) AS rel,
+                   row_number() OVER (
+                       PARTITION BY p.vec_id
+                       ORDER BY list_sum([p.v[i] * c.v[i] FOR i IN generate_series(1, 64)]) DESC,
+                                c.vec_id) AS rk
+            FROM probes p JOIN q c ON c.vec_id <> p.vec_id
+        ) WHERE rk <= 8
+    ),
+    pair AS (
+        SELECT a.pid, a.cid AS ca, b.cid AS cb,
+               list_sum([a.cv[i] * b.cv[i] FOR i IN generate_series(1, 64)]) AS sim
+        FROM cand a JOIN cand b ON a.pid = b.pid AND a.cid <> b.cid
+    ),
+    {_MMR_ROUNDS_SQL}
     SELECT pid AS query_id, CAST(1 AS BIGINT) AS pick, sel AS selected_id,
            CAST(rel AS BIGINT) AS rel_dot FROM s1
     UNION ALL
@@ -3056,7 +2940,7 @@ def _mmr_cand_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     "exact integer dot-MMR scores.",
 )
 def sim_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # r12 scan-guard rework: the single-SQL form re-referenced the
+    # The single-SQL form (the oracle) re-references the
     # corpus-scanning cand CTE from every greedy round (Catalyst inlines
     # CTEs — 30 embeddings scans in the optimized plan).  The candidate
     # stage (<= 8 rows/probe) and the pairwise-sim table (<= 56
@@ -3073,43 +2957,10 @@ def sim_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         cand=cand,
     ).localCheckpoint(eager=True)
     return spark.sql(
-        """
-        WITH cand AS (SELECT * FROM {cand}),
-        pair AS (SELECT * FROM {pair}),
-        s1 AS (
-            SELECT pid, cid AS sel, rel FROM (
-                SELECT pid, cid, rel,
-                       row_number() OVER (PARTITION BY pid ORDER BY rel DESC, cid) AS rk
-                FROM cand) t WHERE rk = 1
-        ),
-        r2 AS (
-            SELECT c.pid, c.cid, c.rel, p.sim AS pen
-            FROM cand c
-            JOIN s1 ON c.pid = s1.pid AND c.cid <> s1.sel
-            JOIN pair p ON p.pid = c.pid AND p.ca = c.cid AND p.cb = s1.sel
-        ),
-        s2 AS (
-            SELECT pid, cid AS sel, rel FROM (
-                SELECT pid, cid, rel,
-                       row_number() OVER (
-                           PARTITION BY pid ORDER BY 2 * rel - pen DESC, cid) AS rk
-                FROM r2) t WHERE rk = 1
-        ),
-        r3 AS (
-            SELECT c.pid, c.cid, c.rel, greatest(p1.sim, p2.sim) AS pen
-            FROM cand c
-            JOIN s1 ON c.pid = s1.pid AND c.cid <> s1.sel
-            JOIN s2 ON c.pid = s2.pid AND c.cid <> s2.sel
-            JOIN pair p1 ON p1.pid = c.pid AND p1.ca = c.cid AND p1.cb = s1.sel
-            JOIN pair p2 ON p2.pid = c.pid AND p2.ca = c.cid AND p2.cb = s2.sel
-        ),
-        s3 AS (
-            SELECT pid, cid AS sel, rel FROM (
-                SELECT pid, cid, rel,
-                       row_number() OVER (
-                           PARTITION BY pid ORDER BY 2 * rel - pen DESC, cid) AS rk
-                FROM r3) t WHERE rk = 1
-        )
+        f"""
+        WITH cand AS (SELECT * FROM {{cand}}),
+        pair AS (SELECT * FROM {{pair}}),
+        {_MMR_ROUNDS_SQL}
         SELECT pid AS query_id, cast(1 AS BIGINT) AS pick, sel AS selected_id,
                cast(rel AS BIGINT) AS rel_dot FROM s1
         UNION ALL
@@ -3134,26 +2985,14 @@ def sim_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 #     blow-up. Output is per-doc kept/removed token accounting (the
 #     reconstruction is array_join over kept positions — same plan shape).
 
-_SUBSTR_REMOVE_SPARK = """
-    WITH t AS (
-        SELECT doc_id, split(text, ' ') AS toks, size(split(text, ' ')) AS n
-        FROM documents
-    ),
-    grams AS (
-        SELECT doc_id, pos, array_join(slice(toks, pos + 1, 13), ' ') AS gram
-        FROM t LATERAL VIEW explode(sequence(0, n - 13)) g AS pos
-        WHERE n >= 13
-    ),
+# The duplicated grams and the per-doc accounting are dialect-neutral.
+_SUBSTR_DUP_GRAMS_SQL = """
     dup_grams AS (
         SELECT gram FROM grams GROUP BY gram
         HAVING count(*) > 1
-    ),
-    covered AS (
-        SELECT DISTINCT g.doc_id, cpos
-        FROM grams g
-        JOIN dup_grams d ON g.gram = d.gram
-        LATERAL VIEW explode(sequence(g.pos, g.pos + 12)) c AS cpos
-    )
+    ),"""
+
+_SUBSTR_KEPT_SQL = """
     SELECT t.doc_id,
            CAST(t.n AS BIGINT) AS n_tokens,
            CAST(t.n - coalesce(c.n_covered, 0) AS BIGINT) AS n_kept,
@@ -3165,7 +3004,26 @@ _SUBSTR_REMOVE_SPARK = """
     ORDER BY t.doc_id
     """
 
-_SUBSTR_REMOVE_DUCK = """
+_SUBSTR_REMOVE_SPARK = f"""
+    WITH t AS (
+        SELECT doc_id, split(text, ' ') AS toks, size(split(text, ' ')) AS n
+        FROM documents
+    ),
+    grams AS (
+        SELECT doc_id, pos, array_join(slice(toks, pos + 1, 13), ' ') AS gram
+        FROM t LATERAL VIEW explode(sequence(0, n - 13)) g AS pos
+        WHERE n >= 13
+    ),
+    {_SUBSTR_DUP_GRAMS_SQL}
+    covered AS (
+        SELECT DISTINCT g.doc_id, cpos
+        FROM grams g
+        JOIN dup_grams d ON g.gram = d.gram
+        LATERAL VIEW explode(sequence(g.pos, g.pos + 12)) c AS cpos
+    )
+    {_SUBSTR_KEPT_SQL}"""
+
+_SUBSTR_REMOVE_DUCK = f"""
     WITH t AS (
         SELECT doc_id, string_split(text, ' ') AS toks,
                len(string_split(text, ' ')) AS n
@@ -3176,25 +3034,13 @@ _SUBSTR_REMOVE_DUCK = """
         FROM t, UNNEST(range(0, n - 12)) AS g(pos)
         WHERE n >= 13
     ),
-    dup_grams AS (
-        SELECT gram FROM grams GROUP BY gram
-        HAVING count(*) > 1
-    ),
+    {_SUBSTR_DUP_GRAMS_SQL}
     covered AS (
         SELECT DISTINCT g.doc_id, cpos
         FROM (SELECT g2.* FROM grams g2 JOIN dup_grams d ON g2.gram = d.gram) g,
              UNNEST(range(g.pos, g.pos + 13)) AS c(cpos)
     )
-    SELECT t.doc_id,
-           CAST(t.n AS BIGINT) AS n_tokens,
-           CAST(t.n - coalesce(c.n_covered, 0) AS BIGINT) AS n_kept,
-           CAST(coalesce(c.n_covered, 0) AS BIGINT) AS n_removed
-    FROM t
-    LEFT JOIN (SELECT doc_id, count(*) AS n_covered FROM covered GROUP BY doc_id) c
-      ON t.doc_id = c.doc_id
-    WHERE t.doc_id < 300
-    ORDER BY t.doc_id
-    """
+    {_SUBSTR_KEPT_SQL}"""
 
 _sql_query(
     "text_substring_removal",
@@ -3220,17 +3066,18 @@ _sql_query(
 #     orderkey%(1+custkey%12), deduped), with the node count scaling
 #     with the corpus (60 nodes at sf0.001, 6000 at sf0.1).
 
-_PAGERANK_SQL = """
+# The skewed web of graph_pagerank, graph_personalized_pagerank,
+# graph_hits and graph_kcore: the node count scales with the corpus (the
+# label-propagation fixture's derivation: ~375 orders per 15 nodes, floor
+# before the cast, >= 60 nodes, so sf0.1 ranks a 6000-node web); hub
+# links (dst skews toward low ids, the power-law shape) plus a ring so
+# every node has an in-link.
+_SKEWED_WEB = """
     WITH params AS (
-        -- node count scales with the corpus (same derivation as the
-        -- label-propagation fixture: ~375 orders per 15 nodes, floor
-        -- before the cast, >= 60 nodes) so sf0.1 ranks a 6000-node web
         SELECT 15 * greatest(4, CAST(floor(count(*) / 375.0) AS BIGINT)) AS n
         FROM orders
     ),
     edges AS (
-        -- skewed web: hub links (dst skews toward low ids, the power-law
-        -- shape) plus a ring so every node has an in-link
         SELECT DISTINCT o_custkey % (SELECT n FROM params) AS src,
                o_orderkey % (1 + o_custkey % 12) AS dst
         FROM orders
@@ -3241,7 +3088,10 @@ _PAGERANK_SQL = """
                (o_custkey % (SELECT n FROM params) + 1)
                % (SELECT n FROM params) AS dst
         FROM orders
-    ),
+    )"""
+
+_PAGERANK_SQL = f"""
+    {_SKEWED_WEB},
     outdeg AS (SELECT src, count(*) AS d FROM edges GROUP BY src),
     nodes AS (SELECT src AS id FROM edges UNION SELECT dst FROM edges),
     n AS (SELECT count(*) AS cnt FROM nodes),
@@ -3290,38 +3140,20 @@ _PAGERANK_SQL = """
     ORDER BY rank_micro DESC, node_id
     """
 
-# r12 scan-guard rework: the pure-SQL form above is kept verbatim as the
-# DuckDB ORACLE (DuckDB materializes repeated CTEs cheaply), but on the
+# The pure-SQL form above is the DuckDB ORACLE (DuckDB materializes
+# repeated CTEs cheaply), but on the
 # Spark side Catalyst INLINES every CTE reference, and the unrolled
 # rounds referenced edges/nodes/outdeg/r{k-1} multiplicatively — the
 # optimized logical plan carried 220 scans of orders (measured by the
 # registry-wide scan audit; 13.8s at sf0.1).  The builder below is the
-# production shape the original comment promised: the skewed web is
+# production shape: the skewed web is
 # staged ONCE per (session, sf_dir) — shared with personalized pagerank
 # and HITS, which synthesize the IDENTICAL fixture — and each round is
 # localCheckpoint-materialized (node-sized state), so the main plan
 # scans ZERO parquet and each round runs exactly one edge join.
 # Arithmetic is byte-identical to the oracle text.
 
-_SKEWED_WEB_SQL = """
-    WITH params AS (
-        SELECT 15 * greatest(4, CAST(floor(count(*) / 375.0) AS BIGINT)) AS n
-        FROM orders
-    ),
-    edges AS (
-        SELECT DISTINCT o_custkey % (SELECT n FROM params) AS src,
-               o_orderkey % (1 + o_custkey % 12) AS dst
-        FROM orders
-        WHERE o_custkey % (SELECT n FROM params)
-              <> o_orderkey % (1 + o_custkey % 12)
-        UNION
-        SELECT DISTINCT o_custkey % (SELECT n FROM params) AS src,
-               (o_custkey % (SELECT n FROM params) + 1)
-               % (SELECT n FROM params) AS dst
-        FROM orders
-    )
-    SELECT src, dst FROM edges
-"""
+_SKEWED_WEB_SQL = _SKEWED_WEB + "\n    SELECT src, dst FROM edges\n"
 
 
 def _skewed_web_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3416,19 +3248,9 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 # reassembled in order. Scale shape: one shuffle keyed on the paragraph
 # text (the exact-dedup bound — never pairwise), one shuffle back on
 # doc_id for reassembly; keep-first is min(doc_id) carried on the
-# paragraph aggregate, no window over the corpus.
-_sql_query(
-    "text_dedup_paragraph",
-    """
-    WITH tok AS (
-        SELECT doc_id, split(text, ' ') AS t FROM documents
-    ),
-    paras AS (
-        SELECT doc_id, p,
-               array_join(slice(t, p * 12 + 1, 12), ' ') AS para
-        FROM tok
-        LATERAL VIEW explode(sequence(0, cast(ceil(size(t) / 12.0) AS INT) - 1)) s AS p
-    ),
+# paragraph aggregate, no window over the corpus. The keep-first policy
+# is dialect-neutral: the plan and its oracle share it.
+_PARA_KEEP_SQL = """
     owners AS (
         SELECT para, count(*) AS n_occ, min(doc_id) AS first_doc
         FROM paras GROUP BY para
@@ -3441,6 +3263,21 @@ _sql_query(
     SELECT doc_id,
            CAST(count(*) AS BIGINT) AS n_paras,
            CAST(sum(CASE WHEN keep THEN 1 ELSE 0 END) AS BIGINT) AS n_kept,
+"""
+
+_sql_query(
+    "text_dedup_paragraph",
+    f"""
+    WITH tok AS (
+        SELECT doc_id, split(text, ' ') AS t FROM documents
+    ),
+    paras AS (
+        SELECT doc_id, p,
+               array_join(slice(t, p * 12 + 1, 12), ' ') AS para
+        FROM tok
+        LATERAL VIEW explode(sequence(0, cast(ceil(size(t) / 12.0) AS INT) - 1)) s AS p
+    ),
+    {_PARA_KEEP_SQL}
            CAST(length(concat_ws(' ',
                sort_array(collect_list(CASE WHEN keep
                    THEN concat(lpad(cast(p AS STRING), 6, '0'), ':', para) END)))) AS BIGINT) AS kept_len
@@ -3448,7 +3285,7 @@ _sql_query(
     GROUP BY doc_id
     ORDER BY doc_id
     """,
-    oracle="""
+    oracle=f"""
     WITH tok AS (
         SELECT doc_id, string_split(text, ' ') AS t FROM documents
     ),
@@ -3459,18 +3296,7 @@ _sql_query(
             SELECT unnest(range(1, CAST(ceil(len(t) / 12.0) AS INT) + 1)) AS i
         ) p
     ),
-    owners AS (
-        SELECT para, count(*) AS n_occ, min(doc_id) AS first_doc
-        FROM paras GROUP BY para
-    ),
-    kept AS (
-        SELECT p.doc_id, p.p, p.para,
-               (o.n_occ = 1 OR p.doc_id = o.first_doc) AS keep
-        FROM paras p JOIN owners o ON p.para = o.para
-    )
-    SELECT doc_id,
-           CAST(count(*) AS BIGINT) AS n_paras,
-           CAST(sum(CASE WHEN keep THEN 1 ELSE 0 END) AS BIGINT) AS n_kept,
+    {_PARA_KEEP_SQL}
            CAST(COALESCE(length(string_agg(CASE WHEN keep
                THEN lpad(CAST(p AS VARCHAR), 6, '0') || ':' || para END, ' '
                ORDER BY lpad(CAST(p AS VARCHAR), 6, '0') || ':' || para)), 0) AS BIGINT) AS kept_len
@@ -3628,11 +3454,7 @@ _sql_query(
 _sql_query(
     "sim_range_search",
     f"""
-    WITH q AS (
-        SELECT vec_id,
-               transform(embedding, x -> cast(round(cast(x AS double) * 1000) AS bigint)) AS v
-        FROM embeddings
-    ),
+    WITH q AS ({_SPARK_QUANTIZED}),
     n AS (
         SELECT vec_id, v,
                {vec.norm2('v', 'bigint')} AS nrm2
@@ -3651,12 +3473,8 @@ _sql_query(
     WHERE dot > 0 AND 25 * dot * dot >= 16 * pn2 * nrm2
     ORDER BY probe_id, match_id
     """,
-    oracle="""
-    WITH q AS (
-        SELECT vec_id,
-               [CAST(round(CAST(x AS DOUBLE) * 1000) AS BIGINT) FOR x IN embedding] AS v
-        FROM embeddings
-    ),
+    oracle=f"""
+    WITH q AS ({_DUCK_QUANTIZED}),
     n AS (
         SELECT vec_id, v, CAST(list_sum([x * x FOR x IN v]) AS BIGINT) AS nrm2
         FROM q
@@ -3982,7 +3800,7 @@ def _block_web_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     (session, sf_dir) — the staging table shared by the graph family
     (label_propagation, triangle_count, khop_distances, link_prediction,
     modularity all read the identical _LABELPROP_GRAPH_SQL relation;
-    r10 staging-memo move, same rationale as the near-dup pair list)."""
+    staged like the near-dup pair list)."""
     return _session_memo(
         spark,
         "block_web_edges",
@@ -4034,11 +3852,11 @@ _LP_ROUND_SQL = """
 
 def _labelprop_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The 3-round synchronous label-propagation labels (l3), staged per
-    round (r13 scan-audit: the unrolled _LABELPROP_ROUNDS_SQL — kept
-    verbatim above as the oracle text — re-expanded each l{i} twice per
-    level, 22 edge-relation scans; graph_modularity then inlined the
-    whole cascade 3x more).  Round math verbatim; node-sized label
-    relations checkpointed.  r13 ADVICE: memoized per (session, sf_dir)
+    round (the unrolled _LABELPROP_ROUNDS_SQL — the oracle text —
+    re-expands each l{i} twice per level under CTE inlining, 22
+    edge-relation scans; graph_modularity would inline the whole cascade
+    3x more).  Round math verbatim; node-sized label relations
+    checkpointed.  Memoized per (session, sf_dir)
     like _block_web_edges — label_propagation and modularity consume the
     identical relation, so the 5 eager checkpoint jobs run once per
     session instead of twice."""
@@ -4249,20 +4067,9 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
 # vocabulary->weight map broadcasts back onto the token stream, and the
 # per-doc score is ONE map-side-combining sum shuffle on doc_id.  In
 # production the weights table is the trained model's serialized
-# embedding matrix; everything else is identical.
-_sql_query(
-    "text_classifier_filter",
-    """
-    WITH tok AS (
-        SELECT doc_id, explode(split(text, ' ')) AS tk FROM documents
-    ),
-    vocab AS (SELECT DISTINCT tk FROM tok),
-    vw AS (
-        SELECT tk,
-               aggregate(split(tk, ''), 131L,
-                         (acc, c) -> (acc * 31 + ascii(c)) % 1000000007) % 64 AS bucket
-        FROM vocab
-    ),
+# embedding matrix; everything else is identical. The weights and the
+# scoring are dialect-neutral: the plan and its oracle share them.
+_CLASSIFIER_SCORE_SQL = """
     weights AS (
         SELECT tk, CAST((bucket * 2654435761) % 2001 - 1000 AS BIGINT) AS w_milli
         FROM vw
@@ -4274,8 +4081,23 @@ _sql_query(
     FROM tok t JOIN weights w ON t.tk = w.tk
     GROUP BY t.doc_id
     ORDER BY t.doc_id
-    """,
-    oracle="""
+    """
+
+_sql_query(
+    "text_classifier_filter",
+    f"""
+    WITH tok AS (
+        SELECT doc_id, explode(split(text, ' ')) AS tk FROM documents
+    ),
+    vocab AS (SELECT DISTINCT tk FROM tok),
+    vw AS (
+        SELECT tk,
+               aggregate(split(tk, ''), 131L,
+                         (acc, c) -> (acc * 31 + ascii(c)) % 1000000007) % 64 AS bucket
+        FROM vocab
+    ),
+    {_CLASSIFIER_SCORE_SQL}""",
+    oracle=f"""
     WITH tok AS (
         SELECT doc_id, unnest(string_split(text, ' ')) AS tk FROM documents
     ),
@@ -4287,18 +4109,7 @@ _sql_query(
                            (a, b) -> (a * 31 + b) % 1000000007) % 64 AS bucket
         FROM vocab
     ),
-    weights AS (
-        SELECT tk, CAST((bucket * 2654435761) % 2001 - 1000 AS BIGINT) AS w_milli
-        FROM vw
-    )
-    SELECT t.doc_id,
-           CAST(count(*) AS BIGINT) AS n_tokens,
-           CAST(sum(w.w_milli) AS BIGINT) AS score_milli,
-           CAST(CASE WHEN sum(w.w_milli) > 0 THEN 1 ELSE 0 END AS BIGINT) AS kept
-    FROM tok t JOIN weights w ON t.tk = w.tk
-    GROUP BY t.doc_id
-    ORDER BY t.doc_id
-    """,
+    {_CLASSIFIER_SCORE_SQL}""",
     tags=("pipeline", "text", "quality"),
     bench=True,
     doc="Linear bag-of-words quality filter (fastText-stage shape): "
@@ -4433,7 +4244,7 @@ for _n in ["pairs", "cedges", "l0"] + [f"p{_i}" for _i in range(1, 7)] + [
     "all tested scales); pair list checkpointed once.",
 )
 def cluster_dbscan_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # r13 scan-audit fix: the unrolled min-label + pointer-jumping rounds
+    # The unrolled min-label + pointer-jumping rounds
     # of _DBSCAN_MAIN_SQL re-expand ~3x per level under CTE inlining
     # (p{i} twice per jump + l{i-1} once) — a 2.7 MB physical plan with
     # 888 scans of the checkpointed pair relation and 1647 Exchanges.
@@ -4502,7 +4313,7 @@ def _minlabel_jump_rounds(
     """Staged min-label + pointer-jumping connected-component rounds over
     a checkpointed edge relation ({A} <- {B}); the per-round label
     relation (node-sized) is checkpointed so the unrolled-CTE ~3x-per-
-    level re-expansion (the dbscan/snn r13 audit finding) cannot occur.
+    level re-expansion of the dbscan/snn rounds cannot occur.
     Round math is verbatim _DBSCAN_MAIN_SQL / _SNN_MAIN_SQL: propagate
     min neighbor label, then jump each label to ITS label."""
     l = l0
@@ -4542,34 +4353,44 @@ def _minlabel_jump_rounds(
 # IdentityBroadcast cross; the per-query top-5 rank()<=5 executes as
 # WindowGroupLimit partial/final — map-side top-k, no full sort of the
 # scored corpus.
+
+# The corpus-derived query workload of text_bm25_topk, sim_hybrid_rrf and
+# sim_query_expansion_prf: the 6 highest-df terms of ``df``, paired into 3
+# two-term queries. ``query_id`` is the query number's cast; each text
+# keeps its own.
+_BM25_QUERY_ID = "cast(ceil(rk / 2.0) AS INT)"
+
+
+def _bm25_query_terms_sql(query_id: str, df: str) -> str:
+    return f"""
+        SELECT {query_id} AS query_id, term, df
+        FROM (SELECT term, df, row_number() OVER (ORDER BY df DESC, term) AS rk FROM {df})
+        WHERE rk <= 6"""
+
+
+def _bm25_contrib_sql(posting: str, qterms: str, doclen: str, div: str) -> str:
+    """Each posting's exact-integer BM25 contribution ``c_micro`` to every
+    query of ``qterms`` holding its term, over the one-row ``tot(n, s)``;
+    ``div`` is the integer division (``DIV`` in Spark, ``//`` in DuckDB)."""
+    return f"""
+        SELECT q.query_id, p.doc_id,
+               (cast(floor(ln((2 * t.n + 2) / (2.0 * q.df + 1)) * 1000000 + 0.5) AS BIGINT)
+                 * (22 * p.tf * t.s))
+               {div} (10 * t.s * p.tf + 3 * t.s + 9 * t.n * d.dl) AS c_micro
+        FROM {posting} p
+        JOIN {qterms} q ON p.term = q.term
+        JOIN {doclen} d ON p.doc_id = d.doc_id
+        CROSS JOIN tot t"""
+
+
 _BM25_POSTING_SQL = """
     SELECT doc_id, term, count(*) AS tf
     FROM (SELECT doc_id, explode(split(text, ' ')) AS term FROM documents)
     GROUP BY doc_id, term
 """
 
-_BM25_MAIN_SQL = """
-    WITH tot AS (SELECT count(*) AS n, sum(dl) AS s FROM {bm25_doclen}),
-    df AS (SELECT term, count(*) AS df FROM {bm25_posting} GROUP BY term),
-    qterms AS (
-        SELECT cast(ceil(rk / 2.0) AS INT) AS query_id, term, df
-        FROM (SELECT term, df, row_number() OVER (ORDER BY df DESC, term) AS rk FROM df)
-        WHERE rk <= 6
-    ),
-    contrib AS (
-        SELECT q.query_id, p.doc_id,
-               (cast(floor(ln((2 * t.n + 2) / (2.0 * q.df + 1)) * 1000000 + 0.5) AS BIGINT)
-                 * (22 * p.tf * t.s))
-               DIV (10 * t.s * p.tf + 3 * t.s + 9 * t.n * d.dl) AS c_micro
-        FROM {bm25_posting} p
-        JOIN qterms q ON p.term = q.term
-        JOIN {bm25_doclen} d ON p.doc_id = d.doc_id
-        CROSS JOIN tot t
-    ),
-    scored AS (
-        SELECT query_id, doc_id, sum(c_micro) AS bm25_micro
-        FROM contrib GROUP BY query_id, doc_id
-    ),
+# Each query's top 5 documents: the dialect-neutral tail of text_bm25_topk.
+_BM25_TOP5_SQL = """
     ranked AS (
         SELECT query_id, doc_id, bm25_micro,
                row_number() OVER (PARTITION BY query_id
@@ -4579,16 +4400,40 @@ _BM25_MAIN_SQL = """
     SELECT query_id, rk, doc_id, bm25_micro
     FROM ranked WHERE rk <= 5
     ORDER BY query_id, rk
-"""
+    """
+
+# The oracles' posting list, document lengths, corpus totals and document
+# frequencies (the Spark plans read the staged _term_postings instead).
+_DUCK_BM25_STATS = """
+    WITH posting AS (
+        SELECT doc_id, term, count(*) AS tf
+        FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS term FROM documents)
+        GROUP BY doc_id, term
+    ),
+    doclen AS (SELECT doc_id, cast(sum(tf) AS BIGINT) AS dl FROM posting GROUP BY doc_id),
+    tot AS (SELECT count(*) AS n, cast(sum(dl) AS BIGINT) AS s FROM doclen),
+    df AS (SELECT term, count(*) AS df FROM posting GROUP BY term),"""
+
+_BM25_MAIN_SQL = f"""
+    WITH tot AS (SELECT count(*) AS n, sum(dl) AS s FROM {{bm25_doclen}}),
+    df AS (SELECT term, count(*) AS df FROM {{bm25_posting}} GROUP BY term),
+    qterms AS ({_bm25_query_terms_sql(_BM25_QUERY_ID, "df")}
+    ),
+    contrib AS ({_bm25_contrib_sql("{bm25_posting}", "qterms", "{bm25_doclen}", "DIV")}
+    ),
+    scored AS (
+        SELECT query_id, doc_id, sum(c_micro) AS bm25_micro
+        FROM contrib GROUP BY query_id, doc_id
+    ),
+    {_BM25_TOP5_SQL}"""
 
 
 def _term_postings(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Checkpointed (doc_id, term, tf) inverted posting list, built once
     per (session, sf_dir) — the staging table shared by text_bm25_topk /
     sim_hybrid_rrf / sim_query_expansion_prf / text_perplexity_bucket
-    (r10: the same staging-memo move the r9 verdict prescribed for the
-    near-dup pair list; four bench entries paid this tokenize+rollup
-    each run)."""
+    (staged like the near-dup pair list, so four bench entries do not
+    each pay this tokenize+rollup)."""
     return _session_memo(
         spark,
         "term_postings",
@@ -4614,44 +4459,17 @@ def _doc_lengths(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "text_bm25_topk",
-    oracle="""
-    WITH posting AS (
-        SELECT doc_id, term, count(*) AS tf
-        FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS term FROM documents)
-        GROUP BY doc_id, term
+    oracle=f"""
+    {_DUCK_BM25_STATS}
+    qterms AS ({_bm25_query_terms_sql(_BM25_QUERY_ID, "df")}
     ),
-    doclen AS (SELECT doc_id, cast(sum(tf) AS BIGINT) AS dl FROM posting GROUP BY doc_id),
-    tot AS (SELECT count(*) AS n, cast(sum(dl) AS BIGINT) AS s FROM doclen),
-    df AS (SELECT term, count(*) AS df FROM posting GROUP BY term),
-    qterms AS (
-        SELECT cast(ceil(rk / 2.0) AS INT) AS query_id, term, df
-        FROM (SELECT term, df, row_number() OVER (ORDER BY df DESC, term) AS rk FROM df)
-        WHERE rk <= 6
-    ),
-    contrib AS (
-        SELECT q.query_id, p.doc_id,
-               (cast(floor(ln((2 * t.n + 2) / (2.0 * q.df + 1)) * 1000000 + 0.5) AS BIGINT)
-                 * (22 * p.tf * t.s))
-               // (10 * t.s * p.tf + 3 * t.s + 9 * t.n * d.dl) AS c_micro
-        FROM posting p
-        JOIN qterms q ON p.term = q.term
-        JOIN doclen d ON p.doc_id = d.doc_id
-        CROSS JOIN tot t
+    contrib AS ({_bm25_contrib_sql("posting", "qterms", "doclen", "//")}
     ),
     scored AS (
         SELECT query_id, doc_id, cast(sum(c_micro) AS BIGINT) AS bm25_micro
         FROM contrib GROUP BY query_id, doc_id
     ),
-    ranked AS (
-        SELECT query_id, doc_id, bm25_micro,
-               row_number() OVER (PARTITION BY query_id
-                                  ORDER BY bm25_micro DESC, doc_id) AS rk
-        FROM scored
-    )
-    SELECT query_id, rk, doc_id, bm25_micro
-    FROM ranked WHERE rk <= 5
-    ORDER BY query_id, rk
-    """,
+    {_BM25_TOP5_SQL}""",
     tags=("pipeline", "text", "bm25", "retrieval"),
     doc="Okapi BM25 (k1=1.2, b=0.75, Lucene idf) top-5 docs for 3 "
     "corpus-derived two-term queries; posting list materialized once, "
@@ -4691,34 +4509,64 @@ def text_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # scored corpus); the fusion join then touches <= 40 rows per query.
 
 
-_RRF_MAIN_SQL = f"""
-    WITH tot AS (SELECT count(*) AS n, sum(dl) AS s FROM {{rrf_doclen}}),
-    df AS (SELECT term, count(*) AS df FROM {{rrf_posting}} GROUP BY term),
-    qterms AS (
-        SELECT CAST(ceil(rk / 2.0) AS BIGINT) AS query_id, term, df
-        FROM (SELECT term, df, row_number() OVER (ORDER BY df DESC, term) AS rk FROM df)
-        WHERE rk <= 6
-    ),
-    contrib AS (
-        SELECT q.query_id, p.doc_id,
-               (cast(floor(ln((2 * t.n + 2) / (2.0 * q.df + 1)) * 1000000 + 0.5) AS BIGINT)
-                 * (22 * p.tf * t.s))
-               DIV (10 * t.s * p.tf + 3 * t.s + 9 * t.n * d.dl) AS c_micro
-        FROM {{rrf_posting}} p
-        JOIN qterms q ON p.term = q.term
-        JOIN {{rrf_doclen}} d ON p.doc_id = d.doc_id
-        CROSS JOIN tot t
-    ),
-    lex_scored AS (
-        SELECT query_id, CAST(doc_id AS BIGINT) AS doc_id, sum(c_micro) AS bm25_micro
-        FROM contrib GROUP BY query_id, doc_id
-    ),
+# The lexical ranking, shared by the plan and its oracle.
+_RRF_LEX_SQL = """
     lex AS (
         SELECT query_id, doc_id,
                row_number() OVER (PARTITION BY query_id
                                   ORDER BY bm25_micro DESC, doc_id) AS rk
         FROM lex_scored
+    ),"""
+
+
+def _rrf_fusion_sql(div: str, alias: str) -> str:
+    """The dense ranking by the sign-aware integer cosine key, its RRF fusion
+    with ``lex`` and each query's top 10. ``div`` is the integer division
+    and ``alias`` names the last subquery (DuckDB's text has one)."""
+    return f"""
+    dense AS (
+        SELECT query_id, doc_id,
+               row_number() OVER (PARTITION BY query_id ORDER BY
+                   (CASE WHEN dot >= 0 THEN (dot * dot * 1000) {div} nrm2
+                         ELSE -((dot * dot * 1000) {div} nrm2) END) DESC,
+                   doc_id) AS rk
+        FROM dots
     ),
+    fused AS (
+        SELECT coalesce(l.query_id, d.query_id) AS query_id,
+               coalesce(l.doc_id, d.doc_id) AS doc_id,
+               coalesce(1000000000 {div} (60 + l.rk), 0)
+                 + coalesce(1000000000 {div} (60 + d.rk), 0) AS rrf_nano,
+               l.rk AS lex_rk, d.rk AS dense_rk
+        FROM (SELECT * FROM lex WHERE rk <= 20) l
+        FULL OUTER JOIN (SELECT * FROM dense WHERE rk <= 20) d
+          ON l.query_id = d.query_id AND l.doc_id = d.doc_id
+    )
+    SELECT query_id, CAST(rk AS BIGINT) AS rk, doc_id,
+           CAST(rrf_nano AS BIGINT) AS rrf_nano,
+           CAST(coalesce(lex_rk, -1) AS BIGINT) AS lex_rank,
+           CAST(coalesce(dense_rk, -1) AS BIGINT) AS dense_rank
+    FROM (
+        SELECT *, row_number() OVER (PARTITION BY query_id
+                                     ORDER BY rrf_nano DESC, doc_id) AS rk
+        FROM fused
+    ){alias} WHERE rk <= 10
+    ORDER BY query_id, rk
+    """
+
+
+_RRF_MAIN_SQL = f"""
+    WITH tot AS (SELECT count(*) AS n, sum(dl) AS s FROM {{rrf_doclen}}),
+    df AS (SELECT term, count(*) AS df FROM {{rrf_posting}} GROUP BY term),
+    qterms AS ({_bm25_query_terms_sql("CAST(ceil(rk / 2.0) AS BIGINT)", "df")}
+    ),
+    contrib AS ({_bm25_contrib_sql("{rrf_posting}", "qterms", "{rrf_doclen}", "DIV")}
+    ),
+    lex_scored AS (
+        SELECT query_id, CAST(doc_id AS BIGINT) AS doc_id, sum(c_micro) AS bm25_micro
+        FROM contrib GROUP BY query_id, doc_id
+    ),
+    {_RRF_LEX_SQL}
     en AS (
         SELECT CAST(vec_id AS BIGINT) AS vec_id, v,
                greatest({vec.norm2('v', 'bigint')}, 1L) AS nrm2
@@ -4734,74 +4582,23 @@ _RRF_MAIN_SQL = f"""
                c.nrm2
         FROM probes p JOIN en c ON c.vec_id <> p.query_id
     ),
-    dense AS (
-        SELECT query_id, doc_id,
-               row_number() OVER (PARTITION BY query_id ORDER BY
-                   (CASE WHEN dot >= 0 THEN (dot * dot * 1000) DIV nrm2
-                         ELSE -((dot * dot * 1000) DIV nrm2) END) DESC,
-                   doc_id) AS rk
-        FROM dots
-    ),
-    fused AS (
-        SELECT coalesce(l.query_id, d.query_id) AS query_id,
-               coalesce(l.doc_id, d.doc_id) AS doc_id,
-               coalesce(1000000000 DIV (60 + l.rk), 0)
-                 + coalesce(1000000000 DIV (60 + d.rk), 0) AS rrf_nano,
-               l.rk AS lex_rk, d.rk AS dense_rk
-        FROM (SELECT * FROM lex WHERE rk <= 20) l
-        FULL OUTER JOIN (SELECT * FROM dense WHERE rk <= 20) d
-          ON l.query_id = d.query_id AND l.doc_id = d.doc_id
-    )
-    SELECT query_id, CAST(rk AS BIGINT) AS rk, doc_id,
-           CAST(rrf_nano AS BIGINT) AS rrf_nano,
-           CAST(coalesce(lex_rk, -1) AS BIGINT) AS lex_rank,
-           CAST(coalesce(dense_rk, -1) AS BIGINT) AS dense_rank
-    FROM (
-        SELECT *, row_number() OVER (PARTITION BY query_id
-                                     ORDER BY rrf_nano DESC, doc_id) AS rk
-        FROM fused
-    ) WHERE rk <= 10
-    ORDER BY query_id, rk
-"""
+    {_rrf_fusion_sql("DIV", "")}"""
 
 
 @register(
     "sim_hybrid_rrf",
-    oracle="""
-    WITH posting AS (
-        SELECT doc_id, term, count(*) AS tf
-        FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS term FROM documents)
-        GROUP BY doc_id, term
+    oracle=f"""
+    {_DUCK_BM25_STATS}
+    qterms AS ({_bm25_query_terms_sql("CAST(ceil(rk / 2.0) AS BIGINT)", "df")}
     ),
-    doclen AS (SELECT doc_id, cast(sum(tf) AS BIGINT) AS dl FROM posting GROUP BY doc_id),
-    tot AS (SELECT count(*) AS n, cast(sum(dl) AS BIGINT) AS s FROM doclen),
-    df AS (SELECT term, count(*) AS df FROM posting GROUP BY term),
-    qterms AS (
-        SELECT CAST(ceil(rk / 2.0) AS BIGINT) AS query_id, term, df
-        FROM (SELECT term, df, row_number() OVER (ORDER BY df DESC, term) AS rk FROM df)
-        WHERE rk <= 6
-    ),
-    contrib AS (
-        SELECT q.query_id, p.doc_id,
-               (cast(floor(ln((2 * t.n + 2) / (2.0 * q.df + 1)) * 1000000 + 0.5) AS BIGINT)
-                 * (22 * p.tf * t.s))
-               // (10 * t.s * p.tf + 3 * t.s + 9 * t.n * d.dl) AS c_micro
-        FROM posting p
-        JOIN qterms q ON p.term = q.term
-        JOIN doclen d ON p.doc_id = d.doc_id
-        CROSS JOIN tot t
+    contrib AS ({_bm25_contrib_sql("posting", "qterms", "doclen", "//")}
     ),
     lex_scored AS (
         SELECT query_id, CAST(doc_id AS BIGINT) AS doc_id,
                cast(sum(c_micro) AS BIGINT) AS bm25_micro
         FROM contrib GROUP BY query_id, doc_id
     ),
-    lex AS (
-        SELECT query_id, doc_id,
-               row_number() OVER (PARTITION BY query_id
-                                  ORDER BY bm25_micro DESC, doc_id) AS rk
-        FROM lex_scored
-    ),
+    {_RRF_LEX_SQL}
     en AS (
         SELECT CAST(vec_id AS BIGINT) AS vec_id, v,
                greatest(cast(list_sum([x * x FOR x IN v]) AS BIGINT), 1) AS nrm2
@@ -4816,35 +4613,7 @@ _RRF_MAIN_SQL = f"""
                c.nrm2
         FROM probes p JOIN en c ON c.vec_id <> p.query_id
     ),
-    dense AS (
-        SELECT query_id, doc_id,
-               row_number() OVER (PARTITION BY query_id ORDER BY
-                   (CASE WHEN dot >= 0 THEN (dot * dot * 1000) // nrm2
-                         ELSE -((dot * dot * 1000) // nrm2) END) DESC,
-                   doc_id) AS rk
-        FROM dots
-    ),
-    fused AS (
-        SELECT coalesce(l.query_id, d.query_id) AS query_id,
-               coalesce(l.doc_id, d.doc_id) AS doc_id,
-               coalesce(1000000000 // (60 + l.rk), 0)
-                 + coalesce(1000000000 // (60 + d.rk), 0) AS rrf_nano,
-               l.rk AS lex_rk, d.rk AS dense_rk
-        FROM (SELECT * FROM lex WHERE rk <= 20) l
-        FULL OUTER JOIN (SELECT * FROM dense WHERE rk <= 20) d
-          ON l.query_id = d.query_id AND l.doc_id = d.doc_id
-    )
-    SELECT query_id, CAST(rk AS BIGINT) AS rk, doc_id,
-           CAST(rrf_nano AS BIGINT) AS rrf_nano,
-           CAST(coalesce(lex_rk, -1) AS BIGINT) AS lex_rank,
-           CAST(coalesce(dense_rk, -1) AS BIGINT) AS dense_rank
-    FROM (
-        SELECT *, row_number() OVER (PARTITION BY query_id
-                                     ORDER BY rrf_nano DESC, doc_id) AS rk
-        FROM fused
-    ) t WHERE rk <= 10
-    ORDER BY query_id, rk
-    """,
+    {_rrf_fusion_sql("//", " t")}""",
     tags=("pipeline", "retrieval", "hybrid", "rrf"),
     bench=True,
     doc="Hybrid retrieval (Cormack et al. 2009 RRF, k=60): BM25 lexical "
@@ -4880,26 +4649,8 @@ def sim_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
 # round 5 and cross-check membership against an independent loop-to-
 # fixpoint peeling).  peeled_round records WHEN each node fell (0 =
 # in-core), the cheap coreness diagnostic.
-_KCORE_GRAPH_SQL = """
-    WITH params AS (
-        -- same corpus-scaled derivation as the other graph fixtures:
-        -- ~375 orders per 15 nodes, floor before the BIGINT cast
-        SELECT 15 * greatest(4, CAST(floor(count(*) / 375.0) AS BIGINT)) AS n
-        FROM orders
-    ),
-    edges AS (
-        -- skewed web: hub links (dst skews toward low ids) + a ring
-        SELECT DISTINCT o_custkey % (SELECT n FROM params) AS src,
-               o_orderkey % (1 + o_custkey % 12) AS dst
-        FROM orders
-        WHERE o_custkey % (SELECT n FROM params)
-              <> o_orderkey % (1 + o_custkey % 12)
-        UNION
-        SELECT DISTINCT o_custkey % (SELECT n FROM params) AS src,
-               (o_custkey % (SELECT n FROM params) + 1)
-               % (SELECT n FROM params) AS dst
-        FROM orders
-    ),
+_KCORE_GRAPH_SQL = f"""
+    {_SKEWED_WEB},
     sym AS (
         SELECT src, dst FROM edges
         UNION
@@ -4908,22 +4659,22 @@ _KCORE_GRAPH_SQL = """
     SELECT src, dst FROM sym
     """
 
-_KCORE_ROUNDS_SQL = """
-    WITH nodes AS (SELECT DISTINCT src AS id FROM {E}),
-    a1 AS (SELECT src AS id, count(*) AS d FROM {E}
-           GROUP BY src HAVING count(*) >= 6),
-    a2 AS (SELECT e.src AS id, count(*) AS d FROM {E} e
-           JOIN a1 x ON e.dst = x.id JOIN a1 y ON e.src = y.id
-           GROUP BY e.src HAVING count(*) >= 6),
-    a3 AS (SELECT e.src AS id, count(*) AS d FROM {E} e
-           JOIN a2 x ON e.dst = x.id JOIN a2 y ON e.src = y.id
-           GROUP BY e.src HAVING count(*) >= 6),
-    a4 AS (SELECT e.src AS id, count(*) AS d FROM {E} e
-           JOIN a3 x ON e.dst = x.id JOIN a3 y ON e.src = y.id
-           GROUP BY e.src HAVING count(*) >= 6),
-    a5 AS (SELECT e.src AS id, count(*) AS d FROM {E} e
-           JOIN a4 x ON e.dst = x.id JOIN a4 y ON e.src = y.id
-           GROUP BY e.src HAVING count(*) >= 6)
+
+def _kcore_round_sql(edges: str, alive: str) -> str:
+    """One peeling round: each node with at least 6 edges to nodes of the
+    previous round's ``alive`` set, and its degree there."""
+    return (
+        f"SELECT e.src AS id, count(*) AS d FROM {edges} e "
+        f"JOIN {alive} x ON e.dst = x.id JOIN {alive} y ON e.src = y.id "
+        "GROUP BY e.src HAVING count(*) >= 6"
+    )
+
+
+def _kcore_peel_sql(a2: str, a4: str) -> str:
+    """Each node's membership, core degree and the round it fell in, from
+    ``nodes`` and the rounds a1..a5; ``a2`` and ``a4`` name the relations
+    of rounds 2 and 4."""
+    return f"""
     SELECT CAST(n.id AS BIGINT) AS node_id,
            CAST(CASE WHEN a5.id IS NOT NULL THEN 1 ELSE 0 END AS BIGINT) AS in_core,
            CAST(coalesce(a5.d, -1) AS BIGINT) AS core_degree,
@@ -4935,12 +4686,23 @@ _KCORE_ROUNDS_SQL = """
                      ELSE 0 END AS BIGINT) AS peeled_round
     FROM nodes n
     LEFT JOIN a1 ON n.id = a1.id
-    LEFT JOIN a2 ON n.id = a2.id
+    LEFT JOIN {a2} ON n.id = a2.id
     LEFT JOIN a3 ON n.id = a3.id
-    LEFT JOIN a4 ON n.id = a4.id
+    LEFT JOIN {a4} ON n.id = a4.id
     LEFT JOIN a5 ON n.id = a5.id
     ORDER BY node_id
     """
+
+
+_KCORE_ROUNDS_SQL = f"""
+    WITH nodes AS (SELECT DISTINCT src AS id FROM {{E}}),
+    a1 AS (SELECT src AS id, count(*) AS d FROM {{E}}
+           GROUP BY src HAVING count(*) >= 6),
+    a2 AS ({_kcore_round_sql("{E}", "a1")}),
+    a3 AS ({_kcore_round_sql("{E}", "a2")}),
+    a4 AS ({_kcore_round_sql("{E}", "a3")}),
+    a5 AS ({_kcore_round_sql("{E}", "a4")})
+    {_kcore_peel_sql("a2", "a4")}"""
 
 _KCORE_ORACLE = (
     _KCORE_GRAPH_SQL.rstrip().removesuffix("SELECT src, dst FROM sym")
@@ -4949,8 +4711,8 @@ _KCORE_ORACLE = (
 ).replace("sym AS (", "sym AS MATERIALIZED (")
 assert _KCORE_ORACLE.count("WITH ") == 1
 
-# r13 scan-audit fix: the declaratively-unrolled _KCORE_ROUNDS_SQL (kept
-# above verbatim — it IS the oracle text) re-expands every round twice
+# The declaratively-unrolled _KCORE_ROUNDS_SQL (the oracle text)
+# re-expands every round twice
 # when Spark inlines the CTEs (a5 contains a4 twice -> a3 4x -> ... a1
 # 16x; the final LEFT JOINs re-expand the whole cascade once more):
 # 600-node physical plan, 116 scans of the checkpointed edge relation,
@@ -4961,64 +4723,35 @@ assert _KCORE_ORACLE.count("WITH ") == 1
 # plan), while paying HALF the per-build checkpoint jobs of full
 # per-round staging.  Measured at sf0.1 (same-session, two passes):
 # hybrid 1.87/1.34s vs unrolled 1.98/1.69s vs fully-staged 3.16/1.58s.
-_KCORE_A2_SQL = """
-    WITH a1 AS (SELECT src AS id, count(*) AS d FROM {kc_sym}
+_KCORE_A2_SQL = f"""
+    WITH a1 AS (SELECT src AS id, count(*) AS d FROM {{kc_sym}}
                 GROUP BY src HAVING count(*) >= 6)
-    SELECT e.src AS id, count(*) AS d
-    FROM {kc_sym} e JOIN a1 x ON e.dst = x.id JOIN a1 y ON e.src = y.id
-    GROUP BY e.src HAVING count(*) >= 6
+    {_kcore_round_sql("{kc_sym}", "a1")}
 """
 
-_KCORE_A4_SQL = """
-    WITH a3 AS (SELECT e.src AS id, count(*) AS d
-                FROM {kc_sym} e JOIN {kc_a2} x ON e.dst = x.id
-                                JOIN {kc_a2} y ON e.src = y.id
-                GROUP BY e.src HAVING count(*) >= 6)
-    SELECT e.src AS id, count(*) AS d
-    FROM {kc_sym} e JOIN a3 x ON e.dst = x.id JOIN a3 y ON e.src = y.id
-    GROUP BY e.src HAVING count(*) >= 6
+_KCORE_A4_SQL = f"""
+    WITH a3 AS ({_kcore_round_sql("{kc_sym}", "{kc_a2}")})
+    {_kcore_round_sql("{kc_sym}", "a3")}
 """
 
-_KCORE_FINAL_SQL = """
-    WITH nodes AS (SELECT DISTINCT src AS id FROM {kc_sym}),
-    a1 AS (SELECT src AS id, count(*) AS d FROM {kc_sym}
+_KCORE_FINAL_SQL = f"""
+    WITH nodes AS (SELECT DISTINCT src AS id FROM {{kc_sym}}),
+    a1 AS (SELECT src AS id, count(*) AS d FROM {{kc_sym}}
            GROUP BY src HAVING count(*) >= 6),
-    a3 AS (SELECT e.src AS id, count(*) AS d
-           FROM {kc_sym} e JOIN {kc_a2} x ON e.dst = x.id
-                           JOIN {kc_a2} y ON e.src = y.id
-           GROUP BY e.src HAVING count(*) >= 6),
-    a5 AS (SELECT e.src AS id, count(*) AS d
-           FROM {kc_sym} e JOIN {kc_a4} x ON e.dst = x.id
-                           JOIN {kc_a4} y ON e.src = y.id
-           GROUP BY e.src HAVING count(*) >= 6)
-    SELECT CAST(n.id AS BIGINT) AS node_id,
-           CAST(CASE WHEN a5.id IS NOT NULL THEN 1 ELSE 0 END AS BIGINT) AS in_core,
-           CAST(coalesce(a5.d, -1) AS BIGINT) AS core_degree,
-           CAST(CASE WHEN a1.id IS NULL THEN 1
-                     WHEN a2.id IS NULL THEN 2
-                     WHEN a3.id IS NULL THEN 3
-                     WHEN a4.id IS NULL THEN 4
-                     WHEN a5.id IS NULL THEN 5
-                     ELSE 0 END AS BIGINT) AS peeled_round
-    FROM nodes n
-    LEFT JOIN a1 ON n.id = a1.id
-    LEFT JOIN {kc_a2} a2 ON n.id = a2.id
-    LEFT JOIN a3 ON n.id = a3.id
-    LEFT JOIN {kc_a4} a4 ON n.id = a4.id
-    LEFT JOIN a5 ON n.id = a5.id
-    ORDER BY node_id
-"""
+    a3 AS ({_kcore_round_sql("{kc_sym}", "{kc_a2}")}),
+    a5 AS ({_kcore_round_sql("{kc_sym}", "{kc_a4}")})
+    {_kcore_peel_sql("{kc_a2} a2", "{kc_a4} a4")}"""
 
 
 @register(
     "graph_kcore",
     oracle=_KCORE_ORACLE,
     tags=("pipeline", "graph", "kcore"),
-    bench=True,  # r7: round-over-round perf tracking for the graph family
+    bench=True,
     doc="6-core decomposition by staged peeling (Seidman 1983): per "
     "round one edge-vs-alive join + degree aggregate + HAVING filter on "
     "the corpus-scaled skewed hub web, each round's node-sized alive set "
-    "checkpointed (r13: the inlined 5-round cascade re-expanded every "
+    "checkpointed (the inlined 5-round cascade re-expands every "
     "prior round twice — 600-node plan, 116 edge scans); fixpoint within "
     "4 rounds at all tested scales (round 5 = margin, test-asserted "
     "empty); peeled_round is the coreness diagnostic; symmetrized edges "
@@ -5052,12 +4785,9 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
 # frequency ranking and the match scan read it without recomputing the
 # window; the 3-phrase workload broadcasts onto the match scan
 # (BroadcastHashJoin), and per-phrase stats are one bounded rollup.
-_PHRASE_TRIGRAM_SQL = """
-    WITH tok AS (
-        SELECT doc_id, pos, term
-        FROM documents
-        LATERAL VIEW posexplode(split(text, ' ')) x AS pos, term
-    )
+# Trigram occurrences of tok(doc_id, pos, term) by one lead() window per
+# document, shared by the plan and its oracle.
+_PHRASE_LEAD_SQL = """
     SELECT doc_id, pos, t1 || ' ' || t2 || ' ' || t3 AS phrase
     FROM (
         SELECT doc_id, pos, term AS t1,
@@ -5069,15 +4799,28 @@ _PHRASE_TRIGRAM_SQL = """
     WHERE t3 IS NOT NULL
 """
 
-_PHRASE_MAIN_SQL = """
-    WITH top_phrases AS (
+_PHRASE_TRIGRAM_SQL = f"""
+    WITH tok AS (
+        SELECT doc_id, pos, term
+        FROM documents
+        LATERAL VIEW posexplode(split(text, ' ')) x AS pos, term
+    )
+    {_PHRASE_LEAD_SQL}
+"""
+
+
+def _phrase_match_sql(tri: str) -> str:
+    """The 3 most frequent phrases of ``tri`` and their per-phrase doc/hit
+    counts and position checksum."""
+    return f"""
+    top_phrases AS (
         SELECT phrase,
                row_number() OVER (ORDER BY count(*) DESC, phrase) AS phrase_rank
-        FROM {TRI} GROUP BY phrase
+        FROM {tri} GROUP BY phrase
     ),
     matches AS (
         SELECT tp.phrase_rank, tp.phrase, t.doc_id, t.pos
-        FROM {TRI} t
+        FROM {tri} t
         JOIN (SELECT * FROM top_phrases WHERE phrase_rank <= 3) tp
           ON t.phrase = tp.phrase
     )
@@ -5092,9 +4835,12 @@ _PHRASE_MAIN_SQL = """
 """
 
 
+_PHRASE_MAIN_SQL = "WITH" + _phrase_match_sql("{TRI}")
+
+
 @register(
     "text_phrase_search",
-    oracle="""
+    oracle=f"""
     WITH tokarr AS (
         SELECT doc_id, string_split(text, ' ') AS t FROM documents
     ),
@@ -5104,37 +4850,9 @@ _PHRASE_MAIN_SQL = """
             SELECT unnest(range(1, len(t) + 1)) AS i
         ) p
     ),
-    tri AS (
-        SELECT doc_id, pos, t1 || ' ' || t2 || ' ' || t3 AS phrase
-        FROM (
-            SELECT doc_id, pos, term AS t1,
-                   lead(term, 1) OVER w AS t2,
-                   lead(term, 2) OVER w AS t3
-            FROM tok
-            WINDOW w AS (PARTITION BY doc_id ORDER BY pos)
-        )
-        WHERE t3 IS NOT NULL
+    tri AS ({_PHRASE_LEAD_SQL}
     ),
-    top_phrases AS (
-        SELECT phrase,
-               row_number() OVER (ORDER BY count(*) DESC, phrase) AS phrase_rank
-        FROM tri GROUP BY phrase
-    ),
-    matches AS (
-        SELECT tp.phrase_rank, tp.phrase, t.doc_id, t.pos
-        FROM tri t
-        JOIN (SELECT * FROM top_phrases WHERE phrase_rank <= 3) tp
-          ON t.phrase = tp.phrase
-    )
-    SELECT CAST(phrase_rank AS BIGINT) AS phrase_rank, phrase,
-           CAST(count(DISTINCT doc_id) AS BIGINT) AS n_docs,
-           CAST(count(*) AS BIGINT) AS n_hits,
-           CAST(min(doc_id) AS BIGINT) AS first_doc,
-           CAST(sum(doc_id * 100000 + pos) AS BIGINT) AS pos_checksum
-    FROM matches
-    GROUP BY phrase_rank, phrase
-    ORDER BY phrase_rank
-    """,
+    {_phrase_match_sql("tri")}""",
     tags=("pipeline", "text", "retrieval", "phrase"),
     doc="Exact phrase search over positional postings (Lucene PhraseQuery "
     "shape): trigram occurrences assembled by ONE lead() window per doc "
@@ -5166,7 +4884,7 @@ def text_phrase_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "mm_audio_fingerprint_dedup",
-    bench=True,  # r7: round-over-round perf tracking for the mm family
+    bench=True,
     oracle="""
     WITH corpus AS (
         SELECT doc_id, text FROM documents WHERE doc_id < 150
@@ -5318,10 +5036,10 @@ assert _KHOP_ORACLE.count("WITH ") == 1
     "nodes report -1; edges checkpointed once.",
 )
 def graph_khop_distances(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # r13 scan-audit fix: each unrolled relaxation round references the
+    # Each unrolled relaxation round references the
     # previous distance relation twice (union branch + join branch), so
-    # inlining doubled the subtree per level (32 edge-relation scans);
-    # the node-sized distance relation is now checkpointed per round.
+    # inlining doubles the subtree per level (32 edge-relation scans);
+    # the node-sized distance relation is checkpointed per round.
     # Round math is verbatim _KHOP_ROUNDS_SQL (the oracle text above).
     sym = _block_web_edges(spark, sf_dir)
     nodes = spark.sql(
@@ -5497,17 +5215,13 @@ def mm_video_scene_cut(spark: SparkSession, sf_dir: str) -> DataFrame:
 # bit-for-bit.
 
 _KNN_CORPUS_SQL = f"""
-    WITH e AS (
-        SELECT vec_id,
-               transform(embedding, x -> cast(round(cast(x AS double) * 1000) AS bigint)) AS v
-        FROM embeddings
-    ),
+    WITH e AS ({_SPARK_QUANTIZED}),
     params AS (
-        -- r13: the b x 64 integer hyperplane matrix is hoisted into this
-        -- 1-row relation (the old form re-evaluated the weight
-        -- arithmetic inside the projection lambda for every
-        -- (row, bit, dim) triple — same weights, 1.28x on the corpus
-        -- stage); values are identical to the oracle's inline formula.
+        -- the b x 64 integer hyperplane matrix is hoisted into this
+        -- 1-row relation (evaluating the weight arithmetic inside the
+        -- projection lambda for every (row, bit, dim) triple cost 1.28x
+        -- on the corpus stage); values are identical to the oracle's
+        -- inline formula.
         SELECT b,
                transform(sequence(0, b - 1), j ->
                    transform(sequence(cast(0 AS bigint), cast(63 AS bigint)),
@@ -5527,12 +5241,8 @@ _KNN_CORPUS_SQL = f"""
 
 # The DuckDB-side rendering of the same adaptive-bit bucketed corpus
 # (shared verbatim by the sim_knn_join and cluster_snn_knn oracles).
-_KNN_CORPUS_ORACLE = """
-    e AS (
-        SELECT vec_id,
-               [CAST(round(CAST(x AS DOUBLE) * 1000) AS BIGINT) FOR x IN embedding] AS v
-        FROM embeddings
-    ),
+_KNN_CORPUS_ORACLE = f"""
+    e AS ({_DUCK_QUANTIZED}),
     params AS (
         SELECT greatest(5, length(bin(greatest((count(*) + 31) // 32 - 1, 1)))) AS b FROM e
     ),
@@ -5549,6 +5259,19 @@ _KNN_CORPUS_ORACLE = """
     )
     """
 
+# Each vector's 3 nearest neighbours by sim_key: the dialect-neutral tail
+# of sim_knn_join, sim_nn_descent_round and their oracles.
+_KNN_TOP3_SQL = """
+    ranked AS (
+        SELECT src, nbr, sim_key,
+               row_number() OVER (PARTITION BY src ORDER BY sim_key DESC, nbr) AS rk
+        FROM keyed
+    )
+    SELECT src AS vec_id, rk, nbr AS neighbor_id, sim_key
+    FROM ranked WHERE rk <= 3
+    ORDER BY vec_id, rk
+    """
+
 _KNN_JOIN_SQL = f"""
     WITH pairs AS (
         SELECT a.vec_id AS src, b.vec_id AS nbr,
@@ -5563,22 +5286,14 @@ _KNN_JOIN_SQL = f"""
                     ELSE -((dot * dot * 1000) DIV nrm2) END AS sim_key
         FROM pairs
     ),
-    ranked AS (
-        SELECT src, nbr, sim_key,
-               row_number() OVER (PARTITION BY src ORDER BY sim_key DESC, nbr) AS rk
-        FROM keyed
-    )
-    SELECT src AS vec_id, rk, nbr AS neighbor_id, sim_key
-    FROM ranked WHERE rk <= 3
-    ORDER BY vec_id, rk
-    """
+    {_KNN_TOP3_SQL}"""
 
 
 @register(
     "sim_knn_join",
     oracle="WITH "
     + _KNN_CORPUS_ORACLE
-    + """,
+    + f""",
     pairs AS (
         SELECT a.vec_id AS src, b.vec_id AS nbr,
                CAST(list_sum([a.v[i] * b.v[i] FOR i IN generate_series(1, 64)]) AS BIGINT) AS dot,
@@ -5592,15 +5307,7 @@ _KNN_JOIN_SQL = f"""
                          ELSE -((dot * dot * 1000) // nrm2) END AS BIGINT) AS sim_key
         FROM pairs
     ),
-    ranked AS (
-        SELECT src, nbr, sim_key,
-               row_number() OVER (PARTITION BY src ORDER BY sim_key DESC, nbr) AS rk
-        FROM keyed
-    )
-    SELECT src AS vec_id, rk, nbr AS neighbor_id, sim_key
-    FROM ranked WHERE rk <= 3
-    ORDER BY vec_id, rk
-    """,
+    {_KNN_TOP3_SQL}""",
     tags=("pipeline", "similarity", "knn"),
     bench=True,
     doc="Bucketed k-NN self-join (neighbor-graph construction): "
@@ -5808,11 +5515,7 @@ def graph_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
 # join is an equi-join on vector ids or bucket keys.
 
 _NND_CORPUS_SQL = f"""
-    WITH e AS (
-        SELECT vec_id,
-               transform(embedding, x -> cast(round(cast(x AS double) * 1000) AS bigint)) AS v
-        FROM embeddings
-    ),
+    WITH e AS ({_SPARK_QUANTIZED}),
     params AS (
         SELECT greatest(4, length(bin(greatest((count(*) + 31) DIV 32 - 1, 1)))) AS b FROM e
     ),
@@ -5893,22 +5596,10 @@ _NND_ROUND_SQL = f"""
                     ELSE -((dot * dot * 1000) DIV nrm2) END AS sim_key
         FROM rescored
     ),
-    ranked AS (
-        SELECT src, nbr, sim_key,
-               row_number() OVER (PARTITION BY src ORDER BY sim_key DESC, nbr) AS rk
-        FROM keyed
-    )
-    SELECT src AS vec_id, rk, nbr AS neighbor_id, sim_key
-    FROM ranked WHERE rk <= 3
-    ORDER BY vec_id, rk
-    """
+    {_KNN_TOP3_SQL}"""
 
-_NND_ORACLE = """
-    WITH e AS (
-        SELECT vec_id,
-               [CAST(round(CAST(x AS DOUBLE) * 1000) AS BIGINT) FOR x IN embedding] AS v
-        FROM embeddings
-    ),
+_NND_ORACLE = f"""
+    WITH e AS ({_DUCK_QUANTIZED}),
     params AS (
         SELECT greatest(4, length(bin(greatest((count(*) + 31) // 32 - 1, 1)))) AS b FROM e
     ),
@@ -5973,15 +5664,7 @@ _NND_ORACLE = """
                          ELSE -((dot * dot * 1000) // nrm2) END AS BIGINT) AS sim_key
         FROM rescored
     ),
-    ranked AS (
-        SELECT src, nbr, sim_key,
-               row_number() OVER (PARTITION BY src ORDER BY sim_key DESC, nbr) AS rk
-        FROM keyed
-    )
-    SELECT src AS vec_id, rk, nbr AS neighbor_id, sim_key
-    FROM ranked WHERE rk <= 3
-    ORDER BY vec_id, rk
-    """
+    {_KNN_TOP3_SQL}"""
 
 
 @register(
@@ -6155,9 +5838,9 @@ assert _SNN_ORACLE.count("WITH ") == 1
     "every stage materialized once.",
 )
 def cluster_snn_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # r13 scan-audit fix: _SNN_MAIN_SQL's unrolled min-label +
-    # pointer-jumping rounds re-expanded ~3x per level (974 KB plan, 381
-    # scans of the checkpointed strong-edge relation); the rounds are now
+    # _SNN_MAIN_SQL's unrolled min-label +
+    # pointer-jumping rounds re-expand ~3x per level (974 KB plan, 381
+    # scans of the checkpointed strong-edge relation); the rounds are
     # staged per level via _minlabel_jump_rounds (identical math).
     corpus = catalog.sql(spark, sf_dir, _KNN_CORPUS_SQL).localCheckpoint(eager=True)
     edges = spark.sql(_SNN_EDGES_SQL, E=corpus).localCheckpoint(eager=True)
@@ -6214,9 +5897,9 @@ _DSIR_POSTING_SQL = """
         FROM vocab
     ),
     hrows AS (SELECT r.doc_id, r.pos, v.h FROM trows r JOIN vhash v ON r.tk = v.tk),
-    -- r14: unigram and bigram features come off ONE pass over hrows (the
-    -- old UNION ALL's two branches each re-inlined the tokenize-explode +
-    -- vocab-hash join — Spark CTEs are not materialized); the lead()
+    -- unigram and bigram features come off ONE pass over hrows (a
+    -- UNION ALL's two branches would each re-inline the tokenize-explode
+    -- + vocab-hash join — Spark CTEs are not materialized); the lead()
     -- window row emits its unigram feature and, when a successor exists,
     -- the bigram feature — the identical feature multiset.
     led AS (SELECT doc_id, h, lead(h, 1) OVER (PARTITION BY doc_id ORDER BY pos) AS h2
@@ -6482,12 +6165,8 @@ def mm_video_keyframe_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 _PCA_ITER = 5
 
 _PCA_SQL = (
-    """
-    WITH e AS (
-        SELECT vec_id,
-               transform(embedding, x -> cast(round(cast(x AS double) * 1000) AS bigint)) AS v
-        FROM embeddings
-    ),
+    f"""
+    WITH e AS ({_SPARK_QUANTIZED}),
     rows_ AS (SELECT vec_id, posexplode(v) AS (d, x) FROM e),
     cov AS (
         SELECT a.d AS i, b.d AS j, cast(sum(a.x * b.x) AS bigint) AS c
@@ -6513,12 +6192,8 @@ _PCA_SQL = (
 )
 
 _PCA_ORACLE = (
-    """
-    WITH e AS (
-        SELECT vec_id,
-               [CAST(round(CAST(x AS DOUBLE) * 1000) AS BIGINT) FOR x IN embedding] AS v
-        FROM embeddings
-    ),
+    f"""
+    WITH e AS ({_DUCK_QUANTIZED}),
     rows_ AS (
         SELECT vec_id, d - 1 AS d, v[d] AS x
         FROM e, unnest(generate_series(1, 64)) AS t(d)
@@ -6560,8 +6235,8 @@ assert _PCA_ORACLE.count("WITH ") == 1
     "an anisotropic fixture), the oracle pins the mechanism.",
 )
 def sim_pca_project(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # r12 scan-guard rework: the single-SQL form above (kept as _PCA_SQL
-    # for the oracle's structural twin) inlined cov/rows_ into every
+    # The single-SQL form above (_PCA_SQL, the oracle's structural
+    # twin) inlines cov/rows_ into every
     # power iteration — 125 embeddings scans in the optimized plan.
     # Production shape: the 4096-cell moment matrix is checkpointed
     # once (corpus-size-independent), each 64-row iterate is
@@ -6635,6 +6310,17 @@ _TWOSTAGE_CORPUS_SQL = f"""
     FROM e
 """
 
+# Each query's 20-candidate shortlist by prefix cosine, shared by the plan
+# and its oracle.
+_TWOSTAGE_SHORTLIST_SQL = """
+    short AS (
+        SELECT query_id, cand_id, crk FROM (
+            SELECT query_id, cand_id,
+                   row_number() OVER (PARTITION BY query_id ORDER BY pcos DESC, cand_id) AS crk
+            FROM coarse
+        ) WHERE crk <= 20
+    ),"""
+
 _TWOSTAGE_MAIN_SQL = f"""
     WITH q AS (SELECT * FROM {{N}} WHERE vec_id < 8),
     coarse AS (
@@ -6642,13 +6328,7 @@ _TWOSTAGE_MAIN_SQL = f"""
                {vec.dot('q.pv', 'c.pv', 'double')} / (q.pnrm * c.pnrm) AS pcos
         FROM q JOIN {{N}} c ON q.vec_id <> c.vec_id
     ),
-    short AS (
-        SELECT query_id, cand_id, crk FROM (
-            SELECT query_id, cand_id,
-                   row_number() OVER (PARTITION BY query_id ORDER BY pcos DESC, cand_id) AS crk
-            FROM coarse
-        ) WHERE crk <= 20
-    ),
+    {_TWOSTAGE_SHORTLIST_SQL}
     rerank AS (
         SELECT s.query_id, s.cand_id, s.crk,
                {vec.dot('qv.v', 'cv.v', 'double')} / (qv.nrm * cv.nrm) AS cos
@@ -6669,7 +6349,7 @@ _TWOSTAGE_MAIN_SQL = f"""
 
 @register(
     "sim_two_stage_prefix_rerank",
-    oracle="""
+    oracle=f"""
     WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
     n AS MATERIALIZED (SELECT vec_id, v, v[1:16] AS pv FROM e),
     q AS (SELECT * FROM n WHERE vec_id < 8),
@@ -6678,13 +6358,7 @@ _TWOSTAGE_MAIN_SQL = f"""
                list_cosine_similarity(q.pv, c.pv) AS pcos
         FROM q JOIN n c ON q.vec_id <> c.vec_id
     ),
-    short AS (
-        SELECT query_id, cand_id, crk FROM (
-            SELECT query_id, cand_id,
-                   row_number() OVER (PARTITION BY query_id ORDER BY pcos DESC, cand_id) AS crk
-            FROM coarse
-        ) WHERE crk <= 20
-    ),
+    {_TWOSTAGE_SHORTLIST_SQL}
     rerank AS (
         SELECT s.query_id, s.cand_id, s.crk,
                list_cosine_similarity(qv.v, cv.v) AS cos
@@ -7009,11 +6683,8 @@ def _kmpp_rounds_sql(dialect: str) -> str:
 
 
 _KMPP_ORACLE = (
-    """
-    WITH e AS (
-        SELECT vec_id, [CAST(round(CAST(x AS DOUBLE) * 1000) AS BIGINT) FOR x IN embedding] AS v
-        FROM embeddings
-    ),
+    f"""
+    WITH e AS ({_DUCK_QUANTIZED}),
     rows_ AS MATERIALIZED (
         SELECT vec_id, d - 1 AS d, v[d] AS x
         FROM e, unnest(generate_series(1, 64)) AS t(d)
@@ -7037,8 +6708,8 @@ assert _KMPP_ORACLE.count("WITH ") == 1
     "state bounded by the candidate set.",
 )
 def cluster_kmeans_parallel_init(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # r13 scan-audit fix: the unrolled _kmpp_rounds_sql (kept verbatim —
-    # it is the oracle text) re-expands under CTE inlining (each round's
+    # The unrolled _kmpp_rounds_sql (the oracle text)
+    # re-expands under CTE inlining (each round's
     # cost references the previous cost twice, the selection coin twice
     # more, and the candidate union re-inlines every sel) — a 301 KB
     # plan with 146 scans of the checkpointed rows_ relation.  The
@@ -7135,18 +6806,9 @@ def cluster_kmeans_parallel_init(spark: SparkSession, sf_dir: str) -> DataFrame:
 # never pairwise); the per-source rollup is a bounded aggregate.  All
 # arithmetic exact-integer (position-weighted chunk hash: order-
 # sensitive, both engines agree bit-for-bit).
-_sql_query(
-    "dedup_cdc_chunks",
-    """
-    WITH tok AS (
-        SELECT doc_id, source, p, w
-        FROM documents LATERAL VIEW posexplode(split(text, ' ')) t AS p, w
-    ),
-    wh AS (
-        SELECT doc_id, source, p,
-               aggregate(split(w, ''), 7L, (a, c) -> (a * 31 + ascii(c)) % 1000000007) AS h
-        FROM tok
-    ),
+# The dialect-neutral half of dedup_cdc_chunks: rolling hash, boundaries,
+# chunk numbering and each chunk's first position.
+_CDC_ANCHORED_SQL = """
     roll AS (
         SELECT doc_id, source, p, h,
                CASE WHEN p >= 3 THEN
@@ -7171,14 +6833,13 @@ _sql_query(
         SELECT doc_id, source, p, h, chunk_idx,
                min(p) OVER (PARTITION BY doc_id, chunk_idx) AS cs
         FROM chunked
-    ),
-    chunks AS (
-        SELECT doc_id, source, chunk_idx,
-               count(*) AS n_words,
-               sum((p - cs + 1) * h) % 1000000007 AS chash
-        FROM anchored
-        GROUP BY doc_id, source, chunk_idx
-    ),
+    ),"""
+
+
+def _cdc_rollup_sql(div: str) -> str:
+    """The per-source chunk and duplicate rollup over ``chunks``; ``div`` is
+    the integer division."""
+    return f"""
     freq AS (
         SELECT chash, n_words, count(*) AS inst FROM chunks GROUP BY chash, n_words
     )
@@ -7187,12 +6848,35 @@ _sql_query(
            CAST(count(DISTINCT c.chash) AS BIGINT) AS n_unique,
            CAST(sum(CASE WHEN f.inst > 1 THEN 1 ELSE 0 END) AS BIGINT) AS dup_instances,
            CAST(sum(CASE WHEN f.inst > 1 THEN c.n_words ELSE 0 END) AS BIGINT) AS dup_words,
-           CAST((sum(c.n_words) * 100) DIV count(*) AS BIGINT) AS avg_words_c
+           CAST((sum(c.n_words) * 100) {div} count(*) AS BIGINT) AS avg_words_c
     FROM chunks c JOIN freq f ON f.chash = c.chash AND f.n_words = c.n_words
     GROUP BY c.source
     ORDER BY c.source
-    """,
-    oracle="""
+    """
+
+
+_sql_query(
+    "dedup_cdc_chunks",
+    f"""
+    WITH tok AS (
+        SELECT doc_id, source, p, w
+        FROM documents LATERAL VIEW posexplode(split(text, ' ')) t AS p, w
+    ),
+    wh AS (
+        SELECT doc_id, source, p,
+               aggregate(split(w, ''), 7L, (a, c) -> (a * 31 + ascii(c)) % 1000000007) AS h
+        FROM tok
+    ),
+    {_CDC_ANCHORED_SQL}
+    chunks AS (
+        SELECT doc_id, source, chunk_idx,
+               count(*) AS n_words,
+               sum((p - cs + 1) * h) % 1000000007 AS chash
+        FROM anchored
+        GROUP BY doc_id, source, chunk_idx
+    ),
+    {_cdc_rollup_sql("DIV")}""",
+    oracle=f"""
     WITH tok AS (
         SELECT d.doc_id, d.source, t.p - 1 AS p, t.w
         FROM (SELECT doc_id, source, string_split(text, ' ') AS ws FROM documents) d,
@@ -7205,31 +6889,7 @@ _sql_query(
                    (a, b) -> (a * 31 + b) % 1000000007) AS h
         FROM tok
     ),
-    roll AS (
-        SELECT doc_id, source, p, h,
-               CASE WHEN p >= 3 THEN
-                   (lag(h, 3) OVER w * 29791 + lag(h, 2) OVER w * 961
-                    + lag(h, 1) OVER w * 31 + h) % 1000000007
-               END AS rh
-        FROM wh
-        WINDOW w AS (PARTITION BY doc_id ORDER BY p)
-    ),
-    marked AS (
-        SELECT doc_id, source, p, h,
-               CASE WHEN rh IS NOT NULL AND rh % 8 = 0 THEN 1 ELSE 0 END AS boundary
-        FROM roll
-    ),
-    chunked AS (
-        SELECT doc_id, source, p, h,
-               coalesce(sum(boundary) OVER (PARTITION BY doc_id ORDER BY p
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS chunk_idx
-        FROM marked
-    ),
-    anchored AS (
-        SELECT doc_id, source, p, h, chunk_idx,
-               min(p) OVER (PARTITION BY doc_id, chunk_idx) AS cs
-        FROM chunked
-    ),
+    {_CDC_ANCHORED_SQL}
     chunks AS MATERIALIZED (
         SELECT doc_id, source, chunk_idx,
                count(*) AS n_words,
@@ -7237,19 +6897,7 @@ _sql_query(
         FROM anchored
         GROUP BY doc_id, source, chunk_idx
     ),
-    freq AS (
-        SELECT chash, n_words, count(*) AS inst FROM chunks GROUP BY chash, n_words
-    )
-    SELECT c.source,
-           CAST(count(*) AS BIGINT) AS n_chunks,
-           CAST(count(DISTINCT c.chash) AS BIGINT) AS n_unique,
-           CAST(sum(CASE WHEN f.inst > 1 THEN 1 ELSE 0 END) AS BIGINT) AS dup_instances,
-           CAST(sum(CASE WHEN f.inst > 1 THEN c.n_words ELSE 0 END) AS BIGINT) AS dup_words,
-           CAST((sum(c.n_words) * 100) // count(*) AS BIGINT) AS avg_words_c
-    FROM chunks c JOIN freq f ON f.chash = c.chash AND f.n_words = c.n_words
-    GROUP BY c.source
-    ORDER BY c.source
-    """,
+    {_cdc_rollup_sql("//")}""",
     tags=("pipeline", "dedup"),
     doc="Content-defined chunking (rsync/FastCDC family) at word level: "
     "4-word rolling polynomial hash, boundary at rh % 8 == 0 (insertion-"
@@ -7316,10 +6964,10 @@ assert _MODQ_ORACLE.count("WITH ") == 1
     "combined degree/community rollups + one broadcast total.",
 )
 def graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # r13 scan-audit fix: the modularity tail references the label table
+    # The modularity tail references the label table
     # three times (intra twice + dsum), so inlining the whole unrolled
-    # label-propagation cascade per reference gave a 139 KB plan with 69
-    # edge-relation scans; it now reads the staged l3 labels.
+    # label-propagation cascade per reference gives a 139 KB plan with 69
+    # edge-relation scans; it reads the staged l3 labels instead.
     l3 = _labelprop_labels(spark, sf_dir)
     sql = "WITH " + _MODQ_TAIL.replace(
         "lbl AS (SELECT l3.id AS node_id, l3.lbl AS community FROM l3),",
@@ -7570,66 +7218,44 @@ def sim_ann_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 # rank-1 window pick — NOT a max_by score, which would silently
 # misreport once keys exceed the score's count multiplier (custkey
 # passes 1e7 at TPC-H SF >= 100).
+def _skew_report_sql(div: str) -> str:
+    """The skew report; ``div`` is the integer division (``DIV`` in Spark,
+    ``//`` in DuckDB)."""
+    return f"""
+    WITH ko AS (SELECT o_custkey AS k FROM orders),
+    ke AS (SELECT user_id AS k FROM events),
+    co AS (SELECT 'orders.o_custkey' AS col, k, count(*) AS cnt FROM ko GROUP BY k),
+    ce AS (SELECT 'events.user_id' AS col, k, count(*) AS cnt FROM ke GROUP BY k),
+    c AS (SELECT * FROM co UNION ALL SELECT * FROM ce),
+    ranked AS (
+        SELECT col, k, cnt,
+               row_number() OVER (PARTITION BY col ORDER BY cnt, k) AS rk,
+               row_number() OVER (PARTITION BY col ORDER BY cnt DESC, k) AS rk_desc
+        FROM c
+    ),
+    agg AS (
+        SELECT col,
+               count(*) AS n_keys,
+               sum(cnt) AS n_rows,
+               max(cnt) AS max_cnt,
+               min(CASE WHEN rk_desc = 1 THEN k END) AS top_key,
+               sum(rk * cnt) AS weighted
+        FROM ranked GROUP BY col
+    )
+    SELECT col,
+           CAST(n_keys AS BIGINT) AS n_keys,
+           CAST(n_rows AS BIGINT) AS n_rows,
+           CAST((max_cnt * 10000) {div} n_rows AS BIGINT) AS max_share_bp,
+           CAST(top_key AS BIGINT) AS top_key,
+           CAST((10000 * (2 * weighted - (n_keys + 1) * n_rows)) {div} (n_keys * n_rows) AS BIGINT) AS gini_bp
+    FROM agg ORDER BY col
+    """
+
+
 _sql_query(
     "scale_skew_report",
-    """
-    WITH ko AS (SELECT o_custkey AS k FROM orders),
-    ke AS (SELECT user_id AS k FROM events),
-    co AS (SELECT 'orders.o_custkey' AS col, k, count(*) AS cnt FROM ko GROUP BY k),
-    ce AS (SELECT 'events.user_id' AS col, k, count(*) AS cnt FROM ke GROUP BY k),
-    c AS (SELECT * FROM co UNION ALL SELECT * FROM ce),
-    ranked AS (
-        SELECT col, k, cnt,
-               row_number() OVER (PARTITION BY col ORDER BY cnt, k) AS rk,
-               row_number() OVER (PARTITION BY col ORDER BY cnt DESC, k) AS rk_desc
-        FROM c
-    ),
-    agg AS (
-        SELECT col,
-               count(*) AS n_keys,
-               sum(cnt) AS n_rows,
-               max(cnt) AS max_cnt,
-               min(CASE WHEN rk_desc = 1 THEN k END) AS top_key,
-               sum(rk * cnt) AS weighted
-        FROM ranked GROUP BY col
-    )
-    SELECT col,
-           CAST(n_keys AS BIGINT) AS n_keys,
-           CAST(n_rows AS BIGINT) AS n_rows,
-           CAST((max_cnt * 10000) DIV n_rows AS BIGINT) AS max_share_bp,
-           CAST(top_key AS BIGINT) AS top_key,
-           CAST((10000 * (2 * weighted - (n_keys + 1) * n_rows)) DIV (n_keys * n_rows) AS BIGINT) AS gini_bp
-    FROM agg ORDER BY col
-    """,
-    oracle="""
-    WITH ko AS (SELECT o_custkey AS k FROM orders),
-    ke AS (SELECT user_id AS k FROM events),
-    co AS (SELECT 'orders.o_custkey' AS col, k, count(*) AS cnt FROM ko GROUP BY k),
-    ce AS (SELECT 'events.user_id' AS col, k, count(*) AS cnt FROM ke GROUP BY k),
-    c AS (SELECT * FROM co UNION ALL SELECT * FROM ce),
-    ranked AS (
-        SELECT col, k, cnt,
-               row_number() OVER (PARTITION BY col ORDER BY cnt, k) AS rk,
-               row_number() OVER (PARTITION BY col ORDER BY cnt DESC, k) AS rk_desc
-        FROM c
-    ),
-    agg AS (
-        SELECT col,
-               count(*) AS n_keys,
-               sum(cnt) AS n_rows,
-               max(cnt) AS max_cnt,
-               min(CASE WHEN rk_desc = 1 THEN k END) AS top_key,
-               sum(rk * cnt) AS weighted
-        FROM ranked GROUP BY col
-    )
-    SELECT col,
-           CAST(n_keys AS BIGINT) AS n_keys,
-           CAST(n_rows AS BIGINT) AS n_rows,
-           CAST((max_cnt * 10000) // n_rows AS BIGINT) AS max_share_bp,
-           CAST(top_key AS BIGINT) AS top_key,
-           CAST((10000 * (2 * weighted - (n_keys + 1) * n_rows)) // (n_keys * n_rows) AS BIGINT) AS gini_bp
-    FROM agg ORDER BY col
-    """,
+    _skew_report_sql("DIV"),
+    oracle=_skew_report_sql("//"),
     tags=("pipeline", "scale"),
     doc="ANALYZE-style join-key skew report: per key column one map-side-"
     "combined groupBy reduces the corpus to its key-frequency table, then "
@@ -7656,9 +7282,24 @@ _sql_query(
 # (label, half, dim) aggregation reduces the corpus to a
 # clusters x 2 x 64 cell table; the pairing join and rollup run on that
 # bounded table.
+# The dialect-neutral tail: each cluster's drift from its per-dimension
+# means.
+_DRIFT_REPORT_SQL = """
+    paired AS (
+        SELECT a.label, a.d, a.m_micro AS ma, b.m_micro AS mb, a.n AS na, b.n AS nb
+        FROM (SELECT * FROM means WHERE half = 0) a
+        JOIN (SELECT * FROM means WHERE half = 1) b ON a.label = b.label AND a.d = b.d
+    )
+    SELECT CAST(label AS BIGINT) AS label,
+           CAST(min(na) AS BIGINT) AS n_ref, CAST(min(nb) AS BIGINT) AS n_cand,
+           CAST(sum(abs(ma - mb)) AS BIGINT) AS l1_drift_micro,
+           CAST(max(abs(ma - mb)) AS BIGINT) AS max_dim_drift_micro
+    FROM paired GROUP BY label ORDER BY label
+    """
+
 _sql_query(
     "sim_centroid_drift_monitor",
-    """
+    f"""
     WITH e AS (
         SELECT vec_id, label, vec_id % 2 AS half,
                transform(embedding,
@@ -7670,18 +7311,8 @@ _sql_query(
         SELECT label, half, d, (1000 * sum(x)) DIV count(*) AS m_micro, count(*) AS n
         FROM rows_ GROUP BY label, half, d
     ),
-    paired AS (
-        SELECT a.label, a.d, a.m_micro AS ma, b.m_micro AS mb, a.n AS na, b.n AS nb
-        FROM (SELECT * FROM means WHERE half = 0) a
-        JOIN (SELECT * FROM means WHERE half = 1) b ON a.label = b.label AND a.d = b.d
-    )
-    SELECT CAST(label AS BIGINT) AS label,
-           CAST(min(na) AS BIGINT) AS n_ref, CAST(min(nb) AS BIGINT) AS n_cand,
-           CAST(sum(abs(ma - mb)) AS BIGINT) AS l1_drift_micro,
-           CAST(max(abs(ma - mb)) AS BIGINT) AS max_dim_drift_micro
-    FROM paired GROUP BY label ORDER BY label
-    """,
-    oracle="""
+    {_DRIFT_REPORT_SQL}""",
+    oracle=f"""
     WITH e AS (
         SELECT vec_id, label, vec_id % 2 AS half,
                [CAST(round(CAST(x AS DOUBLE) * 1000) AS BIGINT) + 2000 FOR x IN embedding] AS v
@@ -7695,17 +7326,7 @@ _sql_query(
         SELECT label, half, d, (1000 * sum(x)) // count(*) AS m_micro, count(*) AS n
         FROM rows_ GROUP BY label, half, d
     ),
-    paired AS (
-        SELECT a.label, a.d, a.m_micro AS ma, b.m_micro AS mb, a.n AS na, b.n AS nb
-        FROM (SELECT * FROM means WHERE half = 0) a
-        JOIN (SELECT * FROM means WHERE half = 1) b ON a.label = b.label AND a.d = b.d
-    )
-    SELECT CAST(label AS BIGINT) AS label,
-           CAST(min(na) AS BIGINT) AS n_ref, CAST(min(nb) AS BIGINT) AS n_cand,
-           CAST(sum(abs(ma - mb)) AS BIGINT) AS l1_drift_micro,
-           CAST(max(abs(ma - mb)) AS BIGINT) AS max_dim_drift_micro
-    FROM paired GROUP BY label ORDER BY label
-    """,
+    {_DRIFT_REPORT_SQL}""",
     tags=("pipeline", "similarity", "eval"),
     doc="Per-cluster centroid drift between two corpus snapshots (vec_id-"
     "parity split): ONE map-side-combined (label, half, dim) aggregation "
@@ -7730,17 +7351,40 @@ _sql_query(
 # cum(v)*1000 >= q*N, all-integer, no interpolation, deterministic.
 # This is the same reduction text_perplexity_bucket uses for its tercile
 # cuts, promoted to a first-class aggregate with multiple measures.
+# The running and total counts over hist(measure, val, cnt) and the
+# quantile pick are dialect-neutral.
+_QUANTILE_CUM_SQL = """
+    cum AS (
+        SELECT measure, val, cnt,
+               sum(cnt) OVER (PARTITION BY measure ORDER BY val) AS cum_cnt,
+               sum(cnt) OVER (PARTITION BY measure) AS n
+        FROM hist
+    ),"""
+
+_QUANTILE_PICK_SQL = """
+    pick AS (
+        SELECT c.measure, q.q_milli, c.n,
+               min(c.val) AS quantile_value
+        FROM cum c JOIN qs q
+          ON c.cum_cnt * 1000 >= q.q_milli * c.n
+        GROUP BY c.measure, q.q_milli, c.n
+    )
+    SELECT measure, CAST(q_milli AS BIGINT) AS q_milli, CAST(n AS BIGINT) AS n,
+           CAST(quantile_value AS BIGINT) AS quantile_value
+    FROM pick ORDER BY measure, q_milli
+    """
+
 _sql_query(
     "agg_exact_quantiles",
-    # r13/r14 Spark-side shape (results identical to the oracle text
+    # Spark-side shape (results identical to the oracle text
     # below): (a) each measure aggregates to its value histogram BEFORE
     # the union, so the exchange carries (val, cnt) — never the constant
-    # measure string per corpus row; (b) r14: the per-measure total rides
+    # measure string per corpus row; (b) the per-measure total rides
     # a second window over the SAME measure-keyed exchange as the
-    # running sum (the r13 groupBy+join form re-inlined the whole hist
+    # running sum (a groupBy+join form re-inlines the whole hist
     # subtree — Catalyst does not materialize CTEs — costing a duplicate
     # scan+aggregate of BOTH corpus tables and 3 extra exchanges).
-    """
+    f"""
     WITH m1h AS (SELECT CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT) AS val,
                         count(*) AS cnt
                  FROM orders GROUP BY 1),
@@ -7749,50 +7393,20 @@ _sql_query(
     hist AS (SELECT 'orders.o_totalprice_cents' AS measure, val, cnt FROM m1h
              UNION ALL
              SELECT 'lineitem.l_quantity' AS measure, val, cnt FROM m2h),
-    cum AS (
-        SELECT measure, val, cnt,
-               sum(cnt) OVER (PARTITION BY measure ORDER BY val) AS cum_cnt,
-               sum(cnt) OVER (PARTITION BY measure) AS n
-        FROM hist
-    ),
+    {_QUANTILE_CUM_SQL}
     qs AS (SELECT explode(array(500, 900, 990)) AS q_milli),
-    pick AS (
-        SELECT c.measure, q.q_milli, c.n,
-               min(c.val) AS quantile_value
-        FROM cum c JOIN qs q
-          ON c.cum_cnt * 1000 >= q.q_milli * c.n
-        GROUP BY c.measure, q.q_milli, c.n
-    )
-    SELECT measure, CAST(q_milli AS BIGINT) AS q_milli, CAST(n AS BIGINT) AS n,
-           CAST(quantile_value AS BIGINT) AS quantile_value
-    FROM pick ORDER BY measure, q_milli
-    """,
-    oracle="""
+    {_QUANTILE_PICK_SQL}""",
+    oracle=f"""
     WITH m1 AS (SELECT 'orders.o_totalprice_cents' AS measure,
                        CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT) AS val FROM orders),
     m2 AS (SELECT 'lineitem.l_quantity' AS measure, CAST(l_quantity AS BIGINT) AS val FROM lineitem),
     m AS (SELECT * FROM m1 UNION ALL SELECT * FROM m2),
     hist AS (SELECT measure, val, count(*) AS cnt FROM m GROUP BY measure, val),
-    cum AS (
-        SELECT measure, val, cnt,
-               sum(cnt) OVER (PARTITION BY measure ORDER BY val) AS cum_cnt,
-               sum(cnt) OVER (PARTITION BY measure) AS n
-        FROM hist
-    ),
+    {_QUANTILE_CUM_SQL}
     qs AS (SELECT unnest([500, 900, 990]) AS q_milli),
-    pick AS (
-        SELECT c.measure, q.q_milli, c.n,
-               min(c.val) AS quantile_value
-        FROM cum c JOIN qs q
-          ON c.cum_cnt * 1000 >= q.q_milli * c.n
-        GROUP BY c.measure, q.q_milli, c.n
-    )
-    SELECT measure, CAST(q_milli AS BIGINT) AS q_milli, CAST(n AS BIGINT) AS n,
-           CAST(quantile_value AS BIGINT) AS quantile_value
-    FROM pick ORDER BY measure, q_milli
-    """,
+    {_QUANTILE_PICK_SQL}""",
     tags=("pipeline", "aggregates", "quantiles"),
-    bench=True,  # r7: the exact-quantile histogram reduction profile
+    bench=True,
     doc="Exact p50/p90/p99 over bounded-domain measures: ONE map-side-"
     "combined (measure, value) groupBy reduces the corpus to its value "
     "histogram (distinct-value-cardinality-sized, corpus-size-"
@@ -7816,14 +7430,21 @@ _sql_query(
 # pruned.  Signatures are stored as TWO 32-bit words — bit 63 of a packed
 # 64-bit word overflows DuckDB's checked left-shift while Spark wraps
 # silently, exactly the cross-engine trap the split avoids.
+# The top-5 tail is dialect-neutral: the plan and its oracle share it.
+_HAMMING_TOP5_SQL = """
+    ranked AS (
+        SELECT query_id, neighbor_id, hamming,
+               row_number() OVER (PARTITION BY query_id ORDER BY hamming, neighbor_id) AS rk
+        FROM scored
+    )
+    SELECT query_id, CAST(rk AS BIGINT) AS rk, neighbor_id, CAST(hamming AS BIGINT) AS hamming
+    FROM ranked WHERE rk <= 5 ORDER BY query_id, rk
+    """
+
 _sql_query(
     "sim_binary_hamming_topk",
-    """
-    WITH e AS (
-        SELECT vec_id,
-               transform(embedding, x -> cast(round(cast(x AS double) * 1000) AS bigint)) AS v
-        FROM embeddings
-    ),
+    f"""
+    WITH e AS ({_SPARK_QUANTIZED}),
     sig AS (
         SELECT vec_id,
                aggregate(sequence(1, 32), cast(0 AS bigint),
@@ -7838,19 +7459,9 @@ _sql_query(
                bit_count(q.s_lo ^ c.s_lo) + bit_count(q.s_hi ^ c.s_hi) AS hamming
         FROM q JOIN sig c ON q.vec_id <> c.vec_id
     ),
-    ranked AS (
-        SELECT query_id, neighbor_id, hamming,
-               row_number() OVER (PARTITION BY query_id ORDER BY hamming, neighbor_id) AS rk
-        FROM scored
-    )
-    SELECT query_id, CAST(rk AS BIGINT) AS rk, neighbor_id, CAST(hamming AS BIGINT) AS hamming
-    FROM ranked WHERE rk <= 5 ORDER BY query_id, rk
-    """,
-    oracle="""
-    WITH e AS (
-        SELECT vec_id, [CAST(round(CAST(x AS DOUBLE) * 1000) AS BIGINT) FOR x IN embedding] AS v
-        FROM embeddings
-    ),
+    {_HAMMING_TOP5_SQL}""",
+    oracle=f"""
+    WITH e AS ({_DUCK_QUANTIZED}),
     sig AS (
         SELECT vec_id,
                CAST(list_sum([CASE WHEN v[d] >= 0 THEN (1::BIGINT << (d - 1)) ELSE 0 END
@@ -7865,16 +7476,9 @@ _sql_query(
                bit_count(xor(q.s_lo, c.s_lo)) + bit_count(xor(q.s_hi, c.s_hi)) AS hamming
         FROM q JOIN sig c ON q.vec_id <> c.vec_id
     ),
-    ranked AS (
-        SELECT query_id, neighbor_id, hamming,
-               row_number() OVER (PARTITION BY query_id ORDER BY hamming, neighbor_id) AS rk
-        FROM scored
-    )
-    SELECT query_id, CAST(rk AS BIGINT) AS rk, neighbor_id, CAST(hamming AS BIGINT) AS hamming
-    FROM ranked WHERE rk <= 5 ORDER BY query_id, rk
-    """,
+    {_HAMMING_TOP5_SQL}""",
     tags=("pipeline", "similarity"),
-    bench=True,  # r7: 8-byte-signature retrieval, the compact-scan profile
+    bench=True,
     doc="Sign-binarized Hamming top-k (Charikar 2002 angular-distance "
     "estimator): 64 sign bits per vector packed into two 32-bit words "
     "(bit 63 of one word overflows DuckDB's checked shift — the split "
@@ -7900,23 +7504,9 @@ _sql_query(
 # exact-integer (signed counts; the checksum's % keeps the dividend's
 # sign in BOTH engines — Java and C semantics agree — so negative
 # position-weighted sums hash identically).
-_sql_query(
-    "text_feature_hashing",
-    """
-    WITH tok AS (
-        SELECT doc_id, w
-        FROM documents LATERAL VIEW explode(split(text, ' ')) t AS w
-    ),
-    wh AS (
-        SELECT doc_id,
-               aggregate(split(w, ''), 7L, (a, c) -> (a * 31 + ascii(c)) % 1000000007) AS h
-        FROM tok
-    ),
-    feat AS (
-        SELECT doc_id, h % 64 AS f,
-               CASE WHEN (h DIV 64) % 2 = 0 THEN 1 ELSE -1 END AS sgn
-        FROM wh
-    ),
+# Each document's signed feature vector and its summary, shared by the plan
+# and its oracle.
+_FEATURE_VEC_SQL = """
     vec AS (
         SELECT doc_id, f, sum(sgn) AS v
         FROM feat GROUP BY doc_id, f
@@ -7931,8 +7521,27 @@ _sql_query(
     SELECT doc_id, CAST(nnz AS BIGINT) AS nnz, CAST(norm2 AS BIGINT) AS norm2,
            CAST(checksum AS BIGINT) AS checksum
     FROM docvec ORDER BY doc_id
-    """,
-    oracle="""
+    """
+
+_sql_query(
+    "text_feature_hashing",
+    f"""
+    WITH tok AS (
+        SELECT doc_id, w
+        FROM documents LATERAL VIEW explode(split(text, ' ')) t AS w
+    ),
+    wh AS (
+        SELECT doc_id,
+               aggregate(split(w, ''), 7L, (a, c) -> (a * 31 + ascii(c)) % 1000000007) AS h
+        FROM tok
+    ),
+    feat AS (
+        SELECT doc_id, h % 64 AS f,
+               CASE WHEN (h DIV 64) % 2 = 0 THEN 1 ELSE -1 END AS sgn
+        FROM wh
+    ),
+    {_FEATURE_VEC_SQL}""",
+    oracle=f"""
     WITH tok AS (
         SELECT doc_id, w
         FROM (SELECT doc_id, string_split(text, ' ') AS ws FROM documents) d,
@@ -7950,21 +7559,7 @@ _sql_query(
                CASE WHEN (h // 64) % 2 = 0 THEN 1 ELSE -1 END AS sgn
         FROM wh
     ),
-    vec AS (
-        SELECT doc_id, f, sum(sgn) AS v
-        FROM feat GROUP BY doc_id, f
-    ),
-    docvec AS (
-        SELECT doc_id,
-               count(CASE WHEN v <> 0 THEN 1 END) AS nnz,
-               sum(v * v) AS norm2,
-               sum((f + 1) * v) % 1000000007 AS checksum
-        FROM vec GROUP BY doc_id
-    )
-    SELECT doc_id, CAST(nnz AS BIGINT) AS nnz, CAST(norm2 AS BIGINT) AS norm2,
-           CAST(checksum AS BIGINT) AS checksum
-    FROM docvec ORDER BY doc_id
-    """,
+    {_FEATURE_VEC_SQL}""",
     tags=("pipeline", "text", "featurize"),
     doc="Signed feature hashing (Weinberger et al. 2009): tokens hashed "
     "into a fixed 64-bucket space with a second-hash sign bit (unbiased "
@@ -8011,6 +7606,33 @@ _sql_query(
 # full pair set with banded brute-force DP over the sf0.01 corpus.
 _HOT_SEGMENT_CAP = 64
 
+# The hot-segment-capped index and the verification are dialect-neutral:
+# the plan and its oracle share them.
+_PASSJOIN_IDX_SQL = f"""
+    idx AS (
+        SELECT doc_id, L, i, piece FROM (
+            SELECT doc_id, L, i, piece,
+                   count(*) OVER (PARTITION BY L, i, piece) AS kf
+            FROM idx0) z
+        WHERE kf <= {_HOT_SEGMENT_CAP}
+    ),"""
+
+_PASSJOIN_VERIFY_SQL = """
+    cand AS (
+        SELECT DISTINCT least(p.rid, x.doc_id) AS d1, greatest(p.rid, x.doc_id) AS d2
+        FROM probes p JOIN idx x ON x.L = p.ls AND x.i = p.i AND x.piece = p.piece
+        WHERE p.rid <> x.doc_id
+    )
+    SELECT CAST(c.d1 AS BIGINT) AS doc1, CAST(c.d2 AS BIGINT) AS doc2,
+           CAST(levenshtein(a.text, b.text) AS BIGINT) AS edit_dist,
+           CAST(a.L AS BIGINT) AS len1, CAST(b.L AS BIGINT) AS len2
+    FROM cand c
+    JOIN corpus a ON a.doc_id = c.d1
+    JOIN corpus b ON b.doc_id = c.d2
+    WHERE levenshtein(a.text, b.text) <= 2
+    ORDER BY doc1, doc2
+    """
+
 _sql_query(
     "dedup_edit_distance",
     f"""
@@ -8032,13 +7654,7 @@ _sql_query(
         FROM corpus LATERAL VIEW explode(sequence(0, 2)) t AS i
         WHERE L >= 3
     ),
-    idx AS (
-        SELECT doc_id, L, i, piece FROM (
-            SELECT doc_id, L, i, piece,
-                   count(*) OVER (PARTITION BY L, i, piece) AS kf
-            FROM idx0) z
-        WHERE kf <= {_HOT_SEGMENT_CAP}
-    ),
+    {_PASSJOIN_IDX_SQL}
     probes AS (
         SELECT rid, ls, i, substring(text, pst + dd, pln) AS piece
         FROM (
@@ -8054,20 +7670,7 @@ _sql_query(
         )
         WHERE ls >= 3 AND pst + dd >= 1 AND pst + dd + pln - 1 <= lr
     ),
-    cand AS (
-        SELECT DISTINCT least(p.rid, x.doc_id) AS d1, greatest(p.rid, x.doc_id) AS d2
-        FROM probes p JOIN idx x ON x.L = p.ls AND x.i = p.i AND x.piece = p.piece
-        WHERE p.rid <> x.doc_id
-    )
-    SELECT CAST(c.d1 AS BIGINT) AS doc1, CAST(c.d2 AS BIGINT) AS doc2,
-           CAST(levenshtein(a.text, b.text) AS BIGINT) AS edit_dist,
-           CAST(a.L AS BIGINT) AS len1, CAST(b.L AS BIGINT) AS len2
-    FROM cand c
-    JOIN corpus a ON a.doc_id = c.d1
-    JOIN corpus b ON b.doc_id = c.d2
-    WHERE levenshtein(a.text, b.text) <= 2
-    ORDER BY doc1, doc2
-    """,
+    {_PASSJOIN_VERIFY_SQL}""",
     oracle=f"""
     WITH corpus AS (
         SELECT doc_id, text, length(text) AS L FROM documents
@@ -8087,13 +7690,7 @@ _sql_query(
         FROM corpus CROSS JOIN (SELECT unnest(generate_series(0, 2)) AS i) gi
         WHERE L >= 3
     ),
-    idx AS (
-        SELECT doc_id, L, i, piece FROM (
-            SELECT doc_id, L, i, piece,
-                   count(*) OVER (PARTITION BY L, i, piece) AS kf
-            FROM idx0) z
-        WHERE kf <= {_HOT_SEGMENT_CAP}
-    ),
+    {_PASSJOIN_IDX_SQL}
     probes AS (
         SELECT rid, ls, i, substring(text, pst + dd, pln) AS piece
         FROM (
@@ -8109,20 +7706,7 @@ _sql_query(
         ) z
         WHERE ls >= 3 AND pst + dd >= 1 AND pst + dd + pln - 1 <= lr
     ),
-    cand AS (
-        SELECT DISTINCT least(p.rid, x.doc_id) AS d1, greatest(p.rid, x.doc_id) AS d2
-        FROM probes p JOIN idx x ON x.L = p.ls AND x.i = p.i AND x.piece = p.piece
-        WHERE p.rid <> x.doc_id
-    )
-    SELECT CAST(c.d1 AS BIGINT) AS doc1, CAST(c.d2 AS BIGINT) AS doc2,
-           CAST(levenshtein(a.text, b.text) AS BIGINT) AS edit_dist,
-           CAST(a.L AS BIGINT) AS len1, CAST(b.L AS BIGINT) AS len2
-    FROM cand c
-    JOIN corpus a ON a.doc_id = c.d1
-    JOIN corpus b ON b.doc_id = c.d2
-    WHERE levenshtein(a.text, b.text) <= 2
-    ORDER BY doc1, doc2
-    """,
+    {_PASSJOIN_VERIFY_SQL}""",
     tags=("pipeline", "dedup"),
     doc="Edit-distance near-dup join with PassJoin segment blocking "
     "(complete for k <= 2 by pigeonhole over 3 segments, positional "
@@ -8214,12 +7798,12 @@ def dedup_cluster_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
     prev_sum = None
     for _ in range(_CLUSTER_ROUNDS):
         # min(own label, labels of in-neighbors) expressed as ONE
-        # union + groupBy-min — identical per-round fixpoint math to the
-        # r12 join/least/coalesce form, but one exchange per round
+        # union + groupBy-min — identical per-round fixpoint math to a
+        # join/least/coalesce form, but one exchange per round
         # instead of three (the node-sized labels side broadcasts into
         # the edge join; the old shape shuffled labels for the join, the
         # neighbor aggregate, AND the left join back).
-        # r14 (VERDICT r13 #6): the checkpoint is LAZY so the convergence
+        # The checkpoint is LAZY so the convergence
         # probe's one-row aggregate is the job that materializes it —
         # 1 Spark job per round instead of 2 (checkpoint job + probe job;
         # the probe computes every partition, so the full relation is
@@ -8234,7 +7818,7 @@ def dedup_cluster_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.min("label").alias("label"))
             .localCheckpoint(eager=False)
         )
-        # Early fixpoint exit (r13): labels are monotone non-increasing
+        # Early fixpoint exit: labels are monotone non-increasing
         # (new = min(own, neighbors) <= own), so an unchanged label sum
         # proves NO label moved and every remaining round is a no-op —
         # the result is bit-identical to always running _CLUSTER_ROUNDS
@@ -8282,19 +7866,7 @@ def dedup_cluster_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
 _sql_query(
     "sim_ivf_multiprobe",
     f"""
-    WITH e AS (SELECT vec_id, label, transform(embedding, x -> cast(x AS double)) AS v FROM embeddings),
-    cpos AS (
-        SELECT label, pos, avg(val) AS m
-        FROM (SELECT label, posexplode(v) AS (pos, val) FROM e)
-        GROUP BY label, pos
-    ),
-    cent AS (
-        SELECT label AS c_id,
-               transform(array_sort(collect_list(struct(pos, m))), s -> s.m) AS cv
-        FROM cpos GROUP BY label
-    ),
-    cnorm AS (SELECT c_id, cv, sqrt({vec.norm2('cv', 'double')}) AS cnrm FROM cent),
-    n AS (SELECT vec_id, v, sqrt({vec.norm2('v', 'double')}) AS nrm FROM e),
+    {_SPARK_IVF_CENTROIDS}
     centdist AS (
         SELECT n.vec_id, c.c_id,
                {vec.dot('n.v', 'c.cv', 'double')} / (n.nrm * c.cnrm) AS cos
@@ -8318,23 +7890,9 @@ _sql_query(
                {vec.dot('q.v', 'c.v', 'double')} / (q.nrm * c.nrm) AS cos
         FROM q JOIN corpus c ON q.bucket = c.bucket AND q.vec_id <> c.vec_id
     ),
-    ranked AS (
-        SELECT query_id, neighbor_id, cos,
-               row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rk
-        FROM scored
-    )
-    SELECT query_id, neighbor_id, rk, round(cos, 4) AS cos_sim
-    FROM ranked WHERE rk <= 3
-    ORDER BY query_id, rk
-    """,
-    oracle="""
-    WITH e AS (SELECT vec_id, label, embedding::DOUBLE[] AS v FROM embeddings),
-    cpos AS (
-        SELECT label, i AS pos, avg(v[i]) AS m
-        FROM e, range(1, 65) t(i)
-        GROUP BY label, i
-    ),
-    cent AS (SELECT label AS c_id, list(m ORDER BY pos) AS cv FROM cpos GROUP BY label),
+    {_topk_sql(3)}""",
+    oracle=f"""
+    {_DUCK_IVF_CENTROIDS}
     centdist AS (
         SELECT e.vec_id, c.c_id, list_cosine_similarity(e.v, c.cv) AS cos
         FROM e CROSS JOIN cent c
@@ -8357,15 +7915,7 @@ _sql_query(
                list_cosine_similarity(q.v, c.v) AS cos
         FROM q JOIN corpus c ON q.bucket = c.bucket AND q.vec_id <> c.vec_id
     ),
-    ranked AS (
-        SELECT query_id, neighbor_id, cos,
-               row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rk
-        FROM scored
-    )
-    SELECT query_id, neighbor_id, rk, round(cos, 4) AS cos_sim
-    FROM ranked WHERE rk <= 3
-    ORDER BY query_id, rk
-    """,
+    {_topk_sql(3)}""",
     tags=("pipeline", "similarity"),
     doc="IVF top-k with nprobe=2 (the Faiss/ScaNN recall dial): corpus "
     "stays single-assigned, each query searches the union of its two "
@@ -8579,6 +8129,33 @@ _sql_query(
 # (the same bounded-broadcast shape as sim_topk_bruteforce); the head
 # score reuses the same row via slice(), not a second scan; the
 # agreement rollup touches O(probes x k) rows.
+def _matryoshka_agreement_sql(div: str) -> str:
+    """Each probe's top-3 agreement between the full and the head ranking
+    over ``scored``; ``div`` is the integer division."""
+    return f"""
+    rf AS (
+        SELECT qid, nid,
+               row_number() OVER (PARTITION BY qid ORDER BY dot_full DESC, nid) AS rk
+        FROM scored
+    ),
+    rh AS (
+        SELECT qid, nid,
+               row_number() OVER (PARTITION BY qid ORDER BY dot_head DESC, nid) AS rk
+        FROM scored
+    )
+    SELECT f.qid AS query_id,
+           CAST(min(CASE WHEN f.rk = 1 THEN f.nid END) AS BIGINT) AS top1_full,
+           CAST(min(CASE WHEN h2.rk = 1 THEN h2.nid END) AS BIGINT) AS top1_head,
+           CAST(count(h.nid) AS BIGINT) AS overlap3,
+           CAST((count(h.nid) * 10000) {div} 3 AS BIGINT) AS agreement_bp
+    FROM (SELECT * FROM rf WHERE rk <= 3) f
+    LEFT JOIN (SELECT * FROM rh WHERE rk <= 3) h ON h.qid = f.qid AND h.nid = f.nid
+    JOIN (SELECT * FROM rh WHERE rk <= 3) h2 ON h2.qid = f.qid AND h2.rk = f.rk
+    GROUP BY f.qid
+    ORDER BY query_id
+    """
+
+
 _sql_query(
     "sim_matryoshka_eval",
     f"""
@@ -8595,28 +8172,8 @@ _sql_query(
         FROM e CROSS JOIN q
         WHERE q.qid <> e.vec_id
     ),
-    rf AS (
-        SELECT qid, nid,
-               row_number() OVER (PARTITION BY qid ORDER BY dot_full DESC, nid) AS rk
-        FROM scored
-    ),
-    rh AS (
-        SELECT qid, nid,
-               row_number() OVER (PARTITION BY qid ORDER BY dot_head DESC, nid) AS rk
-        FROM scored
-    )
-    SELECT f.qid AS query_id,
-           CAST(min(CASE WHEN f.rk = 1 THEN f.nid END) AS BIGINT) AS top1_full,
-           CAST(min(CASE WHEN h2.rk = 1 THEN h2.nid END) AS BIGINT) AS top1_head,
-           CAST(count(h.nid) AS BIGINT) AS overlap3,
-           CAST((count(h.nid) * 10000) DIV 3 AS BIGINT) AS agreement_bp
-    FROM (SELECT * FROM rf WHERE rk <= 3) f
-    LEFT JOIN (SELECT * FROM rh WHERE rk <= 3) h ON h.qid = f.qid AND h.nid = f.nid
-    JOIN (SELECT * FROM rh WHERE rk <= 3) h2 ON h2.qid = f.qid AND h2.rk = f.rk
-    GROUP BY f.qid
-    ORDER BY query_id
-    """,
-    oracle="""
+    {_matryoshka_agreement_sql("DIV")}""",
+    oracle=f"""
     WITH e AS (
         SELECT vec_id,
                [CAST(floor(CAST(x AS DOUBLE) * 1000 + 0.5) AS BIGINT) for x in embedding] AS v
@@ -8630,27 +8187,7 @@ _sql_query(
         FROM e CROSS JOIN q
         WHERE q.qid <> e.vec_id
     ),
-    rf AS (
-        SELECT qid, nid,
-               row_number() OVER (PARTITION BY qid ORDER BY dot_full DESC, nid) AS rk
-        FROM scored
-    ),
-    rh AS (
-        SELECT qid, nid,
-               row_number() OVER (PARTITION BY qid ORDER BY dot_head DESC, nid) AS rk
-        FROM scored
-    )
-    SELECT f.qid AS query_id,
-           CAST(min(CASE WHEN f.rk = 1 THEN f.nid END) AS BIGINT) AS top1_full,
-           CAST(min(CASE WHEN h2.rk = 1 THEN h2.nid END) AS BIGINT) AS top1_head,
-           CAST(count(h.nid) AS BIGINT) AS overlap3,
-           CAST((count(h.nid) * 10000) // 3 AS BIGINT) AS agreement_bp
-    FROM (SELECT * FROM rf WHERE rk <= 3) f
-    LEFT JOIN (SELECT * FROM rh WHERE rk <= 3) h ON h.qid = f.qid AND h.nid = f.nid
-    JOIN (SELECT * FROM rh WHERE rk <= 3) h2 ON h2.qid = f.qid AND h2.rk = f.rk
-    GROUP BY f.qid
-    ORDER BY query_id
-    """,
+    {_matryoshka_agreement_sql("//")}""",
     tags=("pipeline", "similarity"),
     doc="Matryoshka adaptive-retrieval eval: per probe, top-3 agreement "
     "between 16-dim-head and full-64-dim retrieval under exact-integer "
@@ -8679,19 +8216,9 @@ _sql_query(
 # (label, dim) centroid groupBy over the posexploded rows, ONE bounded
 # join of rows against the k x 64 centroid relation, two map-side-
 # combined rollups.
-_sql_query(
-    "cluster_silhouette_eval",
-    """
-    WITH e AS (
-        SELECT vec_id, label,
-               transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * 1000 + 0.5) AS BIGINT) + 2000L) AS q
-        FROM embeddings
-    ),
-    rows_ AS (SELECT vec_id, label, posexplode(q) AS (pos, x) FROM e),
-    cent AS (
-        SELECT label AS c_lab, pos, (1000 * sum(x)) DIV count(*) AS c
-        FROM rows_ GROUP BY label, pos
-    ),
+# The distances, margins and rollup over rows_ and cent are dialect-neutral:
+# the plan and its oracle share them.
+_SILHOUETTE_SQL = """
     dist AS (
         SELECT r.vec_id, r.label, c.c_lab,
                sum((r.x * 1000 - c.c) * (r.x * 1000 - c.c)) AS d2
@@ -8710,8 +8237,23 @@ _sql_query(
            CAST(sum(greatest(a2, b2)) AS BIGINT) AS sum_scale,
            CAST(count(CASE WHEN b2 > a2 THEN 1 END) AS BIGINT) AS n_well_assigned
     FROM ab GROUP BY label ORDER BY label
-    """,
-    oracle="""
+    """
+
+_sql_query(
+    "cluster_silhouette_eval",
+    f"""
+    WITH e AS (
+        SELECT vec_id, label,
+               transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * 1000 + 0.5) AS BIGINT) + 2000L) AS q
+        FROM embeddings
+    ),
+    rows_ AS (SELECT vec_id, label, posexplode(q) AS (pos, x) FROM e),
+    cent AS (
+        SELECT label AS c_lab, pos, (1000 * sum(x)) DIV count(*) AS c
+        FROM rows_ GROUP BY label, pos
+    ),
+    {_SILHOUETTE_SQL}""",
+    oracle=f"""
     WITH e AS (
         SELECT vec_id, label,
                [CAST(floor(CAST(x AS DOUBLE) * 1000 + 0.5) AS BIGINT) + 2000 for x in embedding] AS q
@@ -8725,25 +8267,7 @@ _sql_query(
         SELECT label AS c_lab, pos, (1000 * sum(x)) // count(*) AS c
         FROM rows_ GROUP BY label, pos
     ),
-    dist AS (
-        SELECT r.vec_id, r.label, c.c_lab,
-               sum((r.x * 1000 - c.c) * (r.x * 1000 - c.c)) AS d2
-        FROM rows_ r JOIN cent c ON c.pos = r.pos
-        GROUP BY r.vec_id, r.label, c.c_lab
-    ),
-    ab AS (
-        SELECT vec_id, label,
-               min(CASE WHEN c_lab = label THEN d2 END) AS a2,
-               min(CASE WHEN c_lab <> label THEN d2 END) AS b2
-        FROM dist GROUP BY vec_id, label
-    )
-    SELECT CAST(label AS BIGINT) AS label,
-           CAST(count(*) AS BIGINT) AS n_points,
-           CAST(sum(b2 - a2) AS BIGINT) AS sum_margin,
-           CAST(sum(greatest(a2, b2)) AS BIGINT) AS sum_scale,
-           CAST(count(CASE WHEN b2 > a2 THEN 1 END) AS BIGINT) AS n_well_assigned
-    FROM ab GROUP BY label ORDER BY label
-    """,
+    {_SILHOUETTE_SQL}""",
     tags=("pipeline", "cluster", "eval"),
     doc="Simplified-silhouette cluster-quality report (distance-to-"
     "centroid variant, O(n x k) not O(n^2)): per cluster, exact-integer "
@@ -8770,23 +8294,8 @@ _sql_query(
 
 
 def _ppr_sql(div: str) -> str:
-    sql = """
-    WITH params AS (
-        SELECT 15 * greatest(4, CAST(floor(count(*) / 375.0) AS BIGINT)) AS n
-        FROM orders
-    ),
-    edges AS (
-        SELECT DISTINCT o_custkey % (SELECT n FROM params) AS src,
-               o_orderkey % (1 + o_custkey % 12) AS dst
-        FROM orders
-        WHERE o_custkey % (SELECT n FROM params)
-              <> o_orderkey % (1 + o_custkey % 12)
-        UNION
-        SELECT DISTINCT o_custkey % (SELECT n FROM params) AS src,
-               (o_custkey % (SELECT n FROM params) + 1)
-               % (SELECT n FROM params) AS dst
-        FROM orders
-    ),
+    sql = f"""
+    {_SKEWED_WEB},
     outdeg AS (SELECT src, count(*) AS d FROM edges GROUP BY src),
     nodes AS (SELECT src AS id FROM edges UNION SELECT dst FROM edges),
     seeds AS (SELECT id FROM nodes WHERE id % 150 = 0),
@@ -8830,9 +8339,9 @@ def _ppr_sql(div: str) -> str:
     return sql
 
 
-# r12 scan-guard rework (same rationale as graph_pagerank — the CTE
-# form inlined to 320 orders scans under Catalyst): staged skewed web +
-# checkpoint-per-round; the oracle keeps the verbatim all-SQL text.
+# Same staging as graph_pagerank (the CTE form inlines to 320 orders
+# scans under Catalyst): staged skewed web + checkpoint-per-round; the
+# oracle is the all-SQL text.
 _PPR_R0_SQL = """
     SELECT n.id,
            CASE WHEN s.id IS NOT NULL
@@ -8925,30 +8434,8 @@ def graph_personalized_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 # each pass is the same bounded qterms-join + map-side-combined
 # (query, doc) rollup + WindowGroupLimit top-k as text_bm25_topk; the
 # expansion mine touches only top-3 x queries posting rows.
-_PRF_MAIN_SQL = """
-    WITH tot AS (SELECT count(*) AS n, cast(sum(dl) AS BIGINT) AS s FROM {D}),
-    df AS (SELECT term, count(*) AS df FROM {P} GROUP BY term),
-    idf AS (
-        SELECT term, df,
-               cast(floor(ln((2 * (SELECT n FROM tot) + 2) / (2.0 * df + 1))
-                          * 1000000 + 0.5) AS BIGINT) AS idf_micro
-        FROM df
-    ),
-    qterms AS (
-        SELECT cast(ceil(rk / 2.0) AS INT) AS query_id, term, df
-        FROM (SELECT term, df, row_number() OVER (ORDER BY df DESC, term) AS rk FROM df)
-        WHERE rk <= 6
-    ),
-    contrib1 AS (
-        SELECT q.query_id, p.doc_id,
-               (cast(floor(ln((2 * t.n + 2) / (2.0 * q.df + 1)) * 1000000 + 0.5) AS BIGINT)
-                 * (22 * p.tf * t.s))
-               {DIV} (10 * t.s * p.tf + 3 * t.s + 9 * t.n * d.dl) AS c_micro
-        FROM {P} p
-        JOIN qterms q ON p.term = q.term
-        JOIN {D} d ON p.doc_id = d.doc_id
-        CROSS JOIN tot t
-    ),
+# Round 1's top 3 documents per query, assumed relevant.
+_PRF_ROUND1_SQL = """
     r1 AS (
         SELECT query_id, doc_id FROM (
             SELECT query_id, doc_id,
@@ -8956,15 +8443,71 @@ _PRF_MAIN_SQL = """
                                       ORDER BY sum(c_micro) DESC, doc_id) AS rk
             FROM contrib1 GROUP BY query_id, doc_id
         ) z WHERE rk <= 3
-    ),
-    expcand AS (
+    ),"""
+
+
+def _prf_expansion_sql(posting: str, qterms: str) -> str:
+    """Each query's candidate expansion terms from its round-1 documents,
+    scored by sum(tf * idf_micro), the query's own terms ``qterms``
+    excluded."""
+    return f"""
         SELECT r.query_id, p.term, sum(p.tf * i.idf_micro) AS escore
         FROM r1 r
-        JOIN {P} p ON p.doc_id = r.doc_id
+        JOIN {posting} p ON p.doc_id = r.doc_id
         JOIN idf i ON i.term = p.term
-        LEFT JOIN qterms q ON q.query_id = r.query_id AND q.term = p.term
+        LEFT JOIN {qterms} q ON q.query_id = r.query_id AND q.term = p.term
         WHERE q.term IS NULL
-        GROUP BY r.query_id, p.term
+        GROUP BY r.query_id, p.term"""
+
+
+def _prf_rerank_sql(expn: str) -> str:
+    """The expanded pass's top 5 per query with its top-2 expansion terms
+    from ``expn``. LEFT (not INNER) joins on the expansion terms: a sparse
+    corpus can yield <2 expansion candidates for a query (round-1 top-3
+    docs made entirely of original query terms); the reranked top-5 must
+    still emit, with NULL exp_term columns."""
+    return f"""
+    ranked2 AS (
+        SELECT query_id, doc_id, bm25_micro,
+               row_number() OVER (PARTITION BY query_id
+                                  ORDER BY bm25_micro DESC, doc_id) AS rk
+        FROM (SELECT query_id, doc_id, cast(sum(c_micro) AS BIGINT) AS bm25_micro
+              FROM contrib2 GROUP BY query_id, doc_id) z
+    )
+    SELECT r.query_id, CAST(r.rk AS BIGINT) AS rk, r.doc_id,
+           r.bm25_micro AS bm25_prf_micro,
+           e1.term AS exp_term1, e2.term AS exp_term2
+    FROM ranked2 r
+    LEFT JOIN {expn} e1 ON e1.query_id = r.query_id AND e1.erk = 1
+    LEFT JOIN {expn} e2 ON e2.query_id = r.query_id AND e2.erk = 2
+    WHERE r.rk <= 5
+    ORDER BY r.query_id, r.rk
+    """
+
+
+_PRF_ORACLE = f"""
+    WITH posting AS MATERIALIZED (
+        SELECT doc_id, term, count(*) AS tf
+        FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS term FROM documents)
+        GROUP BY doc_id, term
+    ),
+    doclen AS MATERIALIZED (
+        SELECT doc_id, cast(sum(tf) AS BIGINT) AS dl FROM posting GROUP BY doc_id
+    ),
+    tot AS (SELECT count(*) AS n, cast(sum(dl) AS BIGINT) AS s FROM doclen),
+    df AS (SELECT term, count(*) AS df FROM posting GROUP BY term),
+    idf AS (
+        SELECT term, df,
+               cast(floor(ln((2 * (SELECT n FROM tot) + 2) / (2.0 * df + 1))
+                          * 1000000 + 0.5) AS BIGINT) AS idf_micro
+        FROM df
+    ),
+    qterms AS ({_bm25_query_terms_sql(_BM25_QUERY_ID, "df")}
+    ),
+    contrib1 AS ({_bm25_contrib_sql("posting", "qterms", "doclen", "//")}
+    ),
+    {_PRF_ROUND1_SQL}
+    expcand AS ({_prf_expansion_sql("posting", "qterms")}
     ),
     expn AS (
         SELECT query_id, term,
@@ -8978,100 +8521,36 @@ _PRF_MAIN_SQL = """
         SELECT e.query_id, e.term, d.df
         FROM expn e JOIN df d ON d.term = e.term WHERE e.erk <= 2
     ),
-    contrib2 AS (
-        SELECT q.query_id, p.doc_id,
-               (cast(floor(ln((2 * t.n + 2) / (2.0 * q.df + 1)) * 1000000 + 0.5) AS BIGINT)
-                 * (22 * p.tf * t.s))
-               {DIV} (10 * t.s * p.tf + 3 * t.s + 9 * t.n * d.dl) AS c_micro
-        FROM {P} p
-        JOIN qterms2 q ON p.term = q.term
-        JOIN {D} d ON p.doc_id = d.doc_id
-        CROSS JOIN tot t
+    contrib2 AS ({_bm25_contrib_sql("posting", "qterms2", "doclen", "//")}
     ),
-    ranked2 AS (
-        SELECT query_id, doc_id, bm25_micro,
-               row_number() OVER (PARTITION BY query_id
-                                  ORDER BY bm25_micro DESC, doc_id) AS rk
-        FROM (SELECT query_id, doc_id, cast(sum(c_micro) AS BIGINT) AS bm25_micro
-              FROM contrib2 GROUP BY query_id, doc_id) z
-    )
-    SELECT r.query_id, CAST(r.rk AS BIGINT) AS rk, r.doc_id,
-           r.bm25_micro AS bm25_prf_micro,
-           e1.term AS exp_term1, e2.term AS exp_term2
-    -- LEFT (not INNER) joins on the expansion terms: a sparse corpus can
-    -- yield <2 expansion candidates for a query (round-1 top-3 docs made
-    -- entirely of original query terms); the reranked top-5 must still
-    -- emit, with NULL exp_term columns (r8 ADVICE).
-    FROM ranked2 r
-    LEFT JOIN expn e1 ON e1.query_id = r.query_id AND e1.erk = 1
-    LEFT JOIN expn e2 ON e2.query_id = r.query_id AND e2.erk = 2
-    WHERE r.rk <= 5
-    ORDER BY r.query_id, r.rk
-"""
+    {_prf_rerank_sql("expn")}"""
 
-_PRF_DUCK_PREFIX = """
-    WITH posting AS MATERIALIZED (
-        SELECT doc_id, term, count(*) AS tf
-        FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS term FROM documents)
-        GROUP BY doc_id, term
-    ),
-    doclen AS MATERIALIZED (
-        SELECT doc_id, cast(sum(tf) AS BIGINT) AS dl FROM posting GROUP BY doc_id
-    ),
-"""
-
-# r13 scan-audit fix: _PRF_MAIN_SQL (kept verbatim above — it builds the
-# oracle text) re-expands under Spark's CTE inlining: df is re-aggregated
+# The all-SQL form (_PRF_ORACLE) would re-expand under Spark's CTE
+# inlining: df is re-aggregated
 # for idf/qterms/qterms2, and the whole pass-1 subtree (contrib1 -> r1 ->
 # expcand -> expn) is inlined once per expn reference (qterms2, e1, e2) —
 # a 79 KB physical plan with 56 posting scans and 50 Window nodes.  The
 # Spark-side builder stages the three BOUNDED relations — df (vocab-
 # sized aggregate), qterms (6 rows), expn2 (<= 2 expansion terms per
 # query) — as localCheckpoints, so each BM25 pass reads the posting list
-# exactly once and the plan is linear.  Every expression is copied
-# verbatim from _PRF_MAIN_SQL; only the staging boundaries are new.
+# exactly once and the plan is linear.  Every expression is the
+# oracle's; only the staging boundaries differ.
 _PRF_DF_SQL = "SELECT term, count(*) AS df FROM {P} GROUP BY term"
 
-_PRF_QTERMS_SQL = """
-    SELECT cast(ceil(rk / 2.0) AS INT) AS query_id, term, df
-    FROM (SELECT term, df, row_number() OVER (ORDER BY df DESC, term) AS rk FROM {prf_df})
-    WHERE rk <= 6
-"""
+_PRF_QTERMS_SQL = _bm25_query_terms_sql(_BM25_QUERY_ID, "{prf_df}")
 
-_PRF_EXPN2_SQL = """
-    WITH tot AS (SELECT count(*) AS n, cast(sum(dl) AS BIGINT) AS s FROM {D}),
-    contrib1 AS (
-        SELECT q.query_id, p.doc_id,
-               (cast(floor(ln((2 * t.n + 2) / (2.0 * q.df + 1)) * 1000000 + 0.5) AS BIGINT)
-                 * (22 * p.tf * t.s))
-               DIV (10 * t.s * p.tf + 3 * t.s + 9 * t.n * d.dl) AS c_micro
-        FROM {P} p
-        JOIN {prf_qterms} q ON p.term = q.term
-        JOIN {D} d ON p.doc_id = d.doc_id
-        CROSS JOIN tot t
+_PRF_EXPN2_SQL = f"""
+    WITH tot AS (SELECT count(*) AS n, cast(sum(dl) AS BIGINT) AS s FROM {{D}}),
+    contrib1 AS ({_bm25_contrib_sql("{P}", "{prf_qterms}", "{D}", "DIV")}
     ),
-    r1 AS (
-        SELECT query_id, doc_id FROM (
-            SELECT query_id, doc_id,
-                   row_number() OVER (PARTITION BY query_id
-                                      ORDER BY sum(c_micro) DESC, doc_id) AS rk
-            FROM contrib1 GROUP BY query_id, doc_id
-        ) z WHERE rk <= 3
-    ),
+    {_PRF_ROUND1_SQL}
     idf AS (
         SELECT term, df,
                cast(floor(ln((2 * (SELECT n FROM tot) + 2) / (2.0 * df + 1))
                           * 1000000 + 0.5) AS BIGINT) AS idf_micro
-        FROM {prf_df}
+        FROM {{prf_df}}
     ),
-    expcand AS (
-        SELECT r.query_id, p.term, sum(p.tf * i.idf_micro) AS escore
-        FROM r1 r
-        JOIN {P} p ON p.doc_id = r.doc_id
-        JOIN idf i ON i.term = p.term
-        LEFT JOIN {prf_qterms} q ON q.query_id = r.query_id AND q.term = p.term
-        WHERE q.term IS NULL
-        GROUP BY r.query_id, p.term
+    expcand AS ({_prf_expansion_sql("{P}", "{prf_qterms}")}
     )
     SELECT query_id, term, erk FROM (
         SELECT query_id, term,
@@ -9093,40 +8572,16 @@ _PRF_QTERMS2_SQL = """
     FROM {prf_expn2} e JOIN {prf_df} d ON d.term = e.term
 """
 
-_PRF_FINAL_SQL = """
-    WITH tot AS (SELECT count(*) AS n, cast(sum(dl) AS BIGINT) AS s FROM {D}),
-    contrib2 AS (
-        SELECT q.query_id, p.doc_id,
-               (cast(floor(ln((2 * t.n + 2) / (2.0 * q.df + 1)) * 1000000 + 0.5) AS BIGINT)
-                 * (22 * p.tf * t.s))
-               DIV (10 * t.s * p.tf + 3 * t.s + 9 * t.n * d.dl) AS c_micro
-        FROM {P} p
-        JOIN {prf_qterms2} q ON p.term = q.term
-        JOIN {D} d ON p.doc_id = d.doc_id
-        CROSS JOIN tot t
+_PRF_FINAL_SQL = f"""
+    WITH tot AS (SELECT count(*) AS n, cast(sum(dl) AS BIGINT) AS s FROM {{D}}),
+    contrib2 AS ({_bm25_contrib_sql("{P}", "{prf_qterms2}", "{D}", "DIV")}
     ),
-    ranked2 AS (
-        SELECT query_id, doc_id, bm25_micro,
-               row_number() OVER (PARTITION BY query_id
-                                  ORDER BY bm25_micro DESC, doc_id) AS rk
-        FROM (SELECT query_id, doc_id, cast(sum(c_micro) AS BIGINT) AS bm25_micro
-              FROM contrib2 GROUP BY query_id, doc_id) z
-    )
-    SELECT r.query_id, CAST(r.rk AS BIGINT) AS rk, r.doc_id,
-           r.bm25_micro AS bm25_prf_micro,
-           e1.term AS exp_term1, e2.term AS exp_term2
-    FROM ranked2 r
-    LEFT JOIN {prf_expn2} e1 ON e1.query_id = r.query_id AND e1.erk = 1
-    LEFT JOIN {prf_expn2} e2 ON e2.query_id = r.query_id AND e2.erk = 2
-    WHERE r.rk <= 5
-    ORDER BY r.query_id, r.rk
-"""
+    {_prf_rerank_sql("{prf_expn2}")}"""
 
 
 @register(
     "sim_query_expansion_prf",
-    oracle=_PRF_DUCK_PREFIX
-    + _PRF_MAIN_SQL.format(P="posting", D="doclen", DIV="//").lstrip().removeprefix("WITH"),
+    oracle=_PRF_ORACLE,
     tags=("pipeline", "text", "retrieval"),
     bench=True,
     doc="Pseudo-relevance feedback: BM25 pass 1 -> top-3 docs assumed "
@@ -9235,70 +8690,46 @@ def sim_reciprocal_nn_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # carrying sum(weight), a cumulative window over that cardinality-
 # bounded table, and the weighted type-1 pick min{v : cumW * 1000 >=
 # q * W} — all BIGINT, no division anywhere.
+def _weighted_percentile_sql(qs: str) -> str:
+    """The weighted percentiles; ``qs`` is the dialect's expression that
+    unnests the three quantile probes."""
+    return f"""
+    WITH m1 AS (SELECT 'lineitem.price_c_by_qty' AS measure,
+                       CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT) AS val,
+                       CAST(l_quantity AS BIGINT) AS w
+                FROM lineitem),
+    m2 AS (SELECT 'orders.totalprice_c_by_lines' AS measure,
+                  CAST(floor(o.o_totalprice * 100 + 0.5) AS BIGINT) AS val,
+                  count(*) AS w
+           FROM orders o JOIN lineitem l ON l.l_orderkey = o.o_orderkey
+           GROUP BY o.o_orderkey, o.o_totalprice),
+    m AS (SELECT * FROM m1 UNION ALL SELECT * FROM m2),
+    hist AS (SELECT measure, val, sum(w) AS wsum FROM m GROUP BY measure, val),
+    cum AS (
+        SELECT measure, val,
+               sum(wsum) OVER (PARTITION BY measure ORDER BY val) AS cum_w,
+               sum(wsum) OVER (PARTITION BY measure) AS tot_w
+        FROM hist
+    ),
+    qs AS (SELECT {qs} AS q_milli),
+    pick AS (
+        SELECT c.measure, q.q_milli, c.tot_w,
+               min(c.val) AS quantile_value
+        FROM cum c JOIN qs q
+          ON c.cum_w * 1000 >= q.q_milli * c.tot_w
+        GROUP BY c.measure, q.q_milli, c.tot_w
+    )
+    SELECT measure, CAST(q_milli AS BIGINT) AS q_milli,
+           CAST(tot_w AS BIGINT) AS total_weight,
+           CAST(quantile_value AS BIGINT) AS quantile_value
+    FROM pick ORDER BY measure, q_milli
+    """
+
+
 _sql_query(
     "agg_weighted_percentile",
-    """
-    WITH m1 AS (SELECT 'lineitem.price_c_by_qty' AS measure,
-                       CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT) AS val,
-                       CAST(l_quantity AS BIGINT) AS w
-                FROM lineitem),
-    m2 AS (SELECT 'orders.totalprice_c_by_lines' AS measure,
-                  CAST(floor(o.o_totalprice * 100 + 0.5) AS BIGINT) AS val,
-                  count(*) AS w
-           FROM orders o JOIN lineitem l ON l.l_orderkey = o.o_orderkey
-           GROUP BY o.o_orderkey, o.o_totalprice),
-    m AS (SELECT * FROM m1 UNION ALL SELECT * FROM m2),
-    hist AS (SELECT measure, val, sum(w) AS wsum FROM m GROUP BY measure, val),
-    cum AS (
-        SELECT measure, val,
-               sum(wsum) OVER (PARTITION BY measure ORDER BY val) AS cum_w,
-               sum(wsum) OVER (PARTITION BY measure) AS tot_w
-        FROM hist
-    ),
-    qs AS (SELECT explode(array(500, 900, 990)) AS q_milli),
-    pick AS (
-        SELECT c.measure, q.q_milli, c.tot_w,
-               min(c.val) AS quantile_value
-        FROM cum c JOIN qs q
-          ON c.cum_w * 1000 >= q.q_milli * c.tot_w
-        GROUP BY c.measure, q.q_milli, c.tot_w
-    )
-    SELECT measure, CAST(q_milli AS BIGINT) AS q_milli,
-           CAST(tot_w AS BIGINT) AS total_weight,
-           CAST(quantile_value AS BIGINT) AS quantile_value
-    FROM pick ORDER BY measure, q_milli
-    """,
-    oracle="""
-    WITH m1 AS (SELECT 'lineitem.price_c_by_qty' AS measure,
-                       CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT) AS val,
-                       CAST(l_quantity AS BIGINT) AS w
-                FROM lineitem),
-    m2 AS (SELECT 'orders.totalprice_c_by_lines' AS measure,
-                  CAST(floor(o.o_totalprice * 100 + 0.5) AS BIGINT) AS val,
-                  count(*) AS w
-           FROM orders o JOIN lineitem l ON l.l_orderkey = o.o_orderkey
-           GROUP BY o.o_orderkey, o.o_totalprice),
-    m AS (SELECT * FROM m1 UNION ALL SELECT * FROM m2),
-    hist AS (SELECT measure, val, sum(w) AS wsum FROM m GROUP BY measure, val),
-    cum AS (
-        SELECT measure, val,
-               sum(wsum) OVER (PARTITION BY measure ORDER BY val) AS cum_w,
-               sum(wsum) OVER (PARTITION BY measure) AS tot_w
-        FROM hist
-    ),
-    qs AS (SELECT unnest([500, 900, 990]) AS q_milli),
-    pick AS (
-        SELECT c.measure, q.q_milli, c.tot_w,
-               min(c.val) AS quantile_value
-        FROM cum c JOIN qs q
-          ON c.cum_w * 1000 >= q.q_milli * c.tot_w
-        GROUP BY c.measure, q.q_milli, c.tot_w
-    )
-    SELECT measure, CAST(q_milli AS BIGINT) AS q_milli,
-           CAST(tot_w AS BIGINT) AS total_weight,
-           CAST(quantile_value AS BIGINT) AS quantile_value
-    FROM pick ORDER BY measure, q_milli
-    """,
+    _weighted_percentile_sql("explode(array(500, 900, 990))"),
+    oracle=_weighted_percentile_sql("unnest([500, 900, 990])"),
     tags=("pipeline", "aggregates", "quantiles"),
     doc="Weighted exact p50/p90/p99 (revenue-weighted percentile): the "
     "agg_exact_quantiles histogram reduction with count replaced by an "
@@ -9559,45 +8990,30 @@ _sql_query(
 # standard power-iteration normalization — the fixpoint direction is
 # unchanged).  Per round: ONE edge-join + groupBy per direction.
 def _hits_sql(div: str) -> str:
-    d = div
-    sql = """
-    WITH params AS (
-        SELECT 15 * greatest(4, CAST(floor(count(*) / 375.0) AS BIGINT)) AS n
-        FROM orders
-    ),
-    edges AS (
-        SELECT DISTINCT o_custkey % (SELECT n FROM params) AS src,
-               o_orderkey % (1 + o_custkey % 12) AS dst
-        FROM orders
-        WHERE o_custkey % (SELECT n FROM params)
-              <> o_orderkey % (1 + o_custkey % 12)
-        UNION
-        SELECT DISTINCT o_custkey % (SELECT n FROM params) AS src,
-               (o_custkey % (SELECT n FROM params) + 1)
-               % (SELECT n FROM params) AS dst
-        FROM orders
-    ),
+    d = "DIV" if div == "spark" else "//"
+    return f"""
+    {_SKEWED_WEB},
     nodes AS (SELECT src AS id FROM edges UNION SELECT dst FROM edges),
     h0 AS (SELECT id, CAST(1000000 AS BIGINT) AS h FROM nodes),
     a1r AS (SELECT e.dst AS id, sum(h0.h) AS a
             FROM edges e JOIN h0 ON h0.id = e.src GROUP BY e.dst),
     a1 AS (SELECT n.id,
-                  (coalesce(r.a, 0) * 1000000) {D} (SELECT max(a) FROM a1r) AS a
+                  (coalesce(r.a, 0) * 1000000) {d} (SELECT max(a) FROM a1r) AS a
            FROM nodes n LEFT JOIN a1r r ON r.id = n.id),
     h1r AS (SELECT e.src AS id, sum(a1.a) AS h
             FROM edges e JOIN a1 ON a1.id = e.dst GROUP BY e.src),
     h1 AS (SELECT n.id,
-                  (coalesce(r.h, 0) * 1000000) {D} (SELECT max(h) FROM h1r) AS h
+                  (coalesce(r.h, 0) * 1000000) {d} (SELECT max(h) FROM h1r) AS h
            FROM nodes n LEFT JOIN h1r r ON r.id = n.id),
     a2r AS (SELECT e.dst AS id, sum(h1.h) AS a
             FROM edges e JOIN h1 ON h1.id = e.src GROUP BY e.dst),
     a2 AS (SELECT n.id,
-                  (coalesce(r.a, 0) * 1000000) {D} (SELECT max(a) FROM a2r) AS a
+                  (coalesce(r.a, 0) * 1000000) {d} (SELECT max(a) FROM a2r) AS a
            FROM nodes n LEFT JOIN a2r r ON r.id = n.id),
     h2r AS (SELECT e.src AS id, sum(a2.a) AS h
             FROM edges e JOIN a2 ON a2.id = e.dst GROUP BY e.src),
     h2 AS (SELECT n.id,
-                  (coalesce(r.h, 0) * 1000000) {D} (SELECT max(h) FROM h2r) AS h
+                  (coalesce(r.h, 0) * 1000000) {d} (SELECT max(h) FROM h2r) AS h
            FROM nodes n LEFT JOIN h2r r ON r.id = n.id),
     ranked AS (
         SELECT a2.id, a2.a AS authority_micro, h2.h AS hub_micro,
@@ -9610,18 +9026,17 @@ def _hits_sql(div: str) -> str:
            CAST(ark AS BIGINT) AS ark
     FROM ranked WHERE ark <= 100
     ORDER BY ark
-    """.replace("{D}", "DIV" if d == "spark" else "//")
-    return sql
+    """
 
 
-# r12 scan-guard rework: HITS's mutual recursion (a_k reads h_{k-1},
-# h_k reads a_k, each referenced 2-3x) made the inlined-CTE form blow
+# HITS's mutual recursion (a_k reads h_{k-1},
+# h_k reads a_k, each referenced 2-3x) makes the inlined-CTE form blow
 # up EXPONENTIALLY — the optimized logical plan carried 1268 scans of
 # orders (the worst plan in the registry; 8.5s at sf0.1).  Staged
 # skewed web + checkpoint-per-iterate (every raw sum and every scaled
 # iterate is node-sized); the LAST hub step stays a plan so the
 # authority-ranking window sits above its groupBy reduction.  The
-# oracle keeps the verbatim all-SQL text.
+# oracle is the all-SQL text.
 _HITS_RAW_SQL = """
     SELECT e.{GROUP} AS id, sum(p.v) AS v
     FROM {{edges}} e JOIN {{prev}} p ON p.id = e.{JOIN}
@@ -9876,16 +9291,15 @@ def mm_audio_vad_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
 # boundary derives from max(doc_id)+1 via a 1-row broadcast.  All outputs
 # exact BIGINT (novelty in basis points via floor of an identical-IEEE
 # float division).
-# r9 perf notes (two applications of existing house lessons, measured
-# at sf0.1): (1) the all-SQL form recomputed the gram CTE for both of
+# Two staging choices, measured at sf0.1: (1) the all-SQL form
+# recomputes the gram CTE for both of
 # its consumers (first_seen + the per_doc join) — materialize the
 # (doc_id, gram) occurrence list ONCE via localCheckpoint (the
 # minhash/jaccard CTE-reuse discipline); (2) the array-HOF gram
 # construction (transform + lambda concat) is interpreted, not
 # codegen'd (the simhash lesson) — the posexplode + lead() window form
 # is whole-stage-codegen and measured 4.8x faster (0.71s vs 3.37s) with
-# bit-identical output.  Together: 8.0s -> ~1.5s, results unchanged
-# (re-verified EXACT at both scales).
+# bit-identical output.  Together: 8.0s -> ~1.5s, results unchanged.
 _NOVELTY_OCC_SQL = """
     WITH tr AS (SELECT doc_id, posexplode(split(text, ' ')) AS (pos, tk)
                 FROM documents),
@@ -9899,7 +9313,7 @@ _NOVELTY_MAIN_SQL = """
     WITH per_doc AS (
         SELECT doc_id, count(*) AS n_grams FROM {occ} GROUP BY doc_id
     ),
-    -- r13: n_novel never needed the gram-keyed join-back of the WHOLE
+    -- n_novel needs no gram-keyed join-back of the WHOLE
     -- occurrence list (the oracle's formulation) — a gram g contributes
     -- novelty exactly to its first_doc, so counting first_seen rows per
     -- first_doc gives the identical per-doc novel count while shuffling
@@ -9979,52 +9393,39 @@ def text_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
 # engines (same IEEE result), rounded to 4dp, rank ties broken by term.
 # Scale shape: one exchange on term, a 1-row totals broadcast, output
 # bounded by vocabulary size.
+# The counts and the statistic are dialect-neutral: the plan and its oracle
+# share them.
+_TERM_DRIFT_SQL = """
+    cnt AS (
+        SELECT term,
+               sum(CASE WHEN doc_id < (SELECT half FROM mx) THEN 1 ELSE 0 END) AS a,
+               sum(CASE WHEN doc_id >= (SELECT half FROM mx) THEN 1 ELSE 0 END) AS b
+        FROM tok GROUP BY term
+    ),
+    tot AS (SELECT sum(a) AS ta, sum(b) AS tb FROM cnt),
+    scored AS (
+        SELECT c.term, c.a, c.b,
+               round((t.ta + t.tb)
+                     * pow(1.0 * c.a * (t.tb - c.b) - 1.0 * c.b * (t.ta - c.a), 2)
+                     / ((1.0 * c.a + c.b) * (t.ta - c.a + t.tb - c.b) * t.ta * t.tb), 4) AS chi2
+        FROM cnt c CROSS JOIN tot t
+    )
+    SELECT term, CAST(a AS BIGINT) AS n_first_half, CAST(b AS BIGINT) AS n_second_half, chi2,
+           CAST(row_number() OVER (ORDER BY chi2 DESC, term) AS BIGINT) AS drift_rank
+    FROM scored
+    ORDER BY drift_rank
+    """
+
 _sql_query(
     "text_term_drift",
-    """
+    f"""
     WITH mx AS (SELECT (max(doc_id) + 1) DIV 2 AS half FROM documents),
     tok AS (SELECT doc_id, explode(split(text, ' ')) AS term FROM documents),
-    cnt AS (
-        SELECT term,
-               sum(CASE WHEN doc_id < (SELECT half FROM mx) THEN 1 ELSE 0 END) AS a,
-               sum(CASE WHEN doc_id >= (SELECT half FROM mx) THEN 1 ELSE 0 END) AS b
-        FROM tok GROUP BY term
-    ),
-    tot AS (SELECT sum(a) AS ta, sum(b) AS tb FROM cnt),
-    scored AS (
-        SELECT c.term, c.a, c.b,
-               round((t.ta + t.tb)
-                     * pow(1.0 * c.a * (t.tb - c.b) - 1.0 * c.b * (t.ta - c.a), 2)
-                     / ((1.0 * c.a + c.b) * (t.ta - c.a + t.tb - c.b) * t.ta * t.tb), 4) AS chi2
-        FROM cnt c CROSS JOIN tot t
-    )
-    SELECT term, CAST(a AS BIGINT) AS n_first_half, CAST(b AS BIGINT) AS n_second_half, chi2,
-           CAST(row_number() OVER (ORDER BY chi2 DESC, term) AS BIGINT) AS drift_rank
-    FROM scored
-    ORDER BY drift_rank
-    """,
-    oracle="""
+    {_TERM_DRIFT_SQL}""",
+    oracle=f"""
     WITH mx AS (SELECT (max(doc_id) + 1) // 2 AS half FROM documents),
     tok AS (SELECT doc_id, unnest(string_split(text, ' ')) AS term FROM documents),
-    cnt AS (
-        SELECT term,
-               sum(CASE WHEN doc_id < (SELECT half FROM mx) THEN 1 ELSE 0 END) AS a,
-               sum(CASE WHEN doc_id >= (SELECT half FROM mx) THEN 1 ELSE 0 END) AS b
-        FROM tok GROUP BY term
-    ),
-    tot AS (SELECT sum(a) AS ta, sum(b) AS tb FROM cnt),
-    scored AS (
-        SELECT c.term, c.a, c.b,
-               round((t.ta + t.tb)
-                     * pow(1.0 * c.a * (t.tb - c.b) - 1.0 * c.b * (t.ta - c.a), 2)
-                     / ((1.0 * c.a + c.b) * (t.ta - c.a + t.tb - c.b) * t.ta * t.tb), 4) AS chi2
-        FROM cnt c CROSS JOIN tot t
-    )
-    SELECT term, CAST(a AS BIGINT) AS n_first_half, CAST(b AS BIGINT) AS n_second_half, chi2,
-           CAST(row_number() OVER (ORDER BY chi2 DESC, term) AS BIGINT) AS drift_rank
-    FROM scored
-    ORDER BY drift_rank
-    """,
+    {_TERM_DRIFT_SQL}""",
     tags=("pipeline", "text", "drift"),
     doc="Term-distribution drift between corpus halves: 2x2 chi-square "
     "per term (Kilgarriff's corpus-comparison statistic) from ONE "
@@ -10048,6 +9449,20 @@ _sql_query(
 # to e4 integers; everything else is exact BIGINT.  Scale shape: one
 # corpus scan, per-row array work, one label-keyed map-side-combined
 # rollup — no joins at all.
+# The per-label rollup is dialect-neutral: the plan and its oracle share it.
+_NORM_AUDIT_SQL = """
+    SELECT CAST(label AS BIGINT) AS label,
+           CAST(count(*) AS BIGINT) AS n_vecs,
+           CAST(min(dims) AS BIGINT) AS dims_min,
+           CAST(max(dims) AS BIGINT) AS dims_max,
+           CAST(sum(CASE WHEN nrm = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_zero_norm,
+           CAST(sum(bad) AS BIGINT) AS n_nonfinite,
+           CAST(min(cast(floor(nrm * 10000 + 0.5) AS BIGINT)) AS BIGINT) AS min_norm_e4,
+           CAST(max(cast(floor(nrm * 10000 + 0.5) AS BIGINT)) AS BIGINT) AS max_norm_e4,
+           CAST(sum(cast(floor(nrm * 10000 + 0.5) AS BIGINT)) AS BIGINT) AS sum_norm_e4
+    FROM m GROUP BY label ORDER BY label
+    """
+
 _sql_query(
     "sim_embedding_norm_audit",
     f"""
@@ -10060,18 +9475,8 @@ _sql_query(
                     THEN 1 ELSE 0 END AS bad
         FROM e
     )
-    SELECT CAST(label AS BIGINT) AS label,
-           CAST(count(*) AS BIGINT) AS n_vecs,
-           CAST(min(dims) AS BIGINT) AS dims_min,
-           CAST(max(dims) AS BIGINT) AS dims_max,
-           CAST(sum(CASE WHEN nrm = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_zero_norm,
-           CAST(sum(bad) AS BIGINT) AS n_nonfinite,
-           CAST(min(cast(floor(nrm * 10000 + 0.5) AS BIGINT)) AS BIGINT) AS min_norm_e4,
-           CAST(max(cast(floor(nrm * 10000 + 0.5) AS BIGINT)) AS BIGINT) AS max_norm_e4,
-           CAST(sum(cast(floor(nrm * 10000 + 0.5) AS BIGINT)) AS BIGINT) AS sum_norm_e4
-    FROM m GROUP BY label ORDER BY label
-    """,
-    oracle="""
+    {_NORM_AUDIT_SQL}""",
+    oracle=f"""
     WITH e AS (SELECT label, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
                FROM embeddings),
     m AS (
@@ -10081,17 +9486,7 @@ _sql_query(
                     THEN 1 ELSE 0 END AS bad
         FROM e
     )
-    SELECT CAST(label AS BIGINT) AS label,
-           CAST(count(*) AS BIGINT) AS n_vecs,
-           CAST(min(dims) AS BIGINT) AS dims_min,
-           CAST(max(dims) AS BIGINT) AS dims_max,
-           CAST(sum(CASE WHEN nrm = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_zero_norm,
-           CAST(sum(bad) AS BIGINT) AS n_nonfinite,
-           CAST(min(cast(floor(nrm * 10000 + 0.5) AS BIGINT)) AS BIGINT) AS min_norm_e4,
-           CAST(max(cast(floor(nrm * 10000 + 0.5) AS BIGINT)) AS BIGINT) AS max_norm_e4,
-           CAST(sum(cast(floor(nrm * 10000 + 0.5) AS BIGINT)) AS BIGINT) AS sum_norm_e4
-    FROM m GROUP BY label ORDER BY label
-    """,
+    {_NORM_AUDIT_SQL}""",
     tags=("pipeline", "similarity", "audit"),
     doc="Embedding corpus health gate before ANN builds: per-label ragged-"
     "dimension envelope, zero-norm and NaN/Inf counts, e4-quantized norm "
@@ -10251,8 +9646,8 @@ def text_lang_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
 # bucket of o_custkey — a deterministic power-law surrogate (bucket k
 # holds ~2^k orders) on this uniform fixture; on real data the histogram
 # input is the key itself.  The bucket is computed integrally as
-# length(bin(o_custkey + 2)) - 1 = floor(log2(o_custkey + 2)) (r9
-# ADVICE: floor(ln/ln) could flip at power-of-two boundaries if the two
+# length(bin(o_custkey + 2)) - 1 = floor(log2(o_custkey + 2))
+# (floor(ln/ln) could flip at power-of-two boundaries if the two
 # engines' libm log differs by an ulp).  At sf0.01 the plan takes the hottest key
 # from 5112 rows/task to 465 (11x balance).  Everything is one
 # map-side-combined histogram + a 1-row totals broadcast; exact BIGINT.
@@ -10319,9 +9714,21 @@ _sql_query(
 # are ~2^-64 at corpus scale — the same contract dedup_exact documents).
 # One window over the digest + one source-keyed rollup; exact BIGINT,
 # savings via identical-IEEE floor division.
+# The bill is dialect-neutral: the plan and its oracle share it.
+_DEDUP_BILL_SQL = """
+    SELECT source,
+           CAST(count(*) AS BIGINT) AS n_docs,
+           CAST(sum(CASE WHEN doc_id <> keep_id THEN 1 ELSE 0 END) AS BIGINT) AS n_removed,
+           CAST(sum(n_tok) AS BIGINT) AS tokens_total,
+           CAST(sum(CASE WHEN doc_id <> keep_id THEN n_tok ELSE 0 END) AS BIGINT) AS tokens_removed,
+           CAST(floor(sum(CASE WHEN doc_id <> keep_id THEN n_tok ELSE 0 END) * 10000.0
+                      / sum(n_tok)) AS BIGINT) AS saved_bp
+    FROM g GROUP BY source ORDER BY source
+    """
+
 _sql_query(
     "text_dedup_impact",
-    """
+    f"""
     WITH corpus AS (
         SELECT source, doc_id, text FROM documents
         UNION ALL
@@ -10333,16 +9740,8 @@ _sql_query(
                min(doc_id) OVER (PARTITION BY md5(text)) AS keep_id
         FROM corpus
     )
-    SELECT source,
-           CAST(count(*) AS BIGINT) AS n_docs,
-           CAST(sum(CASE WHEN doc_id <> keep_id THEN 1 ELSE 0 END) AS BIGINT) AS n_removed,
-           CAST(sum(n_tok) AS BIGINT) AS tokens_total,
-           CAST(sum(CASE WHEN doc_id <> keep_id THEN n_tok ELSE 0 END) AS BIGINT) AS tokens_removed,
-           CAST(floor(sum(CASE WHEN doc_id <> keep_id THEN n_tok ELSE 0 END) * 10000.0
-                      / sum(n_tok)) AS BIGINT) AS saved_bp
-    FROM g GROUP BY source ORDER BY source
-    """,
-    oracle="""
+    {_DEDUP_BILL_SQL}""",
+    oracle=f"""
     WITH corpus AS (
         SELECT source, doc_id, text FROM documents
         UNION ALL
@@ -10354,15 +9753,7 @@ _sql_query(
                min(doc_id) OVER (PARTITION BY md5(text)) AS keep_id
         FROM corpus
     )
-    SELECT source,
-           CAST(count(*) AS BIGINT) AS n_docs,
-           CAST(sum(CASE WHEN doc_id <> keep_id THEN 1 ELSE 0 END) AS BIGINT) AS n_removed,
-           CAST(sum(n_tok) AS BIGINT) AS tokens_total,
-           CAST(sum(CASE WHEN doc_id <> keep_id THEN n_tok ELSE 0 END) AS BIGINT) AS tokens_removed,
-           CAST(floor(sum(CASE WHEN doc_id <> keep_id THEN n_tok ELSE 0 END) * 10000.0
-                      / sum(n_tok)) AS BIGINT) AS saved_bp
-    FROM g GROUP BY source ORDER BY source
-    """,
+    {_DEDUP_BILL_SQL}""",
     tags=("pipeline", "text", "dedup", "reporting"),
     doc="Exact-dedup impact bill per source: docs/tokens removed and bp "
     "saved with keeper = min doc_id per md5(text) group — the shuffle "
@@ -10388,15 +9779,48 @@ _sql_query(
 # per-doc flags computed in ONE scan, the dedup keeper via one digest
 # window, then a 5-row conditional-sum rollup; survival via lag() over
 # the 5-row stage table.  Everything exact BIGINT.
-_sql_query(
-    "pipeline_attrition_funnel",
-    """
+# Only the per-doc flags differ between the plan and its oracle: the
+# planted-duplicate corpus, the keeper and the stage rollup are shared.
+_FUNNEL_CORPUS_SQL = """
     WITH corpus AS (
         SELECT doc_id, text, n_chars FROM documents
         UNION ALL
         SELECT doc_id + 1000000 AS doc_id, text, n_chars
         FROM documents WHERE doc_id % 50 = 0
+    ),"""
+
+_FUNNEL_STAGES_SQL = """
+    k AS (
+        SELECT doc_id, n_tok, ok_len, ok_div, ok_cln,
+               CASE WHEN ok_len = 1 AND ok_div = 1
+                    AND doc_id = min(CASE WHEN ok_len = 1 AND ok_div = 1 THEN doc_id END)
+                                 OVER (PARTITION BY md5(text))
+                    THEN 1 ELSE 0 END AS keeper
+        FROM f
     ),
+    st AS (
+        SELECT CAST(0 AS BIGINT) AS stage, 'raw' AS gate,
+               count(*) AS n_docs, sum(n_tok) AS n_tokens FROM k
+        UNION ALL
+        SELECT 1, 'length_gate', sum(ok_len), sum(ok_len * n_tok) FROM k
+        UNION ALL
+        SELECT 2, 'diversity_gate', sum(ok_len * ok_div), sum(ok_len * ok_div * n_tok) FROM k
+        UNION ALL
+        SELECT 3, 'exact_dedup', sum(keeper), sum(keeper * n_tok) FROM k
+        UNION ALL
+        SELECT 4, 'decontaminate', sum(keeper * ok_cln), sum(keeper * ok_cln * n_tok) FROM k
+    )
+    SELECT stage, gate, CAST(n_docs AS BIGINT) AS n_docs,
+           CAST(n_tokens AS BIGINT) AS n_tokens,
+           CAST(floor(n_docs * 10000.0 /
+                lag(n_docs, 1, n_docs) OVER (ORDER BY stage)) AS BIGINT) AS survival_bp
+    FROM st ORDER BY stage
+    """
+
+_sql_query(
+    "pipeline_attrition_funnel",
+    f"""
+    {_FUNNEL_CORPUS_SQL}
     f AS (
         SELECT doc_id, text,
                size(split(text, ' ')) AS n_tok,
@@ -10407,39 +9831,9 @@ _sql_query(
                CASE WHEN text NOT LIKE '%query query%' THEN 1 ELSE 0 END AS ok_cln
         FROM corpus
     ),
-    k AS (
-        SELECT doc_id, n_tok, ok_len, ok_div, ok_cln,
-               CASE WHEN ok_len = 1 AND ok_div = 1
-                    AND doc_id = min(CASE WHEN ok_len = 1 AND ok_div = 1 THEN doc_id END)
-                                 OVER (PARTITION BY md5(text))
-                    THEN 1 ELSE 0 END AS keeper
-        FROM f
-    ),
-    st AS (
-        SELECT CAST(0 AS BIGINT) AS stage, 'raw' AS gate,
-               count(*) AS n_docs, sum(n_tok) AS n_tokens FROM k
-        UNION ALL
-        SELECT 1, 'length_gate', sum(ok_len), sum(ok_len * n_tok) FROM k
-        UNION ALL
-        SELECT 2, 'diversity_gate', sum(ok_len * ok_div), sum(ok_len * ok_div * n_tok) FROM k
-        UNION ALL
-        SELECT 3, 'exact_dedup', sum(keeper), sum(keeper * n_tok) FROM k
-        UNION ALL
-        SELECT 4, 'decontaminate', sum(keeper * ok_cln), sum(keeper * ok_cln * n_tok) FROM k
-    )
-    SELECT stage, gate, CAST(n_docs AS BIGINT) AS n_docs,
-           CAST(n_tokens AS BIGINT) AS n_tokens,
-           CAST(floor(n_docs * 10000.0 /
-                lag(n_docs, 1, n_docs) OVER (ORDER BY stage)) AS BIGINT) AS survival_bp
-    FROM st ORDER BY stage
-    """,
-    oracle="""
-    WITH corpus AS (
-        SELECT doc_id, text, n_chars FROM documents
-        UNION ALL
-        SELECT doc_id + 1000000 AS doc_id, text, n_chars
-        FROM documents WHERE doc_id % 50 = 0
-    ),
+    {_FUNNEL_STAGES_SQL}""",
+    oracle=f"""
+    {_FUNNEL_CORPUS_SQL}
     f AS (
         SELECT doc_id, text,
                len(string_split(text, ' ')) AS n_tok,
@@ -10450,32 +9844,7 @@ _sql_query(
                CASE WHEN text NOT LIKE '%query query%' THEN 1 ELSE 0 END AS ok_cln
         FROM corpus
     ),
-    k AS (
-        SELECT doc_id, n_tok, ok_len, ok_div, ok_cln,
-               CASE WHEN ok_len = 1 AND ok_div = 1
-                    AND doc_id = min(CASE WHEN ok_len = 1 AND ok_div = 1 THEN doc_id END)
-                                 OVER (PARTITION BY md5(text))
-                    THEN 1 ELSE 0 END AS keeper
-        FROM f
-    ),
-    st AS (
-        SELECT CAST(0 AS BIGINT) AS stage, 'raw' AS gate,
-               count(*) AS n_docs, sum(n_tok) AS n_tokens FROM k
-        UNION ALL
-        SELECT 1, 'length_gate', sum(ok_len), sum(ok_len * n_tok) FROM k
-        UNION ALL
-        SELECT 2, 'diversity_gate', sum(ok_len * ok_div), sum(ok_len * ok_div * n_tok) FROM k
-        UNION ALL
-        SELECT 3, 'exact_dedup', sum(keeper), sum(keeper * n_tok) FROM k
-        UNION ALL
-        SELECT 4, 'decontaminate', sum(keeper * ok_cln), sum(keeper * ok_cln * n_tok) FROM k
-    )
-    SELECT stage, gate, CAST(n_docs AS BIGINT) AS n_docs,
-           CAST(n_tokens AS BIGINT) AS n_tokens,
-           CAST(floor(n_docs * 10000.0 /
-                lag(n_docs, 1, n_docs) OVER (ORDER BY stage)) AS BIGINT) AS survival_bp
-    FROM st ORDER BY stage
-    """,
+    {_FUNNEL_STAGES_SQL}""",
     tags=("pipeline", "text", "reporting"),
     doc="Curation attrition funnel: per-stage docs/tokens surviving "
     "length -> diversity -> exact-dedup -> decontamination gates with "
@@ -10498,8 +9867,8 @@ _sql_query(
 # log-bucket histogram is the scale-stable form, like events_lateness_
 # audit's fixed thresholds).  Buckets + extremes are exact BIGINT
 # microseconds; the bucket index floor(log2(1 + lag/60s)) is computed
-# INTEGRALLY as length(bin((lag_us + 60e6) div 60e6)) - 1 (r9 ADVICE:
-# floor(ln/ln) relied on bit-identical libm across engines) — sound
+# INTEGRALLY as length(bin((lag_us + 60e6) div 60e6)) - 1
+# (floor(ln/ln) would rely on bit-identical libm across engines) — sound
 # because floor(log2(a/b)) = floor(log2(a div b)) for a >= b >= 1:
 # 2^k <= a/b implies the integer 2^k <= a div b, and a div b <= a/b.
 # Shape: three user-keyed conditional-min aggregations

@@ -7,6 +7,7 @@ asynchronously, so an undrained read would undercount).
 
 from __future__ import annotations
 
+import os
 import uuid
 
 import pyarrow as pa
@@ -157,3 +158,54 @@ def test_kept_relation_is_never_handed_to_another_session(spark, tmp_path):
     assert _relation(b).relation().sparkSession().equals(two._jsparkSession)
     assert b.sparkSession is two
     assert b.count() == 3
+
+
+# --- Registered views follow the same version rule. ------------------------
+
+
+def _scale_dir(tmp_path, smoke_dir) -> str:
+    """A scale dir whose tables link to ``smoke_dir``'s, except region,
+    which the test writes."""
+    for name in catalog.TABLES:
+        if name != "region":
+            os.symlink(os.path.join(smoke_dir, f"{name}.parquet"), tmp_path / f"{name}.parquet")
+    return str(tmp_path)
+
+
+def test_views_see_a_part_file_added_to_a_table_directory(spark, tmp_path, smoke_dir):
+    """Fault injection: a part file lands in a directory-backed table after
+    its view was registered. A ``table`` call in between re-reads the kept
+    relation, so the views must keep their own versions."""
+    sf_dir = _scale_dir(tmp_path, smoke_dir)
+    table_dir = tmp_path / "region.parquet"
+    table_dir.mkdir()
+    _write_region(str(table_dir / "part-0.parquet"), 2)
+    session = spark.newSession()
+
+    def count() -> int:
+        return catalog.sql(session, sf_dir, "SELECT count(*) FROM region").first()[0]
+
+    assert count() == 2
+    assert count() == 2
+    pq.write_table(pa.table({"r_regionkey": [7], "r_name": ["R7"]}), str(table_dir / "part-1.parquet"))
+    assert catalog.table(session, sf_dir, "region").count() == 3
+    assert count() == 3
+
+
+def test_views_see_a_rewritten_table_file(spark, tmp_path, smoke_dir):
+    """Fault injection with the schema unchanged: the new file is longer and
+    has many row groups, so a view still holding the old file listing
+    splits it at the old length and misses rows."""
+    sf_dir = _scale_dir(tmp_path, smoke_dir)
+    path = str(tmp_path / "region.parquet")
+    _write_region(path, 2)
+    session = spark.newSession()
+
+    def keys() -> list[int]:
+        rows = catalog.sql(session, sf_dir, "SELECT r_regionkey FROM region").collect()
+        return sorted(r[0] for r in rows)
+
+    assert keys() == [0, 1]
+    assert keys() == [0, 1]
+    _write_region(path, 3000, row_group_size=100)
+    assert keys() == list(range(3000))

@@ -106,6 +106,43 @@ def test_no_inline_vector_kernels_outside_vec():
     assert {name: n for name, n in found.items() if n != (0, 0)} == {}
 
 
+
+def test_no_repeated_fixture_in_pipeline():
+    """No run of 10 or more identical lines (stripped, blank lines skipped)
+    occurs twice in queries/pipeline.py: a SQL fragment that two texts share
+    has one definition that each of them interpolates, so a fix to it
+    reaches every copy. The named exception is Python, not SQL."""
+    import pathlib
+
+    size = 10
+    # first line of the repeated run -> why it keeps its copy
+    named_exceptions = {
+        'for doc_id, text in zip(pdf["doc_id"], pdf["text"]):': (
+            "the fake-video roundtrip in the mapInPandas closures of "
+            "mm_video_scene_cut and mm_video_keyframe_sample: a module-level "
+            "helper would be pickled by reference, so every Python worker "
+            "would import the whole query registry"
+        ),
+    }
+    path = pathlib.Path(registry.__file__).with_name("pipeline.py")
+    numbered = [(n, t.strip()) for n, t in enumerate(path.read_text().splitlines(), 1) if t.strip()]
+    text = [t for _, t in numbered]
+    first_seen, repeated = {}, [False] * len(text)
+    for i in range(len(text) - size + 1):
+        if first_seen.setdefault(tuple(text[i : i + size]), i) != i:
+            repeated[i : i + size] = [True] * size
+    runs, i = [], 0
+    while i < len(text):
+        j = i
+        while j < len(text) and repeated[j]:
+            j += 1
+        if j > i:
+            runs.append((numbered[i][0], j - i, text[i]))
+        i = max(j, i + 1)
+    assert [r for r in runs if r[2] not in named_exceptions] == []
+    assert {r[2] for r in runs} == set(named_exceptions)
+
+
 # -- WAV/PCM codec (multimodal.py, real decoder since round 3) ---------------
 
 

@@ -911,6 +911,33 @@ def test_rewritten_table_file_reads_fresh_rows(copy_server):
     assert err is None and fresh == rows[:3] and stats["resultCacheHit"] is False
 
 
+
+def test_part_file_added_to_a_table_directory_reads_fresh_rows(spark, oracle_dir, tmp_path):
+    """Fault injection: a part file lands in a directory-backed table between
+    two runs of one statement. The server neither serves the old rows nor
+    stores them under the new file versions."""
+    import pyarrow.parquet as pq
+
+    for name in os.listdir(oracle_dir):
+        if name != "region.parquet":
+            os.symlink(os.path.join(oracle_dir, name), tmp_path / name)
+    table_dir = tmp_path / "region.parquet"
+    table_dir.mkdir()
+    region = pq.read_table(os.path.join(oracle_dir, "region.parquet"))
+    pq.write_table(region, str(table_dir / "part-0.parquet"))
+    s = srv.SqlServer(spark, str(tmp_path)).start()
+    try:
+        sql = "SELECT count(*) FROM region"
+        assert _run_with_stats(s, sql, "parts")[:2] == (None, [[5]])
+        assert _run_with_stats(s, sql, "parts")[2]["resultCacheHit"] is True
+        pq.write_table(region.slice(0, 2), str(table_dir / "part-1.parquet"))
+        err, rows, stats = _run_with_stats(s, sql, "parts")
+        assert err is None and rows == [[7]] and stats["resultCacheHit"] is False
+        err, rows, stats = _run_with_stats(s, sql, "parts")
+        assert err is None and rows == [[7]] and stats["resultCacheHit"] is True
+    finally:
+        s.stop()
+
 def _run_direct(s: srv.SqlServer, sql: str, client: str) -> srv.QueryExecution:
     """Run one statement on the calling thread, as a submitted one runs."""
     q = srv.QueryExecution(query_id=f"q_direct_{time.monotonic_ns()}", sql=sql, client=client)
