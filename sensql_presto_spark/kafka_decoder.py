@@ -14,7 +14,7 @@ re-expresses both halves Spark-first:
   fixture below (live brokers are untestable in this environment; the r7
   Avro OCF playbook).
 
-* **Offline segment codec.** ``write_segment``/``read_topic_dir`` persist
+* **Offline segment codec.** ``write_topic_dir``/``read_topic_dir`` persist
   a topic partition as one log-segment file of length-prefixed messages
   (``[4B BE key len | key | 4B BE value len | value]``, key len -1 =>
   null key — Kafka's own on-disk record framing simplified to the parts
@@ -164,6 +164,34 @@ def read_topic_dir(spark, topic_dir: str) -> DataFrame:
             "key binary, value binary, topic string, partition int, offset long",
         )
     )
+
+
+def write_topic_dir(df: DataFrame, topic_dir: str, messages) -> None:
+    """Write ``df`` as a directory of ``partition={p}.seg`` files, one per
+    value of its ``part`` column, emptying the directory first.
+
+    ``messages(pdf)`` turns one partition's rows, in ``event_id`` order, into
+    its (key, value) messages. One applyInPandas pass: each segment is
+    framed and written by the task holding its rows, nothing on the driver.
+    """
+    import shutil
+
+    shutil.rmtree(topic_dir, ignore_errors=True)
+    os.makedirs(topic_dir, exist_ok=True)
+
+    # single-arg function: applyInPandas passes (key, pdf) to
+    # two-parameter callables
+    def write_part(pdf):
+        import pandas as pd
+
+        pdf = pdf.sort_values("event_id")
+        part = int(pdf["part"].iloc[0])
+        with open(os.path.join(topic_dir, f"partition={part}.seg"), "wb") as f:
+            f.write(encode_segment(messages(pdf)))
+        return pd.DataFrame({"part": [part], "n": [len(pdf)]})
+
+    written = df.groupBy("part").applyInPandas(write_part, "part int, n long").collect()
+    assert sum(r.n for r in written) > 0, f"empty kafka fixture topic {topic_dir}"
 
 
 # --------------------------------------------------------------------------

@@ -22,10 +22,7 @@ Design (the shape Delta calls a transaction log, reduced to essentials):
 At 100 TB copy-on-write rewrites only what it must IF the table is
 partitioned and predicates prune partitions — ``delete`` takes the same
 partition-pruned path a big table would use (the filter pushes into the
-parquet scan of the snapshot). When the optional ``delta`` package IS
-available, ``WritableTable.via_delta`` returns True and the same API could
-be backed by Delta; the import is gated so this container's plain-parquet
-path is the default.
+parquet scan of the snapshot).
 """
 
 from __future__ import annotations
@@ -35,14 +32,6 @@ import shutil
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-try:  # pragma: no cover - not installed in this container
-    import delta  # noqa: F401
-
-    _HAVE_DELTA = True
-except Exception:  # pragma: no cover
-    _HAVE_DELTA = False
-
 
 def committed_versions(path: str) -> list[int]:
     """Numbers of the committed (``_SUCCESS``-gated) snapshots under
@@ -67,8 +56,6 @@ def next_version(path: str) -> int:
 
 class WritableTable:
     """A versioned, copy-on-write parquet table supporting row mutations."""
-
-    via_delta = _HAVE_DELTA
 
     def __init__(self, spark: SparkSession, path: str):
         self.spark = spark

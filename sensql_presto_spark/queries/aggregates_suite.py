@@ -314,40 +314,27 @@ _sql_query(
 
 # --- geometric mean + entropy (GeometricMeanAggregations.java, EntropyAggregation.java)
 
+_GEOMEAN_ENTROPY_SQL = """
+    WITH counts AS (
+        SELECT c_nationkey, c_mktsegment, count(*) AS cnt
+        FROM customer GROUP BY c_nationkey, c_mktsegment
+    )
+    SELECT g.c_nationkey, g.geo_mean_bal, e.seg_entropy
+    FROM (SELECT c_nationkey, round(exp(avg(ln(abs(c_acctbal) + 1))), 4) AS geo_mean_bal
+          FROM customer GROUP BY c_nationkey) g
+    JOIN (SELECT c_nationkey,
+                 round(-sum((cnt / tot) * log2(cnt / tot)), 6) AS seg_entropy
+          FROM (SELECT c_nationkey, cnt, {tot} AS tot
+                FROM counts)
+          GROUP BY c_nationkey) e
+      ON g.c_nationkey = e.c_nationkey
+    ORDER BY g.c_nationkey
+    """
+
 _sql_query(
     "agg_geomean_entropy",
-    """
-    WITH counts AS (
-        SELECT c_nationkey, c_mktsegment, count(*) AS cnt
-        FROM customer GROUP BY c_nationkey, c_mktsegment
-    )
-    SELECT g.c_nationkey, g.geo_mean_bal, e.seg_entropy
-    FROM (SELECT c_nationkey, round(exp(avg(ln(abs(c_acctbal) + 1))), 4) AS geo_mean_bal
-          FROM customer GROUP BY c_nationkey) g
-    JOIN (SELECT c_nationkey,
-                 round(-sum((cnt / tot) * log2(cnt / tot)), 6) AS seg_entropy
-          FROM (SELECT c_nationkey, cnt, sum(cnt) OVER (PARTITION BY c_nationkey) AS tot
-                FROM counts)
-          GROUP BY c_nationkey) e
-      ON g.c_nationkey = e.c_nationkey
-    ORDER BY g.c_nationkey
-    """,
-    oracle="""
-    WITH counts AS (
-        SELECT c_nationkey, c_mktsegment, count(*) AS cnt
-        FROM customer GROUP BY c_nationkey, c_mktsegment
-    )
-    SELECT g.c_nationkey, g.geo_mean_bal, e.seg_entropy
-    FROM (SELECT c_nationkey, round(exp(avg(ln(abs(c_acctbal) + 1))), 4) AS geo_mean_bal
-          FROM customer GROUP BY c_nationkey) g
-    JOIN (SELECT c_nationkey,
-                 round(-sum((cnt / tot) * log2(cnt / tot)), 6) AS seg_entropy
-          FROM (SELECT c_nationkey, cnt, CAST(sum(cnt) OVER (PARTITION BY c_nationkey) AS DOUBLE) AS tot
-                FROM counts)
-          GROUP BY c_nationkey) e
-      ON g.c_nationkey = e.c_nationkey
-    ORDER BY g.c_nationkey
-    """,
+    _GEOMEAN_ENTROPY_SQL.format(tot="sum(cnt) OVER (PARTITION BY c_nationkey)"),
+    oracle=_GEOMEAN_ENTROPY_SQL.format(tot="CAST(sum(cnt) OVER (PARTITION BY c_nationkey) AS DOUBLE)"),
     tags=("aggregates", "stats"),
     doc="Presto geometric_mean and entropy(bigint) as pure-SQL compositions.",
 )
@@ -504,41 +491,32 @@ _sql_query(
 #     reference sketches because Presto lacks a second shuffle inside one
 #     aggregate call, which Spark does not need. ----------------------------
 
+_MOST_FREQUENT_SQL = """
+    WITH counts AS (
+        SELECT o_orderstatus, o_orderpriority, count(*) AS cnt
+        FROM orders GROUP BY o_orderstatus, o_orderpriority
+    ),
+    ranked AS (
+        SELECT *, row_number() OVER (PARTITION BY o_orderstatus
+                                     ORDER BY cnt DESC, o_orderpriority) AS rk
+        FROM counts
+    )
+    SELECT o_orderstatus,
+           {top3} AS top3
+    FROM ranked WHERE rk <= 3
+    GROUP BY o_orderstatus
+    ORDER BY o_orderstatus
+    """
+
 _sql_query(
     "agg_most_frequent",
-    """
-    WITH counts AS (
-        SELECT o_orderstatus, o_orderpriority, count(*) AS cnt
-        FROM orders GROUP BY o_orderstatus, o_orderpriority
+    _MOST_FREQUENT_SQL.format(
+        top3="concat_ws(';', sort_array(collect_list(concat(o_orderpriority, '=', cast(cnt AS string)))))"
     ),
-    ranked AS (
-        SELECT *, row_number() OVER (PARTITION BY o_orderstatus
-                                     ORDER BY cnt DESC, o_orderpriority) AS rk
-        FROM counts
-    )
-    SELECT o_orderstatus,
-           concat_ws(';', sort_array(collect_list(concat(o_orderpriority, '=', cast(cnt AS string))))) AS top3
-    FROM ranked WHERE rk <= 3
-    GROUP BY o_orderstatus
-    ORDER BY o_orderstatus
-    """,
-    oracle="""
-    WITH counts AS (
-        SELECT o_orderstatus, o_orderpriority, count(*) AS cnt
-        FROM orders GROUP BY o_orderstatus, o_orderpriority
+    oracle=_MOST_FREQUENT_SQL.format(
+        top3="""string_agg(o_orderpriority || '=' || cast(cnt AS varchar), ';'
+                      ORDER BY o_orderpriority || '=' || cast(cnt AS varchar))"""
     ),
-    ranked AS (
-        SELECT *, row_number() OVER (PARTITION BY o_orderstatus
-                                     ORDER BY cnt DESC, o_orderpriority) AS rk
-        FROM counts
-    )
-    SELECT o_orderstatus,
-           string_agg(o_orderpriority || '=' || cast(cnt AS varchar), ';'
-                      ORDER BY o_orderpriority || '=' || cast(cnt AS varchar)) AS top3
-    FROM ranked WHERE rk <= 3
-    GROUP BY o_orderstatus
-    ORDER BY o_orderstatus
-    """,
     tags=("aggregates", "approx"),
 )
 

@@ -17,7 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from sensql_presto_spark.queries.registry import register
-from sensql_presto_spark.queries.relational import _sql_query
+from sensql_presto_spark.queries.relational import _epoch_dialects, _sql_query
 from sensql_presto_spark.streaming import tumbling_window_counts
 
 # --- tumbling window aggregation (batch). Spark's window() generator vs the
@@ -83,52 +83,35 @@ _sql_query(
 # --- gap-based sessionization: new session when > 30 min since the user's
 #     previous event. lag + running sum over one per-user sort. --------------
 
+_SESSIONS_SQL = """
+    WITH flagged AS (
+        SELECT user_id, ts, event_id, value,
+               CASE WHEN lag(ts) OVER w IS NULL
+                         OR ts > lag(ts) OVER w + INTERVAL 30 MINUTE
+                    THEN 1 ELSE 0 END AS new_sess
+        FROM events
+        WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
+    ),
+    sessions AS (
+        SELECT user_id, ts, value,
+               CAST(sum(new_sess) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS BIGINT) AS session_id
+        FROM flagged
+    )
+"""
+
+_SESSIONIZE_SQL = _SESSIONS_SQL + """
+    SELECT user_id, session_id, count(*) AS n_events,
+           ({us}(max(ts)) - {us}(min(ts))) {div} 1000000 AS dur_s,
+           CAST(sum(cast(floor(value * 10000 + 0.5) AS BIGINT)) AS BIGINT) AS sum_val_e4
+    FROM sessions
+    WHERE user_id < 30
+    GROUP BY user_id, session_id
+    ORDER BY user_id, session_id
+    """
+
 _sql_query(
     "events_sessionize",
-    """
-    WITH flagged AS (
-        SELECT user_id, ts, event_id, value,
-               CASE WHEN lag(ts) OVER w IS NULL
-                         OR ts > lag(ts) OVER w + INTERVAL 30 MINUTE
-                    THEN 1 ELSE 0 END AS new_sess
-        FROM events
-        WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-    ),
-    sessions AS (
-        SELECT user_id, ts, value,
-               CAST(sum(new_sess) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS BIGINT) AS session_id
-        FROM flagged
-    )
-    SELECT user_id, session_id, count(*) AS n_events,
-           (unix_micros(max(ts)) - unix_micros(min(ts))) div 1000000 AS dur_s,
-           CAST(sum(cast(floor(value * 10000 + 0.5) AS BIGINT)) AS BIGINT) AS sum_val_e4
-    FROM sessions
-    WHERE user_id < 30
-    GROUP BY user_id, session_id
-    ORDER BY user_id, session_id
-    """,
-    oracle="""
-    WITH flagged AS (
-        SELECT user_id, ts, event_id, value,
-               CASE WHEN lag(ts) OVER w IS NULL
-                         OR ts > lag(ts) OVER w + INTERVAL 30 MINUTE
-                    THEN 1 ELSE 0 END AS new_sess
-        FROM events
-        WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-    ),
-    sessions AS (
-        SELECT user_id, ts, value,
-               CAST(sum(new_sess) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS BIGINT) AS session_id
-        FROM flagged
-    )
-    SELECT user_id, session_id, count(*) AS n_events,
-           (epoch_us(max(ts)) - epoch_us(min(ts))) // 1000000 AS dur_s,
-           CAST(sum(cast(floor(value * 10000 + 0.5) AS BIGINT)) AS BIGINT) AS sum_val_e4
-    FROM sessions
-    WHERE user_id < 30
-    GROUP BY user_id, session_id
-    ORDER BY user_id, session_id
-    """,
+    *_epoch_dialects(_SESSIONIZE_SQL),
     tags=("events", "session"),
     bench=True,
 )
@@ -233,20 +216,8 @@ def events_streaming_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "events_streaming_sessions",
-    oracle="""
-    WITH flagged AS (
-        SELECT user_id, ts, event_id, value,
-               CASE WHEN lag(ts) OVER w IS NULL
-                         OR ts > lag(ts) OVER w + INTERVAL 30 MINUTE
-                    THEN 1 ELSE 0 END AS new_sess
-        FROM events
-        WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-    ),
-    sessions AS (
-        SELECT user_id, ts, value,
-               CAST(sum(new_sess) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS BIGINT) AS session_id
-        FROM flagged
-    )
+    oracle=_SESSIONS_SQL
+    + """
     SELECT user_id, min(ts) AS sess_start, count(*) AS n_events,
            CAST(sum(cast(floor(value * 10000 + 0.5) AS BIGINT)) AS BIGINT) AS sum_val_e4
     FROM sessions
@@ -317,52 +288,37 @@ def events_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 #     tiny (one row per bucket) and broadcasts; the fact is touched once
 #     by the bucket aggregation.
 
+_GAP_FILL_SQL = """
+    WITH bounds AS (
+        SELECT date_trunc('hour', min(ts)) AS t0, date_trunc('hour', max(ts)) AS t1
+        FROM events WHERE event_type = 'click'
+    ),
+    slots AS (
+        SELECT {spine} AS slot FROM bounds
+    ),
+    hourly AS (
+        SELECT date_trunc('hour', ts) AS slot, count(*) AS n,
+               CAST(sum(cast(floor(value * 10000 + 0.5) AS BIGINT)) AS BIGINT) AS sum_val_e4
+        FROM events WHERE event_type = 'click'
+        GROUP BY date_trunc('hour', ts)
+    )
+    SELECT s.slot, coalesce(h.n, 0) AS n,
+           {locf} OVER (
+               ORDER BY s.slot ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
+           ) AS locf_sum_e4,
+           h.sum_val_e4 IS NULL AS gap
+    FROM slots s LEFT JOIN hourly h ON s.slot = h.slot
+    ORDER BY s.slot
+    """
+
 _sql_query(
     "events_gap_fill",
-    """
-    WITH bounds AS (
-        SELECT date_trunc('hour', min(ts)) AS t0, date_trunc('hour', max(ts)) AS t1
-        FROM events WHERE event_type = 'click'
+    _GAP_FILL_SQL.format(
+        spine="explode(sequence(t0, t1, interval 1 hour))", locf="last_value(h.sum_val_e4) IGNORE NULLS"
     ),
-    slots AS (
-        SELECT explode(sequence(t0, t1, interval 1 hour)) AS slot FROM bounds
+    oracle=_GAP_FILL_SQL.format(
+        spine="unnest(generate_series(t0, t1, INTERVAL 1 HOUR))", locf="last_value(h.sum_val_e4 IGNORE NULLS)"
     ),
-    hourly AS (
-        SELECT date_trunc('hour', ts) AS slot, count(*) AS n,
-               CAST(sum(cast(floor(value * 10000 + 0.5) AS BIGINT)) AS BIGINT) AS sum_val_e4
-        FROM events WHERE event_type = 'click'
-        GROUP BY date_trunc('hour', ts)
-    )
-    SELECT s.slot, coalesce(h.n, 0) AS n,
-           last_value(h.sum_val_e4) IGNORE NULLS OVER (
-               ORDER BY s.slot ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
-           ) AS locf_sum_e4,
-           h.sum_val_e4 IS NULL AS gap
-    FROM slots s LEFT JOIN hourly h ON s.slot = h.slot
-    ORDER BY s.slot
-    """,
-    oracle="""
-    WITH bounds AS (
-        SELECT date_trunc('hour', min(ts)) AS t0, date_trunc('hour', max(ts)) AS t1
-        FROM events WHERE event_type = 'click'
-    ),
-    slots AS (
-        SELECT unnest(generate_series(t0, t1, INTERVAL 1 HOUR)) AS slot FROM bounds
-    ),
-    hourly AS (
-        SELECT date_trunc('hour', ts) AS slot, count(*) AS n,
-               CAST(sum(cast(floor(value * 10000 + 0.5) AS BIGINT)) AS BIGINT) AS sum_val_e4
-        FROM events WHERE event_type = 'click'
-        GROUP BY date_trunc('hour', ts)
-    )
-    SELECT s.slot, coalesce(h.n, 0) AS n,
-           last_value(h.sum_val_e4 IGNORE NULLS) OVER (
-               ORDER BY s.slot ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
-           ) AS locf_sum_e4,
-           h.sum_val_e4 IS NULL AS gap
-    FROM slots s LEFT JOIN hourly h ON s.slot = h.slot
-    ORDER BY s.slot
-    """,
     tags=("events", "timeseries", "gapfill"),
     doc="Gap-filled hourly rollup with forward fill (time_bucket_gapfill + "
     "locf): generated time spine LEFT JOIN bucket aggregates, IGNORE NULLS "
@@ -525,42 +481,28 @@ _sql_query(
 # one broadcastable cohort join back (cohort table is |users|, bounded by
 # the entity dimension, not the event stream), final rollup — the event
 # stream is scanned once and never self-joined.
+_RETENTION_SQL = """
+    WITH activity AS (
+        SELECT DISTINCT user_id,
+               CAST({wk} AS BIGINT) AS wk
+        FROM events
+    ),
+    cohorts AS (
+        SELECT user_id, min(wk) AS cohort_wk FROM activity GROUP BY user_id
+    )
+    SELECT c.cohort_wk,
+           CAST(a.wk - c.cohort_wk AS BIGINT) AS week_offset,
+           CAST(count(DISTINCT a.user_id) AS BIGINT) AS n_active
+    FROM activity a JOIN cohorts c ON a.user_id = c.user_id
+    WHERE a.wk - c.cohort_wk <= 4
+    GROUP BY c.cohort_wk, a.wk - c.cohort_wk
+    ORDER BY cohort_wk, week_offset
+    """
+
 _sql_query(
     "events_retention_cohorts",
-    """
-    WITH activity AS (
-        SELECT DISTINCT user_id,
-               CAST(datediff(CAST(ts AS DATE), DATE '1970-01-05') DIV 7 AS BIGINT) AS wk
-        FROM events
-    ),
-    cohorts AS (
-        SELECT user_id, min(wk) AS cohort_wk FROM activity GROUP BY user_id
-    )
-    SELECT c.cohort_wk,
-           CAST(a.wk - c.cohort_wk AS BIGINT) AS week_offset,
-           CAST(count(DISTINCT a.user_id) AS BIGINT) AS n_active
-    FROM activity a JOIN cohorts c ON a.user_id = c.user_id
-    WHERE a.wk - c.cohort_wk <= 4
-    GROUP BY c.cohort_wk, a.wk - c.cohort_wk
-    ORDER BY cohort_wk, week_offset
-    """,
-    oracle="""
-    WITH activity AS (
-        SELECT DISTINCT user_id,
-               CAST(date_diff('day', DATE '1970-01-05', CAST(ts AS DATE)) // 7 AS BIGINT) AS wk
-        FROM events
-    ),
-    cohorts AS (
-        SELECT user_id, min(wk) AS cohort_wk FROM activity GROUP BY user_id
-    )
-    SELECT c.cohort_wk,
-           CAST(a.wk - c.cohort_wk AS BIGINT) AS week_offset,
-           CAST(count(DISTINCT a.user_id) AS BIGINT) AS n_active
-    FROM activity a JOIN cohorts c ON a.user_id = c.user_id
-    WHERE a.wk - c.cohort_wk <= 4
-    GROUP BY c.cohort_wk, a.wk - c.cohort_wk
-    ORDER BY cohort_wk, week_offset
-    """,
+    _RETENTION_SQL.format(wk="datediff(CAST(ts AS DATE), DATE '1970-01-05') DIV 7"),
+    oracle=_RETENTION_SQL.format(wk="date_diff('day', DATE '1970-01-05', CAST(ts AS DATE)) // 7"),
     tags=("events", "retention", "cohort"),
     doc="Weekly retention cohorts: first-seen-week bucketing + distinct "
     "active users per week offset; epoch-week arithmetic keeps both "
@@ -742,84 +684,48 @@ _sql_query(
 #     coverage is a plain per-island aggregate.  All arithmetic in exact
 #     integer epoch seconds.
 
+_INTERVAL_UNION_SQL = """
+    WITH iv AS (
+        SELECT user_id, event_id,
+               {us}(ts) {div} 1000000 AS s,
+               {us}(ts) {div} 1000000 + 60 + event_id % 240 AS e
+        FROM events WHERE user_id < 30
+    ),
+    flagged AS (
+        SELECT user_id, event_id, s, e,
+               CASE WHEN max(e) OVER (PARTITION BY user_id ORDER BY s, event_id
+                                      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
+                         IS NULL
+                         OR s > max(e) OVER (PARTITION BY user_id ORDER BY s, event_id
+                                             ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
+                    THEN 1 ELSE 0 END AS new_island
+        FROM iv
+    ),
+    islands AS (
+        SELECT user_id, s, e,
+               CAST(sum(new_island) OVER (PARTITION BY user_id ORDER BY s, event_id)
+                    AS BIGINT) AS island_id
+        FROM flagged
+    ),
+    merged AS (
+        SELECT user_id, island_id,
+               count(*) AS n_intervals,
+               min(s) AS island_start, max(e) AS island_end
+        FROM islands GROUP BY user_id, island_id
+    )
+    SELECT user_id,
+           CAST(sum(n_intervals) AS BIGINT) AS n_intervals,
+           CAST(count(*) AS BIGINT) AS n_islands,
+           CAST(sum(island_end - island_start) AS BIGINT) AS covered_s,
+           CAST(max(island_end) - min(island_start) AS BIGINT) AS span_s
+    FROM merged
+    GROUP BY user_id
+    ORDER BY user_id
+    """
+
 _sql_query(
     "events_interval_union",
-    """
-    WITH iv AS (
-        SELECT user_id, event_id,
-               unix_micros(ts) div 1000000 AS s,
-               unix_micros(ts) div 1000000 + 60 + event_id % 240 AS e
-        FROM events WHERE user_id < 30
-    ),
-    flagged AS (
-        SELECT user_id, event_id, s, e,
-               CASE WHEN max(e) OVER (PARTITION BY user_id ORDER BY s, event_id
-                                      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
-                         IS NULL
-                         OR s > max(e) OVER (PARTITION BY user_id ORDER BY s, event_id
-                                             ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
-                    THEN 1 ELSE 0 END AS new_island
-        FROM iv
-    ),
-    islands AS (
-        SELECT user_id, s, e,
-               CAST(sum(new_island) OVER (PARTITION BY user_id ORDER BY s, event_id)
-                    AS BIGINT) AS island_id
-        FROM flagged
-    ),
-    merged AS (
-        SELECT user_id, island_id,
-               count(*) AS n_intervals,
-               min(s) AS island_start, max(e) AS island_end
-        FROM islands GROUP BY user_id, island_id
-    )
-    SELECT user_id,
-           CAST(sum(n_intervals) AS BIGINT) AS n_intervals,
-           CAST(count(*) AS BIGINT) AS n_islands,
-           CAST(sum(island_end - island_start) AS BIGINT) AS covered_s,
-           CAST(max(island_end) - min(island_start) AS BIGINT) AS span_s
-    FROM merged
-    GROUP BY user_id
-    ORDER BY user_id
-    """,
-    oracle="""
-    WITH iv AS (
-        SELECT user_id, event_id,
-               epoch_us(ts) // 1000000 AS s,
-               epoch_us(ts) // 1000000 + 60 + event_id % 240 AS e
-        FROM events WHERE user_id < 30
-    ),
-    flagged AS (
-        SELECT user_id, event_id, s, e,
-               CASE WHEN max(e) OVER (PARTITION BY user_id ORDER BY s, event_id
-                                      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
-                         IS NULL
-                         OR s > max(e) OVER (PARTITION BY user_id ORDER BY s, event_id
-                                             ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
-                    THEN 1 ELSE 0 END AS new_island
-        FROM iv
-    ),
-    islands AS (
-        SELECT user_id, s, e,
-               CAST(sum(new_island) OVER (PARTITION BY user_id ORDER BY s, event_id)
-                    AS BIGINT) AS island_id
-        FROM flagged
-    ),
-    merged AS (
-        SELECT user_id, island_id,
-               count(*) AS n_intervals,
-               min(s) AS island_start, max(e) AS island_end
-        FROM islands GROUP BY user_id, island_id
-    )
-    SELECT user_id,
-           CAST(sum(n_intervals) AS BIGINT) AS n_intervals,
-           CAST(count(*) AS BIGINT) AS n_islands,
-           CAST(sum(island_end - island_start) AS BIGINT) AS covered_s,
-           CAST(max(island_end) - min(island_start) AS BIGINT) AS span_s
-    FROM merged
-    GROUP BY user_id
-    ORDER BY user_id
-    """,
+    *_epoch_dialects(_INTERVAL_UNION_SQL),
     tags=("events", "intervals"),
 )
 
@@ -839,82 +745,47 @@ _sql_query(
 # map-side-combine shape, not a window over the corpus.  The total order
 # is the exact-integer ord = unix_micros(ts)*1000 + event_id%1000 (ties
 # on ts broken by event id, same arithmetic both engines).
+_PATTERN_MATCH_SQL = """
+    WITH ev AS (
+        SELECT user_id, event_id, event_type, ts,
+               {us}(ts) * 1000 + event_id % 1000 AS ord
+        FROM events
+    ),
+    p AS (SELECT * FROM ev WHERE event_type = 'purchase'),
+    c AS (SELECT * FROM ev WHERE event_type = 'click'),
+    v AS (SELECT * FROM ev WHERE event_type = 'view'),
+    err AS (SELECT * FROM ev WHERE event_type = 'error'),
+    pc AS (
+        SELECT p.user_id, p.event_id AS purchase_id, p.ord AS pord, p.ts AS pts,
+               max(c.ord) AS cord
+        FROM p JOIN c ON c.user_id = p.user_id AND c.ord < p.ord
+        GROUP BY p.user_id, p.event_id, p.ord, p.ts
+    ),
+    pcv AS (
+        SELECT pc.user_id, pc.purchase_id, pc.pord, pc.pts, pc.cord,
+               max(v.ord) AS vord, max_by(v.ts, v.ord) AS vts
+        FROM pc JOIN v ON v.user_id = pc.user_id AND v.ord < pc.cord
+        GROUP BY pc.user_id, pc.purchase_id, pc.pord, pc.pts, pc.cord
+    ),
+    windowed AS (
+        SELECT * FROM pcv
+        WHERE {us}(pts) - {us}(vts) <= 172800000000
+    ),
+    matched AS (
+        SELECT w.* FROM windowed w
+        WHERE NOT EXISTS (
+            SELECT 1 FROM err e
+            WHERE e.user_id = w.user_id AND e.ord > w.vord AND e.ord < w.pord
+        )
+    )
+    SELECT user_id, CAST(purchase_id AS BIGINT) AS purchase_id,
+           ({us}(pts) - {us}(vts)) {div} 1000000 AS view_to_purchase_secs
+    FROM matched ORDER BY user_id, purchase_id
+    """
+
 _sql_query(
     "events_pattern_match",
-    """
-    WITH ev AS (
-        SELECT user_id, event_id, event_type, ts,
-               unix_micros(ts) * 1000 + event_id % 1000 AS ord
-        FROM events
-    ),
-    p AS (SELECT * FROM ev WHERE event_type = 'purchase'),
-    c AS (SELECT * FROM ev WHERE event_type = 'click'),
-    v AS (SELECT * FROM ev WHERE event_type = 'view'),
-    err AS (SELECT * FROM ev WHERE event_type = 'error'),
-    pc AS (
-        SELECT p.user_id, p.event_id AS purchase_id, p.ord AS pord, p.ts AS pts,
-               max(c.ord) AS cord
-        FROM p JOIN c ON c.user_id = p.user_id AND c.ord < p.ord
-        GROUP BY p.user_id, p.event_id, p.ord, p.ts
-    ),
-    pcv AS (
-        SELECT pc.user_id, pc.purchase_id, pc.pord, pc.pts, pc.cord,
-               max(v.ord) AS vord, max_by(v.ts, v.ord) AS vts
-        FROM pc JOIN v ON v.user_id = pc.user_id AND v.ord < pc.cord
-        GROUP BY pc.user_id, pc.purchase_id, pc.pord, pc.pts, pc.cord
-    ),
-    windowed AS (
-        SELECT * FROM pcv
-        WHERE unix_micros(pts) - unix_micros(vts) <= 172800000000
-    ),
-    matched AS (
-        SELECT w.* FROM windowed w
-        WHERE NOT EXISTS (
-            SELECT 1 FROM err e
-            WHERE e.user_id = w.user_id AND e.ord > w.vord AND e.ord < w.pord
-        )
-    )
-    SELECT user_id, CAST(purchase_id AS BIGINT) AS purchase_id,
-           (unix_micros(pts) - unix_micros(vts)) DIV 1000000 AS view_to_purchase_secs
-    FROM matched ORDER BY user_id, purchase_id
-    """,
-    oracle="""
-    WITH ev AS (
-        SELECT user_id, event_id, event_type, ts,
-               epoch_us(ts) * 1000 + event_id % 1000 AS ord
-        FROM events
-    ),
-    p AS (SELECT * FROM ev WHERE event_type = 'purchase'),
-    c AS (SELECT * FROM ev WHERE event_type = 'click'),
-    v AS (SELECT * FROM ev WHERE event_type = 'view'),
-    err AS (SELECT * FROM ev WHERE event_type = 'error'),
-    pc AS (
-        SELECT p.user_id, p.event_id AS purchase_id, p.ord AS pord, p.ts AS pts,
-               max(c.ord) AS cord
-        FROM p JOIN c ON c.user_id = p.user_id AND c.ord < p.ord
-        GROUP BY p.user_id, p.event_id, p.ord, p.ts
-    ),
-    pcv AS (
-        SELECT pc.user_id, pc.purchase_id, pc.pord, pc.pts, pc.cord,
-               max(v.ord) AS vord, max_by(v.ts, v.ord) AS vts
-        FROM pc JOIN v ON v.user_id = pc.user_id AND v.ord < pc.cord
-        GROUP BY pc.user_id, pc.purchase_id, pc.pord, pc.pts, pc.cord
-    ),
-    windowed AS (
-        SELECT * FROM pcv
-        WHERE epoch_us(pts) - epoch_us(vts) <= 172800000000
-    ),
-    matched AS (
-        SELECT w.* FROM windowed w
-        WHERE NOT EXISTS (
-            SELECT 1 FROM err e
-            WHERE e.user_id = w.user_id AND e.ord > w.vord AND e.ord < w.pord
-        )
-    )
-    SELECT user_id, CAST(purchase_id AS BIGINT) AS purchase_id,
-           (epoch_us(pts) - epoch_us(vts)) // 1000000 AS view_to_purchase_secs
-    FROM matched ORDER BY user_id, purchase_id
-    """,
+    *_epoch_dialects(_PATTERN_MATCH_SQL, "DIV"),
     tags=("events", "pattern"),
     bench=True,
     doc="Row-pattern detection (MATCH_RECOGNIZE role): latest-click-"
@@ -937,50 +808,31 @@ _sql_query(
 # epoch_us // 1e6) — DuckDB's epoch(ts)::BIGINT ROUNDS the fractional
 # part while Spark's cast truncates, a cross-engine trap for any
 # timestamp with sub-second precision.
+_RATE_LIMIT_SQL = """
+    WITH ev AS (
+        SELECT user_id, event_id, {us}(ts) {div} 1000000 AS sec
+        FROM events
+    ),
+    counted AS (
+        SELECT user_id, event_id, sec,
+               count(*) OVER (PARTITION BY user_id ORDER BY sec
+                              RANGE BETWEEN 86400 PRECEDING AND CURRENT ROW) AS cnt_24h
+        FROM ev
+    ),
+    flagged AS (
+        SELECT user_id, event_id, sec, cnt_24h
+        FROM counted WHERE cnt_24h >= 8
+    )
+    SELECT user_id,
+           CAST(count(*) AS BIGINT) AS n_violations,
+           CAST(min(sec) AS BIGINT) AS first_violation_sec,
+           CAST(max(cnt_24h) AS BIGINT) AS peak_rate
+    FROM flagged GROUP BY user_id ORDER BY user_id
+    """
+
 _sql_query(
     "events_rate_limit_audit",
-    """
-    WITH ev AS (
-        SELECT user_id, event_id, unix_micros(ts) DIV 1000000 AS sec
-        FROM events
-    ),
-    counted AS (
-        SELECT user_id, event_id, sec,
-               count(*) OVER (PARTITION BY user_id ORDER BY sec
-                              RANGE BETWEEN 86400 PRECEDING AND CURRENT ROW) AS cnt_24h
-        FROM ev
-    ),
-    flagged AS (
-        SELECT user_id, event_id, sec, cnt_24h
-        FROM counted WHERE cnt_24h >= 8
-    )
-    SELECT user_id,
-           CAST(count(*) AS BIGINT) AS n_violations,
-           CAST(min(sec) AS BIGINT) AS first_violation_sec,
-           CAST(max(cnt_24h) AS BIGINT) AS peak_rate
-    FROM flagged GROUP BY user_id ORDER BY user_id
-    """,
-    oracle="""
-    WITH ev AS (
-        SELECT user_id, event_id, epoch_us(ts) // 1000000 AS sec
-        FROM events
-    ),
-    counted AS (
-        SELECT user_id, event_id, sec,
-               count(*) OVER (PARTITION BY user_id ORDER BY sec
-                              RANGE BETWEEN 86400 PRECEDING AND CURRENT ROW) AS cnt_24h
-        FROM ev
-    ),
-    flagged AS (
-        SELECT user_id, event_id, sec, cnt_24h
-        FROM counted WHERE cnt_24h >= 8
-    )
-    SELECT user_id,
-           CAST(count(*) AS BIGINT) AS n_violations,
-           CAST(min(sec) AS BIGINT) AS first_violation_sec,
-           CAST(max(cnt_24h) AS BIGINT) AS peak_rate
-    FROM flagged GROUP BY user_id ORDER BY user_id
-    """,
+    *_epoch_dialects(_RATE_LIMIT_SQL, "DIV"),
     tags=("events", "rate"),
     doc="Trailing-24h rate-limit audit: RANGE frame over integer epoch "
     "seconds (O(1) state per row in sort order — never a time-band "
@@ -1004,27 +856,6 @@ _sql_query(
 _sql_query(
     "events_trending_topk",
     """
-    WITH wc AS (
-        SELECT date_trunc('hour', ts) AS win_start, event_type, count(*) AS n
-        FROM events GROUP BY 1, 2
-    ),
-    rk AS (
-        SELECT win_start, event_type, n,
-               row_number() OVER (PARTITION BY win_start
-                                  ORDER BY n DESC, event_type) AS rk
-        FROM wc
-    )
-    SELECT c.win_start, c.event_type, CAST(c.n AS BIGINT) AS n,
-           CAST(c.rk AS BIGINT) AS rk,
-           CAST(p.rk AS BIGINT) AS prev_rk,
-           CAST(p.rk - c.rk AS BIGINT) AS delta
-    FROM rk c
-    LEFT JOIN rk p ON p.event_type = c.event_type
-                  AND p.win_start = c.win_start - INTERVAL 1 HOUR
-    WHERE c.rk <= 3
-    ORDER BY c.win_start, c.rk
-    """,
-    oracle="""
     WITH wc AS (
         SELECT date_trunc('hour', ts) AS win_start, event_type, count(*) AS n
         FROM events GROUP BY 1, 2
@@ -1130,46 +961,29 @@ _sql_query(
 # rate emitted as numerator/denominator products so no negative value
 # meets division.  Scale shape: ONE user-level aggregate (map-side
 # combined) + a 2-row variant rollup; the lift join is 1x1.
+_AB_TEST_SQL = """
+    WITH u AS (
+        SELECT user_id, user_id % 2 AS variant,
+               max(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS converted
+        FROM events GROUP BY user_id
+    ),
+    v AS (
+        SELECT variant, count(*) AS n_users, sum(converted) AS n_converted
+        FROM u GROUP BY variant
+    )
+    SELECT CAST(t.variant AS BIGINT) AS variant,
+           CAST(t.n_users AS BIGINT) AS n_users,
+           CAST(t.n_converted AS BIGINT) AS n_converted,
+           CAST((t.n_converted * 10000) {div} t.n_users AS BIGINT) AS conv_bp,
+           CAST(t.n_converted * c.n_users AS BIGINT) AS lift_num,
+           CAST(c.n_converted * t.n_users AS BIGINT) AS lift_den
+    FROM v t CROSS JOIN (SELECT * FROM v WHERE variant = 0) c
+    ORDER BY variant
+    """
+
 _sql_query(
     "events_ab_test",
-    """
-    WITH u AS (
-        SELECT user_id, user_id % 2 AS variant,
-               max(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS converted
-        FROM events GROUP BY user_id
-    ),
-    v AS (
-        SELECT variant, count(*) AS n_users, sum(converted) AS n_converted
-        FROM u GROUP BY variant
-    )
-    SELECT CAST(t.variant AS BIGINT) AS variant,
-           CAST(t.n_users AS BIGINT) AS n_users,
-           CAST(t.n_converted AS BIGINT) AS n_converted,
-           CAST((t.n_converted * 10000) DIV t.n_users AS BIGINT) AS conv_bp,
-           CAST(t.n_converted * c.n_users AS BIGINT) AS lift_num,
-           CAST(c.n_converted * t.n_users AS BIGINT) AS lift_den
-    FROM v t CROSS JOIN (SELECT * FROM v WHERE variant = 0) c
-    ORDER BY variant
-    """,
-    oracle="""
-    WITH u AS (
-        SELECT user_id, user_id % 2 AS variant,
-               max(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS converted
-        FROM events GROUP BY user_id
-    ),
-    v AS (
-        SELECT variant, count(*) AS n_users, sum(converted) AS n_converted
-        FROM u GROUP BY variant
-    )
-    SELECT CAST(t.variant AS BIGINT) AS variant,
-           CAST(t.n_users AS BIGINT) AS n_users,
-           CAST(t.n_converted AS BIGINT) AS n_converted,
-           CAST((t.n_converted * 10000) // t.n_users AS BIGINT) AS conv_bp,
-           CAST(t.n_converted * c.n_users AS BIGINT) AS lift_num,
-           CAST(c.n_converted * t.n_users AS BIGINT) AS lift_den
-    FROM v t CROSS JOIN (SELECT * FROM v WHERE variant = 0) c
-    ORDER BY variant
-    """,
+    *_epoch_dialects(_AB_TEST_SQL, "DIV"),
     tags=("events", "experiment"),
     doc="A/B experiment readout: deterministic user split, per-variant "
     "conversion in basis points, lift vs control emitted as exact "
@@ -1254,44 +1068,28 @@ _sql_query(
 # exchange + per-shard sort for the window, then a shard rollup whose
 # map-side partials leave <= 8 rows per task for the second exchange.
 # All outputs are exact BIGINT microsecond arithmetic.
+_LATENESS_SQL = """
+    WITH a AS (
+        SELECT user_id % 8 AS shard, {us}(ts) AS tus,
+               max({us}(ts)) OVER (
+                   PARTITION BY user_id % 8
+                   ORDER BY date_trunc('minute', ts), user_id, event_id
+                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS wm
+        FROM events
+    )
+    SELECT CAST(shard AS BIGINT) AS shard,
+           CAST(count(*) AS BIGINT) AS n_events,
+           CAST(sum(CASE WHEN wm > tus THEN 1 ELSE 0 END) AS BIGINT) AS n_out_of_order,
+           CAST(max(wm - tus) AS BIGINT) AS max_lateness_us,
+           CAST(sum(wm - tus) AS BIGINT) AS sum_lateness_us,
+           CAST(sum(CASE WHEN wm - tus > 10000000 THEN 1 ELSE 0 END) AS BIGINT) AS n_dropped_wm_10s,
+           CAST(sum(CASE WHEN wm - tus > 60000000 THEN 1 ELSE 0 END) AS BIGINT) AS n_dropped_wm_60s
+    FROM a GROUP BY shard ORDER BY shard
+    """
+
 _sql_query(
     "events_lateness_audit",
-    """
-    WITH a AS (
-        SELECT user_id % 8 AS shard, unix_micros(ts) AS tus,
-               max(unix_micros(ts)) OVER (
-                   PARTITION BY user_id % 8
-                   ORDER BY date_trunc('minute', ts), user_id, event_id
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS wm
-        FROM events
-    )
-    SELECT CAST(shard AS BIGINT) AS shard,
-           CAST(count(*) AS BIGINT) AS n_events,
-           CAST(sum(CASE WHEN wm > tus THEN 1 ELSE 0 END) AS BIGINT) AS n_out_of_order,
-           CAST(max(wm - tus) AS BIGINT) AS max_lateness_us,
-           CAST(sum(wm - tus) AS BIGINT) AS sum_lateness_us,
-           CAST(sum(CASE WHEN wm - tus > 10000000 THEN 1 ELSE 0 END) AS BIGINT) AS n_dropped_wm_10s,
-           CAST(sum(CASE WHEN wm - tus > 60000000 THEN 1 ELSE 0 END) AS BIGINT) AS n_dropped_wm_60s
-    FROM a GROUP BY shard ORDER BY shard
-    """,
-    oracle="""
-    WITH a AS (
-        SELECT user_id % 8 AS shard, epoch_us(ts) AS tus,
-               max(epoch_us(ts)) OVER (
-                   PARTITION BY user_id % 8
-                   ORDER BY date_trunc('minute', ts), user_id, event_id
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS wm
-        FROM events
-    )
-    SELECT CAST(shard AS BIGINT) AS shard,
-           CAST(count(*) AS BIGINT) AS n_events,
-           CAST(sum(CASE WHEN wm > tus THEN 1 ELSE 0 END) AS BIGINT) AS n_out_of_order,
-           CAST(max(wm - tus) AS BIGINT) AS max_lateness_us,
-           CAST(sum(wm - tus) AS BIGINT) AS sum_lateness_us,
-           CAST(sum(CASE WHEN wm - tus > 10000000 THEN 1 ELSE 0 END) AS BIGINT) AS n_dropped_wm_10s,
-           CAST(sum(CASE WHEN wm - tus > 60000000 THEN 1 ELSE 0 END) AS BIGINT) AS n_dropped_wm_60s
-    FROM a GROUP BY shard ORDER BY shard
-    """,
+    *_epoch_dialects(_LATENESS_SQL),
     tags=("events", "streaming", "audit"),
     doc="Out-of-order arrival audit per topic shard (producer per-minute "
     "batch arrival model): disorder count, max/total lateness vs the "

@@ -13,56 +13,46 @@ from __future__ import annotations
 from sensql_presto_spark.queries.registry import register
 from sensql_presto_spark.queries.relational import _sql_query
 
+
+def _presto_sql(spark, sf_dir, text):
+    """``catalog.sql`` with the Presto-name function surface registered."""
+    from sensql_presto_spark import catalog
+    from sensql_presto_spark.functions import register_all
+
+    register_all(spark)
+    return catalog.sql(spark, sf_dir, text)
+
+
 # --- strings (StringFunctions.java, 44 fns) ---------------------------------
+
+_STRING_BASIC_SQL = """
+    SELECT c_custkey,
+           length(c_name) AS name_len,
+           upper(c_mktsegment) AS seg_up,
+           lower(c_name) AS name_lo,
+           substr(c_name, 10, 5) AS sub5,
+           lpad(c_mktsegment, 12, '*') AS lp,
+           rpad(c_mktsegment, 12, '.') AS rp,
+           reverse(c_mktsegment) AS rev,
+           replace(c_name, 'Customer#', 'C') AS repl,
+           split_part(c_name, '#', 2) AS num_part,
+           {pos}(c_name, '#') AS hash_pos,
+           concat_ws('-', c_mktsegment, c_name) AS joined,
+           left(c_name, 4) AS l4,
+           right(c_name, 3) AS r3,
+           repeat('ab', 3) AS rep,
+           translate(c_mktsegment, 'AEIOU', 'aeiou') AS trans,
+           trim(concat(' ', c_mktsegment, ' ')) AS trimmed,
+           {starts}(c_name, 'Customer') AS sw,
+           {ends}(c_name, '1') AS ew
+    FROM customer WHERE c_custkey < 200
+    ORDER BY c_custkey
+    """
 
 _sql_query(
     "fn_string_basic",
-    """
-    SELECT c_custkey,
-           length(c_name) AS name_len,
-           upper(c_mktsegment) AS seg_up,
-           lower(c_name) AS name_lo,
-           substr(c_name, 10, 5) AS sub5,
-           lpad(c_mktsegment, 12, '*') AS lp,
-           rpad(c_mktsegment, 12, '.') AS rp,
-           reverse(c_mktsegment) AS rev,
-           replace(c_name, 'Customer#', 'C') AS repl,
-           split_part(c_name, '#', 2) AS num_part,
-           instr(c_name, '#') AS hash_pos,
-           concat_ws('-', c_mktsegment, c_name) AS joined,
-           left(c_name, 4) AS l4,
-           right(c_name, 3) AS r3,
-           repeat('ab', 3) AS rep,
-           translate(c_mktsegment, 'AEIOU', 'aeiou') AS trans,
-           trim(concat(' ', c_mktsegment, ' ')) AS trimmed,
-           startswith(c_name, 'Customer') AS sw,
-           endswith(c_name, '1') AS ew
-    FROM customer WHERE c_custkey < 200
-    ORDER BY c_custkey
-    """,
-    oracle="""
-    SELECT c_custkey,
-           length(c_name) AS name_len,
-           upper(c_mktsegment) AS seg_up,
-           lower(c_name) AS name_lo,
-           substr(c_name, 10, 5) AS sub5,
-           lpad(c_mktsegment, 12, '*') AS lp,
-           rpad(c_mktsegment, 12, '.') AS rp,
-           reverse(c_mktsegment) AS rev,
-           replace(c_name, 'Customer#', 'C') AS repl,
-           split_part(c_name, '#', 2) AS num_part,
-           strpos(c_name, '#') AS hash_pos,
-           concat_ws('-', c_mktsegment, c_name) AS joined,
-           left(c_name, 4) AS l4,
-           right(c_name, 3) AS r3,
-           repeat('ab', 3) AS rep,
-           translate(c_mktsegment, 'AEIOU', 'aeiou') AS trans,
-           trim(concat(' ', c_mktsegment, ' ')) AS trimmed,
-           starts_with(c_name, 'Customer') AS sw,
-           ends_with(c_name, '1') AS ew
-    FROM customer WHERE c_custkey < 200
-    ORDER BY c_custkey
-    """,
+    _STRING_BASIC_SQL.format(pos="instr", starts="startswith", ends="endswith"),
+    oracle=_STRING_BASIC_SQL.format(pos="strpos", starts="starts_with", ends="ends_with"),
     tags=("functions", "string"),
 )
 
@@ -422,19 +412,6 @@ _sql_query(
     FROM orders WHERE o_orderkey < 400
     ORDER BY o_orderkey
     """,
-    oracle="""
-    SELECT o_orderkey,
-           CASE o_orderstatus WHEN 'O' THEN 'open' WHEN 'F' THEN 'final' ELSE 'other' END AS st,
-           CASE WHEN o_totalprice > 200000 THEN 'big' WHEN o_totalprice > 50000 THEN 'mid' ELSE 'small' END AS bucket,
-           if(o_orderpriority = '1-URGENT', 1, 0) AS urgent,
-           nullif(o_orderstatus, 'P') AS st_or_null,
-           coalesce(nullif(o_orderstatus, 'P'), 'pending') AS st_filled,
-           try_cast(split_part(o_orderpriority, '-', 1) AS INT) AS prio_num,
-           try_cast(o_orderpriority AS INT) AS bad_cast,
-           ifnull(nullif(o_orderstatus, 'P'), 'X') AS nvl_like
-    FROM orders WHERE o_orderkey < 400
-    ORDER BY o_orderkey
-    """,
     tags=("functions", "conditional"),
 )
 
@@ -515,11 +492,7 @@ _sql_query(
     "against the reference's published vectors and injectivity on documents.",
 )
 def fn_hash_presto_ports(spark, sf_dir):
-    from sensql_presto_spark import catalog
-    from sensql_presto_spark.functions import register_all
-
-    register_all(spark)
-    return catalog.sql(
+    return _presto_sql(
         spark,
         sf_dir,
         """
@@ -638,11 +611,7 @@ def fn_datetime_presto_formats(spark, sf_dir):
     doc="End-to-end exercise of the Presto-name compat surface (SQL temp fns + pandas UDFs).",
 )
 def fn_presto_compat(spark, sf_dir):
-    from sensql_presto_spark import catalog
-    from sensql_presto_spark.functions import register_all
-
-    register_all(spark)
-    return catalog.sql(
+    return _presto_sql(
         spark,
         sf_dir,
         """
@@ -838,11 +807,7 @@ def fn_ip(spark, sf_dir):
     "strrpos, base64url, big-endian codecs, json scalar probes, trim_array.",
 )
 def fn_presto_compat2(spark, sf_dir):
-    from sensql_presto_spark import catalog
-    from sensql_presto_spark.functions import register_all
-
-    register_all(spark)
-    return catalog.sql(
+    return _presto_sql(
         spark,
         sf_dir,
         """
@@ -924,11 +889,7 @@ def fn_presto_compat2(spark, sf_dir):
     " split_to_map, key_sampling_percent.",
 )
 def fn_presto_compat3(spark, sf_dir):
-    from sensql_presto_spark import catalog
-    from sensql_presto_spark.functions import register_all
-
-    register_all(spark)
-    return catalog.sql(
+    return _presto_sql(
         spark,
         sf_dir,
         """
@@ -1021,11 +982,7 @@ def fn_presto_compat3(spark, sf_dir):
     "bit-for-bit.",
 )
 def fn_color(spark, sf_dir):
-    from sensql_presto_spark import catalog
-    from sensql_presto_spark.functions import register_all
-
-    register_all(spark)
-    return catalog.sql(
+    return _presto_sql(
         spark,
         sf_dir,
         """

@@ -39,7 +39,7 @@ from pyspark.sql import functions as F
 from sensql_presto_spark import catalog
 from sensql_presto_spark.queries import vec
 from sensql_presto_spark.queries.registry import register
-from sensql_presto_spark.queries.relational import _sql_query
+from sensql_presto_spark.queries.relational import _epoch_dialects, _sql_query
 
 # ---------------------------------------------------------------------------
 # Deduplication
@@ -1037,6 +1037,15 @@ _DUCK_IVF_CENTROIDS = """
     ),
     cent AS (SELECT label AS c_id, list(m ORDER BY pos) AS cv FROM cpos GROUP BY label),"""
 
+# each query's cosine to the corpus vectors of its probed buckets, and its
+# 3 nearest
+_SPARK_IVF_TOP3 = f"""scored AS (
+        SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
+               {vec.dot('q.v', 'c.v', 'double')} / (q.nrm * c.nrm) AS cos
+        FROM q JOIN corpus c ON q.bucket = c.bucket AND q.vec_id <> c.vec_id
+    ),
+    {_topk_sql(3)}"""
+
 # IVF-style ANN: centroids = element-wise mean per label (deterministic
 # training), every vector assigned to its nearest centroid, queries probe
 # only their own bucket (nprobe=1). The scan is pruned to ~1/C of the
@@ -1058,12 +1067,7 @@ _sql_query(
     ),
     corpus AS (SELECT n.vec_id, n.v, n.nrm, a.bucket FROM n JOIN assign a ON n.vec_id = a.vec_id),
     q AS (SELECT * FROM corpus WHERE vec_id < 5),
-    scored AS (
-        SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-               {vec.dot('q.v', 'c.v', 'double')} / (q.nrm * c.nrm) AS cos
-        FROM q JOIN corpus c ON q.bucket = c.bucket AND q.vec_id <> c.vec_id
-    ),
-    {_topk_sql(3)}""",
+    {_SPARK_IVF_TOP3}""",
     oracle=f"""
     {_DUCK_IVF_CENTROIDS}
     assign AS (
@@ -1185,6 +1189,20 @@ _sql_query(
 # corpus vocabulary is synthetic so the realistic profiles mostly fire on
 # 'a'/'the' — the mechanism (per-profile hit counts + argmax with a
 # deterministic tie-break) is what's oracle-checked.
+# each document's argmax profile and its hit share; ``{ratio}`` divides by
+# the token count in the dialect's float division
+_LANG_PICK_SQL = """
+    SELECT doc_id, s_en, s_fr, s_de, s_es,
+           CASE WHEN greatest(s_en, s_fr, s_de, s_es) = 0 THEN 'und'
+                WHEN s_en >= greatest(s_fr, s_de, s_es) THEN 'en'
+                WHEN s_fr >= greatest(s_de, s_es) THEN 'fr'
+                WHEN s_de >= s_es THEN 'de'
+                ELSE 'es' END AS predicted,
+           round(greatest(s_en, s_fr, s_de, s_es) {ratio}, 6) AS confidence
+    FROM s
+    ORDER BY doc_id
+    """
+
 _sql_query(
     "text_lang_id",
     """
@@ -1197,16 +1215,8 @@ _sql_query(
                size(filter(toks, x -> array_contains(array('el','los','las','y','que'), x))) AS s_es
         FROM t
     )
-    SELECT doc_id, s_en, s_fr, s_de, s_es,
-           CASE WHEN greatest(s_en, s_fr, s_de, s_es) = 0 THEN 'und'
-                WHEN s_en >= greatest(s_fr, s_de, s_es) THEN 'en'
-                WHEN s_fr >= greatest(s_de, s_es) THEN 'fr'
-                WHEN s_de >= s_es THEN 'de'
-                ELSE 'es' END AS predicted,
-           round(greatest(s_en, s_fr, s_de, s_es) / n, 6) AS confidence
-    FROM s
-    ORDER BY doc_id
-    """,
+"""
+    + _LANG_PICK_SQL.format(ratio="/ n"),
     oracle="""
     WITH t AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
     s AS (
@@ -1217,16 +1227,8 @@ _sql_query(
                len(list_filter(toks, x -> list_contains(['el','los','las','y','que'], x))) AS s_es
         FROM t
     )
-    SELECT doc_id, s_en, s_fr, s_de, s_es,
-           CASE WHEN greatest(s_en, s_fr, s_de, s_es) = 0 THEN 'und'
-                WHEN s_en >= greatest(s_fr, s_de, s_es) THEN 'en'
-                WHEN s_fr >= greatest(s_de, s_es) THEN 'fr'
-                WHEN s_de >= s_es THEN 'de'
-                ELSE 'es' END AS predicted,
-           round(greatest(s_en, s_fr, s_de, s_es) * 1.0 / n, 6) AS confidence
-    FROM s
-    ORDER BY doc_id
-    """,
+"""
+    + _LANG_PICK_SQL.format(ratio="* 1.0 / n"),
     tags=("pipeline", "text"),
 )
 
@@ -1484,6 +1486,20 @@ def mm_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 #     string key is kept here so the DuckDB oracle shares the exact key).
 
 
+# per document: its 13-grams and the share of them that another document
+# also holds
+_DUP_GRAMS_RATIO_SQL = """
+    dup AS (SELECT g, count(DISTINCT doc_id) AS nd FROM grams GROUP BY g)
+    SELECT grams.doc_id,
+           count(*) AS n_grams,CAST(sum(CASE WHEN dup.nd > 1 THEN 1 ELSE 0 END) AS BIGINT) AS dup_grams,
+           round(CAST(sum(CASE WHEN dup.nd > 1 THEN 1 ELSE 0 END) AS DOUBLE)
+                 / count(*), 6) AS dup_ratio
+    FROM grams JOIN dup ON grams.g = dup.g
+    GROUP BY grams.doc_id
+    ORDER BY grams.doc_id
+    """
+
+
 @register(
     "text_substring_dup",
     oracle="""
@@ -1498,15 +1514,8 @@ def mm_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM toks, UNNEST(generate_series(1, len(w) - 12)) AS t(i)
         WHERE len(w) >= 13
     ),
-    dup AS (SELECT g, count(DISTINCT doc_id) AS nd FROM grams GROUP BY g)
-    SELECT grams.doc_id,
-           count(*) AS n_grams,CAST(sum(CASE WHEN dup.nd > 1 THEN 1 ELSE 0 END) AS BIGINT) AS dup_grams,
-           round(CAST(sum(CASE WHEN dup.nd > 1 THEN 1 ELSE 0 END) AS DOUBLE)
-                 / count(*), 6) AS dup_ratio
-    FROM grams JOIN dup ON grams.g = dup.g
-    GROUP BY grams.doc_id
-    ORDER BY grams.doc_id
-    """,
+"""
+    + _DUP_GRAMS_RATIO_SQL,
     tags=("pipeline", "text", "dedup"),
     doc="Per-document exact 13-gram cross-document duplication ratio "
     "(the substring-dedup metric): explode to (doc, gram), one gram-keyed "
@@ -1528,16 +1537,16 @@ def text_substring_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
             LATERAL VIEW explode(sequence(1, size(w) - 12)) AS i
             WHERE size(w) >= 13
         ),
-        dup AS (SELECT g, count(DISTINCT doc_id) AS nd FROM grams GROUP BY g)
-        SELECT grams.doc_id,
-               count(*) AS n_grams,CAST(sum(CASE WHEN dup.nd > 1 THEN 1 ELSE 0 END) AS BIGINT) AS dup_grams,
-               round(CAST(sum(CASE WHEN dup.nd > 1 THEN 1 ELSE 0 END) AS DOUBLE)
-                     / count(*), 6) AS dup_ratio
-        FROM grams JOIN dup ON grams.g = dup.g
-        GROUP BY grams.doc_id
-        ORDER BY grams.doc_id
         """
+        + _DUP_GRAMS_RATIO_SQL,
     )
+
+
+# the embeddings as DOUBLE arrays, so both engines accumulate in float64
+_EMB_DOUBLES = """e AS (
+            SELECT vec_id, transform(embedding, x -> cast(x AS double)) AS v
+            FROM embeddings
+        )"""
 
 
 # --- int8 scalar-quantized similarity: the memory/bandwidth scale path for
@@ -1565,10 +1574,7 @@ def sim_int8_quantized(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark,
         sf_dir,
         f"""
-        WITH e AS (
-            SELECT vec_id, transform(embedding, x -> cast(x AS double)) AS v
-            FROM embeddings
-        ),
+        WITH {_EMB_DOUBLES},
         scale AS (
             SELECT max(aggregate(v, cast(0 AS double), (a, x) -> greatest(a, abs(x)))) AS s
             FROM e
@@ -2062,10 +2068,7 @@ def sim_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark,
         sf_dir,
         f"""
-        WITH e AS (
-            SELECT vec_id, transform(embedding, x -> cast(x AS double)) AS v
-            FROM embeddings
-        ),
+        WITH {_EMB_DOUBLES},
         sub AS (
             SELECT vec_id, s, slice(v, s * 8 + 1, 8) AS u
             FROM e LATERAL VIEW explode(sequence(0, 7)) AS s
@@ -3892,6 +3895,24 @@ def _labelprop_labels_build(spark: SparkSession, sf_dir: str) -> DataFrame:
 # aggregate side reuses its partitioning), one shuffle back on doc_id for
 # reassembly; the boilerplate decision is carried on the aggregate row,
 # no window over the corpus.
+# per document: its lines, how many survive the per-source boilerplate
+# cut, and ``{kept_len}``, the length of the kept lines in line order
+_BOILER_KEPT_SQL = """
+    boiler AS (
+        SELECT source, line
+        FROM lines GROUP BY source, line
+        HAVING count(DISTINCT doc_id) >= 2
+    )
+    SELECT l.doc_id,
+           CAST(count(*) AS BIGINT) AS n_lines,
+           CAST(sum(CASE WHEN b.line IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_kept,
+           {kept_len} AS kept_len
+    FROM lines l
+    LEFT JOIN boiler b ON l.source = b.source AND l.line = b.line
+    GROUP BY l.doc_id
+    ORDER BY l.doc_id
+    """
+
 _sql_query(
     "text_boilerplate_lines",
     """
@@ -3904,23 +3925,13 @@ _sql_query(
         FROM tok
         LATERAL VIEW explode(sequence(0, cast(ceil(size(t) / 8.0) AS INT) - 1)) s AS p
     ),
-    boiler AS (
-        SELECT source, line
-        FROM lines GROUP BY source, line
-        HAVING count(DISTINCT doc_id) >= 2
-    )
-    SELECT l.doc_id,
-           CAST(count(*) AS BIGINT) AS n_lines,
-           CAST(sum(CASE WHEN b.line IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_kept,
-           CAST(length(concat_ws(' ',
+"""
+    + _BOILER_KEPT_SQL.format(
+        kept_len="""CAST(length(concat_ws(' ',
                sort_array(collect_list(CASE WHEN b.line IS NULL
                    THEN concat(lpad(cast(l.p AS STRING), 6, '0'), ':', l.line)
-               END)))) AS BIGINT) AS kept_len
-    FROM lines l
-    LEFT JOIN boiler b ON l.source = b.source AND l.line = b.line
-    GROUP BY l.doc_id
-    ORDER BY l.doc_id
-    """,
+               END)))) AS BIGINT)"""
+    ),
     oracle="""
     WITH tok AS (
         SELECT doc_id, source, string_split(text, ' ') AS t FROM documents
@@ -3932,23 +3943,13 @@ _sql_query(
             SELECT unnest(range(1, CAST(ceil(len(t) / 8.0) AS INT) + 1)) AS i
         ) p
     ),
-    boiler AS (
-        SELECT source, line
-        FROM lines GROUP BY source, line
-        HAVING count(DISTINCT doc_id) >= 2
-    )
-    SELECT l.doc_id,
-           CAST(count(*) AS BIGINT) AS n_lines,
-           CAST(sum(CASE WHEN b.line IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_kept,
-           CAST(COALESCE(length(string_agg(CASE WHEN b.line IS NULL
+"""
+    + _BOILER_KEPT_SQL.format(
+        kept_len="""CAST(COALESCE(length(string_agg(CASE WHEN b.line IS NULL
                THEN lpad(CAST(l.p AS VARCHAR), 6, '0') || ':' || l.line END, ' '
                ORDER BY lpad(CAST(l.p AS VARCHAR), 6, '0') || ':' || l.line)), 0)
-               AS BIGINT) AS kept_len
-    FROM lines l
-    LEFT JOIN boiler b ON l.source = b.source AND l.line = b.line
-    GROUP BY l.doc_id
-    ORDER BY l.doc_id
-    """,
+               AS BIGINT)"""
+    ),
     tags=("pipeline", "text", "dedup"),
     doc="Per-source boilerplate-line removal (CCNet-style): 8-word line "
     "segmentation, per-(source,line) doc-frequency >= 2 -> remove ALL "
@@ -5344,20 +5345,17 @@ def sim_knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 # run twice).
 
 
-_PPL_BUCKET_SQL = """
-    WITH wf AS (SELECT w, cast(sum(c) AS bigint) AS freq FROM {P} GROUP BY w),
-    score AS (
-        SELECT p.doc_id,
-               (1000 * sum(p.c * f.freq)) DIV sum(p.c) AS familiarity_milli
-        FROM {P} p JOIN wf f ON p.w = f.w
-        GROUP BY p.doc_id
-    ),
+
+def _ppl_terciles_sql(div: str) -> str:
+    """The familiarity scores' tercile cutoffs, from their histogram, and
+    each document's bucket; ``div`` is the dialect's integer division."""
+    return f"""
     hist AS (SELECT familiarity_milli AS s, count(*) AS cnt FROM score GROUP BY familiarity_milli),
     cum AS (SELECT s, sum(cnt) OVER (ORDER BY s DESC) AS cum FROM hist),
     tot AS (SELECT count(*) AS n FROM score),
     thresholds AS (
-        SELECT (SELECT max(s) FROM cum CROSS JOIN tot WHERE cum >= (n + 2) DIV 3) AS t1,
-               (SELECT max(s) FROM cum CROSS JOIN tot WHERE cum >= (2 * n + 2) DIV 3) AS t2
+        SELECT (SELECT max(s) FROM cum CROSS JOIN tot WHERE cum >= (n + 2) {div} 3) AS t1,
+               (SELECT max(s) FROM cum CROSS JOIN tot WHERE cum >= (2 * n + 2) {div} 3) AS t2
     )
     SELECT sc.doc_id, sc.familiarity_milli,
            CASE WHEN sc.familiarity_milli >= th.t1 THEN 'head'
@@ -5366,6 +5364,17 @@ _PPL_BUCKET_SQL = """
     FROM score sc CROSS JOIN thresholds th
     ORDER BY sc.doc_id
     """
+
+
+_PPL_BUCKET_SQL = """
+    WITH wf AS (SELECT w, cast(sum(c) AS bigint) AS freq FROM {P} GROUP BY w),
+    score AS (
+        SELECT p.doc_id,
+               (1000 * sum(p.c * f.freq)) DIV sum(p.c) AS familiarity_milli
+        FROM {P} p JOIN wf f ON p.w = f.w
+        GROUP BY p.doc_id
+    ),
+""" + _ppl_terciles_sql("DIV")
 
 _PPL_ORACLE = """
     WITH posting AS (
@@ -5380,20 +5389,7 @@ _PPL_ORACLE = """
         FROM posting p JOIN wf f ON p.w = f.w
         GROUP BY p.doc_id
     ),
-    hist AS (SELECT familiarity_milli AS s, count(*) AS cnt FROM score GROUP BY familiarity_milli),
-    cum AS (SELECT s, sum(cnt) OVER (ORDER BY s DESC) AS cum FROM hist),
-    tot AS (SELECT count(*) AS n FROM score),
-    thresholds AS (
-        SELECT (SELECT max(s) FROM cum CROSS JOIN tot WHERE cum >= (n + 2) // 3) AS t1,
-               (SELECT max(s) FROM cum CROSS JOIN tot WHERE cum >= (2 * n + 2) // 3) AS t2
-    )
-    SELECT sc.doc_id, sc.familiarity_milli,
-           CASE WHEN sc.familiarity_milli >= th.t1 THEN 'head'
-                WHEN sc.familiarity_milli >= th.t2 THEN 'middle'
-                ELSE 'tail' END AS bucket
-    FROM score sc CROSS JOIN thresholds th
-    ORDER BY sc.doc_id
-    """
+""" + _ppl_terciles_sql("//")
 
 
 @register(
@@ -5742,29 +5738,36 @@ _SNN_STRONG_SQL = """
     SELECT DISTINCT u, u FROM strong
     """
 
-_SNN_MAIN_SQL = (
-    """
-    WITH l0 AS (SELECT DISTINCT u AS id, u AS lbl FROM {S}),
+def _snn_components_sql(strong: str, corpus: str, mat: str) -> str:
+    """Components of the ``strong`` edge relation by six min-label rounds
+    with pointer jumping, then each ``corpus`` row with its component and
+    the component's size; ``mat`` is the DuckDB oracle's `` MATERIALIZED``
+    hint, empty for Spark."""
+    return (
+        f"""    l0 AS{mat} (SELECT DISTINCT u AS id, u AS lbl FROM {strong}),
 """
-    + "".join(
-        f"""    p{i} AS (SELECT e.u AS id, min(l.lbl) AS lbl
-           FROM {{S}} e JOIN l{i - 1} l ON l.id = e.w GROUP BY e.u),
-    l{i} AS (SELECT p.id, l2.lbl FROM p{i} p JOIN p{i} l2 ON l2.id = p.lbl),
+        + "".join(
+            f"""    p{i} AS{mat} (SELECT e.u AS id, min(l.lbl) AS lbl
+           FROM {strong} e JOIN l{i - 1} l ON l.id = e.w GROUP BY e.u),
+    l{i} AS{mat} (SELECT p.id, l2.lbl FROM p{i} p JOIN p{i} l2 ON l2.id = p.lbl),
 """
-        for i in range(1, 7)
-    )
-    + """    sized AS (
+            for i in range(1, 7)
+        )
+        + f"""    sized AS (
         SELECT lbl, count(*) AS sz FROM l6 GROUP BY lbl
     )
     SELECT c.vec_id,
            CAST(coalesce(l.lbl, c.vec_id) AS BIGINT) AS cluster,
            CAST(coalesce(s.sz, 1) AS BIGINT) AS cluster_size
-    FROM {E} c
+    FROM {corpus} c
     LEFT JOIN l6 l ON c.vec_id = l.id
     LEFT JOIN sized s ON l.lbl = s.lbl
     ORDER BY vec_id
     """
-)
+    )
+
+
+_SNN_MAIN_SQL = "\n    WITH\n" + _snn_components_sql("{S}", "{E}", "")
 
 _SNN_ORACLE = (
     "WITH "
@@ -5802,26 +5805,8 @@ _SNN_ORACLE = (
         UNION ALL
         SELECT DISTINCT u, u FROM strong0
     ),
-    l0 AS MATERIALIZED (SELECT DISTINCT u AS id, u AS lbl FROM strong),
 """
-    + "".join(
-        f"""    p{i} AS MATERIALIZED (SELECT e.u AS id, min(l.lbl) AS lbl
-           FROM strong e JOIN l{i - 1} l ON l.id = e.w GROUP BY e.u),
-    l{i} AS MATERIALIZED (SELECT p.id, l2.lbl FROM p{i} p JOIN p{i} l2 ON l2.id = p.lbl),
-"""
-        for i in range(1, 7)
-    )
-    + """    sized AS (
-        SELECT lbl, count(*) AS sz FROM l6 GROUP BY lbl
-    )
-    SELECT c.vec_id,
-           CAST(coalesce(l.lbl, c.vec_id) AS BIGINT) AS cluster,
-           CAST(coalesce(s.sz, 1) AS BIGINT) AS cluster_size
-    FROM corpus c
-    LEFT JOIN l6 l ON c.vec_id = l.id
-    LEFT JOIN sized s ON l.lbl = s.lbl
-    ORDER BY vec_id
-    """
+    + _snn_components_sql("strong", "corpus", " MATERIALIZED")
 )
 assert _SNN_ORACLE.count("WITH ") == 1
 
@@ -6431,9 +6416,14 @@ _WINNOW_FP_SQL = """
     SELECT DISTINCT doc_id, sel AS fph FROM win WHERE p >= 7
 """
 
-_WINNOW_PAIRS_SQL = """
-    WITH rare AS (SELECT fph FROM {FP} GROUP BY fph HAVING count(*) <= 12),
-    fpr AS (SELECT f.doc_id, f.fph FROM {FP} f JOIN rare r ON f.fph = r.fph),
+def _winnow_pairs_sql(fp: str, mat: str, div: str) -> str:
+    """Document pairs whose shared rare fingerprints of ``fp`` cover >= 60%
+    (in basis points) of the smaller document's; ``mat`` is the DuckDB
+    oracle's `` MATERIALIZED`` hint, empty for Spark, and ``div`` the
+    dialect's integer division."""
+    return f"""
+    rare AS (SELECT fph FROM {fp} GROUP BY fph HAVING count(*) <= 12),
+    fpr AS{mat} (SELECT f.doc_id, f.fph FROM {fp} f JOIN rare r ON f.fph = r.fph),
     sz AS (SELECT doc_id, count(*) AS n FROM fpr GROUP BY doc_id),
     pairs AS (
         SELECT a.doc_id AS a_id, b.doc_id AS b_id, count(*) AS n_shared
@@ -6442,13 +6432,16 @@ _WINNOW_PAIRS_SQL = """
     )
     SELECT p.a_id, p.b_id,
            CAST(p.n_shared AS BIGINT) AS n_shared,
-           CAST((p.n_shared * 10000) DIV least(sa.n, sb.n) AS BIGINT) AS cont_bp
+           CAST((p.n_shared * 10000) {div} least(sa.n, sb.n) AS BIGINT) AS cont_bp
     FROM pairs p
     JOIN sz sa ON sa.doc_id = p.a_id
     JOIN sz sb ON sb.doc_id = p.b_id
-    WHERE (p.n_shared * 10000) DIV least(sa.n, sb.n) >= 6000
+    WHERE (p.n_shared * 10000) {div} least(sa.n, sb.n) >= 6000
     ORDER BY p.a_id, p.b_id
 """
+
+
+_WINNOW_PAIRS_SQL = "\n    WITH" + _winnow_pairs_sql("{FP}", "", "DIV")
 
 
 @register(
@@ -6471,23 +6464,8 @@ _WINNOW_PAIRS_SQL = """
         FROM pos
     ),
     fp AS MATERIALIZED (SELECT DISTINCT doc_id, sel AS fph FROM win WHERE p >= 7),
-    rare AS (SELECT fph FROM fp GROUP BY fph HAVING count(*) <= 12),
-    fpr AS MATERIALIZED (SELECT f.doc_id, f.fph FROM fp f JOIN rare r ON f.fph = r.fph),
-    sz AS (SELECT doc_id, count(*) AS n FROM fpr GROUP BY doc_id),
-    pairs AS (
-        SELECT a.doc_id AS a_id, b.doc_id AS b_id, count(*) AS n_shared
-        FROM fpr a JOIN fpr b ON a.fph = b.fph AND a.doc_id < b.doc_id
-        GROUP BY a.doc_id, b.doc_id
-    )
-    SELECT p.a_id, p.b_id,
-           CAST(p.n_shared AS BIGINT) AS n_shared,
-           CAST((p.n_shared * 10000) // least(sa.n, sb.n) AS BIGINT) AS cont_bp
-    FROM pairs p
-    JOIN sz sa ON sa.doc_id = p.a_id
-    JOIN sz sb ON sb.doc_id = p.b_id
-    WHERE (p.n_shared * 10000) // least(sa.n, sb.n) >= 6000
-    ORDER BY p.a_id, p.b_id
-    """,
+"""
+    + _winnow_pairs_sql("fp", " MATERIALIZED", "//"),
     tags=("pipeline", "text", "dedup"),
     doc="Winnowing (MOSS) fingerprint dedup: 8-char gram polynomial hashes, "
     "w=8 window-min selection (positional guarantee: any shared substring "
@@ -6633,6 +6611,27 @@ _KMPP_L = 4
 _KMPP_K = 5
 
 
+def _kmpp_weights_sql(cands: str, rows: str) -> str:
+    """Each candidate of ``cands`` weighted by the ``rows`` vectors nearest
+    to it; the ``_KMPP_K`` heaviest, with their selection rounds."""
+    return f"""candrows AS (SELECT c.c_id, r.d, r.x
+                 FROM {cands} c JOIN {rows} r ON r.vec_id = c.c_id),
+    alldist AS (SELECT rw.vec_id, c.c_id, sum((rw.x - c.x) * (rw.x - c.x)) AS d2
+                FROM {rows} rw JOIN candrows c ON rw.d = c.d GROUP BY rw.vec_id, c.c_id),
+    assign AS (SELECT vec_id, c_id FROM (
+                   SELECT vec_id, c_id,
+                          row_number() OVER (PARTITION BY vec_id ORDER BY d2, c_id) AS rn
+                   FROM alldist) rnk WHERE rn = 1),
+    weights AS (SELECT a.c_id, count(*) AS weight FROM assign a GROUP BY a.c_id)
+    SELECT CAST(row_number() OVER (ORDER BY w.weight DESC, w.c_id) AS BIGINT) AS rank,
+           w.c_id AS centroid_id, CAST(w.weight AS BIGINT) AS weight,
+           CAST(c.sel_round AS BIGINT) AS sel_round
+    FROM weights w JOIN {cands} c ON c.c_id = w.c_id
+    ORDER BY w.weight DESC, w.c_id
+    LIMIT {_KMPP_K}
+    """
+
+
 def _kmpp_rounds_sql(dialect: str) -> str:
     """Unrolled k-means|| rounds over a pre-registered ``rows_`` relation
     (vec_id, d, x of the milli-quantized embeddings)."""
@@ -6663,22 +6662,7 @@ def _kmpp_rounds_sql(dialect: str) -> str:
         sels.append(f"sel{r}")
     union = " UNION ALL ".join(f"SELECT c_id, {i} AS sel_round FROM {s}" for i, s in enumerate(sels))
     sql += f"""    candidates AS{mat} ({union}),
-    candrows AS (SELECT c.c_id, r.d, r.x
-                 FROM candidates c JOIN rows_ r ON r.vec_id = c.c_id),
-    alldist AS (SELECT rw.vec_id, c.c_id, sum((rw.x - c.x) * (rw.x - c.x)) AS d2
-                FROM rows_ rw JOIN candrows c ON rw.d = c.d GROUP BY rw.vec_id, c.c_id),
-    assign AS (SELECT vec_id, c_id FROM (
-                   SELECT vec_id, c_id,
-                          row_number() OVER (PARTITION BY vec_id ORDER BY d2, c_id) AS rn
-                   FROM alldist) rnk WHERE rn = 1),
-    weights AS (SELECT a.c_id, count(*) AS weight FROM assign a GROUP BY a.c_id)
-    SELECT CAST(row_number() OVER (ORDER BY w.weight DESC, w.c_id) AS BIGINT) AS rank,
-           w.c_id AS centroid_id, CAST(w.weight AS BIGINT) AS weight,
-           CAST(c.sel_round AS BIGINT) AS sel_round
-    FROM weights w JOIN candidates c ON c.c_id = w.c_id
-    ORDER BY w.weight DESC, w.c_id
-    LIMIT {_KMPP_K}
-    """
+    {_kmpp_weights_sql("candidates", "rows_")}"""
     return sql
 
 
@@ -6767,23 +6751,7 @@ def cluster_kmeans_parallel_init(spark: SparkSession, sf_dir: str) -> DataFrame:
         cand_df = cand_df.union(sel.select(F.col("c_id"), F.lit(i).alias("sel_round")))
     candidates = cand_df.localCheckpoint(eager=True)
     return spark.sql(
-        f"""
-        WITH candrows AS (SELECT c.c_id, r.d, r.x
-                          FROM {{km_cands}} c JOIN {{km_rows}} r ON r.vec_id = c.c_id),
-        alldist AS (SELECT rw.vec_id, c.c_id, sum((rw.x - c.x) * (rw.x - c.x)) AS d2
-                    FROM {{km_rows}} rw JOIN candrows c ON rw.d = c.d GROUP BY rw.vec_id, c.c_id),
-        assign AS (SELECT vec_id, c_id FROM (
-                       SELECT vec_id, c_id,
-                              row_number() OVER (PARTITION BY vec_id ORDER BY d2, c_id) AS rn
-                       FROM alldist) rnk WHERE rn = 1),
-        weights AS (SELECT a.c_id, count(*) AS weight FROM assign a GROUP BY a.c_id)
-        SELECT CAST(row_number() OVER (ORDER BY w.weight DESC, w.c_id) AS BIGINT) AS rank,
-               w.c_id AS centroid_id, CAST(w.weight AS BIGINT) AS weight,
-               CAST(c.sel_round AS BIGINT) AS sel_round
-        FROM weights w JOIN {{km_cands}} c ON c.c_id = w.c_id
-        ORDER BY w.weight DESC, w.c_id
-        LIMIT {_KMPP_K}
-        """,
+        "WITH " + _kmpp_weights_sql("{km_cands}", "{km_rows}"),
         km_rows=rows_,
         km_cands=candidates,
     )
@@ -7006,13 +6974,13 @@ _BPE_CORP0_SQL = """
     )
 """
 
-# one merge round over the previous working view {P}: top pair + rewrite.
+# the most frequent adjacent symbol pair of the working view {P}.
 # The `size(t) >= 2` guard matters once a merge completes a whole word
 # (size(t) = 1): without it sequence(0, -1) yields [0, -1] and the
 # transform emits NULL pairs (out-of-range t[i] is NULL) that the DuckDB
 # oracle's range(1, len(t)) never produces — a NULL-count winner would
 # then null the entire working corpus via replace(s, NULL, ...).
-_BPE_ROUND_SQL = """
+_BPE_TOP_PAIR_SQL = """
     WITH pairs AS (
         SELECT pair, count(*) AS cnt FROM (
             SELECT explode(transform(sequence(0, size(t) - 2),
@@ -7022,6 +6990,10 @@ _BPE_ROUND_SQL = """
         ) GROUP BY pair
     ),
     top AS (SELECT pair, cnt FROM pairs ORDER BY cnt DESC, pair LIMIT 1)
+"""
+
+# one merge round over the previous working view {P}: top pair + rewrite
+_BPE_ROUND_SQL = _BPE_TOP_PAIR_SQL + """
     SELECT c.doc_id,
            replace(c.s,
                    concat('·', split(t.pair, ' ')[0], '··', split(t.pair, ' ')[1], '·'),
@@ -7029,16 +7001,7 @@ _BPE_ROUND_SQL = """
     FROM {P} c CROSS JOIN top t
 """
 
-_BPE_SUMMARY_SQL = """
-    WITH pairs AS (
-        SELECT pair, count(*) AS cnt FROM (
-            SELECT explode(transform(sequence(0, size(t) - 2),
-                       i -> concat(t[i], ' ', t[i + 1]))) AS pair
-            FROM (SELECT split(substring(s, 2, length(s) - 2), '··') AS t FROM {P})
-            WHERE size(t) >= 2
-        ) GROUP BY pair
-    ),
-    top AS (SELECT pair, cnt FROM pairs ORDER BY cnt DESC, pair LIMIT 1)
+_BPE_SUMMARY_SQL = _BPE_TOP_PAIR_SQL + """
     SELECT CAST({R} AS BIGINT) AS round,
            t.pair AS merged_pair,
            CAST(t.cnt AS BIGINT) AS pair_count,
@@ -7885,12 +7848,7 @@ _sql_query(
     ),
     q AS (SELECT p.vec_id, p.bucket, n.v, n.nrm
           FROM probe_cells p JOIN n ON n.vec_id = p.vec_id),
-    scored AS (
-        SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-               {vec.dot('q.v', 'c.v', 'double')} / (q.nrm * c.nrm) AS cos
-        FROM q JOIN corpus c ON q.bucket = c.bucket AND q.vec_id <> c.vec_id
-    ),
-    {_topk_sql(3)}""",
+    {_SPARK_IVF_TOP3}""",
     oracle=f"""
     {_DUCK_IVF_CENTROIDS}
     centdist AS (
@@ -8023,9 +7981,9 @@ def text_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
 # difference between a profiling pass that costs one table read and one
 # that costs C of them at 100 TB.  Exact integers throughout: money is
 # profiled in cents, average widths in centi-chars via DIV.
-_sql_query(
-    "scale_data_profile",
-    """
+# one pass over orders: per profiled column its non-null and distinct
+# counts, min/max as ``{string}`` text and summed text length
+_PROFILE_STATS_SQL = """
     WITH base AS (
         SELECT o_custkey, o_orderdate, o_orderpriority,
                CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT) AS price_c
@@ -8034,19 +7992,24 @@ _sql_query(
     p AS (
         SELECT count(*) AS n_rows,
                count(o_custkey) AS nn1, count(DISTINCT o_custkey) AS nd1,
-               CAST(min(o_custkey) AS STRING) AS mn1, CAST(max(o_custkey) AS STRING) AS mx1,
-               sum(length(CAST(o_custkey AS STRING))) AS sl1,
+               CAST(min(o_custkey) AS {string}) AS mn1, CAST(max(o_custkey) AS {string}) AS mx1,
+               sum(length(CAST(o_custkey AS {string}))) AS sl1,
                count(price_c) AS nn2, count(DISTINCT price_c) AS nd2,
-               CAST(min(price_c) AS STRING) AS mn2, CAST(max(price_c) AS STRING) AS mx2,
-               sum(length(CAST(price_c AS STRING))) AS sl2,
+               CAST(min(price_c) AS {string}) AS mn2, CAST(max(price_c) AS {string}) AS mx2,
+               sum(length(CAST(price_c AS {string}))) AS sl2,
                count(o_orderdate) AS nn3, count(DISTINCT o_orderdate) AS nd3,
-               CAST(min(o_orderdate) AS STRING) AS mn3, CAST(max(o_orderdate) AS STRING) AS mx3,
-               sum(length(CAST(o_orderdate AS STRING))) AS sl3,
+               CAST(min(o_orderdate) AS {string}) AS mn3, CAST(max(o_orderdate) AS {string}) AS mx3,
+               sum(length(CAST(o_orderdate AS {string}))) AS sl3,
                count(o_orderpriority) AS nn4, count(DISTINCT o_orderpriority) AS nd4,
                min(o_orderpriority) AS mn4, max(o_orderpriority) AS mx4,
                sum(length(o_orderpriority)) AS sl4
         FROM base
-    )
+    )"""
+
+_sql_query(
+    "scale_data_profile",
+    _PROFILE_STATS_SQL.format(string="STRING")
+    + """
     SELECT col,
            CAST(n_rows AS BIGINT) AS n_rows,
            CAST(n_nonnull AS BIGINT) AS n_nonnull,
@@ -8064,28 +8027,8 @@ _sql_query(
     )
     ORDER BY col
     """,
-    oracle="""
-    WITH base AS (
-        SELECT o_custkey, o_orderdate, o_orderpriority,
-               CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT) AS price_c
-        FROM orders
-    ),
-    p AS (
-        SELECT count(*) AS n_rows,
-               count(o_custkey) AS nn1, count(DISTINCT o_custkey) AS nd1,
-               CAST(min(o_custkey) AS VARCHAR) AS mn1, CAST(max(o_custkey) AS VARCHAR) AS mx1,
-               sum(length(CAST(o_custkey AS VARCHAR))) AS sl1,
-               count(price_c) AS nn2, count(DISTINCT price_c) AS nd2,
-               CAST(min(price_c) AS VARCHAR) AS mn2, CAST(max(price_c) AS VARCHAR) AS mx2,
-               sum(length(CAST(price_c AS VARCHAR))) AS sl2,
-               count(o_orderdate) AS nn3, count(DISTINCT o_orderdate) AS nd3,
-               CAST(min(o_orderdate) AS VARCHAR) AS mn3, CAST(max(o_orderdate) AS VARCHAR) AS mx3,
-               sum(length(CAST(o_orderdate AS VARCHAR))) AS sl3,
-               count(o_orderpriority) AS nn4, count(DISTINCT o_orderpriority) AS nd4,
-               min(o_orderpriority) AS mn4, max(o_orderpriority) AS mx4,
-               sum(length(o_orderpriority)) AS sl4
-        FROM base
-    ),
+    oracle=_PROFILE_STATS_SQL.format(string="VARCHAR")
+    + """,
     rep AS (
         SELECT 'o_custkey' AS col, n_rows, nn1 AS n_nonnull, nd1 AS n_distinct,
                mn1 AS min_val, mx1 AS max_val, sl1 AS sum_len FROM p
@@ -8751,6 +8694,29 @@ _sql_query(
 # Scale shape: tokenize once per side, ONE equi-join per N on the
 # n-gram value keyed by pair, two map-side-combined rollups; positive
 # integers only ever meet DIV.
+# per pair: the candidate's shared distinct 1- and 2-grams with the
+# reference, in basis points of the reference's; ``{div}`` is the dialect's
+# integer division
+_ROUGE_BP_SQL = """
+    o1 AS (SELECT c1.pid, count(*) AS ov FROM c1 JOIN r1 ON r1.pid = c1.pid AND r1.g = c1.g
+           GROUP BY c1.pid),
+    o2 AS (SELECT c2.pid, count(*) AS ov FROM c2 JOIN r2 ON r2.pid = c2.pid AND r2.g = c2.g
+           GROUP BY c2.pid),
+    s1 AS (SELECT pid, count(*) AS n FROM r1 GROUP BY pid),
+    s2 AS (SELECT pid, count(*) AS n FROM r2 GROUP BY pid)
+    SELECT s1.pid AS pair_id,
+           CAST(coalesce(o1.ov, 0) AS BIGINT) AS r1_overlap,
+           CAST(s1.n AS BIGINT) AS r1_ref_size,
+           CAST((coalesce(o1.ov, 0) * 10000) {div} s1.n AS BIGINT) AS rouge1_bp,
+           CAST(coalesce(o2.ov, 0) AS BIGINT) AS r2_overlap,
+           CAST(s2.n AS BIGINT) AS r2_ref_size,
+           CAST((coalesce(o2.ov, 0) * 10000) {div} s2.n AS BIGINT) AS rouge2_bp
+    FROM s1 JOIN s2 ON s2.pid = s1.pid
+    LEFT JOIN o1 ON o1.pid = s1.pid
+    LEFT JOIN o2 ON o2.pid = s1.pid
+    ORDER BY pair_id
+    """
+
 _sql_query(
     "text_rouge_overlap",
     """
@@ -8763,24 +8729,8 @@ _sql_query(
                i -> concat(t[i], ' ', t[i + 1]))) AS g FROM cand WHERE size(t) >= 2),
     r2 AS (SELECT DISTINCT pid, explode(transform(sequence(0, size(t) - 2),
                i -> concat(t[i], ' ', t[i + 1]))) AS g FROM ref WHERE size(t) >= 2),
-    o1 AS (SELECT c1.pid, count(*) AS ov FROM c1 JOIN r1 ON r1.pid = c1.pid AND r1.g = c1.g
-           GROUP BY c1.pid),
-    o2 AS (SELECT c2.pid, count(*) AS ov FROM c2 JOIN r2 ON r2.pid = c2.pid AND r2.g = c2.g
-           GROUP BY c2.pid),
-    s1 AS (SELECT pid, count(*) AS n FROM r1 GROUP BY pid),
-    s2 AS (SELECT pid, count(*) AS n FROM r2 GROUP BY pid)
-    SELECT s1.pid AS pair_id,
-           CAST(coalesce(o1.ov, 0) AS BIGINT) AS r1_overlap,
-           CAST(s1.n AS BIGINT) AS r1_ref_size,
-           CAST((coalesce(o1.ov, 0) * 10000) DIV s1.n AS BIGINT) AS rouge1_bp,
-           CAST(coalesce(o2.ov, 0) AS BIGINT) AS r2_overlap,
-           CAST(s2.n AS BIGINT) AS r2_ref_size,
-           CAST((coalesce(o2.ov, 0) * 10000) DIV s2.n AS BIGINT) AS rouge2_bp
-    FROM s1 JOIN s2 ON s2.pid = s1.pid
-    LEFT JOIN o1 ON o1.pid = s1.pid
-    LEFT JOIN o2 ON o2.pid = s1.pid
-    ORDER BY pair_id
-    """,
+"""
+    + _ROUGE_BP_SQL.format(div="DIV"),
     oracle="""
     WITH cand AS (SELECT doc_id AS pid, string_split(text, ' ') AS t FROM documents WHERE doc_id < 100),
     ref AS (SELECT doc_id - 100 AS pid, string_split(text, ' ') AS t FROM documents
@@ -8791,24 +8741,8 @@ _sql_query(
            FROM cand WHERE len(t) >= 2),
     r2 AS (SELECT DISTINCT pid, unnest([t[i] || ' ' || t[i + 1] for i in range(1, len(t))]) AS g
            FROM ref WHERE len(t) >= 2),
-    o1 AS (SELECT c1.pid, count(*) AS ov FROM c1 JOIN r1 ON r1.pid = c1.pid AND r1.g = c1.g
-           GROUP BY c1.pid),
-    o2 AS (SELECT c2.pid, count(*) AS ov FROM c2 JOIN r2 ON r2.pid = c2.pid AND r2.g = c2.g
-           GROUP BY c2.pid),
-    s1 AS (SELECT pid, count(*) AS n FROM r1 GROUP BY pid),
-    s2 AS (SELECT pid, count(*) AS n FROM r2 GROUP BY pid)
-    SELECT s1.pid AS pair_id,
-           CAST(coalesce(o1.ov, 0) AS BIGINT) AS r1_overlap,
-           CAST(s1.n AS BIGINT) AS r1_ref_size,
-           CAST((coalesce(o1.ov, 0) * 10000) // s1.n AS BIGINT) AS rouge1_bp,
-           CAST(coalesce(o2.ov, 0) AS BIGINT) AS r2_overlap,
-           CAST(s2.n AS BIGINT) AS r2_ref_size,
-           CAST((coalesce(o2.ov, 0) * 10000) // s2.n AS BIGINT) AS rouge2_bp
-    FROM s1 JOIN s2 ON s2.pid = s1.pid
-    LEFT JOIN o1 ON o1.pid = s1.pid
-    LEFT JOIN o2 ON o2.pid = s1.pid
-    ORDER BY pair_id
-    """,
+"""
+    + _ROUGE_BP_SQL.format(div="//"),
     tags=("pipeline", "text", "eval"),
     doc="ROUGE-1/ROUGE-2 (distinct-n-gram recall variant, basis points) "
     "over deterministic candidate/reference doc pairs: tokenize once per "
@@ -8827,40 +8761,27 @@ _sql_query(
 # two lead()s over ONE user-keyed sort window (state per user is
 # bounded), then a map-side-combined path count over the tiny
 # |types|^3-bounded domain and a top-10 rank.
+_TOP_PATHS_SQL = """
+    WITH seq AS (
+        SELECT event_type AS e1,
+               lead(event_type, 1) OVER w AS e2,
+               lead(event_type, 2) OVER w AS e3
+        FROM events
+        WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
+    ),
+    paths AS (
+        SELECT {path} AS path, count(*) AS n
+        FROM seq WHERE e3 IS NOT NULL GROUP BY 1
+    )
+    SELECT CAST(row_number() OVER (ORDER BY n DESC, path) AS BIGINT) AS rk,
+           path, CAST(n AS BIGINT) AS n
+    FROM paths ORDER BY rk LIMIT 10
+    """
+
 _sql_query(
     "events_top_paths",
-    """
-    WITH seq AS (
-        SELECT event_type AS e1,
-               lead(event_type, 1) OVER w AS e2,
-               lead(event_type, 2) OVER w AS e3
-        FROM events
-        WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-    ),
-    paths AS (
-        SELECT concat(e1, ' > ', e2, ' > ', e3) AS path, count(*) AS n
-        FROM seq WHERE e3 IS NOT NULL GROUP BY 1
-    )
-    SELECT CAST(row_number() OVER (ORDER BY n DESC, path) AS BIGINT) AS rk,
-           path, CAST(n AS BIGINT) AS n
-    FROM paths ORDER BY rk LIMIT 10
-    """,
-    oracle="""
-    WITH seq AS (
-        SELECT event_type AS e1,
-               lead(event_type, 1) OVER w AS e2,
-               lead(event_type, 2) OVER w AS e3
-        FROM events
-        WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-    ),
-    paths AS (
-        SELECT e1 || ' > ' || e2 || ' > ' || e3 AS path, count(*) AS n
-        FROM seq WHERE e3 IS NOT NULL GROUP BY 1
-    )
-    SELECT CAST(row_number() OVER (ORDER BY n DESC, path) AS BIGINT) AS rk,
-           path, CAST(n AS BIGINT) AS n
-    FROM paths ORDER BY rk LIMIT 10
-    """,
+    _TOP_PATHS_SQL.format(path="concat(e1, ' > ', e2, ' > ', e3)"),
+    oracle=_TOP_PATHS_SQL.format(path="e1 || ' > ' || e2 || ' > ' || e3"),
     tags=("events", "pattern", "paths"),
     doc="Funnel discovery: top-10 3-step event-type journeys via two "
     "lead()s over one user-keyed sort window and a |types|^3-bounded "
@@ -8882,6 +8803,34 @@ _sql_query(
 # majority vote ties break toward the smaller label in both engines.
 # Scale shape: 16 probes broadcast against ONE corpus scan; vote and
 # accuracy rollups touch O(probes x k) rows.
+# each probe's 3 nearest by ``scored.sim_key``, their majority label and
+# the per-label accuracy in basis points; ``alias`` names the derived
+# tables where DuckDB wants it, ``div`` is the dialect's integer division
+_KNN_VOTE_SQL = """
+    top3 AS (
+        SELECT qid, qlab, nlab FROM (
+            SELECT qid, qlab, nlab,
+                   row_number() OVER (PARTITION BY qid ORDER BY sim_key DESC, nid) AS rk
+            FROM scored
+        ){alias} WHERE rk <= 3
+    ),
+    vote AS (
+        SELECT qid, qlab, nlab AS pred, count(*) AS votes FROM top3 GROUP BY qid, qlab, nlab
+    ),
+    pick AS (
+        SELECT qid, qlab, pred FROM (
+            SELECT qid, qlab, pred,
+                   row_number() OVER (PARTITION BY qid ORDER BY votes DESC, pred) AS vr
+            FROM vote
+        ){alias} WHERE vr = 1
+    )
+    SELECT CAST(qlab AS BIGINT) AS label,
+           CAST(count(*) AS BIGINT) AS n_probes,
+           CAST(count(CASE WHEN pred = qlab THEN 1 END) AS BIGINT) AS n_correct,
+           CAST((count(CASE WHEN pred = qlab THEN 1 END) * 10000) {div} count(*) AS BIGINT) AS accuracy_bp
+    FROM pick GROUP BY qlab ORDER BY label
+    """
+
 _sql_query(
     "sim_knn_classify",
     f"""
@@ -8903,29 +8852,8 @@ _sql_query(
             WHERE q.qid <> e.vec_id
         )
     ),
-    top3 AS (
-        SELECT qid, qlab, nlab FROM (
-            SELECT qid, qlab, nlab,
-                   row_number() OVER (PARTITION BY qid ORDER BY sim_key DESC, nid) AS rk
-            FROM scored
-        ) WHERE rk <= 3
-    ),
-    vote AS (
-        SELECT qid, qlab, nlab AS pred, count(*) AS votes FROM top3 GROUP BY qid, qlab, nlab
-    ),
-    pick AS (
-        SELECT qid, qlab, pred FROM (
-            SELECT qid, qlab, pred,
-                   row_number() OVER (PARTITION BY qid ORDER BY votes DESC, pred) AS vr
-            FROM vote
-        ) WHERE vr = 1
-    )
-    SELECT CAST(qlab AS BIGINT) AS label,
-           CAST(count(*) AS BIGINT) AS n_probes,
-           CAST(count(CASE WHEN pred = qlab THEN 1 END) AS BIGINT) AS n_correct,
-           CAST((count(CASE WHEN pred = qlab THEN 1 END) * 10000) DIV count(*) AS BIGINT) AS accuracy_bp
-    FROM pick GROUP BY qlab ORDER BY label
-    """,
+"""
+    + _KNN_VOTE_SQL.format(alias="", div="DIV"),
     oracle="""
     WITH e AS (
         SELECT vec_id, label,
@@ -8945,29 +8873,8 @@ _sql_query(
             WHERE q.qid <> e.vec_id
         ) y
     ),
-    top3 AS (
-        SELECT qid, qlab, nlab FROM (
-            SELECT qid, qlab, nlab,
-                   row_number() OVER (PARTITION BY qid ORDER BY sim_key DESC, nid) AS rk
-            FROM scored
-        ) z WHERE rk <= 3
-    ),
-    vote AS (
-        SELECT qid, qlab, nlab AS pred, count(*) AS votes FROM top3 GROUP BY qid, qlab, nlab
-    ),
-    pick AS (
-        SELECT qid, qlab, pred FROM (
-            SELECT qid, qlab, pred,
-                   row_number() OVER (PARTITION BY qid ORDER BY votes DESC, pred) AS vr
-            FROM vote
-        ) z WHERE vr = 1
-    )
-    SELECT CAST(qlab AS BIGINT) AS label,
-           CAST(count(*) AS BIGINT) AS n_probes,
-           CAST(count(CASE WHEN pred = qlab THEN 1 END) AS BIGINT) AS n_correct,
-           CAST((count(CASE WHEN pred = qlab THEN 1 END) * 10000) // count(*) AS BIGINT) AS accuracy_bp
-    FROM pick GROUP BY qlab ORDER BY label
-    """,
+"""
+    + _KNN_VOTE_SQL.format(alias=" z", div="//"),
     tags=("pipeline", "similarity", "eval"),
     doc="k-NN (k=3) majority-vote label classification with per-label "
     "accuracy in basis points: cosine-monotone exact-integer sim key "
@@ -9108,46 +9015,32 @@ def graph_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
 # per-document token counts (doc-sized), both joined against 10
 # broadcast checkpoint thresholds.  ONE tokenize scan total; all
 # arithmetic exact-integer (Heaps ratio in ppm via DIV of positives).
+_VOCAB_GROWTH_SQL = """
+    WITH tok AS (SELECT doc_id, {terms} AS term FROM documents),
+    nmax AS (SELECT max(doc_id) AS n FROM documents),
+    first_ AS (SELECT term, min(doc_id) AS fd FROM tok GROUP BY term),
+    dlen AS (SELECT doc_id, count(*) AS ntok FROM tok GROUP BY doc_id),
+    ckpt AS (SELECT {steps} AS step),
+    thr AS (SELECT step, step * ((SELECT n FROM nmax) {div} 10) AS cutoff FROM ckpt),
+    vocab AS (SELECT t.step, count(*) AS v
+              FROM thr t JOIN first_ f ON f.fd <= t.cutoff GROUP BY t.step),
+    toks AS (SELECT t.step, sum(d.ntok) AS nt
+             FROM thr t JOIN dlen d ON d.doc_id <= t.cutoff GROUP BY t.step)
+    SELECT CAST(t.step AS BIGINT) AS step,
+           CAST(t.cutoff AS BIGINT) AS max_doc_id,
+           CAST(k.nt AS BIGINT) AS tokens_cum,
+           CAST(v.v AS BIGINT) AS vocab_cum,
+           CAST((v.v * 1000000) {div} k.nt AS BIGINT) AS type_token_ppm
+    FROM thr t JOIN vocab v ON v.step = t.step JOIN toks k ON k.step = t.step
+    ORDER BY step
+    """
+
 _sql_query(
     "text_vocab_growth",
-    """
-    WITH tok AS (SELECT doc_id, explode(split(text, ' ')) AS term FROM documents),
-    nmax AS (SELECT max(doc_id) AS n FROM documents),
-    first_ AS (SELECT term, min(doc_id) AS fd FROM tok GROUP BY term),
-    dlen AS (SELECT doc_id, count(*) AS ntok FROM tok GROUP BY doc_id),
-    ckpt AS (SELECT explode(sequence(1, 10)) AS step),
-    thr AS (SELECT step, step * ((SELECT n FROM nmax) DIV 10) AS cutoff FROM ckpt),
-    vocab AS (SELECT t.step, count(*) AS v
-              FROM thr t JOIN first_ f ON f.fd <= t.cutoff GROUP BY t.step),
-    toks AS (SELECT t.step, sum(d.ntok) AS nt
-             FROM thr t JOIN dlen d ON d.doc_id <= t.cutoff GROUP BY t.step)
-    SELECT CAST(t.step AS BIGINT) AS step,
-           CAST(t.cutoff AS BIGINT) AS max_doc_id,
-           CAST(k.nt AS BIGINT) AS tokens_cum,
-           CAST(v.v AS BIGINT) AS vocab_cum,
-           CAST((v.v * 1000000) DIV k.nt AS BIGINT) AS type_token_ppm
-    FROM thr t JOIN vocab v ON v.step = t.step JOIN toks k ON k.step = t.step
-    ORDER BY step
-    """,
-    oracle="""
-    WITH tok AS (SELECT doc_id, unnest(string_split(text, ' ')) AS term FROM documents),
-    nmax AS (SELECT max(doc_id) AS n FROM documents),
-    first_ AS (SELECT term, min(doc_id) AS fd FROM tok GROUP BY term),
-    dlen AS (SELECT doc_id, count(*) AS ntok FROM tok GROUP BY doc_id),
-    ckpt AS (SELECT unnest(generate_series(1, 10)) AS step),
-    thr AS (SELECT step, step * ((SELECT n FROM nmax) // 10) AS cutoff FROM ckpt),
-    vocab AS (SELECT t.step, count(*) AS v
-              FROM thr t JOIN first_ f ON f.fd <= t.cutoff GROUP BY t.step),
-    toks AS (SELECT t.step, sum(d.ntok) AS nt
-             FROM thr t JOIN dlen d ON d.doc_id <= t.cutoff GROUP BY t.step)
-    SELECT CAST(t.step AS BIGINT) AS step,
-           CAST(t.cutoff AS BIGINT) AS max_doc_id,
-           CAST(k.nt AS BIGINT) AS tokens_cum,
-           CAST(v.v AS BIGINT) AS vocab_cum,
-           CAST((v.v * 1000000) // k.nt AS BIGINT) AS type_token_ppm
-    FROM thr t JOIN vocab v ON v.step = t.step JOIN toks k ON k.step = t.step
-    ORDER BY step
-    """,
+    _VOCAB_GROWTH_SQL.format(terms="explode(split(text, ' '))", steps="explode(sequence(1, 10))", div="DIV"),
+    oracle=_VOCAB_GROWTH_SQL.format(
+        terms="unnest(string_split(text, ' '))", steps="unnest(generate_series(1, 10))", div="//"
+    ),
     tags=("pipeline", "text", "stats"),
     doc="Heaps'-law vocabulary-growth curve at 10 corpus checkpoints "
     "from ONE tokenize scan: term-first-document min-groupBy + per-doc "
@@ -9651,43 +9544,28 @@ def text_lang_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
 # engines' libm log differs by an ulp).  At sf0.01 the plan takes the hottest key
 # from 5112 rows/task to 465 (11x balance).  Everything is one
 # map-side-combined histogram + a 1-row totals broadcast; exact BIGINT.
+_SALT_PLAN_SQL = """
+    WITH hist AS (
+        SELECT CAST(length(bin(o_custkey + 2)) - 1 AS BIGINT) AS key_bucket,
+               count(*) AS n
+        FROM orders GROUP BY 1
+    ),
+    tot AS (SELECT max(n) AS mx, sum(n) AS s FROM hist),
+    plan AS (
+        SELECT key_bucket, n,
+               greatest(CAST(ceil(n * 32.0 / (SELECT s FROM tot)) AS BIGINT), {one}) AS fanout
+        FROM hist
+    )
+    SELECT key_bucket, CAST(n AS BIGINT) AS n_rows, CAST(fanout AS BIGINT) AS fanout,
+           CAST(ceil(n * 1.0 / fanout) AS BIGINT) AS salted_max_rows,
+           CAST((SELECT mx FROM tot) AS BIGINT) AS unsalted_max_rows
+    FROM plan ORDER BY key_bucket
+    """
+
 _sql_query(
     "scale_salt_planner",
-    """
-    WITH hist AS (
-        SELECT CAST(length(bin(o_custkey + 2)) - 1 AS BIGINT) AS key_bucket,
-               count(*) AS n
-        FROM orders GROUP BY 1
-    ),
-    tot AS (SELECT max(n) AS mx, sum(n) AS s FROM hist),
-    plan AS (
-        SELECT key_bucket, n,
-               greatest(CAST(ceil(n * 32.0 / (SELECT s FROM tot)) AS BIGINT), 1L) AS fanout
-        FROM hist
-    )
-    SELECT key_bucket, CAST(n AS BIGINT) AS n_rows, CAST(fanout AS BIGINT) AS fanout,
-           CAST(ceil(n * 1.0 / fanout) AS BIGINT) AS salted_max_rows,
-           CAST((SELECT mx FROM tot) AS BIGINT) AS unsalted_max_rows
-    FROM plan ORDER BY key_bucket
-    """,
-    oracle="""
-    WITH hist AS (
-        SELECT CAST(length(bin(o_custkey + 2)) - 1 AS BIGINT) AS key_bucket,
-               count(*) AS n
-        FROM orders GROUP BY 1
-    ),
-    tot AS (SELECT max(n) AS mx, sum(n) AS s FROM hist),
-    plan AS (
-        SELECT key_bucket, n,
-               greatest(CAST(ceil(n * 32.0 / (SELECT s FROM tot)) AS BIGINT),
-                        CAST(1 AS BIGINT)) AS fanout
-        FROM hist
-    )
-    SELECT key_bucket, CAST(n AS BIGINT) AS n_rows, CAST(fanout AS BIGINT) AS fanout,
-           CAST(ceil(n * 1.0 / fanout) AS BIGINT) AS salted_max_rows,
-           CAST((SELECT mx FROM tot) AS BIGINT) AS unsalted_max_rows
-    FROM plan ORDER BY key_bucket
-    """,
+    _SALT_PLAN_SQL.format(one="1L"),
+    oracle=_SALT_PLAN_SQL.format(one="CAST(1 AS BIGINT)"),
     tags=("pipeline", "scale"),
     doc="Skew-salting planner: per-key salt fanout ceil(n*T/N) from ONE "
     "map-side histogram + 1-row totals broadcast, with the salted vs "
@@ -9874,54 +9752,33 @@ _sql_query(
 # Shape: three user-keyed conditional-min aggregations
 # over type-filtered scans (predicate pushdown on event_type), then a
 # bucket rollup.
+_FUNNEL_LAG_SQL = """
+    WITH v AS (SELECT user_id, min(ts) AS t1 FROM events
+               WHERE event_type = 'view' GROUP BY user_id),
+    c1 AS (SELECT e.user_id, min(e.ts) AS t2 FROM events e JOIN v ON v.user_id = e.user_id
+           WHERE e.event_type = 'click' AND e.ts > v.t1 GROUP BY e.user_id),
+    p AS (SELECT e.user_id, min(e.ts) AS t3 FROM events e JOIN c1 ON c1.user_id = e.user_id
+          WHERE e.event_type = 'purchase' AND e.ts > c1.t2 GROUP BY e.user_id),
+    lags AS (
+        SELECT 'view_to_click' AS step,
+               {us}(c1.t2) - {us}(v.t1) AS lag_us
+        FROM v JOIN c1 ON c1.user_id = v.user_id
+        UNION ALL
+        SELECT 'click_to_purchase',
+               {us}(p.t3) - {us}(c1.t2)
+        FROM c1 JOIN p ON p.user_id = c1.user_id
+    )
+    SELECT step,
+           CAST(length(bin((lag_us + 60000000) {div} 60000000)) - 1 AS BIGINT) AS log2_minutes_bucket,
+           CAST(count(*) AS BIGINT) AS n_users,
+           CAST(min(lag_us) AS BIGINT) AS min_lag_us,
+           CAST(max(lag_us) AS BIGINT) AS max_lag_us
+    FROM lags GROUP BY step, 2 ORDER BY step, log2_minutes_bucket
+    """
+
 _sql_query(
     "events_funnel_lag",
-    """
-    WITH v AS (SELECT user_id, min(ts) AS t1 FROM events
-               WHERE event_type = 'view' GROUP BY user_id),
-    c1 AS (SELECT e.user_id, min(e.ts) AS t2 FROM events e JOIN v ON v.user_id = e.user_id
-           WHERE e.event_type = 'click' AND e.ts > v.t1 GROUP BY e.user_id),
-    p AS (SELECT e.user_id, min(e.ts) AS t3 FROM events e JOIN c1 ON c1.user_id = e.user_id
-          WHERE e.event_type = 'purchase' AND e.ts > c1.t2 GROUP BY e.user_id),
-    lags AS (
-        SELECT 'view_to_click' AS step,
-               unix_micros(c1.t2) - unix_micros(v.t1) AS lag_us
-        FROM v JOIN c1 ON c1.user_id = v.user_id
-        UNION ALL
-        SELECT 'click_to_purchase',
-               unix_micros(p.t3) - unix_micros(c1.t2)
-        FROM c1 JOIN p ON p.user_id = c1.user_id
-    )
-    SELECT step,
-           CAST(length(bin((lag_us + 60000000) DIV 60000000)) - 1 AS BIGINT) AS log2_minutes_bucket,
-           CAST(count(*) AS BIGINT) AS n_users,
-           CAST(min(lag_us) AS BIGINT) AS min_lag_us,
-           CAST(max(lag_us) AS BIGINT) AS max_lag_us
-    FROM lags GROUP BY step, 2 ORDER BY step, log2_minutes_bucket
-    """,
-    oracle="""
-    WITH v AS (SELECT user_id, min(ts) AS t1 FROM events
-               WHERE event_type = 'view' GROUP BY user_id),
-    c1 AS (SELECT e.user_id, min(e.ts) AS t2 FROM events e JOIN v ON v.user_id = e.user_id
-           WHERE e.event_type = 'click' AND e.ts > v.t1 GROUP BY e.user_id),
-    p AS (SELECT e.user_id, min(e.ts) AS t3 FROM events e JOIN c1 ON c1.user_id = e.user_id
-          WHERE e.event_type = 'purchase' AND e.ts > c1.t2 GROUP BY e.user_id),
-    lags AS (
-        SELECT 'view_to_click' AS step,
-               epoch_us(c1.t2) - epoch_us(v.t1) AS lag_us
-        FROM v JOIN c1 ON c1.user_id = v.user_id
-        UNION ALL
-        SELECT 'click_to_purchase',
-               epoch_us(p.t3) - epoch_us(c1.t2)
-        FROM c1 JOIN p ON p.user_id = c1.user_id
-    )
-    SELECT step,
-           CAST(length(bin((lag_us + 60000000) // 60000000)) - 1 AS BIGINT) AS log2_minutes_bucket,
-           CAST(count(*) AS BIGINT) AS n_users,
-           CAST(min(lag_us) AS BIGINT) AS min_lag_us,
-           CAST(max(lag_us) AS BIGINT) AS max_lag_us
-    FROM lags GROUP BY step, 2 ORDER BY step, log2_minutes_bucket
-    """,
+    *_epoch_dialects(_FUNNEL_LAG_SQL, "DIV"),
     tags=("events", "funnel", "timeseries"),
     doc="Funnel conversion latency: per-user strictly-ordered step lags "
     "in log2-minute buckets (O(log range) output rows per step — the "

@@ -40,6 +40,16 @@ def _sql_query(name: str, spark_sql: str, oracle: str | None = _SAME, tags=(), d
     return _q
 
 
+def _epoch_dialects(template: str, div: str = "div") -> tuple[str, str]:
+    """``template`` as Spark SQL and as its DuckDB oracle: ``{us}`` becomes
+    each engine's epoch-microseconds function and ``{div}`` its integer
+    division (``div`` names Spark's spelling)."""
+    return (
+        template.format(us="unix_micros", div=div),
+        template.format(us="epoch_us", div="//"),
+    )
+
+
 # --- §2.5 window functions -------------------------------------------------
 
 # Reference: RowNumberFunction..NTileFunction (operator/window/), WindowOperator.java
@@ -63,38 +73,26 @@ _sql_query(
 )
 
 # Reference: FirstValueFunction..LeadFunction (+ IGNORE NULLS, SqlBase.g4:411-414)
+_WINDOW_VALUE_SQL = """
+    SELECT o_custkey, o_orderkey,
+           lag(o_totalprice) OVER w AS prev_price,
+           lead(o_totalprice, 2) OVER w AS next2_price,
+           first_value(o_orderkey) OVER w AS first_ok,
+           last_value(o_orderkey) OVER (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
+               ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING) AS last_ok,
+           nth_value(o_orderkey, 3) OVER (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
+               ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING) AS third_ok,
+           {last_nonp} OVER w AS last_nonp_status
+    FROM orders
+    WHERE o_custkey < 200
+    WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey)
+    ORDER BY o_custkey, o_orderkey
+    """
+
 _sql_query(
     "window_value",
-    """
-    SELECT o_custkey, o_orderkey,
-           lag(o_totalprice) OVER w AS prev_price,
-           lead(o_totalprice, 2) OVER w AS next2_price,
-           first_value(o_orderkey) OVER w AS first_ok,
-           last_value(o_orderkey) OVER (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
-               ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING) AS last_ok,
-           nth_value(o_orderkey, 3) OVER (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
-               ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING) AS third_ok,
-           last_value(nullif(o_orderstatus, 'P')) IGNORE NULLS OVER w AS last_nonp_status
-    FROM orders
-    WHERE o_custkey < 200
-    WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey)
-    ORDER BY o_custkey, o_orderkey
-    """,
-    oracle="""
-    SELECT o_custkey, o_orderkey,
-           lag(o_totalprice) OVER w AS prev_price,
-           lead(o_totalprice, 2) OVER w AS next2_price,
-           first_value(o_orderkey) OVER w AS first_ok,
-           last_value(o_orderkey) OVER (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
-               ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING) AS last_ok,
-           nth_value(o_orderkey, 3) OVER (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
-               ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING) AS third_ok,
-           last_value(nullif(o_orderstatus, 'P') IGNORE NULLS) OVER w AS last_nonp_status
-    FROM orders
-    WHERE o_custkey < 200
-    WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey)
-    ORDER BY o_custkey, o_orderkey
-    """,
+    _WINDOW_VALUE_SQL.format(last_nonp="last_value(nullif(o_orderstatus, 'P')) IGNORE NULLS"),
+    oracle=_WINDOW_VALUE_SQL.format(last_nonp="last_value(nullif(o_orderstatus, 'P') IGNORE NULLS)"),
     tags=("window", "value"),
     doc="IGNORE NULLS syntax differs: Spark `f(x) IGNORE NULLS`, DuckDB `f(x IGNORE NULLS)`.",
 )

@@ -127,6 +127,50 @@ def sensql_federated_single_node(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# The geo_* entries' synthesized rectangles: per customer key, a corner
+# (x0, y0), a size (w, h) and a point (lat, lon), each a DOUBLE.
+_RECT_COLS = {
+    "x0": "c_custkey % 20",
+    "y0": "c_nationkey % 10",
+    "w": "3 + c_custkey % 5",
+    "h": "2 + c_nationkey % 3",
+    "lat": "(c_custkey % 120) - 60 + 0.5",
+    "lon": "(c_custkey % 360) - 180 + 0.5",
+}
+
+
+def _rect_cte(cols: str, limit: int, duck: bool = False) -> str:
+    """``WITH g``: the rectangles' ``cols`` (space-separated ``_RECT_COLS``
+    names) for each customer key below ``limit``; ``duck`` spells the casts
+    for the DuckDB oracle."""
+    casts = ",\n".join(
+        f"({_RECT_COLS[c]})::DOUBLE AS {c}" if duck else f"cast({_RECT_COLS[c]} AS DOUBLE) AS {c}"
+        for c in cols.split()
+    )
+    return f"""
+    WITH g AS (
+        SELECT c_custkey,
+               {casts}
+        FROM customer WHERE c_custkey < {limit}
+    )"""
+
+
+# WKT of the rectangle (x0, y0, w, h), and of the open hook
+# (x0, y0) -> (x0 + w, y0) -> (x0 + w, y0 + 1) along its lower-right corner
+_RECT_WKT = """concat('POLYGON ((', x0, ' ', y0, ', ', x0 + w, ' ', y0, ', ',
+                      x0 + w, ' ', y0 + h, ', ', x0, ' ', y0 + h, '))')"""
+_HOOK_WKT = """concat('LINESTRING (', x0, ' ', y0, ', ', x0 + w, ' ', y0, ', ',
+                      x0 + w, ' ', y0 + 1.0, ')')"""
+
+
+def _geo_sql(spark: SparkSession, sf_dir: str, text: str) -> DataFrame:
+    """``catalog.sql`` with the geospatial functions registered."""
+    from sensql_presto_spark.functions.geospatial import register_geospatial
+
+    register_geospatial(spark)
+    return catalog.sql(spark, sf_dir, text)
+
+
 @register(
     "sensql_spatial_filter",
     oracle="""
@@ -150,10 +194,7 @@ def sensql_spatial_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     (functions/geospatial.py) — no row-at-a-time Python in the plan
     (asserted by tests/test_plans.py).
     """
-    from sensql_presto_spark.functions.geospatial import register_geospatial
-
-    register_geospatial(spark)
-    return catalog.sql(
+    return _geo_sql(
         spark,
         sf_dir,
         """
@@ -168,15 +209,8 @@ def sensql_spatial_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "geo_st_functions",
-    oracle="""
-    WITH g AS (
-        SELECT c_custkey,
-               (c_custkey % 20)::DOUBLE AS x0, (c_nationkey % 10)::DOUBLE AS y0,
-               (3 + c_custkey % 5)::DOUBLE AS w, (2 + c_nationkey % 3)::DOUBLE AS h,
-               ((c_custkey % 120) - 60 + 0.5)::DOUBLE AS lat,
-               ((c_custkey % 360) - 180 + 0.5)::DOUBLE AS lon
-        FROM customer WHERE c_custkey < 100
-    )
+    oracle=_rect_cte("x0 y0 w h lat lon", 100, duck=True)
+    + """
     SELECT c_custkey,
            w * h AS area,
            2 * (w + h) AS perimeter,
@@ -209,27 +243,13 @@ def geo_st_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
     geometry library — the containment/envelope outputs reduce to TRUE and
     the centroid/area/perimeter to key arithmetic.
     """
-    from sensql_presto_spark.functions.geospatial import register_geospatial
-
-    register_geospatial(spark)
-    return catalog.sql(
+    return _geo_sql(
         spark,
         sf_dir,
-        """
-        WITH g AS (
-            SELECT c_custkey,
-                   cast(c_custkey % 20 AS DOUBLE) AS x0,
-                   cast(c_nationkey % 10 AS DOUBLE) AS y0,
-                   cast(3 + c_custkey % 5 AS DOUBLE) AS w,
-                   cast(2 + c_nationkey % 3 AS DOUBLE) AS h,
-                   cast((c_custkey % 120) - 60 + 0.5 AS DOUBLE) AS lat,
-                   cast((c_custkey % 360) - 180 + 0.5 AS DOUBLE) AS lon
-            FROM customer WHERE c_custkey < 100
-        ),
+        _rect_cte("x0 y0 w h lat lon", 100)
+        + f""",
         p AS (
-            SELECT c_custkey, x0, y0, w, h, lat, lon,
-                   concat('POLYGON ((', x0, ' ', y0, ', ', x0 + w, ' ', y0, ', ',
-                          x0 + w, ' ', y0 + h, ', ', x0, ' ', y0 + h, '))') AS poly
+            SELECT c_custkey, x0, y0, w, h, lat, lon, {_RECT_WKT} AS poly
             FROM g
         )
         SELECT c_custkey,
@@ -252,15 +272,8 @@ def geo_st_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "geo_st_surface2",
-    oracle="""
-    WITH g AS (
-        SELECT c_custkey,
-               (c_custkey % 20)::DOUBLE AS x0, (c_nationkey % 10)::DOUBLE AS y0,
-               (3 + c_custkey % 5)::DOUBLE AS w, (2 + c_nationkey % 3)::DOUBLE AS h,
-               ((c_custkey % 120) - 60 + 0.5)::DOUBLE AS lat,
-               ((c_custkey % 360) - 180 + 0.5)::DOUBLE AS lon
-        FROM customer WHERE c_custkey < 100
-    )
+    oracle=_rect_cte("x0 y0 w h lat lon", 100, duck=True)
+    + """
     SELECT c_custkey,
            x0 AS xmin, x0 + w AS xmax, y0 AS ymin, y0 + h AS ymax,
            'ST_Polygon' AS gtype, 2 AS gdim, FALSE AS gempty,
@@ -287,27 +300,13 @@ def geo_st_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def geo_st_surface2(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exercise the second geospatial tranche end-to-end."""
-    from sensql_presto_spark.functions.geospatial import register_geospatial
-
-    register_geospatial(spark)
-    return catalog.sql(
+    return _geo_sql(
         spark,
         sf_dir,
-        """
-        WITH g AS (
-            SELECT c_custkey,
-                   cast(c_custkey % 20 AS DOUBLE) AS x0,
-                   cast(c_nationkey % 10 AS DOUBLE) AS y0,
-                   cast(3 + c_custkey % 5 AS DOUBLE) AS w,
-                   cast(2 + c_nationkey % 3 AS DOUBLE) AS h,
-                   cast((c_custkey % 120) - 60 + 0.5 AS DOUBLE) AS lat,
-                   cast((c_custkey % 360) - 180 + 0.5 AS DOUBLE) AS lon
-            FROM customer WHERE c_custkey < 100
-        ),
+        _rect_cte("x0 y0 w h lat lon", 100)
+        + f""",
         p AS (
-            SELECT c_custkey, x0, y0, w, h, lat, lon,
-                   concat('POLYGON ((', x0, ' ', y0, ', ', x0 + w, ' ', y0, ', ',
-                          x0 + w, ' ', y0 + h, ', ', x0, ' ', y0 + h, '))') AS poly,
+            SELECT c_custkey, x0, y0, w, h, lat, lon, {_RECT_WKT} AS poly,
                    concat('LINESTRING (', x0, ' ', y0, ', ', x0 + w, ' ', y0, ')') AS seg
             FROM g
         )
@@ -345,13 +344,8 @@ def geo_st_surface2(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "geo_st_accessors",
-    oracle="""
-    WITH g AS (
-        SELECT c_custkey,
-               (c_custkey % 20)::DOUBLE AS x0, (c_nationkey % 10)::DOUBLE AS y0,
-               (3 + c_custkey % 5)::DOUBLE AS w
-        FROM customer WHERE c_custkey < 60
-    )
+    oracle=_rect_cte("x0 y0 w", 60, duck=True)
+    + """
     SELECT c_custkey,
            'POINT (' || x0 || ' ' || y0 || ')' AS start_pt,
            'POINT (' || (x0 + w) || ' ' || (y0 + 1.0) || ')' AS end_pt,
@@ -371,24 +365,13 @@ def geo_st_surface2(spark: SparkSession, sf_dir: str) -> DataFrame:
     "ST_Boundary/ST_NumGeometries) with closed-form oracle.",
 )
 def geo_st_accessors(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from sensql_presto_spark.functions.geospatial import register_geospatial
-
-    register_geospatial(spark)
-    return catalog.sql(
+    return _geo_sql(
         spark,
         sf_dir,
-        """
-        WITH g AS (
-            SELECT c_custkey,
-                   cast(c_custkey % 20 AS DOUBLE) AS x0,
-                   cast(c_nationkey % 10 AS DOUBLE) AS y0,
-                   cast(3 + c_custkey % 5 AS DOUBLE) AS w
-            FROM customer WHERE c_custkey < 60
-        ),
+        _rect_cte("x0 y0 w", 60)
+        + f""",
         p AS (
-            SELECT c_custkey, x0, y0, w,
-                   concat('LINESTRING (', x0, ' ', y0, ', ', x0 + w, ' ', y0, ', ',
-                          x0 + w, ' ', y0 + 1.0, ')') AS line
+            SELECT c_custkey, x0, y0, w, {_HOOK_WKT} AS line
             FROM g
         )
         SELECT c_custkey,
@@ -427,12 +410,8 @@ def geo_st_accessors(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "geo_st_setops",
-    oracle="""
-    WITH g AS (
-        SELECT c_custkey,
-               (c_custkey % 20)::DOUBLE AS x0, (c_nationkey % 10)::DOUBLE AS y0
-        FROM customer WHERE c_custkey < 60
-    )
+    oracle=_rect_cte("x0 y0", 60, duck=True)
+    + """
     SELECT c_custkey,
            4.0 AS isect_area,
            TRUE AS union_keeps_container,
@@ -456,19 +435,11 @@ def geo_st_accessors(spark: SparkSession, sf_dir: str) -> DataFrame:
     "oracle on synthesized rectangles.",
 )
 def geo_st_setops(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from sensql_presto_spark.functions.geospatial import register_geospatial
-
-    register_geospatial(spark)
-    return catalog.sql(
+    return _geo_sql(
         spark,
         sf_dir,
-        """
-        WITH g AS (
-            SELECT c_custkey,
-                   cast(c_custkey % 20 AS DOUBLE) AS x0,
-                   cast(c_nationkey % 10 AS DOUBLE) AS y0
-            FROM customer WHERE c_custkey < 60
-        ),
+        _rect_cte("x0 y0", 60)
+        + """,
         p AS (
             SELECT c_custkey, x0, y0,
                    concat('POLYGON ((', x0, ' ', y0, ', ', x0 + 4, ' ', y0, ', ',
@@ -508,12 +479,8 @@ def geo_st_setops(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "geo_wkb_geojson",
-    oracle="""
-    WITH g AS (
-        SELECT c_custkey,
-               (c_custkey % 20)::DOUBLE AS x0, (c_nationkey % 10)::DOUBLE AS y0
-        FROM customer WHERE c_custkey < 60
-    )
+    oracle=_rect_cte("x0 y0", 60, duck=True)
+    + """
     SELECT c_custkey,
            42 AS wkb_pt_hex_len,
            TRUE AS wkb_line_roundtrip,
@@ -538,19 +505,11 @@ def geo_st_setops(spark: SparkSession, sf_dir: str) -> DataFrame:
     "not textually, so WKT float formatting cannot drift.",
 )
 def geo_wkb_geojson(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from sensql_presto_spark.functions.geospatial import register_geospatial
-
-    register_geospatial(spark)
-    return catalog.sql(
+    return _geo_sql(
         spark,
         sf_dir,
-        """
-        WITH g AS (
-            SELECT c_custkey,
-                   cast(c_custkey % 20 AS DOUBLE) AS x0,
-                   cast(c_nationkey % 10 AS DOUBLE) AS y0
-            FROM customer WHERE c_custkey < 60
-        ),
+        _rect_cte("x0 y0", 60)
+        + """,
         p AS (
             SELECT c_custkey, x0, y0,
                    concat('POINT (', x0, ' ', y0, ')') AS pt,
@@ -590,12 +549,8 @@ def geo_wkb_geojson(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "geo_line_ops",
-    oracle="""
-    WITH g AS (
-        SELECT c_custkey,
-               (c_custkey % 20)::DOUBLE AS x0, (c_nationkey % 10)::DOUBLE AS y0
-        FROM customer WHERE c_custkey < 60
-    )
+    oracle=_rect_cte("x0 y0", 60, duck=True)
+    + """
     SELECT c_custkey,
            0.25 AS locate_frac,
            x0 + 2 AS interp_x,
@@ -611,19 +566,11 @@ def geo_wkb_geojson(spark: SparkSession, sf_dir: str) -> DataFrame:
     "and Douglas-Peucker vs closed-form oracle.",
 )
 def geo_line_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from sensql_presto_spark.functions.geospatial import register_geospatial
-
-    register_geospatial(spark)
-    return catalog.sql(
+    return _geo_sql(
         spark,
         sf_dir,
-        """
-        WITH g AS (
-            SELECT c_custkey,
-                   cast(c_custkey % 20 AS DOUBLE) AS x0,
-                   cast(c_nationkey % 10 AS DOUBLE) AS y0
-            FROM customer WHERE c_custkey < 60
-        ),
+        _rect_cte("x0 y0", 60)
+        + """,
         p AS (
             SELECT c_custkey, x0, y0,
                    concat('LINESTRING (', x0, ' ', y0, ', ', x0 + 8, ' ', y0, ')') AS line,
@@ -650,13 +597,8 @@ def geo_line_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "geo_bing_parity",
-    oracle="""
-    WITH g AS (
-        SELECT c_custkey,
-               ((c_custkey % 120) - 60 + 0.5)::DOUBLE AS lat,
-               ((c_custkey % 360) - 180 + 0.5)::DOUBLE AS lon
-        FROM customer WHERE c_custkey < 60
-    )
+    oracle=_rect_cte("lat lon", 60, duck=True)
+    + """
     SELECT c_custkey,
            TRUE AS tile_eq_tile_at,
            TRUE AS coords_roundtrip,
@@ -675,19 +617,11 @@ def geo_line_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     "constructed from child tile envelope midpoints.",
 )
 def geo_bing_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from sensql_presto_spark.functions.geospatial import register_geospatial
-
-    register_geospatial(spark)
-    return catalog.sql(
+    return _geo_sql(
         spark,
         sf_dir,
-        """
-        WITH g AS (
-            SELECT c_custkey,
-                   cast((c_custkey % 120) - 60 + 0.5 AS DOUBLE) AS lat,
-                   cast((c_custkey % 360) - 180 + 0.5 AS DOUBLE) AS lon
-            FROM customer WHERE c_custkey < 60
-        ),
+        _rect_cte("lat lon", 60)
+        + """,
         t AS (
             SELECT c_custkey, lat, lon,
                    bing_tile_at(lat, lon, 12) AS qk,
@@ -758,10 +692,7 @@ def geo_bing_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     "cell area gated by an error-bound boolean vs the analytic value.",
 )
 def geo_spherical(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from sensql_presto_spark.functions.geospatial import register_geospatial
-
-    register_geospatial(spark)
-    return catalog.sql(
+    return _geo_sql(
         spark,
         sf_dir,
         """
@@ -811,10 +742,7 @@ def geo_spherical(spark: SparkSession, sf_dir: str) -> DataFrame:
     "hull area/vertex count and union cardinality closed-form.",
 )
 def geo_agg_hulls(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from sensql_presto_spark.functions.geospatial import register_geospatial
-
-    register_geospatial(spark)
-    return catalog.sql(
+    return _geo_sql(
         spark,
         sf_dir,
         """
@@ -883,13 +811,8 @@ def sensql_knn_federated(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "geo_st_tail",
-    oracle="""
-    WITH g AS (
-        SELECT c_custkey,
-               (c_custkey % 20)::DOUBLE AS x0, (c_nationkey % 10)::DOUBLE AS y0,
-               (3 + c_custkey % 5)::DOUBLE AS w
-        FROM customer WHERE c_custkey < 60
-    )
+    oracle=_rect_cte("x0 y0 w", 60, duck=True)
+    + """
     SELECT c_custkey,
            'POLYGON ((' || CAST(x0 - 2 AS BIGINT) || ' ' || CAST(y0 - 2 AS BIGINT)
                || ', ' || CAST(x0 + w + 2 AS BIGINT) || ' ' || CAST(y0 - 2 AS BIGINT)
@@ -916,24 +839,13 @@ def sensql_knn_federated(spark: SparkSession, sf_dir: str) -> DataFrame:
     "cover both endpoints' discs; multipoint buffers are polygons).",
 )
 def geo_st_tail(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from sensql_presto_spark.functions.geospatial import register_geospatial
-
-    register_geospatial(spark)
-    return catalog.sql(
+    return _geo_sql(
         spark,
         sf_dir,
-        """
-        WITH g AS (
-            SELECT c_custkey,
-                   cast(c_custkey % 20 AS DOUBLE) AS x0,
-                   cast(c_nationkey % 10 AS DOUBLE) AS y0,
-                   cast(3 + c_custkey % 5 AS DOUBLE) AS w
-            FROM customer WHERE c_custkey < 60
-        ),
+        _rect_cte("x0 y0 w", 60)
+        + f""",
         p AS (
-            SELECT c_custkey, x0, y0, w,
-                   concat('LINESTRING (', x0, ' ', y0, ', ', x0 + w, ' ', y0, ', ',
-                          x0 + w, ' ', y0 + 1.0, ')') AS line,
+            SELECT c_custkey, x0, y0, w, {_HOOK_WKT} AS line,
                    concat('POLYGON ((', cast(x0 AS BIGINT), ' ', cast(y0 AS BIGINT), ', ',
                           cast(x0 + w AS BIGINT), ' ', cast(y0 AS BIGINT), ', ',
                           cast(x0 AS BIGINT), ' ', cast(y0 + 1 AS BIGINT), '))') AS tri

@@ -227,22 +227,7 @@ _KHLL_SQL = """
 
 @register(
     "agg_khll_uniqueness",
-    oracle="""
-    WITH per_key AS (
-        SELECT user_id, count(DISTINCT event_type) AS nv
-        FROM events GROUP BY user_id
-    ),
-    hist AS (
-        SELECT least(nv, 5) AS bucket, count(*) AS n_keys
-        FROM per_key GROUP BY least(nv, 5)
-    )
-    SELECT bucket,
-           round(n_keys / cast(sum(n_keys) OVER () AS double), 6) AS frac_keys,
-           round(sum(CASE WHEN bucket <= 2 THEN n_keys ELSE 0 END) OVER ()
-                 / cast(sum(n_keys) OVER () AS double), 6) AS reident_potential_t2
-    FROM hist
-    ORDER BY bucket
-    """,
+    oracle=_KHLL_SQL,
     tags=("sketch", "khll", "aggregation"),
     doc="KHyperLogLog uniqueness_distribution + reidentification_potential "
     "as the two-level aggregation the sketch approximates.",
@@ -269,19 +254,7 @@ def agg_khll_uniqueness(spark: SparkSession, sf_dir: str) -> DataFrame:
 # cross-shard contract.  All arithmetic exact BIGINT: polynomial char
 # hash mod 1e9+7, per-row affine rehash ((h*A_r + B_r) mod 1e9+7) mod 64
 # with A_r,B_r pinned constants — identical in both dialects.
-_CMS_SPARK_SQL = """
-    WITH tf AS (
-        SELECT term, count(*) AS c
-        FROM (SELECT explode(split(text, ' ')) AS term FROM documents)
-        GROUP BY term
-    ),
-    hashed AS (
-        SELECT term, c,
-               aggregate(split(term, ''), 7L,
-                         (acc, ch) -> (acc * 31 + ascii(ch)) % 1000000007) AS h0
-        FROM tf
-    ),
-    rows_ AS (SELECT explode(sequence(0, 3)) AS r),
+_CMS_CELLS_SQL = """
     cells AS (
         SELECT r,
                ((h0 * (CASE r WHEN 0 THEN 31 WHEN 1 THEN 131
@@ -312,7 +285,26 @@ _CMS_SPARK_SQL = """
     ORDER BY rk
 """
 
-_CMS_DUCK_SQL = """
+_CMS_SPARK_SQL = (
+    """
+    WITH tf AS (
+        SELECT term, count(*) AS c
+        FROM (SELECT explode(split(text, ' ')) AS term FROM documents)
+        GROUP BY term
+    ),
+    hashed AS (
+        SELECT term, c,
+               aggregate(split(term, ''), 7L,
+                         (acc, ch) -> (acc * 31 + ascii(ch)) % 1000000007) AS h0
+        FROM tf
+    ),
+    rows_ AS (SELECT explode(sequence(0, 3)) AS r),
+"""
+    + _CMS_CELLS_SQL
+)
+
+_CMS_DUCK_SQL = (
+    """
     WITH tf AS (
         SELECT term, count(*) AS c
         FROM (SELECT unnest(string_split(text, ' ')) AS term FROM documents)
@@ -326,35 +318,9 @@ _CMS_DUCK_SQL = """
         FROM tf
     ),
     rows_ AS (SELECT unnest(range(0, 4)) AS r),
-    cells AS (
-        SELECT r,
-               ((h0 * (CASE r WHEN 0 THEN 31 WHEN 1 THEN 131
-                              WHEN 2 THEN 1031 ELSE 8191 END)
-                 + r * 97 + 1) % 1000000007) % 8 AS b,
-               sum(c) AS cell
-        FROM hashed CROSS JOIN rows_
-        GROUP BY 1, 2
-    ),
-    top5 AS (
-        SELECT term, c, h0,
-               row_number() OVER (ORDER BY c DESC, term) AS rk
-        FROM hashed
-    ),
-    probes AS (
-        SELECT t.rk, t.term, t.c, r.r,
-               ((t.h0 * (CASE r.r WHEN 0 THEN 31 WHEN 1 THEN 131
-                                  WHEN 2 THEN 1031 ELSE 8191 END)
-                 + r.r * 97 + 1) % 1000000007) % 8 AS b
-        FROM (SELECT * FROM top5 WHERE rk <= 5) t CROSS JOIN rows_ r
-    )
-    SELECT CAST(p.rk AS BIGINT) AS rk, p.term,
-           CAST(p.c AS BIGINT) AS true_count,
-           CAST(min(cl.cell) AS BIGINT) AS cms_estimate,
-           CAST(min(cl.cell) - p.c AS BIGINT) AS overcount
-    FROM probes p JOIN cells cl ON p.r = cl.r AND p.b = cl.b
-    GROUP BY p.rk, p.term, p.c
-    ORDER BY rk
 """
+    + _CMS_CELLS_SQL
+)
 
 
 @register(

@@ -39,6 +39,31 @@ def _slice(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _segment_totals(joined: DataFrame) -> DataFrame:
+    """Per customer segment, the joined events' count and exact e4 value
+    sum."""
+    return (
+        joined.groupBy("c_mktsegment")
+        .agg(
+            F.count("*").alias("n"),
+            F.sum(F.floor(F.col("value") * 10000 + F.lit(0.5)).cast("long")).alias("sum_val_e4"),
+        )
+        .orderBy("c_mktsegment")
+    )
+
+
+def _as_slice(df: DataFrame) -> DataFrame:
+    """A read-back slice cast to the catalog schema, in key order: CSV/JSON
+    and JDBC types surface as read, so the comparison checks values, not
+    inference artifacts."""
+    return df.select(
+        F.col("c_custkey").cast("long"),
+        F.col("c_name").cast("string"),
+        F.col("c_nationkey").cast("int"),
+        F.col("c_acctbal").cast("double"),
+    ).orderBy("c_custkey")
+
+
 def _roundtrip(spark: SparkSession, sf_dir: str, fmt: str, **read_opts) -> DataFrame:
     path = os.path.join(_DIR, f"source_{fmt}_demo")
     df = _slice(spark, sf_dir)
@@ -49,16 +74,7 @@ def _roundtrip(spark: SparkSession, sf_dir: str, fmt: str, **read_opts) -> DataF
     reader = spark.read.format(fmt)
     for k, v in read_opts.items():
         reader = reader.option(k, v)
-    out = reader.load(path)
-    # CSV/JSON types surface as read: cast back to the catalog schema so
-    # the comparison checks values, not inference artifacts.
-    out = out.select(
-        F.col("c_custkey").cast("long"),
-        F.col("c_name").cast("string"),
-        F.col("c_nationkey").cast("int"),
-        F.col("c_acctbal").cast("double"),
-    )
-    return out.orderBy("c_custkey")
+    return _as_slice(reader.load(path))
 
 
 @register(
@@ -257,16 +273,7 @@ def scale_salted_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         (salted_fact.join_key == salted_dim.c_custkey)
         & (salted_fact.salt == salted_dim.salt),
     )
-    return (
-        joined.groupBy("c_mktsegment")
-        .agg(
-            F.count("*").alias("n"),
-            F.sum(F.floor(F.col("value") * 10000 + F.lit(0.5)).cast("long")).alias(
-                "sum_val_e4"
-            ),
-        )
-        .orderBy("c_mktsegment")
-    )
+    return _segment_totals(joined)
 
 
 # --- JDBC connector (the reference's presto-base-jdbc family: mysql/
@@ -335,13 +342,7 @@ def source_jdbc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("numPartitions", "4")
         .load()
     )
-    out = out.select(
-        F.col("c_custkey").cast("long"),
-        F.col("c_name").cast("string"),
-        F.col("c_nationkey").cast("int"),
-        F.col("c_acctbal").cast("double"),
-    )
-    return out.orderBy("c_custkey")
+    return _as_slice(out)
 
 
 @register(
@@ -489,13 +490,13 @@ def source_binaryfile_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "scale_distributed_sort",
-    oracle="""
+# lineitem in 32 key-range shards, each row ranked in key order within its
+# shard; ``{div}`` is the dialect's integer division
+_SHARDED_SQL = """
     WITH mx AS (SELECT max(l_orderkey) + 1 AS m FROM lineitem),
     sharded AS (
         SELECT l.l_orderkey, l.l_linenumber,
-               CAST(l.l_orderkey * 32 // mx.m AS BIGINT) AS shard
+               CAST(l.l_orderkey * 32 {div} mx.m AS BIGINT) AS shard
         FROM lineitem l CROSS JOIN mx
     ),
     ranked AS (
@@ -504,6 +505,13 @@ def source_binaryfile_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
                                   ORDER BY l_orderkey, l_linenumber) AS rn
         FROM sharded
     )
+"""
+
+
+@register(
+    "scale_distributed_sort",
+    oracle=_SHARDED_SQL.format(div="//")
+    + """
     SELECT shard,
            CAST(count(*) AS BIGINT) AS n_rows,
            min(l_orderkey) AS min_key,
@@ -534,19 +542,8 @@ def scale_distributed_sort(spark: SparkSession, sf_dir: str) -> DataFrame:
     return catalog.sql(
         spark,
         sf_dir,
-        """
-        WITH mx AS (SELECT max(l_orderkey) + 1 AS m FROM lineitem),
-        sharded AS (
-            SELECT l.l_orderkey, l.l_linenumber,
-                   CAST(l.l_orderkey * 32 DIV mx.m AS BIGINT) AS shard
-            FROM lineitem l CROSS JOIN mx
-        ),
-        ranked AS (
-            SELECT shard, l_orderkey, l_linenumber,
-                   row_number() OVER (PARTITION BY shard
-                                      ORDER BY l_orderkey, l_linenumber) AS rn
-            FROM sharded
-        )
+        _SHARDED_SQL.format(div="DIV")
+        + """
         SELECT shard,
                count(1) AS n_rows,
                min(l_orderkey) AS min_key,
@@ -682,52 +679,32 @@ def scale_zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
 # over the FILE INVENTORY (metadata, 97 rows here; millions at worst in
 # production — never data rows), so the single-partition sort is
 # metadata-bounded by design.
-from sensql_presto_spark.queries.relational import _sql_query as _sql_q
-
-_sql_q(
-    "scale_file_compaction",
+_FILE_COMPACTION_SQL = """
+    WITH files AS (
+        SELECT CAST(doc_id % 97 AS BIGINT) AS shard,
+               CAST(sum(n_chars) AS BIGINT) AS bytes
+        FROM documents GROUP BY doc_id % 97
+    ),
+    planned AS (
+        SELECT shard, bytes,
+               CAST(coalesce(sum(bytes) OVER (ORDER BY shard
+                   ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
+                   {div} 4096 AS BIGINT) AS bucket
+        FROM files
+    )
+    SELECT bucket,
+           CAST(count(*) AS BIGINT) AS n_files,
+           CAST(sum(bytes) AS BIGINT) AS bytes_total,
+           CAST(min(shard) AS BIGINT) AS first_shard
+    FROM planned
+    GROUP BY bucket
+    ORDER BY bucket
     """
-    WITH files AS (
-        SELECT CAST(doc_id % 97 AS BIGINT) AS shard,
-               CAST(sum(n_chars) AS BIGINT) AS bytes
-        FROM documents GROUP BY doc_id % 97
-    ),
-    planned AS (
-        SELECT shard, bytes,
-               CAST(coalesce(sum(bytes) OVER (ORDER BY shard
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-                   DIV 4096 AS BIGINT) AS bucket
-        FROM files
-    )
-    SELECT bucket,
-           CAST(count(*) AS BIGINT) AS n_files,
-           CAST(sum(bytes) AS BIGINT) AS bytes_total,
-           CAST(min(shard) AS BIGINT) AS first_shard
-    FROM planned
-    GROUP BY bucket
-    ORDER BY bucket
-    """,
-    oracle="""
-    WITH files AS (
-        SELECT CAST(doc_id % 97 AS BIGINT) AS shard,
-               CAST(sum(n_chars) AS BIGINT) AS bytes
-        FROM documents GROUP BY doc_id % 97
-    ),
-    planned AS (
-        SELECT shard, bytes,
-               CAST(coalesce(sum(bytes) OVER (ORDER BY shard
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-                   // 4096 AS BIGINT) AS bucket
-        FROM files
-    )
-    SELECT bucket,
-           CAST(count(*) AS BIGINT) AS n_files,
-           CAST(sum(bytes) AS BIGINT) AS bytes_total,
-           CAST(min(shard) AS BIGINT) AS first_shard
-    FROM planned
-    GROUP BY bucket
-    ORDER BY bucket
-    """,
+
+_sql_query(
+    "scale_file_compaction",
+    _FILE_COMPACTION_SQL.format(div="DIV"),
+    oracle=_FILE_COMPACTION_SQL.format(div="//"),
     tags=("scale", "compaction", "maintenance"),
     doc="Small-file compaction planner (Iceberg rewrite_data_files / Delta "
     "OPTIMIZE bin-packing): running-total bucket assignment over the file "
@@ -795,17 +772,7 @@ def scale_aqe_skew_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     c = catalog.table(s2, sf_dir, "customer")
     joined = e.join(c, e.join_key == c.c_custkey)
-    out = (
-        joined.groupBy("c_mktsegment")
-        .agg(
-            F.count("*").alias("n"),
-            F.sum(F.floor(F.col("value") * 10000 + F.lit(0.5)).cast("long")).alias(
-                "sum_val_e4"
-            ),
-        )
-        .orderBy("c_mktsegment")
-    )
-    return out
+    return _segment_totals(joined)
 
 
 @register(
@@ -861,56 +828,41 @@ def source_parquet_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFra
 # guard is the PERMISSIVE stand-in).  One scan, one map-side-combined
 # groupBy on the recovered segment with corrupt records bucketed under
 # a sentinel.
+_JSON_AUDIT_SQL = """
+    WITH raw AS (
+        SELECT c_custkey,
+               CASE WHEN c_custkey % 7 = 0 THEN substring(j, 1, length(j) - 3)
+                    ELSE j END AS line
+        FROM (SELECT c_custkey,
+                     {j} AS j
+              FROM customer)
+    ),
+    parsed AS (
+        SELECT c_custkey,
+               {seg} AS seg,
+               {k} AS k
+        FROM raw
+    )
+    SELECT coalesce(seg, '__CORRUPT__') AS segment,
+           CAST(count(*) AS BIGINT) AS n,
+           CAST(count(k) AS BIGINT) AS k_recovered,
+           CAST(min(c_custkey) AS BIGINT) AS min_key,
+           CAST(max(c_custkey) AS BIGINT) AS max_key
+    FROM parsed GROUP BY 1 ORDER BY segment
+    """
+
 _sql_query(
     "source_json_corrupt_audit",
-    """
-    WITH raw AS (
-        SELECT c_custkey,
-               CASE WHEN c_custkey % 7 = 0 THEN substring(j, 1, length(j) - 3)
-                    ELSE j END AS line
-        FROM (SELECT c_custkey,
-                     concat('{"k":', CAST(c_custkey AS STRING),
-                            ',"seg":"', c_mktsegment, '"}') AS j
-              FROM customer)
+    _JSON_AUDIT_SQL.format(
+        j="""concat('{"k":', CAST(c_custkey AS STRING), ',"seg":"', c_mktsegment, '"}')""",
+        seg="get_json_object(line, '$.seg')",
+        k="get_json_object(line, '$.k')",
     ),
-    parsed AS (
-        SELECT c_custkey,
-               get_json_object(line, '$.seg') AS seg,
-               get_json_object(line, '$.k') AS k
-        FROM raw
-    )
-    SELECT coalesce(seg, '__CORRUPT__') AS segment,
-           CAST(count(*) AS BIGINT) AS n,
-           CAST(count(k) AS BIGINT) AS k_recovered,
-           CAST(min(c_custkey) AS BIGINT) AS min_key,
-           CAST(max(c_custkey) AS BIGINT) AS max_key
-    FROM parsed GROUP BY 1 ORDER BY segment
-    """,
-    oracle="""
-    WITH raw AS (
-        SELECT c_custkey,
-               CASE WHEN c_custkey % 7 = 0 THEN substring(j, 1, length(j) - 3)
-                    ELSE j END AS line
-        FROM (SELECT c_custkey,
-                     '{"k":' || CAST(c_custkey AS VARCHAR)
-                     || ',"seg":"' || c_mktsegment || '"}' AS j
-              FROM customer)
+    oracle=_JSON_AUDIT_SQL.format(
+        j="""'{"k":' || CAST(c_custkey AS VARCHAR) || ',"seg":"' || c_mktsegment || '"}'""",
+        seg="CASE WHEN json_valid(line) THEN json_extract_string(line, '$.seg') END",
+        k="CASE WHEN json_valid(line) THEN json_extract_string(line, '$.k') END",
     ),
-    parsed AS (
-        SELECT c_custkey,
-               CASE WHEN json_valid(line)
-                    THEN json_extract_string(line, '$.seg') END AS seg,
-               CASE WHEN json_valid(line)
-                    THEN json_extract_string(line, '$.k') END AS k
-        FROM raw
-    )
-    SELECT coalesce(seg, '__CORRUPT__') AS segment,
-           CAST(count(*) AS BIGINT) AS n,
-           CAST(count(k) AS BIGINT) AS k_recovered,
-           CAST(min(c_custkey) AS BIGINT) AS min_key,
-           CAST(max(c_custkey) AS BIGINT) AS max_key
-    FROM parsed GROUP BY 1 ORDER BY segment
-    """,
     tags=("sources", "json", "quality"),
     doc="PERMISSIVE-ingestion audit: deterministic JSON feed with every "
     "7th record truncated mid-string, parsed with NULL-on-malformed "
@@ -952,14 +904,34 @@ import tempfile as _tempfile2
 KAFKA_TOPIC_PATH = f"{_tempfile2.gettempdir()}/spark_graft_kafka_{os.getpid()}"
 _atexit.register(_shutil.rmtree, KAFKA_TOPIC_PATH, ignore_errors=True)
 
-_KAFKA_ORACLE = """
+
+def _topic_events(spark: SparkSession, sf_dir: str, *cols) -> DataFrame:
+    """The Kafka fixtures' events (event_id < 200) as ``cols`` plus their
+    topic partition ``part``."""
+    return (
+        catalog.table(spark, sf_dir, "events")
+        .filter(F.col("event_id") < 200)
+        .select(*cols, (F.col("event_id") % 4).cast("int").alias("part"))
+    )
+
+
+def _topic_base_sql(cols: str) -> str:
+    """``WITH base``: the Kafka fixtures' events as ``cols`` with each
+    message's topic partition and offset — the oracles' replay of the
+    topic writers."""
+    return f"""
 WITH base AS (
-    SELECT event_id, user_id, event_type,
-           CAST(floor(value * 10000 + 0.5) AS BIGINT) AS v_e4,
+    SELECT {cols},
            CAST(event_id % 4 AS BIGINT) AS part,
-           CAST(row_number() OVER (PARTITION BY event_id % 4 ORDER BY event_id) - 1 AS BIGINT) AS off
+           CAST(row_number() OVER (PARTITION BY event_id % 4 ORDER BY event_id) - 1
+                AS BIGINT) AS off
     FROM events WHERE event_id < 200
-)
+)"""
+
+
+_KAFKA_ORACLE = _topic_base_sql(
+    "event_id, user_id, event_type, CAST(floor(value * 10000 + 0.5) AS BIGINT) AS v_e4"
+) + """
 SELECT fmt, event_id, user_id, event_type, value_e4, delta, part, off FROM (
     SELECT 'json' AS fmt, event_id, user_id, event_type, v_e4 AS value_e4,
            CAST(NULL AS BIGINT) AS delta, part, off
@@ -1000,20 +972,15 @@ def _be_bytes(expr: str, nbytes: int) -> str:
     "signed sign-extension and an open-ended varchar tail.",
 )
 def source_kafka_decoder(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pandas as pd
-
     from sensql_presto_spark import kafka_decoder as kd
 
-    base = (
-        catalog.table(spark, sf_dir, "events")
-        .filter(F.col("event_id") < 200)
-        .select(
-            "event_id",
-            "user_id",
-            "event_type",
-            F.floor(F.col("value") * 10000 + F.lit(0.5)).cast("long").alias("v_e4"),
-            (F.col("event_id") % 4).cast("int").alias("part"),
-        )
+    base = _topic_events(
+        spark,
+        sf_dir,
+        "event_id",
+        "user_id",
+        "event_type",
+        F.floor(F.col("value") * 10000 + F.lit(0.5)).cast("long").alias("v_e4"),
     )
 
     cfull = F.concat(
@@ -1067,35 +1034,12 @@ def source_kafka_decoder(spark: SparkSession, sf_dir: str) -> DataFrame:
         "part", "event_id", key.alias("key"), "value"
     )
 
+    def framed(pdf):
+        return [(bytes(k), bytes(v)) for k, v in zip(pdf["key"], pdf["value"])]
+
     root = KAFKA_TOPIC_PATH
     for fmt, msgs in (("json", json_msgs), ("csv", csv_msgs), ("raw", raw_msgs)):
-        tdir = os.path.join(root, fmt)
-        _shutil.rmtree(tdir, ignore_errors=True)
-        os.makedirs(tdir, exist_ok=True)
-
-        def make_writer(_tdir):
-            # single-arg function: applyInPandas passes (key, pdf) to
-            # two-parameter callables, so the closure binds the dir instead
-            def write_part(pdf: "pd.DataFrame") -> "pd.DataFrame":
-                pdf = pdf.sort_values("event_id")
-                part = int(pdf["part"].iloc[0])
-                blob = kd.encode_segment(
-                    [(bytes(k), bytes(v)) for k, v in zip(pdf["key"], pdf["value"])]
-                )
-                with open(os.path.join(_tdir, f"partition={part}.seg"), "wb") as f:
-                    f.write(blob)
-                return pd.DataFrame({"part": [part], "n": [len(pdf)]})
-
-            return write_part
-
-        write_part = make_writer(tdir)
-
-        written = (
-            msgs.groupBy("part")
-            .applyInPandas(write_part, "part int, n long")
-            .collect()
-        )
-        assert sum(r.n for r in written) > 0, f"empty kafka fixture topic {fmt}"
+        kd.write_topic_dir(msgs, os.path.join(root, fmt), framed)
 
     jcols = [
         kd.KafkaColumn("event_id", "BIGINT", "meta/id"),
@@ -1151,14 +1095,7 @@ def source_kafka_decoder(spark: SparkSession, sf_dir: str) -> DataFrame:
 # both engines read the identical parquet bits).  Scale shape: the
 # writer is one applyInPandas over partition groups; the reader is the
 # same binaryFile + Arrow mapInPandas pass as the other decoders.
-_KAFKA_AVRO_ORACLE = """
-WITH base AS (
-    SELECT event_id, user_id, event_type, value,
-           CAST(event_id % 4 AS BIGINT) AS part,
-           CAST(row_number() OVER (PARTITION BY event_id % 4 ORDER BY event_id) - 1
-                AS BIGINT) AS off
-    FROM events WHERE event_id < 200
-)
+_KAFKA_AVRO_ORACLE = _topic_base_sql("event_id, user_id, event_type, value") + """
 SELECT CAST(event_id AS BIGINT) AS event_id,
        CAST(user_id AS BIGINT) AS user_id,
        event_type,
@@ -1183,22 +1120,17 @@ FROM base ORDER BY event_id
     "passthrough.",
 )
 def source_kafka_avro(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pandas as pd
-
     from sensql_presto_spark import avro_ocf
     from sensql_presto_spark import kafka_decoder as kd
 
-    base = (
-        catalog.table(spark, sf_dir, "events")
-        .filter(F.col("event_id") < 200)
-        .select(
-            "event_id",
-            "user_id",
-            "event_type",
-            F.col("value").alias("score"),
-            (F.col("event_type") == "click").alias("is_click"),
-            (F.col("event_id") % 4).cast("int").alias("part"),
-        )
+    base = _topic_events(
+        spark,
+        sf_dir,
+        "event_id",
+        "user_id",
+        "event_type",
+        F.col("value").alias("score"),
+        (F.col("event_type") == "click").alias("is_click"),
     )
 
     fields = [
@@ -1209,42 +1141,27 @@ def source_kafka_avro(spark: SparkSession, sf_dir: str) -> DataFrame:
         ("is_click", "boolean"),
     ]
 
+    def messages(pdf):
+        msgs = []
+        for row in pdf.itertuples():
+            blob = avro_ocf.write_container(
+                fields,
+                [
+                    (
+                        int(row.event_id),
+                        int(row.user_id),
+                        str(row.event_type),
+                        float(row.score),
+                        bool(row.is_click),
+                    )
+                ],
+                name="event",
+            )
+            msgs.append((None, blob))  # null keys: the framing's -1 path
+        return msgs
+
     tdir = os.path.join(KAFKA_TOPIC_PATH, "avro")
-    _shutil.rmtree(tdir, ignore_errors=True)
-    os.makedirs(tdir, exist_ok=True)
-
-    def make_writer(_tdir):
-        def write_part(pdf: "pd.DataFrame") -> "pd.DataFrame":
-            pdf = pdf.sort_values("event_id")
-            part = int(pdf["part"].iloc[0])
-            msgs = []
-            for row in pdf.itertuples():
-                blob = avro_ocf.write_container(
-                    fields,
-                    [
-                        (
-                            int(row.event_id),
-                            int(row.user_id),
-                            str(row.event_type),
-                            float(row.score),
-                            bool(row.is_click),
-                        )
-                    ],
-                    name="event",
-                )
-                msgs.append((None, blob))  # null keys: the framing's -1 path
-            with open(os.path.join(_tdir, f"partition={part}.seg"), "wb") as f:
-                f.write(kd.encode_segment(msgs))
-            return pd.DataFrame({"part": [part], "n": [len(pdf)]})
-
-        return write_part
-
-    written = (
-        base.groupBy("part")
-        .applyInPandas(make_writer(tdir), "part int, n long")
-        .collect()
-    )
-    assert sum(r.n for r in written) > 0, "empty kafka avro fixture topic"
+    kd.write_topic_dir(base, tdir, messages)
 
     cols = [
         kd.KafkaColumn("event_id", "BIGINT", "event_id"),
@@ -1285,14 +1202,7 @@ def source_kafka_avro(spark: SparkSession, sf_dir: str) -> DataFrame:
 # test_avro_nested_paths_and_array_map_columns.  Scale shape: identical
 # to source_kafka_avro — applyInPandas partition writer, binaryFile +
 # ONE Arrow mapInPandas decode pass, payloads never on the driver.
-_KAFKA_AVRO_NESTED_ORACLE = """
-WITH base AS (
-    SELECT event_id, user_id, event_type, value,
-           CAST(event_id % 4 AS BIGINT) AS part,
-           CAST(row_number() OVER (PARTITION BY event_id % 4 ORDER BY event_id) - 1
-                AS BIGINT) AS off
-    FROM events WHERE event_id < 200
-)
+_KAFKA_AVRO_NESTED_ORACLE = _topic_base_sql("event_id, user_id, event_type, value") + """
 SELECT CAST(event_id AS BIGINT) AS event_id,
        CAST(user_id AS BIGINT) AS user_id,
        substring(event_type, 1, 2) AS cc,
@@ -1323,22 +1233,10 @@ FROM base ORDER BY event_id
     "map_keys); bit-exact double passthrough.",
 )
 def source_kafka_avro_nested(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pandas as pd
-
     from sensql_presto_spark import avro_ocf
     from sensql_presto_spark import kafka_decoder as kd
 
-    base = (
-        catalog.table(spark, sf_dir, "events")
-        .filter(F.col("event_id") < 200)
-        .select(
-            "event_id",
-            "user_id",
-            "event_type",
-            F.col("value").alias("score"),
-            (F.col("event_id") % 4).cast("int").alias("part"),
-        )
-    )
+    base = _topic_events(spark, sf_dir, "event_id", "user_id", "event_type", F.col("value").alias("score"))
 
     fields = [
         (
@@ -1365,40 +1263,25 @@ def source_kafka_avro_nested(spark: SparkSession, sf_dir: str) -> DataFrame:
         ("score", "double"),
     ]
 
+    def messages(pdf):
+        msgs = []
+        for row in pdf.itertuples():
+            eid = int(row.event_id)
+            rec = (
+                {
+                    "id": eid,
+                    "user": int(row.user_id),
+                    "geo": {"cc": str(row.event_type)[:2]},
+                },
+                [str(row.event_type), f"x{eid % 3}"],
+                {"a": int(row.user_id), "b": eid % 7},
+                float(row.score),
+            )
+            msgs.append((None, avro_ocf.write_container(fields, [rec], name="event")))
+        return msgs
+
     tdir = os.path.join(KAFKA_TOPIC_PATH, "avro_nested")
-    _shutil.rmtree(tdir, ignore_errors=True)
-    os.makedirs(tdir, exist_ok=True)
-
-    def make_writer(_tdir):
-        def write_part(pdf: "pd.DataFrame") -> "pd.DataFrame":
-            pdf = pdf.sort_values("event_id")
-            part = int(pdf["part"].iloc[0])
-            msgs = []
-            for row in pdf.itertuples():
-                eid = int(row.event_id)
-                rec = (
-                    {
-                        "id": eid,
-                        "user": int(row.user_id),
-                        "geo": {"cc": str(row.event_type)[:2]},
-                    },
-                    [str(row.event_type), f"x{eid % 3}"],
-                    {"a": int(row.user_id), "b": eid % 7},
-                    float(row.score),
-                )
-                msgs.append((None, avro_ocf.write_container(fields, [rec], name="event")))
-            with open(os.path.join(_tdir, f"partition={part}.seg"), "wb") as f:
-                f.write(kd.encode_segment(msgs))
-            return pd.DataFrame({"part": [part], "n": [len(pdf)]})
-
-        return write_part
-
-    written = (
-        base.groupBy("part")
-        .applyInPandas(make_writer(tdir), "part int, n long")
-        .collect()
-    )
-    assert sum(r.n for r in written) > 0, "empty kafka avro-nested fixture topic"
+    kd.write_topic_dir(base, tdir, messages)
 
     cols = [
         kd.KafkaColumn("event_id", "BIGINT", "meta/id"),
@@ -1445,14 +1328,7 @@ def source_kafka_avro_nested(spark: SparkSession, sf_dir: str) -> DataFrame:
 # symbol; the union columns' null pattern is recomputed by the oracle.
 # Scale shape: identical to the other avro entries — applyInPandas
 # partition writer, binaryFile + one Arrow mapInPandas decode pass.
-_KAFKA_AVRO_UNION_ORACLE = """
-WITH base AS (
-    SELECT event_id, event_type, value,
-           CAST(event_id % 4 AS BIGINT) AS part,
-           CAST(row_number() OVER (PARTITION BY event_id % 4 ORDER BY event_id) - 1
-                AS BIGINT) AS off
-    FROM events WHERE event_id < 200
-)
+_KAFKA_AVRO_UNION_ORACLE = _topic_base_sql("event_id, event_type, value") + """
 SELECT CAST(event_id AS BIGINT) AS event_id,
        event_type AS ev,
        CAST(event_id AS BIGINT) AS fp_id,
@@ -1477,22 +1353,12 @@ FROM base ORDER BY event_id
     "on deterministic residues; one Arrow mapInPandas decode pass.",
 )
 def source_kafka_avro_union(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pandas as pd
     import struct as _struct
 
     from sensql_presto_spark import avro_ocf
     from sensql_presto_spark import kafka_decoder as kd
 
-    base = (
-        catalog.table(spark, sf_dir, "events")
-        .filter(F.col("event_id") < 200)
-        .select(
-            "event_id",
-            "event_type",
-            F.col("value").alias("score"),
-            (F.col("event_id") % 4).cast("int").alias("part"),
-        )
-    )
+    base = _topic_events(spark, sf_dir, "event_id", "event_type", F.col("value").alias("score"))
 
     fields = [
         (
@@ -1508,36 +1374,21 @@ def source_kafka_avro_union(spark: SparkSession, sf_dir: str) -> DataFrame:
         ("maybe_tag", ["null", "string"]),
     ]
 
+    def messages(pdf):
+        msgs = []
+        for row in pdf.itertuples():
+            eid = int(row.event_id)
+            rec = (
+                str(row.event_type),
+                _struct.pack(">q", eid),
+                None if eid % 5 == 0 else float(row.score),
+                None if eid % 3 == 0 else f"tag{eid % 3}",
+            )
+            msgs.append((None, avro_ocf.write_container(fields, [rec], name="event")))
+        return msgs
+
     tdir = os.path.join(KAFKA_TOPIC_PATH, "avro_union")
-    _shutil.rmtree(tdir, ignore_errors=True)
-    os.makedirs(tdir, exist_ok=True)
-
-    def make_writer(_tdir):
-        def write_part(pdf: "pd.DataFrame") -> "pd.DataFrame":
-            pdf = pdf.sort_values("event_id")
-            part = int(pdf["part"].iloc[0])
-            msgs = []
-            for row in pdf.itertuples():
-                eid = int(row.event_id)
-                rec = (
-                    str(row.event_type),
-                    _struct.pack(">q", eid),
-                    None if eid % 5 == 0 else float(row.score),
-                    None if eid % 3 == 0 else f"tag{eid % 3}",
-                )
-                msgs.append((None, avro_ocf.write_container(fields, [rec], name="event")))
-            with open(os.path.join(_tdir, f"partition={part}.seg"), "wb") as f:
-                f.write(kd.encode_segment(msgs))
-            return pd.DataFrame({"part": [part], "n": [len(pdf)]})
-
-        return write_part
-
-    written = (
-        base.groupBy("part")
-        .applyInPandas(make_writer(tdir), "part int, n long")
-        .collect()
-    )
-    assert sum(r.n for r in written) > 0, "empty kafka avro-union fixture topic"
+    kd.write_topic_dir(base, tdir, messages)
 
     cols = [
         kd.KafkaColumn("ev", "STRING", "ev"),
@@ -1577,14 +1428,7 @@ def source_kafka_avro_union(spark: SparkSession, sf_dir: str) -> DataFrame:
 # from the 8-byte bytes arm.  Scale shape: identical to the other avro
 # entries — applyInPandas partition writer (payloads executor-side),
 # binaryFile scan + ONE Arrow mapInPandas decode pass.
-_KAFKA_AVRO_MULTIBRANCH_ORACLE = """
-WITH base AS (
-    SELECT event_id, event_type,
-           CAST(event_id % 4 AS BIGINT) AS part,
-           CAST(row_number() OVER (PARTITION BY event_id % 4 ORDER BY event_id) - 1
-                AS BIGINT) AS off
-    FROM events WHERE event_id < 200
-)
+_KAFKA_AVRO_MULTIBRANCH_ORACLE = _topic_base_sql("event_id, event_type") + """
 SELECT CAST(event_id AS BIGINT) AS event_id,
        CAST(CASE WHEN event_id % 2 = 0 THEN event_id
                  ELSE event_id * 8589934592 + 7 END AS BIGINT) AS n,
@@ -1615,20 +1459,10 @@ FROM base ORDER BY event_id
     "(pytest-pinned); one Arrow mapInPandas decode pass.",
 )
 def source_kafka_avro_multibranch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pandas as pd
-
     from sensql_presto_spark import avro_ocf
     from sensql_presto_spark import kafka_decoder as kd
 
-    base = (
-        catalog.table(spark, sf_dir, "events")
-        .filter(F.col("event_id") < 200)
-        .select(
-            "event_id",
-            "event_type",
-            (F.col("event_id") % 4).cast("int").alias("part"),
-        )
-    )
+    base = _topic_events(spark, sf_dir, "event_id", "event_type")
 
     fields = [
         ("id", "long"),
@@ -1651,51 +1485,36 @@ def source_kafka_avro_multibranch(spark: SparkSession, sf_dir: str) -> DataFrame
         ),
     ]
 
+    def messages(pdf):
+        import struct as _struct
+
+        B = avro_ocf.Branch
+        msgs = []
+        for row in pdf.itertuples():
+            eid = int(row.event_id)
+            # int arm on even ids, long arm (explicit Branch — the
+            # Python value type cannot select it) on odd ids
+            n = B(0, eid) if eid % 2 == 0 else B(1, eid * 8589934592 + 7)
+            if eid % 7 == 0:
+                label = None  # null arm (auto)
+            elif eid % 2 == 0:
+                label = B(2, str(row.event_type))  # enum arm (explicit)
+            else:
+                label = f"s{eid % 5}"  # string arm (auto first-match)
+            if eid % 11 == 0:
+                payload = None
+            elif eid % 2 == 1:
+                payload = B(2, _struct.pack(">i", eid))  # 4-byte fixed arm
+            else:
+                payload = _struct.pack(">q", eid * 3)  # 8-byte bytes arm
+            rec = (eid, n, label, payload)
+            msgs.append(
+                (None, avro_ocf.write_container(fields, [rec], name="event"))
+            )
+        return msgs
+
     tdir = os.path.join(KAFKA_TOPIC_PATH, "avro_multibranch")
-    _shutil.rmtree(tdir, ignore_errors=True)
-    os.makedirs(tdir, exist_ok=True)
-
-    def make_writer(_tdir):
-        def write_part(pdf: "pd.DataFrame") -> "pd.DataFrame":
-            import struct as _struct
-
-            B = avro_ocf.Branch
-            pdf = pdf.sort_values("event_id")
-            part = int(pdf["part"].iloc[0])
-            msgs = []
-            for row in pdf.itertuples():
-                eid = int(row.event_id)
-                # int arm on even ids, long arm (explicit Branch — the
-                # Python value type cannot select it) on odd ids
-                n = B(0, eid) if eid % 2 == 0 else B(1, eid * 8589934592 + 7)
-                if eid % 7 == 0:
-                    label = None  # null arm (auto)
-                elif eid % 2 == 0:
-                    label = B(2, str(row.event_type))  # enum arm (explicit)
-                else:
-                    label = f"s{eid % 5}"  # string arm (auto first-match)
-                if eid % 11 == 0:
-                    payload = None
-                elif eid % 2 == 1:
-                    payload = B(2, _struct.pack(">i", eid))  # 4-byte fixed arm
-                else:
-                    payload = _struct.pack(">q", eid * 3)  # 8-byte bytes arm
-                rec = (eid, n, label, payload)
-                msgs.append(
-                    (None, avro_ocf.write_container(fields, [rec], name="event"))
-                )
-            with open(os.path.join(_tdir, f"partition={part}.seg"), "wb") as f:
-                f.write(kd.encode_segment(msgs))
-            return pd.DataFrame({"part": [part], "n": [len(pdf)]})
-
-        return write_part
-
-    written = (
-        base.groupBy("part")
-        .applyInPandas(make_writer(tdir), "part int, n long")
-        .collect()
-    )
-    assert sum(r.n for r in written) > 0, "empty kafka avro-multibranch topic"
+    kd.write_topic_dir(base, tdir, messages)
 
     cols = [
         kd.KafkaColumn("id", "BIGINT", "id"),

@@ -58,6 +58,53 @@ _CHANNELS = f"""
 """
 
 
+def year_growth_sql(col: str, measure: str, year: int) -> str:
+    """q11's and q74's customers whose web ``measure`` grew faster than their
+    store ``measure`` from ``year`` to the next: the ``year_total`` CTE (its
+    channel column named ``col``) and the query over it."""
+    return f"""
+    year_total AS (
+        SELECT o_custkey, d_year, 's' AS {col}, sum({measure}) AS year_total
+        FROM sales GROUP BY o_custkey, d_year
+        UNION ALL
+        SELECT o_custkey, d_year, 'w' AS {col}, sum({measure}) AS year_total
+        FROM web GROUP BY o_custkey, d_year
+    )
+    SELECT c.c_name
+    FROM year_total t_s_firstyear
+    JOIN year_total t_s_secyear ON t_s_firstyear.o_custkey = t_s_secyear.o_custkey
+    JOIN year_total t_w_firstyear ON t_s_firstyear.o_custkey = t_w_firstyear.o_custkey
+    JOIN year_total t_w_secyear ON t_s_firstyear.o_custkey = t_w_secyear.o_custkey
+    JOIN customer c ON c.c_custkey = t_s_firstyear.o_custkey
+    WHERE t_s_firstyear.{col} = 's' AND t_s_secyear.{col} = 's'
+      AND t_w_firstyear.{col} = 'w' AND t_w_secyear.{col} = 'w'
+      AND t_s_firstyear.d_year = {year} AND t_s_secyear.d_year = {year + 1}
+      AND t_w_firstyear.d_year = {year} AND t_w_secyear.d_year = {year + 1}
+      AND t_s_firstyear.year_total > 0 AND t_w_firstyear.year_total > 0
+      AND CAST(t_w_secyear.year_total AS DOUBLE) / t_w_firstyear.year_total
+          > CAST(t_s_secyear.year_total AS DOUBLE) / t_s_firstyear.year_total
+    ORDER BY c.c_name
+    LIMIT 100
+    """
+
+
+def _item_revenue_share_sql(rel: str) -> str:
+    """q12's and q20's per-item revenue over ``rel`` in January-February
+    1995, with its share of the item type's revenue."""
+    return f"""
+    SELECT p_brand, p_type, itemrevenue,CAST(round(itemrevenue * 100.0
+                 / sum(itemrevenue) OVER (PARTITION BY p_type), 4) AS DOUBLE) AS revenueratio
+    FROM (
+        SELECT p.p_brand, p.p_type,CAST(sum(net_c) AS BIGINT) AS itemrevenue
+        FROM {rel} JOIN part p ON l_partkey = p.p_partkey
+        WHERE d_year = 1995 AND d_moy BETWEEN 1 AND 2
+        GROUP BY p.p_brand, p.p_type
+    )
+    ORDER BY p_type, revenueratio, p_brand
+    LIMIT 100
+    """
+
+
 # --------------------------------------------------------------------------
 # q01 — per-customer returns vs 1.2x the per-store average (CTE + correlated
 # scalar subquery on the CTE). Reference: tpcds/q01.sql.
@@ -313,31 +360,7 @@ _sql_query(
 # sibling). Reference: q11.sql.
 _sql_query(
     "tpcds_q11",
-    f"""
-    WITH {_CHANNELS},
-    year_total AS (
-        SELECT o_custkey, d_year, 's' AS channel, sum(price_c) AS year_total
-        FROM sales GROUP BY o_custkey, d_year
-        UNION ALL
-        SELECT o_custkey, d_year, 'w' AS channel, sum(price_c) AS year_total
-        FROM web GROUP BY o_custkey, d_year
-    )
-    SELECT c.c_name
-    FROM year_total t_s_firstyear
-    JOIN year_total t_s_secyear ON t_s_firstyear.o_custkey = t_s_secyear.o_custkey
-    JOIN year_total t_w_firstyear ON t_s_firstyear.o_custkey = t_w_firstyear.o_custkey
-    JOIN year_total t_w_secyear ON t_s_firstyear.o_custkey = t_w_secyear.o_custkey
-    JOIN customer c ON c.c_custkey = t_s_firstyear.o_custkey
-    WHERE t_s_firstyear.channel = 's' AND t_s_secyear.channel = 's'
-      AND t_w_firstyear.channel = 'w' AND t_w_secyear.channel = 'w'
-      AND t_s_firstyear.d_year = 1995 AND t_s_secyear.d_year = 1996
-      AND t_w_firstyear.d_year = 1995 AND t_w_secyear.d_year = 1996
-      AND t_s_firstyear.year_total > 0 AND t_w_firstyear.year_total > 0
-      AND CAST(t_w_secyear.year_total AS DOUBLE) / t_w_firstyear.year_total
-          > CAST(t_s_secyear.year_total AS DOUBLE) / t_s_firstyear.year_total
-    ORDER BY c.c_name
-    LIMIT 100
-    """,
+    f"WITH {_CHANNELS}," + year_growth_sql("channel", "price_c", 1995),
     tags=("tpcds",),
 )
 
@@ -345,19 +368,7 @@ _sql_query(
 # ratio over the aggregate. Reference: q12.sql.
 _sql_query(
     "tpcds_q12",
-    f"""
-    WITH {_S}
-    SELECT p_brand, p_type, itemrevenue,CAST(round(itemrevenue * 100.0
-                 / sum(itemrevenue) OVER (PARTITION BY p_type), 4) AS DOUBLE) AS revenueratio
-    FROM (
-        SELECT p.p_brand, p.p_type,CAST(sum(net_c) AS BIGINT) AS itemrevenue
-        FROM sales JOIN part p ON l_partkey = p.p_partkey
-        WHERE d_year = 1995 AND d_moy BETWEEN 1 AND 2
-        GROUP BY p.p_brand, p.p_type
-    )
-    ORDER BY p_type, revenueratio, p_brand
-    LIMIT 100
-    """,
+    f"WITH {_S}" + _item_revenue_share_sql("sales"),
     tags=("tpcds",),
 )
 
@@ -517,19 +528,7 @@ _sql_query(
 # Reference: q20.sql.
 _sql_query(
     "tpcds_q20",
-    f"""
-    WITH {_CHANNELS}
-    SELECT p_brand, p_type, itemrevenue,CAST(round(itemrevenue * 100.0
-                 / sum(itemrevenue) OVER (PARTITION BY p_type), 4) AS DOUBLE) AS revenueratio
-    FROM (
-        SELECT p.p_brand, p.p_type,CAST(sum(net_c) AS BIGINT) AS itemrevenue
-        FROM cat JOIN part p ON l_partkey = p.p_partkey
-        WHERE d_year = 1995 AND d_moy BETWEEN 1 AND 2
-        GROUP BY p.p_brand, p.p_type
-    )
-    ORDER BY p_type, revenueratio, p_brand
-    LIMIT 100
-    """,
+    f"WITH {_CHANNELS}" + _item_revenue_share_sql("cat"),
     tags=("tpcds",),
 )
 

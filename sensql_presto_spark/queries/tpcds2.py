@@ -79,6 +79,116 @@ def ds(name: str, body: str, doc: str = "", bench: bool = False):
     )
 
 
+def inv_cov_sql(cov: float) -> str:
+    """q39's and q39b's monthly inventory coefficient of variation per
+    warehouse and item, months 1 and 2 of 1995 side by side, keeping month-1
+    rows whose variation exceeds ``cov``; the caller adds its ORDER BY."""
+    return f"""
+    , inv AS (
+        SELECT n.n_name AS w_warehouse_name, i.p_brand AS item_id, s.d_moy,
+               count(*) AS n, sum(s.qty) AS s1, sum(s.qty * s.qty) AS s2
+        FROM sales s
+        JOIN supplier st ON s.l_suppkey = st.s_suppkey
+        JOIN nation n ON st.s_nationkey = n.n_nationkey
+        JOIN part i ON s.l_partkey = i.p_partkey
+        WHERE s.d_year = 1995
+        GROUP BY n.n_name, i.p_brand, s.d_moy
+        HAVING count(*) > 1
+    ),
+    invcov AS (
+        SELECT w_warehouse_name, item_id, d_moy,
+               round(CAST(s1 AS DOUBLE) / n, 4) AS mean,
+               round(sqrt((s2 - CAST(s1 AS DOUBLE) * s1 / n) / (n - 1))
+                     / (CAST(s1 AS DOUBLE) / n), 4) AS cov
+        FROM inv
+        WHERE CAST(s1 AS DOUBLE) / n > 0
+          AND sqrt((s2 - CAST(s1 AS DOUBLE) * s1 / n) / (n - 1))
+              / (CAST(s1 AS DOUBLE) / n) > {cov}
+    )
+    SELECT i1.w_warehouse_name AS w1, i1.item_id AS i1_item, i1.d_moy AS moy1,
+           i1.mean AS mean1, i1.cov AS cov1,
+           i2.d_moy AS moy2, i2.mean AS mean2, i2.cov AS cov2
+    FROM invcov i1
+    JOIN invcov i2 ON i1.item_id = i2.item_id
+                  AND i1.w_warehouse_name = i2.w_warehouse_name
+    WHERE i1.d_moy = 1 AND i2.d_moy = 2
+    """
+
+
+def item_stock_sql(channel: str, alias: str, where: str) -> str:
+    """q37's and q82's items with 10-50 units in a dated slice of the fact
+    (the inventory stand-in) that also sold through ``channel``; ``where``
+    picks the price band, brands and dates."""
+    return f"""
+    SELECT i.p_name AS i_item_id, i.p_type AS i_item_desc, i.p_retailprice AS i_current_price
+    FROM part i
+    JOIN sales inv ON inv.l_partkey = i.p_partkey
+    JOIN {channel} {alias} ON {alias}.l_partkey = i.p_partkey
+    WHERE {where}
+      AND inv.qty BETWEEN 10 AND 50
+    GROUP BY i.p_name, i.p_type, i.p_retailprice
+    -- full group-key tiebreak: the reference orders by i_item_id
+    -- alone, but duplicate item ids at the LIMIT boundary make the
+    -- cut engine-dependent at larger SFs (caught by the sf0.1
+    -- differential sweep)
+    ORDER BY i_item_id, i_item_desc, i_current_price
+    LIMIT 100
+    """
+
+
+def away_tickets_sql(cols: str, sums: str, where: str) -> str:
+    """q46's and q68's store tickets matching ``where`` bought in a city
+    (the supplier's nation) other than the customer's home nation: per
+    ticket the aggregates ``sums`` (the text after ``bought_city,``),
+    output as ``cols``."""
+    return f"""
+    SELECT c.c_name, hn.n_name AS home_city, dn.bought_city, dn.l_orderkey AS ticket,
+           {cols}
+    FROM (
+        SELECT s.l_orderkey, s.o_custkey, sn.n_name AS bought_city,{sums}
+        FROM sales s
+        JOIN supplier st ON s.l_suppkey = st.s_suppkey
+        JOIN nation sn ON st.s_nationkey = sn.n_nationkey
+        WHERE {where}
+        GROUP BY s.l_orderkey, s.o_custkey, sn.n_name
+    ) dn
+    JOIN customer c ON dn.o_custkey = c.c_custkey
+    JOIN nation hn ON c.c_nationkey = hn.n_nationkey
+    WHERE dn.bought_city <> hn.n_name
+    ORDER BY c.c_name, dn.bought_city, ticket
+    LIMIT 100
+    """
+
+
+def channel_items_sql(items: str, moy: int, region: int, order: str) -> str:
+    """q56's and q60's net sales of the ``items`` products in month ``moy``
+    of 1995 to customers of region ``region``, summed over the store,
+    catalog and web channels."""
+
+    def leg(cte: str, rel: str, a: str) -> str:
+        return f"""{cte} AS (
+            SELECT i.p_name AS i_item_id,CAST(sum({a}.net_c) AS BIGINT) AS total_sales
+            FROM {rel} {a}
+            JOIN part i ON {a}.l_partkey = i.p_partkey
+            JOIN customer c ON {a}.o_custkey = c.c_custkey
+            JOIN nation n ON c.c_nationkey = n.n_nationkey
+            WHERE i.p_name IN (SELECT p_name FROM part WHERE {items})
+              AND {a}.d_year = 1995 AND {a}.d_moy = {moy} AND n.n_regionkey = {region}
+            GROUP BY i.p_name
+        )"""
+
+    return f"""
+    , {leg("ss", "sales", "s")},
+    {leg("cs", "cat", "w")},
+    {leg("ws", "web", "w")}
+    SELECT i_item_id,CAST(sum(total_sales) AS BIGINT) AS total_sales
+    FROM (SELECT * FROM ss UNION ALL SELECT * FROM cs UNION ALL SELECT * FROM ws)
+    GROUP BY i_item_id
+    ORDER BY {order}
+    LIMIT 100
+    """
+
+
 # q31 — county-level quarter-over-quarter growth, store vs web channels
 # (two grouped CTEs, 6-way self-join, growth-rate comparison filters).
 ds(
@@ -270,23 +380,13 @@ ds(
 # the catalog channel (inventory -> fact quantity slice).
 ds(
     "tpcds_q37",
-    """
-    SELECT i.p_name AS i_item_id, i.p_type AS i_item_desc, i.p_retailprice AS i_current_price
-    FROM part i
-    JOIN sales inv ON inv.l_partkey = i.p_partkey
-    JOIN cat cs ON cs.l_partkey = i.p_partkey
-    WHERE i.p_retailprice BETWEEN 900 AND 950
+    item_stock_sql(
+        "cat",
+        "cs",
+        """i.p_retailprice BETWEEN 900 AND 950
       AND i.p_brand IN ('Brand#1', 'Brand#5', 'Brand#9', 'Brand#13')
-      AND inv.o_orderdate BETWEEN TIMESTAMP '1995-02-01' AND TIMESTAMP '1995-04-02'
-      AND inv.qty BETWEEN 10 AND 50
-    GROUP BY i.p_name, i.p_type, i.p_retailprice
-    -- full group-key tiebreak: the reference orders by i_item_id
-    -- alone, but duplicate item ids at the LIMIT boundary make the
-    -- cut engine-dependent at larger SFs (caught by the sf0.1
-    -- differential sweep)
-    ORDER BY i_item_id, i_item_desc, i_current_price
-    LIMIT 100
-    """,
+      AND inv.o_orderdate BETWEEN TIMESTAMP '1995-02-01' AND TIMESTAMP '1995-04-02'""",
+    ),
     doc="Reference: tpcds/q37.sql (inventory -> dated fact slice).",
 )
 
@@ -318,35 +418,8 @@ ds(
 # both engines compute identical IEEE expressions.
 ds(
     "tpcds_q39",
-    """
-    , inv AS (
-        SELECT n.n_name AS w_warehouse_name, i.p_brand AS item_id, s.d_moy,
-               count(*) AS n, sum(s.qty) AS s1, sum(s.qty * s.qty) AS s2
-        FROM sales s
-        JOIN supplier st ON s.l_suppkey = st.s_suppkey
-        JOIN nation n ON st.s_nationkey = n.n_nationkey
-        JOIN part i ON s.l_partkey = i.p_partkey
-        WHERE s.d_year = 1995
-        GROUP BY n.n_name, i.p_brand, s.d_moy
-        HAVING count(*) > 1
-    ),
-    invcov AS (
-        SELECT w_warehouse_name, item_id, d_moy,
-               round(CAST(s1 AS DOUBLE) / n, 4) AS mean,
-               round(sqrt((s2 - CAST(s1 AS DOUBLE) * s1 / n) / (n - 1))
-                     / (CAST(s1 AS DOUBLE) / n), 4) AS cov
-        FROM inv
-        WHERE CAST(s1 AS DOUBLE) / n > 0
-          AND sqrt((s2 - CAST(s1 AS DOUBLE) * s1 / n) / (n - 1))
-              / (CAST(s1 AS DOUBLE) / n) > 0.2
-    )
-    SELECT i1.w_warehouse_name AS w1, i1.item_id AS i1_item, i1.d_moy AS moy1,
-           i1.mean AS mean1, i1.cov AS cov1,
-           i2.d_moy AS moy2, i2.mean AS mean2, i2.cov AS cov2
-    FROM invcov i1
-    JOIN invcov i2 ON i1.item_id = i2.item_id
-                  AND i1.w_warehouse_name = i2.w_warehouse_name
-    WHERE i1.d_moy = 1 AND i2.d_moy = 2
+    inv_cov_sql(0.2)
+    + """
     ORDER BY w1, i1_item, moy1
     """,
     doc="Reference: tpcds/q39_1.sql. stddev rebuilt from sum/sum-of-squares "
@@ -487,27 +560,15 @@ ds(
 # shoppers where the bought geography differs from the home geography.
 ds(
     "tpcds_q46",
-    """
-    SELECT c.c_name, hn.n_name AS home_city, dn.bought_city, dn.l_orderkey AS ticket,
-           dn.amt, dn.profit
-    FROM (
-        SELECT s.l_orderkey, s.o_custkey, sn.n_name AS bought_city,
+    away_tickets_sql(
+        "dn.amt, dn.profit",
+        """
                round(CAST(sum(s.disc_c) AS DOUBLE) / 100.0, 2) AS amt,
-               round(CAST(sum(s.net_c) AS DOUBLE) / 100.0, 2) AS profit
-        FROM sales s
-        JOIN supplier st ON s.l_suppkey = st.s_suppkey
-        JOIN nation sn ON st.s_nationkey = sn.n_nationkey
-        WHERE (s.hd_dep_count = 4 OR s.hd_vehicle_count = 3)
+               round(CAST(sum(s.net_c) AS DOUBLE) / 100.0, 2) AS profit""",
+        """(s.hd_dep_count = 4 OR s.hd_vehicle_count = 3)
           AND s.d_dow IN (1, 7)
-          AND s.d_year IN (1995, 1996, 1997)
-        GROUP BY s.l_orderkey, s.o_custkey, sn.n_name
-    ) dn
-    JOIN customer c ON dn.o_custkey = c.c_custkey
-    JOIN nation hn ON c.c_nationkey = hn.n_nationkey
-    WHERE dn.bought_city <> hn.n_name
-    ORDER BY c.c_name, dn.bought_city, ticket
-    LIMIT 100
-    """,
+          AND s.d_year IN (1995, 1996, 1997)""",
+    ),
     doc="Reference: tpcds/q46.sql (city -> nation).",
 )
 
@@ -759,43 +820,7 @@ ds(
 # summed across channels (q33 family).
 ds(
     "tpcds_q56",
-    """
-    , ss AS (
-        SELECT i.p_name AS i_item_id,CAST(sum(s.net_c) AS BIGINT) AS total_sales
-        FROM sales s
-        JOIN part i ON s.l_partkey = i.p_partkey
-        JOIN customer c ON s.o_custkey = c.c_custkey
-        JOIN nation n ON c.c_nationkey = n.n_nationkey
-        WHERE i.p_name IN (SELECT p_name FROM part WHERE p_size IN (1, 2, 3))
-          AND s.d_year = 1995 AND s.d_moy = 2 AND n.n_regionkey = 2
-        GROUP BY i.p_name
-    ),
-    cs AS (
-        SELECT i.p_name AS i_item_id,CAST(sum(w.net_c) AS BIGINT) AS total_sales
-        FROM cat w
-        JOIN part i ON w.l_partkey = i.p_partkey
-        JOIN customer c ON w.o_custkey = c.c_custkey
-        JOIN nation n ON c.c_nationkey = n.n_nationkey
-        WHERE i.p_name IN (SELECT p_name FROM part WHERE p_size IN (1, 2, 3))
-          AND w.d_year = 1995 AND w.d_moy = 2 AND n.n_regionkey = 2
-        GROUP BY i.p_name
-    ),
-    ws AS (
-        SELECT i.p_name AS i_item_id,CAST(sum(w.net_c) AS BIGINT) AS total_sales
-        FROM web w
-        JOIN part i ON w.l_partkey = i.p_partkey
-        JOIN customer c ON w.o_custkey = c.c_custkey
-        JOIN nation n ON c.c_nationkey = n.n_nationkey
-        WHERE i.p_name IN (SELECT p_name FROM part WHERE p_size IN (1, 2, 3))
-          AND w.d_year = 1995 AND w.d_moy = 2 AND n.n_regionkey = 2
-        GROUP BY i.p_name
-    )
-    SELECT i_item_id,CAST(sum(total_sales) AS BIGINT) AS total_sales
-    FROM (SELECT * FROM ss UNION ALL SELECT * FROM cs UNION ALL SELECT * FROM ws)
-    GROUP BY i_item_id
-    ORDER BY total_sales, i_item_id
-    LIMIT 100
-    """,
+    channel_items_sql("p_size IN (1, 2, 3)", 2, 2, "total_sales, i_item_id"),
     doc="Reference: tpcds/q56.sql (color list -> size list).",
 )
 
@@ -906,43 +931,7 @@ ds(
 # q60 — q56's category variant.
 ds(
     "tpcds_q60",
-    """
-    , ss AS (
-        SELECT i.p_name AS i_item_id,CAST(sum(s.net_c) AS BIGINT) AS total_sales
-        FROM sales s
-        JOIN part i ON s.l_partkey = i.p_partkey
-        JOIN customer c ON s.o_custkey = c.c_custkey
-        JOIN nation n ON c.c_nationkey = n.n_nationkey
-        WHERE i.p_name IN (SELECT p_name FROM part WHERE p_type IN ('MEDIUM'))
-          AND s.d_year = 1995 AND s.d_moy = 9 AND n.n_regionkey = 3
-        GROUP BY i.p_name
-    ),
-    cs AS (
-        SELECT i.p_name AS i_item_id,CAST(sum(w.net_c) AS BIGINT) AS total_sales
-        FROM cat w
-        JOIN part i ON w.l_partkey = i.p_partkey
-        JOIN customer c ON w.o_custkey = c.c_custkey
-        JOIN nation n ON c.c_nationkey = n.n_nationkey
-        WHERE i.p_name IN (SELECT p_name FROM part WHERE p_type IN ('MEDIUM'))
-          AND w.d_year = 1995 AND w.d_moy = 9 AND n.n_regionkey = 3
-        GROUP BY i.p_name
-    ),
-    ws AS (
-        SELECT i.p_name AS i_item_id,CAST(sum(w.net_c) AS BIGINT) AS total_sales
-        FROM web w
-        JOIN part i ON w.l_partkey = i.p_partkey
-        JOIN customer c ON w.o_custkey = c.c_custkey
-        JOIN nation n ON c.c_nationkey = n.n_nationkey
-        WHERE i.p_name IN (SELECT p_name FROM part WHERE p_type IN ('MEDIUM'))
-          AND w.d_year = 1995 AND w.d_moy = 9 AND n.n_regionkey = 3
-        GROUP BY i.p_name
-    )
-    SELECT i_item_id,CAST(sum(total_sales) AS BIGINT) AS total_sales
-    FROM (SELECT * FROM ss UNION ALL SELECT * FROM cs UNION ALL SELECT * FROM ws)
-    GROUP BY i_item_id
-    ORDER BY i_item_id, total_sales
-    LIMIT 100
-    """,
+    channel_items_sql("p_type IN ('MEDIUM')", 9, 3, "i_item_id, total_sales"),
     doc="Reference: tpcds/q60.sql.",
 )
 

@@ -7,7 +7,8 @@ schema mapping and determinism discipline. Reference shapes:
 
 from __future__ import annotations
 
-from sensql_presto_spark.queries.tpcds2 import ds
+from sensql_presto_spark.queries.tpcds import year_growth_sql
+from sensql_presto_spark.queries.tpcds2 import away_tickets_sql, ds, inv_cov_sql, item_stock_sql
 
 # q66 — warehouse 12-month sales pivot across two channels with
 # per-square-foot ratios (sq_ft -> a deterministic per-supplier constant).
@@ -73,26 +74,16 @@ ds(
 # purchases where bought and home geographies differ.
 ds(
     "tpcds_q68",
-    """
-    SELECT c.c_name, hn.n_name AS home_city, dn.bought_city,
-           dn.l_orderkey AS ticket, dn.extended_price, dn.extended_tax, dn.list_price
-    FROM (
-        SELECT s.l_orderkey, s.o_custkey, sn.n_name AS bought_city,CAST(sum(s.net_c) AS BIGINT) AS extended_price,CAST(sum(s.tax_c) AS BIGINT) AS extended_tax,CAST(sum(s.price_c) AS BIGINT) AS list_price
-        FROM sales s
-        JOIN supplier st ON s.l_suppkey = st.s_suppkey
-        JOIN nation sn ON st.s_nationkey = sn.n_nationkey
-        WHERE s.d_dom BETWEEN 1 AND 2
+    away_tickets_sql(
+        "dn.extended_price, dn.extended_tax, dn.list_price",
+        "CAST(sum(s.net_c) AS BIGINT) AS extended_price,"
+        "CAST(sum(s.tax_c) AS BIGINT) AS extended_tax,"
+        "CAST(sum(s.price_c) AS BIGINT) AS list_price",
+        """s.d_dom BETWEEN 1 AND 2
           AND (s.hd_dep_count = 4 OR s.hd_vehicle_count = 3)
           AND s.d_year IN (1995, 1996, 1997)
-          AND sn.n_regionkey IN (1, 2)
-        GROUP BY s.l_orderkey, s.o_custkey, sn.n_name
-    ) dn
-    JOIN customer c ON dn.o_custkey = c.c_custkey
-    JOIN nation hn ON c.c_nationkey = hn.n_nationkey
-    WHERE dn.bought_city <> hn.n_name
-    ORDER BY c.c_name, dn.bought_city, ticket
-    LIMIT 100
-    """,
+          AND sn.n_regionkey IN (1, 2)""",
+    ),
     doc="Reference: tpcds/q68.sql.",
 )
 
@@ -231,30 +222,7 @@ ds(
 # (q11/q4 family, net-paid flavor).
 ds(
     "tpcds_q74",
-    """
-    , year_total AS (
-        SELECT o_custkey, d_year, 's' AS sale_type, sum(net_c) AS year_total
-        FROM sales GROUP BY o_custkey, d_year
-        UNION ALL
-        SELECT o_custkey, d_year, 'w' AS sale_type, sum(net_c) AS year_total
-        FROM web GROUP BY o_custkey, d_year
-    )
-    SELECT c.c_name
-    FROM year_total t_s_firstyear
-    JOIN year_total t_s_secyear ON t_s_firstyear.o_custkey = t_s_secyear.o_custkey
-    JOIN year_total t_w_firstyear ON t_s_firstyear.o_custkey = t_w_firstyear.o_custkey
-    JOIN year_total t_w_secyear ON t_s_firstyear.o_custkey = t_w_secyear.o_custkey
-    JOIN customer c ON c.c_custkey = t_s_firstyear.o_custkey
-    WHERE t_s_firstyear.sale_type = 's' AND t_s_secyear.sale_type = 's'
-      AND t_w_firstyear.sale_type = 'w' AND t_w_secyear.sale_type = 'w'
-      AND t_s_firstyear.d_year = 1996 AND t_s_secyear.d_year = 1997
-      AND t_w_firstyear.d_year = 1996 AND t_w_secyear.d_year = 1997
-      AND t_s_firstyear.year_total > 0 AND t_w_firstyear.year_total > 0
-      AND CAST(t_w_secyear.year_total AS DOUBLE) / t_w_firstyear.year_total
-          > CAST(t_s_secyear.year_total AS DOUBLE) / t_s_firstyear.year_total
-    ORDER BY c.c_name
-    LIMIT 100
-    """,
+    ", " + year_growth_sql("sale_type", "net_c", 1996),
     doc="Reference: tpcds/q74.sql.",
 )
 
@@ -494,23 +462,13 @@ ds(
 # q82 — q37's store twin.
 ds(
     "tpcds_q82",
-    """
-    SELECT i.p_name AS i_item_id, i.p_type AS i_item_desc, i.p_retailprice AS i_current_price
-    FROM part i
-    JOIN sales inv ON inv.l_partkey = i.p_partkey
-    JOIN sales ss ON ss.l_partkey = i.p_partkey
-    WHERE i.p_retailprice BETWEEN 950 AND 999
+    item_stock_sql(
+        "sales",
+        "ss",
+        """i.p_retailprice BETWEEN 950 AND 999
       AND i.p_brand IN ('Brand#2', 'Brand#6', 'Brand#10', 'Brand#14')
-      AND inv.o_orderdate BETWEEN TIMESTAMP '1995-05-25' AND TIMESTAMP '1995-07-24'
-      AND inv.qty BETWEEN 10 AND 50
-    GROUP BY i.p_name, i.p_type, i.p_retailprice
-    -- full group-key tiebreak: the reference orders by i_item_id
-    -- alone, but duplicate item ids at the LIMIT boundary make the
-    -- cut engine-dependent at larger SFs (caught by the sf0.1
-    -- differential sweep)
-    ORDER BY i_item_id, i_item_desc, i_current_price
-    LIMIT 100
-    """,
+      AND inv.o_orderdate BETWEEN TIMESTAMP '1995-05-25' AND TIMESTAMP '1995-07-24'""",
+    ),
     doc="Reference: tpcds/q82.sql.",
 )
 
@@ -997,35 +955,8 @@ ds(
 # months (the _1 variant thresholds only the first).
 ds(
     "tpcds_q39b",
-    """
-    , inv AS (
-        SELECT n.n_name AS w_warehouse_name, i.p_brand AS item_id, s.d_moy,
-               count(*) AS n, sum(s.qty) AS s1, sum(s.qty * s.qty) AS s2
-        FROM sales s
-        JOIN supplier st ON s.l_suppkey = st.s_suppkey
-        JOIN nation n ON st.s_nationkey = n.n_nationkey
-        JOIN part i ON s.l_partkey = i.p_partkey
-        WHERE s.d_year = 1995
-        GROUP BY n.n_name, i.p_brand, s.d_moy
-        HAVING count(*) > 1
-    ),
-    invcov AS (
-        SELECT w_warehouse_name, item_id, d_moy,
-               round(CAST(s1 AS DOUBLE) / n, 4) AS mean,
-               round(sqrt((s2 - CAST(s1 AS DOUBLE) * s1 / n) / (n - 1))
-                     / (CAST(s1 AS DOUBLE) / n), 4) AS cov
-        FROM inv
-        WHERE CAST(s1 AS DOUBLE) / n > 0
-          AND sqrt((s2 - CAST(s1 AS DOUBLE) * s1 / n) / (n - 1))
-              / (CAST(s1 AS DOUBLE) / n) > 0.3
-    )
-    SELECT i1.w_warehouse_name AS w1, i1.item_id AS i1_item, i1.d_moy AS moy1,
-           i1.mean AS mean1, i1.cov AS cov1,
-           i2.d_moy AS moy2, i2.mean AS mean2, i2.cov AS cov2
-    FROM invcov i1
-    JOIN invcov i2 ON i1.item_id = i2.item_id
-                  AND i1.w_warehouse_name = i2.w_warehouse_name
-    WHERE i1.d_moy = 1 AND i2.d_moy = 2
+    inv_cov_sql(0.3)
+    + """
       AND i2.cov > 0.3
     ORDER BY w1, i1_item, moy1
     """,

@@ -27,7 +27,7 @@ no raw-double ``sum()``/``avg()`` over non-integral columns remains.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from sensql_presto_spark import catalog
@@ -36,6 +36,24 @@ from sensql_presto_spark.queries.registry import register
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return catalog.table(spark, sf_dir, name)
+
+
+def _cents(col: Column) -> Column:
+    """``col`` in exact integer cents, the unit of every money aggregate:
+    double addition is merge-order-sensitive, and Spark's partial-agg
+    combine order is not deterministic, so raw double sums are not
+    hash-stable across engines or runs (l_quantity is integral-valued — its
+    double sum is exact). The testdata's prices/discounts are 2-decimal, so
+    cents are lossless."""
+    return F.floor(col * 100 + F.lit(0.5)).cast("long")
+
+
+def _revenue() -> Column:
+    """``sum(l_extendedprice * (1 - l_discount)) AS revenue``, summed in
+    exact integer cents."""
+    return (
+        F.sum(_cents(F.col("l_extendedprice") * (1 - F.col("l_discount")))).cast("double") / 100.0
+    ).alias("revenue")
 
 
 # --------------------------------------------------------------------------
@@ -69,32 +87,24 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 def tpch_q01(spark: SparkSession, sf_dir: str) -> DataFrame:
     l = _t(spark, sf_dir, "lineitem")
 
-    # Exact integer cents before every money aggregate: double addition is
-    # merge-order-sensitive, and Spark's partial-agg combine order is not
-    # deterministic, so raw double sums are not hash-stable across engines
-    # or runs (l_quantity is integral-valued — its double sum is exact).
-    # The testdata's prices/discounts are 2-decimal, so cents are lossless.
-    def cents(col):
-        return F.floor(col * 100 + F.lit(0.5)).cast("long")
-
     disc_price = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     return (
         l.filter(F.col("l_shipdate") <= F.lit("2000-12-01").cast("timestamp"))
         .groupBy("l_returnflag", "l_linestatus")
         .agg(
             F.sum("l_quantity").alias("sum_qty"),
-            (F.sum(cents(F.col("l_extendedprice"))).cast("double") / 100.0).alias(
+            (F.sum(_cents(F.col("l_extendedprice"))).cast("double") / 100.0).alias(
                 "sum_base_price"
             ),
-            (F.sum(cents(disc_price)).cast("double") / 100.0).alias("sum_disc_price"),
-            (F.sum(cents(disc_price * (1 + F.col("l_tax")))).cast("double") / 100.0).alias(
+            (F.sum(_cents(disc_price)).cast("double") / 100.0).alias("sum_disc_price"),
+            (F.sum(_cents(disc_price * (1 + F.col("l_tax")))).cast("double") / 100.0).alias(
                 "sum_charge"
             ),
             F.avg("l_quantity").alias("avg_qty"),
             (
-                F.sum(cents(F.col("l_extendedprice"))).cast("double") / 100.0 / F.count("*")
+                F.sum(_cents(F.col("l_extendedprice"))).cast("double") / 100.0 / F.count("*")
             ).alias("avg_price"),
-            (F.sum(cents(F.col("l_discount"))).cast("double") / 100.0 / F.count("*")).alias(
+            (F.sum(_cents(F.col("l_discount"))).cast("double") / 100.0 / F.count("*")).alias(
                 "avg_disc"
             ),
             F.count("*").alias("count_order"),
@@ -170,17 +180,7 @@ def tpch_q03(spark: SparkSession, sf_dir: str) -> DataFrame:
         l.join(o, l.l_orderkey == o.o_orderkey)
         .join(F.broadcast(c), o.o_custkey == c.c_custkey)
         .groupBy("l_orderkey", "o_orderdate")
-        # integer cents before the sum — order-independent, hash-stable
-        .agg(
-            (
-                F.sum(
-                    F.floor(
-                        F.col("l_extendedprice") * (1 - F.col("l_discount")) * 100 + F.lit(0.5)
-                    ).cast("long")
-                ).cast("double")
-                / 100.0
-            ).alias("revenue")
-        )
+        .agg(_revenue())
         .select("l_orderkey", "revenue", "o_orderdate")
         .orderBy(F.desc("revenue"), "o_orderdate", "l_orderkey")
         .limit(10)
@@ -267,19 +267,7 @@ def tpch_q05(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(n), s.s_nationkey == n.n_nationkey)
         .join(F.broadcast(r), n.n_regionkey == r.r_regionkey)
         .groupBy("n_name")
-        # Exact integer cents before the sum: double addition is order-
-        # sensitive and Spark's partial-agg merge order is not deterministic,
-        # so a raw double sum is not hash-stable across engines or runs.
-        .agg(
-            (
-                F.sum(
-                    F.floor(F.col("l_extendedprice") * (1 - F.col("l_discount")) * 100 + 0.5).cast(
-                        "long"
-                    )
-                ).cast("double")
-                / 100.0
-            ).alias("revenue")
-        )
+        .agg(_revenue())
         .orderBy(F.desc("revenue"), "n_name")
     )
 
@@ -310,11 +298,7 @@ def tpch_q06(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("l_quantity") < 24)
     ).agg(
         (
-            F.sum(
-                F.floor(F.col("l_extendedprice") * F.col("l_discount") * 100 + F.lit(0.5)).cast(
-                    "long"
-                )
-            ).cast("double")
+            F.sum(_cents(F.col("l_extendedprice") * F.col("l_discount"))).cast("double")
             / 100.0
         ).alias("revenue")
     )
@@ -322,9 +306,7 @@ def tpch_q06(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --------------------------------------------------------------------------
 # q07 — volume shipping between two nations.
-@register(
-    "tpch_q07",
-    oracle="""
+_Q07_SQL = """
     SELECT supp_nation, cust_nation, l_year, CAST(sum(volume) AS DOUBLE) / 100.0 AS revenue
     FROM (
         SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
@@ -342,41 +324,22 @@ def tpch_q06(spark: SparkSession, sf_dir: str) -> DataFrame:
     ) shipping
     GROUP BY supp_nation, cust_nation, l_year
     ORDER BY supp_nation, cust_nation, l_year
-    """,
+    """
+
+
+@register(
+    "tpch_q07",
+    oracle=_Q07_SQL,
     tags=("tpch", "join", "aggregation"),
     bench=True
 )
 def tpch_q07(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return catalog.sql(
-        spark,
-        sf_dir,
-        """
-        SELECT supp_nation, cust_nation, l_year, CAST(sum(volume) AS DOUBLE) / 100.0 AS revenue
-        FROM (
-            SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
-                   CAST(extract(year FROM l.l_shipdate) AS INT) AS l_year,
-                   cast(floor(l.l_extendedprice * (1 - l.l_discount) * 100 + 0.5) AS BIGINT) AS volume
-            FROM supplier s
-            JOIN lineitem l ON s.s_suppkey = l.l_suppkey
-            JOIN orders o ON o.o_orderkey = l.l_orderkey
-            JOIN customer c ON c.c_custkey = o.o_custkey
-            JOIN nation n1 ON s.s_nationkey = n1.n_nationkey
-            JOIN nation n2 ON c.c_nationkey = n2.n_nationkey
-            WHERE ((n1.n_name = 'NATION_1' AND n2.n_name = 'NATION_2')
-                OR (n1.n_name = 'NATION_2' AND n2.n_name = 'NATION_1'))
-              AND l.l_shipdate BETWEEN TIMESTAMP '1996-01-01' AND TIMESTAMP '1997-12-31'
-        ) shipping
-        GROUP BY supp_nation, cust_nation, l_year
-        ORDER BY supp_nation, cust_nation, l_year
-        """,
-    )
+    return catalog.sql(spark, sf_dir, _Q07_SQL)
 
 
 # --------------------------------------------------------------------------
 # q08 — national market share. VARIANT: p_type ∈ small enum set; use 'ECONOMY'.
-@register(
-    "tpch_q08",
-    oracle="""
+_Q08_SQL = """
     SELECT o_year,
            sum(CASE WHEN nation = 'NATION_3' THEN volume ELSE 0 END) / sum(volume)
                AS mkt_share
@@ -398,38 +361,17 @@ def tpch_q07(spark: SparkSession, sf_dir: str) -> DataFrame:
     ) all_nations
     GROUP BY o_year
     ORDER BY o_year
-    """,
+    """
+
+
+@register(
+    "tpch_q08",
+    oracle=_Q08_SQL,
     tags=("tpch", "join", "aggregation", "case"),
     bench=True
 )
 def tpch_q08(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return catalog.sql(
-        spark,
-        sf_dir,
-        """
-        SELECT o_year,
-               sum(CASE WHEN nation = 'NATION_3' THEN volume ELSE 0 END) / sum(volume)
-                   AS mkt_share
-        FROM (
-            SELECT CAST(extract(year FROM o.o_orderdate) AS INT) AS o_year,
-                   cast(floor(l.l_extendedprice * (1 - l.l_discount) * 100 + 0.5) AS BIGINT) AS volume,
-                   n2.n_name AS nation
-            FROM part p
-            JOIN lineitem l ON p.p_partkey = l.l_partkey
-            JOIN supplier s ON s.s_suppkey = l.l_suppkey
-            JOIN orders o ON l.l_orderkey = o.o_orderkey
-            JOIN customer c ON o.o_custkey = c.c_custkey
-            JOIN nation n1 ON c.c_nationkey = n1.n_nationkey
-            JOIN region r ON n1.n_regionkey = r.r_regionkey
-            JOIN nation n2 ON s.s_nationkey = n2.n_nationkey
-            WHERE r.r_name = 'AMERICA'
-              AND o.o_orderdate BETWEEN TIMESTAMP '1996-01-01' AND TIMESTAMP '1997-12-31'
-              AND p.p_type = 'ECONOMY'
-        ) all_nations
-        GROUP BY o_year
-        ORDER BY o_year
-        """,
-    )
+    return catalog.sql(spark, sf_dir, _Q08_SQL)
 
 
 # --------------------------------------------------------------------------
@@ -519,17 +461,7 @@ def tpch_q10(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(c, o.o_custkey == c.c_custkey)
         .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
         .groupBy("c_custkey", "c_name", "c_acctbal", "n_name")
-        # integer cents before the sum — order-independent, hash-stable
-        .agg(
-            (
-                F.sum(
-                    F.floor(
-                        F.col("l_extendedprice") * (1 - F.col("l_discount")) * 100 + F.lit(0.5)
-                    ).cast("long")
-                ).cast("double")
-                / 100.0
-            ).alias("revenue")
-        )
+        .agg(_revenue())
         .select("c_custkey", "c_name", "revenue", "c_acctbal", "n_name")
         .orderBy(F.desc("revenue"), "c_custkey")
         .limit(20)
@@ -670,9 +602,7 @@ def tpch_q14(spark: SparkSession, sf_dir: str) -> DataFrame:
     p = _t(spark, sf_dir, "part")
     # integer cents before both sums; the ratio divides two exact bigints
     # cast to double, so the result is deterministic
-    disc_cents = F.floor(
-        F.col("l_extendedprice") * (1 - F.col("l_discount")) * 100 + F.lit(0.5)
-    ).cast("long")
+    disc_cents = _cents(F.col("l_extendedprice") * (1 - F.col("l_discount")))
     return (
         l.join(F.broadcast(p), l.l_partkey == p.p_partkey)
         .agg(
@@ -870,16 +800,7 @@ def tpch_q19(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         l.join(F.broadcast(p), l.l_partkey == p.p_partkey)
         .filter(cond)
-        .agg(
-            (
-                F.sum(
-                    F.floor(F.col("l_extendedprice") * (1 - F.col("l_discount")) * 100 + 0.5).cast(
-                        "long"
-                    )
-                ).cast("double")
-                / 100.0
-            ).alias("revenue")
-        )
+        .agg(_revenue())
     )
 
 

@@ -28,6 +28,7 @@ them compiles new code.
 from __future__ import annotations
 
 import functools
+import threading
 from functools import reduce
 from types import SimpleNamespace
 from typing import NamedTuple
@@ -35,6 +36,7 @@ from typing import NamedTuple
 from py4j.protocol import Py4JJavaError
 from pyspark import SparkContext
 from pyspark.errors.exceptions.captured import CapturedException
+from pyspark.logger import PySparkLogger
 from pyspark.sql import DataFrame
 
 # Key types under which distinct literals select disjoint rows. Not float
@@ -107,11 +109,8 @@ def slice_of(analyzed) -> Slice | None:
     """The slice an analyzed plan reads, or None when it is not
     ``Project(Filter(source))``."""
     kinds = _kinds(SparkContext._jvm)
-    try:
-        plan = kinds.fold(analyzed)
-    except (CapturedException, Py4JJavaError):
-        return None  # a constant fails to evaluate: the statement raises it when run
-    if not kinds.project.isInstance(plan):
+    plan = _fold(kinds, analyzed)
+    if plan is None or not kinds.project.isInstance(plan):
         return None
     filt = plan.child()
     if not kinds.filter.isInstance(filt):
@@ -138,6 +137,33 @@ def slice_of(analyzed) -> Slice | None:
             norm, h = normalized(e)
             columns.append(Column(item, None, norm, ("expression", h)))
     return Slice(source, conjuncts, columns)
+
+
+@functools.cache
+def _query_context_loggers() -> tuple:
+    return tuple(PySparkLogger.getLogger(n) for n in ("DataFrameQueryContextLogger", "SQLQueryContextLogger"))
+
+
+def _fold(kinds, analyzed):
+    """``analyzed`` with its constants folded, or None when one fails to
+    evaluate: the statement raises that error when it runs. PySpark logs
+    every JVM error it converts at ERROR with its query context; this one is
+    expected and handled, so this thread's records are dropped meanwhile."""
+    thread = threading.get_ident()
+
+    def other_threads(record) -> bool:
+        return record.thread != thread
+
+    loggers = _query_context_loggers()
+    for logger in loggers:
+        logger.addFilter(other_threads)
+    try:
+        return kinds.fold(analyzed)
+    except (CapturedException, Py4JJavaError):
+        return None
+    finally:
+        for logger in loggers:
+            logger.removeFilter(other_threads)
 
 
 def _split_conjuncts(kinds, cond) -> list:

@@ -23,6 +23,24 @@ def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 8)
 
 
+def default_driver_memory() -> str:
+    """The default JVM heap: half of the memory this host gives the process
+    (physical memory, or the cgroup's limit when that is lower), rounded up
+    to whole GiB, at most 16g. The other half is left to the Python side
+    and to a second Spark process beside this one."""
+    limit = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    for path in ("/sys/fs/cgroup/memory.max", "/sys/fs/cgroup/memory/memory.limit_in_bytes"):
+        try:
+            with open(path) as f:
+                text = f.read().strip()
+        except OSError:
+            continue
+        if text.isdigit():  # cgroup v2 writes "max" for no limit
+            limit = min(limit, int(text))
+    gib = -(-limit // (2 << 30))
+    return f"{min(max(gib, 1), 16)}g"
+
+
 def get_spark(
     app_name: str = "sensql_presto_spark",
     cpus: int | None = None,
@@ -56,7 +74,7 @@ def get_spark(
         .config("spark.sql.cbo.joinReorder.enabled", "true")
         # Nested-column pruning (reference: PushdownSubfields.java).
         .config("spark.sql.optimizer.nestedSchemaPruning.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.parquet.compression.codec", "zstd")
     )

@@ -108,39 +108,44 @@ def test_no_inline_vector_kernels_outside_vec():
 
 
 def test_no_repeated_fixture_in_pipeline():
-    """No run of 10 or more identical lines (stripped, blank lines skipped)
-    occurs twice in queries/pipeline.py: a SQL fragment that two texts share
-    has one definition that each of them interpolates, so a fix to it
-    reaches every copy. The named exception is Python, not SQL."""
+    """No run of 8 or more identical lines (stripped, blank lines skipped)
+    occurs twice anywhere in the queries package, within one module or
+    across two: a SQL fragment or builder scaffold that two texts share has
+    one definition that each of them interpolates or calls, so a fix to it
+    reaches every copy. The named exceptions are Python, not SQL."""
     import pathlib
 
-    size = 10
-    # first line of the repeated run -> why it keeps its copy
+    size = 8
+    video = (
+        "the fake-video roundtrip in the mapInPandas closures of "
+        "mm_video_frames, mm_video_scene_cut and mm_video_keyframe_sample: "
+        "a module-level helper would be pickled by reference, so every "
+        "Python worker would import the whole query registry"
+    )
+    # (module, first line of the repeated run) -> why it keeps its copy
     named_exceptions = {
-        'for doc_id, text in zip(pdf["doc_id"], pdf["text"]):': (
-            "the fake-video roundtrip in the mapInPandas closures of "
-            "mm_video_scene_cut and mm_video_keyframe_sample: a module-level "
-            "helper would be pickled by reference, so every Python worker "
-            "would import the whole query registry"
-        ),
+        ("pipeline", "n_frames = 1 + n % 5"): video,
+        ("pipeline", 'for doc_id, text in zip(pdf["doc_id"], pdf["text"]):'): video,
     }
-    path = pathlib.Path(registry.__file__).with_name("pipeline.py")
-    numbered = [(n, t.strip()) for n, t in enumerate(path.read_text().splitlines(), 1) if t.strip()]
-    text = [t for _, t in numbered]
-    first_seen, repeated = {}, [False] * len(text)
-    for i in range(len(text) - size + 1):
-        if first_seen.setdefault(tuple(text[i : i + size]), i) != i:
-            repeated[i : i + size] = [True] * size
-    runs, i = [], 0
-    while i < len(text):
-        j = i
-        while j < len(text) and repeated[j]:
-            j += 1
-        if j > i:
-            runs.append((numbered[i][0], j - i, text[i]))
-        i = max(j, i + 1)
-    assert [r for r in runs if r[2] not in named_exceptions] == []
-    assert {r[2] for r in runs} == set(named_exceptions)
+    first_seen, runs = {}, []
+    for path in sorted(pathlib.Path(registry.__file__).parent.glob("*.py")):
+        numbered = [(n, t.strip()) for n, t in enumerate(path.read_text().splitlines(), 1) if t.strip()]
+        text = [t for _, t in numbered]
+        repeated = [False] * len(text)
+        for i in range(len(text) - size + 1):
+            here = (path.stem, numbered[i][0])
+            if first_seen.setdefault(tuple(text[i : i + size]), here) != here:
+                repeated[i : i + size] = [True] * size
+        i = 0
+        while i < len(text):
+            j = i
+            while j < len(text) and repeated[j]:
+                j += 1
+            if j > i:
+                runs.append((path.stem, numbered[i][0], j - i, text[i]))
+            i = max(j, i + 1)
+    assert [r for r in runs if r[::3] not in named_exceptions] == []
+    assert {r[::3] for r in runs} == set(named_exceptions)
 
 
 # -- WAV/PCM codec (multimodal.py, real decoder since round 3) ---------------

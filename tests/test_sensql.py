@@ -635,13 +635,31 @@ def test_node_pointed_at_another_file_leaves_the_group(spark, tmp_path):
 def test_node_whose_constant_fails_raises_when_the_statement_runs(spark, tmp_path):
     """Reading the slice folds constants; a node's ``1 / 0`` fails there,
     and that node is left ungrouped so the error comes from the statement,
-    as it does for a union."""
+    as it does for a union. Building the fan-out logs no ERROR: PySpark
+    logs each JVM error it converts with its query context, and this one
+    is expected and handled."""
+    import logging
+
     from pyspark.errors import ArithmeticException
+    from pyspark.logger import PySparkLogger
     from pyspark.sql import functions as F
 
     path = str(tmp_path / "t.parquet")
     _write_rows(path, list(range(6)))
     engine = _where_engine(spark, path, {"n0": ("id % 3 = 0",), "n1": (F.col("id") == F.lit(1) / 0,)})
-    df = engine.fanout(["n0", "n1"])
+    errors = []
+    handler = logging.Handler(logging.ERROR)
+    handler.emit = errors.append
+    loggers = [logging.getLogger()] + [
+        PySparkLogger.getLogger(name) for name in ("DataFrameQueryContextLogger", "SQLQueryContextLogger")
+    ]
+    for logger in loggers:
+        logger.addHandler(handler)
+    try:
+        df = engine.fanout(["n0", "n1"])
+    finally:
+        for logger in loggers:
+            logger.removeHandler(handler)
+    assert [r.getMessage() for r in errors] == []
     with pytest.raises(ArithmeticException, match="DIVIDE_BY_ZERO"):
         df.collect()

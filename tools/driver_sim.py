@@ -23,7 +23,12 @@ import sys
 import numpy as np
 import pandas as pd
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+# Spark's Python workers do not inherit sys.path: they find the package
+# (UDFs, mapInPandas, the Kafka/Avro decoders) on PYTHONPATH, which the JVM
+# Spark starts hands down to them.
+os.environ["PYTHONPATH"] = os.pathsep.join(p for p in (ROOT, os.environ.get("PYTHONPATH")) if p)
 
 # Override with DRIVER_SIM_SF_DIR to differential-check at another scale
 # (e.g. sf0.1 — catches scale-sensitive logic the sf0.01 gate can't).
